@@ -10,9 +10,9 @@ Architecture (Spark-first, NOT a port):
   (reference src/consumer/kafka/trace/mod.rs:62 vs src/consumer/ws/mod.rs:43)
   but lets Catalyst plan the physical execution.
 - The reference's hand-fused per-transaction multi-aggregate
-  (src/types/trace_tree.rs:247-303) becomes ONE edge-level groupBy plus small
-  re-aggregations — Spark's hash aggregate does map-side partials and
-  whole-stage codegen does the fusion the reference wrote by hand.
+  (src/types/trace_tree.rs:247-303) becomes ONE per-transaction groupBy
+  whose rows carry each tree's calls; the derivations are array
+  higher-order functions inside that row, so no step re-joins.
 - UDFs appear only where built-ins genuinely cannot express the semantics:
   EIP-55 checksumming (Keccak-256), recursive call-frame flattening, and
   optional stateful streaming sessions.

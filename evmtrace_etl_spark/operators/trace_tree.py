@@ -1,25 +1,36 @@
 """Trace-tree operators: the reference's fused per-transaction multi-aggregate
-re-expressed as declarative DataFrame operators (SURVEY §2.3-2.4).
+re-expressed as ONE grouped DataFrame pass (SURVEY §2.3-2.4).
 
 The reference builds five HashMaps record-at-a-time per transaction session
 (reference src/types/trace_tree.rs:247-303: call_tree, gas_tree,
 signature_tree, ec_pairing_input_size_tree, ec_recover_addresses) and then
 derives transactions/contracts at commit time (trace_tree.rs:72-245).
 
-Spark-first design — one heavy shuffle, everything else is re-aggregation
-of reduced data:
+Spark-first design — one full-data shuffle, everything else stays in the row:
 
-1. ``edge_aggregate`` groups the raw traces ONCE on
-   ``(chain_id, transaction_hash, from_address, to_address)``.  call_tree
-   (to→from→count) and gas_tree (from→to→gas) are the SAME pair grain, so
-   a single hash aggregate computes both, plus the per-pair selector set,
-   pairing-input sizes and recovered addresses.  Spark's hash aggregate
-   gives map-side partial aggregation and whole-stage codegen fuses the
-   projections/filters in — the fusion the reference wrote by hand.
-2. All later groupBys/joins run on the edge table, already reduced by
-   orders of magnitude (one row per distinct caller/callee pair per tx),
-   and shuffle on (chain_id, transaction_hash) prefixes of the same key —
-   at 100 TB the only full-data shuffle is step 1.
+1. ``tx_trees`` groups the null-guarded traces ONCE on
+   ``(chain_id, transaction_hash)``.  Each group collects the tx's call
+   structs (from, to, gas, masked selector, pairing size, recovered
+   address — the raw material of all five maps) and its keep-last
+   commit-eligible root; the commit gate (J1 + P11) then drops every
+   tree that would not commit.
+2. The first- and second-degree caller sets (J2/J3) are array
+   higher-order functions over the tx's own call array: the reference's
+   traversal depth is fixed at 2, so the second hop is a lookup in the
+   same row, not a join.
+3. The column helpers below (counts A7/A8, gas totals A9, pairing sizes
+   A4, selector sets A3 and recovered addresses A5 via
+   ``distinct_values``) read any slice of a call array, so ``plans/pipeline.py`` projects the transaction row
+   and every caller's contract row from the same grouped row.
+
+A tx's collected array is bounded by its trace count — the reference
+holds the same tree in memory.  Degree lookups scan the array once per
+degree member, which is cheap for the handful of precompile callers a
+real transaction has.
+
+``edge_aggregate`` keeps the caller/callee-pair grain (A1/A2 plus the
+A3-A5 partials); it is the batch reference the punctuation sessionizer's
+edge rows are checked against.
 
 Batch semantics note (SURVEY §2.3): the reference's streaming sessionizer
 never commits the final transaction of a stream and treats a duplicate root
@@ -30,7 +41,9 @@ matching the sink dedup D1's eventual outcome.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from collections.abc import Callable
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.evm import (
@@ -53,10 +66,26 @@ _PRECOMPILE_COUNT_COLS = {
     "ec_pairing_count": EC_PAIRING_ADDRESS,
 }
 
+#: root-trace fields a committed transaction row is built from (A6);
+#: ``seq`` first so ``max`` over the struct keeps the latest root
+_ROOT_FIELDS = [
+    "seq",
+    "from_address",
+    "to_address",
+    "input",
+    "transaction_index",
+    "block_number",
+    "block_timestamp",
+    "block_hash",
+    "value",
+    "gas_used",
+    "error",
+]
+
 
 def _edge_prepped(traces: DataFrame) -> DataFrame:
-    """Null-guarded traces with the per-row derived columns the edge
-    aggregate consumes (P10 guard + P6/P8/P7 projections)."""
+    """Null-guarded traces with the per-row derived columns both
+    aggregates consume (P10 guard + P6/P8/P7 projections)."""
     guarded = traces.filter(
         F.col("from_address").isNotNull() & F.col("to_address").isNotNull()
     )
@@ -73,245 +102,128 @@ def _edge_prepped(traces: DataFrame) -> DataFrame:
     )
 
 
-def _salted_partials(prepped: DataFrame, n_salts: int) -> DataFrame:
-    """Stage 1 of the salted aggregate: per (edge key, salt) partials.
-
-    The salt (seq mod n_salts — deterministic, uniform over a hot key's
-    rows) splits one pathological (tx, from, to) pair across ``n_salts``
-    reducers, so no partition processes more than ~1/n_salts of the hot
-    key's raw rows; sets are pre-deduped per salt before the merge."""
-    salted = prepped.withColumn(
-        "_salt", F.pmod(F.col("seq"), F.lit(n_salts))
-    )
-    return salted.groupBy(*TX_KEY, "from_address", "to_address", "_salt").agg(
-        F.count(F.lit(1)).alias("_cnt"),
-        F.sum(F.coalesce(F.col("gas_used"), F.lit(0))).alias("_gas"),
-        F.collect_set("_sel").alias("_sels"),
-        F.collect_list("_pair_size").alias("_psz"),
-        F.collect_set("_recovered").alias("_recs"),
-    )
-
-
-def edge_aggregate(traces: DataFrame, n_salts: int | None = None) -> DataFrame:
+def edge_aggregate(traces: DataFrame) -> DataFrame:
     """A1+A2 (+A3/A4/A5 partials) — one pass over null-guarded traces
     (P10, reference trace_tree.rs:249) at caller/callee-pair grain.
 
     Output grain: (chain_id, transaction_hash, from_address, to_address).
-
-    ``n_salts`` enables the two-stage salted variant (salt → partial →
-    final) for skewed inputs: a single transaction with millions of
-    traces on one (from, to) pair otherwise concentrates on one reducer
-    — map-side partial aggregation bounds the count/sum legs but the
-    hot key's final merge still lands on a single task.  With salting,
-    stage 2 merges at most ``n_salts`` pre-reduced rows per edge key.
-    Results are identical up to array element order (every downstream
-    consumer re-sorts or re-dedups; the raw collect order was never
-    deterministic to begin with).  Default off: the fixture-scale and
-    typical-chain distributions don't need it.
     """
-    prepped = _edge_prepped(traces)
-    if n_salts is None:
-        return prepped.groupBy(*TX_KEY, "from_address", "to_address").agg(
+    return (
+        _edge_prepped(traces)
+        .groupBy(*TX_KEY, "from_address", "to_address")
+        .agg(
             F.count(F.lit(1)).alias("call_count"),
             F.sum(F.coalesce(F.col("gas_used"), F.lit(0))).alias("gas_sum"),
             F.collect_set("_sel").alias("selectors"),
             F.collect_list("_pair_size").alias("pairing_sizes"),
             F.collect_set("_recovered").alias("recovered"),
         )
-    partials = _salted_partials(prepped, n_salts)
-    return partials.groupBy(*TX_KEY, "from_address", "to_address").agg(
-        F.sum("_cnt").alias("call_count"),
-        F.sum("_gas").alias("gas_sum"),
-        F.array_distinct(F.flatten(F.collect_list("_sels"))).alias(
-            "selectors"
-        ),
-        F.flatten(F.collect_list("_psz")).alias("pairing_sizes"),
-        F.array_distinct(F.flatten(F.collect_list("_recs"))).alias(
-            "recovered"
-        ),
     )
 
 
-def transaction_rollup(edges: DataFrame) -> DataFrame:
-    """A7 + J1 + tx-level A4/A5 — per-transaction totals from the edge table.
+def calls_to(*addresses: str) -> Callable[[Column], Column]:
+    """Predicate on a call struct: its callee is one of ``addresses``."""
+    return lambda c: c["to"].isin(list(addresses))
 
-    ``has_zk`` is the commit filter J1 (reference trace_tree.rs:67-70):
-    the tree contains a call to ecRecover or ecPairing.
+
+def tx_trees(traces: DataFrame) -> DataFrame:
+    """The committed call trees: one row per transaction that commits.
+
+    Columns: ``chain_id``, ``transaction_hash``, ``root`` (struct of
+    ``_ROOT_FIELDS``), ``calls`` (array of ``frm``/``to``/``gas``/``sel``/
+    ``psz``/``rec`` structs, one per guarded trace), ``first_degree`` and
+    ``second_degree`` (sorted address arrays).
+
+    - Root (A6 + P4 + P11): ``trace_address == []`` with
+      transaction_hash/index/from/to all present (reference
+      trace_tree.rs:73-89); duplicates resolve keep-last by ``seq``.
+    - J1 gate: the tree calls ecRecover or ecPairing (trace_tree.rs:67-70).
+    - J2 first degree: callers of ecPairing/ecRecover (trace_tree.rs:93-100).
+    - J3 second degree: callers of a first-degree address, the tx's EOA
+      (root from_address) excluded (trace_tree.rs:103-112).
     """
-    count_aggs = [
-        F.coalesce(
-            F.sum(
-                F.when(F.col("to_address") == F.lit(addr), F.col("call_count"))
-            ),
-            F.lit(0),
-        ).alias(name)
-        for name, addr in _PRECOMPILE_COUNT_COLS.items()
-    ]
-    return edges.groupBy(*TX_KEY).agg(
-        *count_aggs,
-        F.sort_array(F.flatten(F.collect_list("pairing_sizes"))).alias(
-            "ec_pairing_input_sizes"
-        ),
-        F.sort_array(
-            F.array_distinct(F.flatten(F.collect_list("recovered")))
-        ).alias("ec_recover_addresses"),
-        (
-            F.max(
-                F.when(
-                    F.col("to_address").isin(FIRST_DEGREE_FILTER_ADDRESSES), 1
-                ).otherwise(0)
-            )
-            == 1
-        ).alias("has_zk"),
+    eligible_root = (
+        (F.size("trace_address") == 0)
+        & F.col("transaction_hash").isNotNull()
+        & F.col("transaction_index").isNotNull()
+    )  # from/to presence is already the P10 guard
+    call = F.struct(
+        F.col("from_address").alias("frm"),
+        F.col("to_address").alias("to"),
+        F.coalesce(F.col("gas_used"), F.lit(0)).alias("gas"),
+        F.col("_sel").alias("sel"),
+        F.col("_pair_size").alias("psz"),
+        F.col("_recovered").alias("rec"),
     )
-
-
-def root_traces(traces: DataFrame) -> DataFrame:
-    """A6 + P4 + P11 — the committing root trace per transaction.
-
-    Root = ``trace_address == []`` (P4, reference
-    src/consumer/kafka/trace/mod.rs:68); commit-eligible only with
-    transaction_hash/index/from/to all present (P11, trace_tree.rs:73-89).
-    Duplicate roots resolve keep-last by ``seq`` (batch equivalent of the
-    reference's session-restart + sink keep-last dedup).
-    """
-    w = Window.partitionBy(*TX_KEY).orderBy(F.col("seq").desc())
-    return (
-        traces.filter(F.size("trace_address") == 0)
-        .filter(
-            F.col("transaction_hash").isNotNull()
-            & F.col("transaction_index").isNotNull()
-            & F.col("from_address").isNotNull()
-            & F.col("to_address").isNotNull()
-        )
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
-
-
-def first_degree_callers(edges: DataFrame) -> DataFrame:
-    """J2 — addresses with a call edge to ecPairing/ecRecover, with the set
-    of precompiles each called (reference trace_tree.rs:93-100); degree 0.
-    """
-    return (
-        edges.filter(F.col("to_address").isin(FIRST_DEGREE_FILTER_ADDRESSES))
-        .groupBy(*TX_KEY, "from_address")
-        .agg(F.sort_array(F.collect_set("to_address")).alias("call"))
-        .withColumnRenamed("from_address", "address")
-        .withColumn("degree", F.lit(0))
-    )
-
-
-def second_degree_callers(
-    edges: DataFrame, first_degree: DataFrame, roots: DataFrame
-) -> DataFrame:
-    """J3 — addresses with a call edge to any first-degree caller, with the
-    set of first-degree callees; the transaction's EOA (root from_address)
-    is excluded (reference trace_tree.rs:103-112); degree 1.
-
-    One bounded graph hop — the reference fixes traversal depth at 2, so no
-    recursion/iteration is needed.
-    """
-    fd_addrs = first_degree.select(
-        *TX_KEY, F.col("address").alias("to_address")
-    )
-    eoa = roots.select(*TX_KEY, F.col("from_address").alias("_eoa"))
-    return (
-        edges.join(fd_addrs, on=[*TX_KEY, "to_address"])
-        .join(eoa, on=TX_KEY)
-        .filter(F.col("from_address") != F.col("_eoa"))
-        .groupBy(*TX_KEY, "from_address")
-        .agg(F.sort_array(F.collect_set("to_address")).alias("call"))
-        .withColumnRenamed("from_address", "address")
-        .withColumn("degree", F.lit(1))
-    )
-
-
-def signatures_by_callee(edges: DataFrame) -> DataFrame:
-    """A3 — per (tx, callee) the set of 4-byte selectors called on it
-    (reference signature_tree, trace_tree.rs:21,257-260), re-aggregated
-    from the per-edge partial sets (no second pass over raw traces).
-    """
-    return (
-        edges.groupBy(*TX_KEY, "to_address")
-        .agg(
-            F.sort_array(
-                F.array_distinct(F.flatten(F.collect_list("selectors")))
-            ).alias("function_signatures")
-        )
-        .withColumnRenamed("to_address", "address")
-    )
-
-
-def precompile_counts_by_caller(edges: DataFrame) -> DataFrame:
-    """A8 — per (tx, caller) call counts into each of the four EC
-    precompiles (reference trace_tree.rs:130-153): a slice of A1.
-    """
-    count_aggs = [
-        F.coalesce(
-            F.sum(
-                F.when(F.col("to_address") == F.lit(addr), F.col("call_count"))
-            ),
-            F.lit(0),
-        ).alias(name)
-        for name, addr in _PRECOMPILE_COUNT_COLS.items()
-    ]
-    return (
-        edges.filter(
-            F.col("to_address").isin(list(_PRECOMPILE_COUNT_COLS.values()))
-        )
-        .groupBy(*TX_KEY, "from_address")
-        .agg(*count_aggs)
-        .withColumnRenamed("from_address", "address")
-    )
-
-
-def pairing_sizes_by_caller(edges: DataFrame) -> DataFrame:
-    """A4 — per (tx, caller) the list of input sizes sent to ecPairing
-    (reference ec_pairing_input_size_tree, trace_tree.rs:23,274-285),
-    sorted for deterministic comparison (the reference's order is HashMap
-    iteration order — deliberately not emulated).
-    """
-    return (
-        edges.filter(F.col("to_address") == F.lit(EC_PAIRING_ADDRESS))
-        .select(
-            *TX_KEY,
-            F.col("from_address").alias("address"),
-            F.sort_array(F.col("pairing_sizes")).alias(
-                "ec_pairing_input_sizes"
-            ),
-        )
-    )
-
-
-def gas_by_caller(edges: DataFrame) -> DataFrame:
-    """Total gas each address SENT (sum over its callees) per tx — the
-    per-caller slice of gas_tree used by the degree-scoped gas totals A9
-    (reference trace_tree.rs:165-175).
-    """
-    return edges.groupBy(*TX_KEY, "from_address").agg(
-        F.sum("gas_sum").alias("gas_sent")
-    )
-
-
-def degree_gas_totals(
-    gas_sent: DataFrame, degree_callers: DataFrame, out_col: str
-) -> DataFrame:
-    """A9 — per tx, total gas sent by the given degree's caller set."""
-    return (
-        degree_callers.select(
-            *TX_KEY, F.col("address").alias("from_address")
-        )
-        .join(gas_sent, on=[*TX_KEY, "from_address"])
+    trees = (
+        _edge_prepped(traces)
         .groupBy(*TX_KEY)
-        .agg(F.sum("gas_sent").alias(out_col))
+        .agg(
+            F.max(F.when(eligible_root, F.struct(*_ROOT_FIELDS))).alias(
+                "root"
+            ),
+            F.collect_list(call).alias("calls"),
+        )
+        .filter(
+            F.col("root").isNotNull()
+            & F.exists("calls", calls_to(*FIRST_DEGREE_FILTER_ADDRESSES))
+        )
+    )
+    with_fd = trees.withColumn(
+        "first_degree",
+        distinct_values(
+            F.col("calls"), calls_to(*FIRST_DEGREE_FILTER_ADDRESSES), "frm"
+        ),
+    )
+    return with_fd.withColumn(
+        "second_degree",
+        distinct_values(
+            F.col("calls"),
+            lambda c: F.array_contains(F.col("first_degree"), c["to"])
+            & (c["frm"] != F.col("root.from_address")),
+            "frm",
+        ),
     )
 
 
-def degree_address_sets(degree_callers: DataFrame, out_col: str) -> DataFrame:
-    """Per-tx sorted set of a degree's caller addresses (feeds J4
-    closest_address selection, reference trace_tree.rs:182-187)."""
-    return degree_callers.groupBy(*TX_KEY).agg(
-        F.sort_array(F.collect_set("address")).alias(out_col)
+def distinct_values(
+    calls: Column, pred: Callable[[Column], Column], field: str
+) -> Column:
+    """Sorted distinct ``field`` values of the calls matching ``pred``:
+    caller sets (``frm``), callee sets (``to``), selector sets (``sel``,
+    A3) and recovered addresses (``rec``, A5)."""
+    return F.sort_array(
+        F.array_distinct(
+            F.transform(F.filter(calls, pred), lambda c: c[field])
+        )
+    )
+
+
+def precompile_counts(calls: Column) -> list[Column]:
+    """A7/A8 — calls into each of the four EC precompiles among ``calls``
+    (reference trace_tree.rs:130-153, 206-229), one long column each."""
+    return [
+        F.size(F.filter(calls, calls_to(addr))).cast("long").alias(name)
+        for name, addr in _PRECOMPILE_COUNT_COLS.items()
+    ]
+
+
+def pairing_sizes(calls: Column) -> Column:
+    """A4 — input sizes of the calls into ecPairing, sorted for
+    deterministic comparison (the reference's order is HashMap iteration
+    order — deliberately not emulated; trace_tree.rs:23,274-285)."""
+    return F.sort_array(
+        F.transform(
+            F.filter(calls, calls_to(EC_PAIRING_ADDRESS)), lambda c: c["psz"]
+        )
+    )
+
+
+def gas_sent_by(calls: Column, addresses: Column) -> Column:
+    """A9 — total gas sent by the given caller set, over all its callees
+    (reference trace_tree.rs:165-175)."""
+    return F.aggregate(
+        F.filter(calls, lambda c: F.array_contains(addresses, c["frm"])),
+        F.lit(0).cast("long"),
+        lambda acc, c: acc + c["gas"],
     )

@@ -5,80 +5,63 @@ Each builder is ``DataFrame -> DataFrame`` and runs identically under
 ``spark.read`` and inside ``foreachBatch`` (streaming reuses these plans,
 see evmtrace_etl_spark.streaming).
 
-Scale shape: ONE full-data shuffle (edge_aggregate on
-chain/tx/from/to), then every downstream groupBy/join shuffles the reduced
-edge table on (chain_id, transaction_hash)-prefixed keys.  Catalyst reuses
-exchanges across the branches that share the edge table within one action.
+Scale shape: ONE full-data shuffle (``tx_trees``' groupBy on
+chain_id/transaction_hash).  The transaction output is a projection of
+the grouped rows; the contract output inlines each tree's caller rows
+and adds the D2 keep-first window as its only second shuffle.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.evm import FIRST_DEGREE_FILTER_ADDRESSES, selector
 from ..operators.relational import dedup_keep_last
 from ..operators.trace_tree import (
-    TX_KEY,
-    degree_address_sets,
-    degree_gas_totals,
-    edge_aggregate,
-    first_degree_callers,
-    gas_by_caller,
-    pairing_sizes_by_caller,
-    precompile_counts_by_caller,
-    root_traces,
-    second_degree_callers,
-    signatures_by_callee,
-    transaction_rollup,
+    calls_to,
+    distinct_values,
+    gas_sent_by,
+    pairing_sizes,
+    precompile_counts,
+    tx_trees,
 )
-
-def _empty_str_array() -> F.Column:
-    return F.array().cast("array<string>")
-
-
-def _empty_int_array() -> F.Column:
-    return F.array().cast("array<int>")
 
 
 class ZkParts:
-    """The shared single-pass intermediates of the zk pipeline.
+    """The one shared intermediate of the zk pipeline: the committed
+    per-transaction trees (``tx_trees``).
 
-    ``edges`` (the ONE full-data shuffle) and ``roots`` are persisted so
-    the transaction and contract outputs — two actions in any real run,
-    exactly like the reference emitting both from one TraceTree commit
-    (src/types/trace_tree.rs:115-245) — scan and shuffle the raw traces
-    once instead of twice (VERDICT r1 'What's wrong #4').  Within one
-    action Catalyst's ReusedExchange already dedups the shuffle; the
-    persist extends that across actions.
+    ``trees`` is persisted so the transaction and contract outputs — two
+    actions in any real run, exactly like the reference emitting both
+    from one TraceTree commit (src/types/trace_tree.rs:115-245) — scan
+    and shuffle the raw traces once instead of twice.
 
     ``persist=True`` callers own the cache and MUST call ``unpersist()``
     when done (``process_trace_batch`` does).  Single-output standalone
     paths pass ``persist=False`` — one action evaluates one DataFrame,
-    so ReusedExchange already covers it and nothing is left cached
-    behind the caller's back.
+    so nothing is left cached behind the caller's back.
     """
 
     def __init__(self, traces: DataFrame, persist: bool = True):
-        self.edges = edge_aggregate(traces)
-        self.roots = root_traces(traces)
+        self.trees = tx_trees(traces)
         self._persisted = persist
         if persist:
-            self.edges = self.edges.persist()
-            self.roots = self.roots.persist()
-        self.rollup = transaction_rollup(self.edges)
-        self.fd = first_degree_callers(self.edges)
-        self.sd = second_degree_callers(self.edges, self.fd, self.roots)
+            self.trees = self.trees.persist()
 
     def unpersist(self) -> None:
         if self._persisted:
-            self.edges.unpersist()
-            self.roots.unpersist()
+            self.trees.unpersist()
+
+
+def _trees(traces: DataFrame, parts: ZkParts | None) -> DataFrame:
+    return (parts or ZkParts(traces, persist=False)).trees
 
 
 def zk_results(traces: DataFrame) -> tuple[DataFrame, DataFrame]:
     """Single-pass dual output: (transactions, contracts_deduped) sharing
-    one edge aggregate — the Spark restatement of the reference emitting
-    Transaction + Contract rows from one commit."""
+    one persisted tree frame — the Spark restatement of the reference
+    emitting Transaction + Contract rows from one commit."""
     parts = ZkParts(traces)
     return zk_transactions(traces, parts), zk_contracts_deduped(traces, parts)
 
@@ -92,59 +75,35 @@ def zk_transactions(traces: DataFrame, parts: ZkParts | None = None) -> DataFram
     closest_address (J4): second-degree callers if any survive the EOA
     exclusion, else first-degree callers (trace_tree.rs:182-187).
     """
-    parts = parts or ZkParts(traces, persist=False)
-    edges, rollup, roots = parts.edges, parts.rollup, parts.roots
-    fd, sd = parts.fd, parts.sd
-    gas_sent = gas_by_caller(edges)
+    calls, fd, sd = F.col("calls"), F.col("first_degree"), F.col("second_degree")
 
-    fd_set = degree_address_sets(fd, "_fd_set")
-    sd_set = degree_address_sets(sd, "_sd_set")
-    fd_gas = degree_gas_totals(gas_sent, fd, "_fd_gas")
-    sd_gas = degree_gas_totals(gas_sent, sd, "_sd_gas")
+    def root(field: str) -> F.Column:
+        return F.col("root." + field).alias(field)
 
-    from ..functions.evm import selector  # P5, unmasked at tx level
-
-    return (
-        roots.join(rollup.filter(F.col("has_zk")), on=TX_KEY)  # J1 gate
-        .join(fd_set, on=TX_KEY, how="left")
-        .join(sd_set, on=TX_KEY, how="left")
-        .join(fd_gas, on=TX_KEY, how="left")
-        .join(sd_gas, on=TX_KEY, how="left")
-        .select(
-            F.col("chain_id"),
-            F.col("transaction_hash"),
-            F.col("from_address"),
-            F.col("to_address"),
-            F.when(
-                F.size(F.coalesce(F.col("_sd_set"), _empty_str_array())) > 0,
-                F.col("_sd_set"),
-            )
-            .otherwise(F.coalesce(F.col("_fd_set"), _empty_str_array()))
-            .alias("closest_address"),
-            selector("input").alias("function_signature"),
-            F.col("transaction_index"),
-            F.col("block_number"),
-            F.col("block_timestamp"),
-            F.col("block_hash"),
-            F.coalesce(F.col("value"), F.lit(0).cast("decimal(38,0)")).alias(
-                "value"
-            ),
-            F.coalesce(F.col("input"), F.lit("0x")).alias("input"),
-            F.coalesce(F.col("gas_used"), F.lit(0)).alias("gas_used_total"),
-            F.coalesce(F.col("_fd_gas"), F.lit(0)).alias(
-                "gas_used_first_degree"
-            ),
-            F.coalesce(F.col("_sd_gas"), F.lit(0)).alias(
-                "gas_used_second_degree"
-            ),
-            F.col("ec_recover_count"),
-            F.col("ec_add_count"),
-            F.col("ec_mul_count"),
-            F.col("ec_pairing_count"),
-            F.col("ec_pairing_input_sizes"),
-            F.col("ec_recover_addresses"),
-            F.col("error"),
-        )
+    return _trees(traces, parts).select(
+        F.col("chain_id"),
+        F.col("transaction_hash"),
+        root("from_address"),
+        root("to_address"),
+        F.when(F.size(sd) > 0, sd).otherwise(fd).alias("closest_address"),
+        selector("root.input").alias("function_signature"),  # P5, unmasked
+        root("transaction_index"),
+        root("block_number"),
+        root("block_timestamp"),
+        root("block_hash"),
+        F.coalesce(F.col("root.value"), F.lit(0).cast("decimal(38,0)")).alias(
+            "value"
+        ),
+        F.coalesce(F.col("root.input"), F.lit("0x")).alias("input"),
+        F.coalesce(F.col("root.gas_used"), F.lit(0)).alias("gas_used_total"),
+        gas_sent_by(calls, fd).alias("gas_used_first_degree"),
+        gas_sent_by(calls, sd).alias("gas_used_second_degree"),
+        *precompile_counts(calls),
+        pairing_sizes(calls).alias("ec_pairing_input_sizes"),
+        distinct_values(calls, lambda c: c["rec"].isNotNull(), "rec").alias(
+            "ec_recover_addresses"  # A5; a null ecRecover output adds nothing
+        ),
+        root("error"),
     )
 
 
@@ -152,50 +111,42 @@ def zk_contracts(traces: DataFrame, parts: ZkParts | None = None) -> DataFrame:
     """EP1 contract output (reference Contract assembly J5,
     src/types/trace_tree.rs:115-163), schema per ``schemas.CONTRACT_SCHEMA``.
 
-    Union of first-degree (degree 0) and second-degree (degree 1) callers,
-    gated on committed transactions (J1 + P11), enriched with the selector
-    set called ON the address (A3), its per-precompile call counts (A8) and
-    its pairing input sizes (A4).
+    Each committed tree's first-degree (degree 0) and second-degree
+    (degree 1) callers (U1), enriched from the same tree with the
+    selector set called ON the address (A3), its per-precompile call
+    counts (A8) and its pairing input sizes (A4).  ``call`` is the set of
+    the caller's callees that made it that degree.
     """
-    parts = parts or ZkParts(traces, persist=False)
-    edges, rollup, roots = parts.edges, parts.rollup, parts.roots
-    fd, sd = parts.fd, parts.sd
+    calls, fd, sd = F.col("calls"), F.col("first_degree"), F.col("second_degree")
 
-    committed = roots.join(
-        rollup.filter(F.col("has_zk")).select(*TX_KEY), on=TX_KEY
-    ).select(*TX_KEY, F.col("seq").alias("_root_seq"))
+    def caller_row(degree: int, makes_degree):
+        def row(address: F.Column) -> F.Column:
+            own = F.filter(calls, lambda c: c["frm"] == address)
+            return F.struct(
+                address.alias("address"),
+                distinct_values(  # A3: selectors called ON the address
+                    calls, lambda c: c["to"] == address, "sel"
+                ).alias("function_signatures"),
+                F.lit(degree).alias("degree"),
+                *precompile_counts(own),
+                pairing_sizes(own).alias("ec_pairing_input_sizes"),
+                distinct_values(own, makes_degree, "to").alias("call"),
+            )
 
-    callers = fd.unionByName(sd)  # U1
-    sigs = signatures_by_callee(edges)
-    counts = precompile_counts_by_caller(edges)
-    pair_sizes = pairing_sizes_by_caller(edges)
+        return row
 
-    return (
-        callers.join(committed, on=TX_KEY)  # gate: only committed txs emit
-        .join(sigs, on=[*TX_KEY, "address"], how="left")
-        .join(counts, on=[*TX_KEY, "address"], how="left")
-        .join(pair_sizes, on=[*TX_KEY, "address"], how="left")
-        .select(
-            F.col("chain_id"),
-            F.col("address"),
-            F.coalesce(
-                F.col("function_signatures"), _empty_str_array()
-            ).alias("function_signatures"),
-            F.col("degree").cast("int").alias("degree"),
-            F.coalesce(F.col("ec_recover_count"), F.lit(0)).alias(
-                "ec_recover_count"
-            ),
-            F.coalesce(F.col("ec_add_count"), F.lit(0)).alias("ec_add_count"),
-            F.coalesce(F.col("ec_mul_count"), F.lit(0)).alias("ec_mul_count"),
-            F.coalesce(F.col("ec_pairing_count"), F.lit(0)).alias(
-                "ec_pairing_count"
-            ),
-            F.coalesce(
-                F.col("ec_pairing_input_sizes"), _empty_int_array()
-            ).alias("ec_pairing_input_sizes"),
-            F.col("call"),
-            F.col("_root_seq"),  # arrival order; dropped by sink dedup
-        )
+    callers = F.concat(
+        F.transform(
+            fd, caller_row(0, calls_to(*FIRST_DEGREE_FILTER_ADDRESSES))
+        ),
+        F.transform(
+            sd, caller_row(1, lambda c: F.array_contains(fd, c["to"]))
+        ),
+    )
+    return _trees(traces, parts).select(
+        "chain_id",
+        F.inline(callers),
+        F.col("root.seq").alias("_root_seq"),  # arrival order; dropped by D2
     )
 
 
@@ -209,8 +160,6 @@ def zk_contracts_deduped(
     commit first-degree rows precede second-degree (trace_tree.rs:115-118)
     — so the order is (root seq, degree), not transaction-hash order.
     """
-    from pyspark.sql import Window
-
     c = zk_contracts(traces, parts)
     w = Window.partitionBy(
         "chain_id", "address", "function_signatures"

@@ -74,7 +74,11 @@ def spark_zk_transactions(spark: SparkSession, sf_dir: str = "") -> DataFrame:
 
 
 def spark_zk_contracts(spark: SparkSession, sf_dir: str = "") -> DataFrame:
-    out = zk_contracts_deduped(fixtures.traces_df(spark))
+    return project_contracts(zk_contracts_deduped(fixtures.traces_df(spark)))
+
+
+def project_contracts(out: DataFrame) -> DataFrame:
+    """Hash-safe projection of a contracts output table."""
     return out.select(
         "chain_id",
         "address",
@@ -97,11 +101,15 @@ def spark_blocks(spark: SparkSession, sf_dir: str = "") -> DataFrame:
 # DuckDB oracle SQL — same semantics, pure SQL over the same VALUES rows
 # ---------------------------------------------------------------------------
 
-def _common_ctes() -> str:
+def _common_ctes(traces_sql: str | None) -> str:
     """Shared CTE prefix: guarded traces w/ scalar derivations, the edge
-    aggregate, per-tx rollup, eligible roots, first/second degree callers."""
+    aggregate, per-tx rollup, eligible roots, first/second degree callers.
+
+    ``traces_sql`` is the trace relation (default: the fixture's VALUES
+    relation, ``fixtures.traces_values_sql()``)."""
+    traces_sql = traces_sql or fixtures.traces_values_sql()
     return f"""
-WITH traces AS (SELECT * FROM {fixtures.traces_values_sql()}),
+WITH traces AS (SELECT * FROM {traces_sql}),
 guarded AS (
   SELECT *,
     CASE WHEN to_address IN ('{EC_PAIRING_ADDRESS}','{EC_RECOVER_ADDRESS}')
@@ -161,9 +169,9 @@ sd AS (
 )"""
 
 
-def zk_transactions_oracle_sql() -> str:
+def zk_transactions_oracle_sql(traces_sql: str | None = None) -> str:
     return (
-        _common_ctes()
+        _common_ctes(traces_sql)
         + f""",
 fd_set AS (SELECT chain_id, transaction_hash, list_sort(list(address)) AS fd_addrs
            FROM fd GROUP BY 1, 2),
@@ -228,9 +236,9 @@ LEFT JOIN recov rv ON rv.chain_id = r.chain_id AND rv.transaction_hash = r.trans
     )
 
 
-def zk_contracts_oracle_sql() -> str:
+def zk_contracts_oracle_sql(traces_sql: str | None = None) -> str:
     return (
-        _common_ctes()
+        _common_ctes(traces_sql)
         + f""",
 committed AS (
   SELECT r.chain_id, r.transaction_hash, r.seq AS root_seq

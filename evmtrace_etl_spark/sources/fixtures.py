@@ -253,14 +253,15 @@ def _sql_lit(v, col: str) -> str:
     return str(v)
 
 
-def traces_values_sql() -> str:
-    """The fixture as a DuckDB inline relation ``(VALUES …) AS
-    traces(col, …)`` — the oracle side of the differential test."""
-    rows = ",\n    ".join(
+def traces_values_sql(rows: list[dict] | None = None) -> str:
+    """Trace rows (default: the fixture) as a DuckDB inline relation
+    ``(VALUES …) AS traces(col, …)`` — the oracle side of the
+    differential test."""
+    values = ",\n    ".join(
         "(" + ", ".join(_sql_lit(r[c], c) for c in _SQL_TRACE_COLS) + ")"
-        for r in TRACE_ROWS
+        for r in (TRACE_ROWS if rows is None else rows)
     )
-    return f"(VALUES\n    {rows}\n) AS traces({', '.join(_SQL_TRACE_COLS)})"
+    return f"(VALUES\n    {values}\n) AS traces({', '.join(_SQL_TRACE_COLS)})"
 
 
 _SQL_BLOCK_COLS = [f.name for f in BLOCK_SCHEMA.fields]

@@ -15,7 +15,7 @@ sessionize→commit→dump loop (SURVEY §3 EP1 stages 3–6).
   the same cached batch).
 
 Cross-micro-batch caveat: a transaction split across two micro-batches
-aggregates per batch; the insert-if-absent sink then keeps the first
+is grouped into a tree per batch; the insert-if-absent sink then keeps the first
 batch's version (the reference has the same boundary behavior at its
 session-restart, trace/mod.rs:65-77).
 """
@@ -79,9 +79,10 @@ def process_trace_batch(
     sink dedup) is the sink's insert-if-absent.  ``checksum`` applies the
     reference's sink-time EIP-55 formatting (P9).
 
-    The shared ZkParts cache is released once both sinks have consumed
-    it — a stream processes unboundedly many micro-batches, so leaked
-    persists would pile up in executor storage memory."""
+    Both outputs read one persisted frame of committed per-transaction
+    trees (``ZkParts``), released once both sinks have consumed it — a
+    stream processes unboundedly many micro-batches, so leaked persists
+    would pile up in executor storage memory."""
     parts = ZkParts(batch)
     try:
         # the probe is a driver collect per micro-batch — skip it for

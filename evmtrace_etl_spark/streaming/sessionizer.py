@@ -7,8 +7,11 @@ topic per chain), rows are processed in ``seq`` order; a root trace
 (``trace_address == []``, P4) COMMITS the open session and starts a new
 one.  Session state is the open tree's fused edge map — the same grain
 ``edge_aggregate`` produces in batch — so every closed session emits edge
-rows plus its root row, and the existing relational derivations (rollup,
-degrees, assembly) consume them unchanged.
+rows plus its root row.  Those rows are checked edge-for-edge against
+``edge_aggregate`` (tests/test_sessionizer.py) and against
+``session_edges_oracle_sql``; the batch zk outputs do not read them (the
+batch pipeline derives transactions and contracts from ``tx_trees``'
+per-transaction rows instead).
 
 Semantics notes:
 - This path reproduces the reference EXACTLY where the batch groupBy

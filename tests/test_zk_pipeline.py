@@ -11,9 +11,12 @@ reference defines.
 from __future__ import annotations
 
 import pytest
+from hypothesis import HealthCheck, example, given, settings
+from hypothesis import strategies as st
 
 from evmtrace_etl_spark.plans import zk_parity
 from evmtrace_etl_spark.plans.pipeline import (
+    ZkParts,
     blocks_passthrough,
     zk_contracts_deduped,
     zk_transactions,
@@ -28,6 +31,10 @@ from evmtrace_etl_spark.sources.fixtures import (
     C7,
     C8,
     EOA1,
+    EOA2,
+    EOA3,
+    P_ADD,
+    P_MUL,
     P_PAIR,
     P_REC,
     TXH,
@@ -154,50 +161,181 @@ def test_blocks_keep_last(spark):
     assert "seq" not in out.columns
 
 
-def test_salted_edge_aggregate_matches_and_bounds_skew(spark):
-    """Two-stage salted aggregate: identical results (up to array order)
-    on the standard fixture, and a 1e5-row single-hot-pair fixture whose
-    stage-1 output is bounded at n_salts rows per edge key."""
-    from evmtrace_etl_spark.operators.trace_tree import (
-        _edge_prepped,
-        _salted_partials,
-        edge_aggregate,
-    )
+def test_large_tree_counts_and_first_degree_gas(spark):
+    """One tx whose tree is a root plus 1e5 calls from C1 to ecPairing:
+    the whole tree is one grouped row, and its counts and gas totals
+    must come out exact."""
+    from pyspark.sql import functions as F
 
-    def canon(df):
-        return sorted(
-            (
-                r.chain_id, r.transaction_hash, r.from_address, r.to_address,
-                r.call_count, r.gas_sum, sorted(r.selectors),
-                sorted(r.pairing_sizes), sorted(r.recovered),
-            )
-            for r in df.collect()
+    n = 100_000
+    root = fixtures.arrow_df(
+        spark,
+        [fixtures._t(n, TXH[1], EOA1, C1, input="0x", gas_used=999)],
+        fixtures.TRACE_SCHEMA,
+    )
+    calls = spark.range(n).selectExpr(
+        "1 AS chain_id",
+        "0 AS transaction_index",
+        f"'{C1}' AS from_address",
+        f"'{P_PAIR}' AS to_address",
+        "'0xabcd' AS input",
+        "id AS gas_used",
+        "0 AS subtraces",
+        "array(CAST(id AS int)) AS trace_address",
+        f"'{TXH[1]}' AS transaction_hash",
+        "100 AS block_number",
+        "id AS seq",
+    )
+    traces = root.unionByName(
+        calls.select(
+            *[
+                (F.col(f.name) if f.name in calls.columns else F.lit(None))
+                .cast(f.dataType)
+                .alias(f.name)
+                for f in fixtures.TRACE_SCHEMA.fields
+            ]
         )
+    )
+    (tx,) = zk_transactions(traces).collect()
+    assert tx["ec_pairing_count"] == n
+    assert tx["ec_recover_count"] == 0
+    assert tx["closest_address"] == [C1]
+    assert tx["gas_used_first_degree"] == n * (n - 1) // 2
+    assert tx["gas_used_second_degree"] == 0
+    assert tx["gas_used_total"] == 999
+    assert tx["ec_pairing_input_sizes"] == [2] * n
+    (c1,) = zk_contracts_deduped(traces).collect()
+    assert c1["address"] == C1 and c1["ec_pairing_count"] == n
+    assert c1["call"] == [P_PAIR]
+
+
+def _schema_types(schema):
+    return [(f.name, f.dataType.simpleString()) for f in schema.fields]
+
+
+def test_outputs_carry_sink_schema_types(spark):
+    """Both outputs' column names and data types equal the sink schemas
+    (nullability aside): a sink table typed ``long`` must not receive an
+    ``int`` count."""
+    from evmtrace_etl_spark.schemas import CONTRACT_SCHEMA, TRANSACTION_SCHEMA
 
     traces = fixtures.traces_df(spark)
-    assert canon(edge_aggregate(traces, n_salts=8)) == canon(
-        edge_aggregate(traces)
+    assert _schema_types(zk_transactions(traces).schema) == _schema_types(
+        TRANSACTION_SCHEMA
     )
+    assert _schema_types(
+        zk_contracts_deduped(traces).schema
+    ) == _schema_types(CONTRACT_SCHEMA)
 
-    # pathological: one tx, one (from, to) pair, 1e5 traces
-    n = 100_000
-    hot = spark.range(n).selectExpr(
-        "1 AS chain_id",
-        f"'{TXH[1]}' AS transaction_hash",
-        f"'{fixtures.C1}' AS from_address",
-        f"'{fixtures.C2}' AS to_address",
-        "id AS seq",
-        "CAST(NULL AS string) AS input",
-        "CAST(NULL AS string) AS output",
-        "id AS gas_used",
-        "array(CAST(id AS int)) AS trace_address",
-    )
-    n_salts = 16
-    partials = _salted_partials(_edge_prepped(hot), n_salts)
-    # the hot key is split across exactly n_salts pre-reduced rows, so
-    # the final merge consumes n_salts rows instead of 1e5
-    assert partials.count() == n_salts
-    out = edge_aggregate(hot, n_salts=n_salts).collect()
-    assert len(out) == 1
-    assert out[0].call_count == n
-    assert out[0].gas_sum == n * (n - 1) // 2
+
+# --- randomized differential: Spark vs the DuckDB oracle on small tree sets
+
+_CALLERS = [None, EOA1, EOA2, C1, C2, C3, C5]  # None: P10-guarded row
+# precompiles twice over, so most trees commit
+_CALLEES = [C1, C2, C3, C5, P_REC, P_REC, P_ADD, P_MUL, P_PAIR, P_PAIR]
+_INPUTS = [None, "0x12345678", "0xaabbccdd" + "ab" * 8, "0x" + "cd" * 192]
+_OUTPUTS = [None, "0x" + "aa" * 20, "0x" + format(0x1111, "064x")]
+_GAS = st.one_of(st.none(), st.integers(0, 5000))
+
+_TX = st.fixed_dictionaries(
+    {
+        "chain": st.sampled_from([1, 10]),
+        "hash": st.sampled_from([TXH[1], TXH[2], TXH[3]]),
+        "eoa": st.sampled_from([EOA1, EOA2]),
+        "entry": st.sampled_from([C1, C2, C3]),
+        "value": st.sampled_from([None, 0, 5]),
+        "root_input": st.sampled_from(_INPUTS),
+        "root_gas": _GAS,
+        "error": st.sampled_from([None, "Reverted"]),
+        # a P11 field the root lacks (None: commit-eligible)
+        "missing": st.sampled_from(
+            [None, None, "transaction_index", "to_address", "transaction_hash"]
+        ),
+        "dup_root": st.booleans(),
+        "calls": st.lists(
+            st.tuples(
+                st.sampled_from(_CALLERS),
+                st.sampled_from(_CALLEES),
+                st.sampled_from(_INPUTS),
+                st.sampled_from(_OUTPUTS),
+                _GAS,
+            ),
+            max_size=6,
+        ),
+    }
+)
+
+#: one complete tx in every example: it sets a non-null value in every
+#: column the oracle reads, so DuckDB types the VALUES columns as Spark does
+_ANCHOR = [
+    fixtures._t(0, TXH[9], EOA3, C8, idx=4, value=1, input="0x12345678",
+                output="0x", gas_used=1, error="Reverted"),
+    fixtures._t(1, TXH[9], C8, P_REC, idx=4, input="0x" + "cd" * 128,
+                output="0x" + format(0x2222, "064x"), gas_used=2, path=[0]),
+]
+
+
+def _tree_rows(txs: list[dict]) -> list[dict]:
+    rows = list(_ANCHOR)
+
+    def add(**kw):
+        rows.append(fixtures._t(len(rows), **kw))
+
+    for t in txs:
+        roots = 2 if t["dup_root"] else 1
+        for k in range(roots):
+            add(
+                tx=None if t["missing"] == "transaction_hash" else t["hash"],
+                frm=t["eoa"],
+                to=None if t["missing"] == "to_address" else t["entry"],
+                chain=t["chain"],
+                idx=None if t["missing"] == "transaction_index" else 0,
+                value=t["value"],
+                # a duplicate root differs in input and gas, so keep-last shows
+                input=t["root_input"] if k == 0 else "0xfeedf00d" + "ab" * 4,
+                gas_used=t["root_gas"] if k == 0 else 40_000,
+                error=t["error"],
+            )
+        for i, (frm, to, inp, out, gas) in enumerate(t["calls"]):
+            add(tx=t["hash"], frm=frm, to=to, chain=t["chain"], input=inp,
+                output=out, gas_used=gas, path=[i])
+    return rows
+
+
+@given(txs=st.lists(_TX, min_size=1, max_size=4))
+@example(  # an EOA calling a first-degree caller, plus a duplicate root
+    txs=[
+        {
+            "chain": 1, "hash": TXH[1], "eoa": EOA1, "entry": C1,
+            "value": 5, "root_input": None, "root_gas": 10, "error": None,
+            "missing": None, "dup_root": True,
+            "calls": [
+                (C1, P_PAIR, None, None, 3),
+                (EOA1, C1, "0x12345678", None, None),
+                (C2, C1, "0xaabbccdd" + "ab" * 8, None, 7),
+            ],
+        }
+    ]
+)
+@settings(
+    max_examples=25,
+    deadline=None,
+    derandomize=True,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+def test_random_trees_match_duckdb_oracle(spark, txs):
+    rows = _tree_rows(txs)
+    traces = fixtures.arrow_df(spark, rows, fixtures.TRACE_SCHEMA)
+    relation = fixtures.traces_values_sql(rows)
+    parts = ZkParts(traces)
+    try:
+        assert_matches_oracle(
+            zk_parity.project_tx(zk_transactions(traces, parts)),
+            zk_parity.zk_transactions_oracle_sql(relation),
+        )
+        assert_matches_oracle(
+            zk_parity.project_contracts(zk_contracts_deduped(traces, parts)),
+            zk_parity.zk_contracts_oracle_sql(relation),
+        )
+    finally:
+        parts.unpersist()

@@ -1,5 +1,5 @@
 """Single-pass dual-output zk plan: zk_results must equal the standalone
-builders and reuse the persisted edge aggregate instead of re-scanning."""
+builders and read the one persisted tree frame instead of re-scanning."""
 
 from __future__ import annotations
 
@@ -22,11 +22,11 @@ def test_zk_results_matches_standalone(spark):
     assert _rows(c_combined) == _rows(zk_contracts_deduped(traces))
 
 
-def test_zk_results_reuses_edge_aggregate(spark):
+def test_zk_results_reads_one_persisted_tree_frame(spark):
     traces = fixtures.traces_df(spark)
     tx, contracts = zk_results(traces)
-    # both outputs must read the persisted edge table, not re-aggregate raw
-    # traces: the physical plans show InMemoryTableScan nodes
+    # both outputs must read the persisted per-transaction tree frame, not
+    # re-group the raw traces: the physical plans show InMemoryTableScan
     assert "InMemoryTableScan" in tx._jdf.queryExecution().executedPlan().toString()
     assert (
         "InMemoryTableScan"
