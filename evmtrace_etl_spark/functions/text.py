@@ -136,11 +136,6 @@ def hash32(col: Column) -> Column:
     return F.conv(F.substring(F.md5(col), 1, 7), 16, 10).cast("long")
 
 
-def hash_array32(arr: Column) -> Column:
-    """hash32 over every element of a string array."""
-    return F.transform(arr, hash32)
-
-
 def md5_long(col: Column, start: int, length: int) -> Column:
     """Integer value of md5 hex digits [start, start+length), 1-based.
 
@@ -178,21 +173,6 @@ def _perm_min(hashes: Column, a: int, b: int) -> Column:
 def minhash_signature(shingle_hashes: Column) -> Column:
     """Array of N_PERMS minhash values over a (possibly empty) hash array."""
     return F.array(*[_perm_min(shingle_hashes, a, b) for a, b in PERMS])
-
-
-def band_keys(sig: Column) -> Column:
-    """LSH band keys: the signature split into LSH_BANDS dash-joined runs."""
-    keys = [
-        F.array_join(
-            F.transform(
-                F.slice(sig, b * LSH_ROWS + 1, LSH_ROWS),
-                lambda x: x.cast("string"),
-            ),
-            "-",
-        )
-        for b in range(LSH_BANDS)
-    ]
-    return F.array(*keys)
 
 
 # ---------------------------------------------------------------------------

@@ -67,18 +67,6 @@ def exact_dup_groups(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def exact_dedup(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Keep the lowest doc_id per fingerprint (keep-first semantics of the
-    reference's D2, re-keyed on content hash)."""
-    w = Window.partitionBy("fingerprint").orderBy(F.col("doc_id").asc())
-    return (
-        with_fingerprint(docs, text_col)
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn", "fingerprint")
-    )
-
-
 def exploded_shingle_hashes(
     docs: DataFrame, text_col: str = "text"
 ) -> DataFrame:

@@ -36,26 +36,6 @@ def dedup_keep_last(
     )
 
 
-def dedup_keep_first(
-    df: DataFrame, keys: Sequence[str], order_col: str
-) -> DataFrame:
-    """D2 — one row per key, the one with the smallest ``order_col``."""
-    w = Window.partitionBy(*keys).orderBy(F.col(order_col).asc())
-    return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
-
-
-def dedup_any(df: DataFrame, keys: Sequence[str]) -> DataFrame:
-    """Order-free dedup (pure batch, D2 when arrival order is moot) —
-    ``dropDuplicates`` compiles to a hash aggregate with map-side partials,
-    cheaper than a window at scale; prefer it when any representative row
-    will do."""
-    return df.dropDuplicates(list(keys))
-
-
 def asof_join(
     left: DataFrame,
     right: DataFrame,

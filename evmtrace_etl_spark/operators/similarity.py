@@ -639,23 +639,6 @@ def _recall_rollup(exact: DataFrame, approx: DataFrame) -> DataFrame:
     )
 
 
-def ivf_recall(
-    emb: DataFrame,
-    n_queries: int = 10,
-    k: int = 5,
-    n_centroids: int = 16,
-    n_probe: int = 2,
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Recall@k of the IVF path against exact brute force — the probe-
-    count/centroid-count sizing loop (raising ``n_probe`` trades scan
-    volume for recall; this measures the trade on the shipped
-    operators).  Output schema matches ``ann_recall``."""
-    exact = brute_force_topk(emb, n_queries, k, vec_col)
-    approx = ivf_topk(emb, n_queries, k, n_centroids, n_probe, vec_col)
-    return _recall_rollup(exact, approx)
-
-
 def embedding_near_dup_pairs(
     emb: DataFrame,
     threshold: float = 0.95,
@@ -1256,32 +1239,6 @@ def pq_trained_topk(
     return _pq_serve(based, n_queries, k, n_subspaces, n_codes)
 
 
-def pq_recall(
-    emb: DataFrame,
-    n_queries: int = 10,
-    k: int = 5,
-    n_subspaces: int = 8,
-    n_codes: int = 8,
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Recall@k of the PQ/ADC path against exact brute force — the
-    code-budget sizing loop (subspaces × codes trade memory for recall;
-    this measures the trade on the shipped operators).  Output schema
-    matches ``ann_recall``.
-
-    Honest finding (same caveat as the trained-IVF harness): the test
-    corpus is UNIFORM unit vectors, so pairwise similarities are
-    tightly bunched and 3-bit-per-subspace codes (8×8 over 64 dims)
-    barely separate the top-5 — measured recall@5 ≈ 0.12 at sf0.01.
-    That is the expected PQ behavior on unstructured data, not an
-    implementation defect: the SAME harness run on clustered data (or
-    with a larger code budget / PQ re-ranking over exact distances of
-    the ADC top-R) is how the budget gets sized in production."""
-    exact = brute_force_topk(emb, n_queries, k, vec_col)
-    approx = pq_topk(emb, n_queries, k, n_subspaces, n_codes, vec_col)
-    return _recall_rollup(exact, approx)
-
-
 def ivfpq_codebooks(
     emb: DataFrame,
     n_centroids: int = 16,
@@ -1442,25 +1399,6 @@ def ivfpq_topk(
     )
 
 
-def ivfpq_recall(
-    emb: DataFrame,
-    n_queries: int = 10,
-    k: int = 5,
-    n_centroids: int = 16,
-    n_probe: int = 2,
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Recall@k of the IVF+PQ residual path against exact brute force —
-    run on the clustered corpus, this is the measured answer to the
-    plain-PQ within-cluster ranking floor.  Output schema matches
-    ``ann_recall``."""
-    exact = brute_force_topk(emb, n_queries, k, vec_col)
-    approx = ivfpq_topk(
-        emb, n_queries, k, n_centroids, n_probe, vec_col=vec_col
-    )
-    return _recall_rollup(exact, approx)
-
-
 def ivfpq_rerank_topk(
     emb: DataFrame,
     n_queries: int = 10,
@@ -1517,23 +1455,6 @@ def ivfpq_rerank_topk(
         .filter(F.col("rank") <= k)
         .select("query_id", "neighbor_id", "rank", "sim")
     )
-
-
-def ivfpq_rerank_recall(
-    emb: DataFrame,
-    n_queries: int = 10,
-    k: int = 5,
-    rerank: int = 20,
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Recall@k of the two-stage (ADC → exact re-rank) path — the
-    number that justifies the rerank budget R.  Output schema matches
-    ``ann_recall``."""
-    exact = brute_force_topk(emb, n_queries, k, vec_col)
-    approx = ivfpq_rerank_topk(
-        emb, n_queries, k, rerank, vec_col=vec_col
-    )
-    return _recall_rollup(exact, approx)
 
 
 def cell_label_purity(

@@ -58,14 +58,6 @@ def _trees(traces: DataFrame, parts: ZkParts | None) -> DataFrame:
     return (parts or ZkParts(traces, persist=False)).trees
 
 
-def zk_results(traces: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Single-pass dual output: (transactions, contracts_deduped) sharing
-    one persisted tree frame — the Spark restatement of the reference
-    emitting Transaction + Contract rows from one commit."""
-    parts = ZkParts(traces)
-    return zk_transactions(traces, parts), zk_contracts_deduped(traces, parts)
-
-
 def zk_transactions(traces: DataFrame, parts: ZkParts | None = None) -> DataFrame:
     """EP1 transaction output (reference Transaction assembly,
     src/types/trace_tree.rs:177-239), schema per

@@ -2,7 +2,7 @@
 driver-checkable rows, not just local tests.
 
 Each query drives REAL side-effecting machinery (file-source structured
-stream, ``foreachBatch``, the versioned parquet upsert sink) end-to-end
+stream, ``foreachBatch``, the lake upsert sink) end-to-end
 inside the ``queries()`` callable and returns the final sink table; the
 DuckDB oracle expresses the equivalent batch semantics:
 
@@ -45,10 +45,11 @@ from pyspark.sql import functions as F
 
 from ..schemas import TRANSACTION_SCHEMA
 from ..session import materialize as _materialize
-from ..sinks import LakeUpsertSink, ParquetUpsertSink
+from ..sinks import LakeUpsertSink
 from ..sources import fixtures
 from ..streaming import runner, sources
 from . import zk_parity
+from .pipeline import ZkParts, zk_contracts_deduped, zk_transactions
 
 
 #: Age past which a scratch dir is reaped even if its pid is alive —
@@ -146,11 +147,11 @@ def spark_stream_transactions(
     spark: SparkSession, sf_dir: str = ""
 ) -> DataFrame:
     """Fixture → JSON files → structured stream → foreachBatch zk pipeline
-    → parquet upsert sink → final transactions table."""
+    → lake upsert sink → final transactions table."""
     base = _workdir("stream_tx")
     src = os.path.join(base, "src")
     fixtures.traces_df(spark).coalesce(1).write.json(src)
-    sink = ParquetUpsertSink(os.path.join(base, "sink"))
+    sink = LakeUpsertSink(os.path.join(base, "sink"))
 
     def _process(batch: DataFrame, _batch_id: int) -> None:
         runner.process_trace_batch(batch, sink, checksum=False)
@@ -185,24 +186,18 @@ def _replay_batches(spark: SparkSession) -> list:
     harness would use reliable checkpoints).
 
     ``zk_upsert_replay`` and ``zk_upsert_partition`` test the SINK
-    machinery — conflict handling, partition pruning, the executor-side
-    writer — on identical batches; recomputing the identical upstream
+    machinery — conflict handling, the executor-side writer — on
+    identical batches; recomputing the identical upstream
     pipeline per query billed ~4 full pipeline cycles of fixed harness
     overhead to the pair per bench run.  Sharing the computed batches
     keeps both sink legs fully real while the pair pays the pipeline
     cost once.
 
-    Returns ``[(tx, contracts, touched_partitions), ...]`` in batch
-    order (insert-if-absent semantics require batch 1 first).
+    Returns ``[(tx, contracts), ...]`` in batch order (insert-if-absent
+    semantics require batch 1 first).
     """
     global _replay_cache
     if _replay_cache is None:
-        from ..plans.pipeline import (
-            ZkParts,
-            zk_contracts_deduped,
-            zk_transactions,
-        )
-
         traces = fixtures.traces_df(spark)
         out = []
         for batch in (traces.filter("chain_id = 1"), traces):
@@ -214,8 +209,7 @@ def _replay_batches(spark: SparkSession) -> list:
                 )
             finally:
                 parts.unpersist()
-            touched = runner._touched_chains(batch)
-            out.append((tx, contracts, touched))
+            out.append((tx, contracts))
         _replay_cache = out
     return _replay_cache
 
@@ -223,17 +217,11 @@ def _replay_batches(spark: SparkSession) -> list:
 def _upsert_replay_cycles(sink, spark: SparkSession) -> None:
     """Run the two insert-if-absent cycles of the replay scenario
     against ``sink`` from the shared materialized batches — the sink
-    side of ``runner.process_trace_batch`` (checksum=False), with the
-    partition-pruning hint honored exactly as the runner does."""
-    hints = getattr(sink, "uses_partition_hints", True)
-    for tx, contracts, touched in _replay_batches(spark):
+    side of ``runner.process_trace_batch`` (checksum=False)."""
+    for tx, contracts in _replay_batches(spark):
+        sink.upsert(tx, "transactions", runner.TX_KEYS, mode="ignore")
         sink.upsert(
-            tx, "transactions", runner.TX_KEYS, mode="ignore",
-            touched_partitions=touched if hints else None,
-        )
-        sink.upsert(
-            contracts, "contracts", runner.CONTRACT_KEYS, mode="ignore",
-            touched_partitions=touched if hints else None,
+            contracts, "contracts", runner.CONTRACT_KEYS, mode="ignore"
         )
 
 
@@ -359,15 +347,17 @@ def stream_throughput(
     and drained by an ``availableNow`` stream paced to
     ``files_per_trigger`` files per micro-batch — the file-source analog
     of Kafka ``maxOffsetsPerTrigger`` — through the full foreachBatch zk
-    pipeline into the parquet upsert sink.
+    pipeline into the lake upsert sink.
 
     Returns ``{rows, seconds, rows_per_sec, micro_batches, ...}`` for
     the bench JSON line.  Fixture-building and source-file writing are
     NOT timed; the stream (decode → sessionize → derive → upsert) is.
     """
     base = _workdir("stream_tput")
-    src, n_rows = _tput_fixture(spark, base, replicate, n_files)
-    point = _tput_drain(spark, base, src, n_rows, files_per_trigger)
+    src, n_rows, expected = _tput_fixture(spark, base, replicate, n_files)
+    point = _tput_drain(
+        spark, base, src, n_rows, expected, files_per_trigger
+    )
     point["rows"] = n_rows
     point["files"] = n_files
     return point
@@ -382,20 +372,21 @@ def stream_throughput_curve(
     """The SCALING CURVE the single-point probe can't show: the same
     replicated fixture drained once per ``files_per_trigger`` pacing
     point, isolating how much of the single-point figure is fixed
-    per-trigger overhead (checkpoint commit, plan setup, sink version
-    swap) vs per-row work.  Fixture replication/writing is untimed and
+    per-trigger overhead (checkpoint commit, plan setup, sink commit) vs
+    per-row work.  Fixture replication/writing is untimed and
     paid ONCE; each point gets a fresh checkpoint + sink so the drains
     are independent.
 
     Returns ``{rows, files, points: [{files_per_trigger, seconds,
     rows_per_sec, micro_batches}, ...]}``."""
     base = _workdir("stream_tput_curve")
-    src, n_rows = _tput_fixture(spark, base, replicate, n_files)
+    src, n_rows, expected = _tput_fixture(spark, base, replicate, n_files)
     return {
         "rows": n_rows,
         "files": n_files,
         "points": [
-            _tput_drain(spark, base, src, n_rows, fpt) for fpt in points
+            _tput_drain(spark, base, src, n_rows, expected, fpt)
+            for fpt in points
         ],
     }
 
@@ -404,7 +395,10 @@ def _tput_fixture(
     spark: SparkSession, base: str, replicate: int, n_files: int
 ) -> tuple:
     """Write the replicated trace fixture as ``n_files`` JSON files
-    (untimed harness setup shared by every pacing point)."""
+    (untimed harness setup shared by every pacing point).  Each file
+    holds whole transaction trees, so every pacing point commits the
+    single-batch result; returns ``(src, n_rows, expected)`` with
+    ``expected`` the sink's row count per table after a drain."""
     src = os.path.join(base, "src")
     traces = fixtures.traces_df(spark)
     keep_hash = F.col("transaction_hash").isNotNull()
@@ -421,9 +415,14 @@ def _tput_fixture(
         )
         .drop("_rep")
     )
-    wide.repartition(n_files).write.json(src)
+    wide.repartition(n_files, "transaction_hash").write.json(src)
     n_rows = traces.count() * replicate  # untimed: fixture-sized count
-    return src, n_rows
+    # replicas carry distinct tx hashes but the same contract keys
+    expected = {
+        "transactions": zk_transactions(traces).count() * replicate,
+        "contracts": zk_contracts_deduped(traces).count(),
+    }
+    return src, n_rows, expected
 
 
 def _tput_drain(
@@ -431,12 +430,14 @@ def _tput_drain(
     base: str,
     src: str,
     n_rows: int,
+    expected: dict,
     files_per_trigger: int,
 ) -> dict:
     """One timed availableNow drain of ``src`` through the full
-    foreachBatch zk pipeline into a fresh parquet upsert sink."""
+    foreachBatch zk pipeline into a fresh lake upsert sink; raises
+    (after the timing) unless the sink holds ``expected`` rows."""
     tag = f"fpt{files_per_trigger}"
-    sink = ParquetUpsertSink(os.path.join(base, f"sink_{tag}"))
+    sink = LakeUpsertSink(os.path.join(base, f"sink_{tag}"))
     batches = [0]
 
     def _process(batch: DataFrame, _batch_id: int) -> None:
@@ -457,6 +458,12 @@ def _tput_drain(
         q.stop()
         raise TimeoutError("stream_throughput: not finished after 600 s")
     dt = _time.perf_counter() - t0
+    got = {t: sink.read(spark, t).count() for t in expected}
+    if got != expected:
+        raise RuntimeError(
+            f"stream_throughput fpt={files_per_trigger}: sink holds "
+            f"{got} rows, the single-batch result is {expected}"
+        )
     return {
         "seconds": round(dt, 3),
         "rows_per_sec": round(n_rows / dt, 1),
@@ -523,14 +530,14 @@ def spark_event_windows(
             "value_sum",
         )
     )
-    sink = ParquetUpsertSink(
+    sink = LakeUpsertSink(
         os.path.join(base, "sink"), partition_cols=("event_type",)
     )
 
     def _process(batch: DataFrame, _batch_id: int) -> None:
         # availableNow runs one final empty batch to commit the advanced
         # watermark (state eviction); skipping it saves the sink a full
-        # persist + probe + merge cycle over zero rows
+        # merge commit over zero rows
         if batch.isEmpty():
             return
         sink.upsert(
@@ -601,7 +608,7 @@ def spark_stream_dedup_docs(
     _stage("b1", now - 100)
     _stage("b2_replay", now - 50)  # full replay, older-first ordering
 
-    sink = ParquetUpsertSink(os.path.join(base, "sink"), partition_cols=())
+    sink = LakeUpsertSink(os.path.join(base, "sink"), partition_cols=())
     stream = (
         spark.readStream.schema("doc_id long, text string")
         .option("maxFilesPerTrigger", "1")
@@ -839,7 +846,7 @@ def spark_stream_sessions(
             "value_sum",
         )
     )
-    sink = ParquetUpsertSink(os.path.join(base, "sink"), partition_cols=())
+    sink = LakeUpsertSink(os.path.join(base, "sink"), partition_cols=())
 
     def _process(batch: DataFrame, _batch_id: int) -> None:
         if batch.isEmpty():
@@ -956,7 +963,7 @@ def spark_stream_attribution(
         (F.unix_micros("purchase_ts") - F.unix_micros("click_ts"))
         .alias("gap_us"),
     )
-    sink = ParquetUpsertSink(os.path.join(base, "sink"), partition_cols=())
+    sink = LakeUpsertSink(os.path.join(base, "sink"), partition_cols=())
 
     def _process(batch: DataFrame, _batch_id: int) -> None:
         if batch.isEmpty():
@@ -1062,7 +1069,7 @@ def spark_stream_attribution_outer(
             .alias("gap_us"),
         )
     )
-    sink = ParquetUpsertSink(os.path.join(base, "sink"), partition_cols=())
+    sink = LakeUpsertSink(os.path.join(base, "sink"), partition_cols=())
 
     def _process(batch: DataFrame, _batch_id: int) -> None:
         if batch.isEmpty():

@@ -44,24 +44,17 @@ CONTRACT_KEYS = ["chain_id", "address", "function_signatures"]
 BLOCK_KEYS = ["chain_id", "number"]
 
 
-class UpsertSink(Protocol):  # ParquetUpsertSink / DbApiUpsertSink
+class UpsertSink(Protocol):  # LakeUpsertSink / the DB-API sinks
     def upsert(
-        self,
-        df: DataFrame,
-        table: str,
-        keys,
-        mode: str = "ignore",
-        touched_partitions=None,
+        self, df: DataFrame, table: str, keys, mode: str = "ignore"
     ) -> None: ...
 
 
+# No caller in the package: perfbench's tracer wraps this name on the
+# runner's namespace (perfbench/report.py) and must find it defined.
 def _touched_chains(batch: DataFrame) -> list[dict] | None:
-    """Partition-pruning hint for the sinks: the micro-batch's distinct
-    chain_ids, derived from the RAW batch (a narrow distinct over one
-    column) so neither sink has to materialize its fully-derived output
-    plan just to learn which partitions it touches.  The raw batch can
-    only ever be a superset of any derived output's chains — the safe
-    direction (see ParquetUpsertSink.upsert)."""
+    """The micro-batch's distinct chain_ids as ``{"chain_id": v}`` rows
+    (one driver collect), or None when the batch has no chain_id."""
     if "chain_id" not in batch.columns:
         return None
     return [
@@ -85,14 +78,6 @@ def process_trace_batch(
     would pile up in executor storage memory."""
     parts = ZkParts(batch)
     try:
-        # the probe is a driver collect per micro-batch — skip it for
-        # sinks that don't prune by partition (the DB-API writers push
-        # the conflict handling into the database instead)
-        touched = (
-            _touched_chains(batch)
-            if getattr(sink, "uses_partition_hints", True)
-            else None
-        )
         tx = zk_transactions(batch, parts)
         contracts = zk_contracts_deduped(batch, parts)
         if checksum:
@@ -100,14 +85,8 @@ def process_trace_batch(
             contracts = with_checksummed_addresses(
                 contracts, *CONTRACT_ADDRESS_COLS
             )
-        sink.upsert(
-            tx, "transactions", TX_KEYS, mode="ignore",
-            touched_partitions=touched,
-        )
-        sink.upsert(
-            contracts, "contracts", CONTRACT_KEYS, mode="ignore",
-            touched_partitions=touched,
-        )
+        sink.upsert(tx, "transactions", TX_KEYS, mode="ignore")
+        sink.upsert(contracts, "contracts", CONTRACT_KEYS, mode="ignore")
     finally:
         parts.unpersist()
 
@@ -120,10 +99,7 @@ def process_block_batch(
     out = blocks_passthrough(batch)
     if checksum:
         out = with_checksummed_addresses(out, *BLOCK_ADDRESS_COLS)
-    sink.upsert(
-        out, "blocks", BLOCK_KEYS, mode="update",
-        touched_partitions=_touched_chains(batch),
-    )
+    sink.upsert(out, "blocks", BLOCK_KEYS, mode="update")
 
 
 def start_zk_stream(

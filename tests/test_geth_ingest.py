@@ -9,7 +9,10 @@ from evmtrace_etl_spark.operators.geth_ingest import (
     flatten_call_frames,
     flattened_to_traces,
 )
-from evmtrace_etl_spark.plans.pipeline import zk_results
+from evmtrace_etl_spark.plans.pipeline import (
+    zk_contracts_deduped,
+    zk_transactions,
+)
 from evmtrace_etl_spark.sources import geth_fixtures
 
 
@@ -64,7 +67,7 @@ def test_geth_to_zk_pipeline(spark):
     traces = flattened_to_traces(
         flatten_call_frames(geth_fixtures.geth_frames_df(spark))
     )
-    tx, contracts = zk_results(traces)
+    tx, contracts = zk_transactions(traces), zk_contracts_deduped(traces)
     tx_rows = {r.transaction_hash: r for r in tx.collect()}
     # tx1 (ecRecover + ecPairing) and tx3 (ecRecover) commit; tx2 has no
     # precompile call and must be dropped by J1

@@ -366,9 +366,10 @@ def test_lake_schema_evolution_add_only(spark, tmp_path):
 
 
 def test_lake_upsert_sink_protocol(spark, tmp_path):
-    """LakeUpsertSink speaks ParquetUpsertSink's protocol on the
-    snapshot log: first-write seeds a hive-partitioned manifest-
-    tracked table, insert-if-absent keeps first writes on replay,
+    """LakeUpsertSink's upsert/read protocol on the snapshot log:
+    first-write seeds a hive-partitioned manifest-tracked table, reads
+    keep the stored column order, insert-if-absent keeps first writes
+    on replay,
     DO-UPDATE keeps the later batch, the partition-omitting batch
     raises, and the merge prunes candidates to the touched
     partition's files (directory-derived stats, no caller hint)."""
@@ -381,6 +382,8 @@ def test_lake_upsert_sink_protocol(spark, tmp_path):
     )
     sink.upsert(b1, "tx", ["chain", "h"], mode="ignore")
     assert sink.read(spark, "tx").count() == 3
+    # the partition column keeps its stored place (not moved last)
+    assert sink.read(spark, "tx").columns == ["chain", "h", "v"]
     # replay + one new row: first insert of every key wins
     b2 = spark.createDataFrame(
         [(1, "a", 99), (1, "d", 12)], "chain int, h string, v long"
@@ -406,7 +409,7 @@ def test_lake_upsert_sink_protocol(spark, tmp_path):
     assert sink.read(spark, "tx").filter("h = 'a'").select("v").collect()[
         0
     ][0] == -7
-    # partition-omitting batch rejected (same contract as PUS)
+    # partition-omitting batch rejected
     with pytest.raises(ValueError, match="partition"):
         sink.upsert(
             spark.createDataFrame([("z", 1)], "h string, v long"),

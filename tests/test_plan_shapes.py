@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 
 from evmtrace_etl_spark.operators import similarity, text_analysis
 from evmtrace_etl_spark.operators.enrichment import enrich_blocks
-from evmtrace_etl_spark.sinks import ParquetUpsertSink
+from evmtrace_etl_spark.sinks import LakeUpsertSink
 from evmtrace_etl_spark.sources import fixtures
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR_SMALL", "/root/testdata/sf0.001")
@@ -187,9 +187,6 @@ def test_zk_derivation_exchange_ceiling(spark):
         zk_transactions,
     )
 
-    # zk_results persists its tree frame for the session; a cached frame
-    # left by an earlier test would stand in for the derivation planned here
-    spark.catalog.clearCache()
     traces = fixtures.traces_df(spark)
     # simple mode prints each node once (formatted repeats them in the
     # details section, which would double the count)
@@ -216,13 +213,16 @@ def test_enrichment_join_broadcasts_blocks(spark):
 def test_sink_read_prunes_partitions(spark, tmp_path):
     """The hive-partitioned sink layout actually yields partition
     pruning: a chain_id predicate lands in PartitionFilters, so a merge
-    over 1 of N chains scans 1 of N directories."""
-    sink = ParquetUpsertSink(str(tmp_path / "sink"))
+    over 1 of N chains scans 1 of N directories.  The read keeps the
+    stored column order (the partition column is not moved last)."""
+    sink = LakeUpsertSink(str(tmp_path / "sink"))
     df = spark.range(8).select(
         (F.col("id") % 4).alias("chain_id"), F.col("id").alias("number")
     )
     sink.upsert(df, "blocks", ["chain_id", "number"], mode="update")
-    read = sink.read(spark, "blocks").filter(F.col("chain_id") == 1)
+    table = sink.read(spark, "blocks")
+    assert table.columns == ["chain_id", "number"]
+    read = table.filter(F.col("chain_id") == 1)
     plan = plan_of(read)
     assert "PartitionFilters" in plan
     # the predicate must appear inside PartitionFilters, not only as a

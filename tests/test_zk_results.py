@@ -1,11 +1,12 @@
-"""Single-pass dual-output zk plan: zk_results must equal the standalone
-builders and read the one persisted tree frame instead of re-scanning."""
+"""Single-pass dual-output zk plan: both builders over one ``ZkParts``
+must equal the standalone builders and read the one persisted tree
+frame instead of re-scanning."""
 
 from __future__ import annotations
 
 from evmtrace_etl_spark.plans.pipeline import (
+    ZkParts,
     zk_contracts_deduped,
-    zk_results,
     zk_transactions,
 )
 from evmtrace_etl_spark.sources import fixtures
@@ -17,18 +18,29 @@ def _rows(df):
 
 def test_zk_results_matches_standalone(spark):
     traces = fixtures.traces_df(spark)
-    tx_combined, c_combined = zk_results(traces)
-    assert _rows(tx_combined) == _rows(zk_transactions(traces))
-    assert _rows(c_combined) == _rows(zk_contracts_deduped(traces))
+    parts = ZkParts(traces)
+    try:
+        assert _rows(zk_transactions(traces, parts)) == _rows(
+            zk_transactions(traces)
+        )
+        assert _rows(zk_contracts_deduped(traces, parts)) == _rows(
+            zk_contracts_deduped(traces)
+        )
+    finally:
+        parts.unpersist()
 
 
 def test_zk_results_reads_one_persisted_tree_frame(spark):
     traces = fixtures.traces_df(spark)
-    tx, contracts = zk_results(traces)
-    # both outputs must read the persisted per-transaction tree frame, not
-    # re-group the raw traces: the physical plans show InMemoryTableScan
-    assert "InMemoryTableScan" in tx._jdf.queryExecution().executedPlan().toString()
-    assert (
-        "InMemoryTableScan"
-        in contracts._jdf.queryExecution().executedPlan().toString()
-    )
+    parts = ZkParts(traces)
+    try:
+        tx = zk_transactions(traces, parts)
+        contracts = zk_contracts_deduped(traces, parts)
+        # both outputs must read the persisted per-transaction tree
+        # frame, not re-group the raw traces: the physical plans show
+        # InMemoryTableScan
+        for df in (tx, contracts):
+            plan = df._jdf.queryExecution().executedPlan().toString()
+            assert "InMemoryTableScan" in plan
+    finally:
+        parts.unpersist()
