@@ -586,28 +586,6 @@ def clustered_corpus(
     )
 
 
-def ann_recall(
-    emb: DataFrame,
-    n_queries: int = 10,
-    k: int = 5,
-    vec_col: str = "embedding",
-    planes: list[list[float]] | None = None,
-) -> DataFrame:
-    """Recall@k of the sign-LSH ANN path against exact brute force —
-    the self-evaluation harness for the approximate index ("measure,
-    don't guess": bucket-count / plane-sizing changes are judged by this
-    number, not by intuition).
-
-    Output: query_id, n_exact, n_hit, recall (n_hit / k as a rounded
-    double — both engines divide identical IEEE doubles, so the oracle
-    matches bit-for-bit).  Both legs reuse the production operators, so
-    this measures exactly what ships.
-    """
-    exact = brute_force_topk(emb, n_queries, k, vec_col)
-    approx = lsh_topk(emb, n_queries, k, vec_col, planes)
-    return _recall_rollup(exact, approx)
-
-
 def _recall_rollup(exact: DataFrame, approx: DataFrame) -> DataFrame:
     """Per-query recall of ``approx`` top-k against ``exact`` top-k.
 

@@ -4512,7 +4512,7 @@ def _lake_mor_rebase_build(spark: SparkSession, sf_dir: str) -> str:
                 # back is the other, full-retry leg, tested there
                 sinks._recover_txn = lambda *_a, **_k: None
                 try:
-                    sinks._append_files_unlocked(
+                    sinks.append_files.__wrapped__(
                         spark_, winner.coalesce(1), tbl
                     )  # v1 — the pure-append winner
                 finally:

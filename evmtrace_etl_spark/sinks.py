@@ -7,7 +7,12 @@ NOTHING, blocks DO UPDATE all columns).
 Three implementations behind one ``upsert(df, table, keys, mode)``
 protocol, plus the snapshot-transactional lake tier (R19/R20 — see the
 snapshot-commit section mid-file: ``_commit_manifest`` / ``_txn_rewrite``
-/ ``append_files`` / ``merge_into`` / ``read_table`` / ``table_changes``):
+/ ``append_files`` / ``merge_into`` / ``read_table`` / ``table_changes``).
+Every lake write is ONE transaction protocol, written once: ``@_locked``
+takes the table's write lock, ``_open_txn`` runs the head (protocol
+gate → intent recovery → pending sweep, returning the pinned snapshot)
+and ``_land_commit`` the tail (``_TXN`` intent → move-in → stats rows →
+``_commit_manifest`` → rebase or roll back → sweep → clear intent).
 
 - ``LakeUpsertSink`` — the UNIFIED path (r10): keyed upserts as
   ``merge_into`` snapshot transactions through the same manifest log
@@ -93,10 +98,14 @@ class LakeUpsertSink:
     / DO UPDATE sink (src/dumper/postgres.rs:41-92,
     src/types/etl_result.rs:205-281).
 
-    An upsert rewrites only manifest-pruned candidate FILES and never
-    touches the rest; directory-derived partition stats in the
-    manifest prune candidates to the touched partitions' files, so the
-    caller passes no partition hint.  Maintenance goes through the
+    Every upsert merges copy-on-write: mode='ignore' scans the
+    manifest-pruned candidate FILES for key existence and rewrites
+    none; mode='update' rewrites only those files and never touches
+    the rest.  Directory-derived partition stats in the manifest prune
+    candidates to the touched partitions' files, so the caller passes
+    no partition hint.  Narrow updates over wide tables that want
+    merge-on-read tombstones call ``merge_into(...,
+    strategy='merge-on-read')`` directly.  Maintenance goes through the
     table-level calls (``compact_table``, ``vacuum_table``,
     ``maintain_table``) on ``<base>/<table>``.
     """
@@ -105,19 +114,9 @@ class LakeUpsertSink:
         self,
         base_dir: str,
         partition_cols: Sequence[str] = ("chain_id",),
-        strategy: str = "copy-on-write",
     ):
-        """``strategy`` applies to mode='update' upserts:
-        'copy-on-write' (default — Delta's default too) rewrites the
-        manifest-pruned candidate files; 'merge-on-read' writes key
-        tombstones instead (zero rewrite amplification; reads pay a
-        broadcast suppression join until ``materialize_deletes``) —
-        the right trade for narrow updates over wide tables."""
         self.base_dir = base_dir
         self.partition_cols = tuple(partition_cols)
-        if strategy not in ("copy-on-write", "merge-on-read"):
-            raise ValueError(f"unknown upsert strategy {strategy!r}")
-        self.strategy = strategy
 
     def _path(self, table: str) -> str:
         return os.path.join(self.base_dir, table)
@@ -173,12 +172,7 @@ class LakeUpsertSink:
         # a batch omitting the table's partition column fails loudly
         # inside merge_into itself (_guard_partition_cols — hoisted to
         # every lake write entry, so the sink needs no duplicate check)
-        merge_into(
-            spark, df, path, keys=list(keys), mode=mode,
-            # insert-if-absent must scan for existence either way;
-            # the strategy knob only governs DO-UPDATE rewrites
-            strategy=self.strategy if mode == "update" else "copy-on-write",
-        )
+        merge_into(spark, df, path, keys=list(keys), mode=mode)
 
 
 def _flatten_for_sql(df: DataFrame) -> DataFrame:
@@ -1665,7 +1659,8 @@ def _check_protocol_head(
     spark: SparkSession, mdir: str, ctx: str
 ) -> "tuple[int | None, dict]":
     """Early writer-side protocol gate for the locked write/maintenance
-    entry points — called BEFORE ``_recover_txn``/``_sweep_removed``,
+    entry points — ``_open_txn`` runs it BEFORE ``_recover_txn`` /
+    ``_sweep_removed``,
     not just before the op's own data work: adjudicating a newer
     build's ``_TXN`` intent or sweeping its pending backlog under this
     build's stale interpretation of the head commit could destroy files
@@ -1688,6 +1683,112 @@ def _check_protocol_head(
     head = _commit_info(spark, mdir, v)
     _check_protocol(head, "write", ctx)
     return v, head
+
+
+def _open_txn(
+    spark: SparkSession, mdir: str, ctx: str, require: bool = False
+) -> "tuple[int | None, dict]":
+    """THE head of every locked write, maintenance and DDL transaction,
+    in its one safe order: the protocol gate (``_check_protocol_head``),
+    then intent recovery (``_recover_txn``), then the pending-removal
+    sweep (``_sweep_removed``).  Returns the gate's ``(snap_v, head)``
+    — recovery and the sweep never change the committed-version set,
+    so the transaction pins its snapshot on that one read.
+    ``require`` refuses a table with no committed snapshot.
+    ``maintain_table`` (gate only: each step opens its own) and
+    ``vacuum_table`` (age-floored recovery) keep their own variants."""
+    snap_v, head = _check_protocol_head(spark, mdir, ctx)
+    _recover_txn(spark, mdir)
+    _sweep_removed(spark, mdir)
+    if require and snap_v is None:
+        raise ValueError(
+            f"no committed snapshot at {mdir} — create the table with "
+            "append_files first"
+        )
+    return snap_v, head
+
+
+def _txn_replayed(head: dict, txn: tuple[str, int] | None) -> bool:
+    """Whether ``txn = (app_id, batch_id)`` is already durable in the
+    ``head`` commit's carried txn map — a replayed streaming batch then
+    short-circuits to a no-op (exactly-once, Delta's txn action)."""
+    if txn is None:
+        return False
+    seen = head.get("txns", {}).get(str(txn[0]))
+    return seen is not None and int(txn[1]) <= int(seen)
+
+
+def _head_schema(
+    spark: SparkSession, path: str, head: dict
+) -> T.StructType:
+    """The table schema stamped on the ``head`` commit marker, else
+    (pre-schema tables) the directory footers' schema."""
+    sj = head.get("schema")
+    if sj is not None:
+        return T.StructType.fromJson(sj)
+    return spark.read.parquet(path).schema
+
+
+def _target_files(
+    fs, hp, files: Sequence[str], target_bytes: int
+) -> tuple[int, int]:
+    """``(ceil(total_bytes / target_bytes) ≥ 1, total_bytes)`` over
+    ``files`` — the optimized-write output file count of a rewrite.  A
+    file a racing commit already swept counts zero."""
+    total = 0
+    for f in files:
+        try:
+            total += fs.getFileStatus(hp(f)).getLen()
+        except Exception:  # pragma: no cover - racing sweep
+            pass
+    return max(1, -(-total // int(target_bytes))), total
+
+
+def _require_manifest(spark: SparkSession, mdir: str) -> DataFrame:
+    """The committed stats manifest a rewrite/merge plans against —
+    refusing a table that has none."""
+    manifest = current_manifest(spark, mdir)
+    if manifest is None:
+        raise ValueError(
+            f"no stats manifest at {mdir} — create the table with "
+            "append_files / update_stats_index first"
+        )
+    return manifest
+
+
+def _guard_dv_keys(
+    dvs: Sequence[dict], keys: Sequence[str], op: str
+) -> None:
+    """Refuse a keyed write on a key set other than the active deletion
+    vectors' — tombstones suppress BY KEY, so mixed key sets would
+    mis-suppress."""
+    if dvs and list(dvs[0]["keys"]) != list(keys):
+        raise ValueError(
+            f"table has active deletion vectors keyed on "
+            f"{list(dvs[0]['keys'])} but this {op} uses {list(keys)} — "
+            "materialize_deletes before writing on a different key"
+        )
+
+
+def _dv_entries(
+    files: Sequence[str], version: int, keys: Sequence[str]
+) -> list[dict]:
+    """Deletion-vector entries for freshly written tombstone sidecars.
+    They keep the ORIGINAL version stamp (= the read snapshot + 1) even
+    when a rebase re-commits later: suppression must apply exactly to
+    the files the write actually read, never to a winner append's rows
+    (serial-order semantics — see ``_rebase_tombstone``).  Per-entry
+    row counts feed the dv-debt metrics in ``table_history`` without
+    re-reading sidecar footers."""
+    return [
+        {
+            "file": f,
+            "version": version,
+            "keys": list(keys),
+            "rows": _footer_num_rows(f),
+        }
+        for f in files
+    ]
 
 
 def _schema_widened(prev_sj: dict | None, new_sj: dict | None) -> bool:
@@ -1840,7 +1941,19 @@ def _lock_key(mdir: str) -> str:
 
 def _log_lock(mdir: str) -> "_threading.Lock":
     """Per-table in-process write lock, keyed on the canonical path
-    form (``_lock_key``).  Writer concurrency contract:
+    form (``_lock_key``).  Write entries take it through ``_locked``,
+    which carries the writer-concurrency contract."""
+    with _LOG_LOCKS_GUARD:
+        return _LOG_LOCKS.setdefault(_lock_key(mdir), _threading.Lock())
+
+
+def _locked(fn):
+    """Run the lake write entry ``fn`` under its table's ``_log_lock``,
+    resolved from the call's bound ``path`` / ``manifest_path``.  The
+    lock is a plain (non-reentrant) ``threading.Lock``: a caller that
+    already holds it — an entry composing another, or a test injecting
+    a competing writer inside a held lock — calls the unlocked body,
+    ``fn.__wrapped__``.  Writer concurrency contract:
 
     - SAME driver (the common deployment — multiple streams/maintenance
       ops on one SparkSession): transactions on one table serialize on
@@ -1863,8 +1976,19 @@ def _log_lock(mdir: str) -> "_threading.Lock":
       between intent and commit still LOOKS crashed, so an impatient
       recovery wastes its work (never corrupts it); ``vacuum_table``
       age-floors the marker to avoid that."""
-    with _LOG_LOCKS_GUARD:
-        return _LOG_LOCKS.setdefault(_lock_key(mdir), _threading.Lock())
+    import functools
+    import inspect
+
+    sig = inspect.signature(fn)
+
+    @functools.wraps(fn)
+    def locked(*args, **kwargs):
+        bound = sig.bind(*args, **kwargs).arguments
+        mdir = _manifest_dir(bound["path"], bound.get("manifest_path"))
+        with _log_lock(mdir):
+            return fn(*args, **kwargs)
+
+    return locked
 
 
 #: A crashed writer's commit lease is considered stale (breakable)
@@ -3043,16 +3167,6 @@ def _active_dvs(
     return list(_commit_info(spark, manifest_path, v).get("dvs", []))
 
 
-def _table_cdf(spark: SparkSession, manifest_path: str) -> bool:
-    """Whether the table's carried change-data-feed flag is set (every
-    rewrite commit then writes change-data files ``table_changes`` can
-    serve row-level CDC from)."""
-    v = manifest_version(spark, manifest_path)
-    if v is None:
-        return False
-    return bool(_commit_info(spark, manifest_path, v).get("cdf", False))
-
-
 #: Tombstone sets at or under this many keys keep the explicit
 #: broadcast hint in ``_dv_suppress``; larger (provably, via the
 #: entries' stamped row counts) sets join un-hinted so AQE sizes the
@@ -3231,15 +3345,10 @@ def _consolidate_dvs(
     base = os.path.dirname(os.path.dirname(dvs[0]["file"]))
     ddir = f"{base}/consolidated-v{nxt}-{_uuid.uuid4().hex[:8]}"
     jvm, hp, fs = _fs_for(spark, base)
-    total = 0
-    for d in dvs:
-        try:
-            total += fs.getFileStatus(hp(d["file"])).getLen()
-        except Exception:  # pragma: no cover - racing sweep
-            pass
-    folded.repartition(
-        max(1, -(-total // (128 * 1024 * 1024)))
-    ).write.mode("overwrite").parquet(ddir)
+    n_out, _bytes = _target_files(
+        fs, hp, [d["file"] for d in dvs], 128 * 1024 * 1024
+    )
+    folded.repartition(n_out).write.mode("overwrite").parquet(ddir)
     files = _sidecar_files(fs, hp, ddir)
     vmax = max(int(d["version"]) for d in dvs)
     new_dvs = [
@@ -3300,36 +3409,209 @@ def _write_changes(
     return _sidecar_files(fs, hp, cdir)
 
 
-def _txn_rewrite(
-    spark: SparkSession,
+def _write_temp(
+    df: DataFrame,
+    schema: T.StructType,
     path: str,
-    manifest_path: str | None,
-    predicates: dict[str, tuple],
-    rewrite: Callable[[DataFrame, "F.Column"], DataFrame],
-    cols: Sequence[str] | None,
-    count_matched: bool = False,
-    candidates: Sequence[str] | None = None,
-    keep_versions: int | None = None,
-    txn: tuple[str, int] | None = None,
-    changes_fn: Callable[[DataFrame, "F.Column"], DataFrame] | None = None,
+    kind: str,
+    pcols: Sequence[str] | None = None,
     bloom_cols: Sequence[str] | None = None,
     bloom_ndv: int = 1_000_000,
-    observe_input: bool = True,
-    op: str | None = None,
+) -> str:
+    """Write a transaction's output ``df`` (``schema``'s logical
+    columns) COMPLETELY to a fresh hidden temp sibling
+    ``<path>._<kind>_<hex>`` and return its path: PHYSICAL column names
+    on mapped tables (blooms install on them too), hive-encoded by
+    ``pcols`` — ``_land_commit`` moves the partition directories in as
+    they are.  ``vacuum_table`` sweeps a crashed writer's leftover by
+    the same prefixes."""
+    import uuid
+
+    tmp = path.rstrip("/") + f"._{kind}_{uuid.uuid4().hex[:8]}"
+    phys_of = {f.name: _field_phys(f) for f in schema.fields}
+    writer = _with_blooms(
+        _to_phys(df, schema).write.mode("overwrite"),
+        [phys_of.get(c, c) for c in bloom_cols] if bloom_cols else None,
+        bloom_ndv,
+    )
+    if pcols:
+        writer = writer.partitionBy(*pcols)
+    writer.parquet(tmp)
+    return tmp
+
+
+def _checked_write(
+    spark: SparkSession, obs, tmp: str, cons: dict[str, str], ctx: str
 ) -> dict:
-    """Per-table-serialized entry to ``_txn_rewrite_unlocked`` (see
-    ``_log_lock`` for the writer-concurrency contract)."""
-    with _log_lock(_manifest_dir(path, manifest_path)):
-        return _txn_rewrite_unlocked(
-            spark, path, manifest_path, predicates, rewrite, cols,
-            count_matched=count_matched, candidates=candidates,
-            keep_versions=keep_versions, txn=txn, changes_fn=changes_fn,
-            bloom_cols=bloom_cols, bloom_ndv=bloom_ndv,
-            observe_input=observe_input, op=op,
+    """The temp write's observed metrics (``_obs_result``; the AQE
+    zero-row fallback verified against the temp output's own footers)
+    with the table's CHECK constraints enforced on them: a violation
+    deletes the temp output and raises BEFORE any ``_TXN`` intent — no
+    snapshot reader ever saw anything."""
+    vals = _obs_result(obs, verify_rows=lambda: _dir_footer_rows(spark, tmp))
+    if cons:
+        try:
+            _raise_constraint_violations(vals, cons, ctx)
+        except ConstraintViolation:
+            jvm, hp, fs = _fs_for(spark, tmp)
+            fs.delete(hp(tmp), True)
+            raise
+    return vals
+
+
+def _land_commit(
+    spark: SparkSession,
+    path: str,
+    mdir: str,
+    expected: int,
+    *,
+    tmp: str | None = None,
+    sidecars: Sequence[str] = (),
+    changes: Sequence[str] | None = None,
+    removed: Sequence[str] = (),
+    schema: T.StructType | None = None,
+    pcols: Sequence[str] | None = None,
+    cols: Sequence[str] = (),
+    stamp_schema: bool = False,
+    txn: tuple[str, int] | None = None,
+    rebase: dict | None = None,
+    sweep: bool = True,
+    metrics: dict | None = None,
+    **commit_kw,
+) -> dict | None:
+    """THE tail of every file-landing write transaction — the one copy
+    of the snapshot-commit protocol (``_open_txn`` is its head):
+
+    1. plan the temp output's (``tmp``) files onto their table paths,
+       preserving any hive partition directories;
+    2. log the ``_TXN`` intent — planned adds plus the already-written
+       ``sidecars`` (tombstones) and ``changes`` (change-data files),
+       and the ``removed`` files — carrying a fresh intent token;
+    3. move the files in (invisible: no committed manifest references
+       them, and ``_recover_txn`` rolls an interrupted attempt back);
+    4. build the added files' stats rows — driver-side footer reads up
+       to ``_LOCAL_STATS_MAX`` files (zero Spark jobs), else the
+       distributed ``parquet_stats_index``;
+    5. commit at ``expected`` (``_commit_manifest``, which re-verifies
+       the intent token under the lease); ``stamp_schema`` stamps
+       ``schema``, ``commit_kw`` passes through;
+    6. on ``SnapshotConflict`` with a ``rebase`` context — the plan's
+       ``cdf`` flag, checked ``constraints`` and column mapping
+       (``cmap``), plus the tombstone ``keys`` when the ``sidecars``
+       are deletion vectors — logical conflict detection
+       (``_rebase_tombstone`` for tombstone commits, else
+       ``_rebase_append``; at most 20 times) either re-commits the
+       already-moved-in files at the next version (change-data files
+       restamped for it, intent rewritten), or rolls them back and
+       re-raises for a full retry; a winner that already committed
+       this ``txn`` batch id rolls back and returns None — the caller
+       reports an exactly-once no-op.  Without ``rebase`` every
+       conflict rolls back and re-raises;
+    7. sweep the replaced files (``_post_commit_sweep``, unless
+       ``sweep`` is False) and clear the intent.
+
+    Returns ``{"version", "added", "rebased"}``."""
+    jvm, hp, fs = _fs_for(spark, path)
+    planned = (
+        [
+            (tmp + "/" + rel, path.rstrip("/") + "/" + rel)
+            for rel, _ln in _leaf_files(spark, tmp)
+        ]
+        if tmp is not None
+        else []
+    )
+    removed = list(removed)
+    read_snap = expected - 1
+
+    def _intent(version: int, files: list[str]) -> str:
+        return _write_txn_intent(
+            spark,
+            mdir,
+            {
+                "expected_version": version,
+                "added": files + list(sidecars) + list(changes or []),
+                "removed": removed,
+            },
         )
 
+    itok = _intent(expected, [dst for _src, dst in planned])
+    added = _move_files_in(fs, hp, planned)
+    delta_df = delta_rows = delta_schema = None
+    if tmp is not None:
+        fs.delete(hp(tmp), True)
+        # O(batch) commit: only the new files' stats rows are written;
+        # replaced files ride the marker's removed list
+        if len(added) <= _LOCAL_STATS_MAX:
+            delta_rows, delta_schema = _local_stats_rows(
+                added, list(cols), schema, list(pcols or [])
+            )
+        else:
+            delta_df = parquet_stats_index(
+                spark, path, list(cols), paths=added, schema=schema
+            )
+        metrics = {**(metrics or {}), "files_added": len(added)}
+    rebased = 0
+    while True:
+        try:
+            version = _commit_manifest(
+                spark, mdir, delta_df, removed=removed,
+                expected_version=expected, partition_by=pcols, txn=txn,
+                added_files=added, changes=changes,
+                added_rows=delta_rows, stats_schema=delta_schema,
+                table_schema=schema.jsonValue() if stamp_schema else None,
+                intent_token=itok, metrics=metrics, **commit_kw,
+            )
+            break
+        except SnapshotConflict:
+            ours = added + list(sidecars) + list(changes or [])
+            rb = None
+            if rebase is not None and rebased < 20:
+                args = (
+                    spark, mdir, txn, rebase["cdf"], schema,
+                    rebase["constraints"], pcols, ours, rebase["cmap"],
+                )
+                rb = (
+                    _rebase_tombstone(
+                        *args, read_snap, dv_keys=rebase["keys"],
+                        our_dv_files=list(sidecars),
+                    )
+                    if "keys" in rebase
+                    else _rebase_append(*args)
+                )
+            if rb is None or rb == "skip":
+                _rollback_conflict(spark, mdir, ours, intent_token=itok)
+                if rb == "skip":
+                    return None
+                raise
+            expected, schema = rb
+            rebased += 1
+            if changes:
+                # change-data rows carry the commit version INSIDE the
+                # sidecar parquet — restamp them for the new version (a
+                # batch-sized read/write, never the data files) and
+                # drop the orphaned originals
+                old = list(changes)
+                changes = _write_changes(
+                    spark,
+                    spark.read.parquet(*old).withColumn(
+                        "_commit_version", F.lit(expected).cast("long")
+                    ),
+                    path,
+                    expected,
+                )
+                for d in {os.path.dirname(f) for f in old}:
+                    fs.delete(hp(d), True)
+            # recovery must roll this attempt forward/back against the
+            # version it now targets
+            itok = _intent(expected, added)
+    if sweep:
+        _post_commit_sweep(spark, mdir)
+    _clear_txn_intent(spark, mdir, itok)
+    return {"version": int(version), "added": added, "rebased": rebased}
 
-def _txn_rewrite_unlocked(
+
+@_locked
+def _txn_rewrite(
     spark: SparkSession,
     path: str,
     manifest_path: str | None,
@@ -3349,56 +3631,38 @@ def _txn_rewrite_unlocked(
     """The snapshot-committed candidate-file rewrite engine shared by
     ``delete_where`` and ``update_where``: prune candidate files
     through the manifest, apply ``rewrite(touched_rows, hit_condition)``
-    to ONLY those files' rows, write the result to a temp sibling, log
-    the ``_TXN`` intent, move the new files in (invisible to snapshot
-    readers), commit the refreshed manifest atomically with the
-    candidates recorded as removed, and sweep them post-commit.
+    to ONLY those files' rows, write the result to a temp sibling, and
+    land it through ``_land_commit`` with the candidates recorded as
+    removed (swept post-commit).
     Hive-partitioned layouts round-trip through ``basePath`` read +
     ``partitionBy`` write + per-partition-directory moves, so untouched
     partitions keep their inodes.  Crash anywhere = a snapshot reader
     sees exactly one committed version; ``_recover_txn`` rolls the
     interrupted attempt back or forward at the next maintenance op.
     """
-    import uuid
-
     mdir = _manifest_dir(path, manifest_path)
     jvm, hp, fs = _fs_for(spark, path)
-    # gate BEFORE recovery/sweep: adjudicating a newer build's intent
-    # or sweeping its backlog under this build's stale semantics could
-    # destroy files a higher-level snapshot references
-    _check_protocol_head(spark, mdir, f"{op or 'rewrite'} {path}")
-    _recover_txn(spark, mdir)
-    _sweep_removed(spark, mdir)
-
-    if txn is not None:
+    # the gate's snapshot pin: the commit plans against exactly this
+    # version, so an interloper committing after this point surfaces
+    # as SnapshotConflict, never as a silently-merged-from-stale-
+    # snapshot commit
+    snap_v, head = _open_txn(spark, mdir, f"{op or 'rewrite'} {path}")
+    if _txn_replayed(head, txn):
         # exactly-once for STREAMED rewrites (a foreachBatch retention
-        # delete / rectification update): a replayed batch id
-        # short-circuits before any work, same contract as append/merge
-        seen = last_committed_txn(spark, mdir, txn[0])
-        if seen is not None and int(txn[1]) <= seen:
-            return {
-                "files_total": None,
-                "files_rewritten": 0,
-                "files_added": 0,
-                "rows_matched": None,
-                "rows_before": None,
-                "rows_after": None,
-                "partitioned": False,
-                "version": manifest_version(spark, mdir),
-                "skipped": True,
-            }
+        # delete / rectification update), same contract as append/merge
+        return {
+            "files_total": None,
+            "files_rewritten": 0,
+            "files_added": 0,
+            "rows_matched": None,
+            "rows_before": None,
+            "rows_after": None,
+            "partitioned": False,
+            "version": snap_v,
+            "skipped": True,
+        }
 
-    manifest = current_manifest(spark, mdir)
-    if manifest is None:
-        raise ValueError(
-            f"no stats manifest at {mdir} — build one with "
-            "update_stats_index first"
-        )
-    # pin the snapshot version HERE: the commit plans against exactly
-    # this manifest, so an interloper committing after this point must
-    # surface as SnapshotConflict, never as a silently-merged-from-
-    # stale-snapshot commit
-    snap_v = manifest_version(spark, mdir)
+    manifest = _require_manifest(spark, mdir)
     files_total = manifest.count()
     ranges, hit = _pred_parts(predicates)
     # candidates default to manifest-pruned files; an explicit list
@@ -3446,15 +3710,7 @@ def _txn_rewrite_unlocked(
 
     # hive partition columns: stamped in the commit, else probed once
     pcols = _detect_pcols(spark, path, mdir)
-
-    # ONE head-marker read serves schema AND constraints
-    head = _commit_info(spark, mdir, snap_v) if snap_v is not None else {}
-    sj = head.get("schema")
-    schema = (
-        T.StructType.fromJson(sj)
-        if sj is not None
-        else spark.read.parquet(path).schema
-    )
+    schema = _head_schema(spark, path, head)
     touched = _read_files(spark, cand, schema, base_path=path)
     # active deletion vectors apply to the candidate read: the rewrite
     # must not resurrect suppressed rows, and the rewritten files get
@@ -3501,32 +3757,16 @@ def _txn_rewrite_unlocked(
             obs_out, F.count(F.lit(1)).alias("n"), *_constraint_metrics(cons)
         )
 
-        tmp = path.rstrip("/") + f"._rewrite_{uuid.uuid4().hex[:8]}"
-        # blooms install on the PHYSICAL parquet column names
-        phys_of = {f.name: _field_phys(f) for f in schema.fields}
-        writer = _with_blooms(
-            _to_phys(out, schema).write.mode("overwrite"),
-            [phys_of.get(c, c) for c in bloom_cols] if bloom_cols else None,
-            bloom_ndv,
+        tmp = _write_temp(
+            out, schema, path, "rewrite", pcols, bloom_cols, bloom_ndv
         )
-        if pcols:
-            writer = writer.partitionBy(*pcols)
-        writer.parquet(tmp)
-        # ground truth for the AQE zero-row fallback: the temp output's
-        # own footers (O(files written) driver-side reads, and only on
-        # the rare fallback path)
-        _verify = lambda: _dir_footer_rows(spark, tmp)  # noqa: E731
-        vals_out = _obs_result(obs_out, verify_rows=_verify)
-        if cons:
-            try:
-                _raise_constraint_violations(
-                    vals_out, cons, f"rewrite of {path}"
-                )
-            except ConstraintViolation:
-                fs.delete(hp(tmp), True)
-                raise
+        vals_out = _checked_write(
+            spark, obs_out, tmp, cons, f"rewrite of {path}"
+        )
         if obs_in is not None:
-            vals_in = _obs_result(obs_in, verify_rows=_verify)
+            vals_in = _obs_result(
+                obs_in, verify_rows=lambda: _dir_footer_rows(spark, tmp)
+            )
             rows_before = int(vals_in["n"] or 0)
             rows_matched = (
                 int(vals_in["m"] or 0) if count_matched else None
@@ -3570,73 +3810,29 @@ def _txn_rewrite_unlocked(
                 else []
             )
 
-        # plan final resting places, log the intent, THEN move
-        planned = [
-            (tmp + "/" + rel, path.rstrip("/") + "/" + rel)
-            for rel, _ln in _leaf_files(spark, tmp)
-        ]
-        itok = _write_txn_intent(
-            spark,
-            mdir,
-            {
-                "expected_version": expected,
-                "added": [dst for _src, dst in planned]
-                + list(changes_files or []),
-                "removed": list(cand),
-            },
-        )
-        added = _move_files_in(fs, hp, planned)
-        fs.delete(hp(tmp), True)
-
         if cols is None:
             cols = [c[:-4] for c in manifest.columns if c.endswith("_min")]
-        # O(batch) commit: only the new files' stats rows are written; the
-        # rewritten candidates ride the marker's removed list and fall out
-        # of the snapshot at reconstruction (materialized at the next
-        # checkpoint) — driver-side footer reads for batch-sized adds
-        delta_df = None
-        delta_rows = delta_schema = None
-        if len(added) <= _LOCAL_STATS_MAX:
-            delta_rows, delta_schema = _local_stats_rows(
-                added, list(cols), schema, pcols
-            )
-        else:
-            delta_df = parquet_stats_index(
-                spark, path, list(cols), paths=added, schema=schema
-            )
-        try:
-            version = _commit_manifest(
-                spark, mdir, delta_df,
-                removed=cand, expected_version=expected,
-                keep_versions=keep_versions, partition_by=pcols, txn=txn,
-                added_files=added, changes=changes_files,
-                added_rows=delta_rows, stats_schema=delta_schema,
-                op=op, intent_token=itok,
-                metrics={
-                    "rows_written": int(rows_after),
-                    "files_added": len(added),
-                    "files_removed": len(cand),
-                },
-            )
-        except SnapshotConflict:
-            _rollback_conflict(
-                spark, mdir, added + list(changes_files or []),
-                intent_token=itok,
-            )
-            raise
-        _post_commit_sweep(spark, mdir)
-        _clear_txn_intent(spark, mdir, itok)
+        landed = _land_commit(
+            spark, path, mdir, expected,
+            tmp=tmp, changes=changes_files, removed=cand,
+            schema=schema, pcols=pcols, cols=cols,
+            keep_versions=keep_versions, txn=txn, op=op,
+            metrics={
+                "rows_written": int(rows_after),
+                "files_removed": len(cand),
+            },
+        )
         ledger.update(
             {
                 "files_rewritten": len(cand),
-                "files_added": len(added),
+                "files_added": len(landed["added"]),
                 "rows_matched": (
                     int(rows_matched) if rows_matched is not None else None
                 ),
                 "rows_before": int(rows_before),
                 "rows_after": int(rows_after),
                 "partitioned": bool(pcols),
-                "version": int(version),
+                "version": landed["version"],
                 # row-preserving rewrites (compact/cluster) on a DV table
                 # ALSO materialize the touched files' tombstone
                 # suppression — callers use this to explain a physical
@@ -3650,7 +3846,8 @@ def _txn_rewrite_unlocked(
             cached.unpersist()
 
 
-def _delete_mor_unlocked(
+@_locked
+def _delete_mor(
     spark: SparkSession,
     path: str,
     manifest_path: str | None,
@@ -3681,61 +3878,33 @@ def _delete_mor_unlocked(
 
     mdir = _manifest_dir(path, manifest_path)
     jvm, hp, fs = _fs_for(spark, path)
-    snap_v, head = _check_protocol_head(
+    snap_v, head = _open_txn(
         spark, mdir, f"delete_where (merge-on-read) {path}"
     )
-    _recover_txn(spark, mdir)
-    _sweep_removed(spark, mdir)
-
-    if txn is not None:
-        seen = head.get("txns", {}).get(str(txn[0]))
-        if seen is not None and int(txn[1]) <= int(seen):
-            return {
-                "files_total": None,
-                "files_rewritten": 0,
-                "files_added": 0,
-                "dv_files": 0,
-                "rows_deleted": 0,
-                "version": snap_v,
-                "skipped": True,
-                "strategy": "merge-on-read",
-            }
-
-    manifest = current_manifest(spark, mdir)
-    if manifest is None:
-        raise ValueError(
-            f"no stats manifest at {mdir} — build one with "
-            "update_stats_index first"
-        )
-    dvs = list(head.get("dvs", []))
-    keys = list(keys)
-    if dvs and list(dvs[0]["keys"]) != keys:
-        raise ValueError(
-            f"table has active deletion vectors keyed on "
-            f"{list(dvs[0]['keys'])} but this delete uses {keys} — "
-            "materialize_deletes before deleting on a different key"
-        )
-    ranges, hit = _pred_parts(predicates)
-    cand, files_total = _prune_files_with_total(manifest, ranges)
     ledger = {
-        "files_total": int(files_total),
+        "files_total": None,
         "files_rewritten": 0,
         "files_added": 0,
         "dv_files": 0,
         "rows_deleted": 0,
         "version": snap_v,
-        "skipped": False,
+        "skipped": True,
         "strategy": "merge-on-read",
     }
+    if _txn_replayed(head, txn):
+        return ledger
+
+    manifest = _require_manifest(spark, mdir)
+    dvs = list(head.get("dvs", []))
+    keys = list(keys)
+    _guard_dv_keys(dvs, keys, "delete")
+    ranges, hit = _pred_parts(predicates)
+    cand, files_total = _prune_files_with_total(manifest, ranges)
+    ledger.update({"files_total": int(files_total), "skipped": False})
     if not cand:
         return ledger
 
-    sj = head.get("schema")
-    schema = (
-        T.StructType.fromJson(sj)
-        if sj is not None
-        else spark.read.parquet(path).schema
-    )
+    schema = _head_schema(spark, path, head)
     missing = [k for k in keys if k not in {f.name for f in schema.fields}]
     if missing:
         raise ValueError(f"delete keys {missing} are not table columns")
@@ -3786,102 +3955,40 @@ def _delete_mor_unlocked(
                 expected,
                 schema=schema,
             )
-        # the dv entries keep the ORIGINAL version stamp (= the read
-        # snapshot + 1) even if a rebase re-commits later: suppression
-        # must apply exactly to the files the delete actually read,
-        # never to a winner append's rows (serial-order semantics)
-        dv_entries = [
-            # per-entry row counts feed the dv-debt metrics in
-            # table_history without re-reading sidecar footers
-            {
-                "file": f,
-                "version": expected,
+        landed = _land_commit(
+            spark, path, mdir, expected,
+            sidecars=dv_files, changes=changes_files,
+            schema=schema, txn=txn,
+            # a tombstone-only commit never conflicts with PURE-APPEND
+            # winners — re-commit the already-written sidecar at the
+            # next version instead of re-running the candidate scan
+            rebase={
+                "cdf": cdf_on,
+                "constraints": dict(head.get("constraints") or {}),
+                "cmap": head.get("col_mapping"),
                 "keys": keys,
-                "rows": _footer_num_rows(f),
+            },
+            sweep=False,
+            keep_versions=keep_versions,
+            dvs_add=_dv_entries(dv_files, expected, keys),
+            op="delete (merge-on-read)",
+            metrics={
+                "rows_deleted": int(rows_matched),
+                "dv_files": len(dv_files),
+            },
+        )
+        if landed is None:
+            return {
+                **ledger,
+                "skipped": True,
+                "version": manifest_version(spark, mdir),
             }
-            for f in dv_files
-        ]
-        commit_v = expected
-        rebased = 0
-        while True:
-            itok = _write_txn_intent(
-                spark,
-                mdir,
-                {
-                    "expected_version": commit_v,
-                    "added": dv_files + list(changes_files or []),
-                    "removed": [],
-                },
-            )
-            try:
-                version = _commit_manifest(
-                    spark, mdir, None, removed=[],
-                    expected_version=commit_v, txn=txn,
-                    keep_versions=keep_versions,
-                    dvs_add=dv_entries,
-                    changes=changes_files,
-                    op="delete (merge-on-read)",
-                    intent_token=itok,
-                    metrics={
-                        "rows_deleted": int(rows_matched),
-                        "dv_files": len(dv_files),
-                    },
-                )
-                break
-            except SnapshotConflict:
-                # logical conflict detection: a tombstone-only commit
-                # never conflicts with PURE-APPEND winners — re-commit
-                # the already-written sidecar at the next version
-                # instead of re-running the candidate scan
-                # (_rebase_tombstone names the cases needing a retry)
-                rb = (
-                    _rebase_tombstone(
-                        spark, mdir, txn, cdf_on, schema,
-                        dict(head.get("constraints") or {}), None,
-                        dv_files + list(changes_files or []),
-                        head.get("col_mapping"),
-                        snap_v if snap_v is not None else -1,
-                        dv_keys=keys, our_dv_files=dv_files,
-                    )
-                    if rebased < 20
-                    else None
-                )
-                if rb is None or rb == "skip":
-                    _rollback_conflict(
-                        spark, mdir, dv_files + list(changes_files or []),
-                        intent_token=itok,
-                    )
-                    if rb == "skip":
-                        return {
-                            **ledger,
-                            "skipped": True,
-                            "version": manifest_version(spark, mdir),
-                        }
-                    raise
-                commit_v = rb[0]
-                rebased += 1
-                if changes_files:
-                    # CDC rows carry the commit version inside the
-                    # sidecar parquet — restamp for the new version
-                    old_changes = list(changes_files)
-                    changes_files = _write_changes(
-                        spark,
-                        spark.read.parquet(*old_changes).withColumn(
-                            "_commit_version",
-                            F.lit(commit_v).cast("long"),
-                        ),
-                        path,
-                        commit_v,
-                    )
-                    for d in {os.path.dirname(f) for f in old_changes}:
-                        fs.delete(hp(d), True)
-        _clear_txn_intent(spark, mdir, itok)
         ledger.update(
             {
                 "dv_files": len(dv_files),
                 "rows_deleted": rows_matched,
-                "version": int(version),
-                "rebased": rebased,
+                "version": landed["version"],
+                "rebased": landed["rebased"],
             }
         )
         return ledger
@@ -3935,7 +4042,7 @@ def delete_where(
     tombstone and ZERO data files are rewritten — the
     right-to-erasure shape when the predicate cuts across the
     clustering (a user-id purge over a ts-clustered table).  See
-    ``_delete_mor_unlocked``; ``materialize_deletes`` folds the
+    ``_delete_mor``; ``materialize_deletes`` folds the
     suppression back in.
 
     Isolation divergence from Delta (merge-on-read only): a collided
@@ -3959,11 +4066,10 @@ def delete_where(
                 "delete_where(strategy='merge-on-read') needs keys — "
                 "the tombstone suppresses rows BY KEY"
             )
-        with _log_lock(_manifest_dir(path, manifest_path)):
-            return _delete_mor_unlocked(
-                spark, path, manifest_path, predicates, keys,
-                keep_versions=keep_versions, txn=txn,
-            )
+        return _delete_mor(
+            spark, path, manifest_path, predicates, keys,
+            keep_versions=keep_versions, txn=txn,
+        )
     ledger = _txn_rewrite(
         spark,
         path,
@@ -3993,7 +4099,8 @@ def delete_where(
     return ledger
 
 
-def _update_mor_unlocked(
+@_locked
+def _update_mor(
     spark: SparkSession,
     path: str,
     manifest_path: str | None,
@@ -4013,11 +4120,9 @@ def _update_mor_unlocked(
     files.  Same key-uniqueness contract as ``merge_into``; CDC tables
     get update pre/postimages from the merge engine."""
     mdir = _manifest_dir(path, manifest_path)
-    snap_v, head = _check_protocol_head(
+    snap_v, head = _open_txn(
         spark, mdir, f"update_where (merge-on-read) {path}"
     )
-    _recover_txn(spark, mdir)
-    _sweep_removed(spark, mdir)
     skipped_ledger = {
         "files_total": None,
         "files_rewritten": 0,
@@ -4028,34 +4133,17 @@ def _update_mor_unlocked(
         "skipped": True,
         "strategy": "merge-on-read",
     }
-    if txn is not None:
-        seen = head.get("txns", {}).get(str(txn[0]))
-        if seen is not None and int(txn[1]) <= int(seen):
-            return skipped_ledger
-    manifest = current_manifest(spark, mdir)
-    if manifest is None:
-        raise ValueError(
-            f"no stats manifest at {mdir} — build one with "
-            "update_stats_index first"
-        )
+    if _txn_replayed(head, txn):
+        return skipped_ledger
+    manifest = _require_manifest(spark, mdir)
     keys = list(keys)
     dvs = list(head.get("dvs", []))
-    if dvs and list(dvs[0]["keys"]) != keys:
-        raise ValueError(
-            f"table has active deletion vectors keyed on "
-            f"{list(dvs[0]['keys'])} but this update uses {keys} — "
-            "materialize_deletes before updating on a different key"
-        )
+    _guard_dv_keys(dvs, keys, "update")
     ranges, hit = _pred_parts(predicates)
     cand, files_total = _prune_files_with_total(manifest, ranges)
     if not cand:
         return {**skipped_ledger, "files_total": int(files_total), "skipped": False}
-    sj = head.get("schema")
-    schema = (
-        T.StructType.fromJson(sj)
-        if sj is not None
-        else spark.read.parquet(path).schema
-    )
+    schema = _head_schema(spark, path, head)
     touched = _read_files(spark, cand, schema, base_path=path)
     matched = _dv_suppress(spark, touched, manifest, dvs).filter(hit)
     # SET expressions evaluate against the ORIGINAL row (SQL UPDATE
@@ -4066,7 +4154,7 @@ def _update_mor_unlocked(
             for c, expr in resolved.items()
         }
     )
-    led = _merge_into_unlocked(
+    led = merge_into.__wrapped__(
         spark, src, path, keys, manifest_path=manifest_path,
         mode="update", txn=txn, keep_versions=keep_versions,
         strategy="merge-on-read", op="update (merge-on-read)",
@@ -4130,17 +4218,16 @@ def update_where(
     if strategy == "merge-on-read":
         # scattered rectification: matched rows land as new files +
         # key tombstones, zero candidate rewrites (see
-        # _update_mor_unlocked) — requires unique-row keys
+        # _update_mor) — requires unique-row keys
         if not keys:
             raise ValueError(
                 "update_where(strategy='merge-on-read') needs keys — "
                 "the updated rows re-land BY KEY over a tombstone"
             )
-        with _log_lock(_manifest_dir(path, manifest_path)):
-            return _update_mor_unlocked(
-                spark, path, manifest_path, predicates, resolved, keys,
-                keep_versions=keep_versions, txn=txn,
-            )
+        return _update_mor(
+            spark, path, manifest_path, predicates, resolved, keys,
+            keep_versions=keep_versions, txn=txn,
+        )
 
     def _apply(touched: DataFrame, hit) -> DataFrame:
         # ONE withColumns call: every SET expression evaluates against
@@ -4182,23 +4269,8 @@ def update_where(
     return ledger
 
 
+@_locked
 def update_stats_index(
-    spark: SparkSession,
-    path: str,
-    manifest_path: str | None = None,
-    cols: Sequence[str] | None = None,
-    keep_versions: int | None = None,
-) -> dict:
-    """Per-table-serialized entry to ``_update_stats_index_unlocked``
-    (see ``_log_lock`` for the writer-concurrency contract)."""
-    with _log_lock(_manifest_dir(path, manifest_path)):
-        return _update_stats_index_unlocked(
-            spark, path, manifest_path=manifest_path, cols=cols,
-            keep_versions=keep_versions,
-        )
-
-
-def _update_stats_index_unlocked(
     spark: SparkSession,
     path: str,
     manifest_path: str | None = None,
@@ -4234,12 +4306,8 @@ def _update_stats_index_unlocked(
     version.
     """
     mdir = _manifest_dir(path, manifest_path)
-    _check_protocol_head(spark, mdir, f"update_stats_index {path}")
-    _recover_txn(spark, mdir)
-    _sweep_removed(spark, mdir)
-
+    snap_v, head = _open_txn(spark, mdir, f"update_stats_index {path}")
     current = _leaf_file_uris(spark, path)
-    snap_v = manifest_version(spark, mdir)
     expected = (snap_v if snap_v is not None else -1) + 1
     old = current_manifest(spark, mdir)
 
@@ -4276,10 +4344,7 @@ def _update_stats_index_unlocked(
     # keeps on disk for time travel) is known-REMOVED, never new ingest
     # — adopting it would resurrect deleted/pre-merge rows into the
     # head and (via the re-add backlog pop) orphan it from the sweep
-    head_marker = (
-        _commit_info(spark, mdir, snap_v) if snap_v is not None else {}
-    )
-    pending_disk = {e["file"] for e in _pending_entries(head_marker)}
+    pending_disk = {e["file"] for e in _pending_entries(head)}
     new = sorted(cur_set - old_files - pending_disk)
     gone = sorted(old_files - cur_set)
 
@@ -4381,6 +4446,7 @@ def read_table(
         # concurrent merge-on-read commit land between them and apply
         # NEWER tombstones against the OLDER file list (keys vanish)
         version = manifest_version(spark, mdir)
+    head: dict | None = {}
     if version is not None:
         # refuse snapshots whose stamped protocol exceeds this build's
         # feature level — misresolving a mapped/widened table is worse
@@ -4402,9 +4468,7 @@ def read_table(
     files = prune_files(manifest, ranges)
     # the committed snapshot's schema (old files null-fill columns a
     # later batch evolved in); pre-schema tables fall back to footers
-    schema = committed_schema(spark, mdir, version=version)
-    if schema is None:
-        schema = spark.read.parquet(path).schema
+    schema = _head_schema(spark, path, head or {})
     if not files:
         return spark.createDataFrame([], schema).filter(cond)
     out = _read_files(spark, files, schema, base_path=path)
@@ -4482,10 +4546,8 @@ def _rebase_append(
         if not fs.exists(hp(f)):
             return None
     head = _commit_info(spark, mdir, snap)
-    if txn is not None:
-        seen = head.get("txns", {}).get(str(txn[0]))
-        if seen is not None and int(txn[1]) <= int(seen):
-            return "skip"
+    if _txn_replayed(head, txn):
+        return "skip"
     if dict(head.get("constraints") or {}) != dict(
         checked_constraints or {}
     ):
@@ -4640,29 +4702,8 @@ def _rebase_tombstone(
     )
 
 
+@_locked
 def append_files(
-    spark: SparkSession,
-    df: DataFrame,
-    path: str,
-    manifest_path: str | None = None,
-    cols: Sequence[str] | None = None,
-    txn: tuple[str, int] | None = None,
-    keep_versions: int | None = None,
-    partition_by: Sequence[str] | None = None,
-    enable_cdf: bool | None = None,
-    retain_removed: bool | None = None,
-) -> dict:
-    """Per-table-serialized entry to ``_append_files_unlocked`` (see
-    ``_log_lock`` for the writer-concurrency contract)."""
-    with _log_lock(_manifest_dir(path, manifest_path)):
-        return _append_files_unlocked(
-            spark, df, path, manifest_path=manifest_path, cols=cols,
-            txn=txn, keep_versions=keep_versions, partition_by=partition_by,
-            enable_cdf=enable_cdf, retain_removed=retain_removed,
-        )
-
-
-def _append_files_unlocked(
     spark: SparkSession,
     df: DataFrame,
     path: str,
@@ -4721,30 +4762,19 @@ def _append_files_unlocked(
     version, skipped, rebased (commit re-attempts that reused the
     written files).
     """
-    import uuid
-
     mdir = _manifest_dir(path, manifest_path)
-    jvm, hp, fs = _fs_for(spark, path)
     # ONE listing + ONE head-marker read (the protocol gate's) serve
     # the whole transaction: snapshot pin, txn idempotence, stats
     # columns, schema, and the partition layout all ride the same JSON
     # (pre-log flat manifests fall back to the reconstruction read)
-    snap_v, head = _check_protocol_head(spark, mdir, f"append_files {path}")
-    _recover_txn(spark, mdir)
-    _sweep_removed(spark, mdir)
+    snap_v, head = _open_txn(spark, mdir, f"append_files {path}")
     have_table = snap_v is not None or bool(
         _flat_manifest_files(spark, mdir)
     )
-
-    if txn is not None:
-        seen = head.get("txns", {}).get(str(txn[0]))
-        if seen is not None and int(txn[1]) <= int(seen):
-            return {
-                "rows": 0,
-                "files_added": 0,
-                "version": snap_v,
-                "skipped": True,
-            }
+    if _txn_replayed(head, txn):
+        return {
+            "rows": 0, "files_added": 0, "version": snap_v, "skipped": True
+        }
 
     if not have_table and cols is None:
         raise ValueError(
@@ -4770,12 +4800,7 @@ def _append_files_unlocked(
     # evolved schema is stamped into this commit so read_table serves
     # old files null-filled under it.
     if have_table:
-        sj = head.get("schema")
-        stored = (
-            T.StructType.fromJson(sj)
-            if sj is not None
-            else spark.read.parquet(path).schema
-        )
+        stored = _head_schema(spark, path, head)
         evolved = _evolved_schema(
             stored, df.schema, f"append_files into {path}"
         )
@@ -4803,7 +4828,6 @@ def _append_files_unlocked(
 
     from pyspark.sql import Observation
 
-    tmp = path.rstrip("/") + f"._append_{uuid.uuid4().hex[:8]}"
     obs = Observation()
     if partition_by:
         # align one write task per partition value first — otherwise a
@@ -4817,62 +4841,31 @@ def _append_files_unlocked(
         obs, F.count(F.lit(1)).alias("n"), *_constraint_metrics(cons)
     )
     # mapped tables write PHYSICAL column names (constraints and the
-    # observation above already evaluated on the logical projection)
-    writer = _to_phys(df, evolved).write.mode("overwrite")
-    if partition_by:
-        # hive-encode the batch; the move-in preserves the partition
-        # directory layout and the stats index derives the partition
-        # columns' min=max from the directory values
-        writer = writer.partitionBy(*list(partition_by))
-    writer.parquet(tmp)
+    # observation above already evaluated on the logical projection);
+    # the stats index derives the partition columns' min=max from the
+    # hive directory values
+    tmp = _write_temp(df, evolved, path, "append", partition_by)
     # row count rides the write (CollectMetrics) — no read-back scan,
     # and an EMPTY batch no longer trips schema inference on a
-    # file-less temp dir; the AQE zero-row fallback is verified
-    # against the temp output's own footers
-    vals = _obs_result(
-        obs, verify_rows=lambda: _dir_footer_rows(spark, tmp)
-    )
+    # file-less temp dir
+    vals = _checked_write(spark, obs, tmp, cons, f"append_files into {path}")
     rows = int(vals["n"] or 0)
-    if cons:
-        try:
-            _raise_constraint_violations(
-                vals, cons, f"append_files into {path}"
-            )
-        except ConstraintViolation:
-            # refuse BEFORE the _TXN intent: temp files gone, no
-            # snapshot reader ever saw anything
-            fs.delete(hp(tmp), True)
-            raise
-
-    planned = [
-        (tmp + "/" + rel, path.rstrip("/") + "/" + rel)
-        for rel, _ln in _leaf_files(spark, tmp)
-    ]
     expected = (snap_v if snap_v is not None else -1) + 1
-    itok = _write_txn_intent(
-        spark,
-        mdir,
-        {
-            "expected_version": expected,
-            "added": [dst for _src, dst in planned],
-            "removed": [],
-        },
-    )
-    added = _move_files_in(fs, hp, planned)
-    fs.delete(hp(tmp), True)
 
     # change-data feed: on a CDF table, appends ALSO write their rows
     # as insert change files — the zero-retention sweep deletes
     # replaced data files at the next rewrite, so synthesizing inserts
     # from the data files later is not durable; the sidecars are (the
-    # explicit trade vs Delta's retained-data-file synthesis).  A
-    # crash before the commit leaves them unreferenced — vacuum sweeps
-    # those.
+    # explicit trade vs Delta's retained-data-file synthesis).  They
+    # ride the _TXN intent, so a crash before the commit rolls them
+    # back with the data files.
+    planned_cdf = bool(head.get("cdf", False)) or bool(enable_cdf)
     changes_files: list[str] | None = None
-    if bool(head.get("cdf", False)) or bool(enable_cdf):
+    if planned_cdf:
+        written = [tmp + "/" + rel for rel, _ln in _leaf_files(spark, tmp)]
         changes_files = _write_changes(
             spark,
-            _read_files(spark, added, evolved, base_path=path)
+            _read_files(spark, written, evolved, base_path=tmp)
             .withColumn("_change_type", F.lit("insert"))
             .withColumn(
                 "_commit_version", F.lit(expected).cast("long")
@@ -4880,156 +4873,59 @@ def _append_files_unlocked(
             path,
             expected,
             schema=evolved,
-        ) if added else []
+        ) if written else []
 
-    # O(batch) commit: only the new files' stats rows are written (the
-    # delta) — driver-side for batch-sized adds (zero Spark jobs),
-    # distributed above _LOCAL_STATS_MAX
+    jvm, hp, fs = _fs_for(spark, path)
     pcols_commit = (
         list(partition_by)
         if partition_by is not None
-        # detect once (stamped thereafter) so flat tables stamp
-        # [] and later transactions skip the directory probe
+        # detect once (stamped thereafter) so flat tables stamp [] and
+        # later transactions skip the directory probe; a table
+        # directory that does not exist yet gets only this flat batch
         else _detect_pcols(spark, path, mdir)
+        if fs.exists(hp(path))
+        else []
     )
-    delta_df = None
-    delta_rows = delta_schema = None
-    if len(added) <= _LOCAL_STATS_MAX:
-        delta_rows, delta_schema = _local_stats_rows(
-            added, list(cols), evolved, pcols_commit
-        )
-    else:
-        delta_df = parquet_stats_index(
-            spark, path, list(cols), paths=added, schema=evolved
-        )
-    planned_cdf = bool(head.get("cdf", False)) or bool(enable_cdf)
-    rebased = 0
-    while True:
-        try:
-            version = _commit_manifest(
-                spark, mdir, delta_df, removed=[], expected_version=expected,
-                txn=txn, keep_versions=keep_versions,
-                table_schema=evolved.jsonValue(),
-                partition_by=pcols_commit,
-                col_mapping=cmap,
-                # like retain_removed, only True enables — an explicit
-                # False must not silently strip the carried CDF flag while
-                # this very commit still wrote insert sidecars (the feed
-                # would break at the NEXT rewrite with no signal here)
-                cdf=enable_cdf or None,
-                retain=retain_removed or None,
-                added_rows=delta_rows,
-                stats_schema=delta_schema,
-                changes=changes_files,
-                op="append",
-                intent_token=itok,
-                metrics={
-                    "rows_written": int(rows),
-                    "files_added": len(added),
-                },
-            )
-            break
-        except SnapshotConflict:
-            # logical conflict detection: two pure appends never
-            # conflict — re-commit the ALREADY-MOVED-IN files at the
-            # next version instead of rolling them back and re-running
-            # the batch write (Delta re-attempts only the commit).
-            # _rebase_append names the cases that DO need a full retry.
-            rb = (
-                _rebase_append(
-                    spark, mdir, txn, planned_cdf, evolved, cons,
-                    pcols_commit, added + list(changes_files or []),
-                    planned_cmap=cmap,
-                )
-                if rebased < 20
-                else None
-            )
-            if rb is None or rb == "skip":
-                # full retry (retry_on_conflict) — or a winner already
-                # committed this txn's batch id (the batch is durable;
-                # landing ours too would double it)
-                _rollback_conflict(
-                    spark, mdir, added + list(changes_files or []),
-                    intent_token=itok,
-                )
-                if rb == "skip":
-                    return {
-                        "rows": 0,
-                        "files_added": 0,
-                        "version": manifest_version(spark, mdir),
-                        "skipped": True,
-                    }
-                raise
-            expected, evolved = rb
-            rebased += 1
-            if changes_files:
-                # CDC rows carry the commit version INSIDE the sidecar
-                # parquet — restamp them for the new version (a
-                # batch-sized read/write, never the data files) and
-                # drop the orphaned originals
-                old_changes = list(changes_files)
-                changes_files = _write_changes(
-                    spark,
-                    spark.read.parquet(*old_changes).withColumn(
-                        "_commit_version", F.lit(expected).cast("long")
-                    ),
-                    path,
-                    expected,
-                )
-                for d in {os.path.dirname(f) for f in old_changes}:
-                    fs.delete(hp(d), True)
-            # refresh the intent marker so crash recovery rolls this
-            # attempt forward/back against the version it now targets
-            itok = _write_txn_intent(
-                spark,
-                mdir,
-                {
-                    "expected_version": expected,
-                    "added": added + list(changes_files or []),
-                    "removed": [],
-                },
-            )
-    _clear_txn_intent(spark, mdir, itok)
+    landed = _land_commit(
+        spark, path, mdir, expected,
+        tmp=tmp, changes=changes_files,
+        schema=evolved, pcols=pcols_commit, cols=cols, stamp_schema=True,
+        # two pure appends never conflict — re-commit the ALREADY-
+        # MOVED-IN files at the next version instead of re-running the
+        # batch write (Delta re-attempts only the commit)
+        txn=txn,
+        rebase={"cdf": planned_cdf, "constraints": cons, "cmap": cmap},
+        sweep=False,
+        keep_versions=keep_versions, col_mapping=cmap,
+        # like retain_removed, only True enables — an explicit False
+        # must not silently strip the carried CDF flag while this very
+        # commit still wrote insert sidecars (the feed would break at
+        # the NEXT rewrite with no signal here)
+        cdf=enable_cdf or None,
+        retain=retain_removed or None,
+        op="append",
+        metrics={"rows_written": int(rows)},
+    )
+    if landed is None:
+        # a winner already committed this txn's batch id (the batch is
+        # durable; landing ours too would double it)
+        return {
+            "rows": 0,
+            "files_added": 0,
+            "version": manifest_version(spark, mdir),
+            "skipped": True,
+        }
     return {
         "rows": int(rows),
-        "files_added": len(added),
-        "version": int(version),
+        "files_added": len(landed["added"]),
+        "version": landed["version"],
         "skipped": False,
-        "rebased": rebased,
+        "rebased": landed["rebased"],
     }
 
 
+@_locked
 def merge_into(
-    spark: SparkSession,
-    source: DataFrame,
-    path: str,
-    keys: Sequence[str],
-    manifest_path: str | None = None,
-    mode: str = "update",
-    cols: Sequence[str] | None = None,
-    txn: tuple[str, int] | None = None,
-    keep_versions: int | None = None,
-    target_bytes: int = 128 * 1024 * 1024,
-    strategy: str = "copy-on-write",
-) -> dict:
-    """Per-table-serialized entry to ``_merge_into_unlocked`` (see
-    ``_log_lock`` for the writer-concurrency contract).
-
-    Isolation divergence from Delta (``strategy='merge-on-read'``
-    only): a collided MOR merge re-commits over pure-append winners in
-    exact serial order (the tombstone keeps its read-snapshot stamp,
-    so winner appends survive even when they carry a merged key),
-    where Delta raises ConcurrentAppendException under
-    WriteSerializable; see ``delete_where`` for the full note."""
-    with _log_lock(_manifest_dir(path, manifest_path)):
-        return _merge_into_unlocked(
-            spark, source, path, keys, manifest_path=manifest_path,
-            mode=mode, cols=cols, txn=txn, keep_versions=keep_versions,
-            target_bytes=target_bytes, strategy=strategy,
-        )
-
-
-def _merge_into_unlocked(
     spark: SparkSession,
     source: DataFrame,
     path: str,
@@ -5071,26 +4967,34 @@ def _merge_into_unlocked(
     files.  A 1-row update to a 128 MB file writes ~1 row, not
     128 MB — Delta/Iceberg's deletion-vector shape on this log.
 
-    Transaction protocol = ``append_files``/``_txn_rewrite``'s:
-    temp-sibling write, ``_TXN`` intent, move-in (invisible until
-    commit), one atomic manifest commit carrying the evolved schema
-    and the optional ``txn=(app_id, batch_id)`` stamp (a replayed
-    batch id is a no-op — exactly-once keyed upsert from a stream),
-    post-commit sweep of replaced files; ``SnapshotConflict`` rolls
-    back the moved-in files so ``retry_on_conflict`` restarts clean.
-    Crash-injection tested on both sides of the commit point.  When
-    the table's change-data-feed flag is set, the commit also writes
-    row-level change files (insert / update_preimage /
+    Transaction protocol = ``_open_txn`` / ``_land_commit``, like
+    every lake write: temp-sibling write, ``_TXN`` intent, move-in
+    (invisible until commit), one atomic manifest commit carrying the
+    evolved schema and the optional ``txn=(app_id, batch_id)`` stamp
+    (a replayed batch id is a no-op — exactly-once keyed upsert from a
+    stream), post-commit sweep of replaced files; ``SnapshotConflict``
+    rolls back the moved-in files so ``retry_on_conflict`` restarts
+    clean.  Crash-injection tested on both sides of the commit point.
+    When the table's change-data-feed flag is set, the commit also
+    writes row-level change files (insert / update_preimage /
     update_postimage) that ``table_changes`` serves across rewrites.
+
+    Isolation divergence from Delta (``strategy='merge-on-read'``
+    only): a collided MOR merge re-commits over pure-append winners in
+    exact serial order (the tombstone keeps its read-snapshot stamp,
+    so winner appends survive even when they carry a merged key),
+    where Delta raises ConcurrentAppendException under
+    WriteSerializable; see ``delete_where`` for the full note.
 
     Source rows must be unique per key (Delta's MERGE contract —
     multiple source matches for one target row raise).  Schema
     evolution is the add-only contract shared with ``append_files``.
-    Returns a ledger: files_total, files_rewritten, files_added,
-    rows_source, rows_updated, rows_inserted, rows_before, rows_after,
-    partitioned, version, mode, skipped (merge-on-read adds dv_files;
-    its rows_updated/inserted are None unless the CDF scan computed
-    them).
+    ``op`` overrides the history label (``update_where``'s
+    merge-on-read path records its own).  Returns a ledger:
+    files_total, files_rewritten, files_added, rows_source,
+    rows_updated, rows_inserted, rows_before, rows_after, partitioned,
+    version, mode, skipped (merge-on-read adds dv_files; its
+    rows_updated/inserted are None unless the CDF scan computed them).
     """
     import uuid
 
@@ -5111,38 +5015,23 @@ def _merge_into_unlocked(
     # the whole transaction: snapshot pin, txn idempotence, schema,
     # partition columns, active deletion vectors, and the cdf flag all
     # ride the same JSON
-    snap_v, head = _check_protocol_head(spark, mdir, f"merge_into {path}")
-    _recover_txn(spark, mdir)
-    _sweep_removed(spark, mdir)
+    snap_v, head = _open_txn(spark, mdir, f"merge_into {path}")
+    if _txn_replayed(head, txn):
+        return {
+            "rows_source": 0,
+            "files_rewritten": 0,
+            "files_added": 0,
+            "version": snap_v,
+            "skipped": True,
+        }
 
-    if txn is not None:
-        seen = head.get("txns", {}).get(str(txn[0]))
-        if seen is not None and int(txn[1]) <= int(seen):
-            return {
-                "rows_source": 0,
-                "files_rewritten": 0,
-                "files_added": 0,
-                "version": snap_v,
-                "skipped": True,
-            }
-
-    manifest = current_manifest(spark, mdir)
-    if manifest is None:
-        raise ValueError(
-            f"no stats manifest at {mdir} — create the table with "
-            "append_files / update_stats_index first"
-        )
+    manifest = _require_manifest(spark, mdir)
     if cols is None:
         cols = head.get("stats_cols") or [
             c[:-4] for c in manifest.columns if c.endswith("_min")
         ]
 
-    sj = head.get("schema")
-    stored = (
-        T.StructType.fromJson(sj)
-        if sj is not None
-        else spark.read.parquet(path).schema
-    )
+    stored = _head_schema(spark, path, head)
     evolved = _evolved_schema(stored, source.schema, f"merge_into {path}")
     cmap = head.get("col_mapping")
     if cmap:
@@ -5203,12 +5092,7 @@ def _merge_into_unlocked(
             list(pby) if pby is not None else _detect_pcols(spark, path, mdir)
         )
         dvs = list(head.get("dvs", []))
-        if dvs and list(dvs[0]["keys"]) != keys:
-            raise ValueError(
-                f"table has active deletion vectors keyed on "
-                f"{list(dvs[0]['keys'])} but this merge uses {keys} — "
-                "materialize_deletes before merging on a different key"
-            )
+        _guard_dv_keys(dvs, keys, "merge")
         cdf_on = bool(head.get("cdf", False))
         expected = (snap_v if snap_v is not None else -1) + 1
         mor = strategy == "merge-on-read"
@@ -5311,18 +5195,11 @@ def _merge_into_unlocked(
         elif mor:
             out = out.repartition(max(1, -(-n_src // 1_000_000)))
         else:
-            cand_bytes = 0
-            for f in cand:
-                try:
-                    cand_bytes += fs.getFileStatus(hp(f)).getLen()
-                except Exception:  # pragma: no cover - racing sweep
-                    pass
-            n_out = max(1, -(-cand_bytes // int(target_bytes)))
-            out = out.repartition(int(n_out))
+            n_out, _bytes = _target_files(fs, hp, cand, target_bytes)
+            out = out.repartition(n_out)
 
         from pyspark.sql import Observation
 
-        tmp = path.rstrip("/") + f"._merge_{uuid.uuid4().hex[:8]}"
         obs = Observation()
         # CHECK constraints ride the write metrics: in copy-on-write
         # the full rewritten content is checked (survivors re-verify
@@ -5331,24 +5208,11 @@ def _merge_into_unlocked(
         final = out.select(*[f.name for f in evolved.fields]).observe(
             obs, F.count(F.lit(1)).alias("n"), *_constraint_metrics(cons)
         )
-        writer = _to_phys(final, evolved).write.mode("overwrite")
-        if pcols:
-            writer = writer.partitionBy(*pcols)
-        writer.parquet(tmp)
+        tmp = _write_temp(final, evolved, path, "merge", pcols)
         # row counts ride the write itself (CollectMetrics) — no
-        # read-back scan of the temp output, no candidate pre-count;
-        # the AQE zero-row fallback verifies against the temp footers
-        _verify = lambda: _dir_footer_rows(spark, tmp)  # noqa: E731
-        vals = _obs_result(obs, verify_rows=_verify)
+        # read-back scan of the temp output, no candidate pre-count
+        vals = _checked_write(spark, obs, tmp, cons, f"merge_into {path}")
         rows_after = int(vals["n"] or 0)
-        if cons:
-            try:
-                _raise_constraint_violations(
-                    vals, cons, f"merge_into {path}"
-                )
-            except ConstraintViolation:
-                fs.delete(hp(tmp), True)
-                raise
         if obs_in is not None:
             # INPUT-side observation: carries only the candidate row
             # count (no constraint metrics ride it), and a lost metrics
@@ -5399,133 +5263,39 @@ def _merge_into_unlocked(
                 else []
             )
 
-        planned = [
-            (tmp + "/" + rel, path.rstrip("/") + "/" + rel)
-            for rel, _ln in _leaf_files(spark, tmp)
-        ]
-        itok = _write_txn_intent(
-            spark,
-            mdir,
-            {
-                "expected_version": expected,
-                "added": [dst for _src_f, dst in planned]
-                + dv_files
-                + list(changes_files or []),
-                "removed": removed,
+        landed = _land_commit(
+            spark, path, mdir, expected,
+            tmp=tmp, sidecars=dv_files, changes=changes_files,
+            removed=removed, schema=evolved, pcols=pcols, cols=cols,
+            stamp_schema=True,
+            # a merge-on-read loser (tombstone + fresh files, zero
+            # removals) re-commits over pure-append winners instead of
+            # re-running its scan and write; copy-on-write merges
+            # removed candidate files, so only the full retry is sound
+            txn=txn,
+            rebase={
+                "cdf": cdf_on,
+                "constraints": dict(head.get("constraints") or {}),
+                "cmap": cmap,
+                "keys": keys,
+            }
+            if mor
+            else None,
+            keep_versions=keep_versions, col_mapping=cmap,
+            dvs_add=_dv_entries(dv_files, expected, keys),
+            op=op or f"merge ({mode}, {strategy})",
+            metrics={
+                "rows_source": int(n_src),
+                "rows_written": int(rows_after),
+                "files_removed": len(removed),
             },
         )
-        added = _move_files_in(fs, hp, planned)
-        fs.delete(hp(tmp), True)
-
-        # O(batch) commit: only the new files' stats rows are written;
-        # rewritten candidates ride the marker's removed list —
-        # driver-side footer reads for batch-sized adds (zero jobs)
-        delta_df = None
-        delta_rows = delta_schema = None
-        if len(added) <= _LOCAL_STATS_MAX:
-            delta_rows, delta_schema = _local_stats_rows(
-                added, list(cols), evolved, pcols
-            )
-        else:
-            delta_df = parquet_stats_index(
-                spark, path, list(cols), paths=added, schema=evolved
-            )
-        # dv entries keep the ORIGINAL version stamp even across a
-        # rebase re-commit — suppression applies exactly to the files
-        # the merge actually read (see _rebase_tombstone)
-        dv_entries = [
-            {
-                "file": f,
-                "version": expected,
-                "keys": list(keys),
-                "rows": _footer_num_rows(f),
+        if landed is None:
+            return {
+                **ledger,
+                "version": manifest_version(spark, mdir),
+                "skipped": True,
             }
-            for f in dv_files
-        ]
-        commit_v = expected
-        rebased = 0
-        while True:
-            try:
-                version = _commit_manifest(
-                    spark, mdir, delta_df, removed=removed,
-                    expected_version=commit_v, txn=txn,
-                    keep_versions=keep_versions,
-                    table_schema=evolved.jsonValue(),
-                    partition_by=pcols,
-                    col_mapping=cmap,
-                    added_files=added,
-                    dvs_add=dv_entries,
-                    changes=changes_files,
-                    added_rows=delta_rows,
-                    stats_schema=delta_schema,
-                    op=op or f"merge ({mode}, {strategy})",
-                    intent_token=itok,
-                    metrics={
-                        "rows_source": int(n_src),
-                        "rows_written": int(rows_after),
-                        "files_added": len(added),
-                        "files_removed": len(removed),
-                    },
-                )
-                break
-            except SnapshotConflict:
-                # a merge-on-read loser (tombstone + fresh files, zero
-                # removals) re-commits over pure-append winners instead
-                # of re-running its scan and write; copy-on-write
-                # merges removed candidate files, so only the full
-                # retry is sound for them
-                rb = (
-                    _rebase_tombstone(
-                        spark, mdir, txn, cdf_on, evolved,
-                        dict(head.get("constraints") or {}), pcols,
-                        added + dv_files + list(changes_files or []),
-                        cmap, snap_v if snap_v is not None else -1,
-                        dv_keys=list(keys), our_dv_files=dv_files,
-                    )
-                    if mor and rebased < 20
-                    else None
-                )
-                if rb is None or rb == "skip":
-                    _rollback_conflict(
-                        spark, mdir,
-                        added + dv_files + list(changes_files or []),
-                        intent_token=itok,
-                    )
-                    if rb == "skip":
-                        return {
-                            **ledger,
-                            "version": manifest_version(spark, mdir),
-                            "skipped": True,
-                        }
-                    raise
-                commit_v, evolved = rb
-                rebased += 1
-                if changes_files:
-                    old_changes = list(changes_files)
-                    changes_files = _write_changes(
-                        spark,
-                        spark.read.parquet(*old_changes).withColumn(
-                            "_commit_version",
-                            F.lit(commit_v).cast("long"),
-                        ),
-                        path,
-                        commit_v,
-                    )
-                    for d in {os.path.dirname(f) for f in old_changes}:
-                        fs.delete(hp(d), True)
-                itok = _write_txn_intent(
-                    spark,
-                    mdir,
-                    {
-                        "expected_version": commit_v,
-                        "added": added
-                        + dv_files
-                        + list(changes_files or []),
-                        "removed": removed,
-                    },
-                )
-        _post_commit_sweep(spark, mdir)
-        _clear_txn_intent(spark, mdir, itok)
 
         if mor:
             rows_updated = rows_inserted = None
@@ -5537,9 +5307,9 @@ def _merge_into_unlocked(
             rows_updated = 0
         ledger.update(
             {
-                "rebased": rebased,
+                "rebased": landed["rebased"],
                 "files_rewritten": len(removed),
-                "files_added": len(added),
+                "files_added": len(landed["added"]),
                 "rows_updated": rows_updated,
                 "rows_inserted": rows_inserted,
                 "rows_before": (
@@ -5547,7 +5317,7 @@ def _merge_into_unlocked(
                 ),
                 "rows_after": int(rows_after),
                 "partitioned": bool(pcols),
-                "version": int(version),
+                "version": landed["version"],
             }
         )
         if mor:
@@ -5708,21 +5478,10 @@ def cluster_table(
     plus the clustering spec."""
     keys = list(keys)
     mdir = _manifest_dir(path, manifest_path)
-    manifest = current_manifest(spark, mdir)
-    if manifest is None:
-        raise ValueError(
-            f"no stats manifest at {mdir} — create the table with "
-            "append_files / update_stats_index first"
-        )
+    manifest = _require_manifest(spark, mdir)
     jvm, hp, fs = _fs_for(spark, path)
     cand = prune_files(manifest, {})  # the full committed file list
-    bytes_in = 0
-    for f in cand:
-        try:
-            bytes_in += fs.getFileStatus(hp(f)).getLen()
-        except Exception:  # pragma: no cover - racing sweep
-            pass
-    n_out = max(1, -(-bytes_in // int(target_bytes)))
+    n_out, bytes_in = _target_files(fs, hp, cand, target_bytes)
 
     if zorder:
         bits = max(1, (int(n_buckets) - 1).bit_length())
@@ -5791,24 +5550,8 @@ def cluster_table(
     return ledger
 
 
+@_locked
 def materialize_deletes(
-    spark: SparkSession,
-    path: str,
-    manifest_path: str | None = None,
-    cols: Sequence[str] | None = None,
-    keep_versions: int | None = None,
-    target_bytes: int = 128 * 1024 * 1024,
-) -> dict:
-    """Per-table-serialized entry to ``_materialize_deletes_unlocked``
-    (see ``_log_lock`` for the writer-concurrency contract)."""
-    with _log_lock(_manifest_dir(path, manifest_path)):
-        return _materialize_deletes_unlocked(
-            spark, path, manifest_path=manifest_path, cols=cols,
-            keep_versions=keep_versions, target_bytes=target_bytes,
-        )
-
-
-def _materialize_deletes_unlocked(
     spark: SparkSession,
     path: str,
     manifest_path: str | None = None,
@@ -5831,15 +5574,9 @@ def _materialize_deletes_unlocked(
     empty change set, like compaction.  Returns a ledger:
     files_rewritten, files_added, rows_suppressed, dv_files_removed,
     version."""
-    import uuid
-
     mdir = _manifest_dir(path, manifest_path)
     jvm, hp, fs = _fs_for(spark, path)
-    _check_protocol_head(spark, mdir, f"materialize_deletes {path}")
-    _recover_txn(spark, mdir)
-    _sweep_removed(spark, mdir)
-
-    snap_v = manifest_version(spark, mdir)
+    snap_v, head = _open_txn(spark, mdir, f"materialize_deletes {path}")
     dvs = _active_dvs(spark, mdir, version=snap_v)
     ledger = {
         "files_rewritten": 0,
@@ -5881,14 +5618,14 @@ def _materialize_deletes_unlocked(
         manifest.filter(av < F.lit(max_dv_v)), ranges
     )
     dv_files = [d["file"] for d in dvs]
+    cdc = [] if head.get("cdf", False) else None
 
     if not cand:
         # tombstones that never matched a stored row: clear the list
         # with a metadata-only commit
         version = _commit_manifest(
             spark, mdir, None, removed=[], expected_version=expected,
-            keep_versions=keep_versions, dvs_clear=True,
-            changes=[] if _table_cdf(spark, mdir) else None,
+            keep_versions=keep_versions, dvs_clear=True, changes=cdc,
             op="materialize-deletes",
         )
         _post_commit_sweep(spark, mdir)
@@ -5898,9 +5635,7 @@ def _materialize_deletes_unlocked(
         return ledger
 
     pcols = _detect_pcols(spark, path, mdir)
-    schema = committed_schema(spark, mdir)
-    if schema is None:
-        schema = spark.read.parquet(path).schema
+    schema = _head_schema(spark, path, head)
     from pyspark.sql import Observation
 
     raw = _read_files(spark, cand, schema, base_path=path)
@@ -5913,85 +5648,39 @@ def _materialize_deletes_unlocked(
     if pcols:
         out = out.repartition(*pcols)
     else:
-        cand_bytes = 0
-        for f in cand:
-            try:
-                cand_bytes += fs.getFileStatus(hp(f)).getLen()
-            except Exception:  # pragma: no cover - racing sweep
-                pass
-        out = out.repartition(
-            max(1, -(-cand_bytes // int(target_bytes)))
-        )
+        out = out.repartition(_target_files(fs, hp, cand, target_bytes)[0])
 
-    tmp = path.rstrip("/") + f"._rewrite_{uuid.uuid4().hex[:8]}"
     obs = Observation()
     final = out.observe(obs, F.count(F.lit(1)).alias("n"))
-    writer = _to_phys(final, schema).write.mode("overwrite")
-    if pcols:
-        writer = writer.partitionBy(*pcols)
-    writer.parquet(tmp)
+    tmp = _write_temp(final, schema, path, "rewrite", pcols)
     _verify = lambda: _dir_footer_rows(spark, tmp)  # noqa: E731
     rows_before = int(_obs_result(obs_in, verify_rows=_verify)["n"] or 0)
     rows_after = int(_obs_result(obs, verify_rows=_verify)["n"] or 0)
 
-    planned = [
-        (tmp + "/" + rel, path.rstrip("/") + "/" + rel)
-        for rel, _ln in _leaf_files(spark, tmp)
-    ]
-    itok = _write_txn_intent(
-        spark,
-        mdir,
-        {
-            "expected_version": expected,
-            "added": [dst for _src, dst in planned],
-            "removed": list(cand),
+    landed = _land_commit(
+        spark, path, mdir, expected,
+        tmp=tmp, changes=cdc, removed=cand,
+        schema=schema, pcols=pcols, cols=cols,
+        keep_versions=keep_versions, dvs_clear=True,
+        op="materialize-deletes",
+        metrics={
+            "files_removed": len(cand),
+            "dv_files_removed": len(dv_files),
         },
     )
-    added = _move_files_in(fs, hp, planned)
-    fs.delete(hp(tmp), True)
-
-    delta_df = None
-    delta_rows = delta_schema = None
-    if len(added) <= _LOCAL_STATS_MAX:
-        delta_rows, delta_schema = _local_stats_rows(
-            added, list(cols), schema, pcols
-        )
-    else:
-        delta_df = parquet_stats_index(
-            spark, path, list(cols), paths=added, schema=schema
-        )
-    try:
-        version = _commit_manifest(
-            spark, mdir, delta_df, removed=cand, expected_version=expected,
-            keep_versions=keep_versions, partition_by=pcols,
-            added_files=added, dvs_clear=True,
-            changes=[] if _table_cdf(spark, mdir) else None,
-            added_rows=delta_rows, stats_schema=delta_schema,
-            op="materialize-deletes",
-            intent_token=itok,
-            metrics={
-                "files_added": len(added),
-                "files_removed": len(cand),
-                "dv_files_removed": len(dv_files),
-            },
-        )
-    except SnapshotConflict:
-        _rollback_conflict(spark, mdir, added, intent_token=itok)
-        raise
-    _post_commit_sweep(spark, mdir)
-    _clear_txn_intent(spark, mdir, itok)
     ledger.update(
         {
             "files_rewritten": len(cand),
-            "files_added": len(added),
+            "files_added": len(landed["added"]),
             "rows_suppressed": int(rows_before - rows_after),
             "dv_files_removed": len(dv_files),
-            "version": int(version),
+            "version": landed["version"],
         }
     )
     return ledger
 
 
+@_locked
 def restore_table(
     spark: SparkSession,
     path: str,
@@ -6030,67 +5719,63 @@ def restore_table(
         version = version_at_timestamp(
             spark, path, as_of_timestamp, manifest_path
         )
-    with _log_lock(mdir):
-        jvm, hp, fs = _fs_for(spark, path)
-        _check_protocol_head(spark, mdir, f"restore_table {path}")
-        _recover_txn(spark, mdir)
-        _sweep_removed(spark, mdir)
-        versions = _committed_versions(spark, mdir)
-        if version not in versions:
-            raise ValueError(
-                f"version {version} is not committed/retained at {mdir}"
-            )
-        head = versions[-1]
-        snap_v = head
-        target_marker = _commit_info(spark, mdir, version)
-        target = _reconstruct_manifest(spark, mdir, version)
-        target_files = {r["file"] for r in target.select("file").collect()}
-        head_files = {
-            r["file"]
-            for r in _reconstruct_manifest(spark, mdir, head)
-            .select("file")
-            .collect()
-        }
-        missing = [
-            f
-            for f in sorted(target_files - head_files)
-            if not fs.exists(hp(f))
-        ] + [
-            d["file"]
-            for d in target_marker.get("dvs", [])
-            if not fs.exists(hp(d["file"]))
-        ]
-        if missing:
-            raise ValueError(
-                f"cannot restore {path} to v{version}: "
-                f"{len(missing)} of its data/tombstone files were swept "
-                "by a later rewrite (restore is valid back across "
-                "append/merge-on-read spans; rewrites sweep at commit)"
-            )
-        removed = sorted(head_files - target_files)
-        readded = sorted(target_files - head_files)
-        version_new = _commit_manifest(
-            spark,
-            mdir,
-            None,
-            removed=removed,
-            expected_version=head + 1,
-            keep_versions=keep_versions,
-            table_schema=target_marker.get("schema"),
-            partition_by=target_marker.get("partition_by"),
-            added_files=readded,
-            force_checkpoint=True,
-            restore_manifest=target,
-            dvs_replace=list(target_marker.get("dvs", [])),
-            op=f"restore (to v{version})",
+    jvm, hp, fs = _fs_for(spark, path)
+    _open_txn(spark, mdir, f"restore_table {path}")
+    versions = _committed_versions(spark, mdir)
+    if version not in versions:
+        raise ValueError(
+            f"version {version} is not committed/retained at {mdir}"
         )
-        _post_commit_sweep(spark, mdir)
-        return {
-            "version": int(version_new),
-            "restored_to": int(version),
-            "files_removed": len(removed),
-            "files_readded": len(readded),
-        }
+    head = versions[-1]
+    target_marker = _commit_info(spark, mdir, version)
+    target = _reconstruct_manifest(spark, mdir, version)
+    target_files = {r["file"] for r in target.select("file").collect()}
+    head_files = {
+        r["file"]
+        for r in _reconstruct_manifest(spark, mdir, head)
+        .select("file")
+        .collect()
+    }
+    missing = [
+        f
+        for f in sorted(target_files - head_files)
+        if not fs.exists(hp(f))
+    ] + [
+        d["file"]
+        for d in target_marker.get("dvs", [])
+        if not fs.exists(hp(d["file"]))
+    ]
+    if missing:
+        raise ValueError(
+            f"cannot restore {path} to v{version}: "
+            f"{len(missing)} of its data/tombstone files were swept "
+            "by a later rewrite (restore is valid back across "
+            "append/merge-on-read spans; rewrites sweep at commit)"
+        )
+    removed = sorted(head_files - target_files)
+    readded = sorted(target_files - head_files)
+    version_new = _commit_manifest(
+        spark,
+        mdir,
+        None,
+        removed=removed,
+        expected_version=head + 1,
+        keep_versions=keep_versions,
+        table_schema=target_marker.get("schema"),
+        partition_by=target_marker.get("partition_by"),
+        added_files=readded,
+        force_checkpoint=True,
+        restore_manifest=target,
+        dvs_replace=list(target_marker.get("dvs", [])),
+        op=f"restore (to v{version})",
+    )
+    _post_commit_sweep(spark, mdir)
+    return {
+        "version": int(version_new),
+        "restored_to": int(version),
+        "files_removed": len(removed),
+        "files_readded": len(readded),
+    }
 
 
 def table_constraints(
@@ -6107,6 +5792,7 @@ def table_constraints(
     return dict(_commit_info(spark, mdir, v).get("constraints") or {})
 
 
+@_locked
 def add_table_constraint(
     spark: SparkSession,
     path: str,
@@ -6127,46 +5813,38 @@ def add_table_constraint(
     explicit ``col IS NOT NULL``.  Returns a ledger: version,
     constraints."""
     mdir = _manifest_dir(path, manifest_path)
-    with _log_lock(mdir):
-        _check_protocol_head(spark, mdir, f"add_table_constraint {path}")
-        _recover_txn(spark, mdir)
-        _sweep_removed(spark, mdir)
-        snap_v = manifest_version(spark, mdir)
-        if snap_v is None:
-            raise ValueError(
-                f"no committed snapshot at {mdir} — create the table "
-                "with append_files first"
-            )
-        cons = dict(
-            _commit_info(spark, mdir, snap_v).get("constraints") or {}
+    snap_v, head = _open_txn(
+        spark, mdir, f"add_table_constraint {path}", require=True
+    )
+    cons = dict(head.get("constraints") or {})
+    if name in cons and cons[name] != expr:
+        raise ValueError(
+            f"constraint {name!r} already exists with a different "
+            f"expression ({cons[name]!r}) — drop it first"
         )
-        if name in cons and cons[name] != expr:
-            raise ValueError(
-                f"constraint {name!r} already exists with a different "
-                f"expression ({cons[name]!r}) — drop it first"
-            )
-        bad = (
-            read_table(spark, path, manifest_path=manifest_path)
-            .filter(~F.coalesce(F.expr(expr), F.lit(True)))
-            .limit(1)
-            .count()
+    bad = (
+        read_table(spark, path, manifest_path=manifest_path)
+        .filter(~F.coalesce(F.expr(expr), F.lit(True)))
+        .limit(1)
+        .count()
+    )
+    if bad:
+        raise ConstraintViolation(
+            f"cannot add CHECK constraint {name!r} ({expr}) to "
+            f"{path}: existing rows violate it"
         )
-        if bad:
-            raise ConstraintViolation(
-                f"cannot add CHECK constraint {name!r} ({expr}) to "
-                f"{path}: existing rows violate it"
-            )
-        cons[name] = expr
-        version = _commit_manifest(
-            spark, mdir, None, removed=[],
-            expected_version=snap_v + 1,
-            keep_versions=keep_versions,
-            constraints=cons,
-            op=f"add-constraint ({name})",
-        )
-        return {"version": int(version), "constraints": cons}
+    cons[name] = expr
+    version = _commit_manifest(
+        spark, mdir, None, removed=[],
+        expected_version=snap_v + 1,
+        keep_versions=keep_versions,
+        constraints=cons,
+        op=f"add-constraint ({name})",
+    )
+    return {"version": int(version), "constraints": cons}
 
 
+@_locked
 def drop_table_constraint(
     spark: SparkSession,
     path: str,
@@ -6178,28 +5856,22 @@ def drop_table_constraint(
     carried constraint map as a metadata-only commit (missing name is
     a no-op commit-free return, mirroring IF EXISTS)."""
     mdir = _manifest_dir(path, manifest_path)
-    with _log_lock(mdir):
-        _check_protocol_head(spark, mdir, f"drop_table_constraint {path}")
-        _recover_txn(spark, mdir)
-        _sweep_removed(spark, mdir)
-        snap_v = manifest_version(spark, mdir)
-        if snap_v is None:
-            raise ValueError(f"no committed snapshot at {mdir}")
-        cons = dict(
-            _commit_info(spark, mdir, snap_v).get("constraints") or {}
-        )
-        if name not in cons:
-            return {"version": int(snap_v), "constraints": cons}
-        del cons[name]
-        version = _commit_manifest(
-            spark, mdir, None, removed=[],
-            expected_version=snap_v + 1,
-            keep_versions=keep_versions,
-            # an explicit {} (vs None = carry) drops the last one
-            constraints=cons,
-            op=f"drop-constraint ({name})",
-        )
-        return {"version": int(version), "constraints": cons}
+    snap_v, head = _open_txn(
+        spark, mdir, f"drop_table_constraint {path}", require=True
+    )
+    cons = dict(head.get("constraints") or {})
+    if name not in cons:
+        return {"version": int(snap_v), "constraints": cons}
+    del cons[name]
+    version = _commit_manifest(
+        spark, mdir, None, removed=[],
+        expected_version=snap_v + 1,
+        keep_versions=keep_versions,
+        # an explicit {} (vs None = carry) drops the last one
+        constraints=cons,
+        op=f"drop-constraint ({name})",
+    )
+    return {"version": int(version), "constraints": cons}
 
 
 def _constraint_references(
@@ -6271,6 +5943,7 @@ def _guard_mapped_ddl(
             )
 
 
+@_locked
 def rename_column(
     spark: SparkSession,
     path: str,
@@ -6296,70 +5969,63 @@ def rename_column(
     referenced column refuses with the unblocking op
     (``_guard_mapped_ddl``).  Returns {version, renamed}."""
     mdir = _manifest_dir(path, manifest_path)
-    with _log_lock(mdir):
-        _check_protocol_head(spark, mdir, f"column DDL {path}")
-        _recover_txn(spark, mdir)
-        _sweep_removed(spark, mdir)
-        snap_v = manifest_version(spark, mdir)
-        if snap_v is None:
-            raise ValueError(
-                f"no committed snapshot at {mdir} — create the table "
-                "with append_files first"
-            )
-        head = _commit_info(spark, mdir, snap_v)
-        sj = head.get("schema")
-        if sj is None:
-            raise ValueError(
-                "rename_column needs a schema-stamped table — commit "
-                "once through append_files/merge_into first"
-            )
-        schema = T.StructType.fromJson(sj)
-        names = {f.name for f in schema.fields}
-        if old not in names:
-            raise ValueError(f"no column {old!r} in {path}")
-        if new in names:
-            raise ValueError(f"column {new!r} already exists in {path}")
-        _guard_mapped_ddl(spark, head, schema, old, "rename")
-        mapped, cmap = _ensure_mapping(
-            schema, head.get("col_mapping") or {}
+    snap_v, head = _open_txn(
+        spark, mdir, f"column DDL {path}", require=True
+    )
+    sj = head.get("schema")
+    if sj is None:
+        raise ValueError(
+            "rename_column needs a schema-stamped table — commit "
+            "once through append_files/merge_into first"
         )
-        renamed = T.StructType(
-            [
-                T.StructField(
-                    new if f.name == old else f.name,
-                    f.dataType,
-                    f.nullable,
-                    f.metadata,
-                )
-                for f in mapped.fields
-            ]
-        )
-        stats_cols = list(head.get("stats_cols") or [])
-        restore = None
-        stats_override = None
-        if old in stats_cols:
-            # the manifest's stats columns are LOGICAL — rewrite the
-            # (metadata-sized) manifest once so pruning keeps working
-            # under the new name
-            restore = (
-                current_manifest(spark, mdir)
-                .withColumnRenamed(f"{old}_min", f"{new}_min")
-                .withColumnRenamed(f"{old}_max", f"{new}_max")
+    schema = T.StructType.fromJson(sj)
+    names = {f.name for f in schema.fields}
+    if old not in names:
+        raise ValueError(f"no column {old!r} in {path}")
+    if new in names:
+        raise ValueError(f"column {new!r} already exists in {path}")
+    _guard_mapped_ddl(spark, head, schema, old, "rename")
+    mapped, cmap = _ensure_mapping(
+        schema, head.get("col_mapping") or {}
+    )
+    renamed = T.StructType(
+        [
+            T.StructField(
+                new if f.name == old else f.name,
+                f.dataType,
+                f.nullable,
+                f.metadata,
             )
-            stats_override = [new if c == old else c for c in stats_cols]
-        version = _commit_manifest(
-            spark, mdir, None, removed=[],
-            expected_version=snap_v + 1,
-            keep_versions=keep_versions,
-            table_schema=renamed.jsonValue(),
-            col_mapping=cmap,
-            restore_manifest=restore,
-            stats_cols_override=stats_override,
-            op=f"rename column ({old} -> {new})",
+            for f in mapped.fields
+        ]
+    )
+    stats_cols = list(head.get("stats_cols") or [])
+    restore = None
+    stats_override = None
+    if old in stats_cols:
+        # the manifest's stats columns are LOGICAL — rewrite the
+        # (metadata-sized) manifest once so pruning keeps working
+        # under the new name
+        restore = (
+            current_manifest(spark, mdir)
+            .withColumnRenamed(f"{old}_min", f"{new}_min")
+            .withColumnRenamed(f"{old}_max", f"{new}_max")
         )
-        return {"version": int(version), "renamed": [old, new]}
+        stats_override = [new if c == old else c for c in stats_cols]
+    version = _commit_manifest(
+        spark, mdir, None, removed=[],
+        expected_version=snap_v + 1,
+        keep_versions=keep_versions,
+        table_schema=renamed.jsonValue(),
+        col_mapping=cmap,
+        restore_manifest=restore,
+        stats_cols_override=stats_override,
+        op=f"rename column ({old} -> {new})",
+    )
+    return {"version": int(version), "renamed": [old, new]}
 
 
+@_locked
 def drop_column(
     spark: SparkSession,
     path: str,
@@ -6377,60 +6043,52 @@ def drop_column(
     it).  Same guards as ``rename_column``.  Returns
     {version, dropped}."""
     mdir = _manifest_dir(path, manifest_path)
-    with _log_lock(mdir):
-        _check_protocol_head(spark, mdir, f"column DDL {path}")
-        _recover_txn(spark, mdir)
-        _sweep_removed(spark, mdir)
-        snap_v = manifest_version(spark, mdir)
-        if snap_v is None:
-            raise ValueError(
-                f"no committed snapshot at {mdir} — create the table "
-                "with append_files first"
-            )
-        head = _commit_info(spark, mdir, snap_v)
-        sj = head.get("schema")
-        if sj is None:
-            raise ValueError(
-                "drop_column needs a schema-stamped table — commit "
-                "once through append_files/merge_into first"
-            )
-        schema = T.StructType.fromJson(sj)
-        names = [f.name for f in schema.fields]
-        if name not in names:
-            raise ValueError(f"no column {name!r} in {path}")
-        if len(names) == 1:
-            raise ValueError("cannot drop a table's only column")
-        _guard_mapped_ddl(spark, head, schema, name, "drop")
-        mapped, cmap = _ensure_mapping(
-            schema, head.get("col_mapping") or {}
+    snap_v, head = _open_txn(
+        spark, mdir, f"column DDL {path}", require=True
+    )
+    sj = head.get("schema")
+    if sj is None:
+        raise ValueError(
+            "drop_column needs a schema-stamped table — commit "
+            "once through append_files/merge_into first"
         )
-        dropped_field = next(f for f in mapped.fields if f.name == name)
-        cmap["retired_phys"] = sorted(
-            set(cmap.get("retired_phys", []))
-            | {_field_phys(dropped_field)}
+    schema = T.StructType.fromJson(sj)
+    names = [f.name for f in schema.fields]
+    if name not in names:
+        raise ValueError(f"no column {name!r} in {path}")
+    if len(names) == 1:
+        raise ValueError("cannot drop a table's only column")
+    _guard_mapped_ddl(spark, head, schema, name, "drop")
+    mapped, cmap = _ensure_mapping(
+        schema, head.get("col_mapping") or {}
+    )
+    dropped_field = next(f for f in mapped.fields if f.name == name)
+    cmap["retired_phys"] = sorted(
+        set(cmap.get("retired_phys", []))
+        | {_field_phys(dropped_field)}
+    )
+    remaining = T.StructType(
+        [f for f in mapped.fields if f.name != name]
+    )
+    stats_cols = list(head.get("stats_cols") or [])
+    restore = None
+    stats_override = None
+    if name in stats_cols:
+        restore = current_manifest(spark, mdir).drop(
+            f"{name}_min", f"{name}_max"
         )
-        remaining = T.StructType(
-            [f for f in mapped.fields if f.name != name]
-        )
-        stats_cols = list(head.get("stats_cols") or [])
-        restore = None
-        stats_override = None
-        if name in stats_cols:
-            restore = current_manifest(spark, mdir).drop(
-                f"{name}_min", f"{name}_max"
-            )
-            stats_override = [c for c in stats_cols if c != name]
-        version = _commit_manifest(
-            spark, mdir, None, removed=[],
-            expected_version=snap_v + 1,
-            keep_versions=keep_versions,
-            table_schema=remaining.jsonValue(),
-            col_mapping=cmap,
-            restore_manifest=restore,
-            stats_cols_override=stats_override,
-            op=f"drop column ({name})",
-        )
-        return {"version": int(version), "dropped": name}
+        stats_override = [c for c in stats_cols if c != name]
+    version = _commit_manifest(
+        spark, mdir, None, removed=[],
+        expected_version=snap_v + 1,
+        keep_versions=keep_versions,
+        table_schema=remaining.jsonValue(),
+        col_mapping=cmap,
+        restore_manifest=restore,
+        stats_cols_override=stats_override,
+        op=f"drop column ({name})",
+    )
+    return {"version": int(version), "dropped": name}
 
 
 def maintain_table(
@@ -6515,6 +6173,7 @@ def maintain_table(
     return actions
 
 
+@_locked
 def upgrade_table_protocol(
     spark: SparkSession,
     path: str,
@@ -6539,40 +6198,31 @@ def upgrade_table_protocol(
             f"build supports {_SUPPORTED_READER}/{_SUPPORTED_WRITER}"
         )
     mdir = _manifest_dir(path, manifest_path)
-    with _log_lock(mdir):
-        _check_protocol_head(spark, mdir, f"upgrade_table_protocol {path}")
-        _recover_txn(spark, mdir)
-        _sweep_removed(spark, mdir)
-        snap_v = manifest_version(spark, mdir)
-        if snap_v is None:
-            raise ValueError(
-                f"no committed snapshot at {mdir} — create the table "
-                "with append_files first"
-            )
-        cur = dict(
-            _commit_info(spark, mdir, snap_v).get("protocol") or {}
-        )
-        cur_r = int(cur.get("min_reader", 1))
-        cur_w = int(cur.get("min_writer", 1))
-        if want_r <= cur_r and want_w <= cur_w:
-            return {
-                "version": int(snap_v),
-                "protocol": {"min_reader": cur_r, "min_writer": cur_w},
-            }
-        version = _commit_manifest(
-            spark, mdir, None, removed=[],
-            expected_version=snap_v + 1,
-            keep_versions=keep_versions,
-            protocol_floor=(want_r, want_w),
-            op=f"upgrade-protocol ({want_r}/{want_w})",
-        )
+    snap_v, head = _open_txn(
+        spark, mdir, f"upgrade_table_protocol {path}", require=True
+    )
+    cur = dict(head.get("protocol") or {})
+    cur_r = int(cur.get("min_reader", 1))
+    cur_w = int(cur.get("min_writer", 1))
+    if want_r <= cur_r and want_w <= cur_w:
         return {
-            "version": int(version),
-            "protocol": {
-                "min_reader": max(want_r, cur_r),
-                "min_writer": max(want_w, cur_w),
-            },
+            "version": int(snap_v),
+            "protocol": {"min_reader": cur_r, "min_writer": cur_w},
         }
+    version = _commit_manifest(
+        spark, mdir, None, removed=[],
+        expected_version=snap_v + 1,
+        keep_versions=keep_versions,
+        protocol_floor=(want_r, want_w),
+        op=f"upgrade-protocol ({want_r}/{want_w})",
+    )
+    return {
+        "version": int(version),
+        "protocol": {
+            "min_reader": max(want_r, cur_r),
+            "min_writer": max(want_w, cur_w),
+        },
+    }
 
 
 def table_history(spark: SparkSession, path: str, manifest_path: str | None = None) -> list[dict]:
@@ -6629,6 +6279,7 @@ def table_history(spark: SparkSession, path: str, manifest_path: str | None = No
     return out
 
 
+@_locked
 def vacuum_table(
     spark: SparkSession,
     path: str,
@@ -6669,91 +6320,90 @@ def vacuum_table(
         _LEASE_TTL_S if min_age_s is None else float(min_age_s)
     ) * 1000.0
     removed: list[str] = []
-    with _log_lock(mdir):
-        jvm, hp, fs = _fs_for(spark, path)
-        # a table stamped beyond this build's feature level may
-        # reference files in ways this build cannot parse — sweeping
-        # by a misread manifest could delete live data, so refuse
-        # up front like every other write/maintenance entry point
-        _check_protocol_head(spark, mdir, f"vacuum_table {path}")
-        now_ms = _time.time() * 1000.0
-        young = lambda st: (now_ms - st.getModificationTime()) < age_floor_ms
+    jvm, hp, fs = _fs_for(spark, path)
+    # a table stamped beyond this build's feature level may
+    # reference files in ways this build cannot parse — sweeping
+    # by a misread manifest could delete live data, so refuse
+    # up front like every other write/maintenance entry point
+    _check_protocol_head(spark, mdir, f"vacuum_table {path}")
+    now_ms = _time.time() * 1000.0
+    young = lambda st: (now_ms - st.getModificationTime()) < age_floor_ms
 
-        def _fresh_tree(st) -> bool:
-            # a dir's OWN mtime freezes while a cross-process write
-            # streams part files in underneath — any young descendant
-            # keeps the whole tree alive (early exit on the first)
-            if young(st):
-                return True
-            if st.isDirectory():
-                for child in fs.listStatus(st.getPath()):
-                    if _fresh_tree(child):
-                        return True
-            return False
+    def _fresh_tree(st) -> bool:
+        # a dir's OWN mtime freezes while a cross-process write
+        # streams part files in underneath — any young descendant
+        # keeps the whole tree alive (early exit on the first)
+        if young(st):
+            return True
+        if st.isDirectory():
+            for child in fs.listStatus(st.getPath()):
+                if _fresh_tree(child):
+                    return True
+        return False
 
-        # intent recovery is age-guarded too: a LIVE other-process
-        # writer sits between its _TXN intent and its commit — rolling
-        # that back would delete its just-moved-in files and let its
-        # commit reference nothing.  Recovery of a genuinely dead
-        # writer happens once the marker crosses the age floor.
-        tpath = hp(f"{mdir}/_TXN")
-        if not dry_run and (
-            not fs.exists(tpath) or not young(fs.getFileStatus(tpath))
+    # intent recovery is age-guarded too: a LIVE other-process
+    # writer sits between its _TXN intent and its commit — rolling
+    # that back would delete its just-moved-in files and let its
+    # commit reference nothing.  Recovery of a genuinely dead
+    # writer happens once the marker crosses the age floor.
+    tpath = hp(f"{mdir}/_TXN")
+    if not dry_run and (
+        not fs.exists(tpath) or not young(fs.getFileStatus(tpath))
+    ):
+        _recover_txn(spark, mdir)
+    removed += _sweep_removed(spark, mdir, dry_run=dry_run)
+    parent = hp(path).getParent()
+    base = hp(path).getName()
+    for st in fs.listStatus(parent):
+        name = st.getPath().getName()
+        if (
+            st.isDirectory()
+            and (
+                name.startswith(base + "._append_")
+                or name.startswith(base + "._rewrite_")
+                or name.startswith(base + "._delete_")
+                or name.startswith(base + "._merge_")
+            )
+            and not _fresh_tree(st)
         ):
-            _recover_txn(spark, mdir)
-        removed += _sweep_removed(spark, mdir, dry_run=dry_run)
-        parent = hp(path).getParent()
-        base = hp(path).getName()
-        for st in fs.listStatus(parent):
-            name = st.getPath().getName()
-            if (
-                st.isDirectory()
-                and (
-                    name.startswith(base + "._append_")
-                    or name.startswith(base + "._rewrite_")
-                    or name.startswith(base + "._delete_")
-                    or name.startswith(base + "._merge_")
-                )
-                and not _fresh_tree(st)
+            if not dry_run:
+                fs.delete(st.getPath(), True)
+            removed.append(st.getPath().toUri().getPath())
+    # sidecar orphans: _deletes/_changes files no retained commit
+    # (and no in-flight _TXN intent) references — a crash between
+    # the sidecar write and the _TXN intent leaves them, invisible
+    # to readers, holding disk
+    live: set[str] = set()
+    for v in _committed_versions(spark, mdir):
+        commit = _commit_info(spark, mdir, v)
+        live.update(d["file"] for d in commit.get("dvs", []))
+        live.update(commit.get("changes", []) or [])
+    tpath = hp(f"{mdir}/_TXN")
+    if fs.exists(tpath):
+        live.update(
+            _read_json_marker(spark, f"{mdir}/_TXN").get("added", [])
+        )
+    for sub in ("_deletes", "_changes"):
+        sdir = hp(path.rstrip("/") + "/" + sub)
+        if not fs.exists(sdir):
+            continue
+        for st in fs.listStatus(sdir):
+            refd = False
+            fresh = young(st)
+            for leaf in (
+                fs.listStatus(st.getPath()) if st.isDirectory() else [st]
             ):
+                fresh = fresh or young(leaf)
+                q = leaf.getPath()
+                uri = q.toString()
+                if uri.startswith("file:"):
+                    uri = q.toUri().getPath()
+                if uri in live:
+                    refd = True
+            if not refd and not fresh:
                 if not dry_run:
                     fs.delete(st.getPath(), True)
                 removed.append(st.getPath().toUri().getPath())
-        # sidecar orphans: _deletes/_changes files no retained commit
-        # (and no in-flight _TXN intent) references — a crash between
-        # the sidecar write and the _TXN intent leaves them, invisible
-        # to readers, holding disk
-        live: set[str] = set()
-        for v in _committed_versions(spark, mdir):
-            commit = _commit_info(spark, mdir, v)
-            live.update(d["file"] for d in commit.get("dvs", []))
-            live.update(commit.get("changes", []) or [])
-        tpath = hp(f"{mdir}/_TXN")
-        if fs.exists(tpath):
-            live.update(
-                _read_json_marker(spark, f"{mdir}/_TXN").get("added", [])
-            )
-        for sub in ("_deletes", "_changes"):
-            sdir = hp(path.rstrip("/") + "/" + sub)
-            if not fs.exists(sdir):
-                continue
-            for st in fs.listStatus(sdir):
-                refd = False
-                fresh = young(st)
-                for leaf in (
-                    fs.listStatus(st.getPath()) if st.isDirectory() else [st]
-                ):
-                    fresh = fresh or young(leaf)
-                    q = leaf.getPath()
-                    uri = q.toString()
-                    if uri.startswith("file:"):
-                        uri = q.toUri().getPath()
-                    if uri in live:
-                        refd = True
-                if not refd and not fresh:
-                    if not dry_run:
-                        fs.delete(st.getPath(), True)
-                    removed.append(st.getPath().toUri().getPath())
     return removed
 
 

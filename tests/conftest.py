@@ -25,15 +25,22 @@ def pytest_collection_modifyitems(config, items):
     that still runs every driver-contract oracle row, the full
     plan-shape/sweep pins, and all operator units.  Set
     ``SPARK_GRAFT_FULL_TESTS=1`` to run everything (the round's own
-    audit trail does).
+    audit trail does).  A test FILE or node id named on the command
+    line runs in full: ``pytest tests/test_lake_merge.py`` runs its
+    slow tests instead of silently selecting none; naming a directory
+    (``pytest tests/``) keeps the default tier.
     """
     if os.environ.get("SPARK_GRAFT_FULL_TESTS"):
         return
+    named = {
+        os.path.abspath(arg.split("::")[0])
+        for arg in config.args
+        if not os.path.isdir(arg.split("::")[0])
+    }
     selected, deselected = [], []
     for item in items:
-        (deselected if item.get_closest_marker("slow") else selected).append(
-            item
-        )
+        slow = item.get_closest_marker("slow") and str(item.path) not in named
+        (deselected if slow else selected).append(item)
     if deselected:
         config.hook.pytest_deselected(items=deselected)
         items[:] = selected

@@ -658,10 +658,10 @@ def test_lock_key_normalization():
     )
 
 
-def test_lake_upsert_sink_mor_strategy_matches_cow(spark, tmp_path):
-    """LakeUpsertSink(strategy='merge-on-read'): DO-UPDATE upserts land
-    as tombstones (zero candidate rewrites) and the sink's read serves
-    the identical table a copy-on-write sink produces."""
+def test_mor_update_merge_matches_cow_twin(spark, tmp_path):
+    """merge_into(mode='update', strategy='merge-on-read'): the DO-UPDATE
+    upsert lands as a tombstone (zero candidate rewrites) and the table
+    reads back identical to its copy-on-write twin."""
     from evmtrace_etl_spark.sinks import LakeUpsertSink
 
     batches = [
@@ -676,11 +676,17 @@ def test_lake_upsert_sink_mor_strategy_matches_cow(spark, tmp_path):
             F.lit(-1).cast("long").alias("v"),
         ),
     ]
+    keys = ["chain_id", "k"]
     cow = LakeUpsertSink(str(tmp_path / "cow"))
-    mor = LakeUpsertSink(str(tmp_path / "mor"), strategy="merge-on-read")
-    for sink in (cow, mor):
-        for b in batches:
-            sink.upsert(b, "t", ["chain_id", "k"], mode="update")
+    mor = LakeUpsertSink(str(tmp_path / "mor"))
+    for b in batches:
+        cow.upsert(b, "t", keys, mode="update")
+    mor.upsert(batches[0], "t", keys, mode="update")  # the seed write
+    mor_tbl = str(tmp_path / "mor" / "t")
+    merge_into(
+        spark, batches[1], mor_tbl, keys=keys, mode="update",
+        strategy="merge-on-read",
+    )
     cols = ["chain_id", "k", "v"]
     want = sorted(
         tuple(r) for r in cow.read(spark, "t").select(*cols).collect()
@@ -689,14 +695,11 @@ def test_lake_upsert_sink_mor_strategy_matches_cow(spark, tmp_path):
         tuple(r) for r in mor.read(spark, "t").select(*cols).collect()
     )
     assert got == want and len(got) == 150
-    # the MOR table's seed files kept their inodes (zero rewrites)
-    import json
-
-    markers = _markers(str(tmp_path / "mor" / "t"))
+    markers = _markers(mor_tbl)
     head = max(markers)
     assert markers[head].get("dvs"), "tombstone expected on the log"
     with pytest.raises(ValueError, match="strategy"):
-        LakeUpsertSink(str(tmp_path / "x"), strategy="bogus")
+        merge_into(spark, batches[1], mor_tbl, keys=keys, strategy="bogus")
 
 
 def test_two_processes_both_land(spark, tmp_path):

@@ -103,7 +103,7 @@ def test_collided_append_recommits_without_rewriting_files(
     tbl = _seed(spark, tmp_path)
 
     def competitor():
-        sinks._append_files_unlocked(
+        sinks.append_files.__wrapped__(
             spark, _batch(spark, 200, 250, -2).coalesce(1), tbl
         )
 
@@ -132,7 +132,7 @@ def test_rebase_restamps_cdc_sidecars(spark, tmp_path, monkeypatch):
     tbl = _seed(spark, tmp_path, enable_cdf=True)
 
     def competitor():
-        sinks._append_files_unlocked(
+        sinks.append_files.__wrapped__(
             spark, _batch(spark, 200, 210, -2).coalesce(1), tbl
         )
 
@@ -210,7 +210,7 @@ def test_winner_with_same_txn_makes_loser_a_noop(
     tbl = _seed(spark, tmp_path)
 
     def competitor():
-        sinks._append_files_unlocked(
+        sinks.append_files.__wrapped__(
             spark, _batch(spark, 200, 250, -2).coalesce(1), tbl,
             txn=("app", 7),
         )
@@ -233,7 +233,7 @@ def test_cdf_flip_by_winner_forces_full_retry(spark, tmp_path, monkeypatch):
     tbl = _seed(spark, tmp_path)
 
     def competitor():
-        sinks._append_files_unlocked(
+        sinks.append_files.__wrapped__(
             spark, _batch(spark, 200, 210, -2).coalesce(1), tbl,
             enable_cdf=True,
         )
@@ -263,7 +263,7 @@ def test_winner_recovery_rolled_us_back_forces_full_retry(
     tbl = _seed(spark, tmp_path)
 
     def competitor():
-        sinks._append_files_unlocked(
+        sinks.append_files.__wrapped__(
             spark, _batch(spark, 200, 250, -2).coalesce(1), tbl
         )
 
@@ -310,7 +310,7 @@ def test_collided_mor_delete_recommits_without_rescanning(
     def competitor():
         # the winner re-inserts five keys the victim's delete matched —
         # serial order (delete THEN append) must keep these rows
-        sinks._append_files_unlocked(
+        sinks.append_files.__wrapped__(
             spark, _batch(spark, 0, 5, -2).coalesce(1), tbl
         )
 
@@ -361,7 +361,7 @@ def test_collided_mor_update_recommits_over_pure_append(
     tbl = _seed(spark, tmp_path)
 
     def competitor():
-        sinks._append_files_unlocked(
+        sinks.append_files.__wrapped__(
             spark, _batch(spark, 500, 520, -2).coalesce(1), tbl
         )
 
@@ -403,14 +403,14 @@ def test_mor_delete_vs_rewrite_winner_full_retries(
     # file, re-homing every surviving row into a fresh file.  The
     # public delete_where takes the table lock the victim holds — run
     # the competitor through the unlocked rewrite entry instead.
-    def competitor_unlocked():
-        sinks._txn_rewrite_unlocked(
+    def competitor():
+        sinks._txn_rewrite.__wrapped__(
             spark, tbl, None, {"k": (90, 99)},
             lambda touched, hit: touched.filter(~hit),
             None, op="delete",
         )
 
-    _interleave_commit(monkeypatch, spark, tbl, competitor_unlocked)
+    _interleave_commit(monkeypatch, spark, tbl, competitor)
     with pytest.raises(SnapshotConflict):
         sinks.delete_where(
             spark, tbl, None, {"k": (0, 9)},
@@ -441,7 +441,7 @@ def test_two_racing_mor_deletes_commute_when_key_disjoint(
     tbl = _seed(spark, tmp_path)
 
     def competitor():
-        sinks._delete_mor_unlocked(
+        sinks._delete_mor.__wrapped__(
             spark, tbl, None, {"k": (50, 59)}, ["k"],
         )
 
@@ -477,7 +477,7 @@ def test_two_racing_mor_deletes_overlap_full_retries(
     tbl = _seed(spark, tmp_path)
 
     def competitor():
-        sinks._delete_mor_unlocked(
+        sinks._delete_mor.__wrapped__(
             spark, tbl, None, {"k": (5, 14)}, ["k"],
         )
 
@@ -525,7 +525,7 @@ def test_collided_mor_delete_commutes_past_checkpoint_fold(
     monkeypatch.setattr(sinks, "_CHECKPOINT_EVERY", 3)
 
     def competitor():
-        sinks._delete_mor_unlocked(
+        sinks._delete_mor.__wrapped__(
             spark, tbl, None, {"k": (50, 59)}, ["k"],
         )
 

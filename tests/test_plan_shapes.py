@@ -233,6 +233,42 @@ def test_sink_read_prunes_partitions(spark, tmp_path):
     assert "chain_id" in pf_line
 
 
+def test_lake_sink_upsert_job_counts(spark, tmp_path):
+    """The lake sink's fixed Spark cost per upsert, pinned as job and
+    stage counts (structural: they do not move with host load), so a
+    change to the sink's transaction protocol cannot add a job
+    silently.  A 2-column table partitioned by chain_id takes its
+    first write, then a mode='ignore' and a mode='update' upsert; each
+    runs in its own job group and the stage count sums the jobs'
+    stageIds (skipped stages included)."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    sink = LakeUpsertSink(str(tmp_path / "sink"))
+
+    def rows(lo: int, hi: int):
+        return spark.range(lo, hi).select(
+            (F.col("id") % 2).alias("chain_id"), F.col("id").alias("number")
+        )
+
+    def cost(group: str, df, mode: str) -> tuple[int, int]:
+        sc.setJobGroup(group, "lake sink upsert", False)
+        try:
+            sink.upsert(df, "t", ["chain_id", "number"], mode=mode)
+        finally:
+            sc.setJobGroup("", "", False)
+        jobs = tracker.getJobIdsForGroup(group)
+        stages = sum(len(tracker.getJobInfo(j).stageIds) for j in jobs)
+        return len(jobs), stages
+
+    got = {
+        "first": cost("sink_pin_first", rows(0, 100), "ignore"),
+        "ignore": cost("sink_pin_ignore", rows(50, 150), "ignore"),
+        "update": cost("sink_pin_update", rows(100, 200), "update"),
+    }
+    assert got == {"first": (3, 4), "ignore": (8, 11), "update": (8, 11)}
+    assert sink.read(spark, "t").count() == 200
+
+
 def test_bucketed_table_joins_without_exchange(spark, docs):
     """write_bucketed pays the shuffle at write time: a later self-join
     and a groupBy on the bucket key plan with ZERO Exchanges."""
