@@ -110,8 +110,8 @@ def to_checksum_udf(addresses: pd.Series) -> pd.Series:
     src/types/etl_result.rs:166-172,196-200,221,239-242,293).
 
     Hashing is batch-vectorized (numpy Keccak-f over the whole Arrow
-    batch, or a compiled Keccak when importable) — the per-address
-    pure-Python loop lives on only as the test oracle.
+    batch) — the per-address pure-Python loop lives on only as the
+    test oracle.
     """
     from .keccak_batch import checksum_batch
 

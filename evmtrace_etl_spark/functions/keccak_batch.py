@@ -1,12 +1,10 @@
 """Batch-vectorized Keccak-256 for EIP-55 checksumming.
 
-No compiled Keccak ships in this environment (pycryptodome/pysha3 are
-absent and hashlib's sha3 uses the wrong padding), so the Arrow-batch
-hot path is a numpy-vectorized Keccak-f[1600]: the state is a
-``(batch, 25)`` uint64 array and every theta/rho/pi/chi/iota step is an
-elementwise numpy op, hashing the whole batch per permutation call —
-orders of magnitude over the per-address pure-Python loop.  When a
-compiled implementation IS importable it is preferred automatically.
+hashlib's sha3 uses the SHA-3 padding, not Keccak's, so the
+Arrow-batch hot path is a numpy-vectorized Keccak-f[1600]: the state
+is a ``(25, batch)`` uint64 array and every theta/rho/pi/chi/iota step
+is an elementwise numpy op, hashing the whole batch per permutation
+call — orders of magnitude over the per-address pure-Python loop.
 
 ``functions.keccak`` (scalar, pure Python) stays as the test oracle.
 
@@ -20,15 +18,6 @@ import numpy as np
 import pandas as pd
 
 from .keccak import _RC, _ROT, to_checksum_address
-
-try:  # preferred: compiled Keccak when available
-    from Crypto.Hash import keccak as _crypto_keccak  # type: ignore
-
-    def _compiled_keccak256(data: bytes) -> bytes:
-        return _crypto_keccak.new(digest_bits=256, data=data).digest()
-
-except ImportError:  # vectorized numpy fallback (this container)
-    _compiled_keccak256 = None
 
 _RC_U64 = [np.uint64(rc) for rc in _RC]
 _RATE = 136
@@ -103,20 +92,10 @@ def checksum_batch(addresses: pd.Series) -> pd.Series:
     if not idx:
         return pd.Series(out, index=addresses.index, dtype="object")
 
-    if _compiled_keccak256 is not None:
-        digests = np.stack(
-            [
-                np.frombuffer(
-                    _compiled_keccak256(b.encode("ascii")), dtype=np.uint8
-                )
-                for b in bodies
-            ]
-        )
-    else:
-        msg = np.frombuffer(
-            "".join(bodies).encode("ascii"), dtype=np.uint8
-        ).reshape(len(bodies), 40)
-        digests = keccak256_batch(msg)
+    msg = np.frombuffer(
+        "".join(bodies).encode("ascii"), dtype=np.uint8
+    ).reshape(len(bodies), 40)
+    digests = keccak256_batch(msg)
 
     chars = np.frombuffer(
         "".join(bodies).encode("ascii"), dtype=np.uint8

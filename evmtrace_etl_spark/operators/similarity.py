@@ -311,9 +311,10 @@ def ivf_assignments(
 ) -> DataFrame:
     """Nearest-centroid cell per vector — a single narrow projection.
 
-    The codebook is inlined as plan literals (the Spark analog of
-    broadcasting an IVF index's dictionary), so assignment is a per-row
-    array-of-struct max: NO Exchange, no 16×-row window shuffle.
+    The codebook arrives as a broadcast one-row table (the Spark analog
+    of broadcasting an IVF index's dictionary), so assignment is a
+    per-row array-of-struct max: NO shuffle Exchange, no 16×-row window
+    shuffle.
     ``tests/test_plan_shapes.py`` pins that property.
     """
     with_cells = _ivf_with_cells(emb, cents, vec_col)
@@ -922,8 +923,8 @@ def ivf_trained_topk(
 
     The only driver round-trip between the stages is the trained
     codebook itself (≤ k × dim scalars — the same collect ``ivf_train``
-    already ends on), re-inlined as plan literals for the shuffle-free
-    assignment; everything else stays distributed.  Rounded 6-dp
+    already ends on), attached back as a broadcast one-row table for
+    the shuffle-free assignment; everything else stays distributed.  Rounded 6-dp
     centroid means are what both engines serve from, so the oracle
     reproduces the scores bit-for-bit.
     """
@@ -1014,8 +1015,17 @@ def _pq_dists_df(
     L2² fold, round 6, DECIMAL(20,6) cast), so ``_dists`` is
     bit-unchanged.
 
-    ``subcents[m][c]`` = centroid c of subspace m (length-d list)."""
+    ``subcents[m][c]`` = centroid c of subspace m (length-d list).
+    Every subspace must carry the same number of codes — the flat
+    array is sliced by ``i div n_codes``, so a ragged codebook raises
+    ``ValueError`` rather than mis-slicing."""
     n_codes = len(subcents[0])
+    sizes = [len(c) for c in subcents]
+    if any(n != n_codes for n in sizes):
+        raise ValueError(
+            f"ragged PQ sub-codebooks: codes per subspace {sizes} — "
+            "every subspace needs the same number of codes"
+        )
     cb = _pq_codebook_df(emb.sparkSession, subcents)
     dists = (
         f"transform(_pqcb, (cent, i) -> CAST(round(aggregate(zip_with("
@@ -1208,8 +1218,8 @@ def pq_trained_topk(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Train → serve in one query: fitted sub-codebooks from
-    ``pq_train`` re-inlined as plan literals feeding the same ADC serve
-    plan as ``pq_topk`` — the production PQ path (fit offline,
+    ``pq_train`` attached as a broadcast one-row table feeding the same
+    ADC serve plan as ``pq_topk`` — the production PQ path (fit offline,
     broadcast the codebook, encode + search shuffle-free)."""
     trained = pq_train(emb, n_subspaces, n_codes, vec_col)
     d = len(trained[0][0])  # sub-vector length, no second seed collect
@@ -1288,7 +1298,7 @@ def ivfpq_topk(
     quantizer cannot see.
 
     Scale shape: assignment and residuals are narrow projections
-    (inlined centroid CASE — no join); sub-distances fold ONCE per row
+    over the broadcast one-row codebook (no shuffle); sub-distances fold ONCE per row
     behind the ``_pq_dists_df`` Generate barrier; candidate generation
     is a cell equi-join against the broadcast probe LUTs (each corpus
     vector lives in exactly one cell, so no post-join dedup); the final

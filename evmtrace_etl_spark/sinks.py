@@ -13,6 +13,12 @@ takes the table's write lock, ``_open_txn`` runs the head (protocol
 gate → intent recovery → pending sweep, returning the pinned snapshot)
 and ``_land_commit`` the tail (``_TXN`` intent → move-in → stats rows →
 ``_commit_manifest`` → rebase or roll back → sweep → clear intent).
+The log has ONE wire format: every ``_COMMIT`` marker carries the
+``_MARKER_KEYS`` (schema, stats columns, kind, ts, ...) and every
+pending-removal entry is ``{file, rm_v}``; ``_commit_info`` refuses a
+marker in any other shape, naming it, instead of reading it under a
+guess (the stream source's offsets follow the same rule — see
+``sources.lake_changes``).
 
 - ``LakeUpsertSink`` — the UNIFIED path (r10): keyed upserts as
   ``merge_into`` snapshot transactions through the same manifest log
@@ -672,6 +678,34 @@ def _morton(bucket_cols: Sequence[F.Column], bits: int) -> F.Column:
     return z
 
 
+def _clustered(
+    df: DataFrame,
+    keys: Sequence[str],
+    n_out: int,
+    cuts: list[list[float]] | None,
+    n_buckets: int,
+) -> DataFrame:
+    """``df`` re-laid-out on ``keys`` as ``n_out`` range partitions,
+    each sorted — lexicographic when ``cuts`` is None, else the Morton
+    z-order of each key's bucket over its quantile ``cuts``
+    (``_quantile_cuts``, ``n_buckets`` buckets per key).  The one
+    layout ``cluster_parquet`` and ``cluster_table`` both write."""
+    if cuts is None:
+        return df.repartitionByRange(int(n_out), *keys).sortWithinPartitions(
+            *keys
+        )
+    bits = max(1, (int(n_buckets) - 1).bit_length())
+    z = _morton(
+        [_bucket_from_cuts(k, c) for k, c in zip(keys, cuts)], bits
+    )
+    return (
+        df.withColumn("_z", z)
+        .repartitionByRange(int(n_out), "_z")
+        .sortWithinPartitions("_z")
+        .drop("_z")
+    )
+
+
 def cluster_parquet(
     spark: SparkSession,
     src: str,
@@ -733,23 +767,10 @@ def cluster_parquet(
     bytes_in = sum(ln for _rel, ln in files)
     n_out = max(1, -(-bytes_in // int(target_bytes)))
     df = spark.read.parquet(src)
-    if zorder:
-        bits = max(1, (int(n_buckets) - 1).bit_length())
-        all_cuts = _quantile_cuts(df, keys, int(n_buckets), rel_err)
-        z = _morton(
-            [_bucket_from_cuts(k, c) for k, c in zip(keys, all_cuts)],
-            bits,
-        )
-        out = (
-            df.withColumn("_z", z)
-            .repartitionByRange(int(n_out), "_z")
-            .sortWithinPartitions("_z")
-            .drop("_z")
-        )
-    else:
-        out = df.repartitionByRange(int(n_out), *keys).sortWithinPartitions(
-            *keys
-        )
+    cuts = (
+        _quantile_cuts(df, keys, int(n_buckets), rel_err) if zorder else None
+    )
+    out = _clustered(df, keys, n_out, cuts, n_buckets)
     _with_blooms(out.write.mode("overwrite"), bloom_cols, bloom_ndv).parquet(
         dst
     )
@@ -1314,49 +1335,39 @@ def _write_json_marker(
         raise IOError(f"rename failed writing marker {dirpath}/{name}")
 
 
-def _flat_manifest_files(spark: SparkSession, manifest_path: str) -> list[str]:
-    """Parquet part files sitting directly under ``manifest_path`` — the
-    pre-snapshot flat layout, read explicitly (never via directory
-    inference, which would trip over v<N> subdirs mid-migration) and
-    migrated into v0 by the next commit."""
-    jvm, hp, fs = _fs_for(spark, manifest_path)
-    if not fs.exists(hp(manifest_path)):
-        return []
-    out = []
-    for st in fs.listStatus(hp(manifest_path)):
-        name = st.getPath().getName()
-        if st.isFile() and not name.startswith(("_", ".")):
-            uri = st.getPath().toString()
-            if uri.startswith("file:"):
-                uri = st.getPath().toUri().getPath()
-            out.append(uri)
-    return sorted(out)
+#: the keys EVERY ``_COMMIT`` marker carries — the log's one record
+#: shape (pending entries are ``{file, rm_v}`` dicts).  The rest are
+#: stamped only when they apply: partition_by, op, metrics,
+#: constraints, col_mapping, cdf, retain, floor, dvs, features,
+#: protocol, dvs_delta, changes.
+_MARKER_KEYS = frozenset(
+    {
+        "version", "kind", "base_ckpt", "added", "removed", "pending",
+        "txns", "ts", "keep", "stats_cols", "schema",
+    }
+)
 
 
 def _commit_info(spark: SparkSession, manifest_path: str, version: int) -> dict:
-    """The ``_COMMIT`` marker payload of a committed version."""
-    return _read_json_marker(spark, f"{manifest_path}/v{version}/_COMMIT")
-
-
-def _commit_wall_ts(
-    spark: SparkSession,
-    manifest_path: str,
-    version: int,
-    marker: dict | None = None,
-) -> float:
-    """A committed version's wall-clock time (epoch seconds): the
-    ``ts`` stamp its ``_COMMIT`` marker carries, falling back to the
-    marker FILE's modification time for commits made before the stamp
-    existed — the same fallback Delta uses when a log entry predates
-    in-commit timestamps."""
-    if marker is None:
-        marker = _commit_info(spark, manifest_path, version)
-    ts = marker.get("ts")
-    if ts is not None:
-        return float(ts)
-    jvm, hp, fs = _fs_for(spark, manifest_path)
-    st = fs.getFileStatus(hp(f"{manifest_path}/v{version}/_COMMIT"))
-    return st.getModificationTime() / 1000.0
+    """The ``_COMMIT`` marker payload of a committed version.  Every
+    commit writes the one shape (``_MARKER_KEYS``, dict pending
+    entries); a marker in any other shape raises, naming the marker,
+    instead of being read under a guessed default."""
+    where = f"{manifest_path}/v{version}/_COMMIT"
+    m = _read_json_marker(spark, where)
+    missing = sorted(_MARKER_KEYS - m.keys())
+    bare = [
+        e for e in m.get("pending", [])
+        if not (isinstance(e, dict) and {"file", "rm_v"} <= e.keys())
+    ]
+    if missing or bare:
+        raise ValueError(
+            f"commit marker {where} is not in the log's record shape "
+            f"(missing keys {missing}, pending entries not "
+            f"{{file, rm_v}}: {bare[:3]}) "
+            "— this build reads only the shape it writes"
+        )
+    return m
 
 
 def commit_timestamp(
@@ -1369,8 +1380,8 @@ def commit_timestamp(
     marker read — the lightweight inverse of ``version_at_timestamp``
     (``table_history`` reports the same ``ts`` but reconstructs and
     aggregates every retained manifest)."""
-    return _commit_wall_ts(
-        spark, _manifest_dir(path, manifest_path), version
+    return float(
+        _commit_info(spark, _manifest_dir(path, manifest_path), version)["ts"]
     )
 
 
@@ -1382,12 +1393,12 @@ def version_at_timestamp(
 ) -> int:
     """Resolve ``TIMESTAMP AS OF``: the latest RETAINED committed
     version whose commit time is <= ``ts`` (epoch seconds).  Commit
-    times are read as a running max over the retained chain, so a
-    legacy un-stamped commit (mtime fallback) can never make the
-    mapping non-monotone.  Raises ``ValueError`` when ``ts`` predates
-    the oldest retained commit — the snapshot that WAS current then is
-    no longer reconstructible, and serving a newer one would silently
-    lie.  O(retained versions) marker reads, no data or manifest scan."""
+    ``ts`` stamps are strictly increasing along the log (each commit
+    clamps above its predecessor's).  Raises ``ValueError`` when ``ts``
+    predates the oldest retained commit — the snapshot that WAS
+    current then is no longer reconstructible, and serving a newer one
+    would silently lie.  O(retained versions) marker reads, no data or
+    manifest scan."""
     mdir = _manifest_dir(path, manifest_path)
     versions = _committed_versions(spark, mdir)
     if not versions:
@@ -1409,15 +1420,10 @@ def version_at_timestamp(
         floor = int(head.get("floor", versions[0]))
         versions = [v for v in versions if v >= floor]
     best: int | None = None
-    running = 0.0
     for v in versions:
-        running = max(
-            running, _commit_wall_ts(spark, mdir, v, marker=marker(v))
-        )
-        if running <= float(ts):
-            best = v
-        else:
+        if float(marker(v)["ts"]) > float(ts):
             break
+        best = v
     if best is None:
         raise ValueError(
             f"timestamp {ts} predates the oldest retained commit "
@@ -1430,24 +1436,15 @@ def version_at_timestamp(
         # commit, so the resolved snapshot references missing files —
         # raising here beats dying mid-scan on an opaque missing-path
         # error.  Pure-append history stays resolvable, and the scan
-        # touches only the markers ABOVE the resolution point (the
-        # common recent-timestamp case reads nothing extra).  Only
-        # removals NEW at a commit ABOVE the resolution point count:
-        # a marker's pending backlog also carries forward
+        # touches only the markers ABOVE the resolution point.  Only
+        # removals stamped ABOVE the resolution point (``rm_v >
+        # best``) count: a marker's pending backlog also carries
         # predecessors' unswept removals (a crash between commit and
         # sweep), and a file removed AT OR BEFORE v{best} was never
-        # referenced by best's snapshot — refusing on the carried
-        # entries would make a perfectly serveable snapshot
-        # unreachable by timestamp.  Fresh-at-v is the backlog
-        # set-difference against the PREDECESSOR's backlog (the
-        # zero-retention wire shape stamps no usable rm_v).
-        prev_files = {e["file"] for e in _pending_entries(marker(best))}
+        # referenced by best's snapshot.
         for v in versions:
-            if v <= best:
-                continue
-            entries = _pending_entries(marker(v))
-            fresh = [e for e in entries if e["file"] not in prev_files]
-            if fresh:
+            fresh = [e for e in marker(v)["pending"] if e["rm_v"] > best]
+            if v > best and fresh:
                 raise ValueError(
                     f"timestamp {ts} resolves to v{best} at {mdir}, "
                     f"but commit v{v} later removed files that a "
@@ -1456,7 +1453,6 @@ def version_at_timestamp(
                     "retain_removed=True to keep history across "
                     "rewrites"
                 )
-            prev_files = {e["file"] for e in entries}
     return best
 
 
@@ -1476,29 +1472,27 @@ def _version_parquet_parts(
     return out
 
 
-def _manifest_schema_from(marker: dict) -> T.StructType | None:
+def _manifest_schema_from(marker: dict) -> T.StructType:
     """The manifest-row schema implied by a commit marker: ``file``,
     ``n_rows``, per-stats-column min/max typed from the committed
-    table schema, and the ``added_version`` bookkeeping column — or
-    None when the marker predates the schema/stats_cols stamps (the
-    reader then merges footers instead)."""
-    sj = marker.get("schema")
-    stats_cols = marker.get("stats_cols")
-    if sj is None or stats_cols is None:
-        return None
+    table schema, and the ``added_version`` bookkeeping column."""
     by_name = {
-        f.name: f.dataType for f in T.StructType.fromJson(sj).fields
+        f.name: f.dataType
+        for f in T.StructType.fromJson(marker["schema"]).fields
     }
+    lost = [c for c in marker["stats_cols"] if c not in by_name]
+    if lost:
+        raise ValueError(
+            f"commit marker v{marker['version']} lists stats columns "
+            f"{lost} that its schema does not carry"
+        )
     fields = [
         T.StructField("file", T.StringType()),
         T.StructField("n_rows", T.LongType()),
     ]
-    for c in stats_cols:
-        dt = by_name.get(c)
-        if dt is None:  # stats col no longer in the table schema
-            return None
-        fields.append(T.StructField(f"{c}_min", dt, True))
-        fields.append(T.StructField(f"{c}_max", dt, True))
+    for c in marker["stats_cols"]:
+        fields.append(T.StructField(f"{c}_min", by_name[c], True))
+        fields.append(T.StructField(f"{c}_max", by_name[c], True))
     fields.append(T.StructField("added_version", T.LongType(), True))
     return T.StructType(fields)
 
@@ -1511,12 +1505,10 @@ def _reconstruct_manifest(
     added-stats rows up to ``version``, minus the deltas' removed
     lists.  File paths are never reused (uuid part names), so the set
     algebra is order-free; schema evolution of the stats columns
-    unions by name with NULL fill (conservative pruning).  Legacy
-    markers without ``kind`` wrote full manifests — each is its own
-    checkpoint.  Raises when the chain is no longer retained."""
+    unions by name with NULL fill (conservative pruning).  Raises when
+    the chain is no longer retained."""
     marker = _commit_info(spark, manifest_path, version)
-    kind = marker.get("kind", "checkpoint")
-    base = int(marker.get("base_ckpt", version)) if kind == "delta" else version
+    base = int(marker["base_ckpt"])  # == version on a checkpoint
     committed = set(_committed_versions(spark, manifest_path))
     chain = list(range(base, version + 1))
     missing = [v for v in chain if v not in committed]
@@ -1531,7 +1523,7 @@ def _reconstruct_manifest(
     for v in chain:
         m = marker if v == version else _commit_info(spark, manifest_path, v)
         if v > base:
-            removed.update(m.get("removed", []))
+            removed.update(m["removed"])
         if _version_parquet_parts(spark, manifest_path, v):
             dirs.append(f"{manifest_path}/v{v}")
     if not dirs:  # an empty table's checkpoint (zero files tracked)
@@ -1540,16 +1532,10 @@ def _reconstruct_manifest(
         )
     # ONE read over the whole chain.  The manifest schema is DERIVED
     # from the marker (stats columns typed per the committed table
-    # schema) so no footer needs touching at plan time; files missing
-    # a column (pre-evolution deltas, legacy checkpoints without the
-    # bookkeeping column) NULL-fill under the explicit schema — the
-    # same semantics as a per-dir unionByName, zero jobs.  Pre-schema
-    # tables fall back to a distributed footer merge.
-    mschema = _manifest_schema_from(marker)
-    if mschema is not None:
-        out = spark.read.schema(mschema).parquet(*dirs)
-    else:
-        out = spark.read.option("mergeSchema", "true").parquet(*dirs)
+    # schema) so no footer needs touching at plan time; deltas written
+    # before a stats column evolved in NULL-fill under the explicit
+    # schema — the same semantics as a per-dir unionByName, zero jobs.
+    out = spark.read.schema(_manifest_schema_from(marker)).parquet(*dirs)
     if removed:
         rdf = spark.createDataFrame(
             [(f,) for f in sorted(removed)], "file string"
@@ -1564,11 +1550,10 @@ def current_manifest(
     version: int | None = None,
 ) -> DataFrame | None:
     """The current committed stats manifest (highest ``v<N>`` carrying a
-    ``_COMMIT`` marker, reconstructed checkpoint-plus-deltas), falling
-    back to the legacy flat layout, else None.  This is THE read path
-    for snapshot consistency: a reader that resolves its file list
-    through here sees exactly one committed version regardless of
-    concurrent deletes/maintenance.
+    ``_COMMIT`` marker, reconstructed checkpoint-plus-deltas), else
+    None.  This is THE read path for snapshot consistency: a reader
+    that resolves its file list through here sees exactly one
+    committed version regardless of concurrent deletes/maintenance.
 
     ``version`` pins an explicit committed version instead (time
     travel) — valid while that version's checkpoint chain is retained
@@ -1584,12 +1569,9 @@ def current_manifest(
             )
         return _reconstruct_manifest(spark, manifest_path, version)
     v = manifest_version(spark, manifest_path)
-    if v is not None:
-        return _reconstruct_manifest(spark, manifest_path, v)
-    flat = _flat_manifest_files(spark, manifest_path)
-    if flat:
-        return spark.read.parquet(*flat)
-    return None
+    if v is None:
+        return None
+    return _reconstruct_manifest(spark, manifest_path, v)
 
 
 class SnapshotConflict(RuntimeError):
@@ -1718,15 +1700,9 @@ def _txn_replayed(head: dict, txn: tuple[str, int] | None) -> bool:
     return seen is not None and int(txn[1]) <= int(seen)
 
 
-def _head_schema(
-    spark: SparkSession, path: str, head: dict
-) -> T.StructType:
-    """The table schema stamped on the ``head`` commit marker, else
-    (pre-schema tables) the directory footers' schema."""
-    sj = head.get("schema")
-    if sj is not None:
-        return T.StructType.fromJson(sj)
-    return spark.read.parquet(path).schema
+def _head_schema(head: dict) -> T.StructType:
+    """The table schema stamped on the ``head`` commit marker."""
+    return T.StructType.fromJson(head["schema"])
 
 
 def _target_files(
@@ -2209,9 +2185,8 @@ def _commit_manifest_unleased(
 
     Post-commit housekeeping retains the checkpoint chains of the
     newest ``keep_versions`` committed versions (in-flight readers +
-    time-travel history), prunes older ones plus failed uncommitted
-    attempts, and deletes migrated flat-layout files — all crash-safe:
-    the new version is already current."""
+    time-travel history) and prunes older ones plus failed uncommitted
+    attempts — crash-safe: the new version is already current."""
     import uuid as _uuid
 
     jvm, hp, fs = _fs_for(spark, manifest_path)
@@ -2244,7 +2219,6 @@ def _commit_manifest_unleased(
             f"v{expected_version} but the next version is v{nxt} — "
             "another writer committed first; retry from a fresh snapshot"
         )
-    flat = _flat_manifest_files(spark, manifest_path)
 
     txns: dict = {}
     schema_json: dict | None = table_schema
@@ -2266,18 +2240,16 @@ def _commit_manifest_unleased(
         _check_protocol(prev, "write", f"commit into {manifest_path}")
         prev_features = list(prev.get("features", []))
         prev_proto = dict(prev.get("protocol", {}))
-        prev_schema_json = prev.get("schema")
-        prev_ts = float(prev.get("ts", 0.0) or 0.0)
+        prev_schema_json = prev["schema"]
+        prev_ts = float(prev["ts"])
         pending_entries = [
-            e
-            for e in _pending_entries(prev)
-            if fs.exists(hp(e["file"]))
+            e for e in prev["pending"] if fs.exists(hp(e["file"]))
         ]
         txns = dict(prev.get("txns", {}))
         if schema_json is None:
-            # the table schema rides every commit once stamped — a
-            # maintenance op that doesn't evolve it carries it forward
-            schema_json = prev.get("schema")
+            # the table schema rides every commit — a maintenance op
+            # that doesn't evolve it carries it forward
+            schema_json = prev["schema"]
         if pby is None:
             # partition columns ride the commit too (Delta's
             # partitionColumns) — writers then skip the O(files)
@@ -2291,7 +2263,7 @@ def _commit_manifest_unleased(
             # None = carry the table's stamped retention window — a
             # metadata-only DDL or an unparameterized write must not
             # collapse a deep keep_versions history to the default
-            keep_versions = int(prev.get("keep", 2))
+            keep_versions = int(prev["keep"])
         if constraints is None:
             # the CHECK-constraint map rides every commit once stamped
             # (None = carry; an explicit {} drops the last one)
@@ -2301,12 +2273,8 @@ def _commit_manifest_unleased(
             # names) rides every commit once a rename/drop stamps it
             col_mapping = prev.get("col_mapping")
         dvs = list(prev.get("dvs", []))
-        stats_cols = prev.get("stats_cols")
-        base_prev = (
-            int(prev.get("base_ckpt", committed[-1]))
-            if prev.get("kind", "checkpoint") == "delta"
-            else committed[-1]
-        )
+        stats_cols = prev["stats_cols"]
+        base_prev = int(prev["base_ckpt"])
     else:
         stats_cols = None
     if keep_versions is None:  # first commit with the carry default
@@ -2328,7 +2296,6 @@ def _commit_manifest_unleased(
     checkpoint = (
         force_checkpoint
         or not committed
-        or bool(flat)
         or (nxt - (base_prev if base_prev is not None else nxt))
         >= _CHECKPOINT_EVERY
     )
@@ -2364,14 +2331,7 @@ def _commit_manifest_unleased(
         by_file.setdefault(f, {"file": f, "rm_v": nxt})
     for f in added_files:
         by_file.pop(f, None)
-    pending_struct = sorted(by_file.values(), key=lambda e: e["file"])
-    # default tables keep the legacy bare-path wire shape (swept at
-    # commit, rm_v irrelevant); retention tables persist the stamps
-    pending_all = (
-        pending_struct
-        if retain_flag
-        else [e["file"] for e in pending_struct]
-    )
+    pending_all = sorted(by_file.values(), key=lambda e: e["file"])
 
     # stamp the delta rows with the version that adds them — deletion
     # vectors compare tombstone versions against this to decide which
@@ -2407,12 +2367,8 @@ def _commit_manifest_unleased(
         out_df = restore_manifest
     elif checkpoint:
         parts: list[DataFrame] = []
-        prev_df: DataFrame | None = None
         if committed:
             prev_df = _reconstruct_manifest(spark, manifest_path, committed[-1])
-        elif flat:
-            prev_df = spark.read.parquet(*flat)
-        if prev_df is not None:
             if removed_now:
                 rdf = spark.createDataFrame(
                     [(f,) for f in removed_now], "file string"
@@ -2514,6 +2470,11 @@ def _commit_manifest_unleased(
         # a rename/drop of a stats column restates the list (the
         # transformed manifest's columns already match it)
         stats_cols = list(stats_cols_override)
+    if schema_json is None or stats_cols is None:
+        raise ValueError(
+            f"commit v{nxt} into {manifest_path} names no table schema "
+            "or stats columns — every marker carries both"
+        )
     payload = {
         "version": nxt,
         "kind": "checkpoint" if checkpoint else "delta",
@@ -2529,11 +2490,9 @@ def _commit_manifest_unleased(
         # even under clock skew between writers (Delta's adjusted
         # in-commit timestamps)
         "ts": round(max(time.time(), prev_ts + 1e-3), 6),
+        "stats_cols": list(stats_cols),
+        "schema": schema_json,
     }
-    if stats_cols is not None:
-        payload["stats_cols"] = list(stats_cols)
-    if schema_json is not None:
-        payload["schema"] = schema_json
     if pby is not None:
         payload["partition_by"] = pby
     if op is not None:
@@ -2574,8 +2533,8 @@ def _commit_manifest_unleased(
     # protocol stamp (Delta's protocol action): the FEATURES this
     # snapshot uses, and the min reader/writer levels they require —
     # monotone (never downgrades; a feature once used may live in
-    # retained history even after a drop).  Level-1 tables stamp
-    # nothing, keeping the pre-protocol wire shape byte-stable.
+    # retained history even after a drop).  Both keys are optional:
+    # level-1 tables stamp neither.
     features = set(prev_features)
     if payload.get("col_mapping"):
         features.add("column-mapping")
@@ -2617,11 +2576,8 @@ def _commit_manifest_unleased(
     if oldest_wanted == nxt:
         floor = payload["base_ckpt"]
     else:
-        m = _commit_info(spark, manifest_path, oldest_wanted)
-        floor = (
-            int(m.get("base_ckpt", oldest_wanted))
-            if m.get("kind", "checkpoint") == "delta"
-            else oldest_wanted
+        floor = int(
+            _commit_info(spark, manifest_path, oldest_wanted)["base_ckpt"]
         )
     for st in fs.listStatus(hp(manifest_path)):
         name = st.getPath().getName()
@@ -2629,24 +2585,7 @@ def _commit_manifest_unleased(
             n = int(name[1:])
             if n < floor or (n < nxt and n not in committed):
                 fs.delete(st.getPath(), True)
-    for fpath in flat:
-        fs.delete(hp(fpath), False)
     return nxt
-
-
-def _pending_entries(commit: dict) -> list[dict]:
-    """A commit's pending-removal backlog, normalized to ``{'file',
-    'rm_v'}`` dicts — ``rm_v`` is the version whose commit removed the
-    file.  Legacy bare-path entries (default zero-retention tables,
-    and markers written before retention existed) normalize to
-    ``rm_v=0``: due for deletion unconditionally."""
-    out = []
-    for e in commit.get("pending", commit.get("removed", [])):
-        if isinstance(e, str):
-            out.append({"file": e, "rm_v": 0})
-        else:
-            out.append({"file": e["file"], "rm_v": int(e.get("rm_v", 0))})
-    return out
 
 
 def _sweep_removed(
@@ -2654,21 +2593,21 @@ def _sweep_removed(
 ) -> list[str]:
     """Physically delete data files whose removal the CURRENT manifest
     version committed — the ``pending`` backlog (this commit's logical
-    removals plus any predecessor removals never swept; legacy markers
-    carried the same list as ``removed``).  On a RETENTION table
-    (``retain_removed`` stamped at creation) a file removed by commit
-    ``rm_v`` is kept while any OLDER version is still retained — those
-    snapshots' manifests reference it, so time travel and RESTORE keep
-    working across rewrites; once housekeeping advances the retained
-    floor past ``rm_v`` the next sweep reclaims it (Delta's VACUUM
-    retention, driven by ``keep_versions`` instead of wall-clock age).
+    removals plus any predecessor removals never swept).  On a
+    RETENTION table (``retain_removed`` stamped at creation) a file
+    removed by commit ``rm_v`` is kept while any OLDER version is still
+    retained — those snapshots' manifests reference it, so time travel
+    and RESTORE keep working across rewrites; once housekeeping
+    advances the retained floor past ``rm_v`` the next sweep reclaims
+    it (Delta's VACUUM retention, driven by ``keep_versions`` instead
+    of wall-clock age).
     Idempotent; returns what it deleted."""
     versions = _committed_versions(spark, manifest_path)
     if not versions:
         return []
     jvm, hp, fs = _fs_for(spark, manifest_path)
     commit = _commit_info(spark, manifest_path, versions[-1])
-    entries = _pending_entries(commit)
+    entries = commit["pending"]
     if bool(commit.get("retain", False)):
         # retained version V reads files removed at rm_v > V; a file
         # is reclaimable only when no retained version predates its
@@ -2785,7 +2724,7 @@ def _write_txn_intent(spark: SparkSession, mdir: str, payload: dict) -> str:
 
 
 def _clear_txn_intent(
-    spark: SparkSession, mdir: str, intent_token: str | None = None
+    spark: SparkSession, mdir: str, intent_token: str
 ) -> None:
     """Delete the ``_TXN`` marker at the end of a transaction — but
     only while it is still OURS: after our commit, a maintenance actor
@@ -2794,9 +2733,7 @@ def _clear_txn_intent(
     needlessly fail the foreign commit's token check.  The
     check-then-delete runs under the ``_CommitLease`` (the same mutex
     adjudication and commits hold), closing the read-ours/delete TOCTOU
-    — three driver-side metadata ops on the happy path.  ``None``
-    skips the ownership read AND the lease (legacy callers that never
-    stamped a token).
+    — three driver-side metadata ops on the happy path.
 
     NEVER raises: the clear is pure hygiene — a marker left behind is
     adjudicated by the next op's recovery (roll-FORWARD after our
@@ -2810,9 +2747,6 @@ def _clear_txn_intent(
 
     jvm, hp, fs = _fs_for(spark, mdir)
     tpath = hp(f"{mdir}/_TXN")
-    if intent_token is None:
-        fs.delete(tpath, False)
-        return
     try:
         with _CommitLease(spark, mdir):
             try:
@@ -2835,18 +2769,14 @@ def committed_schema(
     spark: SparkSession, manifest_path: str, version: int | None = None
 ) -> T.StructType | None:
     """The table schema stamped into the committed snapshot (current,
-    or ``version`` for time travel; rides every ``_COMMIT`` once a
-    schema-aware op stamps it; carried forward by maintenance
-    commits), or None for pre-schema tables — readers then fall back
-    to the directory footer schema."""
+    or ``version`` for time travel; every ``_COMMIT`` carries it), or
+    None when that version is not committed."""
     v = version if version is not None else manifest_version(
         spark, manifest_path
     )
     if v is None or v not in _committed_versions(spark, manifest_path):
         return None
-    commit = _read_json_marker(spark, f"{manifest_path}/v{v}/_COMMIT")
-    sj = commit.get("schema")
-    return T.StructType.fromJson(sj) if sj is not None else None
+    return _head_schema(_commit_info(spark, manifest_path, v))
 
 
 def committed_partitioning(
@@ -2858,7 +2788,7 @@ def committed_partitioning(
     v = manifest_version(spark, manifest_path)
     if v is None:
         return None
-    commit = _read_json_marker(spark, f"{manifest_path}/v{v}/_COMMIT")
+    commit = _commit_info(spark, manifest_path, v)
     return commit.get("partition_by")
 
 
@@ -3113,17 +3043,16 @@ def _ensure_mapping(
 
 
 def _rollback_conflict(spark: SparkSession, manifest_path: str,
-                       added: Sequence[str],
-                       intent_token: str | None = None) -> None:
+                       added: Sequence[str], intent_token: str) -> None:
     """Undo a transaction that lost the optimistic-concurrency race
     AFTER moving its files into the table: delete the moved-in files
     (no committed manifest references them) and this txn's ``_TXN``
     intent marker, so a retry from a fresh snapshot starts clean and
     incremental maintenance cannot adopt the orphans as new ingest.
-    With ``intent_token`` the marker is deleted only while it is still
-    OURS — if a cross-process adjudicator already rolled us back and a
-    foreign writer landed its own intent, deleting theirs would
-    needlessly fail their commit's token check."""
+    The marker is deleted only while it still carries our
+    ``intent_token`` — if a cross-process adjudicator already rolled
+    us back and a foreign writer landed its own intent, deleting
+    theirs would needlessly fail their commit's token check."""
     jvm, hp, fs = _fs_for(spark, manifest_path)
     for f in added:
         fs.delete(hp(f), False)
@@ -3233,8 +3162,8 @@ def _dv_suppress(
     which would miss the manifest join and mis-date every row in that
     partition as oldest; literal ``+`` is protected from
     ``url_decode``'s form-decoding first).  Rows from files the
-    manifest does not know (legacy/pre-DV) conservatively count as
-    oldest, so tombstones apply to them.
+    manifest does not know conservatively count as oldest, so
+    tombstones apply to them.
 
     Scale guard: the tombstone join is HINTED broadcast only while the
     stamped per-entry row counts prove the set is broadcast-sized
@@ -3278,12 +3207,9 @@ def _dv_suppress(
         tmax_side = F.broadcast(tmax)
     else:
         tmax_side = tmax  # too big / unknown — AQE decides from stats
-    if "added_version" in manifest.columns:
-        av = F.coalesce(F.col("added_version"), F.lit(-1)).cast("long")
-    else:  # legacy manifest rows: every file predates every tombstone
-        av = F.lit(-1).cast("long")
     fmap = manifest.select(
-        F.col("file").alias("__dv_file"), av.alias("__dv_av")
+        F.col("file").alias("__dv_file"),
+        F.col("added_version").alias("__dv_av"),
     )
     return (
         df.withColumn(
@@ -3469,10 +3395,9 @@ def _land_commit(
     sidecars: Sequence[str] = (),
     changes: Sequence[str] | None = None,
     removed: Sequence[str] = (),
-    schema: T.StructType | None = None,
+    schema: T.StructType,
     pcols: Sequence[str] | None = None,
     cols: Sequence[str] = (),
-    stamp_schema: bool = False,
     txn: tuple[str, int] | None = None,
     rebase: dict | None = None,
     sweep: bool = True,
@@ -3493,8 +3418,8 @@ def _land_commit(
        to ``_LOCAL_STATS_MAX`` files (zero Spark jobs), else the
        distributed ``parquet_stats_index``;
     5. commit at ``expected`` (``_commit_manifest``, which re-verifies
-       the intent token under the lease); ``stamp_schema`` stamps
-       ``schema``, ``commit_kw`` passes through;
+       the intent token under the lease), stamping ``schema``;
+       ``commit_kw`` passes through;
     6. on ``SnapshotConflict`` with a ``rebase`` context — the plan's
        ``cdf`` flag, checked ``constraints`` and column mapping
        (``cmap``), plus the tombstone ``keys`` when the ``sidecars``
@@ -3558,7 +3483,7 @@ def _land_commit(
                 expected_version=expected, partition_by=pcols, txn=txn,
                 added_files=added, changes=changes,
                 added_rows=delta_rows, stats_schema=delta_schema,
-                table_schema=schema.jsonValue() if stamp_schema else None,
+                table_schema=schema.jsonValue(),
                 intent_token=itok, metrics=metrics, **commit_kw,
             )
             break
@@ -3710,7 +3635,7 @@ def _txn_rewrite(
 
     # hive partition columns: stamped in the commit, else probed once
     pcols = _detect_pcols(spark, path, mdir)
-    schema = _head_schema(spark, path, head)
+    schema = _head_schema(head)
     touched = _read_files(spark, cand, schema, base_path=path)
     # active deletion vectors apply to the candidate read: the rewrite
     # must not resurrect suppressed rows, and the rewritten files get
@@ -3904,7 +3829,7 @@ def _delete_mor(
     if not cand:
         return ledger
 
-    schema = _head_schema(spark, path, head)
+    schema = _head_schema(head)
     missing = [k for k in keys if k not in {f.name for f in schema.fields}]
     if missing:
         raise ValueError(f"delete keys {missing} are not table columns")
@@ -4143,7 +4068,7 @@ def _update_mor(
     cand, files_total = _prune_files_with_total(manifest, ranges)
     if not cand:
         return {**skipped_ledger, "files_total": int(files_total), "skipped": False}
-    schema = _head_schema(spark, path, head)
+    schema = _head_schema(head)
     touched = _read_files(spark, cand, schema, base_path=path)
     matched = _dv_suppress(spark, touched, manifest, dvs).filter(hit)
     # SET expressions evaluate against the ORIGINAL row (SQL UPDATE
@@ -4296,12 +4221,12 @@ def update_stats_index(
     disk == new ingest" rule never resurrects deleted data.
 
     ``manifest_path`` None uses the in-table default
-    (``<path>/_stats_manifest``); a legacy flat manifest at the given
-    path is migrated into the versioned layout on the first commit.
-    ``cols`` defaults to the stats columns the existing manifest
-    already carries (required on the first build).
+    (``<path>/_stats_manifest``).  ``cols`` defaults to the stats
+    columns the existing manifest already carries (required on the
+    first build).
 
-    First call (no manifest yet) degrades to a full build.  Returns a
+    First call (no manifest yet) degrades to a full build, and its
+    commit stamps the adopted footers' schema.  Returns a
     ledger: files_total, files_new, files_removed, files_carried,
     version.
     """
@@ -4316,13 +4241,17 @@ def update_stats_index(
             raise ValueError(
                 "cols is required for the first manifest build"
             )
+        schema = spark.read.parquet(path).schema
         version = _commit_manifest(
             spark,
             mdir,
-            parquet_stats_index(spark, path, list(cols), paths=current),
+            parquet_stats_index(
+                spark, path, list(cols), paths=current, schema=schema
+            ),
             removed=[],
             expected_version=expected,
             keep_versions=keep_versions,
+            table_schema=schema.jsonValue(),
             partition_by=_detect_pcols(spark, path, mdir),
             added_files=current,
             op="update-stats-index",
@@ -4336,7 +4265,7 @@ def update_stats_index(
         }
 
     if cols is None:
-        cols = [c[:-4] for c in old.columns if c.endswith("_min")]
+        cols = head["stats_cols"]
     # O(files) driver set — the same bound as prune_files' planner list
     old_files = {r["file"] for r in old.select("file").collect()}
     cur_set = set(current)
@@ -4344,7 +4273,7 @@ def update_stats_index(
     # keeps on disk for time travel) is known-REMOVED, never new ingest
     # — adopting it would resurrect deleted/pre-merge rows into the
     # head and (via the re-add backlog pop) orphan it from the sweep
-    pending_disk = {e["file"] for e in _pending_entries(head)}
+    pending_disk = {e["file"] for e in head["pending"]}
     new = sorted(cur_set - old_files - pending_disk)
     gone = sorted(old_files - cur_set)
 
@@ -4353,12 +4282,9 @@ def update_stats_index(
     # vanished ones as removed; the checkpoint write folds both in)
     version = _commit_manifest(
         spark, mdir,
-        # None (not an empty frame) when nothing is new — an empty
-        # union would still stamp the bookkeeping column onto a
-        # legacy manifest that migrates unchanged
+        # None (not an empty frame) when nothing is new
         parquet_stats_index(
-            spark, path, list(cols), paths=new,
-            schema=committed_schema(spark, mdir),
+            spark, path, list(cols), paths=new, schema=_head_schema(head)
         )
         if new
         else None,
@@ -4446,29 +4372,26 @@ def read_table(
         # concurrent merge-on-read commit land between them and apply
         # NEWER tombstones against the OLDER file list (keys vanish)
         version = manifest_version(spark, mdir)
-    head: dict | None = {}
-    if version is not None:
-        # refuse snapshots whose stamped protocol exceeds this build's
-        # feature level — misresolving a mapped/widened table is worse
-        # than failing (the resolved VERSION's marker governs: time
-        # travel to a pre-feature snapshot keeps working).  An invalid
-        # version falls through to current_manifest's actionable
-        # not-committed/retained error.
-        try:
-            head = _commit_info(spark, mdir, version)
-        except Exception:
-            head = None
-        if head is not None:
-            _check_protocol(head, "read", f"read_table {path}")
-    manifest = current_manifest(spark, mdir, version=version)
-    if manifest is None:
-        return spark.read.parquet(path).filter(cond)
+        if version is None:
+            return spark.read.parquet(path).filter(cond)
+    elif version not in _committed_versions(spark, mdir):
+        raise ValueError(
+            f"manifest version {version} is not committed/retained "
+            f"at {mdir}"
+        )
+    # refuse snapshots whose stamped protocol exceeds this build's
+    # feature level — misresolving a mapped/widened table is worse
+    # than failing (the resolved VERSION's marker governs: time travel
+    # to a pre-feature snapshot keeps working)
+    head = _commit_info(spark, mdir, version)
+    _check_protocol(head, "read", f"read_table {path}")
+    manifest = _reconstruct_manifest(spark, mdir, version)
     # prune_files skips predicates on unindexed columns conservatively;
     # with no prunable predicate this is the full snapshot file list
     files = prune_files(manifest, ranges)
     # the committed snapshot's schema (old files null-fill columns a
-    # later batch evolved in); pre-schema tables fall back to footers
-    schema = _head_schema(spark, path, head or {})
+    # later batch evolved in)
+    schema = _head_schema(head)
     if not files:
         return spark.createDataFrame([], schema).filter(cond)
     out = _read_files(spark, files, schema, base_path=path)
@@ -4492,7 +4415,7 @@ def last_committed_txn(
     v = manifest_version(spark, manifest_path)
     if v is None:
         return None
-    commit = _read_json_marker(spark, f"{manifest_path}/v{v}/_COMMIT")
+    commit = _commit_info(spark, manifest_path, v)
     got = commit.get("txns", {}).get(str(app_id))
     return int(got) if got is not None else None
 
@@ -4565,15 +4488,12 @@ def _rebase_append(
         and list(head_pby) != list(our_pcols)
     ):
         return None
-    sj = head.get("schema")
-    merged = our_schema
-    if sj is not None:
-        try:
-            merged = _evolved_schema(
-                T.StructType.fromJson(sj), our_schema, "append rebase"
-            )
-        except ValueError:
-            return None
+    try:
+        merged = _evolved_schema(
+            _head_schema(head), our_schema, "append rebase"
+        )
+    except ValueError:
+        return None
     return (snap + 1, merged)
 
 
@@ -4766,11 +4686,8 @@ def append_files(
     # ONE listing + ONE head-marker read (the protocol gate's) serve
     # the whole transaction: snapshot pin, txn idempotence, stats
     # columns, schema, and the partition layout all ride the same JSON
-    # (pre-log flat manifests fall back to the reconstruction read)
     snap_v, head = _open_txn(spark, mdir, f"append_files {path}")
-    have_table = snap_v is not None or bool(
-        _flat_manifest_files(spark, mdir)
-    )
+    have_table = snap_v is not None
     if _txn_replayed(head, txn):
         return {
             "rows": 0, "files_added": 0, "version": snap_v, "skipped": True
@@ -4781,26 +4698,19 @@ def append_files(
             "cols is required for the first commit to a new table"
         )
     if cols is None:
-        cols = head.get("stats_cols")
-        if cols is None:  # legacy marker / flat manifest
-            cols = [
-                c[:-4]
-                for c in current_manifest(spark, mdir).columns
-                if c.endswith("_min")
-            ]
+        cols = head["stats_cols"]
     if partition_by is None and head.get("partition_by"):
         # appends to a stamped hive-partitioned table keep its layout
         # without the caller restating it every batch
         partition_by = list(head["partition_by"])
 
     # ADD-ONLY schema evolution (``_evolved_schema``):
-    # resolve the table schema from the committed snapshot (falling
-    # back to the directory footers for pre-schema tables), reject
+    # resolve the table schema from the committed snapshot, reject
     # type changes, append new columns, null-fill omitted ones; the
     # evolved schema is stamped into this commit so read_table serves
     # old files null-filled under it.
     if have_table:
-        stored = _head_schema(spark, path, head)
+        stored = _head_schema(head)
         evolved = _evolved_schema(
             stored, df.schema, f"append_files into {path}"
         )
@@ -4889,7 +4799,7 @@ def append_files(
     landed = _land_commit(
         spark, path, mdir, expected,
         tmp=tmp, changes=changes_files,
-        schema=evolved, pcols=pcols_commit, cols=cols, stamp_schema=True,
+        schema=evolved, pcols=pcols_commit, cols=cols,
         # two pure appends never conflict — re-commit the ALREADY-
         # MOVED-IN files at the next version instead of re-running the
         # batch write (Delta re-attempts only the commit)
@@ -5027,11 +4937,9 @@ def merge_into(
 
     manifest = _require_manifest(spark, mdir)
     if cols is None:
-        cols = head.get("stats_cols") or [
-            c[:-4] for c in manifest.columns if c.endswith("_min")
-        ]
+        cols = head["stats_cols"]
 
-    stored = _head_schema(spark, path, head)
+    stored = _head_schema(head)
     evolved = _evolved_schema(stored, source.schema, f"merge_into {path}")
     cmap = head.get("col_mapping")
     if cmap:
@@ -5267,7 +5175,6 @@ def merge_into(
             spark, path, mdir, expected,
             tmp=tmp, sidecars=dv_files, changes=changes_files,
             removed=removed, schema=evolved, pcols=pcols, cols=cols,
-            stamp_schema=True,
             # a merge-on-read loser (tombstone + fresh files, zero
             # removals) re-commits over pure-append winners instead of
             # re-running its scan and write; copy-on-write merges
@@ -5483,10 +5390,9 @@ def cluster_table(
     cand = prune_files(manifest, {})  # the full committed file list
     n_out, bytes_in = _target_files(fs, hp, cand, target_bytes)
 
-    if zorder:
-        bits = max(1, (int(n_buckets) - 1).bit_length())
-        # quantile cuts from the current snapshot (key columns only)
-        all_cuts = _quantile_cuts(
+    # z-order quantile cuts from the current snapshot (key columns only)
+    cuts = (
+        _quantile_cuts(
             read_table(spark, path, manifest_path=manifest_path).select(
                 *keys
             ),
@@ -5494,34 +5400,17 @@ def cluster_table(
             int(n_buckets),
             rel_err,
         )
-
-        def _relayout(touched: DataFrame, _hit) -> DataFrame:
-            z = _morton(
-                [
-                    _bucket_from_cuts(k, c)
-                    for k, c in zip(keys, all_cuts)
-                ],
-                bits,
-            )
-            return (
-                touched.withColumn("_z", z)
-                .repartitionByRange(int(n_out), "_z")
-                .sortWithinPartitions("_z")
-                .drop("_z")
-            )
-    else:
-
-        def _relayout(touched: DataFrame, _hit) -> DataFrame:
-            return touched.repartitionByRange(
-                int(n_out), *keys
-            ).sortWithinPartitions(*keys)
-
+        if zorder
+        else None
+    )
     ledger = _txn_rewrite(
         spark,
         path,
         manifest_path,
         {},
-        _relayout,
+        lambda touched, _hit: _clustered(
+            touched, keys, n_out, cuts, n_buckets
+        ),
         cols,
         candidates=cand,
         keep_versions=keep_versions,
@@ -5609,13 +5498,8 @@ def materialize_deletes(
     }
     # candidates: key-span overlap AND added before some tombstone —
     # files newer than every tombstone cannot hold suppressed rows
-    av = (
-        F.coalesce(F.col("added_version"), F.lit(-1))
-        if "added_version" in manifest.columns
-        else F.lit(-1)
-    )
     cand = prune_files(
-        manifest.filter(av < F.lit(max_dv_v)), ranges
+        manifest.filter(F.col("added_version") < F.lit(max_dv_v)), ranges
     )
     dv_files = [d["file"] for d in dvs]
     cdc = [] if head.get("cdf", False) else None
@@ -5635,7 +5519,7 @@ def materialize_deletes(
         return ledger
 
     pcols = _detect_pcols(spark, path, mdir)
-    schema = _head_schema(spark, path, head)
+    schema = _head_schema(head)
     from pyspark.sql import Observation
 
     raw = _read_files(spark, cand, schema, base_path=path)
@@ -5761,7 +5645,7 @@ def restore_table(
         removed=removed,
         expected_version=head + 1,
         keep_versions=keep_versions,
-        table_schema=target_marker.get("schema"),
+        table_schema=target_marker["schema"],
         partition_by=target_marker.get("partition_by"),
         added_files=readded,
         force_checkpoint=True,
@@ -5972,13 +5856,7 @@ def rename_column(
     snap_v, head = _open_txn(
         spark, mdir, f"column DDL {path}", require=True
     )
-    sj = head.get("schema")
-    if sj is None:
-        raise ValueError(
-            "rename_column needs a schema-stamped table — commit "
-            "once through append_files/merge_into first"
-        )
-    schema = T.StructType.fromJson(sj)
+    schema = _head_schema(head)
     names = {f.name for f in schema.fields}
     if old not in names:
         raise ValueError(f"no column {old!r} in {path}")
@@ -5999,7 +5877,7 @@ def rename_column(
             for f in mapped.fields
         ]
     )
-    stats_cols = list(head.get("stats_cols") or [])
+    stats_cols = list(head["stats_cols"])
     restore = None
     stats_override = None
     if old in stats_cols:
@@ -6046,13 +5924,7 @@ def drop_column(
     snap_v, head = _open_txn(
         spark, mdir, f"column DDL {path}", require=True
     )
-    sj = head.get("schema")
-    if sj is None:
-        raise ValueError(
-            "drop_column needs a schema-stamped table — commit "
-            "once through append_files/merge_into first"
-        )
-    schema = T.StructType.fromJson(sj)
+    schema = _head_schema(head)
     names = [f.name for f in schema.fields]
     if name not in names:
         raise ValueError(f"no column {name!r} in {path}")
@@ -6070,7 +5942,7 @@ def drop_column(
     remaining = T.StructType(
         [f for f in mapped.fields if f.name != name]
     )
-    stats_cols = list(head.get("stats_cols") or [])
+    stats_cols = list(head["stats_cols"])
     restore = None
     stats_override = None
     if name in stats_cols:
@@ -6259,15 +6131,13 @@ def table_history(spark: SparkSession, path: str, manifest_path: str | None = No
         out.append(
             {
                 "version": v,
-                "ts": _commit_wall_ts(spark, mdir, v, marker=commit),
+                "ts": float(commit["ts"]),
                 "op": commit.get("op"),
-                "kind": commit.get("kind", "checkpoint"),
+                "kind": commit["kind"],
                 "files": int(agg["files"]),
                 "rows": int(agg["rows"] or 0),
-                "added": len(commit.get("added", [])),
-                "removed_pending": len(
-                    commit.get("pending", commit.get("removed", []))
-                ),
+                "added": len(commit["added"]),
+                "removed_pending": len(commit["pending"]),
                 "dv_files": len(dvs),
                 "dv_rows": dv_rows,
                 "protocol": commit.get("protocol"),
@@ -6478,12 +6348,9 @@ def table_changes(
     # every per-version read below pins to `head` (the listing's
     # snapshot) — resolving "current" again mid-function would race a
     # concurrent commit
-    _check_protocol(
-        _commit_info(spark, mdir, head), "read", f"table_changes {path}"
-    )
-    schema = committed_schema(spark, mdir, version=head)
-    if schema is None:
-        schema = spark.read.parquet(path).schema
+    head_marker = _commit_info(spark, mdir, head)
+    _check_protocol(head_marker, "read", f"table_changes {path}")
+    schema = _head_schema(head_marker)
 
     if change_feed:
         span = [v for v in versions if v > since_version]

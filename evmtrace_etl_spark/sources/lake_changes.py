@@ -110,32 +110,25 @@ def _fsize(p: str) -> int:
 
 
 # ---------------------------------------------------------------------------
-# Offset coordinates.  Wire shapes:
-#   {"version": v}             — commits <= v fully consumed (the legacy
-#                                form; still emitted whenever the position
-#                                sits on a commit boundary, so pre-existing
-#                                checkpoints keep byte-identical offsets)
-#   {"version": v, "index": i} — commits < v fully consumed plus the first
-#                                i files of commit v (an over-budget commit
-#                                split mid-way by admission control)
-# Internally both normalize to the linear position (next_version,
-# files_already_consumed_of_it) so spans compare lexicographically.
+# Offset coordinates.  One wire shape, {"version": v, "index": i}: commits
+# < v fully consumed plus the first i files of commit v (i > 0 only when
+# admission control split an over-budget commit).  It is the linear
+# position (next_version, files_already_consumed_of_it), so spans compare
+# lexicographically.  An offset in any other shape raises, naming it.
 # ---------------------------------------------------------------------------
 
 
 def _norm_pos(off: dict) -> tuple[int, int]:
-    v = int(off["version"])
-    i = off.get("index")
-    if i is not None:
-        return (v, int(i))
-    return (v + 1, 0)
+    if not isinstance(off, dict) or off.keys() != {"version", "index"}:
+        raise ValueError(
+            f"lake_changes offset {off!r} is not in the source's one "
+            'shape {"version": v, "index": i}'
+        )
+    return (int(off["version"]), int(off["index"]))
 
 
 def _emit_pos(pos: tuple[int, int]) -> dict:
-    v, consumed = pos
-    if consumed == 0:
-        return {"version": v - 1}
-    return {"version": v, "index": int(consumed)}
+    return {"version": int(pos[0]), "index": int(pos[1])}
 
 
 # ---------------------------------------------------------------------------
@@ -247,19 +240,25 @@ class LakeChangesStreamReader(DataSourceStreamReader):
             # must apply from the FIRST trigger
             return (self._start, 0)
         for b in batches:
+            off = None
             try:
                 with open(os.path.join(odir, str(b))) as f:
                     lines = [ln.strip() for ln in f if ln.strip()]
                 # offset-log format: "v1", the batch metadata JSON,
                 # then one serialized offset per source
                 for ln in lines[2:]:
-                    off = json.loads(ln)
-                    if isinstance(off, str):
-                        off = json.loads(off)
-                    if isinstance(off, dict) and "version" in off:
-                        return _norm_pos(off)
+                    got = json.loads(ln)
+                    if isinstance(got, str):
+                        got = json.loads(got)
+                    if isinstance(got, dict) and "version" in got:
+                        off = got
+                        break
             except Exception:
                 continue
+            if off is not None:
+                # outside the try: an offset in a dropped shape must
+                # raise, not read as a corrupt file
+                return _norm_pos(off)
         # batch offset files EXIST but none parsed (corrupt/in-flight
         # file, or a checkpoint_location that isn't this query's real
         # checkpoint): the stream's true position is unknown but
@@ -275,7 +274,7 @@ class LakeChangesStreamReader(DataSourceStreamReader):
     # -- offsets ----------------------------------------------------------
     def initialOffset(self) -> dict:
         self._pos = (self._start, 0)
-        return {"version": self._start - 1}
+        return _emit_pos(self._pos)
 
     def latestOffset(self) -> dict:
         committed = _committed_versions(self._mdir)
@@ -290,9 +289,8 @@ class LakeChangesStreamReader(DataSourceStreamReader):
             # a backwards batch and re-serve consumed commits.  The
             # first batch is unbounded; every later one is budgeted.
             head = committed[-1] if committed else self._start - 1
-            off = {"version": max(head, self._start - 1)}
-            self._pos = _norm_pos(off)
-            return off
+            self._pos = (max(head, self._start - 1) + 1, 0)
+            return _emit_pos(self._pos)
         cs = set(committed)
         head_pos = (
             (committed[-1] + 1, 0) if committed else (self._start, 0)

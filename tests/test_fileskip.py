@@ -344,31 +344,6 @@ def test_delete_crash_after_commit_rolls_forward(spark, tmp_path, monkeypatch):
     assert raw == 0
 
 
-def test_flat_manifest_migrates_to_versioned(spark, tmp_path):
-    """A pre-snapshot FLAT manifest (parquet files directly at the
-    manifest path) is read as current and migrated into the versioned
-    layout by the next maintenance commit."""
-    from evmtrace_etl_spark.sinks import (
-        current_manifest,
-        manifest_version,
-        update_stats_index,
-    )
-
-    dst = _build(spark, tmp_path)
-    manifest = str(tmp_path / "manifest")
-    parquet_stats_index(spark, dst, ["k"]).write.parquet(manifest)  # legacy
-    flat = sorted(tuple(r) for r in current_manifest(spark, manifest).collect())
-    assert flat and manifest_version(spark, manifest) is None
-
-    led = update_stats_index(spark, dst, manifest)
-    assert led["version"] == 0 and led["files_new"] == 0
-    assert manifest_version(spark, manifest) == 0
-    got = sorted(tuple(r) for r in current_manifest(spark, manifest).collect())
-    assert got == flat
-    # the legacy flat part files are gone (migrated, not duplicated)
-    assert not glob.glob(manifest + "/part-*.parquet")
-
-
 def test_read_file_pruned_keeps_partition_values(spark, tmp_path):
     """Pruned reads of a hive-partitioned dataset keep the
     directory-encoded partition column (basePath) — without it the

@@ -335,9 +335,11 @@ def test_over_budget_single_commit_splits_on_file_index(spark, tmp_path):
             offs += [
                 _json.loads(ln) for ln in lines[2:] if ln.startswith("{")
             ]
-    assert any("index" in o for o in offs), offs
-    # the final offset lands back on the boundary (legacy shape)
-    assert {"version": 0} in offs
+    # every offset carries the index; the split ones stop inside v0
+    assert all(o.keys() == {"version", "index"} for o in offs), offs
+    assert {"version": 0, "index": 2} in offs
+    # the final offset lands on the boundary: v0 fully consumed
+    assert {"version": 1, "index": 0} in offs
 
 
 def test_bytes_budget_admits_at_least_one_file(spark, tmp_path):
@@ -360,23 +362,30 @@ def test_bytes_budget_admits_at_least_one_file(spark, tmp_path):
 
 
 def test_offset_wire_shapes_round_trip():
-    """Legacy {'version': v} offsets normalize and re-emit
-    byte-identically (existing checkpoints keep working); split
-    offsets round-trip through the linear position."""
+    """Offsets have one wire shape, {'version': v, 'index': i}: boundary
+    and split positions both round-trip through the linear position,
+    and an offset in any other shape (the index-less boundary form
+    included) raises, naming the offset."""
     from evmtrace_etl_spark.sources.lake_changes import (
         _emit_pos,
         _norm_pos,
     )
 
-    assert _emit_pos(_norm_pos({"version": 2})) == {"version": 2}
-    assert _norm_pos({"version": 2}) == (3, 0)
+    assert _emit_pos((3, 0)) == {"version": 3, "index": 0}
     assert _emit_pos(_norm_pos({"version": 3, "index": 4})) == {
         "version": 3,
         "index": 4,
     }
     assert _norm_pos({"version": 0, "index": 1}) < _norm_pos(
         {"version": 0, "index": 2}
-    ) < _norm_pos({"version": 0}) == (1, 0)
+    ) < _norm_pos({"version": 1, "index": 0}) == (1, 0)
+    for bad in (
+        {"version": 2},
+        {"index": 0},
+        {"version": 2, "index": 0, "x": 1},
+    ):
+        with pytest.raises(ValueError, match="lake_changes offset"):
+            _norm_pos(bad)
 
 
 def test_recover_pos_corrupt_offsets_falls_back_to_none(tmp_path):

@@ -16,17 +16,22 @@ from pyspark.sql import functions as F
 
 from evmtrace_etl_spark import sinks
 from evmtrace_etl_spark.sinks import (
+    LakeUpsertSink,
     ProtocolUnsupported,
     append_files,
+    compact_table,
     delete_where,
     merge_into,
     read_table,
     rename_column,
+    restore_table,
     table_changes,
+    update_stats_index,
 )
+from evmtrace_etl_spark.sources.lake_changes import start_lake_changes_stream
 
-# r15: deep scenario module — full-tier only (see tests/conftest.py)
-pytestmark = pytest.mark.slow
+# r15: the deep protocol scenarios are full-tier only (see
+# tests/conftest.py); the log-shape pin below runs in the default tier
 
 
 def _seed(spark, tmp_path, name="tbl") -> str:
@@ -65,6 +70,7 @@ def _stamp_protocol(tbl: str, min_reader: int, min_writer: int) -> None:
         os.remove(crc)
 
 
+@pytest.mark.slow
 def test_plain_table_stamps_no_protocol(spark, tmp_path):
     """Level-1 tables keep the pre-protocol wire shape byte-stable:
     no ``protocol``/``features`` keys at all."""
@@ -73,6 +79,7 @@ def test_plain_table_stamps_no_protocol(spark, tmp_path):
     assert "protocol" not in m and "features" not in m
 
 
+@pytest.mark.slow
 def test_feature_commits_stamp_and_carry_protocol(spark, tmp_path):
     """Column mapping and type widening each bump the stamp, the
     feature set accumulates, and a later plain append CARRIES it —
@@ -108,6 +115,7 @@ def test_feature_commits_stamp_and_carry_protocol(spark, tmp_path):
     assert read_table(spark, tbl).count() == 56
 
 
+@pytest.mark.slow
 def test_dv_consolidation_stamps_per_row_feature(spark, tmp_path):
     """The checkpoint DV fold writes per-row-versioned sidecars — a
     pre-fold build would ignore __dv_v — so the folding commit stamps
@@ -124,6 +132,7 @@ def test_dv_consolidation_stamps_per_row_feature(spark, tmp_path):
     assert m["protocol"]["min_reader"] == 2
 
 
+@pytest.mark.slow
 def test_future_protocol_refuses_reads_and_writes(spark, tmp_path):
     """A marker stamped above this build's level raises a NAMED error
     on every entry point — read_table, table_changes, the lake_changes
@@ -152,6 +161,7 @@ def test_future_protocol_refuses_reads_and_writes(spark, tmp_path):
         rename_column(spark, tbl, "v", "vv")
 
 
+@pytest.mark.slow
 def test_writer_only_future_level_still_reads(spark, tmp_path):
     """min_writer above the build with min_reader within it: reads
     keep working (forward-compatible readers — Delta's split levels),
@@ -169,6 +179,7 @@ def test_writer_only_future_level_still_reads(spark, tmp_path):
         )
 
 
+@pytest.mark.slow
 def test_explicit_protocol_upgrade(spark, tmp_path):
     """upgrade_table_protocol raises the floor as a metadata-only
     commit BEFORE any feature is used, carries forward, never
@@ -206,6 +217,7 @@ def test_explicit_protocol_upgrade(spark, tmp_path):
     assert hist[0]["protocol"] is None  # pre-upgrade snapshot
 
 
+@pytest.mark.slow
 def test_future_protocol_refuses_before_any_data_work(spark, tmp_path):
     """The writer-side gate fires at the HEAD of every locked
     write/maintenance entry point, not just at the commit choke point:
@@ -299,3 +311,94 @@ def test_future_protocol_refuses_before_any_data_work(spark, tmp_path):
         if p != orphan
     }
     assert after == before  # zero data work happened
+
+
+def _markers(tbl: str) -> dict[int, dict]:
+    """Every committed marker currently in ``tbl``'s log, by version."""
+    mdir = os.path.join(tbl, "_stats_manifest")
+    out = {}
+    for n in os.listdir(mdir):
+        mp = os.path.join(mdir, n, "_COMMIT")
+        if n.startswith("v") and os.path.exists(mp):
+            with open(mp) as f:
+                out[int(n[1:])] = json.load(f)
+    return out
+
+
+def test_log_records_have_one_shape(spark, tmp_path):
+    """The lake log has one wire format.  A scripted history over every
+    kind of writer — the stats-index first build over a plain parquet
+    directory, an append, the upsert sink's ignore and update, a
+    merge-on-read delete, a compaction, a restore — leaves markers
+    that all carry ``schema``/``stats_cols``/``kind``/``ts`` and
+    ``{file, rm_v}`` pending entries (on a zero-retention table), and a
+    ``lake_changes`` drain split mid-commit checkpoints only
+    ``{version, index}`` offsets."""
+    base = str(tmp_path / "lake")
+    tbl = os.path.join(base, "t")
+
+    def rows(lo, hi, v):
+        return spark.range(lo, hi).select(
+            F.col("id").alias("k"), F.lit(v).cast("long").alias("v")
+        )
+
+    seen: dict[int, dict] = {}
+    rows(0, 40, 0).repartition(2).write.parquet(tbl)
+    update_stats_index(spark, tbl, None, ["k"])
+    seen.update(_markers(tbl))
+    append_files(spark, rows(40, 60, 1).coalesce(1), tbl)
+    seen.update(_markers(tbl))
+    sink = LakeUpsertSink(base, partition_cols=())
+    sink.upsert(rows(50, 70, 2).coalesce(1), "t", ["k"], mode="ignore")
+    seen.update(_markers(tbl))
+    sink.upsert(rows(0, 10, 3).coalesce(1), "t", ["k"], mode="update")
+    seen.update(_markers(tbl))
+    delete_where(
+        spark, tbl, None, {"k": (20, 24)},
+        strategy="merge-on-read", keys=["k"],
+    )
+    seen.update(_markers(tbl))
+    compacted = compact_table(spark, tbl)["version"]
+    seen.update(_markers(tbl))
+    append_files(spark, rows(100, 110, 4).coalesce(1), tbl)
+    seen.update(_markers(tbl))
+    restore_table(spark, tbl, version=compacted)
+    seen.update(_markers(tbl))
+    assert sorted(seen) == list(range(8))
+    assert read_table(spark, tbl).count() == 70 - 5
+
+    src = str(tmp_path / "src")
+    append_files(spark, rows(0, 40, 0).repartition(4), src, cols=["k"])
+    seen_src = _markers(src)
+    ckpt = str(tmp_path / "ck")
+    delivered = []
+    for _run in range(4):
+        before = len(delivered)
+        q = start_lake_changes_stream(
+            spark, src, lambda b, bid: delivered.append(b.count()), ckpt,
+            max_files_per_trigger=3,
+        )
+        q.awaitTermination(120)
+        if sum(delivered[before:]) == 0:
+            break
+    assert sum(delivered) == 40
+
+    for m in list(seen.values()) + list(seen_src.values()):
+        for key in ("schema", "stats_cols", "kind", "ts"):
+            assert key in m, (m["version"], key)
+        assert all(
+            isinstance(e, dict) and e.keys() == {"file", "rm_v"}
+            for e in m["pending"]
+        ), m["pending"]
+    # the update, the restore and the compaction each removed files
+    assert any(m["pending"] for m in seen.values())
+
+    offs = []
+    odir = os.path.join(ckpt, "offsets")
+    for n in sorted(os.listdir(odir)):
+        if n.isdigit():
+            with open(os.path.join(odir, n)) as f:
+                lines = [ln.strip() for ln in f if ln.strip()]
+            offs += [json.loads(ln) for ln in lines[2:]]
+    assert offs and all(o.keys() == {"version", "index"} for o in offs), offs
+    assert {"version": 0, "index": 3} in offs  # split inside v0

@@ -245,8 +245,8 @@ def test_intent_token_primitives_ownership_contract(spark, tmp_path):
     ``_write_txn_intent`` stamps a fresh token per call (restamps
     replace the marker), and ``_clear_txn_intent`` deletes the marker
     only under a MATCHING token — a stale owner cannot delete a
-    foreign writer's live intent; tokenless clears keep the legacy
-    unconditional behavior; clearing an absent marker is a no-op."""
+    foreign writer's live intent; clearing an absent marker is a
+    no-op."""
     tbl = _seed(spark, tmp_path)
     mdir = tbl + "/_stats_manifest"
     tpath = os.path.join(mdir, "_TXN")
@@ -266,5 +266,4 @@ def test_intent_token_primitives_ownership_contract(spark, tmp_path):
     sinks._clear_txn_intent(spark, mdir, b)  # current owner: deletes
     assert not os.path.exists(tpath)
     sinks._clear_txn_intent(spark, mdir, b)  # absent: no-op, no raise
-    sinks._clear_txn_intent(spark, mdir, None)  # legacy: no-op on absent
     assert not os.path.exists(os.path.join(mdir, "_LOCK"))  # lease released

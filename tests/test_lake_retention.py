@@ -90,10 +90,10 @@ def test_time_travel_across_rewrite(spark, tmp_path):
         read_table(spark, plain, version=pv).filter("v = -1").count()
 
 
-def test_default_marker_wire_shape_unchanged(spark, tmp_path):
-    """Zero-retention tables keep the legacy bare-path pending list in
-    their commit markers (old readers and the two-process script parse
-    it), and never stamp the retain flag."""
+def test_default_marker_wire_shape(spark, tmp_path):
+    """Zero-retention tables write the same ``{file, rm_v}`` pending
+    entries as retention tables — ``rm_v`` is the removing commit's
+    version — and never stamp the retain flag."""
     plain = _seed(spark, tmp_path, retain=False)
     merge_into(
         spark,
@@ -112,7 +112,13 @@ def test_default_marker_wire_shape_unchanged(spark, tmp_path):
         open(os.path.join(mdir, f"v{head}", "_COMMIT")).read()
     )
     assert "retain" not in marker
-    assert all(isinstance(e, str) for e in marker.get("pending", []))
+    # the merge rewrote files, so this commit's removals are pending
+    # (swept from disk but still listed until the next commit)
+    assert all(
+        e.keys() == {"file", "rm_v"} and e["rm_v"] <= head
+        for e in marker["pending"]
+    )
+    assert any(e["rm_v"] == head for e in marker["pending"])
 
 
 def test_restore_across_rewrite_readds_and_unpends(spark, tmp_path):

@@ -134,32 +134,6 @@ def test_table_changes_since_timestamp(spark, tmp_path):
         table_changes(spark, tbl, 0, since_timestamp=ts_v0)
 
 
-def test_legacy_marker_mtime_fallback(spark, tmp_path):
-    """A commit made before the ts stamp existed (marker carries no
-    ``ts``) resolves through the _COMMIT file's mtime, and the
-    running-max walk keeps the version<->time mapping monotone."""
-    tbl = _three_commits(spark, tmp_path)
-    hist = {h["version"]: h["ts"] for h in table_history(spark, tbl)}
-    marker = os.path.join(tbl, "_stats_manifest", "v1", "_COMMIT")
-    payload = json.loads(open(marker).read())
-    payload.pop("ts")
-    with open(marker, "w") as f:
-        f.write(json.dumps(payload))
-    # the Hadoop local FS keeps a checksum sidecar; editing the marker
-    # behind its back must drop it or reads fail ChecksumException
-    crc = os.path.join(os.path.dirname(marker), "._COMMIT.crc")
-    if os.path.exists(crc):
-        os.remove(crc)
-    # v1's time now comes from the marker file's mtime (rewritten just
-    # now -> AFTER v2's stamp); the running max keeps resolution sane:
-    # v0's instant still resolves to v0, the future still to head
-    assert version_at_timestamp(spark, tbl, hist[0]) == 0
-    assert version_at_timestamp(spark, tbl, hist[2] + 3600) == 2
-    # and history still reports a time for every version
-    ts = [h["ts"] for h in table_history(spark, tbl)]
-    assert len(ts) == 3 and all(t > 1.5e9 for t in ts)
-
-
 def test_timestamp_resolves_across_carried_backlog(
     spark, tmp_path, monkeypatch
 ):

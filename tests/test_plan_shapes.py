@@ -77,9 +77,23 @@ def test_pq_codebooks_arrive_broadcast(emb):
     assert "BroadcastExchange" in plan
     # the seed codebook's doubles must not be plan literals: the first
     # corpus vector (vec_id 0) IS seed centroid 0, so any inlined
-    # sub-codebook would print its components in the plan text
+    # sub-codebook would print its components in the plan text.  Match
+    # several consecutive components — a single short double (0.5)
+    # would collide with the fold's own literals.
     row0 = emb.filter(F.col("vec_id") == 0).select("embedding").first()
-    assert f"{float(row0[0][0])!r}" not in plan
+    comps = [repr(float(x)) for x in row0[0][:4]]
+    for sep in (",", ", ", "D, "):
+        assert sep.join(comps) not in plan, sep
+
+
+def test_pq_dists_refuses_ragged_codebooks(emb):
+    """A ragged sub-codebook list (unequal codes per subspace) raises
+    ``ValueError`` — the flat distance array is sliced by a single
+    ``n_codes`` stride, so accepting it would mis-slice silently."""
+    d = 2
+    ragged = [[[0.0] * d, [1.0] * d], [[0.0] * d]]
+    with pytest.raises(ValueError, match="ragged PQ sub-codebooks"):
+        similarity._pq_dists_df(emb, ragged, d, "embedding")
 
 
 def test_lsh_topk_broadcasts_queries(emb):
