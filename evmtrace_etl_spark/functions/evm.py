@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
+from ..session import per_context
 from .keccak import to_checksum_address
 
 # EVM elliptic-curve precompile addresses (reference
@@ -118,8 +119,11 @@ def to_checksum_udf(addresses: pd.Series) -> pd.Series:
     return checksum_batch(addresses)
 
 
+@per_context
 def checksum_array_udf():
-    """EIP-55 over an array<string> column (sorted output preserved)."""
+    """EIP-55 over an array<string> column (sorted output preserved).
+    Built once per SparkContext, so its function is pickled once, not
+    once per micro-batch."""
 
     @pandas_udf(T.ArrayType(T.StringType()))
     def _udf(arrays: pd.Series) -> pd.Series:
@@ -143,18 +147,22 @@ def checksum_array_udf():
     return _udf
 
 
+@per_context
+def _checksum_columns(cols: tuple, array_cols: tuple) -> dict:
+    arr_udf = checksum_array_udf()
+    return {
+        **{c: to_checksum_udf(F.col(c)) for c in cols},
+        **{c: arr_udf(F.col(c)) for c in array_cols},
+    }
+
+
 def with_checksummed_addresses(
     df, cols: list[str] = (), array_cols: list[str] = ()
 ):
     """Sink serialization step: EIP-55 the given address columns, matching
     the reference's to_checksum at SQL-render time (etl_result.rs:166-172,
     196-200, 221, 239-242, 293).  Internal plans stay lowercase."""
-    arr_udf = checksum_array_udf()
-    for c in cols:
-        df = df.withColumn(c, to_checksum_udf(F.col(c)))
-    for c in array_cols:
-        df = df.withColumn(c, arr_udf(F.col(c)))
-    return df
+    return df.withColumns(_checksum_columns(tuple(cols), tuple(array_cols)))
 
 
 #: per-output checksummed columns (reference call sites in etl_result.rs)

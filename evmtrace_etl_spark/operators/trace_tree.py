@@ -56,6 +56,7 @@ from ..functions.evm import (
     pairing_input_size,
     selector_masked,
 )
+from ..session import per_context
 
 TX_KEY = ["chain_id", "transaction_hash"]
 
@@ -83,23 +84,24 @@ _ROOT_FIELDS = [
 ]
 
 
+@per_context
+def _prepped_columns() -> tuple[Column, list[Column]]:
+    """The P10 null guard and the per-row derived columns (P6/P8/P7)."""
+    guard = F.col("from_address").isNotNull() & F.col("to_address").isNotNull()
+    is_pairing = F.col("to_address") == F.lit(EC_PAIRING_ADDRESS)
+    is_recover = F.col("to_address") == F.lit(EC_RECOVER_ADDRESS)
+    return guard, [
+        selector_masked("input", "to_address").alias("_sel"),
+        F.when(is_pairing, pairing_input_size("input")).alias("_pair_size"),
+        F.when(is_recover, ec_recover_address("output")).alias("_recovered"),
+    ]
+
+
 def _edge_prepped(traces: DataFrame) -> DataFrame:
     """Null-guarded traces with the per-row derived columns both
     aggregates consume (P10 guard + P6/P8/P7 projections)."""
-    guarded = traces.filter(
-        F.col("from_address").isNotNull() & F.col("to_address").isNotNull()
-    )
-    is_pairing = F.col("to_address") == F.lit(EC_PAIRING_ADDRESS)
-    is_recover = F.col("to_address") == F.lit(EC_RECOVER_ADDRESS)
-    return (
-        guarded.withColumn("_sel", selector_masked("input", "to_address"))
-        .withColumn(
-            "_pair_size", F.when(is_pairing, pairing_input_size("input"))
-        )
-        .withColumn(
-            "_recovered", F.when(is_recover, ec_recover_address("output"))
-        )
-    )
+    guard, derived = _prepped_columns()
+    return traces.filter(guard).select("*", *derived)
 
 
 def edge_aggregate(traces: DataFrame) -> DataFrame:
@@ -126,6 +128,41 @@ def calls_to(*addresses: str) -> Callable[[Column], Column]:
     return lambda c: c["to"].isin(list(addresses))
 
 
+@per_context
+def _tree_columns() -> tuple[list[Column], Column, Column, Column]:
+    """``tx_trees``' aggregates, commit gate and degree-set columns."""
+    eligible_root = (
+        (F.size("trace_address") == 0)
+        & F.col("transaction_hash").isNotNull()
+        & F.col("transaction_index").isNotNull()
+    )  # from/to presence is already the P10 guard
+    call = F.struct(
+        F.col("from_address").alias("frm"),
+        F.col("to_address").alias("to"),
+        F.coalesce(F.col("gas_used"), F.lit(0)).alias("gas"),
+        F.col("_sel").alias("sel"),
+        F.col("_pair_size").alias("psz"),
+        F.col("_recovered").alias("rec"),
+    )
+    aggs = [
+        F.max(F.when(eligible_root, F.struct(*_ROOT_FIELDS))).alias("root"),
+        F.collect_list(call).alias("calls"),
+    ]
+    gate = F.col("root").isNotNull() & F.exists(
+        "calls", calls_to(*FIRST_DEGREE_FILTER_ADDRESSES)
+    )
+    first_degree = distinct_values(
+        F.col("calls"), calls_to(*FIRST_DEGREE_FILTER_ADDRESSES), "frm"
+    )
+    second_degree = distinct_values(
+        F.col("calls"),
+        lambda c: F.array_contains(F.col("first_degree"), c["to"])
+        & (c["frm"] != F.col("root.from_address")),
+        "frm",
+    )
+    return aggs, gate, first_degree, second_degree
+
+
 def tx_trees(traces: DataFrame) -> DataFrame:
     """The committed call trees: one row per transaction that commits.
 
@@ -142,47 +179,14 @@ def tx_trees(traces: DataFrame) -> DataFrame:
     - J3 second degree: callers of a first-degree address, the tx's EOA
       (root from_address) excluded (trace_tree.rs:103-112).
     """
-    eligible_root = (
-        (F.size("trace_address") == 0)
-        & F.col("transaction_hash").isNotNull()
-        & F.col("transaction_index").isNotNull()
-    )  # from/to presence is already the P10 guard
-    call = F.struct(
-        F.col("from_address").alias("frm"),
-        F.col("to_address").alias("to"),
-        F.coalesce(F.col("gas_used"), F.lit(0)).alias("gas"),
-        F.col("_sel").alias("sel"),
-        F.col("_pair_size").alias("psz"),
-        F.col("_recovered").alias("rec"),
-    )
-    trees = (
+    aggs, gate, first_degree, second_degree = _tree_columns()
+    return (
         _edge_prepped(traces)
         .groupBy(*TX_KEY)
-        .agg(
-            F.max(F.when(eligible_root, F.struct(*_ROOT_FIELDS))).alias(
-                "root"
-            ),
-            F.collect_list(call).alias("calls"),
-        )
-        .filter(
-            F.col("root").isNotNull()
-            & F.exists("calls", calls_to(*FIRST_DEGREE_FILTER_ADDRESSES))
-        )
-    )
-    with_fd = trees.withColumn(
-        "first_degree",
-        distinct_values(
-            F.col("calls"), calls_to(*FIRST_DEGREE_FILTER_ADDRESSES), "frm"
-        ),
-    )
-    return with_fd.withColumn(
-        "second_degree",
-        distinct_values(
-            F.col("calls"),
-            lambda c: F.array_contains(F.col("first_degree"), c["to"])
-            & (c["frm"] != F.col("root.from_address")),
-            "frm",
-        ),
+        .agg(*aggs)
+        .filter(gate)
+        .withColumn("first_degree", first_degree)
+        .withColumn("second_degree", second_degree)
     )
 
 

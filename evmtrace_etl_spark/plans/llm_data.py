@@ -35,6 +35,7 @@ from ..functions.text import (
     STOPWORDS,
 )
 from ..operators import dedup, multimodal, sampling, similarity, text_analysis
+from ..session import par_legs
 
 
 def _fan_out(df: DataFrame) -> DataFrame:
@@ -2851,21 +2852,6 @@ def _legged(name: str, df: DataFrame) -> DataFrame:
     return df.withColumn("leg", F.lit(name))
 
 
-def _par_legs(*thunks):
-    """Construct independent composite legs CONCURRENTLY (the
-    overlap-independent-jobs pattern): each leg's driver round-trips
-    (codebook collects, persisted-index reads) are jobs the OTHER
-    leg's tail would otherwise leave the executors idle for.  Plain
-    threads suffice — DataFrame construction and collects are
-    thread-safe, and leg results come back in argument order so the
-    composed union is deterministic."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
-        futures = [pool.submit(t) for t in thunks]
-        return [f.result() for f in futures]
-
-
 def llm_ivf_recall_ladder(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Seed-codebook AND trained-codebook IVF recall on the uniform
     corpus as one row (legs 'seed'/'trained') — the Lloyd's-fit
@@ -2876,7 +2862,8 @@ def llm_ivf_recall_ladder(spark: SparkSession, sf_dir: str) -> DataFrame:
     raced."""
     _exact_panel(spark, sf_dir, clustered=False)
     seed = similarity.seed_cents(_emb(spark, sf_dir))
-    s, t = _par_legs(
+    s, t = par_legs(
+        spark,
         lambda: llm_ivf_recall(spark, sf_dir, _seed=seed),
         lambda: llm_ivf_trained_recall(spark, sf_dir, _seed=seed),
     )
@@ -2892,7 +2879,8 @@ def llm_ivf_recall_clustered_ladder(
     ``llm_ivf_recall_ladder``."""
     _exact_panel(spark, sf_dir, clustered=True)
     seed = similarity.seed_cents(_clustered_emb(spark, sf_dir))
-    s, t = _par_legs(
+    s, t = par_legs(
+        spark,
         lambda: llm_ivf_recall_clustered(spark, sf_dir, _seed=seed),
         lambda: llm_ivf_trained_recall_clustered(
             spark, sf_dir, _seed=seed
@@ -2908,7 +2896,8 @@ def llm_pq_recall_ladder(spark: SparkSession, sf_dir: str) -> DataFrame:
     only build concurrently."""
     _exact_panel(spark, sf_dir, clustered=False)
     _exact_panel(spark, sf_dir, clustered=True)
-    u, c = _par_legs(
+    u, c = par_legs(
+        spark,
         lambda: llm_pq_recall(spark, sf_dir),
         lambda: llm_pq_recall_clustered(spark, sf_dir),
     )
@@ -2926,7 +2915,8 @@ def llm_ivfpq_recall_ladder(
     runs once instead of once per leg."""
     _exact_panel(spark, sf_dir, clustered=True)
     codebooks = similarity.ivfpq_codebooks(_clustered_emb(spark, sf_dir))
-    a, r = _par_legs(
+    a, r = par_legs(
+        spark,
         lambda: llm_ivfpq_recall_clustered(
             spark, sf_dir, _codebooks=codebooks
         ),
@@ -2954,7 +2944,8 @@ def llm_ivf_trained_topk_served(
         path = _workdir("ivf_index")
         similarity.write_ivf_index(emb, path, n_iters=IVF_TRAIN_ITERS)
         _ivf_index_cache[sf_dir] = path
-    inline, index = _par_legs(
+    inline, index = par_legs(
+        spark,
         lambda: llm_ivf_trained_topk(spark, sf_dir),
         lambda: llm_ivf_index_topk(spark, sf_dir),
     )

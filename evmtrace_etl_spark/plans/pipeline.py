@@ -9,6 +9,10 @@ Scale shape: ONE full-data shuffle (``tx_trees``' groupBy on
 chain_id/transaction_hash).  The transaction output is a projection of
 the grouped rows; the contract output inlines each tree's caller rows
 and adds the D2 keep-first window as its only second shuffle.
+
+Plan once: the column expressions are built once per live SparkContext
+(``session.per_context``), so a micro-batch's planning is a few
+``select``/``agg`` calls instead of thousands of py4j round trips.
 """
 
 from __future__ import annotations
@@ -26,6 +30,7 @@ from ..operators.trace_tree import (
     precompile_counts,
     tx_trees,
 )
+from ..session import per_context
 
 
 class ZkParts:
@@ -58,21 +63,14 @@ def _trees(traces: DataFrame, parts: ZkParts | None) -> DataFrame:
     return (parts or ZkParts(traces, persist=False)).trees
 
 
-def zk_transactions(traces: DataFrame, parts: ZkParts | None = None) -> DataFrame:
-    """EP1 transaction output (reference Transaction assembly,
-    src/types/trace_tree.rs:177-239), schema per
-    ``schemas.TRANSACTION_SCHEMA`` (sink column order,
-    etl_result.rs:153-159).
-
-    closest_address (J4): second-degree callers if any survive the EOA
-    exclusion, else first-degree callers (trace_tree.rs:182-187).
-    """
+@per_context
+def _transaction_columns() -> list[F.Column]:
     calls, fd, sd = F.col("calls"), F.col("first_degree"), F.col("second_degree")
 
     def root(field: str) -> F.Column:
         return F.col("root." + field).alias(field)
 
-    return _trees(traces, parts).select(
+    return [
         F.col("chain_id"),
         F.col("transaction_hash"),
         root("from_address"),
@@ -96,19 +94,23 @@ def zk_transactions(traces: DataFrame, parts: ZkParts | None = None) -> DataFram
             "ec_recover_addresses"  # A5; a null ecRecover output adds nothing
         ),
         root("error"),
-    )
+    ]
 
 
-def zk_contracts(traces: DataFrame, parts: ZkParts | None = None) -> DataFrame:
-    """EP1 contract output (reference Contract assembly J5,
-    src/types/trace_tree.rs:115-163), schema per ``schemas.CONTRACT_SCHEMA``.
+def zk_transactions(traces: DataFrame, parts: ZkParts | None = None) -> DataFrame:
+    """EP1 transaction output (reference Transaction assembly,
+    src/types/trace_tree.rs:177-239), schema per
+    ``schemas.TRANSACTION_SCHEMA`` (sink column order,
+    etl_result.rs:153-159).
 
-    Each committed tree's first-degree (degree 0) and second-degree
-    (degree 1) callers (U1), enriched from the same tree with the
-    selector set called ON the address (A3), its per-precompile call
-    counts (A8) and its pairing input sizes (A4).  ``call`` is the set of
-    the caller's callees that made it that degree.
+    closest_address (J4): second-degree callers if any survive the EOA
+    exclusion, else first-degree callers (trace_tree.rs:182-187).
     """
+    return _trees(traces, parts).select(*_transaction_columns())
+
+
+@per_context
+def _contract_columns() -> list[F.Column]:
     calls, fd, sd = F.col("calls"), F.col("first_degree"), F.col("second_degree")
 
     def caller_row(degree: int, makes_degree):
@@ -135,11 +137,32 @@ def zk_contracts(traces: DataFrame, parts: ZkParts | None = None) -> DataFrame:
             sd, caller_row(1, lambda c: F.array_contains(fd, c["to"]))
         ),
     )
-    return _trees(traces, parts).select(
-        "chain_id",
+    return [
+        F.col("chain_id"),
         F.inline(callers),
         F.col("root.seq").alias("_root_seq"),  # arrival order; dropped by D2
-    )
+    ]
+
+
+def zk_contracts(traces: DataFrame, parts: ZkParts | None = None) -> DataFrame:
+    """EP1 contract output (reference Contract assembly J5,
+    src/types/trace_tree.rs:115-163), schema per ``schemas.CONTRACT_SCHEMA``.
+
+    Each committed tree's first-degree (degree 0) and second-degree
+    (degree 1) callers (U1), enriched from the same tree with the
+    selector set called ON the address (A3), its per-precompile call
+    counts (A8) and its pairing input sizes (A4).  ``call`` is the set of
+    the caller's callees that made it that degree.
+    """
+    return _trees(traces, parts).select(*_contract_columns())
+
+
+@per_context
+def _arrival_rank() -> F.Column:
+    w = Window.partitionBy(
+        "chain_id", "address", "function_signatures"
+    ).orderBy(F.col("_root_seq").asc(), F.col("degree").asc())
+    return F.row_number().over(w)
 
 
 def zk_contracts_deduped(
@@ -152,12 +175,9 @@ def zk_contracts_deduped(
     commit first-degree rows precede second-degree (trace_tree.rs:115-118)
     — so the order is (root seq, degree), not transaction-hash order.
     """
-    c = zk_contracts(traces, parts)
-    w = Window.partitionBy(
-        "chain_id", "address", "function_signatures"
-    ).orderBy(F.col("_root_seq").asc(), F.col("degree").asc())
     return (
-        c.withColumn("_rn", F.row_number().over(w))
+        zk_contracts(traces, parts)
+        .withColumn("_rn", _arrival_rank())
         .filter(F.col("_rn") == 1)
         .drop("_rn", "_root_seq")
     )

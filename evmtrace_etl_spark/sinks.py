@@ -233,6 +233,10 @@ class DbApiUpsertSink:
 
     ``paramstyle`` follows the driver module's ``paramstyle`` attribute:
     'qmark' (sqlite3) or 'format'/'pyformat' (psycopg2, MySQLdb).
+
+    ``connection_factory`` must open a NEW connection per call, as for
+    ``DbApiPartitionUpsertSink``: ``runner.process_trace_batch``
+    upserts its two tables concurrently, from two threads.
     """
 
     def __init__(
@@ -1537,10 +1541,11 @@ def _reconstruct_manifest(
     # schema — the same semantics as a per-dir unionByName, zero jobs.
     out = spark.read.schema(_manifest_schema_from(marker)).parquet(*dirs)
     if removed:
-        rdf = spark.createDataFrame(
-            [(f,) for f in sorted(removed)], "file string"
-        )
-        out = out.join(F.broadcast(rdf), on="file", how="left_anti")
+        # a literal IN list, not an anti join: the join's broadcast is
+        # one more job in every reader of the snapshot (each upsert's
+        # candidate prune) until the next checkpoint; the list is
+        # bounded by the removals since the base checkpoint
+        out = out.filter(~F.col("file").isin(sorted(removed)))
     return out
 
 

@@ -11,8 +11,8 @@ sessionize→commit→dump loop (SURVEY §3 EP1 stages 3–6).
 - T3 offsets: checkpointing + the idempotent sink replace manual
   offset−1 commits (effectively exactly-once).
 - S9 fan-out: one query feeding multiple sinks inside one foreachBatch
-  (the broadcast-channel consumers collapse into sequential writes of
-  the same cached batch).
+  (the broadcast-channel consumers become concurrent upserts of the
+  same cached batch, one per table, each on its own thread).
 
 Cross-micro-batch caveat: a transaction split across two micro-batches
 is grouped into a tree per batch; the insert-if-absent sink then keeps the first
@@ -38,6 +38,7 @@ from ..plans.pipeline import (
     zk_contracts_deduped,
     zk_transactions,
 )
+from ..session import par_legs
 
 TX_KEYS = ["chain_id", "transaction_hash"]
 CONTRACT_KEYS = ["chain_id", "address", "function_signatures"]
@@ -45,6 +46,11 @@ BLOCK_KEYS = ["chain_id", "number"]
 
 
 class UpsertSink(Protocol):  # LakeUpsertSink / the DB-API sinks
+    """Concurrency contract: ``process_trace_batch`` calls ``upsert``
+    for different tables at the same time, from different threads; an
+    implementation must allow that.  Calls for one table never
+    overlap within a query."""
+
     def upsert(
         self, df: DataFrame, table: str, keys, mode: str = "ignore"
     ) -> None: ...
@@ -73,9 +79,15 @@ def process_trace_batch(
     reference's sink-time EIP-55 formatting (P9).
 
     Both outputs read one persisted frame of committed per-transaction
-    trees (``ZkParts``), released once both sinks have consumed it — a
-    stream processes unboundedly many micro-batches, so leaked persists
-    would pile up in executor storage memory."""
+    trees (``ZkParts``).  The two upserts run concurrently: the
+    ``contracts`` upsert on a helper thread that keeps the caller's job
+    group (a stream's ``runId``), beside the ``transactions`` upsert on
+    the calling thread.  Each table commits its own insert-if-absent
+    transaction, so a failed batch replays idempotently whichever leg
+    committed first.  The trees are released once both legs have
+    returned — a stream processes unboundedly many micro-batches, so
+    leaked persists would pile up in executor storage memory — and
+    then the first leg's failure, if any, re-raises."""
     parts = ZkParts(batch)
     try:
         tx = zk_transactions(batch, parts)
@@ -85,8 +97,13 @@ def process_trace_batch(
             contracts = with_checksummed_addresses(
                 contracts, *CONTRACT_ADDRESS_COLS
             )
-        sink.upsert(tx, "transactions", TX_KEYS, mode="ignore")
-        sink.upsert(contracts, "contracts", CONTRACT_KEYS, mode="ignore")
+        par_legs(
+            batch.sparkSession,
+            lambda: sink.upsert(tx, "transactions", TX_KEYS, mode="ignore"),
+            lambda: sink.upsert(
+                contracts, "contracts", CONTRACT_KEYS, mode="ignore"
+            ),
+        )
     finally:
         parts.unpersist()
 

@@ -13,14 +13,22 @@ from __future__ import annotations
 import contextlib
 import io
 import os
+import re
 
 import pytest
+from pyspark import SparkContext
 from pyspark.sql import functions as F
 
 from evmtrace_etl_spark.operators import similarity, text_analysis
 from evmtrace_etl_spark.operators.enrichment import enrich_blocks
+from evmtrace_etl_spark.plans.pipeline import (
+    zk_contracts_deduped,
+    zk_transactions,
+)
+from evmtrace_etl_spark.session import per_context
 from evmtrace_etl_spark.sinks import LakeUpsertSink
 from evmtrace_etl_spark.sources import fixtures
+from evmtrace_etl_spark.streaming.runner import process_trace_batch
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR_SMALL", "/root/testdata/sf0.001")
 
@@ -252,9 +260,11 @@ def test_lake_sink_upsert_job_counts(spark, tmp_path):
     stage counts (structural: they do not move with host load), so a
     change to the sink's transaction protocol cannot add a job
     silently.  A 2-column table partitioned by chain_id takes its
-    first write, then a mode='ignore' and a mode='update' upsert; each
-    runs in its own job group and the stage count sums the jobs'
-    stageIds (skipped stages included)."""
+    first write, then a mode='ignore' and a mode='update' upsert, and
+    one more mode='ignore' upsert, which reads a snapshot whose delta
+    chain carries the update's removed files and must cost no more
+    than the first ignore; each runs in its own job group and the
+    stage count sums the jobs' stageIds (skipped stages included)."""
     sc = spark.sparkContext
     tracker = sc.statusTracker()
     sink = LakeUpsertSink(str(tmp_path / "sink"))
@@ -278,9 +288,76 @@ def test_lake_sink_upsert_job_counts(spark, tmp_path):
         "first": cost("sink_pin_first", rows(0, 100), "ignore"),
         "ignore": cost("sink_pin_ignore", rows(50, 150), "ignore"),
         "update": cost("sink_pin_update", rows(100, 200), "update"),
+        "ignore_after_update": cost(
+            "sink_pin_ignore_after_update", rows(150, 250), "ignore"
+        ),
     }
-    assert got == {"first": (3, 4), "ignore": (8, 11), "update": (8, 11)}
-    assert sink.read(spark, "t").count() == 200
+    assert got == {
+        "first": (3, 4),
+        "ignore": (8, 11),
+        "update": (8, 11),
+        "ignore_after_update": (8, 11),
+    }
+    assert sink.read(spark, "t").count() == 250
+
+
+def _traces(spark, replica: int):
+    """The fixture traces with replica-unique tx hashes and seqs."""
+    rows = [
+        {
+            **r,
+            "transaction_hash": r["transaction_hash"]
+            and f"{r['transaction_hash']}_{replica}",
+            "seq": r["seq"] + 1000 * replica,
+        }
+        for r in fixtures.TRACE_ROWS
+    ]
+    return fixtures.arrow_df(spark, rows, fixtures.TRACE_SCHEMA)
+
+
+def _analyzed(df) -> str:
+    plan = df._jdf.queryExecution().analyzed().toString()
+    return re.sub(r"#\d+L?", "", plan)
+
+
+def test_zk_derivation_is_planned_once_per_context(spark, monkeypatch):
+    """The zk derivation's column expressions are built once per live
+    SparkContext and reused: two different batches analyze to the same
+    plan up to expression ids — lambda-variable names included, which a
+    per-call build draws fresh each time (``x_20`` vs ``x_63``)."""
+    a, b = _traces(spark, 1), _traces(spark, 2)
+    for build in (zk_transactions, zk_contracts_deduped):
+        assert _analyzed(build(a)) == _analyzed(build(b))
+
+    built = []
+    probe = per_context(lambda: built.append(None) or object())
+    first = probe()
+    assert probe() is first and len(built) == 1
+
+    class _OtherContext:
+        pass
+
+    monkeypatch.setattr(SparkContext, "_active_spark_context", _OtherContext())
+    assert probe() is not first and len(built) == 2
+    monkeypatch.undo()
+    assert probe() is first and len(built) == 2
+
+
+def test_warm_trace_batch_compiles_no_classes(spark, tmp_path):
+    """A warm micro-batch reuses every generated class: Spark's codegen
+    cache holds the batch's working set (``session.get_spark`` sizes
+    it), so a batch of fresh rows after two warm ones compiles none."""
+    compiled = (
+        spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+        .METRIC_COMPILATION_TIME()
+    )
+    sink = LakeUpsertSink(str(tmp_path / "sink"))
+    for replica in range(3):  # the first seeds the tables
+        process_trace_batch(_traces(spark, replica), sink)
+    before = compiled.getCount()
+    process_trace_batch(_traces(spark, 3), sink)
+    assert compiled.getCount() - before == 0
+    assert sink.read(spark, "transactions").count() == 4 * 6
 
 
 def test_bucketed_table_joins_without_exchange(spark, docs):

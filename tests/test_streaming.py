@@ -1,13 +1,19 @@
 """Streaming + sink tier: file-source streaming must produce the same
 sink contents as the batch pipeline; upserts must be idempotent; the
 DBAPI sink must emit reference-parity ON CONFLICT semantics (sqlite and
-Postgres share the syntax); decode must round-trip the strict schema."""
+Postgres share the syntax); decode must round-trip the strict schema.
+
+The deep scenario tests are marked ``slow`` (full tier only, see
+tests/conftest.py); the trace fan-out contract runs in the default
+tier."""
 
 from __future__ import annotations
 
 import json
 import os
 import sqlite3
+import threading
+import time
 import urllib.request
 
 import pytest
@@ -24,8 +30,6 @@ from evmtrace_etl_spark.sinks import (
 from evmtrace_etl_spark.sources import fixtures
 from evmtrace_etl_spark.streaming import monitor, runner, sources
 
-# r15: deep scenario module — full-tier only (see tests/conftest.py)
-pytestmark = pytest.mark.slow
 
 
 def _rows(df):
@@ -39,6 +43,7 @@ def traces_json_dir(spark, tmp_path):
     return str(d)
 
 
+@pytest.mark.slow
 def test_stream_matches_batch(spark, traces_json_dir, tmp_path):
     sink = LakeUpsertSink(str(tmp_path / "sink"))
     q = runner.start_zk_stream(
@@ -63,6 +68,96 @@ def test_stream_matches_batch(spark, traces_json_dir, tmp_path):
     assert _rows(sink.read(spark, "contracts")) == _rows(c_batch)
 
 
+class _RecordingSink:
+    """Records each upsert's thread, job group, span and the jobs it
+    ran.  The ``contracts`` leg runs its job while the ``transactions``
+    leg holds, so its job-group delta holds only its own jobs; every
+    leg that does not fail holds ``hold_s`` after its job."""
+
+    def __init__(self, sc, fail: str | None = None, hold_s: float = 1.0):
+        self.sc, self.fail, self.hold_s = sc, fail, hold_s
+        self.calls: dict[str, dict] = {}
+        self._tx_counted = threading.Event()
+
+    def upsert(self, df, table, keys, mode="ignore"):
+        tracker = self.sc.statusTracker()
+        rec = self.calls[table] = {
+            "thread": threading.get_ident(),
+            "group": self.sc.getLocalProperty("spark.jobGroup.id"),
+            "start": time.perf_counter(),
+        }
+        try:
+            if table == "contracts" and not self._tx_counted.wait(30):
+                raise RuntimeError("the transactions leg never ran")
+            if table == self.fail:
+                raise RuntimeError(f"{table} leg failed")
+            before = set(tracker.getJobIdsForGroup(rec["group"]))
+            rec["rows"] = df.count()
+            rec["jobs"] = set(tracker.getJobIdsForGroup(rec["group"])) - before
+            if table == "transactions":
+                self._tx_counted.set()
+            time.sleep(self.hold_s)
+        finally:
+            self._tx_counted.set()
+            rec["end"] = time.perf_counter()
+
+
+@pytest.mark.parametrize("fail", [None, "transactions", "contracts"])
+def test_trace_batch_fans_out_upserts(
+    spark, traces_json_dir, tmp_path, monkeypatch, fail
+):
+    """Inside a real foreachBatch, ``process_trace_batch`` runs the
+    two table upserts concurrently: the contracts upsert on a helper
+    thread whose jobs stay in the query's ``runId`` job group, the
+    batch leaves only after both legs returned (also when either leg
+    fails, whose error then surfaces), and the tree frame is
+    unpersisted after both legs."""
+    sc = spark.sparkContext
+    sink = _RecordingSink(sc, fail=fail)
+    seen: dict = {}
+
+    class RecordingParts(runner.ZkParts):
+        def unpersist(self):
+            super().unpersist()
+            seen["unpersisted"] = time.perf_counter()
+            seen["cached"] = self.trees.is_cached
+
+    batch_fn = runner.process_trace_batch
+
+    def recording_batch(batch, sink, checksum=True):
+        seen["thread"] = threading.get_ident()
+        try:
+            batch_fn(batch, sink, checksum)
+        finally:
+            seen["left"] = time.perf_counter()
+
+    monkeypatch.setattr(runner, "ZkParts", RecordingParts)
+    monkeypatch.setattr(runner, "process_trace_batch", recording_batch)
+    q = runner.start_zk_stream(
+        sources.file_trace_stream(spark, traces_json_dir),
+        sink,
+        checkpoint_dir=str(tmp_path / "ckpt"),
+    )
+    if fail is None:
+        q.awaitTermination(120)
+        assert q.exception() is None
+    else:
+        with pytest.raises(Exception, match=f"{fail} leg failed"):
+            q.awaitTermination(120)
+
+    tx, ct = sink.calls["transactions"], sink.calls["contracts"]
+    assert tx["thread"] == seen["thread"] != ct["thread"]
+    assert tx["group"] == ct["group"] == str(q.runId)
+    last_leg = max(tx["end"], ct["end"])
+    assert seen["unpersisted"] >= last_leg and seen["cached"] is False
+    assert seen["left"] >= seen["unpersisted"]
+    if fail is None:
+        assert tx["start"] < ct["end"] and ct["start"] < tx["end"]
+        assert tx["rows"] == 6 and ct["rows"] == 8
+        assert ct["jobs"]  # the helper's own jobs, in the runId group
+
+
+@pytest.mark.slow
 def test_stream_idempotent_replay(spark, traces_json_dir, tmp_path):
     sink = LakeUpsertSink(str(tmp_path / "sink"))
     for i in range(2):  # same data replayed with a fresh checkpoint
@@ -76,6 +171,7 @@ def test_stream_idempotent_replay(spark, traces_json_dir, tmp_path):
     assert sink.read(spark, "transactions").count() == tx_batch.count()
 
 
+@pytest.mark.slow
 def test_block_stream_upsert(spark, tmp_path):
     d = tmp_path / "blocks_json"
     fixtures.blocks_df(spark).coalesce(1).write.json(str(d))
@@ -99,6 +195,7 @@ def test_block_stream_upsert(spark, tmp_path):
     )
 
 
+@pytest.mark.slow
 def test_decode_payloads_roundtrip(spark):
     """S3: JSON payload → strict-schema decode reproduces the fixture
     (chain 1 rows; seq from the simulated offset column)."""
@@ -116,6 +213,7 @@ def test_decode_payloads_roundtrip(spark):
     assert _rows(decoded) == _rows(src)
 
 
+@pytest.mark.slow
 def test_dbapi_sink_on_conflict(spark):
     tx = zk_transactions(fixtures.traces_df(spark))
     conn = sqlite3.connect(":memory:", check_same_thread=False)
@@ -148,6 +246,7 @@ def test_dbapi_sink_on_conflict(spark):
     assert conn.execute("SELECT gas_used FROM blocks").fetchall() == [(9,)]
 
 
+@pytest.mark.slow
 def test_dbapi_sink_on_conflict_duckdb_dialect(spark, tmp_path):
     """Second-dialect verification (r6 verdict ask): the exact
     ``INSERT … ON CONFLICT`` strings `_upsert_sql` generates (mirroring
@@ -188,6 +287,7 @@ def test_dbapi_sink_on_conflict_duckdb_dialect(spark, tmp_path):
     conn.close()
 
 
+@pytest.mark.slow
 def test_dbapi_partition_sink_duckdb_file(spark, tmp_path):
     """The executor-side partition sink against a DuckDB database file.
     DuckDB is single-writer per file, so write parallelism is capped at
@@ -231,6 +331,7 @@ class _NoCloseConn:
         pass
 
 
+@pytest.mark.slow
 def test_parquet_upsert_ignore_mode_partitioned(spark, tmp_path):
     """insert-if-absent across partitions: replayed keys are skipped,
     new keys land in their partition."""
@@ -252,6 +353,7 @@ def test_parquet_upsert_ignore_mode_partitioned(spark, tmp_path):
     assert got == {(1, "a"): 1, (2, "b"): 2, (1, "c"): 3}
 
 
+@pytest.mark.slow
 def test_parquet_upsert_schema_evolution_add_only(spark, tmp_path):
     """ADD-ONLY schema evolution: a batch carrying a NEW column evolves
     the table (old rows — including untouched partitions whose parquet
@@ -343,6 +445,7 @@ def test_parquet_upsert_schema_evolution_add_only(spark, tmp_path):
     assert sink.read(spark, "blocks").count() == 10
 
 
+@pytest.mark.slow
 def test_dbapi_partition_sink_matches_collect(spark, tmp_path):
     """The foreachPartition writer must produce the same table as the
     driver-collect writer, and stay idempotent under replay."""
@@ -379,6 +482,7 @@ def test_dbapi_partition_sink_matches_collect(spark, tmp_path):
     assert os.path.exists(part_db)
 
 
+@pytest.mark.slow
 def test_kafka_stream_smoke(spark, tmp_path):
     """S1 against a real broker — opt-in via EVMTRACE_KAFKA_BOOTSTRAP.
 
@@ -402,6 +506,7 @@ def test_kafka_stream_smoke(spark, tmp_path):
     assert sink.read(spark, "transactions") is not None
 
 
+@pytest.mark.slow
 def test_monitoring_and_health(spark):
     stats = monitor.EngineStats()
     monitor.record_batch_heads(stats, fixtures.traces_df(spark), "trace")
@@ -426,6 +531,7 @@ def test_monitoring_and_health(spark):
         server.shutdown()
 
 
+@pytest.mark.slow
 def test_decode_payloads_split_quarantines_bad_json(spark):
     """S3 bad-record routing: malformed payloads land in the quarantine
     output with their raw bytes; good rows decode exactly as the
@@ -448,6 +554,7 @@ def test_decode_payloads_split_quarantines_bad_json(spark):
     assert bad.columns == ["chain_id", "raw_payload", "seq"]
 
 
+@pytest.mark.slow
 def test_watermark_drops_closed_windows_keeps_open_ones(spark, tmp_path):
     """Late-data semantics pinned: after the watermark passes a window's
     end, late rows for it are DROPPED; late rows for a still-open
@@ -545,6 +652,7 @@ def test_watermark_drops_closed_windows_keeps_open_ones(spark, tmp_path):
     assert (ts(t0 + int(11 * h)).hour, 1) in got
 
 
+@pytest.mark.slow
 def test_stream_dedup_state_rejects_replay(spark, tmp_path):
     """The streaming dropDuplicates STATE must reject the replayed
     batch — zero rows may reach the sink in batch 2.  (The sink's own
@@ -598,6 +706,7 @@ def test_stream_dedup_state_rejects_replay(spark, tmp_path):
     assert sizes.get(1, 0) == 0   # replay fully rejected by state
 
 
+@pytest.mark.slow
 def test_stream_dedup_within_watermark_expires_state(spark, tmp_path):
     """Pins the documented unbounded-feed variant of the streaming
     dedup: dropDuplicatesWithinWatermark keeps a fingerprint's state
@@ -679,6 +788,7 @@ def test_stream_dedup_within_watermark_expires_state(spark, tmp_path):
     assert emitted.get(3) == 1
 
 
+@pytest.mark.slow
 def test_workdir_reaper_spares_live_nested_writers(tmp_path, monkeypatch):
     """The age-based reap must key off the NEWEST mtime in the tree: a
     long-lived owner (a streaming run) writes into nested checkpoint
@@ -715,6 +825,7 @@ def test_workdir_reaper_spares_live_nested_writers(tmp_path, monkeypatch):
     assert not stale.exists()
 
 
+@pytest.mark.slow
 def test_stream_throughput_probe(spark):
     """The bench's rows/sec probe: paced availableNow drain through the
     full foreachBatch pipeline; pacing must split the backlog into
@@ -729,6 +840,7 @@ def test_stream_throughput_probe(spark):
     assert out["rows_per_sec"] > 0
 
 
+@pytest.mark.slow
 def test_stream_resumes_from_checkpoint_without_reprocessing(spark, tmp_path):
     """T3 — offset-commit recovery over a SHARED checkpoint (the leg
     the fresh-checkpoint replay test above deliberately does NOT
@@ -789,6 +901,7 @@ def test_stream_resumes_from_checkpoint_without_reprocessing(spark, tmp_path):
     assert _rows(sink.read(spark, "contracts")) == _rows(c_batch)
 
 
+@pytest.mark.slow
 def test_in_band_maintenance_surfaces_on_health(spark, tmp_path):
     """T6/T7 observability for maintain_every (r13 left the ledger
     dying inside the foreachBatch closure): the lake append stream's
