@@ -1,14 +1,22 @@
-"""Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
+"""Benchmark harness: runs every registry query at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
-JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec, ...}, "sf": ...}.
+JSON line, also written whole to $SPARK_GRAFT_BENCH_OUT (default
+bench_out.json next to this file):
+
+    {"metric": "headline_queries_total", "value": total_sec, "unit": "sec",
+     "queries": {name: sec}, "counts": {name: {"jobs": n, "stages": n}},
+     "attempted": n, "failed": [name, ...], "sf": ..., "passes": 2}
 
 Each query is forced end-to-end with a noop-format write (full
-materialization, no driver collect overhead). Timings are per-query wall
-clock after a shared SparkSession warm-up — min over
-$SPARK_GRAFT_BENCH_PASSES (default 2) full passes, which absorbs both
-one-time codegen/fixture cost (lands in pass 1) and hypervisor-steal
-windows (rarely hit the same query in both passes).
+materialization, no driver collect overhead).  Timings are per-query wall
+clock after a shared SparkSession warm-up, min over ``PASSES`` full
+passes.  ``counts`` are the Spark jobs (and the stages they list, skipped
+ones included) issued while the query ran in the last pass.  A query
+that raises in any pass is named in ``failed``, recorded as -1 in
+``queries`` and left out of ``value``.
+
+The paper's streaming path (trace stream → zk derivation → upserts) is
+measured, output-checked, by ``perfbench/``.
 """
 
 from __future__ import annotations
@@ -22,355 +30,143 @@ REPO = os.path.dirname(os.path.abspath(__file__))
 if REPO not in sys.path:
     sys.path.insert(0, REPO)
 
-
-#: Absolute floor (rows/sec) for the curve's LAST point — set well under
-#: every observed run (12.3k driver / 13.5k clean / 5.6k on a saturated
-#: host at fpt=16) but above any real pacing collapse; the primary gate
-#: is the SHAPE.
-STREAM_LAST_POINT_FLOOR = 4000.0
-
-#: The last point must beat the first by at least this factor: a healthy
-#: paced stream amortizes fixed trigger cost, so throughput RISES with
-#: files_per_trigger.  Calibration data — quiet-host runs measure
-#: 2.6-9.8x; ONE end-of-bench saturated-host run measured 1.80x on code
-#: whose isolated re-probe did 3.6-7.1x, so the floor sits between the
-#: degraded-host band and a genuinely flat curve (~1.0-1.2x).
-STREAM_SCALING_FLOOR = 1.5
-
-#: Adjacent points may jiggle DOWN by this fraction before the curve
-#: counts as non-monotonic — fpt=8 and fpt=16 both saturate a loaded
-#: host and have measured a 1.8% inversion on healthy pacing.
-STREAM_MONO_TOLERANCE = 0.10
+# Two-pass methodology, per-query MIN over both passes.  Pass 1 absorbs
+# one-time per-session costs — Janino compiles of giant inlined-codebook
+# expressions (measured 9-29 s per distinct literal set), first-stream
+# setup, lazily-built memoized fixtures — which land on whichever query
+# runs first and have repeatedly masqueraded as 6-10x plan regressions
+# in single-pass benches (llm_ivf_trained_recall 24.4 s vs 3.4 s warm,
+# zk_upsert_partition 46.5 s vs 2.8 s warm).  A query whose pass 2
+# landed in a hypervisor-steal window (measured: a contiguous
+# alphabetical run 2.6 s -> 52 s under sustained steal) reports its
+# clean pass-1 time.  Plans are deterministic, so the re-built pass-2
+# plan hits the codegen cache and measures the steady state.
+PASSES = 2
 
 
-def curve_shape_gate(points: list[dict], enforce_floor: bool = True) -> dict:
-    """Regression gate on the streaming curve's SHAPE, not its absolute
-    level (the fpt=4 point swings 1.25k-3.3k rows/s with host noise;
-    the rising shape and the fpt=16 level are stable across runs):
-    (1) rows/sec non-decreasing in files_per_trigger within
-    STREAM_MONO_TOLERANCE, (2) last point ≥ STREAM_SCALING_FLOOR x
-    first point, (3) last point ≥ STREAM_LAST_POINT_FLOOR rows/s
-    (absolute — calibrated for the standard fixture size, so callers
-    running a downsized smoke pass ``enforce_floor=False`` and keep
-    the shape checks only)."""
-    rates = [p["rows_per_sec"] for p in points]
-    monotonic = all(
-        b >= (1.0 - STREAM_MONO_TOLERANCE) * a
-        for a, b in zip(rates, rates[1:])
-    )
-    scaling = rates[-1] >= STREAM_SCALING_FLOOR * rates[0] if len(rates) > 1 else True
-    floor = (not enforce_floor) or rates[-1] >= STREAM_LAST_POINT_FLOOR
+def _next_job_id(sc) -> int:
+    # no public API lists every job across job groups; the scheduler's
+    # id counter does
+    return sc._jsc.sc().dagScheduler().nextJobId()
+
+
+def _jobs_since(sc, first: int) -> dict:
+    """Jobs issued since job id ``first``, and the stages they list
+    (skipped ones included).  Job ids are global and increase, and one
+    query runs at a time, so these are that query's jobs — including the
+    micro-batch jobs a stream runs under its own job group."""
+    # the status store is filled from the listener bus asynchronously
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    ids = range(first, _next_job_id(sc))
+    tracker = sc.statusTracker()
     return {
-        "monotonic": monotonic,
-        "mono_tolerance": STREAM_MONO_TOLERANCE,
-        "scaling_ok": scaling,
-        "scaling_floor": STREAM_SCALING_FLOOR,
-        "last_point_ok": floor,
-        "last_point_floor_rows_per_sec": STREAM_LAST_POINT_FLOOR,
-        "pass": monotonic and scaling and floor,
+        "jobs": len(ids),
+        "stages": sum(len(tracker.getJobInfo(j).stageIds) for j in ids),
     }
 
 
-def suspect_points(points: list[dict], enforce_floor: bool = True) -> list[int]:
-    """Indices of the measurements implicated in a violated shape
-    constraint — the candidates a single mid-run host stall could
-    explain: any point that DROPPED >tolerance below its predecessor
-    (the classic stalled middle point), and the endpoints when scaling
-    or the absolute floor failed (a stalled tail, or an anomalous
-    head)."""
-    rates = [p["rows_per_sec"] for p in points]
-    sus: set[int] = set()
-    for i in range(1, len(rates)):
-        if rates[i] < (1.0 - STREAM_MONO_TOLERANCE) * rates[i - 1]:
-            sus.add(i)
-    if len(rates) > 1 and rates[-1] < STREAM_SCALING_FLOOR * rates[0]:
-        sus.update({0, len(rates) - 1})
-    if enforce_floor and rates[-1] < STREAM_LAST_POINT_FLOOR:
-        sus.add(len(rates) - 1)
-    return sorted(sus)
+def run_queries(spark, qs: dict, sf_dir: str) -> dict[str, list[dict]]:
+    """Run every query in ``qs`` (name → ``fn(spark, sf_dir)``) once per
+    pass, in name order.  Returns ``{name: [run, ...]}`` with one run per
+    pass: ``{"seconds", "jobs", "stages"}``, or ``{"error"}`` if the
+    query raised."""
+    sc = spark.sparkContext
+    runs: dict[str, list[dict]] = {name: [] for name in qs}
+    for _ in range(PASSES):
+        for name in sorted(qs):
+            first = _next_job_id(sc)
+            t0 = time.perf_counter()
+            try:
+                df = qs[name](spark, sf_dir)
+                df.write.format("noop").mode("overwrite").save()
+                run = {"seconds": round(time.perf_counter() - t0, 4)}
+            except Exception as exc:
+                print(f"bench: {name} failed: {exc}", file=sys.stderr)
+                run = {"error": str(exc)}
+            run.update(_jobs_since(sc, first))
+            runs[name].append(run)
+            # Intra-plan persists (ZkParts, LSH signatures) are useful
+            # within a query but would pile up across the suite — drop
+            # them between runs.
+            spark.catalog.clearCache()
+    return runs
 
 
-def reprobe_curve(
-    points: list[dict], reprobe, enforce_floor: bool = True
-) -> tuple[list[dict], dict]:
-    """Self-defending shape gate: a mid-run hypervisor stall can fail
-    one point of an otherwise healthy curve (observed: BENCH_r12
-    recorded fpt=8 at 42.4 s for 2 micro-batches while the full fpt=16
-    drain took 13.9 s — a re-probe on a quiet host passed 3.7x).  On a
-    failed gate, each suspect point is re-probed ONCE via
-    ``reprobe(files_per_trigger) -> point dict``; the FASTER
-    measurement wins per point (host noise only ever SLOWS a drain, so
-    max-rate is the unbiased estimator), BOTH measurements are
-    recorded under ``retries`` for the round artifact, and the gate
-    fails only if the re-probed curve still fails.  Passing curves
-    never re-probe — zero added cost on the healthy path."""
-    first = curve_shape_gate(points, enforce_floor=enforce_floor)
-    if first["pass"]:
-        return list(points), first
-    retries: dict[str, dict] = {}
-    final = list(points)
-    for i in suspect_points(points, enforce_floor=enforce_floor):
-        fpt = points[i]["files_per_trigger"]
+def document(runs: dict[str, list[dict]], sf_dir: str) -> dict:
+    """The bench's output document from ``run_queries``' result."""
+    failed = sorted(n for n, rs in runs.items() if any("error" in r for r in rs))
+    ok = {n: rs for n, rs in runs.items() if n not in failed}
+    timings = {n: min(r["seconds"] for r in rs) for n, rs in ok.items()}
+    sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
+    return {
+        "metric": "headline_queries_total",
+        "value": round(sum(timings.values()), 4),
+        "unit": "sec",
+        "queries": {n: timings.get(n, -1.0) for n in sorted(runs)},
+        "counts": {
+            n: {"jobs": rs[-1]["jobs"], "stages": rs[-1]["stages"]}
+            for n, rs in sorted(ok.items())
+        },
+        "attempted": len(runs),
+        "failed": failed,
+        "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
+        "passes": PASSES,
+    }
+
+
+def _warm_up(spark, qs: dict, sf_dir: str, cpus: int) -> None:
+    """Pay the session's one-time costs before any query is timed."""
+
+    def _python_workers() -> None:
+        # daemon workers spawn lazily on the first Python-involving
+        # stage (~5-7 s for a full local[32] pool), which would
+        # otherwise be billed to whichever Arrow query runs first
+        spark.range(cpus * 4).repartition(cpus).mapInPandas(
+            lambda it: it, "id long"
+        ).count()
+
+    def _replay_fixture() -> None:
+        # the upsert-pair queries share this memoized pipeline
+        # materialization; without it, whichever of the pair runs first
+        # bills ~4 s of shared harness setup to a sink measurement
+        from evmtrace_etl_spark.plans.sink_parity import _replay_batches
+
+        _replay_batches(spark)
+
+    steps = {
+        "jvm": lambda: qs["inv_props_selector"](spark, sf_dir).count(),
+        "python_workers": _python_workers,
+        "replay_fixture": _replay_fixture,
+    }
+    for step, fn in steps.items():
         try:
-            again = reprobe(fpt)
-        except Exception as exc:  # pragma: no cover - env failure
-            retries[str(fpt)] = {"first": points[i], "reprobe_error": str(exc)}
-            continue
-        retries[str(fpt)] = {"first": points[i], "reprobe": again}
-        if again["rows_per_sec"] > final[i]["rows_per_sec"]:
-            final[i] = again
-    gate = curve_shape_gate(final, enforce_floor=enforce_floor)
-    gate["first_attempt"] = first
-    gate["retries"] = retries
-    return final, gate
-
-
-#: Re-probe an anomalously slow FIRST curve point even on a PASSING
-#: gate when it recorded under this fraction of the previous round's
-#: same-fixture head rate: the r13 artifact passed its shape gate with
-#: fpt=4 at 1,264 rows/s vs r12's 3,802 — host-band noise, but a
-#: future artifact reader could misread the absolute level as a pacing
-#: regression.  One extra probe disambiguates; both measurements are
-#: recorded.
-HEAD_REPROBE_FACTOR = 0.5
-
-_POINT_RE = (
-    r'\{"seconds": ([0-9.]+), "rows_per_sec": ([0-9.]+), '
-    r'"micro_batches": [0-9]+, "files_per_trigger": ([0-9]+)\}'
-)
-
-
-#: How many recent BENCH artifacts the head-anomaly baseline spans.
-#: Using only the NEWEST round would self-poison: once one stalled
-#: head is recorded (r13's 1,264 vs r12's 3,802), every later stall
-#: compares against the stalled level and never re-probes.  The MAX
-#: over a short window anchors the baseline to the healthy level.
-HEAD_BASELINE_ROUNDS = 5
-
-
-def prev_head_rate(repo_dir: str, fpt: int) -> float | None:
-    """The healthy-baseline rows/sec for the SAME ``files_per_trigger``
-    point: the MAX recorded over the newest ``HEAD_BASELINE_ROUNDS``
-    ``BENCH_r*.json`` artifacts (host noise only ever slows a drain, so
-    max-over-recent is the unbiased healthy level and cannot be
-    poisoned by one recorded stall).  None when no artifact / no
-    matching point parses.  Driver artifacts store only a truncated
-    ``tail`` of the bench JSON line, so this parses point dicts by
-    regex instead of loading the document."""
-    import glob
-    import re
-
-    tails: list[tuple[int, str]] = []
-    for p in glob.glob(os.path.join(repo_dir, "BENCH_r*.json")):
-        m = re.search(r"BENCH_r(\d+)\.json$", os.path.basename(p))
-        if m is None:
-            continue
-        try:
-            with open(p) as fh:
-                doc = json.load(fh)
-        except (OSError, ValueError):
-            continue
-        tail = doc.get("tail") if isinstance(doc, dict) else None
-        if isinstance(tail, str):
-            tails.append((int(m.group(1)), tail))
-    best: float | None = None
-    for _rnd, tail in sorted(tails)[-HEAD_BASELINE_ROUNDS:]:
-        for _sec, rate, f in re.findall(_POINT_RE, tail):
-            if int(f) == int(fpt):
-                r = float(rate)
-                best = r if best is None or r > best else best
-    return best
-
-
-def head_anomalous(
-    points: list[dict], prev_rate: float | None,
-    factor: float = HEAD_REPROBE_FACTOR,
-) -> bool:
-    """Whether the curve's FIRST point is anomalously slow relative to
-    the previous round's same-fixture rate — the pure decision
-    ``main`` acts on (re-probe once even though the gate passed)."""
-    if not points or prev_rate is None or prev_rate <= 0:
-        return False
-    return points[0]["rows_per_sec"] < factor * float(prev_rate)
+            fn()
+        except Exception as exc:
+            print(f"bench: warm-up {step} failed: {exc}", file=sys.stderr)
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or (os.cpu_count() or 4)
 
+    from evmtrace_etl_spark import registry
     from evmtrace_etl_spark.session import get_spark
 
     spark = get_spark(app_name="evmtrace_bench", cpus=cpus,
                       shuffle_partitions=cpus)
-
-    from evmtrace_etl_spark import registry
-
     qs = registry.queries()
-
-    # Warm up the JVM + parquet footer caches with the cheapest query.
-    try:
-        qs["inv_props_selector"](spark, sf_dir).count()
-    except Exception:
-        pass
-
-    # Warm up the Python/Arrow worker pool too — daemon workers spawn
-    # lazily on the first Python-involving stage (~5-7 s for a full
-    # local[32] pool), which would otherwise be billed to whichever
-    # Arrow query happens to run first instead of the harness.
-    try:
-        from pyspark.sql import functions as F
-
-        (
-            spark.range(cpus * 4)
-            .repartition(cpus)
-            .mapInPandas(lambda it: it, "id long")
-            .count()
+    _warm_up(spark, qs, sf_dir, cpus)
+    doc = document(run_queries(spark, qs, sf_dir), sf_dir)
+    if doc["failed"]:
+        print(
+            f"bench: {len(doc['failed'])} of {doc['attempted']} queries "
+            f"failed: {', '.join(doc['failed'])}",
+            file=sys.stderr,
         )
-    except Exception:
-        pass
-
-    # Pre-warm the memoized zk replay batches: the upsert-pair queries
-    # share this pipeline materialization as a fixture; without the
-    # pre-warm, whichever of the pair runs first bills ~4 s of shared
-    # harness setup to a sink measurement.
-    try:
-        from evmtrace_etl_spark.plans.sink_parity import _replay_batches
-
-        _replay_batches(spark)
-    except Exception:
-        pass
-
-    # Two-pass methodology, per-query MIN over both passes.  Pass 1
-    # absorbs one-time per-session costs — Janino compiles of giant
-    # inlined-codebook expressions (measured 9-29 s per distinct
-    # literal set), first-stream setup, lazily-built memoized fixtures
-    # — which land on whichever query runs first and have repeatedly
-    # masqueraded as 6-10x plan regressions in single-pass benches
-    # (llm_ivf_trained_recall 24.4 s vs 3.4 s warm, zk_upsert_partition
-    # 46.5 s vs 2.8 s warm, llm_dedup_components 22.0 s vs 5.1 s warm).
-    # Pass 1 is ALSO timed and the reported figure is min(p1, p2): a
-    # query whose pass 1 carried one-time cost reports its clean pass-2
-    # time, and a query whose pass 2 landed in a hypervisor-steal
-    # window (measured: a contiguous alphabetical run 2.6 s -> 52 s
-    # under sustained steal) reports its clean pass-1 time — same total
-    # wall as discarding pass 1, strictly less noise.  Plans are
-    # deterministic, so the re-built pass-2 plan hits the codegen cache
-    # and measures the steady state.  Set SPARK_GRAFT_BENCH_PASSES=1
-    # for the old single-pass behavior.
-    passes = int(os.environ.get("SPARK_GRAFT_BENCH_PASSES", "2"))
-    timings: dict[str, float] = {}
-    for p in range(passes):
-        for name in sorted(qs):
-            fn = qs[name]
-            t0 = time.perf_counter()
-            try:
-                df = fn(spark, sf_dir)
-                df.write.format("noop").mode("overwrite").save()
-                t = round(time.perf_counter() - t0, 4)
-                prev = timings.get(name)
-                timings[name] = (
-                    t if prev is None or prev < 0 else min(prev, t)
-                )
-            except Exception as exc:  # pragma: no cover
-                timings.setdefault(name, -1.0)
-                print(f"bench: {name} failed: {exc}", file=sys.stderr)
-            # Intra-plan persists (ZkParts, LSH signatures) are useful
-            # within a query but would pile up across the suite — drop
-            # them between runs.
-            spark.catalog.clearCache()
-
-    # Streaming throughput SCALING CURVE (rows/sec through the paced
-    # file-stream + foreachBatch zk pipeline at files_per_trigger in
-    # {4, 8, 16}; fixture built once, one timed drain per point) —
-    # reported alongside, NOT added to the query total, so cross-round
-    # query-set comparisons stay clean.  The fpt=4 point is surfaced
-    # top-level for comparability with the single-point probes of
-    # earlier rounds.
-    try:
-        from evmtrace_etl_spark.plans.sink_parity import (
-            stream_throughput_curve,
-        )
-
-        rep = int(os.environ.get("SPARK_GRAFT_STREAM_REP", "3000"))
-        pts = tuple(
-            int(p)
-            for p in os.environ.get(
-                "SPARK_GRAFT_STREAM_POINTS", "4,8,16"
-            ).split(",")
-        )
-        streaming = stream_throughput_curve(spark, replicate=rep, points=pts)
-        full_size = rep >= 3000  # absolute floor calibrated for this
-
-        # self-defense against mid-run host stalls: re-probe a failing
-        # point once before recording failure (see reprobe_curve)
-        def _reprobe_one(fpt: int) -> dict:
-            return stream_throughput_curve(
-                spark, replicate=rep, points=(int(fpt),)
-            )["points"][0]
-
-        final_pts, gate = reprobe_curve(
-            streaming["points"], _reprobe_one, enforce_floor=full_size
-        )
-        streaming["points"] = final_pts
-
-        # head self-defense on PASSING curves too: a stalled first
-        # point passes the shape gate (the shape held) but records an
-        # absolute level a reader could misread as a pacing
-        # regression — re-probe it once against the previous round's
-        # same-fixture rate, record BOTH, keep the faster (host noise
-        # only ever slows a drain)
-        prev = prev_head_rate(REPO, final_pts[0]["files_per_trigger"])
-        if gate.get("pass") and head_anomalous(final_pts, prev):
-            try:
-                again = _reprobe_one(final_pts[0]["files_per_trigger"])
-                streaming["head_reprobe"] = {
-                    "prev_round_rate": prev,
-                    "first": final_pts[0],
-                    "reprobe": again,
-                }
-                if again["rows_per_sec"] > final_pts[0]["rows_per_sec"]:
-                    final_pts[0] = again
-            except Exception as exc:  # pragma: no cover - env failure
-                streaming["head_reprobe"] = {
-                    "prev_round_rate": prev,
-                    "first": final_pts[0],
-                    "reprobe_error": str(exc),
-                }
-        head = streaming["points"][0]
-        streaming.update(
-            {
-                "seconds": head["seconds"],
-                "rows_per_sec": head["rows_per_sec"],
-                "micro_batches": head["micro_batches"],
-                "files_per_trigger": head["files_per_trigger"],
-                "shape_gate": gate,
-            }
-        )
-        if not streaming["shape_gate"]["pass"]:
-            print(
-                f"bench: STREAMING SHAPE GATE FAILED: "
-                f"{streaming['shape_gate']}",
-                file=sys.stderr,
-            )
-    except Exception as exc:  # pragma: no cover
-        streaming = {"error": str(exc)}
-        print(f"bench: stream_throughput failed: {exc}", file=sys.stderr)
-
-    ok = {k: v for k, v in timings.items() if v >= 0}
-    sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
-    doc = {
-        "metric": "headline_queries_total",
-        "value": round(sum(ok.values()), 4),
-        "unit": "sec",
-        "queries": timings,
-        "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
-        "passes": passes,
-        "streaming": streaming,
-    }
     # The stdout line is the driver contract; artifacts built from a
     # clipped stdout tail have twice lost the per-query map (BENCH_r13
     # recorded "parsed": null), so ALSO write the full document to a
-    # file a reader can load whole.  Path overridable for tests.
+    # file a reader can load whole.
     out_path = os.environ.get(
         "SPARK_GRAFT_BENCH_OUT", os.path.join(REPO, "bench_out.json")
     )

@@ -331,147 +331,6 @@ def spark_upsert_blocks(spark: SparkSession, sf_dir: str = "") -> DataFrame:
     return sink.read(spark, "blocks")
 
 
-def stream_throughput(
-    spark: SparkSession,
-    replicate: int = 3000,
-    n_files: int = 16,
-    files_per_trigger: int = 4,
-) -> dict:
-    """Streaming throughput probe for the bench harness — the missing
-    rows/sec figure for the R3/R4/T1/T2 streaming legs (correctness is
-    driver-verified; this measures sustained micro-batch rate).
-
-    The 33-row trace fixture is replicated ``replicate``× with distinct
-    transaction hashes (whole tx trees stay intact, so the per-tx
-    sessionization does real work), written as ``n_files`` JSON files,
-    and drained by an ``availableNow`` stream paced to
-    ``files_per_trigger`` files per micro-batch — the file-source analog
-    of Kafka ``maxOffsetsPerTrigger`` — through the full foreachBatch zk
-    pipeline into the lake upsert sink.
-
-    Returns ``{rows, seconds, rows_per_sec, micro_batches, ...}`` for
-    the bench JSON line.  Fixture-building and source-file writing are
-    NOT timed; the stream (decode → sessionize → derive → upsert) is.
-    """
-    base = _workdir("stream_tput")
-    src, n_rows, expected = _tput_fixture(spark, base, replicate, n_files)
-    point = _tput_drain(
-        spark, base, src, n_rows, expected, files_per_trigger
-    )
-    point["rows"] = n_rows
-    point["files"] = n_files
-    return point
-
-
-def stream_throughput_curve(
-    spark: SparkSession,
-    replicate: int = 3000,
-    n_files: int = 16,
-    points: tuple = (4, 8, 16),
-) -> dict:
-    """The SCALING CURVE the single-point probe can't show: the same
-    replicated fixture drained once per ``files_per_trigger`` pacing
-    point, isolating how much of the single-point figure is fixed
-    per-trigger overhead (checkpoint commit, plan setup, sink commit) vs
-    per-row work.  Fixture replication/writing is untimed and
-    paid ONCE; each point gets a fresh checkpoint + sink so the drains
-    are independent.
-
-    Returns ``{rows, files, points: [{files_per_trigger, seconds,
-    rows_per_sec, micro_batches}, ...]}``."""
-    base = _workdir("stream_tput_curve")
-    src, n_rows, expected = _tput_fixture(spark, base, replicate, n_files)
-    return {
-        "rows": n_rows,
-        "files": n_files,
-        "points": [
-            _tput_drain(spark, base, src, n_rows, expected, fpt)
-            for fpt in points
-        ],
-    }
-
-
-def _tput_fixture(
-    spark: SparkSession, base: str, replicate: int, n_files: int
-) -> tuple:
-    """Write the replicated trace fixture as ``n_files`` JSON files
-    (untimed harness setup shared by every pacing point).  Each file
-    holds whole transaction trees, so every pacing point commits the
-    single-batch result; returns ``(src, n_rows, expected)`` with
-    ``expected`` the sink's row count per table after a drain."""
-    src = os.path.join(base, "src")
-    traces = fixtures.traces_df(spark)
-    keep_hash = F.col("transaction_hash").isNotNull()
-    wide = (
-        traces.crossJoin(
-            spark.range(replicate).select(F.col("id").alias("_rep"))
-        )
-        .withColumn(
-            "transaction_hash",
-            F.when(
-                keep_hash,
-                F.concat_ws("_", "transaction_hash", "_rep"),
-            ),
-        )
-        .drop("_rep")
-    )
-    wide.repartition(n_files, "transaction_hash").write.json(src)
-    n_rows = traces.count() * replicate  # untimed: fixture-sized count
-    # replicas carry distinct tx hashes but the same contract keys
-    expected = {
-        "transactions": zk_transactions(traces).count() * replicate,
-        "contracts": zk_contracts_deduped(traces).count(),
-    }
-    return src, n_rows, expected
-
-
-def _tput_drain(
-    spark: SparkSession,
-    base: str,
-    src: str,
-    n_rows: int,
-    expected: dict,
-    files_per_trigger: int,
-) -> dict:
-    """One timed availableNow drain of ``src`` through the full
-    foreachBatch zk pipeline into a fresh lake upsert sink; raises
-    (after the timing) unless the sink holds ``expected`` rows."""
-    tag = f"fpt{files_per_trigger}"
-    sink = LakeUpsertSink(os.path.join(base, f"sink_{tag}"))
-    batches = [0]
-
-    def _process(batch: DataFrame, _batch_id: int) -> None:
-        batches[0] += 1
-        runner.process_trace_batch(batch, sink, checksum=False)
-
-    t0 = _time.perf_counter()
-    q = (
-        sources.file_trace_stream(
-            spark, src, max_files_per_trigger=files_per_trigger
-        )
-        .writeStream.foreachBatch(_process)
-        .option("checkpointLocation", os.path.join(base, f"ckpt_{tag}"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(600):
-        q.stop()
-        raise TimeoutError("stream_throughput: not finished after 600 s")
-    dt = _time.perf_counter() - t0
-    got = {t: sink.read(spark, t).count() for t in expected}
-    if got != expected:
-        raise RuntimeError(
-            f"stream_throughput fpt={files_per_trigger}: sink holds "
-            f"{got} rows, the single-batch result is {expected}"
-        )
-    return {
-        "seconds": round(dt, 3),
-        "rows_per_sec": round(n_rows / dt, 1),
-        "micro_batches": batches[0],
-        "files_per_trigger": files_per_trigger,
-    }
-
-
 def spark_event_windows(
     spark: SparkSession, sf_dir: str, state_partitions: int = 8
 ) -> DataFrame:

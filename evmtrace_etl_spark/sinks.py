@@ -269,6 +269,10 @@ class DbApiUpsertSink:
             conn.close()
 
 
+#: Rows per ``executemany`` flush in ``DbApiPartitionUpsertSink``.
+_EXECUTEMANY_ROWS = 10_000
+
+
 class DbApiPartitionUpsertSink:
     """Executor-side ``INSERT … ON CONFLICT`` upsert: one DB connection
     per Spark partition, batched ``executemany`` flushes, nothing ever
@@ -288,12 +292,10 @@ class DbApiPartitionUpsertSink:
         self,
         connection_factory: Callable,
         paramstyle: str = "qmark",
-        batch_size: int = 10_000,
         max_parallelism: int | None = None,
     ):
         self._connect = connection_factory
         self.paramstyle = paramstyle
-        self.batch_size = batch_size
         self.max_parallelism = max_parallelism
 
     def upsert(
@@ -308,7 +310,6 @@ class DbApiPartitionUpsertSink:
             flat = flat.coalesce(self.max_parallelism)
         sql = _upsert_sql(table, flat.columns, keys, mode, self.paramstyle)
         factory = self._connect
-        batch_size = self.batch_size
 
         def _write_partition(rows: Iterable) -> None:
             conn = None
@@ -318,7 +319,7 @@ class DbApiPartitionUpsertSink:
                     if conn is None:
                         conn = factory()  # connect lazily: skip empty parts
                     buf.append(tuple(row))
-                    if len(buf) >= batch_size:
+                    if len(buf) >= _EXECUTEMANY_ROWS:
                         cur = conn.cursor()
                         cur.executemany(sql, buf)
                         cur.close()

@@ -826,18 +826,56 @@ def test_workdir_reaper_spares_live_nested_writers(tmp_path, monkeypatch):
 
 
 @pytest.mark.slow
-def test_stream_throughput_probe(spark):
-    """The bench's rows/sec probe: paced availableNow drain through the
-    full foreachBatch pipeline; pacing must split the backlog into
-    ceil(files / files_per_trigger) micro-batches."""
-    from evmtrace_etl_spark.plans.sink_parity import stream_throughput
+def test_file_stream_pacing_commits_single_batch_result(spark, tmp_path):
+    """T2 pacing: ``max_files_per_trigger`` splits an ``availableNow``
+    backlog of 4 files into ceil(4 / 2) = 2 micro-batches, and since each
+    file holds whole transaction trees the sink ends with the
+    single-batch result.  The fixture is replicated 50x with a distinct
+    transaction hash per replica; replicas share their contract keys."""
+    from pyspark.sql import functions as F
 
-    out = stream_throughput(
-        spark, replicate=50, n_files=4, files_per_trigger=2
+    replicas, n_files = 50, 4
+    traces = fixtures.traces_df(spark)
+    src = str(tmp_path / "src")
+    (
+        traces.crossJoin(spark.range(replicas).withColumnRenamed("id", "_rep"))
+        .withColumn(
+            "transaction_hash",
+            F.when(
+                F.col("transaction_hash").isNotNull(),
+                F.concat_ws("_", "transaction_hash", "_rep"),
+            ),
+        )
+        .drop("_rep")
+        .repartition(n_files, "transaction_hash")
+        .write.json(src)
     )
-    assert out["rows"] == 33 * 50
-    assert out["micro_batches"] == 2
-    assert out["rows_per_sec"] > 0
+    assert len([f for f in os.listdir(src) if f.endswith(".json")]) == n_files
+
+    sink = LakeUpsertSink(str(tmp_path / "sink"))
+    batches = []
+
+    def _process(batch, batch_id):
+        batches.append(batch_id)
+        runner.process_trace_batch(batch, sink, checksum=False)
+
+    q = (
+        sources.file_trace_stream(spark, src, max_files_per_trigger=2)
+        .writeStream.foreachBatch(_process)
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    if not q.awaitTermination(600):
+        q.stop()
+        pytest.fail("availableNow drain not finished after 600 s")
+    assert len(batches) == 2
+    assert sink.read(spark, "transactions").count() == (
+        zk_transactions(traces).count() * replicas
+    )
+    assert sink.read(spark, "contracts").count() == (
+        zk_contracts_deduped(traces).count()
+    )
 
 
 @pytest.mark.slow
