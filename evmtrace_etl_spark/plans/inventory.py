@@ -1911,38 +1911,44 @@ GROUP BY 1
 def compacted_events_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-type event stats computed over a COMPACTED copy of events —
     this registers the lake-maintenance path under the driver's
-    continuous correctness gate: the build leg fragments events into 16
-    small files per ``event_type`` directory and
-    ``sinks.compact_partitioned_parquet`` rewrites each directory
-    within its file budget (hive layout preserved); the serve leg
-    aggregates over the COMPACTED dataset while the oracle recomputes
-    over the ORIGINAL table, so any row the rewrite loses, duplicates,
-    or mutates fails the value hash.  Build memoized per sf_dir (the
-    registered row bills the serve scan, same convention as the
-    bucketed/rollup fixtures above).
+    continuous correctness gate: the build leg lands events as four
+    appends to a lake table partitioned by ``event_type`` (one small
+    file per directory per append) and
+    ``sinks.compact_table`` rewrites each directory within its file
+    budget through one snapshot commit (hive layout preserved); the
+    serve leg aggregates over the COMPACTED table (``read_table``)
+    while the oracle recomputes over the ORIGINAL table, so any row the
+    rewrite loses, duplicates, or mutates fails the value hash.  Build
+    memoized per sf_dir (the registered row bills the serve scan, same
+    convention as the bucketed/rollup fixtures above).
     """
+    import shutil
     import tempfile
 
-    from ..sinks import compact_partitioned_parquet
+    from ..sinks import append_files, compact_table, read_table
 
     base = os.path.join(
         tempfile.gettempdir(),
         "evmtrace_compacted",
         os.path.basename(os.path.normpath(sf_dir)),
     )
-    frag, compacted = os.path.join(base, "frag"), os.path.join(base, "compact")
+    tbl = os.path.join(base, "events")
     if _BUILD_DONE.get("compacted_events") != base:
+        shutil.rmtree(base, ignore_errors=True)
         ev = _t(spark, sf_dir, "events").select(
             "event_id", "user_id", "event_type", "value"
         )
-        ev.repartition(16).write.mode("overwrite").partitionBy(
-            "event_type"
-        ).parquet(frag)
-        compact_partitioned_parquet(
-            spark, frag, compacted, ["event_type"], target_bytes=1 << 20
-        )
+        for i in range(4):
+            append_files(
+                spark,
+                ev.filter(F.col("event_id") % 4 == i),
+                tbl,
+                cols=["event_id"],
+                partition_by=["event_type"],
+            )
+        compact_table(spark, tbl, target_bytes=1 << 20)
         _BUILD_DONE["compacted_events"] = base
-    ev = spark.read.parquet(compacted)
+    ev = read_table(spark, tbl)
     return ev.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_events"),
         F.sum(_dec("value"))
@@ -1972,15 +1978,16 @@ GROUP BY event_type
 def clustered_events_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ranged event stats computed over a Z-ORDER-CLUSTERED copy of
     events — the data-skipping layout under the driver's continuous
-    correctness gate: the build leg rewrites events with
-    ``sinks.cluster_parquet(zorder=True)`` on ``(ts, value)`` (quantile
-    buckets Morton-interleaved, range-partitioned + sorted on the
-    z-value), and the serve leg runs a two-sided range predicate on
-    exactly those keys — the pushed filter prunes row groups off the
-    footer stats the rewrite created (skip fractions measured in
-    tests/test_clustering.py).  The oracle recomputes over the ORIGINAL
-    table, so any row the layout rewrite loses, duplicates, or mutates
-    fails the value hash.  Build memoized per sf_dir (the registered
+    correctness gate: the build leg lands events in a lake table and
+    re-lays it out with ``sinks.cluster_table(zorder=True)`` on
+    ``(ts, value)`` (quantile buckets Morton-interleaved,
+    range-partitioned + sorted on the z-value), and the serve leg runs
+    a two-sided range predicate on exactly those keys through
+    ``read_table`` — the manifest prunes files and the pushed filter
+    prunes row groups off the footer stats the rewrite created (skip
+    fractions measured in tests/test_clustering.py).  The oracle
+    recomputes over the ORIGINAL table, so any row the layout rewrite
+    loses, duplicates, or mutates fails the value hash.  Build memoized per sf_dir (the registered
     row bills the clustered serve scan, same convention as the
     compaction gate above).
 
@@ -1990,32 +1997,40 @@ def clustered_events_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     fraction (tests measure ≤55% at even this toy granularity, and the
     benefit grows with file count — selectivity-bound at lake scale).
     """
+    import datetime
+    import shutil
     import tempfile
 
-    from ..sinks import cluster_parquet
+    from ..sinks import append_files, cluster_table, read_table
 
     base = os.path.join(
         tempfile.gettempdir(),
         "evmtrace_clustered",
         os.path.basename(os.path.normpath(sf_dir)),
     )
-    plain, clustered = os.path.join(base, "plain"), os.path.join(base, "zo")
+    tbl = os.path.join(base, "events")
     if _BUILD_DONE.get("clustered_events") != base:
+        shutil.rmtree(base, ignore_errors=True)
         ev = _t(spark, sf_dir, "events").select(
             "event_id", "user_id", "event_type", "ts", "value"
         )
-        ev.repartition(8).write.mode("overwrite").parquet(plain)
-        cluster_parquet(
+        append_files(spark, ev.repartition(8), tbl, cols=["ts", "value"])
+        cluster_table(
             spark,
-            plain,
-            clustered,
+            tbl,
             ["ts", "value"],
             target_bytes=1 << 16,
             zorder=True,
             n_buckets=8,
         )
         _BUILD_DONE["clustered_events"] = base
-    ev = spark.read.parquet(clustered)
+    # the manifest prunes on the closed hull of the exact filter below
+    # (UTC, the session time zone the string casts resolve in)
+    lo, hi = (
+        datetime.datetime(2024, 1, d, tzinfo=datetime.timezone.utc)
+        for d in (8, 15)
+    )
+    ev = read_table(spark, tbl, {"ts": (lo, hi), "value": (20.0, 60.0)})
     lo_ts = F.lit("2024-01-08 00:00:00").cast("timestamp")
     hi_ts = F.lit("2024-01-15 00:00:00").cast("timestamp")
     return (
@@ -2059,13 +2074,13 @@ GROUP BY event_type
 def fileskip_events_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ranged event stats served through a persisted FILE-SKIPPING
     manifest — the lakehouse-manifest complement of the row-group gate
-    above: the build leg linearly clusters events on ``ts`` into many
-    small files (files tile disjoint ts-ranges) and persists
-    ``sinks.parquet_stats_index`` (footer-only per-file min/max — the
-    table the planner filters INSTEAD of touching every footer per
-    query) next to the data; the serve leg reads the tiny manifest,
-    keeps only files whose span can overlap the week-long predicate
-    (``prune_files`` — NULL stats conservatively kept), scans just
+    above: the build leg lands events in a lake table and linearly
+    clusters it on ``ts`` into many small files (``cluster_table``;
+    files tile disjoint ts-ranges), whose commit stamps the footer-only
+    per-file min/max manifest — the table the planner filters INSTEAD
+    of touching every footer per query; the serve leg
+    (``read_table``) keeps only files whose span can overlap the
+    week-long predicate (NULL stats conservatively kept), scans just
     those, and applies the exact half-open row filter on top.  The
     oracle recomputes over the ORIGINAL table, so a manifest that
     prunes a matching file (wrong skip) or the rewrite losing/mutating
@@ -2080,39 +2095,28 @@ def fileskip_events_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     and here under the driver gate.
     """
     import datetime
+    import shutil
     import tempfile
 
-    from ..sinks import cluster_parquet, parquet_stats_index, prune_files
+    from ..sinks import append_files, cluster_table, read_table
 
     base = os.path.join(
         tempfile.gettempdir(),
         "evmtrace_fileskip",
         os.path.basename(os.path.normpath(sf_dir)),
     )
-    plain = os.path.join(base, "plain")
-    lin = os.path.join(base, "lin")
-    manifest = os.path.join(base, "manifest")
+    tbl = os.path.join(base, "events")
     if _BUILD_DONE.get("fileskip_events") != base:
+        shutil.rmtree(base, ignore_errors=True)
         ev = _t(spark, sf_dir, "events").select(
             "event_id", "user_id", "event_type", "ts", "value"
         )
-        ev.repartition(8).write.mode("overwrite").parquet(plain)
-        cluster_parquet(spark, plain, lin, ["ts"], target_bytes=1 << 16)
-        parquet_stats_index(spark, lin, ["ts"]).write.mode(
-            "overwrite"
-        ).parquet(manifest)
+        append_files(spark, ev.repartition(8), tbl, cols=["ts"])
+        cluster_table(spark, tbl, ["ts"], target_bytes=1 << 16)
         _BUILD_DONE["fileskip_events"] = base
     lo = datetime.datetime(2024, 1, 8)
     hi = datetime.datetime(2024, 1, 15)
-    files = prune_files(
-        spark.read.parquet(manifest), {"ts": (lo, hi)}
-    )
-    schema = spark.read.parquet(lin).schema
-    ev = (
-        spark.read.schema(schema).parquet(*files)
-        if files
-        else spark.createDataFrame([], schema)
-    )
+    ev = read_table(spark, tbl, {"ts": (lo, hi)})
     return (
         ev.filter((F.col("ts") >= F.lit(lo)) & (F.col("ts") < F.lit(hi)))
         .groupBy("event_type")
@@ -2229,10 +2233,10 @@ def read_table_week(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One week of one event type served through the COMPOSED
     ``sinks.read_table`` entry point — the single call that stacks
     every skipping tier the storage layer built this survey: the build
-    leg linearly clusters events on ``ts`` into many small files with a
-    parquet bloom filter on ``user_id`` (``cluster_parquet``) and
-    commits an in-table snapshot stats manifest
-    (``update_stats_index``); the serve leg passes ONE predicate dict
+    leg lands events in a lake table and linearly clusters it on ``ts``
+    into many small files with a parquet bloom filter on ``user_id``
+    (``cluster_table``), one snapshot commit that also stamps the
+    table's stats manifest; the serve leg passes ONE predicate dict
     and gets (1) manifest FILE skipping on the ts range, (2) row-group
     min/max skipping inside the surviving files (the clustered layout),
     (3) the equality predicate pushed as ``Eq`` so bloom/dictionary
@@ -2249,31 +2253,26 @@ def read_table_week(spark: SparkSession, sf_dir: str) -> DataFrame:
     composed serve scan.
     """
     import datetime
+    import shutil
     import tempfile
 
-    from ..sinks import cluster_parquet, read_table, update_stats_index
+    from ..sinks import append_files, cluster_table, read_table
 
     base = os.path.join(
         tempfile.gettempdir(),
         "evmtrace_readtable",
         os.path.basename(os.path.normpath(sf_dir)),
     )
-    plain = os.path.join(base, "plain")
     tbl = os.path.join(base, "events")
     if _BUILD_DONE.get("read_table_week") != base:
+        shutil.rmtree(base, ignore_errors=True)
         ev = _t(spark, sf_dir, "events").select(
             "event_id", "user_id", "event_type", "ts", "value"
         )
-        ev.repartition(8).write.mode("overwrite").parquet(plain)
-        cluster_parquet(
-            spark,
-            plain,
-            tbl,
-            ["ts"],
-            target_bytes=1 << 16,
-            bloom_cols=["user_id"],
+        append_files(spark, ev.repartition(8), tbl, cols=["ts"])
+        cluster_table(
+            spark, tbl, ["ts"], target_bytes=1 << 16, bloom_cols=["user_id"]
         )
-        update_stats_index(spark, tbl, None, ["ts"])
         _BUILD_DONE["read_table_week"] = base
     lo = datetime.datetime(2024, 1, 8)
     hi = datetime.datetime(2024, 1, 15)
@@ -2303,8 +2302,9 @@ WHERE event_type = 'view'
 
 def update_backfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Row-level UPDATE (``sinks.update_where``) under the driver gate —
-    the rectification/backfill primitive: the build leg ts-clusters an
-    events copy with an in-table snapshot manifest, then doubles
+    the rectification/backfill primitive: the build leg lands an events
+    copy in a lake table and ts-clusters it (``cluster_table``), then
+    doubles
     ``value`` for one week of ``purchase`` rows through the snapshot
     transaction engine (manifest prunes the rewrite to the files tiling
     that week on the ts stats; the unindexed ``event_type`` predicate
@@ -2326,26 +2326,26 @@ def update_backfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     is read-only.
     """
     import datetime
+    import shutil
     import tempfile
 
-    from ..sinks import cluster_parquet, read_table, update_stats_index, update_where
+    from ..sinks import append_files, cluster_table, read_table, update_where
 
     base = os.path.join(
         tempfile.gettempdir(),
         "evmtrace_updwhere",
         os.path.basename(os.path.normpath(sf_dir)),
     )
-    plain = os.path.join(base, "plain")
     tbl = os.path.join(base, "events")
     lo = datetime.datetime(2024, 1, 8)
     hi = datetime.datetime(2024, 1, 15)
     if _BUILD_DONE.get("update_backfill") != base:
+        shutil.rmtree(base, ignore_errors=True)
         ev = _t(spark, sf_dir, "events").select(
             "event_id", "user_id", "event_type", "ts", "value"
         )
-        ev.repartition(8).write.mode("overwrite").parquet(plain)
-        cluster_parquet(spark, plain, tbl, ["ts"], target_bytes=1 << 16)
-        update_stats_index(spark, tbl, None, ["ts"])
+        append_files(spark, ev.repartition(8), tbl, cols=["ts"])
+        cluster_table(spark, tbl, ["ts"], target_bytes=1 << 16)
         update_where(
             spark,
             tbl,

@@ -42,6 +42,7 @@ import time as _time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 
 from ..schemas import TRANSACTION_SCHEMA
 from ..session import materialize as _materialize
@@ -143,6 +144,30 @@ def _workdir(name: str) -> str:
     return base
 
 
+def _drain(
+    writer: DataStreamWriter, name: str, state_partitions: int | None = None
+) -> None:
+    """Run ``writer`` as one availableNow query and wait for it.  A
+    stream still running after 120 s is stopped and raises
+    ``TimeoutError`` naming the row ``name`` — availableNow always
+    terminates, and a hang would otherwise surface as a confusing
+    partial-sink oracle mismatch.  ``state_partitions`` sets
+    ``spark.sql.shuffle.partitions`` while the query starts and runs
+    (a checkpoint fixes its state store's partition count at first
+    start); the session's value is restored afterwards."""
+    spark = SparkSession.active()
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    if state_partitions is not None:
+        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
+    try:
+        q = writer.trigger(availableNow=True).start()
+        if not q.awaitTermination(120):
+            q.stop()
+            raise TimeoutError(f"{name}: stream not finished after 120 s")
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
 def spark_stream_transactions(
     spark: SparkSession, sf_dir: str = ""
 ) -> DataFrame:
@@ -156,20 +181,12 @@ def spark_stream_transactions(
     def _process(batch: DataFrame, _batch_id: int) -> None:
         runner.process_trace_batch(batch, sink, checksum=False)
 
-    q = (
+    _drain(
         sources.file_trace_stream(spark, src)
         .writeStream.foreachBatch(_process)
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
+        .option("checkpointLocation", os.path.join(base, "ckpt")),
+        "zk_stream_transactions",
     )
-    if not q.awaitTermination(120):
-        # availableNow should always terminate; a hang would otherwise
-        # surface as a confusing partial-sink oracle mismatch
-        q.stop()
-        raise TimeoutError(
-            "zk_stream_transactions: stream not finished after 120 s"
-        )
     return zk_parity.project_tx(sink.read(spark, "transactions"))
 
 
@@ -403,23 +420,13 @@ def spark_event_windows(
             batch, "windows", ["window_start", "event_type"], mode="update"
         )
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
-        q = (
-            agg.writeStream.foreachBatch(_process)
-            .outputMode("update")
-            .option("checkpointLocation", os.path.join(base, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(120):
-            q.stop()
-            raise TimeoutError(
-                "inv_event_windows: stream not finished after 120 s"
-            )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    _drain(
+        agg.writeStream.foreachBatch(_process)
+        .outputMode("update")
+        .option("checkpointLocation", os.path.join(base, "ckpt")),
+        "inv_event_windows",
+        state_partitions,
+    )
     return sink.read(spark, "windows")
 
 
@@ -487,23 +494,13 @@ def spark_stream_dedup_docs(
     # checkpoint at first start; ``state_partitions`` is the knob a
     # production deployment sizes to state volume — the fingerprint set
     # here is corpus-distinct-sized, nowhere near one task per core)
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
-        q = (
-            deduped.writeStream.foreachBatch(_process)
-            .outputMode("append")
-            .option("checkpointLocation", os.path.join(base, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(120):
-            q.stop()
-            raise TimeoutError(
-                "llm_stream_dedup_docs: stream not finished after 120 s"
-            )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    _drain(
+        deduped.writeStream.foreachBatch(_process)
+        .outputMode("append")
+        .option("checkpointLocation", os.path.join(base, "ckpt")),
+        "llm_stream_dedup_docs",
+        state_partitions,
+    )
     return sink.read(spark, "fps")
 
 
@@ -599,22 +596,12 @@ def spark_stream_dedup_within_wm(
     # state store sized like the other streaming legs (four paced
     # micro-batches each pay the state stage; 8 partitions matches the
     # state volume — measured 6.7 -> 3.6 s at sf0.1, identical output)
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
-        q = (
-            stream.writeStream.foreachBatch(_process)
-            .option("checkpointLocation", os.path.join(base, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(120):
-            q.stop()
-            raise TimeoutError(
-                "llm_stream_dedup_within_wm: stream not finished after 120 s"
-            )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    _drain(
+        stream.writeStream.foreachBatch(_process)
+        .option("checkpointLocation", os.path.join(base, "ckpt")),
+        "llm_stream_dedup_within_wm",
+        state_partitions,
+    )
     return (
         spark.read.parquet(out)
         .groupBy("fingerprint")
@@ -715,23 +702,13 @@ def spark_stream_sessions(
             mode="ignore",  # append emissions are final — insert once
         )
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
-        q = (
-            agg.writeStream.foreachBatch(_process)
-            .outputMode("append")
-            .option("checkpointLocation", os.path.join(base, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(120):
-            q.stop()
-            raise TimeoutError(
-                "inv_stream_sessions: stream not finished after 120 s"
-            )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    _drain(
+        agg.writeStream.foreachBatch(_process)
+        .outputMode("append")
+        .option("checkpointLocation", os.path.join(base, "ckpt")),
+        "inv_stream_sessions",
+        state_partitions,
+    )
     return sink.read(spark, "sessions")
 
 
@@ -831,23 +808,13 @@ def spark_stream_attribution(
             batch, "attribution", ["purchase_id", "click_id"], mode="ignore"
         )
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
-        q = (
-            joined.writeStream.foreachBatch(_process)
-            .outputMode("append")
-            .option("checkpointLocation", os.path.join(base, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(120):
-            q.stop()
-            raise TimeoutError(
-                "inv_stream_attribution: stream not finished after 120 s"
-            )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    _drain(
+        joined.writeStream.foreachBatch(_process)
+        .outputMode("append")
+        .option("checkpointLocation", os.path.join(base, "ckpt")),
+        "inv_stream_attribution",
+        state_partitions,
+    )
     return sink.read(spark, "attribution")
 
 
@@ -937,23 +904,13 @@ def spark_stream_attribution_outer(
             batch, "attribution", ["purchase_id", "click_id"], mode="ignore"
         )
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
-        q = (
-            joined.writeStream.foreachBatch(_process)
-            .outputMode("append")
-            .option("checkpointLocation", os.path.join(base, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(120):
-            q.stop()
-            raise TimeoutError(
-                "inv_stream_attribution_outer: stream not finished after 120 s"
-            )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    _drain(
+        joined.writeStream.foreachBatch(_process)
+        .outputMode("append")
+        .option("checkpointLocation", os.path.join(base, "ckpt")),
+        "inv_stream_attribution_outer",
+        state_partitions,
+    )
     return sink.read(spark, "attribution")
 
 

@@ -385,64 +385,6 @@ def write_bucketed(
     return spark.table(table)
 
 
-def compact_parquet(
-    spark: SparkSession,
-    src: str,
-    dst: str,
-    target_bytes: int = 128 * 1024 * 1024,
-    shuffle: bool = True,
-    bloom_cols: Sequence[str] | None = None,
-    bloom_ndv: int = 1_000_000,
-) -> dict:
-    """Small-file compaction: rewrite the parquet dataset at ``src`` into
-    ``ceil(total_bytes / target_bytes)`` evenly sized files at ``dst``.
-
-    The small-files problem is the ingest tail of every 100 TB lake:
-    a streaming sink (this repo's ``foreachBatch`` writers included)
-    or an over-partitioned job leaves thousands of KB-scale files, and
-    every later scan pays one task + one open per file, swamping the
-    scheduler and the namenode long before the bytes matter.  The fix
-    is periodic compaction to files near the scan's split size
-    (``spark.sql.files.maxPartitionBytes``, 128 MB default — matching
-    it makes one compacted file ≈ one later scan task).
-
-    ``shuffle=True`` (default) round-robin-repartitions, giving evenly
-    sized output files at the cost of one full shuffle of the data —
-    the right trade for a nightly compactor since the even layout is
-    what every later scan amortizes.  ``shuffle=False`` coalesces
-    adjacent input splits instead: zero shuffle, but output sizes
-    inherit input skew — the right trade for a quick re-tile of
-    mildly fragmented data.
-
-    Sizing is measured through the Hadoop ``FileSystem`` API (works on
-    HDFS/S3A, not just ``file://``), never by collecting data.  Only
-    leaf data files count (``_SUCCESS``/checksums excluded).  Returns
-    the accounting a compaction ledger needs: files/bytes in, files
-    out, and the row count preserved (asserted equal by the tests).
-
-    ``bloom_cols`` installs parquet bloom filters on the listed columns
-    during the rewrite (see ``_with_blooms``) — compaction is the
-    natural moment to add point-lookup skipping the ingest writers
-    didn't.
-    """
-    files = _leaf_files(spark, src)
-    bytes_in = sum(ln for _rel, ln in files)
-    n_out = max(1, -(-bytes_in // int(target_bytes)))
-    df = spark.read.parquet(src)
-    out = df.repartition(n_out) if shuffle else df.coalesce(n_out)
-    writer = _with_blooms(
-        out.write.mode("overwrite"), bloom_cols, bloom_ndv
-    )
-    writer.parquet(dst)
-    return {
-        "files_in": len(files),
-        "bytes_in": int(bytes_in),
-        "files_out": len(_leaf_files(spark, dst)),
-        "n_target_files": int(n_out),
-        "target_bytes": int(target_bytes),
-    }
-
-
 def _with_blooms(writer, bloom_cols: Sequence[str] | None, ndv: int):
     """Enable parquet-native bloom filters on ``bloom_cols`` for a
     writer: the skipping mechanism for EQUALITY predicates on
@@ -532,91 +474,6 @@ def _leaf_files(spark: SparkSession, path: str) -> list[tuple[str, int]]:
     ]
 
 
-def compact_partitioned_parquet(
-    spark: SparkSession,
-    src: str,
-    dst: str,
-    partition_cols: Sequence[str],
-    target_bytes: int = 128 * 1024 * 1024,
-    seed: int = 42,
-) -> dict:
-    """Small-file compaction for a HIVE-PARTITIONED dataset, preserving
-    the directory layout (and with it every later query's partition
-    pruning) while giving each partition its own file budget.
-
-    A global ``repartition`` would destroy the layout, and the naive
-    fix — a driver loop compacting one partition per job — schedules
-    thousands of tiny jobs at lake scale.  This does it in ONE job:
-
-    1. per-partition byte sizes come from the FS listing (no data
-       read), giving each partition a budget
-       ``n_i = ceil(bytes_i / target_bytes)``;
-    2. the budgets (one row per partition — tiny) broadcast-join onto
-       the rows, and a ``floor(rand * n_i)`` salt splits each
-       partition into its budget;
-    3. one hash repartition on (partition cols, salt) followed by a
-       ``partitionBy`` write lands ≈ ``n_i`` files in each directory —
-       a 10 GB partition gets ~80 files while a 10 MB one gets 1,
-       which no single global file count can express.
-
-    The salt is layout-only (row placement, never values), so the
-    ``rand`` is safe; ``seed`` just makes reruns reproducible.  NULL
-    partition values (hive default-partition dirs) are not supported.
-    Returns the same ledger as ``compact_parquet`` plus the partition
-    count.
-    """
-    from urllib.parse import unquote
-
-    cols = list(partition_cols)
-    files = _leaf_files(spark, src)
-    bytes_in = sum(ln for _rel, ln in files)
-    sizes: dict[tuple, int] = {}
-    for rel, ln in files:
-        vals: dict[str, str] = {}
-        for seg in rel.split("/")[:-1]:
-            if "=" in seg:
-                k, v = seg.split("=", 1)
-                vals[k] = unquote(v)
-        key = tuple(vals[c] for c in cols)
-        sizes[key] = sizes.get(key, 0) + ln
-    budgets = [
-        tuple(k) + (max(1, -(-b // int(target_bytes))),)
-        for k, b in sizes.items()
-    ]
-    total = sum(r[-1] for r in budgets) or 1
-
-    df = spark.read.parquet(src)
-    schema = T.StructType(
-        [T.StructField(c, T.StringType()) for c in cols]
-        + [T.StructField("_nf", T.LongType())]
-    )
-    bud = spark.createDataFrame(budgets, schema)
-    for c in cols:
-        # partition values were parsed from dir names as strings; cast
-        # to the types partition discovery inferred so the join keys hit
-        bud = bud.withColumn(c, F.col(c).cast(df.schema[c].dataType))
-    salted = (
-        df.join(F.broadcast(bud), cols, "left")
-        .withColumn(
-            "_salt",
-            F.floor(
-                F.rand(seed) * F.coalesce(F.col("_nf"), F.lit(1))
-            ).cast("int"),
-        )
-        .repartition(int(total), *cols, F.col("_salt"))
-        .drop("_nf", "_salt")
-    )
-    salted.write.mode("overwrite").partitionBy(*cols).parquet(dst)
-    return {
-        "files_in": len(files),
-        "bytes_in": int(bytes_in),
-        "files_out": len(_leaf_files(spark, dst)),
-        "n_target_files": int(total),
-        "n_partitions": len(sizes),
-        "target_bytes": int(target_bytes),
-    }
-
-
 def _bucket_from_cuts(key: str, cuts: Sequence[float]) -> F.Column:
     """Bucket-id column for ``key`` from precomputed quantile
     cutpoints: a sum-of-comparisons assignment that stays inside
@@ -652,17 +509,6 @@ def _quantile_cuts(
     )
 
 
-def _quantile_bucket(
-    df: DataFrame, key: str, n_buckets: int, rel_err: float
-) -> F.Column:
-    """Rank-normalized bucket id (0..n_buckets-1) for a single ``key``
-    (one-pass cutpoints + codegen bucket assignment; see
-    ``_quantile_cuts`` / ``_bucket_from_cuts``)."""
-    return _bucket_from_cuts(
-        key, _quantile_cuts(df, [key], n_buckets, rel_err)[0]
-    )
-
-
 def _morton(bucket_cols: Sequence[F.Column], bits: int) -> F.Column:
     """Morton (z-order) interleave of per-key bucket ids: bit ``i`` of
     key ``j`` lands at position ``i*k + j``, so a range on ANY key maps
@@ -693,8 +539,8 @@ def _clustered(
     """``df`` re-laid-out on ``keys`` as ``n_out`` range partitions,
     each sorted — lexicographic when ``cuts`` is None, else the Morton
     z-order of each key's bucket over its quantile ``cuts``
-    (``_quantile_cuts``, ``n_buckets`` buckets per key).  The one
-    layout ``cluster_parquet`` and ``cluster_table`` both write."""
+    (``_quantile_cuts``, ``n_buckets`` buckets per key) — the layout
+    ``cluster_table`` writes."""
     if cuts is None:
         return df.repartitionByRange(int(n_out), *keys).sortWithinPartitions(
             *keys
@@ -709,86 +555,6 @@ def _clustered(
         .sortWithinPartitions("_z")
         .drop("_z")
     )
-
-
-def cluster_parquet(
-    spark: SparkSession,
-    src: str,
-    dst: str,
-    keys: Sequence[str],
-    target_bytes: int = 128 * 1024 * 1024,
-    zorder: bool = False,
-    n_buckets: int = 16,
-    rel_err: float = 0.001,
-    bloom_cols: Sequence[str] | None = None,
-    bloom_ndv: int = 1_000_000,
-) -> dict:
-    """Rewrite the parquet dataset at ``src`` CLUSTERED on ``keys`` so
-    later range predicates skip whole row groups off footer min/max
-    stats — the data-layout half of predicate pushdown.  Pushdown alone
-    only helps if matching rows are physically co-located: on a
-    randomly-laid-out 100 TB table every row group spans the full key
-    range and a 0.1%-selective scan still reads 100 TB; after
-    clustering it reads ~0.1%.
-
-    Two layouts:
-
-    - ``zorder=False`` (default) — lexicographic: ``repartitionByRange``
-      on the keys + an intra-partition sort.  Total order on the
-      LEADING key: best possible skipping there, none on the others
-      (demonstrated by the tests).
-    - ``zorder=True`` — each key is rank-normalized into
-      ``n_buckets`` quantile buckets (skew-proof by construction) and
-      the bucket ids are Morton-interleaved; range-partition + sort on
-      the z-value gives every key partial locality, so predicates on
-      ANY clustered key skip a large fraction of row groups — the
-      right layout when no single column dominates the workload.
-
-    Both paths are one shuffle (the range partitioner samples, then
-    each output file is one task's sorted run) — the same
-    pay-once-at-write economics as ``write_bucketed``, tuned for range
-    scans instead of equi-joins.  Known input-pass budget, same trade
-    Delta's OPTIMIZE ZORDER makes: the z-order path reads the input
-    2+1 times — ONE key-column-pruned quantile probe for ALL keys
-    (``_quantile_cuts``; pinned single-job by
-    ``tests/test_clustering.py``), the range partitioner's sample scan
-    (not eliminable in the DataFrame API without giving up balanced
-    contiguous output ranges — a hash ``repartition`` on a computed
-    slab id leaves ~1/e of partitions empty and stacks disjoint
-    z-slabs per file, widening every footer span), and the shuffle
-    write itself.  File count follows measured input
-    bytes / ``target_bytes`` (Hadoop FS API, HDFS/S3A-portable).
-    Values are untouched — layout only — which is what the registered
-    round-trip query's oracle checks (`inv_clustered_events_value`).
-    Returns the compaction-style ledger plus the clustering spec.
-
-    ``bloom_cols`` adds parquet bloom filters on OTHER columns during
-    the same rewrite: the clustered keys get range skipping from the
-    layout; blooms cover equality lookups on high-cardinality columns
-    the sort can't help (see ``_with_blooms``).
-    """
-    keys = list(keys)
-    files = _leaf_files(spark, src)
-    bytes_in = sum(ln for _rel, ln in files)
-    n_out = max(1, -(-bytes_in // int(target_bytes)))
-    df = spark.read.parquet(src)
-    cuts = (
-        _quantile_cuts(df, keys, int(n_buckets), rel_err) if zorder else None
-    )
-    out = _clustered(df, keys, n_out, cuts, n_buckets)
-    _with_blooms(out.write.mode("overwrite"), bloom_cols, bloom_ndv).parquet(
-        dst
-    )
-    return {
-        "files_in": len(files),
-        "bytes_in": int(bytes_in),
-        "files_out": len(_leaf_files(spark, dst)),
-        "n_target_files": int(n_out),
-        "target_bytes": int(target_bytes),
-        "keys": keys,
-        "zorder": bool(zorder),
-        "n_buckets": int(n_buckets) if zorder else None,
-    }
 
 
 # ---------------------------------------------------------------------------
@@ -815,7 +581,7 @@ def parquet_stats_index(
     """Per-FILE min/max/row-count index for ``cols``, read from parquet
     FOOTERS only — the manifest a Delta/Iceberg-style table format
     maintains, rebuilt here from the files themselves.  Row-group
-    pruning (``cluster_parquet``) saves decode work *inside* files the
+    pruning (``cluster_table``) saves decode work *inside* files the
     scan already opened; file-level pruning removes files from the scan
     plan entirely — at 100 TB / millions of files that is the
     difference between a planner that touches every footer per query
@@ -830,9 +596,10 @@ def parquet_stats_index(
     pruner treats as "may match" — conservative, never wrong.
 
     Output: ``file`` (absolute), ``n_rows``, and ``<c>_min``/``<c>_max``
-    typed as the source column for each requested col.  Persist it next
-    to the data and serve pruned reads via ``read_file_pruned``;
-    maintain it incrementally with ``update_stats_index``.  ``paths``
+    typed as the source column for each requested col.  The lake log
+    commits it as the table's manifest (``_land_commit`` for commits of
+    more than ``_LOCAL_STATS_MAX`` files, ``update_stats_index`` for
+    adopted directories) and ``read_table`` prunes through it.  ``paths``
     restricts the build to an explicit file list (the incremental
     path's delta).
 
@@ -844,7 +611,6 @@ def parquet_stats_index(
     but served from the manifest table.
     """
     import pandas as pd
-    from urllib.parse import unquote
 
     # an explicit (committed) schema carries the logical->physical
     # column mapping; without one the footers' names ARE the logical
@@ -881,49 +647,13 @@ def parquet_stats_index(
     part_set = set(part_cols)
 
     def _read_footers(batches):
-        import pyarrow.parquet as pq
-
-        def _meta(fpath):
-            if "://" in fpath:  # HDFS/S3A URI — open via pyarrow fs
-                from pyarrow import fs as pafs
-
-                filesystem, rel = pafs.FileSystem.from_uri(fpath)
-                with filesystem.open_input_file(rel) as f:
-                    return pq.ParquetFile(f).metadata
-            return pq.ParquetFile(fpath).metadata
-
-        def _dir_value(fpath, c):
-            for seg in fpath.split("/")[:-1]:
-                if seg.startswith(c + "="):
-                    v = unquote(seg[len(c) + 1:])
-                    return None if v == "__HIVE_DEFAULT_PARTITION__" else v
-            return None
-
         for pdf in batches:
-            rows = []
-            for fpath in pdf["path"]:
-                md = _meta(fpath)
-                idx = {
-                    md.schema.column(i).name: i
-                    for i in range(md.num_columns)
-                }
-                rec: dict = {"file": fpath, "n_rows": md.num_rows}
-                for c in cols_list:
-                    if c in part_set:
-                        v = _dir_value(fpath, c)
-                        rec[f"{c}_min"] = v
-                        rec[f"{c}_max"] = v
-                        continue
-                    pc = phys_map[c]
-                    if pc not in idx:  # pre-evolution file: no stats
-                        rec[f"{c}_min"] = rec[f"{c}_max"] = None
-                        continue
-                    lo, hi = _footer_col_span(md, idx[pc])
-                    rec[f"{c}_min"] = lo
-                    rec[f"{c}_max"] = hi
-                rows.append(rec)
             yield pd.DataFrame(
-                rows, columns=[f.name for f in out_schema.fields]
+                [
+                    _footer_stats_row(f, cols_list, phys_map, part_set)
+                    for f in pdf["path"]
+                ],
+                columns=[f.name for f in out_schema.fields],
             )
 
     files_df = spark.createDataFrame([(p,) for p in paths], "path string")
@@ -936,6 +666,59 @@ def parquet_stats_index(
         out = out.withColumn(f"{c}_min", F.col(f"{c}_min").cast(dt))
         out = out.withColumn(f"{c}_max", F.col(f"{c}_max").cast(dt))
     return out
+
+
+def _dir_value(path: str, col: str) -> str | None:
+    """The decoded hive directory value of ``col`` in ``path`` — None
+    for the default (NULL) partition or a path without that directory."""
+    from urllib.parse import unquote
+
+    for seg in path.split("/")[:-1]:
+        if seg.startswith(col + "="):
+            v = unquote(seg[len(col) + 1:])
+            return None if v == "__HIVE_DEFAULT_PARTITION__" else v
+    return None
+
+
+def _footer_stats_row(
+    fpath: str,
+    cols: Sequence[str],
+    phys: dict[str, str],
+    part_cols: set[str],
+    part_cast: Callable[[str, str | None], object] | None = None,
+) -> dict:
+    """One file's stats row — ``file``, ``n_rows`` and ``<c>_min`` /
+    ``<c>_max`` for each of ``cols`` — from its parquet FOOTER alone
+    (pyarrow; HDFS/S3A URIs open through ``pyarrow.fs``).  Footer
+    columns are looked up by their PHYSICAL name (``phys``); a column
+    the file predates has no stats (NULL span).  Columns in
+    ``part_cols`` take the file's hive directory value as min == max —
+    a string, or ``part_cast(col, value)``.  The ONE reader behind both
+    the distributed builder (``parquet_stats_index``, which casts
+    partition values in Spark) and the driver-side batch path
+    (``_local_stats_rows``), so their stats can never diverge."""
+    import pyarrow.parquet as pq
+
+    if "://" in fpath:
+        from pyarrow import fs as pafs
+
+        filesystem, rel = pafs.FileSystem.from_uri(fpath)
+        with filesystem.open_input_file(rel) as f:
+            md = pq.ParquetFile(f).metadata
+    else:
+        md = pq.ParquetFile(fpath).metadata
+    idx = {md.schema.column(i).name: i for i in range(md.num_columns)}
+    rec: dict = {"file": fpath, "n_rows": md.num_rows}
+    for c in cols:
+        if c in part_cols:
+            v = _dir_value(fpath, c)
+            lo = hi = part_cast(c, v) if part_cast is not None else v
+        elif phys[c] in idx:
+            lo, hi = _footer_col_span(md, idx[phys[c]])
+        else:  # pre-evolution file: no stats
+            lo = hi = None
+        rec[f"{c}_min"], rec[f"{c}_max"] = lo, hi
+    return rec
 
 
 def _footer_col_span(md, col_idx: int) -> tuple:
@@ -995,10 +778,6 @@ def _local_stats_rows(
     footers is pure overhead, which is exactly why Delta computes its
     add-action stats inside the write tasks.  The distributed builder
     remains the path for table-scale rebuilds."""
-    from urllib.parse import unquote
-
-    import pyarrow.parquet as pq
-
     by_name = {f.name: f for f in source_schema.fields}
     missing = [c for c in cols if c not in by_name]
     if missing:
@@ -1013,42 +792,15 @@ def _local_stats_rows(
         fields.append(T.StructField(f"{c}_max", by_name[c].dataType))
     out_schema = T.StructType(fields)
 
-    def _meta(fpath):
-        if "://" in fpath:  # HDFS/S3A URI — open via pyarrow fs
-            from pyarrow import fs as pafs
-
-            filesystem, rel = pafs.FileSystem.from_uri(fpath)
-            with filesystem.open_input_file(rel) as f:
-                return pq.ParquetFile(f).metadata
-        return pq.ParquetFile(fpath).metadata
-
-    def _dir_value(fpath, c):
-        for seg in fpath.split("/")[:-1]:
-            if seg.startswith(c + "="):
-                v = unquote(seg[len(c) + 1:])
-                return None if v == "__HIVE_DEFAULT_PARTITION__" else v
-        return None
-
     # mapped tables: footers store PHYSICAL names; stats stay LOGICAL
     phys = {c: _field_phys(by_name[c]) for c in cols}
-    rows: list[dict] = []
-    for fpath in paths:
-        md = _meta(fpath)
-        idx = {md.schema.column(i).name: i for i in range(md.num_columns)}
-        rec: dict = {"file": fpath, "n_rows": md.num_rows}
-        for c in cols:
-            if c in part_set:
-                v = _py_cast(_dir_value(fpath, c), by_name[c].dataType)
-                rec[f"{c}_min"] = v
-                rec[f"{c}_max"] = v
-                continue
-            if phys[c] not in idx:  # pre-evolution file: no stats
-                rec[f"{c}_min"] = rec[f"{c}_max"] = None
-                continue
-            lo, hi = _footer_col_span(md, idx[phys[c]])
-            rec[f"{c}_min"] = lo
-            rec[f"{c}_max"] = hi
-        rows.append(rec)
+    rows = [
+        _footer_stats_row(
+            fpath, cols, phys, part_set,
+            lambda c, v: _py_cast(v, by_name[c].dataType),
+        )
+        for fpath in paths
+    ]
     return rows, out_schema
 
 
@@ -1164,35 +916,6 @@ def _prune_files_with_total(
         ).alias("_matches"),
     ).collect()[0]
     return list(agg["_matches"]), int(agg["_total"])
-
-
-def read_file_pruned(
-    spark: SparkSession,
-    path: str,
-    index: DataFrame,
-    predicates: dict[str, tuple],
-) -> DataFrame:
-    """Read ``path`` with files pruned through the stats ``index``: only
-    files whose footer spans can match the predicates enter the scan
-    plan.  The row-level filter is applied ON TOP (file granularity is
-    coarser than the predicate), so the result equals the unpruned
-    filtered read — tested file-count-down, result-identical.  Zero
-    matching files short-circuits to an empty DataFrame with the source
-    schema."""
-    schema = spark.read.parquet(path).schema
-    files = prune_files(index, predicates)
-    if not files:
-        out = spark.createDataFrame([], schema)
-    else:
-        # basePath keeps directory-encoded (hive) partition values when
-        # reading an explicit file list — without it a partitioned
-        # dataset's partition columns would silently read back NULL
-        out = (
-            spark.read.option("basePath", path)
-            .schema(schema)
-            .parquet(*files)
-        )
-    return out.filter(_pred_parts(predicates)[1])
 
 
 # ---------------------------------------------------------------------------
@@ -3594,15 +3317,18 @@ def _txn_rewrite(
         }
 
     manifest = _require_manifest(spark, mdir)
-    files_total = manifest.count()
     ranges, hit = _pred_parts(predicates)
     # candidates default to manifest-pruned files; an explicit list
     # (compaction picks by SIZE, not by value span) must still be
-    # snapshot-consistent, so it is intersected with the manifest
+    # snapshot-consistent, so it is intersected with the manifest.
+    # Either way ONE job returns the files and the manifest's total.
+    matched, files_total = _prune_files_with_total(
+        manifest, ranges if candidates is None else {}
+    )
     if candidates is None:
-        cand = prune_files(manifest, ranges)
+        cand = matched
     else:
-        listed = {r["file"] for r in manifest.select("file").collect()}
+        listed = set(matched)
         cand = [f for f in candidates if f in listed]
         if candidates and not cand:
             if any(not fs.exists(hp(f)) for f in candidates):
@@ -4328,11 +4054,11 @@ def read_table(
        here too (directory-derived manifest stats).
     2. **Row-group skipping** — the surviving files' footer min/max
        meet the pushed filters (free when the data was laid out with
-       ``cluster_parquet``).
+       ``cluster_table``).
     3. **Bloom/dictionary skipping** — scalar predicates stay ``==`` in
        the pushed filter, so parquet bloom filters installed by
-       ``cluster_parquet``/``compact_parquet`` (``bloom_cols``) and
-       dictionary pages skip row groups on point lookups.
+       ``cluster_table`` (``bloom_cols``) and dictionary pages skip
+       row groups on point lookups.
 
     The exact row-level condition is applied ON TOP, so the result
     always equals the plain filtered scan (the registered query's
@@ -5275,28 +5001,34 @@ def compact_table(
     manifest-tracked table as ONE snapshot transaction — the
     maintenance op a continuously-ingesting lake runs without pausing
     readers.  ``append_files`` lands one file set per micro-batch, so a
-    long-running stream fragments the table; compacting it by hand
-    (``compact_parquet`` + ``update_stats_index``) deletes files before
-    the manifest refresh and a concurrent snapshot reader breaks.  Here
-    the rewrite rides ``_txn_rewrite``: the fragments are read, rows
-    repartitioned into ``ceil(bytes / target_bytes)`` files, the new
-    files move in UNREFERENCED, the manifest commits atomically (old
-    fragments out, compacted files in), and only then are the fragments
-    swept — a reader on the old snapshot finishes against the old
-    files, a reader on the new one never sees both.
+    long-running stream fragments the table.  The rewrite rides
+    ``_txn_rewrite``: the fragments are read, rows repartitioned into
+    ``ceil(bytes / target_bytes)`` files, the new files move in
+    UNREFERENCED, the manifest commits atomically (old fragments out,
+    compacted files in), and only then are the fragments swept — a
+    reader on the old snapshot finishes against the old files, a reader
+    on the new one never sees both.
 
     ``small_bytes`` compacts only files under that size (the OPTIMIZE
     norm — already-compacted files keep their inodes); None compacts
     everything.  Hive-partitioned tables keep their directory encoding
-    (``_txn_rewrite``'s partitionBy round-trip); per-partition file
-    budgets for heavily-skewed layouts remain
-    ``compact_partitioned_parquet``'s job.  Rows are never changed —
+    (``_txn_rewrite``'s partitionBy round-trip), and each partition
+    gets its own file budget ``n_i = ceil(bytes_i / target_bytes)``
+    over its small files' bytes: the budgets (one row per partition)
+    broadcast-join onto the rows, a ``floor(rand * n_i)`` salt splits
+    each partition, and one hash repartition on (partition cols, salt)
+    lands at most ``n_i`` files in each directory — in the same one
+    write job.  A global round-robin ``repartition(n)`` would land up
+    to ``n`` files in EVERY directory instead.  The salt places rows,
+    never changes them; NULL partition values (the hive default
+    directory) take one file.  Rows are never changed —
     ``rows_before == rows_after`` is part of the returned ledger and
     the tests.
     """
     mdir = _manifest_dir(path, manifest_path)
     jvm, hp, fs = _fs_for(spark, path)
-    sizes = {}
+    pcols = committed_partitioning(spark, mdir) or []
+    sizes: dict[str, tuple[int, tuple]] = {}
     for rel, ln in _leaf_files(spark, path):
         # qualify through the FS so the candidate list intersects the
         # manifest's file-uri form (hdfs://nn/... fully-qualified;
@@ -5306,10 +5038,10 @@ def compact_table(
         uri = q.toString()
         if uri.startswith("file:"):
             uri = q.toUri().getPath()
-        sizes[uri] = ln
+        sizes[uri] = (ln, tuple(_dir_value(rel, c) for c in pcols))
     small = [
         f
-        for f, ln in sorted(sizes.items())
+        for f, (ln, _part) in sorted(sizes.items())
         if small_bytes is None or ln < int(small_bytes)
     ]
     if len(small) < 2:  # nothing to merge
@@ -5322,15 +5054,54 @@ def compact_table(
             "partitioned": False,
             "version": manifest_version(spark, mdir),
         }
-    bytes_in = sum(sizes[f] for f in small)
-    n_out = max(1, -(-bytes_in // int(target_bytes)))
+    part_bytes: dict[tuple, int] = {}
+    for f in small:
+        ln, part = sizes[f]
+        part_bytes[part] = part_bytes.get(part, 0) + ln
+    bytes_in = sum(part_bytes.values())
+    # a flat table is one "partition" () whose budget is the file count
+    budgets = {
+        part: max(1, -(-b // int(target_bytes)))
+        for part, b in part_bytes.items()
+    }
+    n_out = sum(budgets.values())
+
+    def _relayout(touched: DataFrame, _hit) -> DataFrame:
+        if not pcols:
+            return touched.repartition(int(n_out))
+        bud = spark.createDataFrame(
+            [part + (n,) for part, n in budgets.items()],
+            T.StructType(
+                [T.StructField(c, T.StringType()) for c in pcols]
+                + [T.StructField("_nf", T.LongType())]
+            ),
+        ).select(
+            # directory values parse as strings: cast to the committed
+            # types so the join keys hit
+            *(
+                F.col(c).cast(touched.schema[c].dataType).alias(c)
+                for c in pcols
+            ),
+            "_nf",
+        )
+        return (
+            touched.join(F.broadcast(bud), pcols, "left")
+            .withColumn(
+                "_salt",
+                F.floor(F.rand(42) * F.coalesce("_nf", F.lit(1))).cast(
+                    "int"
+                ),
+            )
+            .repartition(int(n_out), *pcols, "_salt")
+            .drop("_nf", "_salt")
+        )
 
     ledger = _txn_rewrite(
         spark,
         path,
         manifest_path,
         {},
-        lambda touched, _hit: touched.repartition(int(n_out)),
+        _relayout,
         cols,
         candidates=small,
         keep_versions=keep_versions,
@@ -5366,11 +5137,22 @@ def cluster_table(
 ) -> dict:
     """OPTIMIZE ORDER/ZORDER BY through the log: re-layout a
     manifest-tracked table CLUSTERED on ``keys`` as ONE snapshot
-    transaction — ``cluster_parquet``'s layouts (lexicographic
-    range-sort, or quantile-bucketed Morton z-order for multi-key
-    workloads, optionally + parquet blooms on other columns) committed
-    through the same protocol as compaction, so snapshot readers are
-    never paused and a crash leaves exactly one committed version.
+    transaction, committed through the same protocol as compaction, so
+    snapshot readers are never paused and a crash leaves exactly one
+    committed version.  Two layouts (``_clustered``):
+
+    - ``zorder=False`` — ``repartitionByRange`` on the keys plus an
+      intra-partition sort: total order on the LEADING key, the best
+      skipping there and none on the others;
+    - ``zorder=True`` — each key is rank-normalized into ``n_buckets``
+      quantile buckets (skew-proof; ONE key-column-pruned
+      ``approxQuantile`` probe for all keys, ``_quantile_cuts``) and
+      the bucket ids are Morton-interleaved, so predicates on ANY
+      clustered key skip a large fraction of row groups.
+
+    ``bloom_cols`` adds parquet bloom filters on OTHER columns in the
+    same rewrite (``_with_blooms``): equality lookups on
+    high-cardinality columns the sort cannot help.
     After it, the manifest's per-file spans tile the key range and
     ``read_table`` range predicates prune to the files holding
     matching rows — on a streamed-in (arrival-ordered) 100 TB table

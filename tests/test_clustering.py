@@ -1,4 +1,4 @@
-"""Data-layout clustering (``sinks.cluster_parquet``): round-trip
+"""Data-layout clustering (``sinks.cluster_table``): round-trip
 exactness, and MEASURED row-group skipping — both statically (parquet
 footer min/max disjointness via pyarrow) and at RUNTIME (the Spark
 scan node's ``numOutputRows`` after a pushed range filter, i.e. the
@@ -19,7 +19,7 @@ import glob
 import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
-from evmtrace_etl_spark.sinks import cluster_parquet
+from evmtrace_etl_spark.sinks import append_files, cluster_table
 
 
 def _dir_bytes(path: str) -> int:
@@ -28,6 +28,15 @@ def _dir_bytes(path: str) -> int:
     return sum(
         os.path.getsize(p) for p in glob.glob(path + "/part-*.parquet")
     )
+
+
+def _clustered_table(spark, df, path: str, keys, n_files: int, **kw) -> dict:
+    """Land ``df`` in a lake table at ``path`` and cluster it on
+    ``keys`` at a target of ``1/n_files`` of the landed bytes; returns
+    the ``cluster_table`` ledger."""
+    append_files(spark, df, path, cols=list(keys))
+    tb = max(1, -(-_dir_bytes(path) // n_files))
+    return cluster_table(spark, path, keys, target_bytes=tb, **kw)
 
 
 def _touched_row_groups(path: str, col: str, lo, hi) -> tuple[int, int]:
@@ -75,25 +84,18 @@ def _fixture(spark, tmp_path):
         F.col("id").alias("v"),
     )
     df.repartition(8).write.parquet(src)
-    sz = _dir_bytes(src)
-    s1 = cluster_parquet(spark, src, lin, ["a", "b"], target_bytes=-(-sz // 8))
-    s2 = cluster_parquet(
-        spark,
-        src,
-        zo,
-        ["a", "b"],
-        target_bytes=-(-sz // 32),
-        zorder=True,
-        n_buckets=8,
+    s1 = _clustered_table(spark, df.repartition(8), lin, ["a", "b"], 8)
+    s2 = _clustered_table(
+        spark, df.repartition(8), zo, ["a", "b"], 32, zorder=True, n_buckets=8
     )
     return src, lin, zo, s1, s2
 
 
 def test_cluster_roundtrip_and_ledger(spark, tmp_path):
     src, lin, zo, s1, s2 = _fixture(spark, tmp_path)
-    assert s1["files_out"] == s1["n_target_files"] == 8
-    assert s2["files_out"] == s2["n_target_files"] == 32
-    assert s2["zorder"] and s2["n_buckets"] == 8
+    assert s1["files_added"] == s1["n_target_files"] == 8
+    assert s2["files_added"] == s2["n_target_files"] == 32
+    assert s2["zorder"] and s1["rows_before"] == s1["rows_after"]
     want = sorted(tuple(r) for r in spark.read.parquet(src).collect())
     for path in (lin, zo):
         got = sorted(tuple(r) for r in spark.read.parquet(path).collect())
@@ -150,7 +152,6 @@ def test_zorder_skew_proof_quantile_buckets(spark, tmp_path):
     zipf-ish key across the full z-range, so a slab over the DENSE
     region (where uniform min/max bucketing would dump ~all rows into
     one mega-bucket and skip nothing) still skips row groups."""
-    src = str(tmp_path / "skew_src")
     dst = str(tmp_path / "skew_dst")
     # value = floor(1/u) - 1: ~half the mass at 0, long tail upward
     df = spark.range(100_000).select(
@@ -158,16 +159,9 @@ def test_zorder_skew_proof_quantile_buckets(spark, tmp_path):
         (F.hash(F.col("id")) % 1000).alias("u"),
         F.col("id").alias("v"),
     )
-    df.repartition(8).write.parquet(src)
-    sz = _dir_bytes(src)
-    cluster_parquet(
-        spark,
-        src,
-        dst,
-        ["heavy", "u"],
-        target_bytes=-(-sz // 32),
-        zorder=True,
-        n_buckets=8,
+    _clustered_table(
+        spark, df.repartition(8), dst, ["heavy", "u"], 32,
+        zorder=True, n_buckets=8,
     )
     # tail slab: tiny row fraction, and most groups skippable
     hit, tot = _touched_row_groups(dst, "heavy", 100, 10_000_000)
@@ -197,9 +191,7 @@ def test_timestamp_clustering_skips_row_groups(spark, tmp_path):
         F.hash("id").alias("v"),
     )
     df.orderBy("v").repartition(8).write.parquet(src)
-    cluster_parquet(
-        spark, src, lin, ["ts"], target_bytes=-(-_dir_bytes(src) // 16)
-    )
+    _clustered_table(spark, df.orderBy("v").repartition(8), lin, ["ts"], 16)
     utc = datetime.timezone.utc  # pyarrow stats are tz-aware for MICROS
     lo = datetime.datetime(2024, 1, 10, tzinfo=utc)
     hi = datetime.datetime(2024, 1, 11, tzinfo=utc)
@@ -222,19 +214,14 @@ def test_bloom_cols_skip_point_lookups_on_unclustered_column(
     blooms the scan decodes ~everything; with ``bloom_cols=['h']`` the
     reader drops non-matching row groups off the parquet bloom filters
     (measured off the scan node's numOutputRows)."""
-    src = str(tmp_path / "src")
     plain = str(tmp_path / "plain")
     bloomed = str(tmp_path / "bloomed")
     df = spark.range(200_000).select(
         (F.col("id") % 500).alias("a"), F.hash("id").alias("h")
     )
-    df.repartition(4).write.option(
-        "parquet.block.size", 256 * 1024
-    ).parquet(src)
-    tb = -(-_dir_bytes(src) // 8)
-    cluster_parquet(spark, src, plain, ["a"], target_bytes=tb)
-    cluster_parquet(
-        spark, src, bloomed, ["a"], target_bytes=tb,
+    _clustered_table(spark, df.repartition(4), plain, ["a"], 8)
+    _clustered_table(
+        spark, df.repartition(4), bloomed, ["a"], 8,
         bloom_cols=["h"], bloom_ndv=200_000,
     )
     target = df.filter(F.col("id") == 123_456).collect()[0]["h"]
@@ -351,10 +338,10 @@ def test_quantile_bucket_monotone_and_bounded(spark, vals, n_buckets):
     what makes footer min/max selective) and within [0, n_buckets-1];
     NULLs land in bucket 0.  Exact cutpoint placement is
     approxQuantile's business, deliberately NOT pinned."""
-    from evmtrace_etl_spark.sinks import _quantile_bucket
+    from evmtrace_etl_spark.sinks import _bucket_from_cuts, _quantile_cuts
 
     df = spark.createDataFrame([(v,) for v in vals], "x: int")
-    b = _quantile_bucket(df, "x", n_buckets, 0.001)
+    b = _bucket_from_cuts("x", _quantile_cuts(df, ["x"], n_buckets, 0.001)[0])
     got = df.select("x", b.alias("b")).collect()
     assert all(0 <= r["b"] <= n_buckets - 1 for r in got)
     non_null = sorted(
@@ -388,21 +375,13 @@ def test_cluster_roundtrip_property(
     skipping arithmetic depends on)."""
     import os
 
-    base = str(tmp_path_factory.mktemp("clprop"))
-    src, dst = os.path.join(base, "src"), os.path.join(base, "dst")
+    dst = os.path.join(str(tmp_path_factory.mktemp("clprop")), "dst")
     df = spark.createDataFrame(rows, "a: int, b: int, c: boolean")
-    df.repartition(3).write.parquet(src)
-    sz = _dir_bytes(src)
-    stats = cluster_parquet(
-        spark,
-        src,
-        dst,
-        ["a", "b"],
-        target_bytes=max(1, -(-sz // n_files)),
-        zorder=zorder,
-        n_buckets=4,
+    stats = _clustered_table(
+        spark, df.repartition(3), dst, ["a", "b"], n_files,
+        zorder=zorder, n_buckets=4,
     )
-    assert stats["files_out"] <= max(stats["n_target_files"], 1)
+    assert stats["files_added"] <= max(stats["n_target_files"], 1)
     got = sorted(
         (tuple(r) for r in spark.read.parquet(dst).collect()),
         key=repr,

@@ -1,6 +1,6 @@
-"""Small-file compaction (``sinks.compact_parquet``): the file-count
-math, exact content preservation, and both layout strategies
-(round-robin repartition vs shuffle-free coalesce)."""
+"""Small-file compaction through the lake log (``sinks.compact_table``):
+the file-count math on flat tables, exact content preservation, and
+the per-partition file budget on hive-partitioned tables."""
 
 from __future__ import annotations
 
@@ -8,88 +8,89 @@ import os
 
 from pyspark.sql import functions as F
 
-from evmtrace_etl_spark.sinks import compact_parquet
+from evmtrace_etl_spark.sinks import append_files, compact_table, read_table
+
+
+def _data_files(path: str) -> list[str]:
+    return [
+        f
+        for f in os.listdir(path)
+        if not (f.startswith("_") or f.startswith("."))
+        and os.path.isfile(os.path.join(path, f))
+    ]
 
 
 def _dir_bytes(path: str) -> int:
-    total = 0
-    for root, _dirs, files in os.walk(path):
-        for f in files:
-            if not (f.startswith("_") or f.startswith(".")):
-                total += os.path.getsize(os.path.join(root, f))
-    return total
+    return sum(os.path.getsize(os.path.join(path, f)) for f in _data_files(path))
+
+
+def _fragmented(spark, tbl: str, df, n_appends: int, pcol: str) -> None:
+    """Land ``df`` as ``n_appends`` appends to a table partitioned by
+    ``pcol``: one small file per partition directory per append (rows
+    split by a hash of ``v``, independent of the partition value)."""
+    for i in range(n_appends):
+        append_files(
+            spark,
+            df.filter(F.pmod(F.hash("v"), F.lit(n_appends)) == i),
+            tbl,
+            cols=["v"],
+            partition_by=[pcol],
+        )
 
 
 def test_compact_repartition_even_files(spark, tmp_path):
-    src, dst = str(tmp_path / "src"), str(tmp_path / "dst")
+    tbl = str(tmp_path / "t")
     df = spark.range(20_000).withColumn("v", F.col("id") * 2)
-    df.repartition(64).write.parquet(src)
+    append_files(spark, df.repartition(64), tbl, cols=["id"])
+    assert len(_data_files(tbl)) == 64
 
-    target = -(-_dir_bytes(src) // 4)  # aim for ~4 output files
-    stats = compact_parquet(spark, src, dst, target_bytes=target)
+    target = -(-_dir_bytes(tbl) // 4)  # aim for ~4 output files
+    led = compact_table(spark, tbl, target_bytes=target)
 
-    assert stats["files_in"] == 64
-    assert stats["n_target_files"] in (4, 5)  # ceil of measured bytes
-    # round-robin repartition writes exactly n non-empty files
-    assert stats["files_out"] == stats["n_target_files"]
-    assert stats["files_out"] < stats["files_in"]
+    assert led["files_rewritten"] == 64
+    assert led["n_target_files"] in (4, 5)  # ceil of measured bytes
+    # a flat table round-robins into exactly n non-empty files
+    assert led["files_added"] == led["n_target_files"]
+    assert len(_data_files(tbl)) == led["files_added"]
+    assert led["rows_before"] == led["rows_after"] == 20_000
 
     # content preserved exactly
-    got = sorted(tuple(r) for r in spark.read.parquet(dst).collect())
+    got = sorted(tuple(r) for r in read_table(spark, tbl).collect())
     want = sorted(tuple(r) for r in df.collect())
     assert got == want
 
 
-def test_compact_coalesce_no_shuffle(spark, tmp_path):
-    src, dst = str(tmp_path / "src"), str(tmp_path / "dst")
-    spark.range(5_000).write.mode("overwrite").parquet(src)
-    # huge target → everything coalesces into one file, zero shuffle
-    stats = compact_parquet(
-        spark, src, dst, target_bytes=1 << 40, shuffle=False
-    )
-    assert stats["n_target_files"] == 1
-    assert stats["files_out"] == 1
-    assert spark.read.parquet(dst).count() == 5_000
-
-
 def test_compact_partitioned_preserves_layout_and_budgets(spark, tmp_path):
-    src, dst = str(tmp_path / "psrc"), str(tmp_path / "pdst")
+    tbl = str(tmp_path / "pt")
     df = spark.range(8_000).select(
         (F.col("id") % 4).alias("chain_id"),
         F.col("id").alias("v"),
         (F.col("id") * 3).alias("w"),
     )
     # 16 small files in each of the 4 partition dirs
-    df.repartition(16).write.partitionBy("chain_id").parquet(src)
-    from evmtrace_etl_spark.sinks import compact_partitioned_parquet
+    _fragmented(spark, tbl, df, 16, "chain_id")
+    dirs = {c: os.path.join(tbl, f"chain_id={c}") for c in range(4)}
+    assert all(len(_data_files(d)) == 16 for d in dirs.values())
+    want = sorted(tuple(r) for r in read_table(spark, tbl).collect())
 
     # target = half a partition's bytes → per-partition budget n_i == 2
-    per_part = max(
-        _dir_bytes(os.path.join(src, f"chain_id={c}")) for c in range(4)
-    )
-    stats = compact_partitioned_parquet(
-        spark, src, dst, ["chain_id"], target_bytes=-(-per_part // 2)
-    )
-    assert stats["files_in"] == 64
-    assert stats["n_partitions"] == 4
-    assert stats["n_target_files"] <= 8
+    sizes = {c: _dir_bytes(d) for c, d in dirs.items()}
+    target = -(-max(sizes.values()) // 2)
+    budgets = {c: max(1, -(-b // target)) for c, b in sizes.items()}
+    led = compact_table(spark, tbl, target_bytes=target)
+    assert led["files_rewritten"] == 64
+    assert led["partitioned"]
+    assert led["n_target_files"] == sum(budgets.values()) <= 8
     # hive layout preserved, each dir within its budget (salt may leave
-    # a value empty, never over-full), and far fewer files than before
-    for c in range(4):
-        d = os.path.join(dst, f"chain_id={c}")
-        assert os.path.isdir(d)
-        n = sum(
-            1
-            for f in os.listdir(d)
-            if not (f.startswith("_") or f.startswith("."))
-        )
-        assert 1 <= n <= 2, (c, n)
-    assert stats["files_out"] < stats["files_in"]
+    # a value empty, never over-full) — a global repartition(8) would
+    # land up to 8 files in every dir
+    for c, d in dirs.items():
+        assert 1 <= len(_data_files(d)) <= budgets[c], (c, budgets[c])
+    assert led["files_added"] <= led["n_target_files"]
 
     # content (including the partition column) preserved exactly
-    got = sorted(tuple(r) for r in spark.read.parquet(dst).collect())
-    want = sorted(tuple(r) for r in spark.read.parquet(src).collect())
-    assert got == want
+    got = sorted(tuple(r) for r in read_table(spark, tbl).collect())
+    assert got == want and len(got) == 8_000
 
     # and a filter on the partition column still prunes directories
     import contextlib
@@ -97,7 +98,7 @@ def test_compact_partitioned_preserves_layout_and_budgets(spark, tmp_path):
 
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
-        spark.read.parquet(dst).filter(F.col("chain_id") == 2).explain(
+        spark.read.parquet(tbl).filter(F.col("chain_id") == 2).explain(
             mode="formatted"
         )
     assert "PartitionFilters" in buf.getvalue()
@@ -109,7 +110,7 @@ from hypothesis import strategies as st
 
 @given(
     parts=st.lists(st.integers(50, 300), min_size=2, max_size=4),
-    frag=st.integers(2, 8),
+    frag=st.integers(2, 4),
     divisor=st.integers(1, 5),
 )
 @settings(
@@ -121,40 +122,27 @@ from hypothesis import strategies as st
 def test_partitioned_compaction_roundtrip_property(
     spark, tmp_path_factory, parts, frag, divisor
 ):
-    """Property: for ANY partition sizing/fragmentation/target, the
-    layout-preserving compactor (a) round-trips the data exactly,
-    (b) keeps the exact set of partition dirs, and (c) never exceeds
-    the per-partition file budget ceil(bytes_i / target) computed here
-    independently from the on-disk sizes."""
-    from evmtrace_etl_spark.sinks import compact_partitioned_parquet
-
-    base = str(tmp_path_factory.mktemp("pcomp"))
-    src, dst = os.path.join(base, "src"), os.path.join(base, "dst")
+    """Property: for ANY partition sizing/fragmentation/target,
+    ``compact_table`` on a hive-partitioned table (a) round-trips the
+    data exactly, (b) keeps the exact set of partition dirs, and
+    (c) never exceeds the per-partition file budget ceil(bytes_i /
+    target) computed here independently from the on-disk sizes."""
+    tbl = os.path.join(str(tmp_path_factory.mktemp("pcomp")), "t")
     rows = [(p, p * 100_000 + i) for p, n in enumerate(parts) for i in range(n)]
     df = spark.createDataFrame(rows, "p: int, v: long")
-    df.repartition(frag).write.partitionBy("p").parquet(src)
+    _fragmented(spark, tbl, df, frag, "p")
 
-    dirs = sorted(d for d in os.listdir(src) if d.startswith("p="))
-    sizes = {d: _dir_bytes(os.path.join(src, d)) for d in dirs}
+    dirs = sorted(d for d in os.listdir(tbl) if d.startswith("p="))
+    sizes = {d: _dir_bytes(os.path.join(tbl, d)) for d in dirs}
     target = max(1, max(sizes.values()) // divisor)
-    stats = compact_partitioned_parquet(
-        spark, src, dst, ["p"], target_bytes=target
-    )
-    assert stats["n_partitions"] == len(dirs)
+    led = compact_table(spark, tbl, target_bytes=target)
 
     budgets = {d: max(1, -(-b // target)) for d, b in sizes.items()}
-    out_dirs = sorted(d for d in os.listdir(dst) if d.startswith("p="))
-    assert out_dirs == dirs
+    assert led["n_target_files"] == sum(budgets.values())
+    assert sorted(d for d in os.listdir(tbl) if d.startswith("p=")) == dirs
     for d in dirs:
-        n = len(
-            [
-                f
-                for f in os.listdir(os.path.join(dst, d))
-                if not (f.startswith("_") or f.startswith("."))
-            ]
-        )
+        n = len(_data_files(os.path.join(tbl, d)))
         assert 1 <= n <= budgets[d], (d, n, budgets[d])
 
-    got = sorted(tuple(r) for r in spark.read.parquet(dst).collect())
-    want = sorted(tuple(r) for r in spark.read.parquet(src).collect())
-    assert got == want
+    got = read_table(spark, tbl).select(*df.columns).collect()
+    assert sorted(map(tuple, got)) == sorted(map(tuple, df.collect()))

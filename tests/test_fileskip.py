@@ -1,5 +1,5 @@
 """File-skipping stats index (``sinks.parquet_stats_index`` /
-``prune_files`` / ``read_file_pruned``): the manifest half of a
+``prune_files`` / ``read_table`` predicates): the manifest half of a
 lakehouse table format — footer-only per-file min/max, file-level
 pruning BEFORE the scan plan, result-identical to the unpruned read.
 """
@@ -12,10 +12,12 @@ import os
 from pyspark.sql import functions as F
 
 from evmtrace_etl_spark.sinks import (
-    cluster_parquet,
+    append_files,
+    cluster_table,
+    current_manifest,
     parquet_stats_index,
     prune_files,
-    read_file_pruned,
+    read_table,
 )
 import pytest
 
@@ -23,24 +25,35 @@ import pytest
 pytestmark = pytest.mark.slow
 
 
-def _build(spark, tmp_path, n_files: int = 8):
-    """Events-like table linearly clustered on ``k`` into ~n_files files
-    so the files tile disjoint k-ranges — the layout file skipping is
-    exact on."""
-    src = str(tmp_path / "src")
-    dst = str(tmp_path / "clustered")
-    df = spark.range(0, 20_000).select(
+def _events(spark):
+    return spark.range(0, 20_000).select(
         F.col("id").alias("k"),
         (F.col("id") % 7).alias("grp"),
         (F.col("id") * 2).cast("double").alias("v"),
     )
-    df.repartition(5).write.parquet(src)
+
+
+def _build(spark, tmp_path, n_files: int = 8):
+    """Plain parquet directory of an events-like table range-partitioned
+    on ``k`` into ``n_files`` sorted files, so the files tile disjoint
+    k-ranges — the layout file skipping is exact on."""
+    dst = str(tmp_path / "clustered")
+    _events(spark).repartitionByRange(n_files, "k").sortWithinPartitions(
+        "k"
+    ).write.parquet(dst)
+    return dst
+
+
+def _build_lake(spark, tmp_path, n_files: int = 8, **kw):
+    """The same table through the lake log: landed by ``append_files``
+    (stats on ``k`` and ``v``), then clustered on ``k`` into ~n_files
+    files by ``cluster_table``."""
+    dst = str(tmp_path / "lake")
+    append_files(spark, _events(spark).repartition(5), dst, cols=["k", "v"])
     sz = sum(
-        os.path.getsize(p) for p in glob.glob(src + "/part-*.parquet")
+        os.path.getsize(p) for p in glob.glob(dst + "/part-*.parquet")
     )
-    cluster_parquet(
-        spark, src, dst, ["k"], target_bytes=max(1, sz // n_files)
-    )
+    cluster_table(spark, dst, ["k"], target_bytes=max(1, sz // n_files), **kw)
     return dst
 
 
@@ -60,16 +73,16 @@ def test_index_one_row_per_file_and_exact_counts(spark, tmp_path):
 
 
 def test_pruned_read_skips_files_and_matches_full_scan(spark, tmp_path):
-    dst = _build(spark, tmp_path)
-    idx = parquet_stats_index(spark, dst, ["k"]).cache()
+    dst = _build_lake(spark, tmp_path)
+    idx = current_manifest(spark, dst + "/_stats_manifest").cache()
     total = idx.count()
     assert total >= 4  # the skipping claim needs >1 file
     pred = {"k": (3_000, 4_000)}
     kept = prune_files(idx, pred)
     assert 0 < len(kept) < total, (len(kept), total)
-    got = sorted(
-        tuple(r) for r in read_file_pruned(spark, dst, idx, pred).collect()
-    )
+    pruned = read_table(spark, dst, pred)
+    assert len(pruned.inputFiles()) == len(kept)
+    got = sorted(tuple(r) for r in pruned.collect())
     want = sorted(
         tuple(r)
         for r in spark.read.parquet(dst)
@@ -80,19 +93,18 @@ def test_pruned_read_skips_files_and_matches_full_scan(spark, tmp_path):
 
 
 def test_zero_matching_files_yields_empty_with_schema(spark, tmp_path):
-    dst = _build(spark, tmp_path)
-    idx = parquet_stats_index(spark, dst, ["k"])
-    out = read_file_pruned(spark, dst, idx, {"k": (10**9, 10**9 + 5)})
+    dst = _build_lake(spark, tmp_path)
+    out = read_table(spark, dst, {"k": (10**9, 10**9 + 5)})
     assert out.count() == 0
     assert out.columns == ["k", "grp", "v"]
 
 
 def test_multi_column_predicates_intersect(spark, tmp_path):
-    dst = _build(spark, tmp_path)
-    idx = parquet_stats_index(spark, dst, ["k", "v"]).cache()
+    dst = _build_lake(spark, tmp_path)
+    idx = current_manifest(spark, dst + "/_stats_manifest").cache()
     # v = 2k, so k in [3000, 4000] & v in [0, 6500] -> k in [3000, 3250]
     pred = {"k": (3_000, 4_000), "v": (0.0, 6_500.0)}
-    got = read_file_pruned(spark, dst, idx, pred)
+    got = read_table(spark, dst, pred)
     assert got.count() == 251
     assert len(prune_files(idx, pred)) <= len(
         prune_files(idx, {"k": (3_000, 4_000)})
@@ -344,18 +356,19 @@ def test_delete_crash_after_commit_rolls_forward(spark, tmp_path, monkeypatch):
     assert raw == 0
 
 
-def test_read_file_pruned_keeps_partition_values(spark, tmp_path):
-    """Pruned reads of a hive-partitioned dataset keep the
+def test_read_table_pruned_keeps_partition_values(spark, tmp_path):
+    """Pruned reads of a hive-partitioned table keep the
     directory-encoded partition column (basePath) — without it the
     values silently read back NULL."""
-    from evmtrace_etl_spark.sinks import parquet_stats_index
-
     part = str(tmp_path / "part")
-    spark.range(1000).selectExpr("id % 4 as p", "id as k").write.partitionBy(
-        "p"
-    ).parquet(part)
-    idx = parquet_stats_index(spark, part, ["k"])
-    got = read_file_pruned(spark, part, idx, {"k": (100, 200)})
+    append_files(
+        spark,
+        spark.range(1000).selectExpr("id % 4 as p", "id as k"),
+        part,
+        cols=["k"],
+        partition_by=["p"],
+    )
+    got = read_table(spark, part, {"k": (100, 200)})
     rows = got.collect()
     assert len(rows) == 101
     assert all(r["p"] is not None and r["p"] == r["k"] % 4 for r in rows)
@@ -732,28 +745,7 @@ def test_read_table_composes_all_skipping_tiers(spark, tmp_path):
     """The one-call read path: manifest file-skipping + row-group stats
     + bloom-eligible equality pushdown, result-identical to the plain
     filtered scan, with the file-skip ratio measured."""
-    import glob as _g
-
-    from evmtrace_etl_spark.sinks import (
-        cluster_parquet,
-        current_manifest,
-        read_table,
-        update_stats_index,
-    )
-
-    src = str(tmp_path / "src")
-    dst = str(tmp_path / "table")
-    spark.range(0, 20_000).selectExpr(
-        "id AS k", "id % 7 AS grp", "CAST(id * 2 AS DOUBLE) AS v"
-    ).repartition(5).write.parquet(src)
-    sz = sum(
-        os.path.getsize(p) for p in _g.glob(src + "/part-*.parquet")
-    )
-    cluster_parquet(
-        spark, src, dst, ["k"], target_bytes=max(1, sz // 8),
-        bloom_cols=["grp"],
-    )
-    update_stats_index(spark, dst, None, ["k"])  # in-table manifest
+    dst = _build_lake(spark, tmp_path, bloom_cols=["grp"])
 
     # range + equality predicates through the composed path
     pred = {"k": (3_000, 4_000), "grp": 5}
