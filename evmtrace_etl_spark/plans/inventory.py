@@ -4270,7 +4270,7 @@ def _lake_dv_checkpoint_build(spark: SparkSession, sf_dir: str) -> str:
         }
         assert after == before  # zero write amplification through it all
         mdir = tbl + "/_stats_manifest"
-        dvs = sinks._active_dvs(spark, mdir)
+        dvs = sinks._active_dvs(mdir)
         # 10 pre-checkpoint sidecars folded to 1 consolidated (per-row
         # versions) + the post-fold v11 sidecar
         assert len(dvs) == 2, dvs
@@ -4283,7 +4283,7 @@ def _lake_dv_checkpoint_build(spark: SparkSession, sf_dir: str) -> str:
         assert len(scans) == 2, scans  # plan-asserted debt bound
         # the fold stamped the protocol feature
         head = sinks._commit_info(
-            spark, mdir, sinks.manifest_version(spark, mdir)
+            mdir, sinks.manifest_version(spark, mdir)
         )
         assert "dv-per-row" in head.get("features", [])
         _BUILD_DONE["lake_dv_checkpoint"] = base
@@ -4386,7 +4386,7 @@ def _lake_maintain_build(spark: SparkSession, sf_dir: str) -> str:
         # fragments toward target size; compact then merges whatever
         # it left (possibly nothing at small SF)
         assert led["materialize"]["files_rewritten"] >= 1
-        assert sinks._active_dvs(spark, tbl + "/_stats_manifest") == []
+        assert sinks._active_dvs(tbl + "/_stats_manifest") == []
         led2 = sinks.maintain_table(
             spark, tbl, dv_files_threshold=2, min_age_s=0
         )
@@ -4542,7 +4542,7 @@ def _lake_mor_rebase_build(spark: SparkSession, sf_dir: str) -> str:
             assert p in after and after[p] == mt, p
         # the dv entry kept the ORIGINAL read-snapshot stamp (v1), so
         # the winner's rows (added_version 1) survive the suppression
-        dvs = sinks._active_dvs(spark, tbl + "/_stats_manifest")
+        dvs = sinks._active_dvs(tbl + "/_stats_manifest")
         assert [int(d["version"]) for d in dvs] == [1], dvs
         # exactly-once across the rebase
         assert delete_where(

@@ -14,11 +14,14 @@ gate → intent recovery → pending sweep, returning the pinned snapshot)
 and ``_land_commit`` the tail (``_TXN`` intent → move-in → stats rows →
 ``_commit_manifest`` → rebase or roll back → sweep → clear intent).
 The log has ONE wire format: every ``_COMMIT`` marker carries the
-``_MARKER_KEYS`` (schema, stats columns, kind, ts, ...) and every
-pending-removal entry is ``{file, rm_v}``; ``_commit_info`` refuses a
-marker in any other shape, naming it, instead of reading it under a
-guess (the stream source's offsets follow the same rule — see
-``sources.lake_changes``).
+``lake_log.MARKER_KEYS`` (schema, stats columns, kind, ts, ...) and
+every pending-removal entry is ``{file, rm_v}``; ``lake_log.commit_info``
+refuses a marker in any other shape, naming it, instead of reading it
+under a guess (the stream source reads through the same module, and its
+offsets follow the same rule — see ``sources.lake_changes``).  The log
+and the data files live on the local filesystem and are reached with
+the Python standard library; a ``scheme://`` path other than ``file:``
+raises (``lake_log.local_path``).
 
 - ``LakeUpsertSink`` — the UNIFIED path (r10): keyed upserts as
   ``merge_into`` snapshot transactions through the same manifest log
@@ -55,13 +58,25 @@ from __future__ import annotations
 import json
 import os
 import re
+import shutil
 import time
-from collections.abc import Callable, Iterable, Sequence
+from collections.abc import Callable, Iterable, Iterator, Sequence
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .lake_log import (
+    cdf_schema as _cdf_schema,
+    commit_info as _commit_info,
+    committed_versions as _committed_versions,
+    dir_value as _dir_value,
+    file_size as _file_size,
+    local_path as _local_path,
+    py_cast as _py_cast,
+    read_json as _read_json,
+)
 
 #: DB-API paramstyle → positional placeholder token
 _PARAM_TOKENS = {"qmark": "?", "format": "%s", "pyformat": "%s"}
@@ -136,15 +151,11 @@ class LakeUpsertSink:
         )
 
     def read(self, spark: SparkSession, table: str) -> DataFrame | None:
-        """Current table contents in the committed column order
-        (``read_table`` moves hive partition columns last), or None
-        before the first upsert."""
+        """Current table contents in the committed column order, or
+        None before the first upsert."""
         if not self._exists(spark, table):
             return None
-        path = self._path(table)
-        df = read_table(spark, path)
-        schema = committed_schema(spark, _manifest_dir(path, None))
-        return df if schema is None else df.select(*schema.fieldNames())
+        return read_table(spark, self._path(table))
 
     def upsert(
         self,
@@ -401,77 +412,26 @@ def _with_blooms(writer, bloom_cols: Sequence[str] | None, ndv: int):
     return writer
 
 
-def _walk_leaf_statuses(
-    spark: SparkSession, path: str, attempts: int = 5
-) -> list[tuple[str, str, int]]:
-    """(relative path, full URI, bytes) of every leaf file under
-    ``path`` via the Hadoop ``FileSystem`` recursive listing, with
-    hidden subtrees (``_``/``.``-prefixed segments) excluded — the
-    same rule Spark's own file index applies.
-
-    The ``RemoteIterator`` walk is NOT atomic: a concurrent actor
-    (vacuum sweeping retired files, a compactor replacing fragments —
-    the two-actor maintenance shape) can delete a directory between
-    the iterator's listing of the parent and its descent, and
-    ``hasNext()`` then throws ``FileNotFoundException`` mid-walk.
-    That race means the listing observed a half-applied state, so the
-    whole walk RESTARTS from scratch (bounded attempts) — vanished
-    entries simply don't appear in the consistent re-listing.  Any
-    other Java fault re-raises unchanged.
-
-    Two Java shapes observed for the same race: a plain
-    ``FileNotFoundException`` (directory removed before descent) and
-    ``RuntimeException: ... ls: cannot access ...: No such file or
-    directory`` (``RawLocalFileSystem`` shelling out for permissions
-    on an entry — e.g. an adjudicated ``_TXN`` marker — deleted
-    between listing and stat; hidden-path filtering happens in Python
-    AFTER the stat, so even metadata entries race)."""
-    from py4j.protocol import Py4JJavaError
-
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(conf)
-    root = fs.getFileStatus(p).getPath().toUri().getPath()
-    last: Exception | None = None
-    for _ in range(attempts):
-        try:
-            it = fs.listFiles(p, True)
-            out: list[tuple[str, str, int]] = []
-            while it.hasNext():
-                st = it.next()
-                full = st.getPath().toUri().getPath()
-                rel = full[len(root):].lstrip("/")
-                if any(s.startswith(("_", ".")) for s in rel.split("/")):
-                    continue
-                uri = st.getPath().toString()
-                if uri.startswith("file:"):
-                    uri = full  # posix path for local files (pyarrow)
-                out.append((rel, uri, int(st.getLen())))
-            return out
-        except Py4JJavaError as e:
-            msg = str(e)
-            if (
-                "FileNotFoundException" not in msg
-                and "No such file or directory" not in msg
-            ):
-                raise
-            last = e
-            time.sleep(0.02)
-    raise last  # type: ignore[misc]  # attempts >= 1 exhausted
-
-
-def _leaf_files(spark: SparkSession, path: str) -> list[tuple[str, int]]:
-    """(relative path, bytes) of every leaf DATA file under ``path``,
-    via the Hadoop ``FileSystem`` API (HDFS/S3A-portable, no driver
-    data collection); ``_SUCCESS``/checksum/hidden files excluded.
-    Hidden DIRECTORY subtrees (any ``_``/``.``-prefixed path segment)
-    are excluded too — the same rule Spark's own file index applies —
-    so metadata dirs like the in-table ``_stats_manifest`` are never
-    mistaken for data."""
-    return [
-        (rel, ln) for rel, _uri, ln in _walk_leaf_statuses(spark, path)
-    ]
+def _leaf_files(path: str) -> Iterator[tuple[str, str, int]]:
+    """(relative path, absolute path, bytes) of every leaf data file
+    under ``path``, walked lazily in sorted order.  Any ``_``/``.``-prefixed path segment is
+    skipped — the rule Spark's own file index applies — so
+    ``_SUCCESS``, checksums and metadata dirs like the in-table
+    ``_stats_manifest`` are never mistaken for data.  The walk is not
+    atomic: an entry a concurrent actor (vacuum, a compactor) removes
+    mid-walk is simply absent, as is a missing ``path``."""
+    root = _local_path(path)
+    for d, dirs, files in os.walk(root):
+        dirs[:] = sorted(x for x in dirs if not x.startswith(("_", ".")))
+        for name in sorted(files):
+            if name.startswith(("_", ".")):
+                continue
+            full = os.path.join(d, name)
+            try:
+                size = os.path.getsize(full)
+            except FileNotFoundError:
+                continue
+            yield os.path.relpath(full, root), full, size
 
 
 def _bucket_from_cuts(key: str, cuts: Sequence[float]) -> F.Column:
@@ -561,16 +521,6 @@ def _clustered(
 # File-skipping stats index (the manifest half of a lakehouse format)
 # ---------------------------------------------------------------------------
 
-def _leaf_file_uris(spark: SparkSession, path: str) -> list[str]:
-    """Full Hadoop URIs of every leaf data file under ``path`` so
-    executors resolve the same file the driver listed (hdfs://nn/...;
-    s3a://...); local file: URIs normalize to posix paths for
-    pyarrow.  Hidden directory subtrees (``_``/``.``-prefixed path
-    segments — e.g. the in-table ``_stats_manifest``) are skipped,
-    matching Spark's own listing semantics."""
-    return [uri for _rel, uri, _ln in _walk_leaf_statuses(spark, path)]
-
-
 def parquet_stats_index(
     spark: SparkSession,
     path: str,
@@ -588,7 +538,7 @@ def parquet_stats_index(
     and one that filters a manifest table.
 
     Cost model: O(files) footer reads, zero data reads — the file list
-    comes from the Hadoop FS API (driver, metadata-only) and the footer
+    comes from a driver-side directory walk (metadata-only) and the footer
     parsing is DISTRIBUTED (``mapInPandas`` over the path list with
     pyarrow on the executors), so indexing a million-file table is an
     embarrassingly parallel metadata job, not a scan.  Missing stats
@@ -623,8 +573,9 @@ def parquet_stats_index(
     phys_map = {c: _field_phys(by_name[c]) for c in cols}
     # hive partition columns: in the read schema but not in footers —
     # their stats come from the directory encoding, parsed per file
+    leaves = list(_leaf_files(path))
     dir_cols = set()
-    for rel, _ln in _leaf_files(spark, path):
+    for rel, _f, _ln in leaves:
         for seg in rel.split("/")[:-1]:
             if "=" in seg:
                 dir_cols.add(seg.split("=", 1)[0])
@@ -640,9 +591,7 @@ def parquet_stats_index(
         fields.append(T.StructField(f"{c}_max", dt))
     out_schema = T.StructType(fields)
 
-    if paths is None:
-        paths = _leaf_file_uris(spark, path)
-    paths = list(paths)
+    paths = [f for _r, f, _ln in leaves] if paths is None else list(paths)
     cols_list = list(cols)
     part_set = set(part_cols)
 
@@ -668,18 +617,6 @@ def parquet_stats_index(
     return out
 
 
-def _dir_value(path: str, col: str) -> str | None:
-    """The decoded hive directory value of ``col`` in ``path`` — None
-    for the default (NULL) partition or a path without that directory."""
-    from urllib.parse import unquote
-
-    for seg in path.split("/")[:-1]:
-        if seg.startswith(col + "="):
-            v = unquote(seg[len(col) + 1:])
-            return None if v == "__HIVE_DEFAULT_PARTITION__" else v
-    return None
-
-
 def _footer_stats_row(
     fpath: str,
     cols: Sequence[str],
@@ -689,24 +626,16 @@ def _footer_stats_row(
 ) -> dict:
     """One file's stats row — ``file``, ``n_rows`` and ``<c>_min`` /
     ``<c>_max`` for each of ``cols`` — from its parquet FOOTER alone
-    (pyarrow; HDFS/S3A URIs open through ``pyarrow.fs``).  Footer
-    columns are looked up by their PHYSICAL name (``phys``); a column
-    the file predates has no stats (NULL span).  Columns in
-    ``part_cols`` take the file's hive directory value as min == max —
-    a string, or ``part_cast(col, value)``.  The ONE reader behind both
+    (pyarrow).  Footer columns are looked up by their PHYSICAL name
+    (``phys``); a column the file predates has no stats (NULL span).
+    Columns in ``part_cols`` take the file's hive directory value as
+    min == max — a string, or ``part_cast(col, value)``.  The ONE reader behind both
     the distributed builder (``parquet_stats_index``, which casts
     partition values in Spark) and the driver-side batch path
     (``_local_stats_rows``), so their stats can never diverge."""
     import pyarrow.parquet as pq
 
-    if "://" in fpath:
-        from pyarrow import fs as pafs
-
-        filesystem, rel = pafs.FileSystem.from_uri(fpath)
-        with filesystem.open_input_file(rel) as f:
-            md = pq.ParquetFile(f).metadata
-    else:
-        md = pq.ParquetFile(fpath).metadata
+    md = pq.ParquetFile(fpath).metadata
     idx = {md.schema.column(i).name: i for i in range(md.num_columns)}
     rec: dict = {"file": fpath, "n_rows": md.num_rows}
     for c in cols:
@@ -743,25 +672,6 @@ def _footer_col_span(md, col_idx: int) -> tuple:
         lo = smin if lo is None else min(lo, smin)
         hi = smax if hi is None else max(hi, smax)
     return lo, hi
-
-
-def _py_cast(v, dt: T.DataType):
-    """A directory-encoded partition value (string) as the Python value
-    matching the source column type — the driver-side twin of the
-    ``cast`` the distributed stats builder applies."""
-    if v is None:
-        return None
-    if isinstance(dt, (T.LongType, T.IntegerType, T.ShortType, T.ByteType)):
-        return int(v)
-    if isinstance(dt, (T.DoubleType, T.FloatType)):
-        return float(v)
-    if isinstance(dt, T.BooleanType):
-        return str(v).lower() == "true"
-    if isinstance(dt, T.DateType):
-        import datetime
-
-        return datetime.date.fromisoformat(str(v))
-    return v  # strings (and anything hive encodes as one)
 
 
 def _local_stats_rows(
@@ -810,10 +720,7 @@ _LOCAL_STATS_MAX = 64
 
 
 def _write_parquet_local(
-    spark: SparkSession,
-    rows: list[dict],
-    schema: T.StructType,
-    dirpath: str,
+    rows: list[dict], schema: T.StructType, dirpath: str
 ) -> None:
     """Write ``rows`` as ONE parquet file under ``dirpath`` with pyarrow
     on the driver — the O(batch) manifest delta is a few rows, and a
@@ -827,17 +734,8 @@ def _write_parquet_local(
 
     arrow_schema = to_arrow_schema(schema)
     table = pa.Table.from_pylist(list(rows), schema=arrow_schema)
-    jvm, hp, fs = _fs_for(spark, dirpath)
-    fs.mkdirs(hp(dirpath))
-    target = dirpath.rstrip("/") + "/part-00000-delta.parquet"
-    if "://" in target:
-        from pyarrow import fs as pafs
-
-        filesystem, rel = pafs.FileSystem.from_uri(target)
-        with filesystem.open_output_stream(rel) as f:
-            pq.write_table(table, f)
-    else:
-        pq.write_table(table, target)
+    os.makedirs(dirpath, exist_ok=True)
+    pq.write_table(table, dirpath.rstrip("/") + "/part-00000-delta.parquet")
 
 
 def _pred_parts(
@@ -973,129 +871,63 @@ def _prune_files_with_total(
 _CHECKPOINT_EVERY = 10
 
 
-def _fs_for(spark: SparkSession, path: str):
-    """(jvm, Path class, FileSystem) for ``path`` via the Hadoop API."""
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    hp = jvm.org.apache.hadoop.fs.Path
-    return jvm, hp, hp(path).getFileSystem(conf)
-
-
 def _manifest_dir(path: str, manifest_path: str | None) -> str:
     """Default manifest location: ``_stats_manifest`` INSIDE the table
     dir (hidden to Spark scans and to ``_leaf_files`` alike), making a
-    table + its snapshot metadata one self-contained directory."""
+    table + its snapshot metadata one self-contained directory.  The
+    result is in ``_local_path`` form."""
     if manifest_path is not None:
-        return manifest_path
-    return path.rstrip("/") + "/_stats_manifest"
+        return _local_path(manifest_path)
+    return _local_path(path) + "/_stats_manifest"
 
 
-def _committed_versions(spark: SparkSession, manifest_path: str) -> list[int]:
-    jvm, hp, fs = _fs_for(spark, manifest_path)
-    if not fs.exists(hp(manifest_path)):
-        return []
-    out = []
-    for st in fs.listStatus(hp(manifest_path)):
-        name = st.getPath().getName()
-        if (
-            st.isDirectory()
-            and re.fullmatch(r"v\d+", name)
-            and fs.exists(hp(st.getPath(), "_COMMIT"))
-        ):
-            out.append(int(name[1:]))
-    return sorted(out)
+def _delete(p: str) -> None:
+    """Remove the file or directory tree at ``p``; a missing ``p`` is
+    not an error."""
+    if os.path.isdir(p) and not os.path.islink(p):
+        shutil.rmtree(p, ignore_errors=True)
+        return
+    try:
+        os.remove(p)
+    except FileNotFoundError:
+        pass
 
 
 def manifest_version(spark: SparkSession, manifest_path: str) -> int | None:
     """Highest committed manifest version, or None."""
-    vs = _committed_versions(spark, manifest_path)
+    vs = _committed_versions(_local_path(manifest_path))
     return vs[-1] if vs else None
 
 
-def _read_json_marker(spark: SparkSession, path: str) -> dict:
-    jvm, hp, fs = _fs_for(spark, path)
-    stream = fs.open(hp(path))
-    try:
-        data = bytes(jvm.org.apache.commons.io.IOUtils.toByteArray(stream))
-    finally:
-        stream.close()
-    return json.loads(data.decode("utf-8"))
-
-
 def _write_json_marker(
-    spark: SparkSession,
-    dirpath: str,
-    name: str,
-    payload: dict,
-    overwrite: bool = True,
+    dirpath: str, name: str, payload: dict, overwrite: bool = True
 ) -> None:
-    """Atomically create ``<dirpath>/<name>``: write a hidden tmp
-    sibling, then rename in — the rename is the single-op commit point
-    (atomic on POSIX and HDFS; on S3 a real deployment swaps this for a
-    conditional PUT).  ``overwrite=False`` keeps an existing marker in
-    place (HDFS rename-to-existing fails, making the commit marker
-    first-writer-wins there; the local-FS rename replaces, so the
-    version-expectation check in ``_commit_manifest`` is the portable
-    guard)."""
-    jvm, hp, fs = _fs_for(spark, dirpath)
-    fs.mkdirs(hp(dirpath))
-    tmp = hp(f"{dirpath}/.{name}.tmp")
-    out = fs.create(tmp, True)
-    try:
-        out.write(bytearray(json.dumps(payload).encode("utf-8")))
-    finally:
-        out.close()
-    final = hp(f"{dirpath}/{name}")
+    """Publish ``<dirpath>/<name>`` whole: write a hidden tmp sibling,
+    then move it in with one atomic filesystem op, so a reader sees the
+    old marker or the new one, never a partial file.  ``overwrite``
+    moves in with ``os.replace`` (atomic replace on POSIX).
+    ``overwrite=False`` publishes with ``os.link``, which fails when
+    the name exists — put-if-absent, so a commit marker is
+    first-writer-wins and the loser raises ``SnapshotConflict``."""
+    import uuid as _uuid
+
+    os.makedirs(dirpath, exist_ok=True)
+    final = f"{dirpath}/{name}"
+    tmp = f"{dirpath}/.{name}.{_uuid.uuid4().hex[:8]}.tmp"
+    with open(tmp, "w", encoding="utf-8") as f:
+        f.write(json.dumps(payload))
     if overwrite:
-        fs.delete(final, False)
-    # Hadoop reports rename failure by RETURNING FALSE, not raising —
-    # an unchecked result would report a lost commit as success.  With
-    # overwrite=False a false return means rename-to-existing lost the
-    # first-writer-wins race (HDFS semantics) → SnapshotConflict, the
-    # same contract the version-expectation check enforces portably.
-    if not fs.rename(tmp, final):
-        fs.delete(tmp, False)
-        if not overwrite:
-            raise SnapshotConflict(
-                f"marker {dirpath}/{name} already exists — another "
-                "writer committed first; retry from a fresh snapshot"
-            )
-        raise IOError(f"rename failed writing marker {dirpath}/{name}")
-
-
-#: the keys EVERY ``_COMMIT`` marker carries — the log's one record
-#: shape (pending entries are ``{file, rm_v}`` dicts).  The rest are
-#: stamped only when they apply: partition_by, op, metrics,
-#: constraints, col_mapping, cdf, retain, floor, dvs, features,
-#: protocol, dvs_delta, changes.
-_MARKER_KEYS = frozenset(
-    {
-        "version", "kind", "base_ckpt", "added", "removed", "pending",
-        "txns", "ts", "keep", "stats_cols", "schema",
-    }
-)
-
-
-def _commit_info(spark: SparkSession, manifest_path: str, version: int) -> dict:
-    """The ``_COMMIT`` marker payload of a committed version.  Every
-    commit writes the one shape (``_MARKER_KEYS``, dict pending
-    entries); a marker in any other shape raises, naming the marker,
-    instead of being read under a guessed default."""
-    where = f"{manifest_path}/v{version}/_COMMIT"
-    m = _read_json_marker(spark, where)
-    missing = sorted(_MARKER_KEYS - m.keys())
-    bare = [
-        e for e in m.get("pending", [])
-        if not (isinstance(e, dict) and {"file", "rm_v"} <= e.keys())
-    ]
-    if missing or bare:
-        raise ValueError(
-            f"commit marker {where} is not in the log's record shape "
-            f"(missing keys {missing}, pending entries not "
-            f"{{file, rm_v}}: {bare[:3]}) "
-            "— this build reads only the shape it writes"
-        )
-    return m
+        os.replace(tmp, final)
+        return
+    try:
+        os.link(tmp, final)
+    except FileExistsError:
+        raise SnapshotConflict(
+            f"marker {final} already exists — another writer committed "
+            "first; retry from a fresh snapshot"
+        ) from None
+    finally:
+        os.remove(tmp)
 
 
 def commit_timestamp(
@@ -1109,7 +941,7 @@ def commit_timestamp(
     (``table_history`` reports the same ``ts`` but reconstructs and
     aggregates every retained manifest)."""
     return float(
-        _commit_info(spark, _manifest_dir(path, manifest_path), version)["ts"]
+        _commit_info(_manifest_dir(path, manifest_path), version)["ts"]
     )
 
 
@@ -1128,14 +960,14 @@ def version_at_timestamp(
     would silently lie.  O(retained versions) marker reads, no data or
     manifest scan."""
     mdir = _manifest_dir(path, manifest_path)
-    versions = _committed_versions(spark, mdir)
+    versions = _committed_versions(mdir)
     if not versions:
         raise ValueError(f"no committed snapshot at {mdir}")
     cache: dict[int, dict] = {}
 
     def marker(v: int) -> dict:
         if v not in cache:
-            cache[v] = _commit_info(spark, mdir, v)
+            cache[v] = _commit_info(mdir, v)
         return cache[v]
 
     head = marker(versions[-1])
@@ -1184,20 +1016,16 @@ def version_at_timestamp(
     return best
 
 
-def _version_parquet_parts(
-    spark: SparkSession, manifest_path: str, version: int
-) -> list[str]:
+def _version_parquet_parts(manifest_path: str, version: int) -> list[str]:
     """Parquet part files inside one manifest version dir (a pure-
     removal delta commit carries none — its whole content is the
     marker)."""
-    jvm, hp, fs = _fs_for(spark, manifest_path)
     vdir = f"{manifest_path}/v{version}"
-    out = []
-    for st in fs.listStatus(hp(vdir)):
-        name = st.getPath().getName()
-        if st.isFile() and not name.startswith(("_", ".")):
-            out.append(f"{vdir}/{name}")
-    return out
+    return [
+        f"{vdir}/{e.name}"
+        for e in os.scandir(vdir)
+        if e.is_file() and not e.name.startswith(("_", "."))
+    ]
 
 
 def _manifest_schema_from(marker: dict) -> T.StructType:
@@ -1235,9 +1063,9 @@ def _reconstruct_manifest(
     algebra is order-free; schema evolution of the stats columns
     unions by name with NULL fill (conservative pruning).  Raises when
     the chain is no longer retained."""
-    marker = _commit_info(spark, manifest_path, version)
+    marker = _commit_info(manifest_path, version)
     base = int(marker["base_ckpt"])  # == version on a checkpoint
-    committed = set(_committed_versions(spark, manifest_path))
+    committed = set(_committed_versions(manifest_path))
     chain = list(range(base, version + 1))
     missing = [v for v in chain if v not in committed]
     if missing:
@@ -1249,10 +1077,10 @@ def _reconstruct_manifest(
     dirs: list[str] = []
     removed: set[str] = set()
     for v in chain:
-        m = marker if v == version else _commit_info(spark, manifest_path, v)
+        m = marker if v == version else _commit_info(manifest_path, v)
         if v > base:
             removed.update(m["removed"])
-        if _version_parquet_parts(spark, manifest_path, v):
+        if _version_parquet_parts(manifest_path, v):
             dirs.append(f"{manifest_path}/v{v}")
     if not dirs:  # an empty table's checkpoint (zero files tracked)
         return spark.createDataFrame(
@@ -1290,8 +1118,9 @@ def current_manifest(
     committed versions; raise ``keep_versions`` on the maintenance
     calls for a deeper history).  Raises if the requested version is
     not committed/retained."""
+    manifest_path = _local_path(manifest_path)
     if version is not None:
-        if version not in _committed_versions(spark, manifest_path):
+        if version not in _committed_versions(manifest_path):
             raise ValueError(
                 f"manifest version {version} is not committed/retained "
                 f"at {manifest_path}"
@@ -1366,9 +1195,7 @@ def _check_protocol(head: dict, action: str, ctx: str) -> None:
         )
 
 
-def _check_protocol_head(
-    spark: SparkSession, mdir: str, ctx: str
-) -> "tuple[int | None, dict]":
+def _check_protocol_head(mdir: str, ctx: str) -> "tuple[int | None, dict]":
     """Early writer-side protocol gate for the locked write/maintenance
     entry points — ``_open_txn`` runs it BEFORE ``_recover_txn`` /
     ``_sweep_removed``,
@@ -1388,16 +1215,16 @@ def _check_protocol_head(
     marker reuse THIS read instead of listing and reading the head a
     second time after recovery — recovery and the sweep never change
     the committed-version set, so the gate's head stays valid."""
-    v = manifest_version(spark, mdir)
-    if v is None:
+    vs = _committed_versions(mdir)
+    if not vs:
         return None, {}
-    head = _commit_info(spark, mdir, v)
+    head = _commit_info(mdir, vs[-1])
     _check_protocol(head, "write", ctx)
-    return v, head
+    return vs[-1], head
 
 
 def _open_txn(
-    spark: SparkSession, mdir: str, ctx: str, require: bool = False
+    mdir: str, ctx: str, require: bool = False
 ) -> "tuple[int | None, dict]":
     """THE head of every locked write, maintenance and DDL transaction,
     in its one safe order: the protocol gate (``_check_protocol_head``),
@@ -1408,9 +1235,9 @@ def _open_txn(
     ``require`` refuses a table with no committed snapshot.
     ``maintain_table`` (gate only: each step opens its own) and
     ``vacuum_table`` (age-floored recovery) keep their own variants."""
-    snap_v, head = _check_protocol_head(spark, mdir, ctx)
-    _recover_txn(spark, mdir)
-    _sweep_removed(spark, mdir)
+    snap_v, head = _check_protocol_head(mdir, ctx)
+    _recover_txn(mdir)
+    _sweep_removed(mdir)
     if require and snap_v is None:
         raise ValueError(
             f"no committed snapshot at {mdir} — create the table with "
@@ -1435,17 +1262,12 @@ def _head_schema(head: dict) -> T.StructType:
 
 
 def _target_files(
-    fs, hp, files: Sequence[str], target_bytes: int
+    files: Sequence[str], target_bytes: int
 ) -> tuple[int, int]:
     """``(ceil(total_bytes / target_bytes) ≥ 1, total_bytes)`` over
     ``files`` — the optimized-write output file count of a rewrite.  A
     file a racing commit already swept counts zero."""
-    total = 0
-    for f in files:
-        try:
-            total += fs.getFileStatus(hp(f)).getLen()
-        except Exception:  # pragma: no cover - racing sweep
-            pass
+    total = sum(_file_size(f) for f in files)
     return max(1, -(-total // int(target_bytes))), total
 
 
@@ -1522,7 +1344,7 @@ class ConstraintViolation(ValueError):
     contract: a constraint rejects the batch, it never filters it)."""
 
 
-def _dir_footer_rows(spark: SparkSession, dirpath: str) -> int:
+def _dir_footer_rows(dirpath: str) -> int:
     """Total row count of the parquet leaves under ``dirpath`` from
     their FOOTERS (driver-side pyarrow metadata reads — zero Spark
     jobs, O(files written) like ``_local_stats_rows``).  The
@@ -1530,20 +1352,10 @@ def _dir_footer_rows(spark: SparkSession, dirpath: str) -> int:
     zero-row fallback premise."""
     import pyarrow.parquet as pq
 
-    total = 0
-    for rel, _ln in _leaf_files(spark, dirpath):
-        fpath = dirpath.rstrip("/") + "/" + rel
-        if fpath.startswith("file:"):
-            fpath = re.sub(r"^file:/+", "/", fpath)
-        if "://" in fpath:  # HDFS/S3A URI — open via pyarrow fs
-            from pyarrow import fs as pafs
-
-            filesystem, rel2 = pafs.FileSystem.from_uri(fpath)
-            with filesystem.open_input_file(rel2) as f:
-                total += pq.ParquetFile(f).metadata.num_rows
-        else:
-            total += pq.ParquetFile(fpath).metadata.num_rows
-    return total
+    return sum(
+        pq.ParquetFile(f).metadata.num_rows
+        for _rel, f, _ln in _leaf_files(dirpath)
+    )
 
 
 def _obs_result(obs, verify_rows: "Callable[[], int] | None" = None) -> dict:
@@ -1630,35 +1442,25 @@ _LOG_LOCKS: dict[str, "_threading.Lock"] = {}
 _LOG_LOCKS_GUARD = _threading.Lock()
 
 
-def _lock_key(mdir: str) -> str:
-    """Canonical lock-registry key for a manifest dir: scheme-stripped
-    for the local FS, normpath'd, trailing-slash-free — two spellings
-    of the same table path (``file:`` URI vs posix, relative vs
-    absolute, trailing slash) must land on the SAME lock or the
-    same-driver intent→commit serialization silently evaporates."""
-    key = mdir
-    if key.startswith("file:"):
-        key = re.sub(r"^file:/+", "/", key)
-    if "://" not in key:  # leave non-local URIs (hdfs://…) untouched
-        key = os.path.normpath(os.path.abspath(key))
-    return key.rstrip("/") or "/"
-
-
 def _log_lock(mdir: str) -> "_threading.Lock":
     """Per-table in-process write lock, keyed on the canonical path
-    form (``_lock_key``).  Write entries take it through ``_locked``,
-    which carries the writer-concurrency contract."""
+    form (``_local_path``: two spellings of one table path — ``file:``
+    URI vs posix, relative vs absolute, trailing slash — share one
+    lock).  Write entries take it through ``_locked``, which carries
+    the writer-concurrency contract."""
     with _LOG_LOCKS_GUARD:
-        return _LOG_LOCKS.setdefault(_lock_key(mdir), _threading.Lock())
+        return _LOG_LOCKS.setdefault(_local_path(mdir), _threading.Lock())
 
 
 def _locked(fn):
     """Run the lake write entry ``fn`` under its table's ``_log_lock``,
-    resolved from the call's bound ``path`` / ``manifest_path``.  The
-    lock is a plain (non-reentrant) ``threading.Lock``: a caller that
-    already holds it — an entry composing another, or a test injecting
-    a competing writer inside a held lock — calls the unlocked body,
-    ``fn.__wrapped__``.  Writer concurrency contract:
+    resolved from the call's bound ``path`` / ``manifest_path``, which
+    reach ``fn`` in ``_local_path`` form — so the file lists its
+    commit records are absolute posix paths whatever spelling the
+    caller used.  The lock is a plain (non-reentrant)
+    ``threading.Lock``: a caller that already holds it — an entry
+    composing another, or a test injecting a competing writer inside a
+    held lock — calls the unlocked body, ``fn.__wrapped__``.  Writer concurrency contract:
 
     - SAME driver (the common deployment — multiple streams/maintenance
       ops on one SparkSession): transactions on one table serialize on
@@ -1666,9 +1468,10 @@ def _locked(fn):
       A can never interleave with writer B's head-of-op recovery
       (which would roll A's in-flight files back as if crashed).
     - DIFFERENT drivers: the COMMIT itself serializes on the
-      cross-process lease (``_CommitLease`` — atomic createNewFile on
-      ``_LOCK``), the version parquet renames into ``v<N>``
-      fail-if-exists, and the ``expected_version`` guard raises
+      cross-process lease (``_CommitLease`` — an ``O_CREAT|O_EXCL``
+      create of ``_LOCK``), the version parquet renames into ``v<N>``
+      (``os.rename`` onto a non-empty directory fails), the marker
+      lands put-if-absent, and the ``expected_version`` guard raises
       ``SnapshotConflict`` for the loser (who rolls its own files
       back) — two-process-tested.  Intent RECOVERY is lease-scoped
       too (``_recover_txn`` adjudicates under the same lease, and
@@ -1676,11 +1479,11 @@ def _locked(fn):
       maintenance actors in separate processes cannot both adjudicate
       one intent, and an adjudication cannot interleave with the
       victim's commit — the victim loses cleanly via
-      ``SnapshotConflict`` and retries.  What remains at the
-      Delta-on-S3-without-LogStore granularity: a LIVE remote writer
-      between intent and commit still LOOKS crashed, so an impatient
-      recovery wastes its work (never corrupts it); ``vacuum_table``
-      age-floors the marker to avoid that."""
+      ``SnapshotConflict`` and retries.  What remains: a LIVE writer
+      in another process between intent and commit still LOOKS
+      crashed, so an impatient recovery wastes its work (never
+      corrupts it); ``vacuum_table`` age-floors the marker to avoid
+      that."""
     import functools
     import inspect
 
@@ -1688,10 +1491,13 @@ def _locked(fn):
 
     @functools.wraps(fn)
     def locked(*args, **kwargs):
-        bound = sig.bind(*args, **kwargs).arguments
-        mdir = _manifest_dir(bound["path"], bound.get("manifest_path"))
-        with _log_lock(mdir):
-            return fn(*args, **kwargs)
+        bound = sig.bind(*args, **kwargs)
+        arg = bound.arguments
+        arg["path"] = _local_path(arg["path"])
+        if arg.get("manifest_path") is not None:
+            arg["manifest_path"] = _local_path(arg["manifest_path"])
+        with _log_lock(_manifest_dir(arg["path"], arg.get("manifest_path"))):
+            return fn(*bound.args, **bound.kwargs)
 
     return locked
 
@@ -1704,16 +1510,16 @@ _LEASE_TTL_S = 60
 
 
 class _CommitLease:
-    """Cross-PROCESS commit mutex: an atomic ``createNewFile`` on
-    ``<manifest>/_LOCK`` (atomic on local FS and HDFS; a real S3
-    deployment swaps this for a conditional PUT / DynamoDB LogStore,
-    exactly Delta-on-S3's shape).  The in-process ``_log_lock``
-    serializes same-driver writers; this lease serializes the
-    version-compute → manifest-rename → marker window across DRIVERS,
-    which also makes the marker-less-vdir crash cleanup safe: while
-    holding the lease, a v<N> without ``_COMMIT`` can only be a dead
-    writer's leftovers.  A lease older than ``_LEASE_TTL_S`` is broken
-    as crashed.
+    """Cross-PROCESS commit mutex: ``<manifest>/_LOCK`` created with
+    ``os.open(O_CREAT | O_EXCL)``, which the kernel makes atomic on a
+    local filesystem — of any number of racing creators exactly one
+    succeeds, the rest see ``FileExistsError``.  The in-process
+    ``_log_lock`` serializes same-driver writers; this lease serializes
+    the version-compute → manifest-rename → marker window across
+    DRIVERS, which also makes the marker-less-vdir crash cleanup safe:
+    while holding the lease, a v<N> without ``_COMMIT`` can only be a
+    dead writer's leftovers.  A lease older than ``_LEASE_TTL_S`` is
+    broken as crashed.
 
     The lease file carries an OWNERSHIP TOKEN: release deletes the
     lock only when the token is still ours, so a slow holder whose
@@ -1725,107 +1531,78 @@ class _CommitLease:
     whose re-read raced the delete can still remove a just-stamped
     lease); the commit-side ``_ATTEMPT`` token catches the resulting
     double-admission as a ``SnapshotConflict`` retry, never data
-    loss.  True closure needs compare-and-swap — a LogStore
-    (conditional PUT / DynamoDB), the documented Delta-on-S3
-    granularity."""
+    loss."""
 
-    def __init__(self, spark: SparkSession, manifest_path: str):
+    def __init__(self, manifest_path: str):
         import uuid as _uuid
 
-        self._spark = spark
         self._mdir = manifest_path
         self._path = f"{manifest_path}/_LOCK"
         self._token = _uuid.uuid4().hex
 
-    def _read_token(self, fs, hp) -> str | None:
+    def _read_token(self) -> str | None:
         try:
-            return _read_json_marker(self._spark, self._path).get("token")
-        except Exception:
+            return _read_json(self._path).get("token")
+        except (OSError, ValueError):
             return None  # empty/vanished/partial — unknown owner
 
     def __enter__(self):
-        import time as _time
-
-        jvm, hp, fs = _fs_for(self._spark, self._mdir)
-        fs.mkdirs(hp(self._mdir))
-        lock = hp(self._path)
-        deadline = _time.monotonic() + 2 * _LEASE_TTL_S
+        os.makedirs(self._mdir, exist_ok=True)
+        deadline = time.monotonic() + 2 * _LEASE_TTL_S
         while True:
-            created = False
             try:
-                created = bool(fs.createNewFile(lock))
-            except Exception:  # pragma: no cover - racing mkdirs
-                created = False
-            if created:
-                try:
-                    # stamp ownership (resets mtime — the lease clock)
-                    out = fs.create(lock, True)
-                    out.write(
-                        bytearray(
-                            json.dumps({"token": self._token}).encode()
-                        )
-                    )
-                    out.close()
-                    return self
-                except Exception:  # pragma: no cover - transient FS
-                    # we hold an UNSTAMPED lock we can no longer prove
-                    # ours — delete it and retry, rather than orphaning
-                    # it and stalling every writer for a full TTL
-                    try:
-                        fs.delete(lock, False)
-                    except Exception:
-                        pass
-                    continue
-            try:
-                st = fs.getFileStatus(lock)
-                age_ms = (
-                    jvm.java.lang.System.currentTimeMillis()
-                    - st.getModificationTime()
+                fd = os.open(
+                    self._path, os.O_CREAT | os.O_EXCL | os.O_WRONLY, 0o644
                 )
-                if age_ms > _LEASE_TTL_S * 1000:
-                    # stale: the holder died mid-commit.  De-sync
-                    # racing breakers first (token-derived jitter —
-                    # two processes that both saw the lease go stale
-                    # in the same tick spread out, so usually only
-                    # one reaches the delete), then re-read the token
-                    # right before deleting — if it changed, a racing
-                    # breaker already took the lease over.  The window
-                    # is narrowed, not closed (see class docstring).
-                    _time.sleep(
-                        0.01 + (int(self._token[:4], 16) % 64) / 500.0
-                    )
-                    tok0 = self._read_token(fs, hp)
-                    try:
-                        st2 = fs.getFileStatus(lock)
-                        if (
-                            st2.getModificationTime()
-                            == st.getModificationTime()
-                            and self._read_token(fs, hp) == tok0
-                        ):
-                            fs.delete(lock, False)
-                    except Exception:
-                        pass  # vanished — retry acquisition
-                    continue
-            except Exception:
-                continue  # vanished between create and stat — retry
-            if _time.monotonic() > deadline:
+            except FileExistsError:
+                pass
+            else:
+                try:
+                    with os.fdopen(fd, "w") as f:
+                        json.dump({"token": self._token}, f)
+                except OSError:
+                    # an unstamped lock stalls every writer for a TTL
+                    _delete(self._path)
+                    raise
+                return self
+            try:
+                mtime = os.stat(self._path).st_mtime_ns
+            except FileNotFoundError:
+                continue  # released between create and stat — retry
+            if time.time_ns() - mtime > _LEASE_TTL_S * 10**9:
+                # stale: the holder died mid-commit.  De-sync racing
+                # breakers first (token-derived jitter — two processes
+                # that both saw the lease go stale in the same tick
+                # spread out, so usually only one reaches the delete),
+                # then re-read the token right before deleting — if it
+                # changed, a racing breaker already took the lease
+                # over.  The window is narrowed, not closed (see class
+                # docstring).
+                time.sleep(0.01 + (int(self._token[:4], 16) % 64) / 500.0)
+                tok0 = self._read_token()
+                try:
+                    if (
+                        os.stat(self._path).st_mtime_ns == mtime
+                        and self._read_token() == tok0
+                    ):
+                        os.remove(self._path)
+                except FileNotFoundError:
+                    pass  # vanished — retry acquisition
+                continue
+            if time.monotonic() > deadline:
                 raise TimeoutError(
                     f"commit lease at {self._path} held for over "
                     f"{2 * _LEASE_TTL_S}s — break it manually if the "
                     "holder is dead"
                 )
-            _time.sleep(0.05)
+            time.sleep(0.05)
 
     def __exit__(self, *exc):
-        jvm, hp, fs = _fs_for(self._spark, self._mdir)
         # release ONLY our own lease: if ours was staleness-broken and
         # re-acquired by another writer, deleting here would admit a
         # third writer into their commit window
-        if self._read_token(fs, hp) == self._token:
-            try:
-                fs.delete(hp(self._path), False)
-            except Exception:  # pragma: no cover - racing break
-                pass
+        if self._read_token() == self._token:
+            _delete(self._path)
         return False
 
 
@@ -1843,7 +1620,7 @@ def _commit_manifest(
     logged a ``_TXN`` intent: the token is re-verified under the lease
     so a commit can never land over files a cross-process maintenance
     actor already adjudicated and rolled back."""
-    with _CommitLease(spark, manifest_path):
+    with _CommitLease(manifest_path):
         return _commit_manifest_unleased(
             spark, manifest_path, added_stats, removed, **kwargs
         )
@@ -1918,7 +1695,6 @@ def _commit_manifest_unleased(
     attempts — crash-safe: the new version is already current."""
     import uuid as _uuid
 
-    jvm, hp, fs = _fs_for(spark, manifest_path)
     if intent_token is not None:
         # under the lease: our _TXN intent must still be OURS.  A
         # cross-process maintenance actor that adjudicated it as
@@ -1928,10 +1704,8 @@ def _commit_manifest_unleased(
         # caller rolls back (idempotent — the files are gone) and
         # retries from a fresh snapshot.
         try:
-            cur_tok = _read_json_marker(
-                spark, f"{manifest_path}/_TXN"
-            ).get("intent")
-        except Exception:
+            cur_tok = _read_json(f"{manifest_path}/_TXN").get("intent")
+        except (OSError, ValueError):
             cur_tok = None
         if cur_tok != intent_token:
             raise SnapshotConflict(
@@ -1940,7 +1714,7 @@ def _commit_manifest_unleased(
                 "another maintenance actor — its moved-in files are "
                 "gone; retry from a fresh snapshot"
             )
-    committed = _committed_versions(spark, manifest_path)
+    committed = _committed_versions(manifest_path)
     nxt = (committed[-1] + 1) if committed else 0
     if expected_version is not None and nxt != expected_version:
         raise SnapshotConflict(
@@ -1962,7 +1736,7 @@ def _commit_manifest_unleased(
     prev_proto: dict = {}
     prev_schema_json: dict | None = None
     if committed:
-        prev = _commit_info(spark, manifest_path, committed[-1])
+        prev = _commit_info(manifest_path, committed[-1])
         # the ONE choke point every write path commits through: refuse
         # before touching the log when the table's stamped protocol
         # exceeds this build's feature level
@@ -1972,7 +1746,7 @@ def _commit_manifest_unleased(
         prev_schema_json = prev["schema"]
         prev_ts = float(prev["ts"])
         pending_entries = [
-            e for e in prev["pending"] if fs.exists(hp(e["file"]))
+            e for e in prev["pending"] if os.path.exists(e["file"])
         ]
         txns = dict(prev.get("txns", {}))
         if schema_json is None:
@@ -2136,7 +1910,7 @@ def _commit_manifest_unleased(
         # a batch-sized delta: ONE driver-side pyarrow write, zero
         # Spark jobs — the commit's metadata cost is O(batch) in time,
         # not just bytes
-        _write_parquet_local(spark, added_rows, stats_schema, tmpdir)
+        _write_parquet_local(added_rows, stats_schema, tmpdir)
     else:
         out_df.write.mode("overwrite").parquet(tmpdir)
     # attempt token: verified again right before the marker write — a
@@ -2145,12 +1919,12 @@ def _commit_manifest_unleased(
     # would corrupt the snapshot (underscore-prefixed: parquet readers
     # and the part-file lister both skip it)
     attempt = _uuid.uuid4().hex
-    _write_json_marker(spark, tmpdir, "_ATTEMPT", {"token": attempt})
-    if fs.exists(hp(vdir)):
-        if fs.exists(hp(f"{vdir}/_COMMIT")):
+    _write_json_marker(tmpdir, "_ATTEMPT", {"token": attempt})
+    if os.path.exists(vdir):
+        if os.path.exists(f"{vdir}/_COMMIT"):
             # another writer committed this version while we wrote the
             # temp dir — classic optimistic-concurrency loss
-            fs.delete(hp(tmpdir), True)
+            _delete(tmpdir)
             raise SnapshotConflict(
                 f"manifest at {manifest_path}: v{nxt} was committed by "
                 "another writer — retry from a fresh snapshot"
@@ -2159,22 +1933,22 @@ def _commit_manifest_unleased(
         # serialize on _log_lock, and we HOLD the cross-process lease,
         # so it cannot be a live cross-driver writer's either); clear
         # it so the rename can land.
-        fs.delete(hp(vdir), True)
-    if not fs.rename(hp(tmpdir), hp(vdir)):
-        fs.delete(hp(tmpdir), True)
+        _delete(vdir)
+    try:
+        # os.rename onto an existing non-empty directory raises
+        os.rename(tmpdir, vdir)
+    except OSError:
+        _delete(tmpdir)
         raise SnapshotConflict(
             f"manifest at {manifest_path}: v{nxt} appeared while "
             "committing — another writer won; retry from a fresh snapshot"
-        )
+        ) from None
     # re-verify the attempt token AFTER the rename and right before the
     # commit point: if a lease-breaking writer replaced the vdir in the
     # window, our marker must not land on top of their parquet
     try:
-        mine = (
-            _read_json_marker(spark, f"{vdir}/_ATTEMPT").get("token")
-            == attempt
-        )
-    except Exception:
+        mine = _read_json(f"{vdir}/_ATTEMPT").get("token") == attempt
+    except (OSError, ValueError):
         mine = False
     if not mine:
         raise SnapshotConflict(
@@ -2288,11 +2062,7 @@ def _commit_manifest_unleased(
     if changes is not None:
         payload["changes"] = sorted(changes)
     _write_json_marker(
-        spark,
-        vdir,
-        "_COMMIT",
-        payload,
-        overwrite=False,
+        vdir, "_COMMIT", payload, overwrite=False
     )  # <- the commit point
 
     # housekeeping: keep the newest ``keep_versions`` committed
@@ -2305,21 +2075,16 @@ def _commit_manifest_unleased(
     if oldest_wanted == nxt:
         floor = payload["base_ckpt"]
     else:
-        floor = int(
-            _commit_info(spark, manifest_path, oldest_wanted)["base_ckpt"]
-        )
-    for st in fs.listStatus(hp(manifest_path)):
-        name = st.getPath().getName()
-        if st.isDirectory() and re.fullmatch(r"v\d+", name):
-            n = int(name[1:])
+        floor = int(_commit_info(manifest_path, oldest_wanted)["base_ckpt"])
+    for e in os.scandir(manifest_path):
+        if e.is_dir() and re.fullmatch(r"v\d+", e.name):
+            n = int(e.name[1:])
             if n < floor or (n < nxt and n not in committed):
-                fs.delete(st.getPath(), True)
+                _delete(e.path)
     return nxt
 
 
-def _sweep_removed(
-    spark: SparkSession, manifest_path: str, dry_run: bool = False
-) -> list[str]:
+def _sweep_removed(manifest_path: str, dry_run: bool = False) -> list[str]:
     """Physically delete data files whose removal the CURRENT manifest
     version committed — the ``pending`` backlog (this commit's logical
     removals plus any predecessor removals never swept).  On a
@@ -2331,11 +2096,10 @@ def _sweep_removed(
     it (Delta's VACUUM retention, driven by ``keep_versions`` instead
     of wall-clock age).
     Idempotent; returns what it deleted."""
-    versions = _committed_versions(spark, manifest_path)
+    versions = _committed_versions(manifest_path)
     if not versions:
         return []
-    jvm, hp, fs = _fs_for(spark, manifest_path)
-    commit = _commit_info(spark, manifest_path, versions[-1])
+    commit = _commit_info(manifest_path, versions[-1])
     entries = commit["pending"]
     if bool(commit.get("retain", False)):
         # retained version V reads files removed at rm_v > V; a file
@@ -2347,21 +2111,21 @@ def _sweep_removed(
     deleted = []
     for e in entries:
         f = e["file"]
-        if fs.exists(hp(f)):
+        if os.path.exists(f):
             if not dry_run:
-                fs.delete(hp(f), False)
+                _delete(f)
             deleted.append(f)
     return deleted
 
 
-def _post_commit_sweep(spark: SparkSession, manifest_path: str) -> list[str]:
+def _post_commit_sweep(manifest_path: str) -> list[str]:
     """``delete_where``'s post-commit cleanup (= ``_sweep_removed``; a
     separate name so crash-injection tests can disable JUST this half
     and exercise the recovery path)."""
-    return _sweep_removed(spark, manifest_path)
+    return _sweep_removed(manifest_path)
 
 
-def _recover_txn(spark: SparkSession, manifest_path: str) -> dict | None:
+def _recover_txn(manifest_path: str) -> dict | None:
     """Crash recovery for an interrupted transaction: its ``_TXN``
     intent marker records the planned file adds/removes and the version
     it meant to commit.  If that version committed, roll FORWARD (sweep
@@ -2390,53 +2154,39 @@ def _recover_txn(spark: SparkSession, manifest_path: str) -> dict | None:
       files, and retries from a fresh snapshot.
 
     The fast path (no marker — every healthy transaction) acquires
-    nothing.  A LIVE remote writer between intent and commit still
-    looks identical to a crashed one at this granularity (the
-    Delta-on-S3-without-LogStore shape); adjudicating it is SAFE — the
-    victim detects the adjudication at its commit point via the token
-    and full-retries — just wasteful, which is why ``vacuum_table``
-    additionally age-floors the marker before recovering."""
-    jvm, hp, fs = _fs_for(spark, manifest_path)
-    tpath = hp(f"{manifest_path}/_TXN")
-    if not fs.exists(tpath):
+    nothing.  A LIVE writer in another process between intent and
+    commit still looks identical to a crashed one; adjudicating it is
+    SAFE — the victim detects the adjudication at its commit point via
+    the token and full-retries — just wasteful, which is why
+    ``vacuum_table`` additionally age-floors the marker before
+    recovering."""
+    tpath = f"{manifest_path}/_TXN"
+    if not os.path.exists(tpath):
         return None
-    with _CommitLease(spark, manifest_path):
-        if not fs.exists(tpath):
+    with _CommitLease(manifest_path):
+        if not os.path.exists(tpath):
             return None  # the other actor adjudicated while we waited
-        txn = None
-        for _attempt in range(3):
-            try:
-                txn = _read_json_marker(spark, f"{manifest_path}/_TXN")
-                break
-            except Exception:
-                # a LIVE writer's rebase restamp replaces the marker
-                # delete-then-rename (not lease-scoped) — retry across
-                # that microsecond window before judging
-                import time as _time
-
-                _time.sleep(0.05)
-        if txn is None:
-            # benign ONLY when the marker vanished under us (the owner
-            # cleared it, or is mid-replace) — a marker still present
-            # after the retries means a real read fault, and reporting
-            # "nothing to recover" would let the caller proceed to
-            # adopt a crashed writer's orphans as ingest
-            if fs.exists(tpath):
-                _read_json_marker(spark, f"{manifest_path}/_TXN")  # raise it
-            return None
+        try:
+            # the marker is replaced atomically (os.replace), so a read
+            # sees a whole marker or none; any other read fault raises —
+            # "nothing to recover" would let the caller adopt a crashed
+            # writer's orphans as ingest
+            txn = _read_json(tpath)
+        except FileNotFoundError:
+            return None  # its owner cleared it while we waited
         committed = txn["expected_version"] in _committed_versions(
-            spark, manifest_path
+            manifest_path
         )
         if committed:
-            _sweep_removed(spark, manifest_path)
+            _sweep_removed(manifest_path)
         else:
             for f in txn.get("added", []):
-                fs.delete(hp(f), False)
-        fs.delete(tpath, False)
+                _delete(f)
+        _delete(tpath)
         return {"rolled": "forward" if committed else "back", **txn}
 
 
-def _write_txn_intent(spark: SparkSession, mdir: str, payload: dict) -> str:
+def _write_txn_intent(mdir: str, payload: dict) -> str:
     """Write (or restamp) the ``_TXN`` intent marker carrying a fresh
     INTENT TOKEN and return the token.  The writer passes it to
     ``_commit_manifest(intent_token=...)``, which re-verifies — under
@@ -2448,13 +2198,11 @@ def _write_txn_intent(spark: SparkSession, mdir: str, payload: dict) -> str:
     import uuid as _uuid
 
     tok = _uuid.uuid4().hex
-    _write_json_marker(spark, mdir, "_TXN", {**payload, "intent": tok})
+    _write_json_marker(mdir, "_TXN", {**payload, "intent": tok})
     return tok
 
 
-def _clear_txn_intent(
-    spark: SparkSession, mdir: str, intent_token: str
-) -> None:
+def _clear_txn_intent(mdir: str, intent_token: str) -> None:
     """Delete the ``_TXN`` marker at the end of a transaction — but
     only while it is still OURS: after our commit, a maintenance actor
     may have rolled the marker forward (deleting it) and a FOREIGN
@@ -2474,19 +2222,15 @@ def _clear_txn_intent(
     committed."""
     import logging
 
-    jvm, hp, fs = _fs_for(spark, mdir)
-    tpath = hp(f"{mdir}/_TXN")
+    tpath = f"{mdir}/_TXN"
     try:
-        with _CommitLease(spark, mdir):
+        with _CommitLease(mdir):
             try:
-                if (
-                    _read_json_marker(spark, f"{mdir}/_TXN").get("intent")
-                    != intent_token
-                ):
+                if _read_json(tpath).get("intent") != intent_token:
                     return
-            except Exception:
+            except (OSError, ValueError):
                 return  # gone already (rolled forward) — nothing to clear
-            fs.delete(tpath, False)
+            _delete(tpath)
     except Exception as exc:
         logging.getLogger(__name__).warning(
             "leaving _TXN intent at %s for the next op's recovery "
@@ -2500,12 +2244,12 @@ def committed_schema(
     """The table schema stamped into the committed snapshot (current,
     or ``version`` for time travel; every ``_COMMIT`` carries it), or
     None when that version is not committed."""
-    v = version if version is not None else manifest_version(
-        spark, manifest_path
-    )
-    if v is None or v not in _committed_versions(spark, manifest_path):
+    manifest_path = _local_path(manifest_path)
+    vs = _committed_versions(manifest_path)
+    v = version if version is not None else (vs[-1] if vs else None)
+    if v is None or v not in vs:
         return None
-    return _head_schema(_commit_info(spark, manifest_path, v))
+    return _head_schema(_commit_info(manifest_path, v))
 
 
 def committed_partitioning(
@@ -2514,30 +2258,30 @@ def committed_partitioning(
     """The table's hive partition columns as stamped into the current
     commit ([] = flat), or None for pre-stamp tables — writers then
     fall back to probing the directory layout once."""
-    v = manifest_version(spark, manifest_path)
-    if v is None:
+    manifest_path = _local_path(manifest_path)
+    vs = _committed_versions(manifest_path)
+    if not vs:
         return None
-    commit = _commit_info(spark, manifest_path, v)
-    return commit.get("partition_by")
+    return _commit_info(manifest_path, vs[-1]).get("partition_by")
 
 
-def _detect_pcols(spark: SparkSession, path: str, mdir: str) -> list[str]:
+def _detect_pcols(path: str, mdir: str) -> list[str]:
     """Partition columns for a manifest-tracked table: the commit's
     stamped list when present, else ONE directory probe (pre-stamp
     tables) — never an O(files) walk per transaction once stamped."""
-    pby = committed_partitioning(spark, mdir)
+    vs = _committed_versions(mdir)
+    pby = _commit_info(mdir, vs[-1]).get("partition_by") if vs else None
     if pby is not None:
         return list(pby)
     # a hive layout encodes EVERY leaf under partition dirs, so the
     # first leaf decides — never a full O(files) walk
-    for rel, _ln in _leaf_files(spark, path):
+    for rel, _f, _ln in _leaf_files(path):
         segs = [s for s in rel.split("/")[:-1] if "=" in s]
         return [s.split("=", 1)[0] for s in segs]
     return []
 
 
 def _guard_partition_cols(
-    spark: SparkSession,
     path: str,
     mdir: str,
     stored_schema: T.StructType,
@@ -2554,7 +2298,7 @@ def _guard_partition_cols(
     pcols = (
         list(partition_by)
         if partition_by is not None
-        else _detect_pcols(spark, path, mdir)
+        else _detect_pcols(path, mdir)
     )
     stored_names = {f.name for f in stored_schema.fields}
     have = set(source_cols)
@@ -2771,8 +2515,9 @@ def _ensure_mapping(
     return T.StructType(fields), mapping
 
 
-def _rollback_conflict(spark: SparkSession, manifest_path: str,
-                       added: Sequence[str], intent_token: str) -> None:
+def _rollback_conflict(
+    manifest_path: str, added: Sequence[str], intent_token: str
+) -> None:
     """Undo a transaction that lost the optimistic-concurrency race
     AFTER moving its files into the table: delete the moved-in files
     (no committed manifest references them) and this txn's ``_TXN``
@@ -2782,47 +2527,33 @@ def _rollback_conflict(spark: SparkSession, manifest_path: str,
     ``intent_token`` — if a cross-process adjudicator already rolled
     us back and a foreign writer landed its own intent, deleting
     theirs would needlessly fail their commit's token check."""
-    jvm, hp, fs = _fs_for(spark, manifest_path)
     for f in added:
-        fs.delete(hp(f), False)
-    _clear_txn_intent(spark, manifest_path, intent_token)
+        _delete(f)
+    _clear_txn_intent(manifest_path, intent_token)
 
 
-def _move_files_in(fs, hp, planned: Sequence[tuple[str, str]]) -> list[str]:
+def _move_files_in(planned: Sequence[tuple[str, str]]) -> list[str]:
     """Move each planned ``(src, dst)`` data file into the table and
-    return the dst URIs normalized exactly like ``_leaf_file_uris``
-    (fully-qualified via the FS; ``file:`` stripped to a posix path).
-    Hadoop signals rename failure by returning false — checked here, so
-    a silently-failed move can never leave a transaction half-applied
-    with a success ledger."""
-    added = []
+    return the dst paths.  A failed move raises, so a transaction can
+    never be left half-applied with a success ledger."""
     for src, dst in planned:
-        d = hp(dst)
-        fs.mkdirs(d.getParent())
-        if not fs.rename(hp(src), d):
-            raise IOError(f"rename failed moving {src} -> {dst}")
-        q = fs.getFileStatus(d).getPath()
-        uri = q.toString()
-        if uri.startswith("file:"):
-            uri = q.toUri().getPath()
-        added.append(uri)
-    return added
+        os.makedirs(os.path.dirname(dst), exist_ok=True)
+        os.rename(src, dst)
+    return [dst for _src, dst in planned]
 
 
-def _active_dvs(
-    spark: SparkSession, manifest_path: str, version: int | None = None
-) -> list[dict]:
+def _active_dvs(manifest_path: str, version: int | None = None) -> list[dict]:
     """The deletion vectors active at a committed snapshot (current, or
     ``version`` for time travel): ``[{"file", "version", "keys"}, …]``,
     carried forward by every commit until ``materialize_deletes``
     retires them.  Empty for tables that never took a merge-on-read
     write."""
-    v = version if version is not None else manifest_version(
-        spark, manifest_path
-    )
-    if v is None:
-        return []
-    return list(_commit_info(spark, manifest_path, v).get("dvs", []))
+    if version is None:
+        vs = _committed_versions(manifest_path)
+        if not vs:
+            return []
+        version = vs[-1]
+    return list(_commit_info(manifest_path, version).get("dvs", []))
 
 
 #: Tombstone sets at or under this many keys keep the explicit
@@ -2850,21 +2581,11 @@ def _dv_frame(spark: SparkSession, d: dict, keys: Sequence[str]) -> DataFrame:
 
 def _footer_num_rows(path: str) -> int | None:
     """A single parquet file's footer row count (driver-side pyarrow
-    read), or None when unreadable — sized like one metadata HTTP
-    range request on object storage."""
+    read), or None when unreadable."""
     import pyarrow.parquet as pq
 
-    fpath = path
-    if fpath.startswith("file:"):
-        fpath = re.sub(r"^file:/+", "/", fpath)
     try:
-        if "://" in fpath:
-            from pyarrow import fs as pafs
-
-            filesystem, rel = pafs.FileSystem.from_uri(fpath)
-            with filesystem.open_input_file(rel) as f:
-                return int(pq.ParquetFile(f).metadata.num_rows)
-        return int(pq.ParquetFile(fpath).metadata.num_rows)
+        return int(pq.ParquetFile(path).metadata.num_rows)
     except Exception:
         return None
 
@@ -2999,12 +2720,9 @@ def _consolidate_dvs(
     # consolidated dir is a sibling commit-dir
     base = os.path.dirname(os.path.dirname(dvs[0]["file"]))
     ddir = f"{base}/consolidated-v{nxt}-{_uuid.uuid4().hex[:8]}"
-    jvm, hp, fs = _fs_for(spark, base)
-    n_out, _bytes = _target_files(
-        fs, hp, [d["file"] for d in dvs], 128 * 1024 * 1024
-    )
+    n_out, _bytes = _target_files([d["file"] for d in dvs], 128 * 1024 * 1024)
     folded.repartition(n_out).write.mode("overwrite").parquet(ddir)
-    files = _sidecar_files(fs, hp, ddir)
+    files = _sidecar_files(ddir)
     vmax = max(int(d["version"]) for d in dvs)
     new_dvs = [
         {
@@ -3019,26 +2737,17 @@ def _consolidate_dvs(
     return new_dvs, [d["file"] for d in dvs]
 
 
-def _sidecar_files(fs, hp, dirpath: str) -> list[str]:
-    """Non-hidden files directly inside a sidecar dir, in the URI form
-    the commit markers store (decoded path for the local FS, qualified
-    URI otherwise) — ONE normalization shared by the tombstone writer,
-    the change-data writer, and the vacuum sweep, so a URI-form fix
-    can never diverge between them."""
-    out = []
-    for st in fs.listStatus(hp(dirpath)):
-        name = st.getPath().getName()
-        if st.isFile() and not name.startswith(("_", ".")):
-            q = st.getPath()
-            uri = q.toString()
-            if uri.startswith("file:"):
-                uri = q.toUri().getPath()
-            out.append(uri)
-    return sorted(out)
+def _sidecar_files(dirpath: str) -> list[str]:
+    """Non-hidden files directly inside a sidecar dir, sorted — the
+    list the tombstone and change-data writers record in a commit."""
+    return sorted(
+        e.path
+        for e in os.scandir(dirpath)
+        if e.is_file() and not e.name.startswith(("_", "."))
+    )
 
 
 def _write_changes(
-    spark: SparkSession,
     df: DataFrame,
     path: str,
     version: int,
@@ -3060,8 +2769,7 @@ def _write_changes(
         df = _to_phys(df, _cdf_schema(schema))
     cdir = path.rstrip("/") + f"/_changes/v{version}-{uuid.uuid4().hex[:8]}"
     df.write.mode("overwrite").parquet(cdir)
-    jvm, hp, fs = _fs_for(spark, path)
-    return _sidecar_files(fs, hp, cdir)
+    return _sidecar_files(cdir)
 
 
 def _write_temp(
@@ -3096,20 +2804,19 @@ def _write_temp(
 
 
 def _checked_write(
-    spark: SparkSession, obs, tmp: str, cons: dict[str, str], ctx: str
+    obs, tmp: str, cons: dict[str, str], ctx: str
 ) -> dict:
     """The temp write's observed metrics (``_obs_result``; the AQE
     zero-row fallback verified against the temp output's own footers)
     with the table's CHECK constraints enforced on them: a violation
     deletes the temp output and raises BEFORE any ``_TXN`` intent — no
     snapshot reader ever saw anything."""
-    vals = _obs_result(obs, verify_rows=lambda: _dir_footer_rows(spark, tmp))
+    vals = _obs_result(obs, verify_rows=lambda: _dir_footer_rows(tmp))
     if cons:
         try:
             _raise_constraint_violations(vals, cons, ctx)
         except ConstraintViolation:
-            jvm, hp, fs = _fs_for(spark, tmp)
-            fs.delete(hp(tmp), True)
+            _delete(tmp)
             raise
     return vals
 
@@ -3165,11 +2872,10 @@ def _land_commit(
        ``sweep`` is False) and clear the intent.
 
     Returns ``{"version", "added", "rebased"}``."""
-    jvm, hp, fs = _fs_for(spark, path)
     planned = (
         [
-            (tmp + "/" + rel, path.rstrip("/") + "/" + rel)
-            for rel, _ln in _leaf_files(spark, tmp)
+            (src, path.rstrip("/") + "/" + rel)
+            for rel, src, _ln in _leaf_files(tmp)
         ]
         if tmp is not None
         else []
@@ -3179,7 +2885,6 @@ def _land_commit(
 
     def _intent(version: int, files: list[str]) -> str:
         return _write_txn_intent(
-            spark,
             mdir,
             {
                 "expected_version": version,
@@ -3189,10 +2894,10 @@ def _land_commit(
         )
 
     itok = _intent(expected, [dst for _src, dst in planned])
-    added = _move_files_in(fs, hp, planned)
+    added = _move_files_in(planned)
     delta_df = delta_rows = delta_schema = None
     if tmp is not None:
-        fs.delete(hp(tmp), True)
+        _delete(tmp)
         # O(batch) commit: only the new files' stats rows are written;
         # replaced files ride the marker's removed list
         if len(added) <= _LOCAL_STATS_MAX:
@@ -3233,7 +2938,7 @@ def _land_commit(
                     else _rebase_append(*args)
                 )
             if rb is None or rb == "skip":
-                _rollback_conflict(spark, mdir, ours, intent_token=itok)
+                _rollback_conflict(mdir, ours, intent_token=itok)
                 if rb == "skip":
                     return None
                 raise
@@ -3246,7 +2951,6 @@ def _land_commit(
                 # drop the orphaned originals
                 old = list(changes)
                 changes = _write_changes(
-                    spark,
                     spark.read.parquet(*old).withColumn(
                         "_commit_version", F.lit(expected).cast("long")
                     ),
@@ -3254,13 +2958,13 @@ def _land_commit(
                     expected,
                 )
                 for d in {os.path.dirname(f) for f in old}:
-                    fs.delete(hp(d), True)
+                    _delete(d)
             # recovery must roll this attempt forward/back against the
             # version it now targets
             itok = _intent(expected, added)
     if sweep:
-        _post_commit_sweep(spark, mdir)
-    _clear_txn_intent(spark, mdir, itok)
+        _post_commit_sweep(mdir)
+    _clear_txn_intent(mdir, itok)
     return {"version": int(version), "added": added, "rebased": rebased}
 
 
@@ -3295,12 +2999,11 @@ def _txn_rewrite(
     interrupted attempt back or forward at the next maintenance op.
     """
     mdir = _manifest_dir(path, manifest_path)
-    jvm, hp, fs = _fs_for(spark, path)
     # the gate's snapshot pin: the commit plans against exactly this
     # version, so an interloper committing after this point surfaces
     # as SnapshotConflict, never as a silently-merged-from-stale-
     # snapshot commit
-    snap_v, head = _open_txn(spark, mdir, f"{op or 'rewrite'} {path}")
+    snap_v, head = _open_txn(mdir, f"{op or 'rewrite'} {path}")
     if _txn_replayed(head, txn):
         # exactly-once for STREAMED rewrites (a foreachBatch retention
         # delete / rectification update), same contract as append/merge
@@ -3331,7 +3034,7 @@ def _txn_rewrite(
         listed = set(matched)
         cand = [f for f in candidates if f in listed]
         if candidates and not cand:
-            if any(not fs.exists(hp(f)) for f in candidates):
+            if any(not os.path.exists(f) for f in candidates):
                 # the candidates vanished from DISK too: a concurrent
                 # commit (another compactor, an in-band maintain pass)
                 # rewrote and swept them between the caller's listing
@@ -3366,14 +3069,14 @@ def _txn_rewrite(
         return ledger
 
     # hive partition columns: stamped in the commit, else probed once
-    pcols = _detect_pcols(spark, path, mdir)
+    pcols = _detect_pcols(path, mdir)
     schema = _head_schema(head)
     touched = _read_files(spark, cand, schema, base_path=path)
     # active deletion vectors apply to the candidate read: the rewrite
     # must not resurrect suppressed rows, and the rewritten files get
     # added_version = this commit (newer than every tombstone), so
     # their suppression is MATERIALIZED here for the touched files
-    dvs = _active_dvs(spark, mdir, version=snap_v)
+    dvs = _active_dvs(mdir, version=snap_v)
     touched = _dv_suppress(spark, touched, manifest, dvs)
     cdf_on = bool(head.get("cdf", False))
     cached = None
@@ -3418,11 +3121,11 @@ def _txn_rewrite(
             out, schema, path, "rewrite", pcols, bloom_cols, bloom_ndv
         )
         vals_out = _checked_write(
-            spark, obs_out, tmp, cons, f"rewrite of {path}"
+            obs_out, tmp, cons, f"rewrite of {path}"
         )
         if obs_in is not None:
             vals_in = _obs_result(
-                obs_in, verify_rows=lambda: _dir_footer_rows(spark, tmp)
+                obs_in, verify_rows=lambda: _dir_footer_rows(tmp)
             )
             rows_before = int(vals_in["n"] or 0)
             rows_matched = (
@@ -3455,7 +3158,6 @@ def _txn_rewrite(
             cdc = changes_fn(touched, hit) if changes_fn is not None else None
             changes_files = (
                 _write_changes(
-                    spark,
                     cdc.withColumn(
                         "_commit_version", F.lit(expected).cast("long")
                     ),
@@ -3534,10 +3236,7 @@ def _delete_mor(
     import uuid
 
     mdir = _manifest_dir(path, manifest_path)
-    jvm, hp, fs = _fs_for(spark, path)
-    snap_v, head = _open_txn(
-        spark, mdir, f"delete_where (merge-on-read) {path}"
-    )
+    snap_v, head = _open_txn(mdir, f"delete_where (merge-on-read) {path}")
     ledger = {
         "files_total": None,
         "files_rewritten": 0,
@@ -3589,21 +3288,20 @@ def _delete_mor(
         tomb.coalesce(1).write.mode("overwrite").parquet(ddir)
         rows_matched = int(
             _obs_result(
-                obs, verify_rows=lambda: _dir_footer_rows(spark, ddir)
+                obs, verify_rows=lambda: _dir_footer_rows(ddir)
             )["n"]
             or 0
         )
         if rows_matched == 0:
             # nothing to delete: no commit needed (a txn replay
             # re-derives the same no-op — still exactly-once)
-            fs.delete(hp(ddir), True)
+            _delete(ddir)
             return ledger
-        dv_files = _sidecar_files(fs, hp, ddir)
+        dv_files = _sidecar_files(ddir)
 
         changes_files: list[str] | None = None
         if cdf_on:
             changes_files = _write_changes(
-                spark,
                 matched.withColumn("_change_type", F.lit("delete"))
                 .withColumn(
                     "_commit_version", F.lit(expected).cast("long")
@@ -3778,7 +3476,7 @@ def _update_mor(
     get update pre/postimages from the merge engine."""
     mdir = _manifest_dir(path, manifest_path)
     snap_v, head = _open_txn(
-        spark, mdir, f"update_where (merge-on-read) {path}"
+        mdir, f"update_where (merge-on-read) {path}"
     )
     skipped_ledger = {
         "files_total": None,
@@ -3963,8 +3661,8 @@ def update_stats_index(
     version.
     """
     mdir = _manifest_dir(path, manifest_path)
-    snap_v, head = _open_txn(spark, mdir, f"update_stats_index {path}")
-    current = _leaf_file_uris(spark, path)
+    snap_v, head = _open_txn(mdir, f"update_stats_index {path}")
+    current = [f for _rel, f, _ln in _leaf_files(path)]
     expected = (snap_v if snap_v is not None else -1) + 1
     old = current_manifest(spark, mdir)
 
@@ -3984,7 +3682,7 @@ def update_stats_index(
             expected_version=expected,
             keep_versions=keep_versions,
             table_schema=schema.jsonValue(),
-            partition_by=_detect_pcols(spark, path, mdir),
+            partition_by=_detect_pcols(path, mdir),
             added_files=current,
             op="update-stats-index",
         )
@@ -4022,7 +3720,7 @@ def update_stats_index(
         else None,
         removed=gone, expected_version=expected,
         keep_versions=keep_versions,
-        partition_by=_detect_pcols(spark, path, mdir),
+        partition_by=_detect_pcols(path, mdir),
         added_files=new, force_checkpoint=True,
         op="update-stats-index",
         metrics={"files_new": len(new), "files_removed": len(gone)},
@@ -4106,7 +3804,7 @@ def read_table(
         version = manifest_version(spark, mdir)
         if version is None:
             return spark.read.parquet(path).filter(cond)
-    elif version not in _committed_versions(spark, mdir):
+    elif version not in _committed_versions(mdir):
         raise ValueError(
             f"manifest version {version} is not committed/retained "
             f"at {mdir}"
@@ -4115,7 +3813,7 @@ def read_table(
     # feature level — misresolving a mapped/widened table is worse
     # than failing (the resolved VERSION's marker governs: time travel
     # to a pre-feature snapshot keeps working)
-    head = _commit_info(spark, mdir, version)
+    head = _commit_info(mdir, version)
     _check_protocol(head, "read", f"read_table {path}")
     manifest = _reconstruct_manifest(spark, mdir, version)
     # prune_files skips predicates on unindexed columns conservatively;
@@ -4127,15 +3825,13 @@ def read_table(
     if not files:
         return spark.createDataFrame([], schema).filter(cond)
     out = _read_files(spark, files, schema, base_path=path)
-    dvs = _active_dvs(spark, mdir, version=version)
+    dvs = _active_dvs(mdir, version=version)
     if dvs:
-        # the suppression joins move the merge keys to the front —
-        # restore the committed column order (a serve-path surface
-        # must not reorder columns based on join mechanics)
-        out = _dv_suppress(spark, out, manifest, dvs).select(
-            *[f.name for f in schema.fields]
-        )
-    return out.filter(cond)
+        out = _dv_suppress(spark, out, manifest, dvs)
+    # the committed column order on every branch: a hive read moves the
+    # partition columns last and the suppression joins move the merge
+    # keys first (a serve-path surface must not reorder columns)
+    return out.select(*schema.fieldNames()).filter(cond)
 
 
 def last_committed_txn(
@@ -4144,11 +3840,11 @@ def last_committed_txn(
     """The highest batch id ``app_id`` has committed into the manifest
     (the txn map carries forward across every commit), or None — the
     idempotence check a replayed streaming micro-batch consults."""
-    v = manifest_version(spark, manifest_path)
-    if v is None:
+    manifest_path = _local_path(manifest_path)
+    vs = _committed_versions(manifest_path)
+    if not vs:
         return None
-    commit = _commit_info(spark, manifest_path, v)
-    got = commit.get("txns", {}).get(str(app_id))
+    got = _commit_info(manifest_path, vs[-1]).get("txns", {}).get(str(app_id))
     return int(got) if got is not None else None
 
 
@@ -4185,7 +3881,7 @@ def _rebase_append(
     - any of OUR moved-in files is gone — a cross-process actor's
       lease-scoped intent recovery adjudicated our in-flight attempt
       as crashed (a live writer between intent and commit looks
-      crashed at the Delta-on-S3 granularity; the commit-side intent
+      crashed at the lease's granularity; the commit-side intent
       token catches the same loss even without a conflict);
       re-committing would reference deleted files, so the loser
       re-runs the batch instead.  O(batch) existence probes.
@@ -4196,11 +3892,9 @@ def _rebase_append(
     snap = manifest_version(spark, mdir)
     if snap is None:  # the whole log vanished — full retry
         return None
-    jvm, hp, fs = _fs_for(spark, mdir)
-    for f in our_files:
-        if not fs.exists(hp(f)):
-            return None
-    head = _commit_info(spark, mdir, snap)
+    if not all(os.path.exists(f) for f in our_files):
+        return None
+    head = _commit_info(mdir, snap)
     if _txn_replayed(head, txn):
         return "skip"
     if dict(head.get("constraints") or {}) != dict(
@@ -4280,7 +3974,7 @@ def _rebase_tombstone(
     winner_tombs: list[dict] = []
     for v in range(read_snap + 1, snap + 1):
         try:
-            m = _commit_info(spark, mdir, v)
+            m = _commit_info(mdir, v)
         except Exception:
             return None  # span fell out of retention — full retry
         if m.get("removed"):
@@ -4299,7 +3993,7 @@ def _rebase_tombstone(
         try:
             prev_dvs = {
                 d["file"]
-                for d in _commit_info(spark, mdir, v - 1).get("dvs", [])
+                for d in _commit_info(mdir, v - 1).get("dvs", [])
             } if v - 1 >= 0 else set()
         except Exception:
             return None
@@ -4418,7 +4112,7 @@ def append_files(
     # ONE listing + ONE head-marker read (the protocol gate's) serve
     # the whole transaction: snapshot pin, txn idempotence, stats
     # columns, schema, and the partition layout all ride the same JSON
-    snap_v, head = _open_txn(spark, mdir, f"append_files {path}")
+    snap_v, head = _open_txn(mdir, f"append_files {path}")
     have_table = snap_v is not None
     if _txn_replayed(head, txn):
         return {
@@ -4457,7 +4151,7 @@ def append_files(
         # its partition (the LakeUpsertSink guard, hoisted to every
         # lake write path)
         _guard_partition_cols(
-            spark, path, mdir, stored, df.columns,
+            path, mdir, stored, df.columns,
             f"append_files into {path}",
             partition_by
             if partition_by is not None
@@ -4490,7 +4184,7 @@ def append_files(
     # row count rides the write (CollectMetrics) — no read-back scan,
     # and an EMPTY batch no longer trips schema inference on a
     # file-less temp dir
-    vals = _checked_write(spark, obs, tmp, cons, f"append_files into {path}")
+    vals = _checked_write(obs, tmp, cons, f"append_files into {path}")
     rows = int(vals["n"] or 0)
     expected = (snap_v if snap_v is not None else -1) + 1
 
@@ -4504,9 +4198,8 @@ def append_files(
     planned_cdf = bool(head.get("cdf", False)) or bool(enable_cdf)
     changes_files: list[str] | None = None
     if planned_cdf:
-        written = [tmp + "/" + rel for rel, _ln in _leaf_files(spark, tmp)]
+        written = [f for _rel, f, _ln in _leaf_files(tmp)]
         changes_files = _write_changes(
-            spark,
             _read_files(spark, written, evolved, base_path=tmp)
             .withColumn("_change_type", F.lit("insert"))
             .withColumn(
@@ -4517,16 +4210,13 @@ def append_files(
             schema=evolved,
         ) if written else []
 
-    jvm, hp, fs = _fs_for(spark, path)
     pcols_commit = (
         list(partition_by)
         if partition_by is not None
         # detect once (stamped thereafter) so flat tables stamp [] and
         # later transactions skip the directory probe; a table
         # directory that does not exist yet gets only this flat batch
-        else _detect_pcols(spark, path, mdir)
-        if fs.exists(hp(path))
-        else []
+        else _detect_pcols(path, mdir)
     )
     landed = _land_commit(
         spark, path, mdir, expected,
@@ -4652,12 +4342,11 @@ def merge_into(
         )
     keys = list(keys)
     mdir = _manifest_dir(path, manifest_path)
-    jvm, hp, fs = _fs_for(spark, path)
     # ONE listing + ONE head-marker read (the protocol gate's) serve
     # the whole transaction: snapshot pin, txn idempotence, schema,
     # partition columns, active deletion vectors, and the cdf flag all
     # ride the same JSON
-    snap_v, head = _open_txn(spark, mdir, f"merge_into {path}")
+    snap_v, head = _open_txn(mdir, f"merge_into {path}")
     if _txn_replayed(head, txn):
         return {
             "rows_source": 0,
@@ -4680,7 +4369,7 @@ def merge_into(
     if missing_keys:
         raise ValueError(f"merge source lacks key column(s) {missing_keys}")
     _guard_partition_cols(
-        spark, path, mdir, stored, source.columns, f"merge_into {path}",
+        path, mdir, stored, source.columns, f"merge_into {path}",
         partition_by=head.get("partition_by"),
     )
     src = _aligned(source, evolved).persist(StorageLevel.MEMORY_AND_DISK)
@@ -4729,7 +4418,7 @@ def merge_into(
 
         pby = head.get("partition_by")
         pcols = (
-            list(pby) if pby is not None else _detect_pcols(spark, path, mdir)
+            list(pby) if pby is not None else _detect_pcols(path, mdir)
         )
         dvs = list(head.get("dvs", []))
         _guard_dv_keys(dvs, keys, "merge")
@@ -4835,7 +4524,7 @@ def merge_into(
         elif mor:
             out = out.repartition(max(1, -(-n_src // 1_000_000)))
         else:
-            n_out, _bytes = _target_files(fs, hp, cand, target_bytes)
+            n_out, _bytes = _target_files(cand, target_bytes)
             out = out.repartition(n_out)
 
         from pyspark.sql import Observation
@@ -4851,7 +4540,7 @@ def merge_into(
         tmp = _write_temp(final, evolved, path, "merge", pcols)
         # row counts ride the write itself (CollectMetrics) — no
         # read-back scan of the temp output, no candidate pre-count
-        vals = _checked_write(spark, obs, tmp, cons, f"merge_into {path}")
+        vals = _checked_write(obs, tmp, cons, f"merge_into {path}")
         rows_after = int(vals["n"] or 0)
         if obs_in is not None:
             # INPUT-side observation: carries only the candidate row
@@ -4871,7 +4560,7 @@ def merge_into(
             # to rewrite — no commit needed (a replay re-derives the
             # same no-op, so skipping the txn stamp is still
             # exactly-once)
-            fs.delete(hp(tmp), True)
+            _delete(tmp)
             return ledger
 
         # merge-on-read tombstone: the source keys, one sidecar file,
@@ -4885,13 +4574,12 @@ def merge_into(
             src.select(*keys).coalesce(1).write.mode("overwrite").parquet(
                 ddir
             )
-            dv_files.extend(_sidecar_files(fs, hp, ddir))
+            dv_files.extend(_sidecar_files(ddir))
 
         changes_files: list[str] | None = None
         if cdf_on:
             changes_files = (
                 _write_changes(
-                    spark,
                     changes_df.withColumn(
                         "_commit_version", F.lit(expected).cast("long")
                     ),
@@ -5026,24 +4714,28 @@ def compact_table(
     the tests.
     """
     mdir = _manifest_dir(path, manifest_path)
-    jvm, hp, fs = _fs_for(spark, path)
+    root = _local_path(path)
     pcols = committed_partitioning(spark, mdir) or []
-    sizes: dict[str, tuple[int, tuple]] = {}
-    for rel, ln in _leaf_files(spark, path):
-        # qualify through the FS so the candidate list intersects the
-        # manifest's file-uri form (hdfs://nn/... fully-qualified;
-        # file: stripped to posix) — an unqualified caller path must
-        # not make _txn_rewrite's intersection silently empty
-        q = fs.getFileStatus(hp(path.rstrip("/") + "/" + rel)).getPath()
-        uri = q.toString()
-        if uri.startswith("file:"):
-            uri = q.toUri().getPath()
-        sizes[uri] = (ln, tuple(_dir_value(rel, c) for c in pcols))
+    # candidates are the head snapshot's live files: the files a
+    # retain_removed table keeps on disk for time travel are history,
+    # not small files to re-pack
+    sizes = {
+        f: (
+            _file_size(f),
+            tuple(_dir_value(os.path.relpath(f, root), c) for c in pcols),
+        )
+        for f in prune_files(_require_manifest(spark, mdir), {})
+    }
     small = [
         f
         for f, (ln, _part) in sorted(sizes.items())
         if small_bytes is None or ln < int(small_bytes)
     ]
+    part_bytes: dict[tuple, int] = {}
+    for f in small:
+        ln, part = sizes[f]
+        part_bytes[part] = part_bytes.get(part, 0) + ln
+    bytes_in = sum(part_bytes.values())
     if len(small) < 2:  # nothing to merge
         return {
             "files_total": len(sizes),
@@ -5053,12 +4745,8 @@ def compact_table(
             "rows_after": None,
             "partitioned": False,
             "version": manifest_version(spark, mdir),
+            "bytes_in": int(bytes_in),
         }
-    part_bytes: dict[tuple, int] = {}
-    for f in small:
-        ln, part = sizes[f]
-        part_bytes[part] = part_bytes.get(part, 0) + ln
-    bytes_in = sum(part_bytes.values())
     # a flat table is one "partition" () whose budget is the file count
     budgets = {
         part: max(1, -(-b // int(target_bytes)))
@@ -5174,9 +4862,8 @@ def cluster_table(
     keys = list(keys)
     mdir = _manifest_dir(path, manifest_path)
     manifest = _require_manifest(spark, mdir)
-    jvm, hp, fs = _fs_for(spark, path)
     cand = prune_files(manifest, {})  # the full committed file list
-    n_out, bytes_in = _target_files(fs, hp, cand, target_bytes)
+    n_out, bytes_in = _target_files(cand, target_bytes)
 
     # z-order quantile cuts from the current snapshot (key columns only)
     cuts = (
@@ -5252,9 +4939,8 @@ def materialize_deletes(
     files_rewritten, files_added, rows_suppressed, dv_files_removed,
     version."""
     mdir = _manifest_dir(path, manifest_path)
-    jvm, hp, fs = _fs_for(spark, path)
-    snap_v, head = _open_txn(spark, mdir, f"materialize_deletes {path}")
-    dvs = _active_dvs(spark, mdir, version=snap_v)
+    snap_v, head = _open_txn(mdir, f"materialize_deletes {path}")
+    dvs = _active_dvs(mdir, version=snap_v)
     ledger = {
         "files_rewritten": 0,
         "files_added": 0,
@@ -5300,13 +4986,13 @@ def materialize_deletes(
             keep_versions=keep_versions, dvs_clear=True, changes=cdc,
             op="materialize-deletes",
         )
-        _post_commit_sweep(spark, mdir)
+        _post_commit_sweep(mdir)
         ledger.update(
             {"dv_files_removed": len(dv_files), "version": int(version)}
         )
         return ledger
 
-    pcols = _detect_pcols(spark, path, mdir)
+    pcols = _detect_pcols(path, mdir)
     schema = _head_schema(head)
     from pyspark.sql import Observation
 
@@ -5320,12 +5006,12 @@ def materialize_deletes(
     if pcols:
         out = out.repartition(*pcols)
     else:
-        out = out.repartition(_target_files(fs, hp, cand, target_bytes)[0])
+        out = out.repartition(_target_files(cand, target_bytes)[0])
 
     obs = Observation()
     final = out.observe(obs, F.count(F.lit(1)).alias("n"))
     tmp = _write_temp(final, schema, path, "rewrite", pcols)
-    _verify = lambda: _dir_footer_rows(spark, tmp)  # noqa: E731
+    _verify = lambda: _dir_footer_rows(tmp)  # noqa: E731
     rows_before = int(_obs_result(obs_in, verify_rows=_verify)["n"] or 0)
     rows_after = int(_obs_result(obs, verify_rows=_verify)["n"] or 0)
 
@@ -5391,15 +5077,14 @@ def restore_table(
         version = version_at_timestamp(
             spark, path, as_of_timestamp, manifest_path
         )
-    jvm, hp, fs = _fs_for(spark, path)
-    _open_txn(spark, mdir, f"restore_table {path}")
-    versions = _committed_versions(spark, mdir)
+    _open_txn(mdir, f"restore_table {path}")
+    versions = _committed_versions(mdir)
     if version not in versions:
         raise ValueError(
             f"version {version} is not committed/retained at {mdir}"
         )
     head = versions[-1]
-    target_marker = _commit_info(spark, mdir, version)
+    target_marker = _commit_info(mdir, version)
     target = _reconstruct_manifest(spark, mdir, version)
     target_files = {r["file"] for r in target.select("file").collect()}
     head_files = {
@@ -5411,11 +5096,8 @@ def restore_table(
     missing = [
         f
         for f in sorted(target_files - head_files)
-        if not fs.exists(hp(f))
-    ] + [
-        d["file"]
-        for d in target_marker.get("dvs", [])
-        if not fs.exists(hp(d["file"]))
+        + [d["file"] for d in target_marker.get("dvs", [])]
+        if not os.path.exists(f)
     ]
     if missing:
         raise ValueError(
@@ -5441,7 +5123,7 @@ def restore_table(
         dvs_replace=list(target_marker.get("dvs", [])),
         op=f"restore (to v{version})",
     )
-    _post_commit_sweep(spark, mdir)
+    _post_commit_sweep(mdir)
     return {
         "version": int(version_new),
         "restored_to": int(version),
@@ -5461,7 +5143,7 @@ def table_constraints(
     v = manifest_version(spark, mdir)
     if v is None:
         return {}
-    return dict(_commit_info(spark, mdir, v).get("constraints") or {})
+    return dict(_commit_info(mdir, v).get("constraints") or {})
 
 
 @_locked
@@ -5486,7 +5168,7 @@ def add_table_constraint(
     constraints."""
     mdir = _manifest_dir(path, manifest_path)
     snap_v, head = _open_txn(
-        spark, mdir, f"add_table_constraint {path}", require=True
+        mdir, f"add_table_constraint {path}", require=True
     )
     cons = dict(head.get("constraints") or {})
     if name in cons and cons[name] != expr:
@@ -5529,7 +5211,7 @@ def drop_table_constraint(
     a no-op commit-free return, mirroring IF EXISTS)."""
     mdir = _manifest_dir(path, manifest_path)
     snap_v, head = _open_txn(
-        spark, mdir, f"drop_table_constraint {path}", require=True
+        mdir, f"drop_table_constraint {path}", require=True
     )
     cons = dict(head.get("constraints") or {})
     if name not in cons:
@@ -5642,7 +5324,7 @@ def rename_column(
     (``_guard_mapped_ddl``).  Returns {version, renamed}."""
     mdir = _manifest_dir(path, manifest_path)
     snap_v, head = _open_txn(
-        spark, mdir, f"column DDL {path}", require=True
+        mdir, f"column DDL {path}", require=True
     )
     schema = _head_schema(head)
     names = {f.name for f in schema.fields}
@@ -5710,7 +5392,7 @@ def drop_column(
     {version, dropped}."""
     mdir = _manifest_dir(path, manifest_path)
     snap_v, head = _open_txn(
-        spark, mdir, f"column DDL {path}", require=True
+        mdir, f"column DDL {path}", require=True
     )
     schema = _head_schema(head)
     names = [f.name for f in schema.fields]
@@ -5793,9 +5475,9 @@ def maintain_table(
             "append_files first"
         )
     # fail fast before composing any step (each gated op re-checks)
-    _check_protocol_head(spark, mdir, f"maintain_table {path}")
+    _check_protocol_head(mdir, f"maintain_table {path}")
     actions: dict = {}
-    dvs = _active_dvs(spark, mdir)
+    dvs = _active_dvs(mdir)
     debt_rows = 0
     for d in dvs:
         r = d.get("rows")
@@ -5859,7 +5541,7 @@ def upgrade_table_protocol(
         )
     mdir = _manifest_dir(path, manifest_path)
     snap_v, head = _open_txn(
-        spark, mdir, f"upgrade_table_protocol {path}", require=True
+        mdir, f"upgrade_table_protocol {path}", require=True
     )
     cur = dict(head.get("protocol") or {})
     cur_r = int(cur.get("min_reader", 1))
@@ -5896,8 +5578,8 @@ def table_history(spark: SparkSession, path: str, manifest_path: str | None = No
     full audit trail a deployment keeps by raising ``keep_versions``."""
     mdir = _manifest_dir(path, manifest_path)
     out = []
-    for v in _committed_versions(spark, mdir):
-        commit = _commit_info(spark, mdir, v)
+    for v in _committed_versions(mdir):
+        commit = _commit_info(mdir, v)
         m = _reconstruct_manifest(spark, mdir, v)
         agg = m.agg(
             F.count(F.lit(1)).alias("files"), F.sum("n_rows").alias("rows")
@@ -5971,32 +5653,30 @@ def vacuum_table(
     stale temp siblings, orphaned sidecars — WITHOUT deleting
     anything, and without running intent recovery (recovery mutates;
     a dry run must be a pure listing)."""
-    import time as _time
-
     mdir = _manifest_dir(path, manifest_path)
-    age_floor_ms = (
-        _LEASE_TTL_S if min_age_s is None else float(min_age_s)
-    ) * 1000.0
+    age_floor_s = _LEASE_TTL_S if min_age_s is None else float(min_age_s)
     removed: list[str] = []
-    jvm, hp, fs = _fs_for(spark, path)
     # a table stamped beyond this build's feature level may
     # reference files in ways this build cannot parse — sweeping
     # by a misread manifest could delete live data, so refuse
     # up front like every other write/maintenance entry point
-    _check_protocol_head(spark, mdir, f"vacuum_table {path}")
-    now_ms = _time.time() * 1000.0
-    young = lambda st: (now_ms - st.getModificationTime()) < age_floor_ms
+    _check_protocol_head(mdir, f"vacuum_table {path}")
+    now = time.time()
 
-    def _fresh_tree(st) -> bool:
+    def young(p: str) -> bool:
+        try:
+            return now - os.stat(p).st_mtime < age_floor_s
+        except FileNotFoundError:
+            return False
+
+    def _fresh_tree(p: str) -> bool:
         # a dir's OWN mtime freezes while a cross-process write
         # streams part files in underneath — any young descendant
         # keeps the whole tree alive (early exit on the first)
-        if young(st):
+        if young(p):
             return True
-        if st.isDirectory():
-            for child in fs.listStatus(st.getPath()):
-                if _fresh_tree(child):
-                    return True
+        if os.path.isdir(p):
+            return any(_fresh_tree(e.path) for e in os.scandir(p))
         return False
 
     # intent recovery is age-guarded too: a LIVE other-process
@@ -6004,78 +5684,57 @@ def vacuum_table(
     # that back would delete its just-moved-in files and let its
     # commit reference nothing.  Recovery of a genuinely dead
     # writer happens once the marker crosses the age floor.
-    tpath = hp(f"{mdir}/_TXN")
-    if not dry_run and (
-        not fs.exists(tpath) or not young(fs.getFileStatus(tpath))
-    ):
-        _recover_txn(spark, mdir)
-    removed += _sweep_removed(spark, mdir, dry_run=dry_run)
-    parent = hp(path).getParent()
-    base = hp(path).getName()
-    for st in fs.listStatus(parent):
-        name = st.getPath().getName()
+    tpath = f"{mdir}/_TXN"
+    if not dry_run and not young(tpath):
+        _recover_txn(mdir)
+    removed += _sweep_removed(mdir, dry_run=dry_run)
+    parent, base = os.path.split(path)
+    for e in os.scandir(parent):
         if (
-            st.isDirectory()
-            and (
-                name.startswith(base + "._append_")
-                or name.startswith(base + "._rewrite_")
-                or name.startswith(base + "._delete_")
-                or name.startswith(base + "._merge_")
+            e.is_dir()
+            and e.name.startswith(
+                tuple(
+                    f"{base}._{k}_"
+                    for k in ("append", "rewrite", "delete", "merge")
+                )
             )
-            and not _fresh_tree(st)
+            and not _fresh_tree(e.path)
         ):
             if not dry_run:
-                fs.delete(st.getPath(), True)
-            removed.append(st.getPath().toUri().getPath())
+                _delete(e.path)
+            removed.append(e.path)
     # sidecar orphans: _deletes/_changes files no retained commit
     # (and no in-flight _TXN intent) references — a crash between
     # the sidecar write and the _TXN intent leaves them, invisible
     # to readers, holding disk
     live: set[str] = set()
-    for v in _committed_versions(spark, mdir):
-        commit = _commit_info(spark, mdir, v)
+    for v in _committed_versions(mdir):
+        commit = _commit_info(mdir, v)
         live.update(d["file"] for d in commit.get("dvs", []))
         live.update(commit.get("changes", []) or [])
-    tpath = hp(f"{mdir}/_TXN")
-    if fs.exists(tpath):
-        live.update(
-            _read_json_marker(spark, f"{mdir}/_TXN").get("added", [])
-        )
+    if os.path.exists(tpath):
+        live.update(_read_json(tpath).get("added", []))
     for sub in ("_deletes", "_changes"):
-        sdir = hp(path.rstrip("/") + "/" + sub)
-        if not fs.exists(sdir):
+        sdir = f"{path}/{sub}"
+        if not os.path.isdir(sdir):
             continue
-        for st in fs.listStatus(sdir):
-            refd = False
-            fresh = young(st)
-            for leaf in (
-                fs.listStatus(st.getPath()) if st.isDirectory() else [st]
-            ):
-                fresh = fresh or young(leaf)
-                q = leaf.getPath()
-                uri = q.toString()
-                if uri.startswith("file:"):
-                    uri = q.toUri().getPath()
-                if uri in live:
-                    refd = True
+        for e in os.scandir(sdir):
+            leaves = (
+                [
+                    c.path
+                    for c in os.scandir(e.path)
+                    if not c.name.startswith(".")  # Spark's .crc files
+                ]
+                if e.is_dir()
+                else [e.path]
+            )
+            refd = any(f in live for f in leaves)
+            fresh = young(e.path) or any(young(f) for f in leaves)
             if not refd and not fresh:
                 if not dry_run:
-                    fs.delete(st.getPath(), True)
-                removed.append(st.getPath().toUri().getPath())
+                    _delete(e.path)
+                removed.append(e.path)
     return removed
-
-
-def _cdf_schema(schema: T.StructType) -> T.StructType:
-    """The change-feed row shape: the table schema plus
-    ``_change_type`` (insert / update_preimage / update_postimage /
-    delete) and ``_commit_version`` — Delta's CDF columns."""
-    return T.StructType(
-        list(schema.fields)
-        + [
-            T.StructField("_change_type", T.StringType(), True),
-            T.StructField("_commit_version", T.LongType(), True),
-        ]
-    )
 
 
 def table_changes(
@@ -6125,7 +5784,7 @@ def table_changes(
         since_version = version_at_timestamp(
             spark, path, since_timestamp, manifest_path
         )
-    versions = _committed_versions(spark, mdir)
+    versions = _committed_versions(mdir)
     if since_version not in versions:
         raise ValueError(
             f"version {since_version} is not committed/retained at "
@@ -6136,7 +5795,7 @@ def table_changes(
     # every per-version read below pins to `head` (the listing's
     # snapshot) — resolving "current" again mid-function would race a
     # concurrent commit
-    head_marker = _commit_info(spark, mdir, head)
+    head_marker = _commit_info(mdir, head)
     _check_protocol(head_marker, "read", f"table_changes {path}")
     schema = _head_schema(head_marker)
 
@@ -6145,7 +5804,7 @@ def table_changes(
         parts: list[DataFrame] = []
         cdf_schema = _cdf_schema(schema)
         for v in span:
-            commit = _commit_info(spark, mdir, v)
+            commit = _commit_info(mdir, v)
             changes = commit.get("changes")
             if changes is not None:
                 # a rewrite/merge that wrote its change-data files
@@ -6191,8 +5850,8 @@ def table_changes(
         .collect()
     }
     rewritten = base_files - head_files
-    dv_now = {d["file"] for d in _active_dvs(spark, mdir, version=head)}
-    dv_then = {d["file"] for d in _active_dvs(spark, mdir, since_version)}
+    dv_now = {d["file"] for d in _active_dvs(mdir, version=head)}
+    dv_then = {d["file"] for d in _active_dvs(mdir, since_version)}
     if rewritten or dv_now != dv_then:
         raise ValueError(
             f"the v{since_version}..v{head} span rewrote "

@@ -20,8 +20,9 @@ Scale shape: ``partitions()`` is a driver-side marker walk (one JSON
 per commit in the span — O(span), never O(table)); each added/change
 FILE becomes one input partition, so the read fans out across
 executors and a poll touches only the new batches.  The log layout is
-the plain-file one ``sinks._commit_manifest`` writes, read here with
-the standard library + pyarrow so executors need no JVM filesystem.
+the plain-file one ``sinks._commit_manifest`` writes, read here through
+``lake_log`` (the standard library) and pyarrow, so executors need no
+JVM filesystem and no ``sinks``.
 
 The reference's consumer loop (src/consumer/kafka/trace/mod.rs:24-51)
 is the analogous poll-and-feed surface; this source replaces the
@@ -32,9 +33,7 @@ from __future__ import annotations
 
 import json
 import os
-import re
 from collections.abc import Iterator, Sequence
-from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -44,69 +43,25 @@ from pyspark.sql.datasource import (
     InputPartition,
 )
 
+from ..lake_log import (
+    cdf_schema,
+    commit_info,
+    committed_versions,
+    dir_value,
+    file_size,
+    local_path,
+    py_cast,
+)
+
 #: format name under which the source registers
 FORMAT_NAME = "lake_changes"
 
 
-# ---------------------------------------------------------------------------
-# Plain-file log access (no SparkSession — runs on the driver inside
-# the stream reader, and the same helpers serve the executors' reads)
-# ---------------------------------------------------------------------------
-
-
-def _local_path(p: str) -> str:
-    """Strip a ``file:`` scheme; other URI schemes are rejected (this
-    source reads the log with the standard library — a real deployment
-    on object storage routes through a pyarrow filesystem here)."""
-    if p.startswith("file:"):
-        return re.sub(r"^file:/+", "/", p)
-    if "://" in p:
-        raise ValueError(
-            f"lake_changes reads local/file: paths, got {p!r}"
-        )
-    return p
-
-
 def _mdir(options: dict) -> str:
-    path = _local_path(options["path"])
     override = options.get("manifest")
     if override:
-        # the sinks API accepts file:-scheme manifest paths — strip the
-        # scheme the same way the table path is stripped
-        return _local_path(override)
-    return path.rstrip("/") + "/_stats_manifest"
-
-
-def _committed_versions(mdir: str) -> list[int]:
-    if not os.path.isdir(mdir):
-        return []
-    out = []
-    for name in os.listdir(mdir):
-        if re.fullmatch(r"v\d+", name) and os.path.exists(
-            os.path.join(mdir, name, "_COMMIT")
-        ):
-            out.append(int(name[1:]))
-    return sorted(out)
-
-
-def _marker(mdir: str, version: int) -> dict:
-    with open(os.path.join(mdir, f"v{version}", "_COMMIT")) as f:
-        return json.load(f)
-
-
-def _dir_value(fpath: str, col: str) -> str | None:
-    for seg in fpath.split("/")[:-1]:
-        if seg.startswith(col + "="):
-            v = unquote(seg[len(col) + 1:])
-            return None if v == "__HIVE_DEFAULT_PARTITION__" else v
-    return None
-
-
-def _fsize(p: str) -> int:
-    try:
-        return os.path.getsize(p)
-    except OSError:
-        return 0
+        return local_path(override)
+    return local_path(options["path"]) + "/_stats_manifest"
 
 
 # ---------------------------------------------------------------------------
@@ -183,10 +138,10 @@ class LakeChangesStreamReader(DataSourceStreamReader):
         order — the SINGLE enumeration both ``latestOffset``'s budget
         walk and ``partitions`` use, so a split offset's file index
         can never disagree between planning and execution."""
-        m = _marker(self._mdir, v)
+        m = commit_info(self._mdir, v)
         changes = m.get("changes")
         if self._cdf and changes is not None:
-            return [(_local_path(f), "change") for f in changes]
+            return [(f, "change") for f in changes]
         # plain mode: a pure append serves its added files even on
         # a CDF table (whose appends ALWAYS carry change sidecars —
         # raising on `changes` alone would make a CDF table
@@ -214,7 +169,7 @@ class LakeChangesStreamReader(DataSourceStreamReader):
                     "(it predates the table's CDF flag)"
                 )
             )
-        return [(_local_path(f), "data") for f in m.get("added", [])]
+        return [(f, "data") for f in m.get("added", [])]
 
     def _recover_pos(self) -> tuple[int, int] | None:
         """Recover the stream's position from Spark's own offset log
@@ -226,7 +181,7 @@ class LakeChangesStreamReader(DataSourceStreamReader):
         ck = self._options.get("checkpoint_location")
         if not ck:
             return None
-        odir = os.path.join(_local_path(ck), "offsets")
+        odir = os.path.join(local_path(ck), "offsets")
         if not os.path.isdir(odir):
             return (self._start, 0)  # fresh checkpoint → initialOffset
         batches = sorted(
@@ -277,7 +232,7 @@ class LakeChangesStreamReader(DataSourceStreamReader):
         return _emit_pos(self._pos)
 
     def latestOffset(self) -> dict:
-        committed = _committed_versions(self._mdir)
+        committed = committed_versions(self._mdir)
         pos = self._pos
         if pos is None:
             pos = self._recover_pos()
@@ -310,7 +265,7 @@ class LakeChangesStreamReader(DataSourceStreamReader):
         while (v, consumed) < head_pos and v in cs:
             files = self._commit_files(v)
             for i in range(consumed, len(files)):
-                size = _fsize(files[i][0]) if self._max_bytes > 0 else 0
+                size = file_size(files[i][0]) if self._max_bytes > 0 else 0
                 over = (
                     self._max_files > 0 and nf + 1 > self._max_files
                 ) or (self._max_bytes > 0 and nb + size > self._max_bytes)
@@ -343,7 +298,7 @@ class LakeChangesStreamReader(DataSourceStreamReader):
             # restart replay: Spark re-plans the logged batch before
             # any latestOffset call — prime the position from it
             self._pos = e
-        committed = set(_committed_versions(self._mdir))
+        committed = set(committed_versions(self._mdir))
         parts: list[LakeChangesPartition] = []
         v, skip = s
         while (v, skip) < e:
@@ -372,16 +327,13 @@ class LakeChangesStreamReader(DataSourceStreamReader):
         n = table.num_rows
         have = {f.lower(): i for i, f in enumerate(table.column_names)}
         pcols = {c for c in self._pcols.split(",") if c}
-        # column mapping (rename/drop DDL): files store PHYSICAL names;
-        # the committed schema's field metadata maps logical -> phys
-        # (identity for unmapped tables)
-        phys_by_name = {
-            f.name: (f.metadata or {}).get("lake.phys", f.name)
-            for f in self._schema.fields
-        }
+        fields = {f.name: f for f in self._schema.fields}
         for field in target:
             name = field.name
-            phys = phys_by_name.get(name, name)
+            # column mapping (rename/drop DDL): files store PHYSICAL
+            # names; the committed schema's field metadata maps logical
+            # -> phys (identity for unmapped tables)
+            phys = (fields[name].metadata or {}).get("lake.phys", name)
             if name == "_change_type" and partition.kind == "data":
                 cols.append(pa.array(["insert"] * n, type=field.type))
             elif name == "_commit_version" and partition.kind == "data":
@@ -393,26 +345,13 @@ class LakeChangesStreamReader(DataSourceStreamReader):
                     table.column(have[phys.lower()]).cast(field.type)
                 )
             elif name in pcols:
-                raw = _dir_value(partition.file, name)
-                if raw is None:
-                    cols.append(pa.nulls(n, type=field.type))
-                else:
-                    # hive dir values are strings; decode per the
-                    # declared type (mirrors sinks._py_cast — bool and
-                    # date partitions must not reach pa.array as str)
-                    if pa.types.is_integer(field.type):
-                        py = int(raw)
-                    elif pa.types.is_floating(field.type):
-                        py = float(raw)
-                    elif pa.types.is_boolean(field.type):
-                        py = str(raw).lower() == "true"
-                    elif pa.types.is_date(field.type):
-                        import datetime
-
-                        py = datetime.date.fromisoformat(str(raw))
-                    else:
-                        py = raw
-                    cols.append(pa.array([py] * n, type=field.type))
+                # hive dir values are strings; decode per the declared
+                # type (bool and date partitions must not reach
+                # pa.array as str)
+                py = py_cast(
+                    dir_value(partition.file, name), fields[name].dataType
+                )
+                cols.append(pa.array([py] * n, type=field.type))
             else:  # add-only evolution: older files NULL-fill
                 cols.append(pa.nulls(n, type=field.type))
         out = pa.table(cols, schema=target)
@@ -433,13 +372,13 @@ class LakeChangesDataSource(DataSource):
 
     def schema(self) -> T.StructType:
         mdir = _mdir(self.options)
-        vs = _committed_versions(mdir)
+        vs = committed_versions(mdir)
         if not vs:
             raise ValueError(
                 f"no committed snapshot at {mdir} — create the table "
                 "with append_files first"
             )
-        m = _marker(mdir, vs[-1])
+        m = commit_info(mdir, vs[-1])
         # protocol gate: refuse to stream a table whose stamped feature
         # level exceeds this build's (lazy import — this module must
         # stay importable on executors without the sinks module loaded)
@@ -454,21 +393,15 @@ class LakeChangesDataSource(DataSource):
             )
         schema = T.StructType.fromJson(sj)
         if str(self.options.get("change_feed", "false")).lower() == "true":
-            schema = T.StructType(
-                list(schema.fields)
-                + [
-                    T.StructField("_change_type", T.StringType(), True),
-                    T.StructField("_commit_version", T.LongType(), True),
-                ]
-            )
+            schema = cdf_schema(schema)
         return schema
 
     def streamReader(self, schema: T.StructType) -> LakeChangesStreamReader:
         opts = dict(self.options)
         if "partition_cols" not in opts:
             mdir = _mdir(opts)
-            vs = _committed_versions(mdir)
-            pby = _marker(mdir, vs[-1]).get("partition_by") if vs else None
+            vs = committed_versions(mdir)
+            pby = commit_info(mdir, vs[-1]).get("partition_by") if vs else None
             opts["partition_cols"] = ",".join(pby or [])
         return LakeChangesStreamReader(schema, opts)
 

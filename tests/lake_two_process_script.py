@@ -46,7 +46,7 @@ def main() -> None:
     )
     spark.sparkContext.setLogLevel("ERROR")
     if mode == "recover":
-        got = sinks._recover_txn(spark, tbl + "/_stats_manifest")
+        got = sinks._recover_txn(tbl + "/_stats_manifest")
         print(
             f"CHILD_ROLLED {got['rolled'] if got else 'none'}",
             flush=True,

@@ -19,7 +19,7 @@ import glob
 import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
-from evmtrace_etl_spark.sinks import append_files, cluster_table
+from evmtrace_etl_spark.sinks import append_files, cluster_table, read_table
 
 
 def _dir_bytes(path: str) -> int:
@@ -100,6 +100,28 @@ def test_cluster_roundtrip_and_ledger(spark, tmp_path):
     for path in (lin, zo):
         got = sorted(tuple(r) for r in spark.read.parquet(path).collect())
         assert got == want
+
+
+def test_read_table_keeps_committed_column_order(spark, tmp_path):
+    """``read_table`` on a hive-partitioned table returns the committed
+    column order whether a predicate matches files or not (a scan with
+    ``basePath`` alone would move the partition column last)."""
+    tbl = str(tmp_path / "t")
+    append_files(
+        spark,
+        spark.range(10).select(
+            (F.col("id") % 2).alias("p"), F.col("id").alias("v")
+        ),
+        tbl,
+        cols=["v"],
+        partition_by=["p"],
+    )
+    hit = read_table(spark, tbl, {"v": (2, 3)})
+    miss = read_table(spark, tbl, {"v": (50, 60)})
+    assert read_table(spark, tbl).columns == ["p", "v"]
+    assert hit.columns == miss.columns == ["p", "v"]
+    assert sorted(tuple(r) for r in hit.collect()) == [(0, 2), (1, 3)]
+    assert miss.count() == 0
 
 
 def test_footer_stats_skipping_three_layouts(spark, tmp_path):

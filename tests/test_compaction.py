@@ -8,7 +8,12 @@ import os
 
 from pyspark.sql import functions as F
 
-from evmtrace_etl_spark.sinks import append_files, compact_table, read_table
+from evmtrace_etl_spark.sinks import (
+    append_files,
+    compact_table,
+    current_manifest,
+    read_table,
+)
 
 
 def _data_files(path: str) -> list[str]:
@@ -58,6 +63,37 @@ def test_compact_repartition_even_files(spark, tmp_path):
     got = sorted(tuple(r) for r in read_table(spark, tbl).collect())
     want = sorted(tuple(r) for r in df.collect())
     assert got == want
+
+
+def test_compact_retained_table_picks_live_files(spark, tmp_path):
+    """On a retain_removed table the files a rewrite replaced stay on
+    disk for time travel; compaction takes its candidates from the head
+    snapshot, so those retained files are never re-packed, and
+    compacting a table that holds one live file is a no-op."""
+    tbl = str(tmp_path / "t")
+    for i in range(8):
+        append_files(
+            spark,
+            spark.range(i * 100, (i + 1) * 100).coalesce(1),
+            tbl,
+            cols=["id"],
+            retain_removed=True,
+            keep_versions=10,
+        )
+    first = compact_table(spark, tbl, target_bytes=1 << 30)
+    assert (first["files_rewritten"], first["files_added"]) == (8, 1)
+    (live,) = [
+        r["file"]
+        for r in current_manifest(spark, tbl + "/_stats_manifest")
+        .select("file")
+        .collect()
+    ]
+    assert len(_data_files(tbl)) == 9  # the 8 replaced files retained
+
+    second = compact_table(spark, tbl, target_bytes=1 << 30)
+    assert second["files_rewritten"] == second["files_added"] == 0
+    assert second["bytes_in"] == os.path.getsize(live)
+    assert read_table(spark, tbl).count() == 800
 
 
 def test_compact_partitioned_preserves_layout_and_budgets(spark, tmp_path):

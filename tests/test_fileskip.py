@@ -777,7 +777,7 @@ def test_manifest_lives_hidden_inside_the_table(spark, tmp_path):
     """The default manifest location is INSIDE the table directory —
     hidden from Spark scans and from the tier's own file listings, so
     the table plus its snapshot metadata travel as one directory."""
-    from evmtrace_etl_spark.sinks import _leaf_file_uris, update_stats_index
+    from evmtrace_etl_spark.sinks import _leaf_files, update_stats_index
 
     dst = _build(spark, tmp_path)
     n = spark.read.parquet(dst).count()
@@ -786,9 +786,7 @@ def test_manifest_lives_hidden_inside_the_table(spark, tmp_path):
     # a plain directory scan neither errors nor double-counts
     assert spark.read.parquet(dst).count() == n
     # and the tier's listings exclude the metadata subtree
-    assert all(
-        "_stats_manifest" not in u for u in _leaf_file_uris(spark, dst)
-    )
+    assert all("_stats_manifest" not in f for _r, f, _n in _leaf_files(dst))
 
 
 def test_index_is_footer_only_no_data_scan(spark, tmp_path):

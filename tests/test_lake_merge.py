@@ -223,12 +223,12 @@ def test_conflict_after_move_in_rolls_back_cleanly(
     real_marker = sinks._write_json_marker
     state = {"fired": False, "constraints": None}
 
-    def interloping_marker(spark_, dirpath, name, payload, **kw):
+    def interloping_marker(dirpath, name, payload, **kw):
         # as the victim writes its _TXN intent, an out-of-process
         # interloper lands a commit first (stealing the version)
         if name == "_TXN" and not state["fired"]:
             state["fired"] = True
-            real_marker(spark_, dirpath, name, payload, **kw)
+            real_marker(dirpath, name, payload, **kw)
             m = sinks.current_manifest(spark, mdir)
             # an empty delta — commits carry only what THEY add
             sinks._commit_manifest(
@@ -236,7 +236,7 @@ def test_conflict_after_move_in_rolls_back_cleanly(
                 constraints=state["constraints"],
             )
             return
-        real_marker(spark_, dirpath, name, payload, **kw)
+        real_marker(dirpath, name, payload, **kw)
 
     src = spark.range(500, 560).select(
         F.col("id").alias("k"), F.lit(1).cast("long").alias("v")

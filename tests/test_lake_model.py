@@ -192,7 +192,7 @@ def _run_program(spark, tmp_path, seed: int, n_ops: int = 12) -> list:
             # RESTORE to a random RETAINED recorded snapshot (possibly
             # across a DV fold, a rename, or a widen) — the model, the
             # column name, and the value type all roll back with it
-            committed = set(sinks._committed_versions(spark, mdir))
+            committed = set(sinks._committed_versions(mdir))
             candidates = sorted(v for v in history if v in committed)
             if candidates:
                 target = rng.choice(candidates[-5:])

@@ -10,6 +10,7 @@ from __future__ import annotations
 import glob
 import json
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -647,15 +648,19 @@ def test_driver_side_stats_handle_timestamp_and_decimal(spark, tmp_path):
 
 
 def test_lock_key_normalization():
-    """Spelling variants of one table path must map to ONE lock."""
-    k = sinks._lock_key("/a/b/_stats_manifest")
-    assert sinks._lock_key("/a/b/_stats_manifest/") == k
-    assert sinks._lock_key("file:///a/b/_stats_manifest") == k
-    assert sinks._lock_key("/a/./b/_stats_manifest") == k
+    """Spelling variants of one table path must map to ONE lock, and a
+    non-local URI is refused, naming the path."""
+    k = sinks._local_path("/a/b/_stats_manifest")
+    assert sinks._local_path("/a/b/_stats_manifest/") == k
+    assert sinks._local_path("file:///a/b/_stats_manifest") == k
+    assert sinks._local_path("/a/./b/_stats_manifest") == k
     assert (
         sinks._log_lock("/a/b/_stats_manifest")
         is sinks._log_lock("file:///a/b/_stats_manifest/")
     )
+    for uri in ("hdfs://nn/a/b", "s3a://bucket/a/b"):
+        with pytest.raises(ValueError, match=re.escape(uri)):
+            sinks._local_path(uri)
 
 
 def test_mor_update_merge_matches_cow_twin(spark, tmp_path):
@@ -837,7 +842,7 @@ def test_lease_release_only_deletes_own_token(spark, tmp_path):
     import os as _os
 
     mdir = str(tmp_path / "m")
-    a = sinks._CommitLease(spark, mdir)
+    a = sinks._CommitLease(mdir)
     a.__enter__()
     lock = _os.path.join(mdir, "_LOCK")
     assert _json.loads(open(lock).read())["token"] == a._token
@@ -846,10 +851,7 @@ def test_lease_release_only_deletes_own_token(spark, tmp_path):
     # breaks it and acquires its own lease
     old = _os.path.getmtime(lock) - (sinks._LEASE_TTL_S + 5)
     _os.utime(lock, (old, old))
-    crc = _os.path.join(mdir, "._LOCK.crc")
-    if _os.path.exists(crc):
-        _os.remove(crc)
-    b = sinks._CommitLease(spark, mdir)
+    b = sinks._CommitLease(mdir)
     b.__enter__()
     assert _json.loads(open(lock).read())["token"] == b._token
 
@@ -1181,7 +1183,7 @@ def test_dv_debt_consolidates_at_checkpoint(spark, tmp_path):
         )
     # v9 was not yet a checkpoint; debt = 6 sidecars
     mdir = tbl + "/_stats_manifest"
-    assert len(sinks._active_dvs(spark, mdir)) == 6
+    assert len(sinks._active_dvs(mdir)) == 6
     # re-insert one deleted key: its NEW row postdates the tombstone
     # and must survive the fold
     append_files(
@@ -1191,7 +1193,7 @@ def test_dv_debt_consolidates_at_checkpoint(spark, tmp_path):
         ).coalesce(1),
         tbl,
     )  # v10 — the checkpoint commit; consolidation runs HERE
-    dvs = sinks._active_dvs(spark, mdir)
+    dvs = sinks._active_dvs(mdir)
     assert len(dvs) == 1 and dvs[0].get("per_row") is True
     assert "consolidated-v10" in dvs[0]["file"]
     assert int(dvs[0]["rows"]) == 6  # keep-last fold of 6 single-key dvs
@@ -1212,7 +1214,7 @@ def test_dv_debt_consolidates_at_checkpoint(spark, tmp_path):
         spark, tbl, None, {"k": (20, 20)},
         strategy="merge-on-read", keys=["k"],
     )  # v11
-    assert len(sinks._active_dvs(spark, mdir)) == 2
+    assert len(sinks._active_dvs(mdir)) == 2
     t2 = read_table(spark, tbl)
     assert t2.count() == 200 - 7 + 1 and t2.filter("k = 12").count() == 1
 
@@ -1226,7 +1228,7 @@ def test_dv_debt_consolidates_at_checkpoint(spark, tmp_path):
         p
         for p in glob.glob(tbl + "/_deletes/*/*.parquet")
     }
-    live = {d["file"] for d in sinks._active_dvs(spark, mdir)}
+    live = {d["file"] for d in sinks._active_dvs(mdir)}
     assert on_disk == live
 
     # materialize_deletes still folds everything back into data files
@@ -1234,7 +1236,7 @@ def test_dv_debt_consolidates_at_checkpoint(spark, tmp_path):
     assert led["dv_files_removed"] == 2
     t3 = read_table(spark, tbl)
     assert t3.count() == 194 and t3.filter("k = 12").collect()[0]["v"] == -777
-    assert sinks._active_dvs(spark, mdir) == []
+    assert sinks._active_dvs(mdir) == []
 
 
 def test_dv_consolidation_preserves_time_travel_on_retain(spark, tmp_path):
@@ -1255,8 +1257,8 @@ def test_dv_consolidation_preserves_time_travel_on_retain(spark, tmp_path):
             strategy="merge-on-read", keys=["k"],
         )
     mdir = tbl + "/_stats_manifest"
-    assert len(sinks._active_dvs(spark, mdir)) == 1
-    assert len(sinks._active_dvs(spark, mdir, version=9)) == 9
+    assert len(sinks._active_dvs(mdir)) == 1
+    assert len(sinks._active_dvs(mdir, version=9)) == 9
     # head = fold applied; v9 = pre-fold sidecars still on disk
     assert read_table(spark, tbl).count() == 90
     assert read_table(spark, tbl, version=9).count() == 91
@@ -1307,9 +1309,6 @@ def test_dv_suppression_broadcast_hint_is_size_gated(
         d.pop("rows", None)
     with open(mp, "w") as f:
         f.write(_json.dumps(m))
-    crc = os.path.join(os.path.dirname(mp), "._COMMIT.crc")
-    if os.path.exists(crc):
-        os.remove(crc)
     monkeypatch.setattr(sinks, "_DV_BROADCAST_MAX_ROWS", 1)
     assert _hints(read_table(spark, tbl)) == 2
 
@@ -1425,7 +1424,7 @@ def test_maintain_table_composes_upkeep(spark, tmp_path):
     )
     assert led3["dv_files"] > 4
     assert led3["materialize"] is not None
-    assert sinks._active_dvs(spark, tbl + "/_stats_manifest") == []
+    assert sinks._active_dvs(tbl + "/_stats_manifest") == []
     t = read_table(spark, tbl)
     assert t.count() == 88 and t.filter("k >= 10 and k < 19").count() == 0
     # rows threshold leg: one fresh tombstone, tiny rows threshold
@@ -1460,10 +1459,10 @@ def test_restore_to_pre_fold_snapshot(spark, tmp_path):
             strategy="merge-on-read", keys=["k"],
         )
     mdir = tbl + "/_stats_manifest"
-    assert len(sinks._active_dvs(spark, mdir)) == 1  # folded
+    assert len(sinks._active_dvs(mdir)) == 1  # folded
     led = sinks.restore_table(spark, tbl, version=5)
     assert led["restored_to"] == 5
-    dvs = sinks._active_dvs(spark, mdir)
+    dvs = sinks._active_dvs(mdir)
     assert len(dvs) == 5 and not any(d.get("per_row") for d in dvs)
     t = read_table(spark, tbl)
     assert t.count() == 95 and t.filter("k < 5").count() == 0
@@ -1513,9 +1512,6 @@ def test_unstamped_consolidated_dv_disables_broadcast_hint(
             d["rows"] = None
     with open(mp, "w") as f:
         f.write(_json.dumps(m))
-    crc = os.path.join(os.path.dirname(mp), "._COMMIT.crc")
-    if os.path.exists(crc):
-        os.remove(crc)
     t = read_table(spark, tbl)
     assert _hints(t) == 1  # file map stays hinted; tombstone join not
     # visibility unchanged either way

@@ -65,9 +65,6 @@ def _stamp_protocol(tbl: str, min_reader: int, min_writer: int) -> None:
     m["features"] = ["from-the-future"]
     with open(os.path.join(vdir, "_COMMIT"), "w") as f:
         f.write(json.dumps(m))
-    crc = os.path.join(vdir, "._COMMIT.crc")
-    if os.path.exists(crc):
-        os.remove(crc)
 
 
 @pytest.mark.slow

@@ -347,7 +347,7 @@ def test_collided_mor_delete_recommits_without_rescanning(
     assert t.filter("k >= 5 and k <= 9").count() == 0
     # the dv entry kept the ORIGINAL read-snapshot stamp, not the
     # rebased commit version
-    dvs = sinks._active_dvs(spark, tbl + "/_stats_manifest")
+    dvs = sinks._active_dvs(tbl + "/_stats_manifest")
     assert [int(d["version"]) for d in dvs] == [1]
     assert not os.path.exists(tbl + "/_stats_manifest/_TXN")
 
@@ -417,7 +417,7 @@ def test_mor_delete_vs_rewrite_winner_full_retries(
             strategy="merge-on-read", keys=["k"],
         )
     # rollback left no tombstone and no intent
-    assert sinks._active_dvs(spark, tbl + "/_stats_manifest") == []
+    assert sinks._active_dvs(tbl + "/_stats_manifest") == []
     assert not os.path.exists(tbl + "/_stats_manifest/_TXN")
     # the bounded retry lands against the fresh snapshot
     led = sinks.retry_on_conflict(
@@ -463,7 +463,7 @@ def test_two_racing_mor_deletes_commute_when_key_disjoint(
     assert t.count() == 80
     assert t.filter("k < 10 or (k >= 50 and k < 60)").count() == 0
     # both tombstones active, each with its own read-snapshot stamp
-    dvs = sinks._active_dvs(spark, tbl + "/_stats_manifest")
+    dvs = sinks._active_dvs(tbl + "/_stats_manifest")
     assert sorted(int(d["version"]) for d in dvs) == [1, 1]
 
 
@@ -539,7 +539,7 @@ def test_collided_mor_delete_commutes_past_checkpoint_fold(
     assert led["rebased"] == 1 and led["rows_deleted"] == 10
     assert led["files_rewritten"] == 0 and led["files_added"] == 0
     # the winner really folded: one consolidated per_row entry active
-    dvs = sinks._active_dvs(spark, tbl + "/_stats_manifest")
+    dvs = sinks._active_dvs(tbl + "/_stats_manifest")
     assert any(d.get("per_row") for d in dvs)
     # the loser's files (incl. its tombstone sidecar) survived the
     # re-commit byte-untouched

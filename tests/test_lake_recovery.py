@@ -90,7 +90,7 @@ def test_two_actors_adjudicate_intent_exactly_once(spark, tmp_path):
     def actor(i: int) -> None:
         try:
             barrier.wait(timeout=30)
-            results[i] = sinks._recover_txn(spark, mdir)
+            results[i] = sinks._recover_txn(mdir)
         except Exception as exc:  # pragma: no cover - fails the test
             errors.append(exc)
 
@@ -131,7 +131,7 @@ def test_commit_refuses_after_live_intent_adjudication(
             state["fired"] = True
             # the foreign actor adjudicates the victim's live intent
             # as crashed — NO commit of its own, version stays free
-            got = sinks._recover_txn(spark_, mdir_)
+            got = sinks._recover_txn(mdir_)
             assert got is not None and got["rolled"] == "back"
         return real(spark_, mdir_, *a, **kw)
 
@@ -198,7 +198,7 @@ def test_cross_process_maintain_vs_vacuum_over_crashed_intent(
     try:
         # race the child's vacuums with in-band-style maintenance
         for _ in range(4):
-            got = sinks._recover_txn(spark, mdir)
+            got = sinks._recover_txn(mdir)
             if got is not None:
                 parent_rolled += 1
             retry_on_conflict(
@@ -252,18 +252,18 @@ def test_intent_token_primitives_ownership_contract(spark, tmp_path):
     tpath = os.path.join(mdir, "_TXN")
 
     a = sinks._write_txn_intent(
-        spark, mdir, {"expected_version": 5, "added": [], "removed": []}
+        mdir, {"expected_version": 5, "added": [], "removed": []}
     )
     b = sinks._write_txn_intent(  # restamp: marker replaced, new token
-        spark, mdir, {"expected_version": 6, "added": [], "removed": []}
+        mdir, {"expected_version": 6, "added": [], "removed": []}
     )
     assert a != b and os.path.exists(tpath)
     with open(tpath) as f:
         assert json.load(f)["intent"] == b
 
-    sinks._clear_txn_intent(spark, mdir, a)  # stale owner: must NOT delete
+    sinks._clear_txn_intent(mdir, a)  # stale owner: must NOT delete
     assert os.path.exists(tpath)
-    sinks._clear_txn_intent(spark, mdir, b)  # current owner: deletes
+    sinks._clear_txn_intent(mdir, b)  # current owner: deletes
     assert not os.path.exists(tpath)
-    sinks._clear_txn_intent(spark, mdir, b)  # absent: no-op, no raise
+    sinks._clear_txn_intent(mdir, b)  # absent: no-op, no raise
     assert not os.path.exists(os.path.join(mdir, "_LOCK"))  # lease released

@@ -373,7 +373,7 @@ def test_sidecar_census_matches_retained_ledger(spark, tmp_path):
     # fold everything back -> dv sidecars retire into the backlog (v4)
     materialize_deletes(spark, tbl)
     mdir = tbl + "/_stats_manifest"
-    assert sinks._active_dvs(spark, mdir) == []
+    assert sinks._active_dvs(mdir) == []
     # the retired sidecars are still referenced by retained v1..v3 —
     # vacuum must NOT reclaim them yet, and travel still serves
     vacuum_table(spark, tbl, min_age_s=0)
@@ -396,7 +396,7 @@ def test_sidecar_census_matches_retained_ledger(spark, tmp_path):
     assert _census() == _referenced() and _census()
     pre_fold_dvs = {
         d["file"]
-        for d in sinks._commit_info(spark, mdir, 3).get("dvs", [])
+        for d in sinks._commit_info(mdir, 3).get("dvs", [])
     }
     assert pre_fold_dvs <= _census()
 
@@ -423,14 +423,14 @@ def test_sidecar_census_matches_retained_ledger(spark, tmp_path):
     assert census <= _referenced()
     # (c) ...and no over-delete: everything the RETAINED window (>=
     #     the head's floor) references is on disk
-    versions = sinks._committed_versions(spark, mdir)
-    head = sinks._commit_info(spark, mdir, versions[-1])
+    versions = sinks._committed_versions(mdir)
+    head = sinks._commit_info(mdir, versions[-1])
     floor = int(head.get("floor", versions[0]))
     window: set[str] = set()
     for v in versions:
         if v < floor:
             continue
-        m = sinks._commit_info(spark, mdir, v)
+        m = sinks._commit_info(mdir, v)
         window.update(d["file"] for d in m.get("dvs", []))
         window.update(m.get("changes", []) or [])
     assert window <= census
@@ -473,7 +473,7 @@ def test_vacuum_reclaims_crash_orphan_sidecars_only(spark, tmp_path):
         strategy="merge-on-read", keys=["k"],
     )
     mdir = tbl + "/_stats_manifest"
-    live_dv = sinks._active_dvs(spark, mdir)[0]["file"]
+    live_dv = sinks._active_dvs(mdir)[0]["file"]
     # forge STALE crash debris: an unreferenced sidecar dir backdated
     # past the age floor (crash happened long ago)
     orphan_dir = os.path.join(tbl, "_deletes", "v99-deadbeef")

@@ -301,6 +301,53 @@ def test_lake_sink_upsert_job_counts(spark, tmp_path):
     assert sink.read(spark, "t").count() == 250
 
 
+def test_lake_sink_upsert_makes_no_direct_py4j_calls(
+    spark, tmp_path, monkeypatch
+):
+    """The lake log and its files are reached through the Python
+    standard library: a warm ``LakeUpsertSink.upsert``, in 'ignore' and
+    in 'update' mode, issues no py4j command whose caller — the
+    innermost frame outside py4j — is the sink module or the
+    ``lake_changes`` source.  Spark work still goes through pyspark's
+    own API, whose frames are not counted."""
+    import sys
+    from collections import Counter
+
+    from py4j.clientserver import ClientServerConnection
+
+    sink = LakeUpsertSink(str(tmp_path / "sink"))
+    keys = ["chain_id", "number"]
+
+    def rows(lo: int, hi: int):
+        return spark.range(lo, hi).select(
+            (F.col("id") % 2).alias("chain_id"), F.col("id").alias("number")
+        )
+
+    sink.upsert(rows(0, 100), "t", keys, mode="ignore")  # first write
+    sink.upsert(rows(50, 150), "t", keys, mode="ignore")  # warm-up
+    ours = (
+        os.path.join("evmtrace_etl_spark", "sinks.py"),
+        os.path.join("evmtrace_etl_spark", "sources", "lake_changes.py"),
+    )
+    direct: Counter = Counter()
+    real = ClientServerConnection.send_command
+
+    def counted(self, command, *args, **kwargs):
+        f = sys._getframe(1)
+        while f is not None and f"{os.sep}py4j{os.sep}" in f.f_code.co_filename:
+            f = f.f_back
+        if f is not None and f.f_code.co_filename.endswith(ours):
+            direct[f.f_code.co_name] += 1
+        return real(self, command, *args, **kwargs)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counted)
+    sink.upsert(rows(100, 200), "t", keys, mode="ignore")
+    sink.upsert(rows(150, 250), "t", keys, mode="update")
+    monkeypatch.undo()
+    assert dict(direct) == {}
+    assert sink.read(spark, "t").count() == 250
+
+
 def _traces(spark, replica: int):
     """The fixture traces with replica-unique tx hashes and seqs."""
     rows = [
