@@ -2,11 +2,13 @@
 the stream source (``sources.lake_changes``).
 
 The log lives on the local filesystem and is read with the Python
-standard library: no SparkSession, no JVM, so the stream reader's
-executors load this module without loading ``sinks``.  Layout (see the
-snapshot-commit section of ``sinks``): ``<manifest>/v<N>/_COMMIT`` is a
-committed version's JSON marker; ``<manifest>/v<N>/*.parquet`` its
-manifest rows.
+standard library and pyarrow: no SparkSession, no JVM, so the stream
+reader's executors load this module without loading ``sinks``.  Layout
+(see the snapshot-commit section of ``sinks``): ``<manifest>/v<N>/_COMMIT``
+is a committed version's JSON marker; ``<manifest>/v<N>/*.parquet`` its
+manifest rows.  A snapshot's manifest is one ``pyarrow.Table``
+(``read_manifest``), replayed on the driver the way delta-rs and Delta
+Kernel replay a Delta log in-process.
 """
 
 from __future__ import annotations
@@ -135,3 +137,88 @@ def cdf_schema(schema: T.StructType) -> T.StructType:
             T.StructField("_commit_version", T.LongType(), True),
         ]
     )
+
+
+def manifest_schema(schema: T.StructType, stats_cols) -> "pa.Schema":
+    """The manifest-row arrow schema: ``file``, ``n_rows``,
+    ``<c>_min``/``<c>_max`` for each stats column typed as the table
+    column (``to_arrow_type`` — a ``TimestampType`` column's stats are
+    ``timestamp[us, tz=UTC]``), and ``added_version``."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    by_name = {f.name: f.dataType for f in schema.fields}
+    lost = [c for c in stats_cols if c not in by_name]
+    if lost:
+        raise ValueError(
+            f"stats columns {lost} are not in the table schema"
+        )
+    fields = [pa.field("file", pa.string()), pa.field("n_rows", pa.int64())]
+    for c in stats_cols:
+        t = to_arrow_type(by_name[c])
+        fields += [pa.field(f"{c}_min", t), pa.field(f"{c}_max", t)]
+    fields.append(pa.field("added_version", pa.int64()))
+    return pa.schema(fields)
+
+
+def conform(table: "pa.Table", schema: "pa.Schema") -> "pa.Table":
+    """``table`` under ``schema``: columns it carries are cast, columns
+    it lacks fill NULL (a delta written before a stats column evolved
+    in — NULL stats keep the file a candidate), columns ``schema`` does
+    not name are dropped."""
+    import pyarrow as pa
+
+    have = set(table.column_names)
+    return pa.Table.from_arrays(
+        [
+            table[f.name].cast(f.type)
+            if f.name in have
+            else pa.nulls(table.num_rows, f.type)
+            for f in schema
+        ],
+        schema=schema,
+    )
+
+
+def read_manifest(mdir: str, version: int) -> "pa.Table":
+    """The manifest SNAPSHOT at ``version``, replayed from the log on
+    the driver: the base checkpoint's rows plus the later deltas' rows
+    up to ``version``, minus the deltas' removed lists, under the
+    marker's manifest schema.  File paths are never reused (uuid part
+    names), so the set algebra is order-free.  Raises when the chain is
+    no longer retained."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    marker = commit_info(mdir, version)
+    base = int(marker["base_ckpt"])  # == version on a checkpoint
+    committed = set(committed_versions(mdir))
+    chain = range(base, version + 1)
+    missing = [v for v in chain if v not in committed]
+    if missing:
+        raise ValueError(
+            f"manifest version {version} at {mdir} is no longer "
+            f"reconstructible — its checkpoint chain v{base}..v{version} "
+            f"lost {missing} to retention"
+        )
+    schema = manifest_schema(
+        T.StructType.fromJson(marker["schema"]), marker["stats_cols"]
+    )
+    parts = []
+    removed: set[str] = set()
+    for v in chain:
+        if v > base:
+            m = marker if v == version else commit_info(mdir, v)
+            removed.update(m["removed"])
+        # a pure-removal delta's dir holds no parquet, only markers
+        parts += [
+            conform(pq.ParquetFile(e.path).read(), schema)
+            for e in os.scandir(f"{mdir}/v{v}")
+            if e.is_file() and not e.name.startswith(("_", "."))
+        ]
+    out = pa.concat_tables(parts) if parts else schema.empty_table()
+    if removed:
+        gone = pc.is_in(out["file"], value_set=pa.array(list(removed)))
+        out = out.filter(pc.invert(gone))
+    return out

@@ -62,6 +62,8 @@ import shutil
 import time
 from collections.abc import Callable, Iterable, Iterator, Sequence
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -71,11 +73,14 @@ from .lake_log import (
     cdf_schema as _cdf_schema,
     commit_info as _commit_info,
     committed_versions as _committed_versions,
+    conform as _conform,
     dir_value as _dir_value,
     file_size as _file_size,
     local_path as _local_path,
+    manifest_schema as _manifest_schema,
     py_cast as _py_cast,
     read_json as _read_json,
+    read_manifest as _reconstruct_manifest,
 )
 
 #: DB-API paramstyle → positional placeholder token
@@ -527,7 +532,7 @@ def parquet_stats_index(
     cols: Sequence[str],
     paths: Sequence[str] | None = None,
     schema: T.StructType | None = None,
-) -> DataFrame:
+) -> pa.Table:
     """Per-FILE min/max/row-count index for ``cols``, read from parquet
     FOOTERS only — the manifest a Delta/Iceberg-style table format
     maintains, rebuilt here from the files themselves.  Row-group
@@ -545,11 +550,13 @@ def parquet_stats_index(
     (a writer that skipped them) surface as NULL min/max, which the
     pruner treats as "may match" — conservative, never wrong.
 
-    Output: ``file`` (absolute), ``n_rows``, and ``<c>_min``/``<c>_max``
-    typed as the source column for each requested col.  The lake log
-    commits it as the table's manifest (``_land_commit`` for commits of
-    more than ``_LOCAL_STATS_MAX`` files, ``update_stats_index`` for
-    adopted directories) and ``read_table`` prunes through it.  ``paths``
+    Output: one ``pyarrow.Table`` (``DataFrame.toArrow``) — ``file``
+    (absolute), ``n_rows``, and ``<c>_min``/``<c>_max`` typed as the
+    source column for each requested col — the same object type as
+    every manifest in the lake API.  The lake log commits it as
+    manifest rows (``_land_commit`` for commits of more than
+    ``_LOCAL_STATS_MAX`` files, ``update_stats_index`` for adopted
+    directories), and ``prune_files`` takes it directly.  ``paths``
     restricts the build to an explicit file list (the incremental
     path's delta).
 
@@ -614,7 +621,7 @@ def parquet_stats_index(
         dt = by_name[c].dataType
         out = out.withColumn(f"{c}_min", F.col(f"{c}_min").cast(dt))
         out = out.withColumn(f"{c}_max", F.col(f"{c}_max").cast(dt))
-    return out
+    return out.toArrow()
 
 
 def _footer_stats_row(
@@ -632,7 +639,7 @@ def _footer_stats_row(
     min == max — a string, or ``part_cast(col, value)``.  The ONE reader behind both
     the distributed builder (``parquet_stats_index``, which casts
     partition values in Spark) and the driver-side batch path
-    (``_local_stats_rows``), so their stats can never diverge."""
+    (``_local_stats``), so their stats can never diverge."""
     import pyarrow.parquet as pq
 
     md = pq.ParquetFile(fpath).metadata
@@ -656,7 +663,7 @@ def _footer_col_span(md, col_idx: int) -> tuple:
     (one stats-less group poisons the file: NULL stats mean "may
     match", conservative, never wrong; pyarrow also cannot extract
     stats for some physical types, e.g. decimals).  Shared by the
-    distributed builder and the driver-side O(batch) twin so stats
+    distributed builder and the driver-side batch path so stats
     semantics can never diverge between them."""
     lo = hi = None
     for rg in range(md.num_row_groups):
@@ -674,68 +681,52 @@ def _footer_col_span(md, col_idx: int) -> tuple:
     return lo, hi
 
 
-def _local_stats_rows(
+def _local_stats(
     paths: Sequence[str],
     cols: Sequence[str],
     source_schema: T.StructType,
     pcols: Sequence[str],
-) -> tuple[list[dict], T.StructType]:
-    """Driver-side twin of ``parquet_stats_index`` for BATCH-sized file
-    lists: read the handful of footers with pyarrow right here and
-    return (rows, stats schema) — zero Spark jobs.  A streaming commit
-    adds a few files per trigger; launching a distributed metadata job
-    (fixed ~0.5 s scheduling floor per job on any cluster) to read five
-    footers is pure overhead, which is exactly why Delta computes its
-    add-action stats inside the write tasks.  The distributed builder
-    remains the path for table-scale rebuilds."""
+) -> pa.Table:
+    """The stats rows of a BATCH-sized file list, read on the driver:
+    the handful of footers go through pyarrow right here and come back
+    as manifest rows (``added_version`` left NULL for the commit to
+    stamp) — zero Spark jobs.  A streaming commit adds a few files per
+    trigger, and a distributed metadata job (a fixed scheduling floor
+    per job on any cluster) to read five footers is pure overhead,
+    which is why Delta computes its add-action stats inside the write
+    tasks.  Larger file sets take ``parquet_stats_index``."""
+    schema = _manifest_schema(source_schema, cols)
     by_name = {f.name: f for f in source_schema.fields}
-    missing = [c for c in cols if c not in by_name]
-    if missing:
-        raise ValueError(f"stats columns not in table schema: {missing}")
-    part_set = {c for c in cols if c in set(pcols)}
-    fields = [
-        T.StructField("file", T.StringType()),
-        T.StructField("n_rows", T.LongType()),
-    ]
-    for c in cols:
-        fields.append(T.StructField(f"{c}_min", by_name[c].dataType))
-        fields.append(T.StructField(f"{c}_max", by_name[c].dataType))
-    out_schema = T.StructType(fields)
-
     # mapped tables: footers store PHYSICAL names; stats stay LOGICAL
     phys = {c: _field_phys(by_name[c]) for c in cols}
-    rows = [
-        _footer_stats_row(
-            fpath, cols, phys, part_set,
-            lambda c, v: _py_cast(v, by_name[c].dataType),
-        )
-        for fpath in paths
-    ]
-    return rows, out_schema
+    part_set = {c for c in cols if c in set(pcols)}
+    return pa.Table.from_pylist(
+        [
+            _footer_stats_row(
+                fpath, cols, phys, part_set,
+                lambda c, v: _py_cast(v, by_name[c].dataType),
+            )
+            for fpath in paths
+        ],
+        schema=schema,
+    )
 
 
 #: Batches at or under this many files take the driver-side stats path
-#: (``_local_stats_rows``); larger sets go distributed.
+#: (``_local_stats``); larger sets go distributed.
 _LOCAL_STATS_MAX = 64
 
 
-def _write_parquet_local(
-    rows: list[dict], schema: T.StructType, dirpath: str
-) -> None:
-    """Write ``rows`` as ONE parquet file under ``dirpath`` with pyarrow
-    on the driver — the O(batch) manifest delta is a few rows, and a
-    distributed write would pay a full Spark job's scheduling floor to
-    emit them.  Types follow the Spark schema exactly (arrow-converted),
-    so Spark reads the file back under the same types the distributed
-    writer would have produced."""
-    import pyarrow as pa
+def _write_parquet_local(table: pa.Table, dirpath: str) -> None:
+    """Write ``table`` as ONE parquet file under ``dirpath`` with
+    pyarrow on the driver — the one writer of every manifest version
+    directory, delta or checkpoint.  A manifest is metadata-sized, and
+    a distributed write would pay a full Spark job's scheduling floor
+    to emit it."""
     import pyarrow.parquet as pq
-    from pyspark.sql.pandas.types import to_arrow_schema
 
-    arrow_schema = to_arrow_schema(schema)
-    table = pa.Table.from_pylist(list(rows), schema=arrow_schema)
     os.makedirs(dirpath, exist_ok=True)
-    pq.write_table(table, dirpath.rstrip("/") + "/part-00000-delta.parquet")
+    pq.write_table(table, dirpath.rstrip("/") + "/part-00000.parquet")
 
 
 def _pred_parts(
@@ -759,61 +750,57 @@ def _pred_parts(
     return ranges, cond
 
 
-def _prune_cond(index: DataFrame, predicates: dict[str, tuple]) -> "F.Column":
-    """The manifest-row match condition for ``prune_files``: a file
-    survives when its [min, max] span overlaps EVERY ``col: (lo, hi)``
-    closed-range predicate (NULL stats keep the file — conservative;
-    predicates on columns the index carries no stats for are skipped —
-    every file "may match" and the row-level filter applies them
-    exactly)."""
-    cond = F.lit(True)
-    for c, (lo, hi) in _pred_parts(predicates)[0].items():
-        if f"{c}_min" not in index.columns:
+def _arrow_bound(v, typ: pa.DataType) -> pa.Scalar:
+    """A predicate bound as a scalar of the manifest column's arrow
+    type.  Bounds arrive as Python values (often from a Spark
+    ``collect()``): a naive ``datetime`` is local wall-clock time, so
+    it converts through pyspark's own ``TimestampType`` rule — the one
+    ``F.lit`` applies — before meeting a ``timestamp[us, tz=UTC]``
+    column; a bound of another type (an int against a decimal column,
+    a date against a timestamp one) casts."""
+    import datetime
+
+    if (
+        isinstance(v, datetime.datetime)
+        and pa.types.is_timestamp(typ)
+        and typ.tz is not None
+    ):
+        us = T.TimestampType().toInternal(v)
+        return pa.scalar(us, pa.timestamp("us", tz="UTC")).cast(typ)
+    try:
+        return pa.scalar(v, type=typ)
+    except (pa.ArrowInvalid, pa.ArrowTypeError, TypeError):
+        return pa.scalar(v).cast(typ)
+
+
+def prune_files(index: pa.Table, predicates: dict) -> list[str]:
+    """File paths of the manifest ``index`` whose [min, max] spans
+    overlap EVERY ``col: (lo, hi)`` closed-range predicate (scalars
+    mean equality; NULL stats keep the file — conservative).
+    Predicates on columns the index carries no stats for are skipped
+    here (every file "may match" — the row-level filter still applies
+    them exactly).  Runs on the driver with pyarrow compute over the
+    snapshot table: zero Spark jobs, and the comparisons are SQL's
+    three-valued ones (a NULL bound keeps no file with stats)."""
+    mask = None
+    for c, v in predicates.items():
+        lo, hi = v if isinstance(v, tuple) and len(v) == 2 else (v, v)
+        if f"{c}_min" not in index.column_names:
             continue  # unindexed column: prune conservatively
-        cond = (
-            cond
-            & (F.col(f"{c}_max").isNull() | (F.col(f"{c}_max") >= F.lit(lo)))
-            & (F.col(f"{c}_min").isNull() | (F.col(f"{c}_min") <= F.lit(hi)))
+        lo_col, hi_col = index[f"{c}_min"], index[f"{c}_max"]
+        m = pc.and_kleene(
+            pc.or_kleene(
+                pc.is_null(hi_col),
+                pc.greater_equal(hi_col, _arrow_bound(lo, hi_col.type)),
+            ),
+            pc.or_kleene(
+                pc.is_null(lo_col),
+                pc.less_equal(lo_col, _arrow_bound(hi, lo_col.type)),
+            ),
         )
-    return cond
-
-
-def prune_files(
-    index: DataFrame, predicates: dict[str, tuple]
-) -> list[str]:
-    """File paths whose [min, max] spans overlap EVERY ``col: (lo, hi)``
-    closed-range predicate (scalars mean equality; NULL stats keep the
-    file — conservative).  Predicates on columns the index carries no
-    stats for are skipped here (every file "may match" — the row-level
-    filter still applies them exactly).  The collect is O(matching
-    files) driver memory — the filter runs distributed and only the
-    surviving file paths reach the driver, the same object a scan
-    planner must hold to enumerate its splits; row data never moves."""
-    return [
-        r["file"]
-        for r in index.filter(_prune_cond(index, predicates))
-        .select("file")
-        .collect()
-    ]
-
-
-def _prune_files_with_total(
-    index: DataFrame, predicates: dict[str, tuple]
-) -> tuple[list[str], int]:
-    """``prune_files`` plus the manifest's total file count from the
-    SAME job — writers that ledger files_total fuse the two into one
-    aggregate instead of a count plus a filtered collect.  Driver
-    memory stays O(matching files): non-matching rows contribute only
-    to the count (``collect_list`` drops the NULLs the unmatched
-    branch produces)."""
-    cond = _prune_cond(index, predicates)
-    agg = index.agg(
-        F.count(F.lit(1)).alias("_total"),
-        F.sort_array(
-            F.collect_list(F.when(cond, F.col("file")))
-        ).alias("_matches"),
-    ).collect()[0]
-    return list(agg["_matches"]), int(agg["_total"])
+        mask = m if mask is None else pc.and_kleene(mask, m)
+    files = index["file"] if mask is None else index.filter(mask)["file"]
+    return files.to_pylist()
 
 
 # ---------------------------------------------------------------------------
@@ -842,13 +829,20 @@ def _prune_files_with_total(
 # rows (its delta parquet) plus the marker; the full manifest is
 # materialized as a CHECKPOINT every ``_CHECKPOINT_EVERY`` commits (and
 # on maintenance rebuilds), exactly Delta's JSON-actions +
-# periodic-parquet-checkpoint shape.  A snapshot reconstructs as
+# periodic-parquet-checkpoint shape.  A snapshot replays as
 # ``checkpoint ∪ subsequent deltas − subsequent removed lists`` — file
 # paths are never reused (uuid part names), so the set algebra is
-# order-free.  The manifest version parquet itself is written to a
-# hidden temp dir and RENAMED into ``v<N>`` (fail-if-exists), so a
-# stale cross-driver writer can never overwrite a winner's committed
-# version in place.
+# order-free.
+#
+# The manifest lives on the DRIVER, as delta-rs and Delta Kernel keep a
+# snapshot in-process: ``lake_log.read_manifest`` replays it into one
+# ``pyarrow.Table``, ``prune_files`` filters it with pyarrow compute,
+# and every version directory — delta or checkpoint — is written by
+# one pyarrow call (``_write_parquet_local``).  Reading, pruning and
+# committing the manifest run no Spark job; an upsert's Spark jobs are
+# its data work.  The version parquet is written to a hidden temp dir
+# and RENAMED into ``v<N>`` (fail-if-exists), so a stale cross-driver
+# writer can never overwrite a winner's committed version in place.
 #
 # Data-file changes are sequenced around the marker: adds land BEFORE
 # the commit (invisible — no committed manifest references them),
@@ -938,8 +932,8 @@ def commit_timestamp(
 ) -> float:
     """A committed version's wall-clock time (epoch seconds) from ONE
     marker read — the lightweight inverse of ``version_at_timestamp``
-    (``table_history`` reports the same ``ts`` but reconstructs and
-    aggregates every retained manifest)."""
+    (``table_history`` reports the same ``ts`` but replays every
+    retained manifest)."""
     return float(
         _commit_info(_manifest_dir(path, manifest_path), version)["ts"]
     )
@@ -1016,101 +1010,18 @@ def version_at_timestamp(
     return best
 
 
-def _version_parquet_parts(manifest_path: str, version: int) -> list[str]:
-    """Parquet part files inside one manifest version dir (a pure-
-    removal delta commit carries none — its whole content is the
-    marker)."""
-    vdir = f"{manifest_path}/v{version}"
-    return [
-        f"{vdir}/{e.name}"
-        for e in os.scandir(vdir)
-        if e.is_file() and not e.name.startswith(("_", "."))
-    ]
-
-
-def _manifest_schema_from(marker: dict) -> T.StructType:
-    """The manifest-row schema implied by a commit marker: ``file``,
-    ``n_rows``, per-stats-column min/max typed from the committed
-    table schema, and the ``added_version`` bookkeeping column."""
-    by_name = {
-        f.name: f.dataType
-        for f in T.StructType.fromJson(marker["schema"]).fields
-    }
-    lost = [c for c in marker["stats_cols"] if c not in by_name]
-    if lost:
-        raise ValueError(
-            f"commit marker v{marker['version']} lists stats columns "
-            f"{lost} that its schema does not carry"
-        )
-    fields = [
-        T.StructField("file", T.StringType()),
-        T.StructField("n_rows", T.LongType()),
-    ]
-    for c in marker["stats_cols"]:
-        fields.append(T.StructField(f"{c}_min", by_name[c], True))
-        fields.append(T.StructField(f"{c}_max", by_name[c], True))
-    fields.append(T.StructField("added_version", T.LongType(), True))
-    return T.StructType(fields)
-
-
-def _reconstruct_manifest(
-    spark: SparkSession, manifest_path: str, version: int
-) -> DataFrame:
-    """Materialize the manifest SNAPSHOT at ``version`` from the log:
-    the base checkpoint's full manifest, union the delta commits'
-    added-stats rows up to ``version``, minus the deltas' removed
-    lists.  File paths are never reused (uuid part names), so the set
-    algebra is order-free; schema evolution of the stats columns
-    unions by name with NULL fill (conservative pruning).  Raises when
-    the chain is no longer retained."""
-    marker = _commit_info(manifest_path, version)
-    base = int(marker["base_ckpt"])  # == version on a checkpoint
-    committed = set(_committed_versions(manifest_path))
-    chain = list(range(base, version + 1))
-    missing = [v for v in chain if v not in committed]
-    if missing:
-        raise ValueError(
-            f"manifest version {version} at {manifest_path} is no longer "
-            f"reconstructible — its checkpoint chain v{base}..v{version} "
-            f"lost {missing} to retention"
-        )
-    dirs: list[str] = []
-    removed: set[str] = set()
-    for v in chain:
-        m = marker if v == version else _commit_info(manifest_path, v)
-        if v > base:
-            removed.update(m["removed"])
-        if _version_parquet_parts(manifest_path, v):
-            dirs.append(f"{manifest_path}/v{v}")
-    if not dirs:  # an empty table's checkpoint (zero files tracked)
-        return spark.createDataFrame(
-            [], "file string, n_rows long, added_version long"
-        )
-    # ONE read over the whole chain.  The manifest schema is DERIVED
-    # from the marker (stats columns typed per the committed table
-    # schema) so no footer needs touching at plan time; deltas written
-    # before a stats column evolved in NULL-fill under the explicit
-    # schema — the same semantics as a per-dir unionByName, zero jobs.
-    out = spark.read.schema(_manifest_schema_from(marker)).parquet(*dirs)
-    if removed:
-        # a literal IN list, not an anti join: the join's broadcast is
-        # one more job in every reader of the snapshot (each upsert's
-        # candidate prune) until the next checkpoint; the list is
-        # bounded by the removals since the base checkpoint
-        out = out.filter(~F.col("file").isin(sorted(removed)))
-    return out
-
-
 def current_manifest(
     spark: SparkSession,
     manifest_path: str,
     version: int | None = None,
-) -> DataFrame | None:
-    """The current committed stats manifest (highest ``v<N>`` carrying a
-    ``_COMMIT`` marker, reconstructed checkpoint-plus-deltas), else
-    None.  This is THE read path for snapshot consistency: a reader
-    that resolves its file list through here sees exactly one
-    committed version regardless of concurrent deletes/maintenance.
+) -> pa.Table | None:
+    """The current committed stats manifest as one ``pyarrow.Table``
+    (the highest ``v<N>`` carrying a ``_COMMIT`` marker, replayed on
+    the driver from its checkpoint plus deltas by
+    ``lake_log.read_manifest`` — zero Spark jobs), else None.  This is
+    THE read path for snapshot consistency: a reader that resolves its
+    file list through here sees exactly one committed version
+    regardless of concurrent deletes/maintenance.
 
     ``version`` pins an explicit committed version instead (time
     travel) — valid while that version's checkpoint chain is retained
@@ -1125,11 +1036,11 @@ def current_manifest(
                 f"manifest version {version} is not committed/retained "
                 f"at {manifest_path}"
             )
-        return _reconstruct_manifest(spark, manifest_path, version)
+        return _reconstruct_manifest(manifest_path, version)
     v = manifest_version(spark, manifest_path)
     if v is None:
         return None
-    return _reconstruct_manifest(spark, manifest_path, v)
+    return _reconstruct_manifest(manifest_path, v)
 
 
 class SnapshotConflict(RuntimeError):
@@ -1271,7 +1182,7 @@ def _target_files(
     return max(1, -(-total // int(target_bytes))), total
 
 
-def _require_manifest(spark: SparkSession, mdir: str) -> DataFrame:
+def _require_manifest(spark: SparkSession, mdir: str) -> pa.Table:
     """The committed stats manifest a rewrite/merge plans against —
     refusing a table that has none."""
     manifest = current_manifest(spark, mdir)
@@ -1347,7 +1258,7 @@ class ConstraintViolation(ValueError):
 def _dir_footer_rows(dirpath: str) -> int:
     """Total row count of the parquet leaves under ``dirpath`` from
     their FOOTERS (driver-side pyarrow metadata reads — zero Spark
-    jobs, O(files written) like ``_local_stats_rows``).  The
+    jobs, O(files written) like ``_local_stats``).  The
     independent ground truth ``_obs_result`` uses to verify its
     zero-row fallback premise."""
     import pyarrow.parquet as pq
@@ -1609,7 +1520,7 @@ class _CommitLease:
 def _commit_manifest(
     spark: SparkSession,
     manifest_path: str,
-    added_stats: DataFrame | None,
+    added_stats: pa.Table | None,
     removed: Sequence[str] = (),
     **kwargs,
 ) -> int:
@@ -1629,7 +1540,7 @@ def _commit_manifest(
 def _commit_manifest_unleased(
     spark: SparkSession,
     manifest_path: str,
-    added_stats: DataFrame | None,
+    added_stats: pa.Table | None,
     removed: Sequence[str],
     expected_version: int | None = None,
     keep_versions: int | None = 2,
@@ -1643,9 +1554,7 @@ def _commit_manifest_unleased(
     changes: Sequence[str] | None = None,
     cdf: bool | None = None,
     extra_pending: Sequence[str] | None = None,
-    added_rows: list[dict] | None = None,
-    stats_schema: T.StructType | None = None,
-    restore_manifest: DataFrame | None = None,
+    restore_manifest: pa.Table | None = None,
     dvs_replace: Sequence[dict] | None = None,
     retain: bool | None = None,
     constraints: dict[str, str] | None = None,
@@ -1657,23 +1566,26 @@ def _commit_manifest_unleased(
     intent_token: str | None = None,
 ) -> int:
     """Commit the next manifest version with one atomic marker rename.
-    ``added_stats`` = stats rows for the files THIS commit adds (the
-    O(batch) delta — NOT the full manifest); ``removed`` = data files
-    it logically deletes (still on disk; swept post-commit).  Pending
-    removals of the predecessor that were never swept are carried
-    forward so they cannot be lost.  ``txn`` = (app_id, batch_id)
-    stamps the commit for idempotent streaming ingest (the txn map
-    carries forward across commits; ``append_files`` skips a batch id
-    it already committed — Delta's txn action).
+    ``added_stats`` = stats rows (a ``pyarrow.Table``) for the files
+    THIS commit adds (the O(batch) delta — NOT the full manifest);
+    ``removed`` = data files it logically deletes (still on disk;
+    swept post-commit).  Pending removals of the predecessor that were
+    never swept are carried forward so they cannot be lost.  ``txn`` =
+    (app_id, batch_id) stamps the commit for idempotent streaming
+    ingest (the txn map carries forward across commits;
+    ``append_files`` skips a batch id it already committed — Delta's
+    txn action).
 
     Most commits write only the delta parquet + marker; every
     ``_CHECKPOINT_EVERY`` commits (or on ``force_checkpoint`` — the
-    maintenance rebuild path) the FULL reconstructed manifest is
-    materialized instead, bounding the chain a snapshot read replays.
-    Either way the version parquet is written to a hidden temp dir and
-    atomically RENAMED into ``v<N>`` — rename-to-existing fails, so a
-    stale cross-driver writer that slipped past the version check can
-    never overwrite a committed winner's version dir in place.
+    maintenance rebuild path) the FULL replayed manifest is
+    materialized instead, bounding the chain a snapshot read replays;
+    ``restore_manifest`` commits a given manifest as that checkpoint.
+    Either way the version parquet is ONE driver-side pyarrow write
+    (zero Spark jobs) into a hidden temp dir, atomically RENAMED into
+    ``v<N>`` — rename-to-existing fails, so a stale cross-driver writer
+    that slipped past the version check can never overwrite a
+    committed winner's version dir in place.
 
     ``expected_version`` is the optimistic-concurrency guard: the
     version this transaction computed against its snapshot — if another
@@ -1815,14 +1727,9 @@ def _commit_manifest_unleased(
         retired += retired_dv
     removed_now = sorted(set(removed))
     if added_files is None:
-        if added_rows is not None:
-            added_files = [r["file"] for r in added_rows]
-        elif added_stats is not None:
-            added_files = [
-                r["file"] for r in added_stats.select("file").collect()
-            ]
-        else:
-            added_files = []
+        added_files = (
+            added_stats["file"].to_pylist() if added_stats is not None else []
+        )
     # the sweep backlog merges the carried entries with THIS commit's
     # removals (stamped with the removing version — the retention
     # sweep compares it against the retained floor); a file already
@@ -1836,83 +1743,62 @@ def _commit_manifest_unleased(
         by_file.pop(f, None)
     pending_all = sorted(by_file.values(), key=lambda e: e["file"])
 
-    # stamp the delta rows with the version that adds them — deletion
-    # vectors compare tombstone versions against this to decide which
-    # files a suppression still applies to
-    if added_rows is not None:
-        added_rows = [dict(r, added_version=nxt) for r in added_rows]
-        if stats_schema is not None and not any(
-            f.name == "added_version" for f in stats_schema.fields
-        ):
-            stats_schema = T.StructType(
-                list(stats_schema.fields)
-                + [T.StructField("added_version", T.LongType(), True)]
-            )
-        if checkpoint:
-            # the checkpoint path needs a DataFrame to union; the rows
-            # are batch-sized, so the conversion is driver-trivial
-            added_stats = spark.createDataFrame(
-                [
-                    tuple(r.get(f.name) for f in stats_schema.fields)
-                    for r in added_rows
-                ],
-                stats_schema,
-            )
-    elif added_stats is not None and "added_version" not in added_stats.columns:
-        added_stats = added_stats.withColumn(
-            "added_version", F.lit(nxt).cast("long")
+    # the stats column set rides the marker too — writers resolve it
+    # from one JSON read instead of replaying the manifest just to look
+    # at its column names
+    shaped = added_stats if added_stats is not None else restore_manifest
+    if shaped is not None:
+        stats_cols = [
+            c[:-4] for c in shaped.column_names if c.endswith("_min")
+        ]
+    if stats_cols_override is not None:
+        # a rename/drop of a stats column restates the list (the
+        # transformed manifest's columns already match it)
+        stats_cols = list(stats_cols_override)
+    if schema_json is None or stats_cols is None:
+        raise ValueError(
+            f"commit v{nxt} into {manifest_path} names no table schema "
+            "or stats columns — every marker carries both"
         )
-
-    local_delta = not checkpoint and added_rows is not None
+    mschema = _manifest_schema(T.StructType.fromJson(schema_json), stats_cols)
+    out = None
+    if added_stats is not None:
+        # stamp the delta rows with the version that adds them —
+        # deletion vectors compare tombstone versions against this to
+        # decide which files a suppression still applies to
+        out = _conform(added_stats, mschema)
+        out = out.set_column(
+            out.schema.get_field_index("added_version"),
+            "added_version",
+            pa.array([nxt] * out.num_rows, pa.int64()),
+        )
     if restore_manifest is not None:
-        # RESTORE: the checkpoint IS the target snapshot's manifest
-        checkpoint, local_delta = True, False
-        out_df = restore_manifest
+        # RESTORE / column DDL: the checkpoint IS the given manifest
+        checkpoint = True
+        out = _conform(restore_manifest, mschema)
     elif checkpoint:
-        parts: list[DataFrame] = []
+        kept = mschema.empty_table()
         if committed:
-            prev_df = _reconstruct_manifest(spark, manifest_path, committed[-1])
-            if removed_now:
-                rdf = spark.createDataFrame(
-                    [(f,) for f in removed_now], "file string"
-                )
-                prev_df = prev_df.join(
-                    F.broadcast(rdf), on="file", how="left_anti"
-                )
-            parts.append(prev_df)
-        if added_stats is not None:
-            parts.append(added_stats)
-        if parts:
-            out_df = parts[0]
-            for p in parts[1:]:
-                out_df = out_df.unionByName(p, allowMissingColumns=True)
-        else:
-            out_df = spark.createDataFrame(
-                [], "file string, n_rows long, added_version long"
+            kept = _conform(
+                _reconstruct_manifest(manifest_path, committed[-1]), mschema
             )
-    elif not local_delta:
-        out_df = (
-            added_stats
-            if added_stats is not None
-            # a pure-removal delta: an empty placeholder keeps the
-            # write→rename commit shape; reconstruction skips part-less
-            # version dirs anyway
-            else spark.createDataFrame([], "file string")
-        )
+            if removed_now:
+                kept = kept.filter(
+                    pc.invert(
+                        pc.is_in(kept["file"], value_set=pa.array(removed_now))
+                    )
+                )
+        out = kept if out is None else pa.concat_tables([kept, out])
 
     vdir = f"{manifest_path}/v{nxt}"
     tmpdir = f"{manifest_path}/.v{nxt}.{_uuid.uuid4().hex[:8]}"
     # the write MATERIALIZES the version to a private temp dir before
-    # any input (old versions / flat files) is touched and before the
-    # log is — committed versions are never inputs to their own
-    # destruction, and a stale writer never writes INTO a live vdir
-    if local_delta:
-        # a batch-sized delta: ONE driver-side pyarrow write, zero
-        # Spark jobs — the commit's metadata cost is O(batch) in time,
-        # not just bytes
-        _write_parquet_local(added_rows, stats_schema, tmpdir)
-    else:
-        out_df.write.mode("overwrite").parquet(tmpdir)
+    # any input (old versions) is touched and before the log is —
+    # committed versions are never inputs to their own destruction, and
+    # a stale writer never writes INTO a live vdir.  A pure-removal
+    # delta writes no parquet: its whole content is the marker.
+    if out is not None:
+        _write_parquet_local(out, tmpdir)
     # attempt token: verified again right before the marker write — a
     # staleness-broken lease lets another driver replace a marker-less
     # vdir mid-window, and committing OUR marker over THEIR parquet
@@ -1955,28 +1841,6 @@ def _commit_manifest_unleased(
             f"manifest at {manifest_path}: v{nxt}'s directory was "
             "replaced by another writer mid-commit (stale-lease break) "
             "— retry from a fresh snapshot"
-        )
-    # the stats column set rides the marker too — writers resolve it
-    # from one JSON read instead of reconstructing the manifest just
-    # to look at its column names
-    if added_rows is not None and stats_schema is not None:
-        stats_cols = [
-            f.name[:-4]
-            for f in stats_schema.fields
-            if f.name.endswith("_min")
-        ]
-    elif added_stats is not None:
-        stats_cols = [
-            c[:-4] for c in added_stats.columns if c.endswith("_min")
-        ]
-    if stats_cols_override is not None:
-        # a rename/drop of a stats column restates the list (the
-        # transformed manifest's columns already match it)
-        stats_cols = list(stats_cols_override)
-    if schema_json is None or stats_cols is None:
-        raise ValueError(
-            f"commit v{nxt} into {manifest_path} names no table schema "
-            "or stats columns — every marker carries both"
         )
     payload = {
         "version": nxt,
@@ -2593,7 +2457,8 @@ def _footer_num_rows(path: str) -> int | None:
 def _dv_suppress(
     spark: SparkSession,
     df: DataFrame,
-    manifest: DataFrame,
+    manifest: pa.Table,
+    files: Sequence[str],
     dvs: Sequence[dict],
 ) -> DataFrame:
     """Apply active deletion vectors (key tombstones) to a scanned
@@ -2602,14 +2467,16 @@ def _dv_suppress(
     so a merge-on-read upsert's new rows (same commit as the tombstone)
     and any later re-insert survive, while every older version of the
     key disappears.  The tombstone set is batch-sized (broadcast), the
-    file→added_version map is manifest-metadata-sized (broadcast), and
-    the scan itself stays one pass — no shuffle enters the plan.
+    ``added_version`` of each of the ``files`` being read is a literal
+    map taken from the driver's ``manifest`` snapshot (no manifest scan,
+    no job), and the scan itself stays one pass — no shuffle enters
+    the plan.
 
     File provenance rides ``input_file_name()``, normalized to the
     manifest's URI form: the scheme prefix strips and the URL
     percent-encoding decodes (``input_file_name`` returns the ENCODED
     URI — a hive partition value with a space reads back as ``%20``,
-    which would miss the manifest join and mis-date every row in that
+    which would miss the map lookup and mis-date every row in that
     partition as oldest; literal ``+`` is protected from
     ``url_decode``'s form-decoding first).  Rows from files the
     manifest does not know conservatively count as oldest, so
@@ -2657,28 +2524,36 @@ def _dv_suppress(
         tmax_side = F.broadcast(tmax)
     else:
         tmax_side = tmax  # too big / unknown — AQE decides from stats
-    fmap = manifest.select(
-        F.col("file").alias("__dv_file"),
-        F.col("added_version").alias("__dv_av"),
+    want = set(files)
+    added_at = sorted(
+        (f, v)
+        for f, v in zip(
+            manifest["file"].to_pylist(),
+            manifest["added_version"].to_pylist(),
+        )
+        if f in want
+    )
+    fmap = F.create_map(*[F.lit(x) for pair in added_at for x in pair])
+    dv_file = F.url_decode(
+        F.regexp_replace(
+            F.regexp_replace(F.input_file_name(), r"^file:/+", "/"),
+            r"\+",
+            "%2B",
+        )
     )
     return (
         df.withColumn(
-            "__dv_file",
-            F.url_decode(
-                F.regexp_replace(
-                    F.regexp_replace(F.input_file_name(), r"^file:/+", "/"),
-                    r"\+",
-                    "%2B",
-                )
-            ),
+            "__dv_av",
+            F.try_element_at(fmap, dv_file)
+            if added_at
+            else F.lit(None).cast("long"),
         )
-        .join(F.broadcast(fmap), on="__dv_file", how="left")
         .join(tmax_side, on=keys, how="left")
         .filter(
             F.col("__dv_v").isNull()
             | (F.col("__dv_v") <= F.coalesce(F.col("__dv_av"), F.lit(-1)))
         )
-        .drop("__dv_file", "__dv_av", "__dv_v")
+        .drop("__dv_av", "__dv_v")
     )
 
 
@@ -2850,9 +2725,9 @@ def _land_commit(
        and the ``removed`` files — carrying a fresh intent token;
     3. move the files in (invisible: no committed manifest references
        them, and ``_recover_txn`` rolls an interrupted attempt back);
-    4. build the added files' stats rows — driver-side footer reads up
-       to ``_LOCAL_STATS_MAX`` files (zero Spark jobs), else the
-       distributed ``parquet_stats_index``;
+    4. build the added files' stats rows (a ``pyarrow.Table``) —
+       driver-side footer reads up to ``_LOCAL_STATS_MAX`` files (zero
+       Spark jobs), else the distributed ``parquet_stats_index``;
     5. commit at ``expected`` (``_commit_manifest``, which re-verifies
        the intent token under the lease), stamping ``schema``;
        ``commit_kw`` passes through;
@@ -2895,28 +2770,26 @@ def _land_commit(
 
     itok = _intent(expected, [dst for _src, dst in planned])
     added = _move_files_in(planned)
-    delta_df = delta_rows = delta_schema = None
+    delta = None
     if tmp is not None:
         _delete(tmp)
         # O(batch) commit: only the new files' stats rows are written;
         # replaced files ride the marker's removed list
-        if len(added) <= _LOCAL_STATS_MAX:
-            delta_rows, delta_schema = _local_stats_rows(
-                added, list(cols), schema, list(pcols or [])
-            )
-        else:
-            delta_df = parquet_stats_index(
+        delta = (
+            _local_stats(added, list(cols), schema, list(pcols or []))
+            if len(added) <= _LOCAL_STATS_MAX
+            else parquet_stats_index(
                 spark, path, list(cols), paths=added, schema=schema
             )
+        )
         metrics = {**(metrics or {}), "files_added": len(added)}
     rebased = 0
     while True:
         try:
             version = _commit_manifest(
-                spark, mdir, delta_df, removed=removed,
+                spark, mdir, delta, removed=removed,
                 expected_version=expected, partition_by=pcols, txn=txn,
                 added_files=added, changes=changes,
-                added_rows=delta_rows, stats_schema=delta_schema,
                 table_schema=schema.jsonValue(),
                 intent_token=itok, metrics=metrics, **commit_kw,
             )
@@ -3023,11 +2896,8 @@ def _txn_rewrite(
     ranges, hit = _pred_parts(predicates)
     # candidates default to manifest-pruned files; an explicit list
     # (compaction picks by SIZE, not by value span) must still be
-    # snapshot-consistent, so it is intersected with the manifest.
-    # Either way ONE job returns the files and the manifest's total.
-    matched, files_total = _prune_files_with_total(
-        manifest, ranges if candidates is None else {}
-    )
+    # snapshot-consistent, so it is intersected with the manifest
+    matched = prune_files(manifest, ranges if candidates is None else {})
     if candidates is None:
         cand = matched
     else:
@@ -3055,7 +2925,7 @@ def _txn_rewrite(
                 "mismatch, or the files were written outside the log"
             )
     ledger = {
-        "files_total": int(files_total),
+        "files_total": manifest.num_rows,
         "files_rewritten": 0,
         "files_added": 0,
         "rows_matched": 0,
@@ -3077,7 +2947,7 @@ def _txn_rewrite(
     # added_version = this commit (newer than every tombstone), so
     # their suppression is MATERIALIZED here for the touched files
     dvs = _active_dvs(mdir, version=snap_v)
-    touched = _dv_suppress(spark, touched, manifest, dvs)
+    touched = _dv_suppress(spark, touched, manifest, cand, dvs)
     cdf_on = bool(head.get("cdf", False))
     cached = None
     if cdf_on and changes_fn is not None:
@@ -3135,15 +3005,13 @@ def _txn_rewrite(
             # the manifest already tracks per-file counts — exact for the
             # candidate set (per-suppression on DV tables: a re-layout
             # also materializes tombstones, and the delta shows here)
-            cand_df2 = spark.createDataFrame(
-                [(f,) for f in cand], "file string"
+            rows_of = dict(
+                zip(
+                    manifest["file"].to_pylist(),
+                    manifest["n_rows"].to_pylist(),
+                )
             )
-            rows_before = int(
-                manifest.join(F.broadcast(cand_df2), on="file", how="leftsemi")
-                .agg(F.sum("n_rows"))
-                .collect()[0][0]
-                or 0
-            )
+            rows_before = sum(rows_of[f] or 0 for f in cand)
             rows_matched = None
         rows_after = int(vals_out["n"] or 0)
 
@@ -3170,7 +3038,7 @@ def _txn_rewrite(
             )
 
         if cols is None:
-            cols = [c[:-4] for c in manifest.columns if c.endswith("_min")]
+            cols = head["stats_cols"]
         landed = _land_commit(
             spark, path, mdir, expected,
             tmp=tmp, changes=changes_files, removed=cand,
@@ -3255,8 +3123,8 @@ def _delete_mor(
     keys = list(keys)
     _guard_dv_keys(dvs, keys, "delete")
     ranges, hit = _pred_parts(predicates)
-    cand, files_total = _prune_files_with_total(manifest, ranges)
-    ledger.update({"files_total": int(files_total), "skipped": False})
+    cand = prune_files(manifest, ranges)
+    ledger.update({"files_total": manifest.num_rows, "skipped": False})
     if not cand:
         return ledger
 
@@ -3267,7 +3135,7 @@ def _delete_mor(
     touched = _read_files(spark, cand, schema, base_path=path)
     # suppress already-tombstoned rows first: a key whose every LIVE
     # row misses the predicate must not re-match through a stale one
-    matched = _dv_suppress(spark, touched, manifest, dvs).filter(hit)
+    matched = _dv_suppress(spark, touched, manifest, cand, dvs).filter(hit)
     cdf_on = bool(head.get("cdf", False))
     if cdf_on:
         matched = matched.persist(StorageLevel.MEMORY_AND_DISK)
@@ -3495,12 +3363,16 @@ def _update_mor(
     dvs = list(head.get("dvs", []))
     _guard_dv_keys(dvs, keys, "update")
     ranges, hit = _pred_parts(predicates)
-    cand, files_total = _prune_files_with_total(manifest, ranges)
+    cand = prune_files(manifest, ranges)
     if not cand:
-        return {**skipped_ledger, "files_total": int(files_total), "skipped": False}
+        return {
+            **skipped_ledger,
+            "files_total": manifest.num_rows,
+            "skipped": False,
+        }
     schema = _head_schema(head)
     touched = _read_files(spark, cand, schema, base_path=path)
-    matched = _dv_suppress(spark, touched, manifest, dvs).filter(hit)
+    matched = _dv_suppress(spark, touched, manifest, cand, dvs).filter(hit)
     # SET expressions evaluate against the ORIGINAL row (SQL UPDATE
     # semantics — one withColumns call), pinned to the stored types
     src = matched.withColumns(
@@ -3515,7 +3387,7 @@ def _update_mor(
         strategy="merge-on-read", op="update (merge-on-read)",
     )
     return {
-        "files_total": int(files_total),
+        "files_total": manifest.num_rows,
         "files_rewritten": 0,
         "files_added": int(led["files_added"]),
         "dv_files": int(led.get("dv_files", 0) or 0),
@@ -3697,7 +3569,7 @@ def update_stats_index(
     if cols is None:
         cols = head["stats_cols"]
     # O(files) driver set — the same bound as prune_files' planner list
-    old_files = {r["file"] for r in old.select("file").collect()}
+    old_files = set(old["file"].to_pylist())
     cur_set = set(current)
     # retained-removed history (the pending backlog a retention table
     # keeps on disk for time travel) is known-REMOVED, never new ingest
@@ -3815,7 +3687,7 @@ def read_table(
     # to a pre-feature snapshot keeps working)
     head = _commit_info(mdir, version)
     _check_protocol(head, "read", f"read_table {path}")
-    manifest = _reconstruct_manifest(spark, mdir, version)
+    manifest = _reconstruct_manifest(mdir, version)
     # prune_files skips predicates on unindexed columns conservatively;
     # with no prunable predicate this is the full snapshot file list
     files = prune_files(manifest, ranges)
@@ -3827,7 +3699,7 @@ def read_table(
     out = _read_files(spark, files, schema, base_path=path)
     dvs = _active_dvs(mdir, version=version)
     if dvs:
-        out = _dv_suppress(spark, out, manifest, dvs)
+        out = _dv_suppress(spark, out, manifest, files, dvs)
     # the committed column order on every branch: a hive read moves the
     # partition columns last and the suppression joins move the merge
     # keys first (a serve-path surface must not reorder columns)
@@ -4383,7 +4255,7 @@ def merge_into(
         ).collect()[0]
         n_src = int(agg["_n"])
         ledger = {
-            "files_total": None,  # filled by the fused prune collect
+            "files_total": None,  # filled by the candidate prune
             "files_rewritten": 0,
             "files_added": 0,
             "rows_source": n_src,
@@ -4412,9 +4284,8 @@ def merge_into(
             for k in keys
             if agg[f"_lo_{k}"] is not None
         }
-        # one collect serves both the candidate list and files_total
-        cand, files_total = _prune_files_with_total(manifest, ranges)
-        ledger["files_total"] = int(files_total)
+        cand = prune_files(manifest, ranges)
+        ledger["files_total"] = manifest.num_rows
 
         pby = head.get("partition_by")
         pcols = (
@@ -4433,7 +4304,7 @@ def merge_into(
             # active deletion vectors apply to every candidate read —
             # the merge must neither resurrect a suppressed row
             # (update) nor count one as existing (ignore)
-            return _dv_suppress(spark, raw, manifest, dvs)
+            return _dv_suppress(spark, raw, manifest, cand, dvs)
 
         changes_df: DataFrame | None = None
         rows_before: int | None = None
@@ -4952,7 +4823,7 @@ def materialize_deletes(
         return ledger
     manifest = current_manifest(spark, mdir)
     if cols is None:
-        cols = [c[:-4] for c in manifest.columns if c.endswith("_min")]
+        cols = head["stats_cols"]
     keys = list(dvs[0]["keys"])
     max_dv_v = max(int(d["version"]) for d in dvs)
     expected = (snap_v if snap_v is not None else -1) + 1
@@ -4973,7 +4844,7 @@ def materialize_deletes(
     # candidates: key-span overlap AND added before some tombstone —
     # files newer than every tombstone cannot hold suppressed rows
     cand = prune_files(
-        manifest.filter(F.col("added_version") < F.lit(max_dv_v)), ranges
+        manifest.filter(pc.less(manifest["added_version"], max_dv_v)), ranges
     )
     dv_files = [d["file"] for d in dvs]
     cdc = [] if head.get("cdf", False) else None
@@ -4999,7 +4870,7 @@ def materialize_deletes(
     raw = _read_files(spark, cand, schema, base_path=path)
     obs_in = Observation()
     raw = raw.observe(obs_in, F.count(F.lit(1)).alias("n"))
-    out = _dv_suppress(spark, raw, manifest, dvs).select(
+    out = _dv_suppress(spark, raw, manifest, cand, dvs).select(
         *[f.name for f in schema.fields]
     )
 
@@ -5085,14 +4956,9 @@ def restore_table(
         )
     head = versions[-1]
     target_marker = _commit_info(mdir, version)
-    target = _reconstruct_manifest(spark, mdir, version)
-    target_files = {r["file"] for r in target.select("file").collect()}
-    head_files = {
-        r["file"]
-        for r in _reconstruct_manifest(spark, mdir, head)
-        .select("file")
-        .collect()
-    }
+    target = _reconstruct_manifest(mdir, version)
+    target_files = set(target["file"].to_pylist())
+    head_files = set(_reconstruct_manifest(mdir, head)["file"].to_pylist())
     missing = [
         f
         for f in sorted(target_files - head_files)
@@ -5354,10 +5220,10 @@ def rename_column(
         # the manifest's stats columns are LOGICAL — rewrite the
         # (metadata-sized) manifest once so pruning keeps working
         # under the new name
-        restore = (
-            current_manifest(spark, mdir)
-            .withColumnRenamed(f"{old}_min", f"{new}_min")
-            .withColumnRenamed(f"{old}_max", f"{new}_max")
+        restore = _reconstruct_manifest(mdir, snap_v)
+        renamed_stats = {f"{old}_min": f"{new}_min", f"{old}_max": f"{new}_max"}
+        restore = restore.rename_columns(
+            [renamed_stats.get(c, c) for c in restore.column_names]
         )
         stats_override = [new if c == old else c for c in stats_cols]
     version = _commit_manifest(
@@ -5416,8 +5282,8 @@ def drop_column(
     restore = None
     stats_override = None
     if name in stats_cols:
-        restore = current_manifest(spark, mdir).drop(
-            f"{name}_min", f"{name}_max"
+        restore = _reconstruct_manifest(mdir, snap_v).drop_columns(
+            [f"{name}_min", f"{name}_max"]
         )
         stats_override = [c for c in stats_cols if c != name]
     version = _commit_manifest(
@@ -5580,10 +5446,7 @@ def table_history(spark: SparkSession, path: str, manifest_path: str | None = No
     out = []
     for v in _committed_versions(mdir):
         commit = _commit_info(mdir, v)
-        m = _reconstruct_manifest(spark, mdir, v)
-        agg = m.agg(
-            F.count(F.lit(1)).alias("files"), F.sum("n_rows").alias("rows")
-        ).collect()[0]
+        m = _reconstruct_manifest(mdir, v)
         # deletion-vector DEBT as of this snapshot: sidecar count (one
         # extra scan branch per read until consolidated/materialized)
         # and total tombstone rows — entries stamp their own row counts
@@ -5604,8 +5467,8 @@ def table_history(spark: SparkSession, path: str, manifest_path: str | None = No
                 "ts": float(commit["ts"]),
                 "op": commit.get("op"),
                 "kind": commit["kind"],
-                "files": int(agg["files"]),
-                "rows": int(agg["rows"] or 0),
+                "files": m.num_rows,
+                "rows": int(pc.sum(m["n_rows"]).as_py() or 0),
                 "added": len(commit["added"]),
                 "removed_pending": len(commit["pending"]),
                 "dv_files": len(dvs),
@@ -5837,18 +5700,10 @@ def table_changes(
             out = out.unionByName(p, allowMissingColumns=True)
         return out
 
-    base_files = {
-        r["file"]
-        for r in current_manifest(spark, mdir, version=since_version)
-        .select("file")
-        .collect()
-    }
-    head_files = {
-        r["file"]
-        for r in current_manifest(spark, mdir, version=head)
-        .select("file")
-        .collect()
-    }
+    base_files = set(
+        _reconstruct_manifest(mdir, since_version)["file"].to_pylist()
+    )
+    head_files = set(_reconstruct_manifest(mdir, head)["file"].to_pylist())
     rewritten = base_files - head_files
     dv_now = {d["file"] for d in _active_dvs(mdir, version=head)}
     dv_then = {d["file"] for d in _active_dvs(mdir, since_version)}

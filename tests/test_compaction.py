@@ -82,12 +82,9 @@ def test_compact_retained_table_picks_live_files(spark, tmp_path):
         )
     first = compact_table(spark, tbl, target_bytes=1 << 30)
     assert (first["files_rewritten"], first["files_added"]) == (8, 1)
-    (live,) = [
-        r["file"]
-        for r in current_manifest(spark, tbl + "/_stats_manifest")
-        .select("file")
-        .collect()
-    ]
+    (live,) = current_manifest(spark, tbl + "/_stats_manifest")[
+        "file"
+    ].to_pylist()
     assert len(_data_files(tbl)) == 9  # the 8 replaced files retained
 
     second = compact_table(spark, tbl, target_bytes=1 << 30)

@@ -9,7 +9,9 @@ from __future__ import annotations
 import glob
 import os
 
+import pyarrow as pa
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_type
 
 from evmtrace_etl_spark.sinks import (
     append_files,
@@ -31,6 +33,13 @@ def _events(spark):
         (F.col("id") % 7).alias("grp"),
         (F.col("id") * 2).cast("double").alias("v"),
     )
+
+
+def _stats_rows(index) -> list[tuple]:
+    """A manifest's (or stats index's) rows as sorted tuples, without
+    the log's ``added_version`` bookkeeping column."""
+    cols = [c for c in index.column_names if c != "added_version"]
+    return sorted(tuple(r[c] for c in cols) for r in index.to_pylist())
 
 
 def _build(spark, tmp_path, n_files: int = 8):
@@ -59,23 +68,23 @@ def _build_lake(spark, tmp_path, n_files: int = 8, **kw):
 
 def test_index_one_row_per_file_and_exact_counts(spark, tmp_path):
     dst = _build(spark, tmp_path)
-    idx = parquet_stats_index(spark, dst, ["k", "v"]).cache()
+    idx = parquet_stats_index(spark, dst, ["k", "v"])
     files = glob.glob(dst + "/part-*.parquet")
-    rows = idx.collect()
+    rows = idx.to_pylist()
     assert len(rows) == len(files)
     assert sum(r["n_rows"] for r in rows) == 20_000
     # spans cover the data exactly
     assert min(r["k_min"] for r in rows) == 0
     assert max(r["k_max"] for r in rows) == 19_999
     # typed as the source columns
-    assert dict(idx.dtypes)["k_min"] == "bigint"
-    assert dict(idx.dtypes)["v_max"] == "double"
+    assert idx.schema.field("k_min").type == pa.int64()
+    assert idx.schema.field("v_max").type == pa.float64()
 
 
 def test_pruned_read_skips_files_and_matches_full_scan(spark, tmp_path):
     dst = _build_lake(spark, tmp_path)
-    idx = current_manifest(spark, dst + "/_stats_manifest").cache()
-    total = idx.count()
+    idx = current_manifest(spark, dst + "/_stats_manifest")
+    total = idx.num_rows
     assert total >= 4  # the skipping claim needs >1 file
     pred = {"k": (3_000, 4_000)}
     kept = prune_files(idx, pred)
@@ -101,7 +110,7 @@ def test_zero_matching_files_yields_empty_with_schema(spark, tmp_path):
 
 def test_multi_column_predicates_intersect(spark, tmp_path):
     dst = _build_lake(spark, tmp_path)
-    idx = current_manifest(spark, dst + "/_stats_manifest").cache()
+    idx = current_manifest(spark, dst + "/_stats_manifest")
     # v = 2k, so k in [3000, 4000] & v in [0, 6500] -> k in [3000, 3250]
     pred = {"k": (3_000, 4_000), "v": (0.0, 6_500.0)}
     got = read_table(spark, dst, pred)
@@ -122,7 +131,7 @@ def test_timestamp_columns_get_real_parquet_stats(spark, tmp_path):
         "SELECT timestamp'2024-01-01' + make_interval(0,0,0,0,0,0,id) AS ts"
         " FROM range(1000)"
     ).repartition(2).write.parquet(dst)
-    rows = parquet_stats_index(spark, dst, ["ts"]).collect()
+    rows = parquet_stats_index(spark, dst, ["ts"]).to_pylist()
     assert rows and all(r["ts_min"] is not None for r in rows)
     assert min(r["ts_min"] for r in rows).year == 2024
 
@@ -156,15 +165,8 @@ def test_update_stats_index_incremental(spark, tmp_path):
 
     from evmtrace_etl_spark.sinks import current_manifest
 
-    got = sorted(
-        tuple(r)
-        for r in current_manifest(spark, manifest)
-        .drop("added_version")  # delta-log bookkeeping column
-        .collect()
-    )
-    want = sorted(
-        tuple(r) for r in parquet_stats_index(spark, dst, ["k"]).collect()
-    )
+    got = _stats_rows(current_manifest(spark, manifest))
+    want = _stats_rows(parquet_stats_index(spark, dst, ["k"]))
     assert got == want
     # and the maintained manifest prunes correctly for the new range
     kept = prune_files(
@@ -207,15 +209,8 @@ def test_delete_where_rewrites_only_overlapping_files(spark, tmp_path):
     # manifest refreshed == rebuild, and the deleted range prunes to 0
     from evmtrace_etl_spark.sinks import current_manifest
 
-    got_m = sorted(
-        tuple(r)
-        for r in current_manifest(spark, manifest)
-        .drop("added_version")
-        .collect()
-    )
-    want_m = sorted(
-        tuple(r) for r in parquet_stats_index(spark, dst, ["k"]).collect()
-    )
+    got_m = _stats_rows(current_manifest(spark, manifest))
+    want_m = _stats_rows(parquet_stats_index(spark, dst, ["k"]))
     assert got_m == want_m
     # no-op delete: zero candidates, nothing changes
     led2 = delete_where(spark, dst, manifest, {"k": (10**8, 10**9)})
@@ -415,15 +410,8 @@ def test_update_where_rewrites_matching_rows_in_place(spark, tmp_path):
     # untouched rows bit-identical
     assert rows[4_999] == 2.0 * 4_999 and rows[7_001] == 2.0 * 7_001
     # manifest refreshed == rebuild (stats follow the moved k values)
-    got_m = sorted(
-        tuple(r)
-        for r in current_manifest(spark, dst + "/_stats_manifest")
-        .drop("added_version")
-        .collect()
-    )
-    want_m = sorted(
-        tuple(r) for r in parquet_stats_index(spark, dst, ["k"]).collect()
-    )
+    got_m = _stats_rows(current_manifest(spark, dst + "/_stats_manifest"))
+    want_m = _stats_rows(parquet_stats_index(spark, dst, ["k"]))
     assert got_m == want_m
 
 
@@ -466,10 +454,10 @@ def test_concurrent_commit_raises_snapshot_conflict(spark, tmp_path):
     m = current_manifest(spark, mdir)
     # writer A snapshots (plans to commit v1); writer B commits v1 first
     # (an empty delta — commits carry only what THEY add)
-    sinks._commit_manifest(spark, mdir, m.limit(0), removed=[])  # B wins v1
+    sinks._commit_manifest(spark, mdir, m.slice(0, 0), removed=[])  # B wins v1
     with pytest.raises(sinks.SnapshotConflict, match="v1 .*v2|next version"):
         sinks._commit_manifest(
-            spark, mdir, m.limit(0), removed=[], expected_version=1
+            spark, mdir, m.slice(0, 0), removed=[], expected_version=1
         )  # A's stale plan
     # and the real maintenance path still commits cleanly after a retry
     led = update_stats_index(spark, dst, None)
@@ -661,15 +649,8 @@ def test_compact_table_merges_fragments_through_the_log(spark, tmp_path):
     assert got.count() == 20_300
     assert got.filter("k >= 30000").count() == 300
     # manifest == rebuild
-    got_m = sorted(
-        tuple(r)
-        for r in current_manifest(spark, dst + "/_stats_manifest")
-        .drop("added_version")
-        .collect()
-    )
-    want_m = sorted(
-        tuple(r) for r in parquet_stats_index(spark, dst, ["k"]).collect()
-    )
+    got_m = _stats_rows(current_manifest(spark, dst + "/_stats_manifest"))
+    want_m = _stats_rows(parquet_stats_index(spark, dst, ["k"]))
     assert got_m == want_m
     # idempotent: nothing small left to merge into fewer files
     led2 = compact_table(
@@ -726,14 +707,13 @@ def test_partition_column_stats_derive_from_directories(spark, tmp_path):
     spark.range(900).selectExpr("id % 3 AS p", "id AS k").repartition(
         3
     ).write.partitionBy("p").parquet(part)
-    idx = parquet_stats_index(spark, part, ["k", "p"]).cache()
-    rows = idx.collect()
+    idx = parquet_stats_index(spark, part, ["k", "p"])
+    rows = idx.to_pylist()
     assert rows
     ptype = dict(
-        (f.name, f.dataType.simpleString())
-        for f in spark.read.parquet(part).schema.fields
+        (f.name, f.dataType) for f in spark.read.parquet(part).schema.fields
     )["p"]
-    assert dict(idx.dtypes)["p_min"] == ptype
+    assert idx.schema.field("p_min").type == to_arrow_type(ptype)
     assert all(r["p_min"] == r["p_max"] is not None for r in rows)
     # equality predicate on the partition column prunes to its files
     kept = prune_files(idx, {"p": 1})
@@ -758,7 +738,7 @@ def test_read_table_composes_all_skipping_tiers(spark, tmp_path):
     )
     assert got == want and len(got) == 143
     # measured file-skip ratio: the k-range tiles a small file subset
-    total = current_manifest(spark, dst + "/_stats_manifest").count()
+    total = current_manifest(spark, dst + "/_stats_manifest").num_rows
     kept = len(
         prune_files(
             current_manifest(spark, dst + "/_stats_manifest"),
@@ -789,14 +769,23 @@ def test_manifest_lives_hidden_inside_the_table(spark, tmp_path):
     assert all("_stats_manifest" not in f for _r, f, _n in _leaf_files(dst))
 
 
-def test_index_is_footer_only_no_data_scan(spark, tmp_path):
+def test_index_is_footer_only_no_data_scan(spark, tmp_path, monkeypatch):
     """The index job's scan reads the PATH LIST, not the table: pin by
     job-group scan metrics — the parquet files' rows never appear as
     any stage's input because only footers are opened (pyarrow,
     executor-side)."""
     dst = _build(spark, tmp_path)
-    idx = parquet_stats_index(spark, dst, ["k"])
-    plan = idx._jdf.queryExecution().executedPlan().toString()
+    frame = type(spark.range(1))
+    plans = []
+    real = frame.toArrow
+
+    def spy(df):
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return real(df)
+
+    monkeypatch.setattr(frame, "toArrow", spy)
+    parquet_stats_index(spark, dst, ["k"])
+    (plan,) = plans
     # the only scan in the plan is the in-memory path list
     assert "FileScan parquet" not in plan
 

@@ -90,7 +90,7 @@ def test_rename_of_stats_column_keeps_pruning(spark, tmp_path):
     rename_column(spark, tbl, "k", "key")
     assert _mtimes(tbl) == before
     m = sinks.current_manifest(spark, tbl + "/_stats_manifest")
-    assert "key_min" in m.columns and "k_min" not in m.columns
+    assert "key_min" in m.column_names and "k_min" not in m.column_names
     kept = sinks.prune_files(m, {"key": (0, 99)})
     assert len(kept) == 1  # pruning tightened under the new name
     t = read_table(spark, tbl, predicates={"key": (0, 99)})

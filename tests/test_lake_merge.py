@@ -232,7 +232,7 @@ def test_conflict_after_move_in_rolls_back_cleanly(
             m = sinks.current_manifest(spark, mdir)
             # an empty delta — commits carry only what THEY add
             sinks._commit_manifest(
-                spark, mdir, m.limit(0), removed=[],
+                spark, mdir, m.slice(0, 0), removed=[],
                 constraints=state["constraints"],
             )
             return

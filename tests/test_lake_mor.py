@@ -82,7 +82,7 @@ def test_commit_metadata_is_o_batch(spark, tmp_path):
     assert rows == 1
     # ... and the snapshot still reconstructs the full file list
     manifest = sinks.current_manifest(spark, tbl + "/_stats_manifest")
-    assert manifest.count() == 9
+    assert manifest.num_rows == 9
     assert read_table(spark, tbl).count() == 1010
 
 
@@ -161,7 +161,7 @@ def test_stale_writer_cannot_overwrite_committed_version(spark, tmp_path):
     # committed by the time its manifest write lands
     with pytest.raises(sinks.SnapshotConflict):
         sinks._commit_manifest(
-            spark, mdir, m.limit(0), removed=[], expected_version=head
+            spark, mdir, m.slice(0, 0), removed=[], expected_version=head
         )
     assert json.load(open(f"{mdir}/v{head}/_COMMIT")) == winner_marker
     assert read_table(spark, tbl).count() == 100
@@ -598,7 +598,7 @@ def test_cluster_table_relayouts_through_the_log(spark, tmp_path):
     assert led["files_rewritten"] == 8
     m1 = sinks.current_manifest(spark, tbl + "/_stats_manifest")
     kept = sinks.prune_files(m1, {"k": (1000, 2000)})
-    assert len(kept) < m1.count()  # tiling, not table
+    assert len(kept) < m1.num_rows  # tiling, not table
     t = read_table(spark, tbl, {"k": (1000, 2000)})
     assert t.count() == 1001
     assert t.agg(F.sum("v")).collect()[0][0] == sum(
@@ -641,7 +641,7 @@ def test_driver_side_stats_handle_timestamp_and_decimal(spark, tmp_path):
     )
     assert read_table(spark, tbl, {"ts": span}).count() == 20
     kept = sinks.prune_files(m, {"ts": span})
-    assert 0 < len(kept) < m.count()  # the June files only
+    assert 0 < len(kept) < m.num_rows  # the June files only
     # decimal stats are NULL (pyarrow limitation) -> no prune, but the
     # exact row filter still holds
     assert read_table(spark, tbl, {"d": (105.0, 110.0)}).count() == 6
@@ -770,7 +770,7 @@ def test_two_processes_both_land(spark, tmp_path):
     on_disk = len(glob.glob(tbl + "/*.parquet"))
     assert on_disk == 2 + parent_files + child_files  # 2 = seed
     m = sinks.current_manifest(spark, mdir)
-    assert m.count() == on_disk  # every file committed, none orphaned
+    assert m.num_rows == on_disk  # every file committed, none orphaned
 
 
 def test_vacuum_sweeps_orphan_sidecars(spark, tmp_path):
@@ -1289,13 +1289,13 @@ def test_dv_suppression_broadcast_hint_is_size_gated(
             "ResolvedHint (strategy=broadcast)"
         )
 
-    # batch-sized debt: tombstone + file-map both hinted
-    assert _hints(read_table(spark, tbl)) == 2
-    # provably-huge debt: only the (metadata-sized) file map stays
-    # hinted; results identical either way
+    # batch-sized debt: the tombstone join is hinted (the file map is
+    # a literal, no join)
+    assert _hints(read_table(spark, tbl)) == 1
+    # provably-huge debt: no hint; results identical either way
     monkeypatch.setattr(sinks, "_DV_BROADCAST_MAX_ROWS", 1)
     t = read_table(spark, tbl)
-    assert _hints(t) == 1
+    assert _hints(t) == 0
     assert t.count() == 100 and t.filter("v = -1").count() == 10
     monkeypatch.undo()
     # pre-r13 entries (no row stamp) keep the hint — per-commit
@@ -1310,7 +1310,7 @@ def test_dv_suppression_broadcast_hint_is_size_gated(
     with open(mp, "w") as f:
         f.write(_json.dumps(m))
     monkeypatch.setattr(sinks, "_DV_BROADCAST_MAX_ROWS", 1)
-    assert _hints(read_table(spark, tbl)) == 2
+    assert _hints(read_table(spark, tbl)) == 1
 
 
 def test_two_processes_racing_mor_deletes_land_exactly_once(
@@ -1505,7 +1505,7 @@ def test_unstamped_consolidated_dv_disables_broadcast_hint(
         )
 
     # stamped consolidated entry (small): hint kept
-    assert _hints(read_table(spark, tbl)) == 2
+    assert _hints(read_table(spark, tbl)) == 1
     # strip the stamp from the per_row entry only
     for d in m["dvs"]:
         if d.get("per_row"):
@@ -1513,6 +1513,6 @@ def test_unstamped_consolidated_dv_disables_broadcast_hint(
     with open(mp, "w") as f:
         f.write(_json.dumps(m))
     t = read_table(spark, tbl)
-    assert _hints(t) == 1  # file map stays hinted; tombstone join not
+    assert _hints(t) == 0  # the tombstone join goes un-hinted
     # visibility unchanged either way
     assert t.count() == 90 and t.filter("k < 10").count() == 0

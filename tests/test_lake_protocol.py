@@ -399,3 +399,93 @@ def test_log_records_have_one_shape(spark, tmp_path):
             offs += [json.loads(ln) for ln in lines[2:]]
     assert offs and all(o.keys() == {"version", "index"} for o in offs), offs
     assert {"version": 0, "index": 3} in offs  # split inside v0
+
+
+def test_snapshot_replays_the_markers(spark, tmp_path):
+    """The driver-side snapshot (``current_manifest``, a pyarrow table)
+    at EVERY retained version holds exactly the file set a plain replay
+    of the markers' ``added``/``removed`` lists gives, across a hive
+    partition column, an ``update`` merge that removes files, a stats
+    column added by schema evolution and a ``rename_column`` of a
+    stats column; and the head prunes on the partition column, on the
+    evolved column (older files' stats are NULL, so they stay
+    candidates), on a ``date`` and on naive ``datetime`` bounds taken
+    from a Spark ``collect()`` — each pruned read equal to the plain
+    filtered scan."""
+    import calendar
+    import datetime
+
+    tbl = str(tmp_path / "t")
+    mdir = tbl + "/_stats_manifest"
+
+    def batch(lo: int, hi: int, month: int, e: bool = False):
+        day0 = datetime.date(2024, month, 1)
+        epoch0 = calendar.timegm(day0.timetuple())
+        cols = [
+            (F.col("id") % 2).cast("int").alias("p"),
+            F.col("id").alias("k"),
+            F.date_add(F.lit(day0), F.col("id").cast("int")).alias("d"),
+            F.timestamp_seconds(F.lit(epoch0) + F.col("id") * 3600).alias("ts"),
+        ]
+        if e:
+            cols.append((F.col("id") + 100).alias("e"))
+        return spark.range(lo, hi).select(*cols).coalesce(1)
+
+    stats = ["p", "k", "d", "ts"]
+    append_files(
+        spark, batch(0, 20, 1), tbl, cols=stats, partition_by=["p"],
+        keep_versions=50,
+    )  # v0: January
+    append_files(spark, batch(20, 40, 3), tbl)  # v1: March
+    merge_into(spark, batch(0, 5, 1), tbl, keys=["p", "k"])  # v2: removes
+    append_files(spark, batch(40, 50, 5, e=True), tbl, cols=stats + ["e"])
+    rename_column(spark, tbl, "k", "key")  # v4: stats column renamed
+    append_files(
+        spark, batch(50, 60, 7, e=True).withColumnRenamed("k", "key"), tbl
+    )
+
+    markers = _markers(tbl)
+    assert sorted(markers) == list(range(6))
+    replay: set[str] = set()
+    for v in sorted(markers):
+        replay = (replay - set(markers[v]["removed"])) | set(
+            markers[v]["added"]
+        )
+        snap = sinks.current_manifest(spark, mdir, version=v)
+        assert set(snap["file"].to_pylist()) == replay, v
+        assert snap.num_rows == len(replay), v
+
+    head = sinks.current_manifest(spark, mdir)
+    files = set(head["file"].to_pylist())
+    assert "key_min" in head.column_names and "k_min" not in head.column_names
+    evolved = set(markers[3]["added"]) | set(markers[5]["added"])
+
+    def kept(pred) -> set[str]:
+        return set(sinks.prune_files(head, pred))
+
+    # hive partition column: directory-derived stats
+    assert kept({"p": 1}) == {f for f in files if "/p=1/" in f}
+    # the evolved column: older files carry NULL stats and stay
+    assert kept({"e": (500, 600)}) == files - evolved
+    assert kept({"e": (140, 145)}) == (files - evolved) | set(
+        markers[3]["added"]
+    )
+    # the old name is no longer indexed: every file may match
+    assert kept({"k": (0, 1)}) == files
+    # a date predicate meets date32 stats: only January's files
+    jan3 = datetime.date(2024, 1, 3)
+    assert kept({"d": jan3}) == set(markers[2]["added"]) | {
+        f for f in markers[0]["added"] if f in files
+    }
+    assert read_table(spark, tbl, {"d": jan3}).count() == 1
+    # naive datetime bounds from a Spark collect meet timestamp[us, UTC]
+    lo, hi = (
+        read_table(spark, tbl)
+        .filter("key BETWEEN 20 AND 22")
+        .agg(F.min("ts"), F.max("ts"))
+        .collect()[0]
+    )
+    assert lo.tzinfo is None
+    assert kept({"ts": (lo, hi)}) == set(markers[1]["added"])
+    assert read_table(spark, tbl, {"ts": (lo, hi)}).count() == 3
+    assert read_table(spark, tbl).count() == 60

@@ -264,17 +264,16 @@ def test_lake_sink_upsert_job_counts(spark, tmp_path):
     one more mode='ignore' upsert, which reads a snapshot whose delta
     chain carries the update's removed files and must cost no more
     than the first ignore; each runs in its own job group and the
-    stage count sums the jobs' stageIds (skipped stages included)."""
+    stage count sums the jobs' stageIds (skipped stages included).
+    Two table shapes are pinned: two chains of one data file each, and
+    one chain whose first write lands two data files (so a warm upsert
+    reads two candidate files, not one).  The manifest is read, pruned
+    and committed on the driver, so every job counted here is data
+    work."""
     sc = spark.sparkContext
     tracker = sc.statusTracker()
-    sink = LakeUpsertSink(str(tmp_path / "sink"))
 
-    def rows(lo: int, hi: int):
-        return spark.range(lo, hi).select(
-            (F.col("id") % 2).alias("chain_id"), F.col("id").alias("number")
-        )
-
-    def cost(group: str, df, mode: str) -> tuple[int, int]:
+    def cost(sink, group: str, df, mode: str) -> tuple[int, int]:
         sc.setJobGroup(group, "lake sink upsert", False)
         try:
             sink.upsert(df, "t", ["chain_id", "number"], mode=mode)
@@ -284,21 +283,112 @@ def test_lake_sink_upsert_job_counts(spark, tmp_path):
         stages = sum(len(tracker.getJobInfo(j).stageIds) for j in jobs)
         return len(jobs), stages
 
-    got = {
-        "first": cost("sink_pin_first", rows(0, 100), "ignore"),
-        "ignore": cost("sink_pin_ignore", rows(50, 150), "ignore"),
-        "update": cost("sink_pin_update", rows(100, 200), "update"),
-        "ignore_after_update": cost(
-            "sink_pin_ignore_after_update", rows(150, 250), "ignore"
-        ),
+    def pin(shape: str, chains: int, first_files: int) -> dict:
+        sink = LakeUpsertSink(str(tmp_path / shape))
+
+        def rows(lo: int, hi: int):
+            return spark.range(lo, hi).select(
+                (F.col("id") % chains).alias("chain_id"),
+                F.col("id").alias("number"),
+            )
+
+        got = {
+            "first": cost(
+                sink, f"{shape}_first",
+                rows(0, 100).repartition(first_files), "ignore",
+            ),
+            "ignore": cost(sink, f"{shape}_ignore", rows(50, 150), "ignore"),
+            "update": cost(sink, f"{shape}_update", rows(100, 200), "update"),
+            "ignore_after_update": cost(
+                sink, f"{shape}_ignore_after_update", rows(150, 250), "ignore"
+            ),
+        }
+        assert sink.read(spark, "t").count() == 250
+        return got
+
+    assert pin("two_chains", 2, 1) == {
+        "first": (2, 3),
+        "ignore": (6, 8),
+        "update": (6, 8),
+        "ignore_after_update": (6, 8),
     }
-    assert got == {
-        "first": (3, 4),
-        "ignore": (8, 11),
-        "update": (8, 11),
-        "ignore_after_update": (8, 11),
+    assert pin("one_chain", 1, 2) == {
+        "first": (2, 3),
+        "ignore": (6, 8),
+        "update": (6, 8),
+        "ignore_after_update": (6, 8),
     }
-    assert sink.read(spark, "t").count() == 250
+
+
+def test_lake_log_reads_run_no_spark_job(spark, tmp_path):
+    """The lake log's snapshot lives on the driver: replaying the
+    manifest (head and a pre-checkpoint version), pruning it, listing
+    the table history, and committing a checkpoint run no Spark job.
+    A table is built past one checkpoint (v0..v19, v10 the checkpoint,
+    v1 an ``update`` upsert that removes files); then, in ONE job
+    group, the readers run and one ``append_files`` of a pre-read
+    frame commits v20 — the next checkpoint.  The group's job count
+    equals a delta append's (v19, measured the same way): the only
+    jobs are the append's own data write."""
+    from evmtrace_etl_spark import sinks
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    base = str(tmp_path / "lake")
+    tbl = os.path.join(base, "t")
+    mdir = tbl + "/_stats_manifest"
+
+    def rows(lo: int, hi: int):
+        return spark.range(lo, hi).select(
+            F.col("id").alias("k"), (F.col("id") * 10).alias("v")
+        )
+
+    def staged(name: str, lo: int, hi: int):
+        d = str(tmp_path / name)
+        rows(lo, hi).coalesce(1).write.parquet(d)
+        return spark.read.parquet(d)  # schema read outside any group
+
+    def jobs_of(group: str, fn):
+        sc.setJobGroup(group, "lake log", False)
+        try:
+            out = fn()
+        finally:
+            sc.setJobGroup("", "", False)
+        return out, len(tracker.getJobIdsForGroup(group))
+
+    sinks.append_files(
+        spark, rows(0, 40).repartition(4), tbl, cols=["k"], keep_versions=30
+    )
+    LakeUpsertSink(base, partition_cols=()).upsert(
+        rows(0, 10), "t", ["k"], mode="update"
+    )
+    for i in range(2, 19):
+        sinks.append_files(spark, rows(40 + 10 * i, 50 + 10 * i), tbl)
+    delta_frame = staged("delta", 1000, 1010)
+    ckpt_frame = staged("ckpt", 2000, 2010)
+    _, delta_jobs = jobs_of(
+        "lake_log_delta", lambda: sinks.append_files(spark, delta_frame, tbl)
+    )
+    assert sinks._commit_info(mdir, 19)["kind"] == "delta"
+
+    def readers_then_checkpoint():
+        head = sinks.current_manifest(spark, mdir)
+        kept = sinks.prune_files(head, {"k": (0, 45)})
+        history = sinks.table_history(spark, tbl)
+        old = sinks.current_manifest(spark, mdir, version=5)
+        sinks.append_files(spark, ckpt_frame, tbl)
+        return head, kept, history, old
+
+    (head, kept, history, old), n_jobs = jobs_of(
+        "lake_log_reads", readers_then_checkpoint
+    )
+    assert n_jobs == delta_jobs, (n_jobs, delta_jobs)
+    assert sinks._commit_info(mdir, 20)["kind"] == "checkpoint"
+    assert [h["version"] for h in history] == list(range(20))
+    assert head.num_rows == history[-1]["files"]
+    assert 0 < len(kept) < head.num_rows
+    assert old.num_rows == history[5]["files"]
+    assert sinks.read_table(spark, tbl).count() == 40 + 17 * 10 + 20
 
 
 def test_lake_sink_upsert_makes_no_direct_py4j_calls(
@@ -995,12 +1085,12 @@ def test_ingest_dedup_prunes_index_before_sizing(spark, tmp_path):
 
 def test_dv_suppressed_read_never_shuffles_the_fact(spark, tmp_path):
     """Deletion-vector serving (read_table over a merge-on-read table):
-    the fact scan flows through exactly two BROADCAST hash joins — the
-    file→added_version provenance map and the tombstone max-version
-    set, both metadata/batch-sized — and the only hash-partitioned
-    Exchange in the plan is the tombstone-side aggregate.  A
-    SortMergeJoin or a fact-side Exchange here would shuffle the whole
-    table per read at 100 TB."""
+    the fact scan flows through exactly one BROADCAST hash join — the
+    batch-sized tombstone max-version set; the file→added_version
+    provenance is a literal map from the driver's snapshot, no join —
+    and the only hash-partitioned Exchange in the plan is the
+    tombstone-side aggregate.  A SortMergeJoin or a fact-side Exchange
+    here would shuffle the whole table per read at 100 TB."""
     from evmtrace_etl_spark import sinks
 
     tbl = str(tmp_path / "t")
@@ -1024,7 +1114,7 @@ def test_dv_suppressed_read_never_shuffles_the_fact(spark, tmp_path):
     df = sinks.read_table(spark, tbl)
     plan = plan_of(df, "simple")
     assert "SortMergeJoin" not in plan
-    assert plan.count("BroadcastHashJoin") == 2
+    assert plan.count("BroadcastHashJoin") == 1
     # the one shuffle is the batch-sized tombstone aggregate, never the
     # fact side
     assert plan.count("Exchange hashpartitioning") == 1
