@@ -4,9 +4,10 @@ the stream source (``sources.lake_changes``).
 The log lives on the local filesystem and is read with the Python
 standard library and pyarrow: no SparkSession, no JVM, so the stream
 reader's executors load this module without loading ``sinks``.  Layout
-(see the snapshot-commit section of ``sinks``): ``<manifest>/v<N>/_COMMIT``
-is a committed version's JSON marker; ``<manifest>/v<N>/*.parquet`` its
-manifest rows.  A snapshot's manifest is one ``pyarrow.Table``
+(see the snapshot-commit section of ``sinks``): the log of the table at
+``<path>`` is ``manifest_dir(path)``; ``<log>/v<N>/_COMMIT`` is a
+committed version's JSON marker, ``<log>/v<N>/*.parquet`` its manifest
+rows.  A snapshot's manifest is one ``pyarrow.Table``
 (``read_manifest``), replayed on the driver the way delta-rs and Delta
 Kernel replay a Delta log in-process.
 """
@@ -34,6 +35,14 @@ def local_path(p: str) -> str:
             f"the lake log reads local/file: paths only, got {p!r}"
         )
     return os.path.abspath(p)
+
+
+def manifest_dir(path: str) -> str:
+    """The log directory of the lake table at ``path``:
+    ``<path>/_stats_manifest``, inside the table (hidden to Spark scans
+    by its ``_`` prefix), in ``local_path`` form.  A table is named by
+    its path alone — the log has no other location."""
+    return local_path(path) + "/_stats_manifest"
 
 
 def committed_versions(mdir: str) -> list[int]:

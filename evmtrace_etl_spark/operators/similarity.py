@@ -51,17 +51,12 @@ def _norm(a: Column) -> Column:
     return F.sqrt(_dot(a, a))
 
 
-def cosine(a: Column, b: Column) -> Column:
-    return _dot(a, b) / (_norm(a) * _norm(b))
-
-
 def _cos_pre(a: Column, b: Column, na: Column, nb: Column) -> Column:
-    """cosine with PRE-COMPUTED norms: every pair-scoring operator
-    attaches ``_norm`` per side BEFORE its join, so column pruning
-    pushes the norm below the join and each vector's norm is an
-    interpreted-HOF fold once per ROW instead of once per PAIR (3 dot
-    products per pair → 1).  Bit-identical to ``cosine`` — the same
-    float ops in the same order, just evaluated once."""
+    """Cosine ``a·b / (|a| |b|)`` with PRE-COMPUTED norms ``na``/``nb``:
+    every pair-scoring operator attaches ``_norm`` per side BEFORE its
+    join, so column pruning pushes the norm below the join and each
+    vector's norm is an interpreted-HOF fold once per ROW instead of
+    once per PAIR (3 dot products per pair → 1)."""
     return _dot(a, b) / (na * nb)
 
 

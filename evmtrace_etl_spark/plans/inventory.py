@@ -2193,9 +2193,9 @@ def snapshot_delete_purge(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.repartition(8).write.mode("overwrite").partitionBy(
             "event_type"
         ).parquet(tbl)
-        update_stats_index(spark, tbl, None, ["ts", "event_type"])
+        update_stats_index(spark, tbl, ["ts", "event_type"])
         delete_where(
-            spark, tbl, None, {"event_type": "click", "ts": (lo, hi)}
+            spark, tbl, {"event_type": "click", "ts": (lo, hi)}
         )
         _BUILD_DONE["snapshot_delete"] = base
     return (
@@ -2349,7 +2349,6 @@ def update_backfill(spark: SparkSession, sf_dir: str) -> DataFrame:
         update_where(
             spark,
             tbl,
-            None,
             {"event_type": "purchase", "ts": (lo, hi)},
             {"value": "value * 2.0"},
         )
@@ -2975,7 +2974,7 @@ def _lake_cluster_build(spark: SparkSession, sf_dir: str) -> str:
         )
         assert led["rows_before"] == led["rows_after"]
         if led["files_added"] > 1:  # tiny SFs fit one file — no spans
-            m = current_manifest(spark, tbl + "/_stats_manifest")
+            m = current_manifest(tbl)
             hi = ev.agg(F.max("event_id")).collect()[0][0]
             kept = prune_files(m, {"event_id": (0, int(hi) // 4)})
             # the re-layout must actually skip
@@ -3189,7 +3188,7 @@ def _lake_timetravel_build(spark: SparkSession, sf_dir: str) -> str:
         )
         merge_into(spark, src, tbl, keys=["event_id"], keep_versions=10)  # v1
         delete_where(  # v2
-            spark, tbl, None, {"event_id": (0, int(cut))}, keep_versions=10
+            spark, tbl, {"event_id": (0, int(cut))}, keep_versions=10
         )
         _BUILD_DONE["lake_travel"] = base
     return tbl
@@ -3227,7 +3226,7 @@ def lake_timetravel(spark: SparkSession, sf_dir: str) -> DataFrame:
     tbl = _lake_timetravel_build(spark, sf_dir)
     # v1's commit instant from ONE marker read — table_history would
     # reconstruct + aggregate every retained manifest just for this
-    ts_v1 = commit_timestamp(spark, tbl, 1)
+    ts_v1 = commit_timestamp(tbl, 1)
 
     def leg(label: str, **kw) -> DataFrame:
         return (
@@ -3469,7 +3468,7 @@ def _lake_cdc_build(spark: SparkSession, sf_dir: str) -> str:
             )
         )
         merge_into(spark, src, tbl, keys=["event_id"])  # v2
-        delete_where(spark, tbl, None, {"event_id": (0, int(cut))})  # v3
+        delete_where(spark, tbl, {"event_id": (0, int(cut))})  # v3
         _BUILD_DONE["lake_cdc"] = base
     return tbl
 
@@ -3716,7 +3715,7 @@ def _lake_delete_mor_build(spark: SparkSession, sf_dir: str) -> str:
             for p in _glob.glob(tbl + "/*.parquet")
         }
         led = delete_where(
-            spark, tbl, None, {"user_id": (1, 50)},
+            spark, tbl, {"user_id": (1, 50)},
             strategy="merge-on-read", keys=["event_id"],
             txn=("inv_delmor", 1),
         )
@@ -3729,7 +3728,7 @@ def _lake_delete_mor_build(spark: SparkSession, sf_dir: str) -> str:
         assert after == before  # zero write amplification
         # exactly-once: the replayed batch id short-circuits
         assert delete_where(
-            spark, tbl, None, {"user_id": (1, 50)},
+            spark, tbl, {"user_id": (1, 50)},
             strategy="merge-on-read", keys=["event_id"],
             txn=("inv_delmor", 1),
         )["skipped"]
@@ -4065,7 +4064,7 @@ def _lake_widen_build(spark: SparkSession, sf_dir: str) -> str:
         }
         for p, mt in before.items():
             assert after[p] == mt  # seed files byte-untouched
-        schema = committed_schema(spark, tbl + "/_stats_manifest")
+        schema = committed_schema(tbl)
         assert schema["event_id"].dataType == _T.LongType()
         assert schema["user_id"].dataType == _T.LongType()
         _BUILD_DONE["lake_widen"] = base
@@ -4165,7 +4164,7 @@ def lake_update_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
             for p in _glob.glob(tbl + "/*.parquet")
         }
         led = update_where(
-            spark, tbl, None, {"user_id": (1, 50)},
+            spark, tbl, {"user_id": (1, 50)},
             {"value": "value * 2.0"},
             strategy="merge-on-read", keys=["event_id"],
             txn=("inv_updmor", 1),
@@ -4179,7 +4178,7 @@ def lake_update_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
         for p, mt in before.items():
             assert after[p] == mt  # candidates byte-untouched
         assert update_where(
-            spark, tbl, None, {"user_id": (1, 50)},
+            spark, tbl, {"user_id": (1, 50)},
             {"value": "value * 2.0"},
             strategy="merge-on-read", keys=["event_id"],
             txn=("inv_updmor", 1),
@@ -4229,6 +4228,7 @@ def _lake_dv_checkpoint_build(spark: SparkSession, sf_dir: str) -> str:
     import tempfile
 
     from .. import sinks
+    from ..lake_log import manifest_dir
     from ..sinks import append_files, delete_where
 
     base = os.path.join(
@@ -4258,7 +4258,7 @@ def _lake_dv_checkpoint_build(spark: SparkSession, sf_dir: str) -> str:
         }
         for i in range(11):  # v1..v11; v10 checkpoints + consolidates
             led = delete_where(
-                spark, tbl, None, {"user_id": (i + 1, i + 1)},
+                spark, tbl, {"user_id": (i + 1, i + 1)},
                 strategy="merge-on-read", keys=["event_id"],
                 txn=("inv_dvck", i),
             )
@@ -4269,7 +4269,7 @@ def _lake_dv_checkpoint_build(spark: SparkSession, sf_dir: str) -> str:
             for p in _glob.glob(tbl + "/*.parquet")
         }
         assert after == before  # zero write amplification through it all
-        mdir = tbl + "/_stats_manifest"
+        mdir = manifest_dir(tbl)
         dvs = sinks._active_dvs(mdir)
         # 10 pre-checkpoint sidecars folded to 1 consolidated (per-row
         # versions) + the post-fold v11 sidecar
@@ -4282,9 +4282,7 @@ def _lake_dv_checkpoint_build(spark: SparkSession, sf_dir: str) -> str:
         ]
         assert len(scans) == 2, scans  # plan-asserted debt bound
         # the fold stamped the protocol feature
-        head = sinks._commit_info(
-            mdir, sinks.manifest_version(spark, mdir)
-        )
+        head = sinks._commit_info(mdir, sinks.manifest_version(tbl))
         assert "dv-per-row" in head.get("features", [])
         _BUILD_DONE["lake_dv_checkpoint"] = base
     return tbl
@@ -4350,6 +4348,7 @@ def _lake_maintain_build(spark: SparkSession, sf_dir: str) -> str:
     import tempfile
 
     from .. import sinks
+    from ..lake_log import manifest_dir
     from ..sinks import append_files, delete_where
 
     base = os.path.join(
@@ -4374,7 +4373,7 @@ def _lake_maintain_build(spark: SparkSession, sf_dir: str) -> str:
             )
         for i in range(3):  # v5..v7 — scattered MOR erasures
             led = delete_where(
-                spark, tbl, None, {"user_id": (i + 1, i + 1)},
+                spark, tbl, {"user_id": (i + 1, i + 1)},
                 strategy="merge-on-read", keys=["event_id"],
             )
             assert led["rows_deleted"] > 0 and led["files_rewritten"] == 0
@@ -4386,7 +4385,7 @@ def _lake_maintain_build(spark: SparkSession, sf_dir: str) -> str:
         # fragments toward target size; compact then merges whatever
         # it left (possibly nothing at small SF)
         assert led["materialize"]["files_rewritten"] >= 1
-        assert sinks._active_dvs(tbl + "/_stats_manifest") == []
+        assert sinks._active_dvs(manifest_dir(tbl)) == []
         led2 = sinks.maintain_table(
             spark, tbl, dv_files_threshold=2, min_age_s=0
         )
@@ -4455,6 +4454,7 @@ def _lake_mor_rebase_build(spark: SparkSession, sf_dir: str) -> str:
     import tempfile
 
     from .. import sinks
+    from ..lake_log import manifest_dir
     from ..sinks import append_files, delete_where
 
     base = os.path.join(
@@ -4522,7 +4522,7 @@ def _lake_mor_rebase_build(spark: SparkSession, sf_dir: str) -> str:
         sinks._commit_manifest = hook
         try:
             led = delete_where(
-                spark, tbl, None, {"user_id": (1, 50)},
+                spark, tbl, {"user_id": (1, 50)},
                 strategy="merge-on-read", keys=["event_id"],
                 txn=("inv_morreb", 1),
             )  # loser: collides at v1, re-commits at v2
@@ -4542,11 +4542,11 @@ def _lake_mor_rebase_build(spark: SparkSession, sf_dir: str) -> str:
             assert p in after and after[p] == mt, p
         # the dv entry kept the ORIGINAL read-snapshot stamp (v1), so
         # the winner's rows (added_version 1) survive the suppression
-        dvs = sinks._active_dvs(tbl + "/_stats_manifest")
+        dvs = sinks._active_dvs(manifest_dir(tbl))
         assert [int(d["version"]) for d in dvs] == [1], dvs
         # exactly-once across the rebase
         assert delete_where(
-            spark, tbl, None, {"user_id": (1, 50)},
+            spark, tbl, {"user_id": (1, 50)},
             strategy="merge-on-read", keys=["event_id"],
             txn=("inv_morreb", 1),
         )["skipped"]

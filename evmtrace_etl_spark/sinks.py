@@ -21,7 +21,9 @@ under a guess (the stream source reads through the same module, and its
 offsets follow the same rule — see ``sources.lake_changes``).  The log
 and the data files live on the local filesystem and are reached with
 the Python standard library; a ``scheme://`` path other than ``file:``
-raises (``lake_log.local_path``).
+raises (``lake_log.local_path``).  A lake table is named by its path
+alone: its log is ``lake_log.manifest_dir(path)``
+(``<path>/_stats_manifest``), and every lake call takes the path.
 
 - ``LakeUpsertSink`` — the UNIFIED path (r10): keyed upserts as
   ``merge_into`` snapshot transactions through the same manifest log
@@ -77,6 +79,7 @@ from .lake_log import (
     dir_value as _dir_value,
     file_size as _file_size,
     local_path as _local_path,
+    manifest_dir as _manifest_dir,
     manifest_schema as _manifest_schema,
     py_cast as _py_cast,
     read_json as _read_json,
@@ -118,9 +121,10 @@ class LakeUpsertSink:
     ``retry_on_conflict`` concurrency for free.
 
     Layout: ``<base>/<table>/`` is a plain (optionally hive-
-    partitioned) parquet directory with its ``_stats_manifest`` log
-    inside — any engine reads the data files; snapshot readers resolve
-    the committed file list.  Mirrors the reference's keyed DO NOTHING
+    partitioned) parquet directory, and that path names the table: its
+    log is ``lake_log.manifest_dir(path)``, inside it — any engine
+    reads the data files; snapshot readers resolve the committed file
+    list.  Mirrors the reference's keyed DO NOTHING
     / DO UPDATE sink (src/dumper/postgres.rs:41-92,
     src/types/etl_result.rs:205-281).
 
@@ -147,18 +151,13 @@ class LakeUpsertSink:
     def _path(self, table: str) -> str:
         return os.path.join(self.base_dir, table)
 
-    def _exists(self, spark: SparkSession, table: str) -> bool:
-        return (
-            manifest_version(
-                spark, _manifest_dir(self._path(table), None)
-            )
-            is not None
-        )
+    def _exists(self, table: str) -> bool:
+        return manifest_version(self._path(table)) is not None
 
     def read(self, spark: SparkSession, table: str) -> DataFrame | None:
         """Current table contents in the committed column order, or
         None before the first upsert."""
-        if not self._exists(spark, table):
+        if not self._exists(table):
             return None
         return read_table(spark, self._path(table))
 
@@ -177,7 +176,7 @@ class LakeUpsertSink:
         spark = df.sparkSession
         path = self._path(table)
         pcols = [c for c in self.partition_cols if c in df.columns]
-        if not self._exists(spark, table):
+        if not self._exists(table):
             # first write: no merge — seed the table + manifest; stats
             # over the partition/key columns footer-friendly types
             stats = [
@@ -750,6 +749,18 @@ def _pred_parts(
     return ranges, cond
 
 
+def _require_predicates(predicates, op: str) -> None:
+    """Refuse a row-level write whose ``predicates`` is not a dict:
+    ``_pred_parts`` reads None as "match every row", so a stray
+    positional (the old ``delete_where(spark, tbl, None, {...})``
+    spelling) would otherwise rewrite the whole table."""
+    if not isinstance(predicates, dict):
+        raise TypeError(
+            f"{op}: predicates must be a dict of column -> (lo, hi) or "
+            f"value, got {type(predicates).__name__}"
+        )
+
+
 def _arrow_bound(v, typ: pa.DataType) -> pa.Scalar:
     """A predicate bound as a scalar of the manifest column's arrow
     type.  Bounds arrive as Python values (often from a Spark
@@ -865,16 +876,6 @@ def prune_files(index: pa.Table, predicates: dict) -> list[str]:
 _CHECKPOINT_EVERY = 10
 
 
-def _manifest_dir(path: str, manifest_path: str | None) -> str:
-    """Default manifest location: ``_stats_manifest`` INSIDE the table
-    dir (hidden to Spark scans and to ``_leaf_files`` alike), making a
-    table + its snapshot metadata one self-contained directory.  The
-    result is in ``_local_path`` form."""
-    if manifest_path is not None:
-        return _local_path(manifest_path)
-    return _local_path(path) + "/_stats_manifest"
-
-
 def _delete(p: str) -> None:
     """Remove the file or directory tree at ``p``; a missing ``p`` is
     not an error."""
@@ -887,10 +888,16 @@ def _delete(p: str) -> None:
         pass
 
 
-def manifest_version(spark: SparkSession, manifest_path: str) -> int | None:
-    """Highest committed manifest version, or None."""
-    vs = _committed_versions(_local_path(manifest_path))
+def _head_version(mdir: str) -> int | None:
+    """Highest committed version of the log at ``mdir``, or None."""
+    vs = _committed_versions(mdir)
     return vs[-1] if vs else None
+
+
+def manifest_version(path: str) -> int | None:
+    """Highest committed manifest version of the table at ``path``, or
+    None."""
+    return _head_version(_manifest_dir(path))
 
 
 def _write_json_marker(
@@ -924,27 +931,15 @@ def _write_json_marker(
         os.remove(tmp)
 
 
-def commit_timestamp(
-    spark: SparkSession,
-    path: str,
-    version: int,
-    manifest_path: str | None = None,
-) -> float:
+def commit_timestamp(path: str, version: int) -> float:
     """A committed version's wall-clock time (epoch seconds) from ONE
     marker read — the lightweight inverse of ``version_at_timestamp``
     (``table_history`` reports the same ``ts`` but replays every
     retained manifest)."""
-    return float(
-        _commit_info(_manifest_dir(path, manifest_path), version)["ts"]
-    )
+    return float(_commit_info(_manifest_dir(path), version)["ts"])
 
 
-def version_at_timestamp(
-    spark: SparkSession,
-    path: str,
-    ts: float,
-    manifest_path: str | None = None,
-) -> int:
+def version_at_timestamp(path: str, ts: float) -> int:
     """Resolve ``TIMESTAMP AS OF``: the latest RETAINED committed
     version whose commit time is <= ``ts`` (epoch seconds).  Commit
     ``ts`` stamps are strictly increasing along the log (each commit
@@ -953,7 +948,7 @@ def version_at_timestamp(
     current then is no longer reconstructible, and serving a newer one
     would silently lie.  O(retained versions) marker reads, no data or
     manifest scan."""
-    mdir = _manifest_dir(path, manifest_path)
+    mdir = _manifest_dir(path)
     versions = _committed_versions(mdir)
     if not versions:
         raise ValueError(f"no committed snapshot at {mdir}")
@@ -1010,12 +1005,8 @@ def version_at_timestamp(
     return best
 
 
-def current_manifest(
-    spark: SparkSession,
-    manifest_path: str,
-    version: int | None = None,
-) -> pa.Table | None:
-    """The current committed stats manifest as one ``pyarrow.Table``
+def current_manifest(path: str, version: int | None = None) -> pa.Table | None:
+    """The table's current committed stats manifest as one ``pyarrow.Table``
     (the highest ``v<N>`` carrying a ``_COMMIT`` marker, replayed on
     the driver from its checkpoint plus deltas by
     ``lake_log.read_manifest`` — zero Spark jobs), else None.  This is
@@ -1029,18 +1020,18 @@ def current_manifest(
     committed versions; raise ``keep_versions`` on the maintenance
     calls for a deeper history).  Raises if the requested version is
     not committed/retained."""
-    manifest_path = _local_path(manifest_path)
+    mdir = _manifest_dir(path)
     if version is not None:
-        if version not in _committed_versions(manifest_path):
+        if version not in _committed_versions(mdir):
             raise ValueError(
                 f"manifest version {version} is not committed/retained "
-                f"at {manifest_path}"
+                f"at {mdir}"
             )
-        return _reconstruct_manifest(manifest_path, version)
-    v = manifest_version(spark, manifest_path)
+        return _reconstruct_manifest(mdir, version)
+    v = _head_version(mdir)
     if v is None:
         return None
-    return _reconstruct_manifest(manifest_path, v)
+    return _reconstruct_manifest(mdir, v)
 
 
 class SnapshotConflict(RuntimeError):
@@ -1182,16 +1173,16 @@ def _target_files(
     return max(1, -(-total // int(target_bytes))), total
 
 
-def _require_manifest(spark: SparkSession, mdir: str) -> pa.Table:
+def _require_manifest(mdir: str) -> pa.Table:
     """The committed stats manifest a rewrite/merge plans against —
     refusing a table that has none."""
-    manifest = current_manifest(spark, mdir)
-    if manifest is None:
+    v = _head_version(mdir)
+    if v is None:
         raise ValueError(
             f"no stats manifest at {mdir} — create the table with "
             "append_files / update_stats_index first"
         )
-    return manifest
+    return _reconstruct_manifest(mdir, v)
 
 
 def _guard_dv_keys(
@@ -1353,20 +1344,20 @@ _LOG_LOCKS: dict[str, "_threading.Lock"] = {}
 _LOG_LOCKS_GUARD = _threading.Lock()
 
 
-def _log_lock(mdir: str) -> "_threading.Lock":
-    """Per-table in-process write lock, keyed on the canonical path
-    form (``_local_path``: two spellings of one table path — ``file:``
-    URI vs posix, relative vs absolute, trailing slash — share one
-    lock).  Write entries take it through ``_locked``, which carries
+def _log_lock(path: str) -> "_threading.Lock":
+    """Per-table in-process write lock, keyed on the table path's
+    canonical form (``_local_path``: two spellings of one table path —
+    ``file:`` URI vs posix, relative vs absolute, trailing slash —
+    share one lock).  Write entries take it through ``_locked``, which carries
     the writer-concurrency contract."""
     with _LOG_LOCKS_GUARD:
-        return _LOG_LOCKS.setdefault(_local_path(mdir), _threading.Lock())
+        return _LOG_LOCKS.setdefault(_local_path(path), _threading.Lock())
 
 
 def _locked(fn):
     """Run the lake write entry ``fn`` under its table's ``_log_lock``,
-    resolved from the call's bound ``path`` / ``manifest_path``, which
-    reach ``fn`` in ``_local_path`` form — so the file lists its
+    keyed on the call's bound ``path``, which reaches ``fn`` in
+    ``_local_path`` form — so the file lists its
     commit records are absolute posix paths whatever spelling the
     caller used.  The lock is a plain (non-reentrant)
     ``threading.Lock``: a caller that already holds it — an entry
@@ -1405,9 +1396,7 @@ def _locked(fn):
         bound = sig.bind(*args, **kwargs)
         arg = bound.arguments
         arg["path"] = _local_path(arg["path"])
-        if arg.get("manifest_path") is not None:
-            arg["manifest_path"] = _local_path(arg["manifest_path"])
-        with _log_lock(_manifest_dir(arg["path"], arg.get("manifest_path"))):
+        with _log_lock(arg["path"]):
             return fn(*bound.args, **bound.kwargs)
 
     return locked
@@ -1444,11 +1433,11 @@ class _CommitLease:
     double-admission as a ``SnapshotConflict`` retry, never data
     loss."""
 
-    def __init__(self, manifest_path: str):
+    def __init__(self, mdir: str):
         import uuid as _uuid
 
-        self._mdir = manifest_path
-        self._path = f"{manifest_path}/_LOCK"
+        self._mdir = mdir
+        self._path = f"{mdir}/_LOCK"
         self._token = _uuid.uuid4().hex
 
     def _read_token(self) -> str | None:
@@ -1519,7 +1508,7 @@ class _CommitLease:
 
 def _commit_manifest(
     spark: SparkSession,
-    manifest_path: str,
+    mdir: str,
     added_stats: pa.Table | None,
     removed: Sequence[str] = (),
     **kwargs,
@@ -1531,15 +1520,15 @@ def _commit_manifest(
     logged a ``_TXN`` intent: the token is re-verified under the lease
     so a commit can never land over files a cross-process maintenance
     actor already adjudicated and rolled back."""
-    with _CommitLease(manifest_path):
+    with _CommitLease(mdir):
         return _commit_manifest_unleased(
-            spark, manifest_path, added_stats, removed, **kwargs
+            spark, mdir, added_stats, removed, **kwargs
         )
 
 
 def _commit_manifest_unleased(
     spark: SparkSession,
-    manifest_path: str,
+    mdir: str,
     added_stats: pa.Table | None,
     removed: Sequence[str],
     expected_version: int | None = None,
@@ -1562,7 +1551,6 @@ def _commit_manifest_unleased(
     col_mapping: dict | None = None,
     stats_cols_override: Sequence[str] | None = None,
     metrics: dict | None = None,
-    protocol_floor: tuple[int, int] | None = None,
     intent_token: str | None = None,
 ) -> int:
     """Commit the next manifest version with one atomic marker rename.
@@ -1616,21 +1604,21 @@ def _commit_manifest_unleased(
         # caller rolls back (idempotent — the files are gone) and
         # retries from a fresh snapshot.
         try:
-            cur_tok = _read_json(f"{manifest_path}/_TXN").get("intent")
+            cur_tok = _read_json(f"{mdir}/_TXN").get("intent")
         except (OSError, ValueError):
             cur_tok = None
         if cur_tok != intent_token:
             raise SnapshotConflict(
-                f"manifest at {manifest_path}: this transaction's _TXN "
+                f"manifest at {mdir}: this transaction's _TXN "
                 "intent was adjudicated (rolled back as crashed) by "
                 "another maintenance actor — its moved-in files are "
                 "gone; retry from a fresh snapshot"
             )
-    committed = _committed_versions(manifest_path)
+    committed = _committed_versions(mdir)
     nxt = (committed[-1] + 1) if committed else 0
     if expected_version is not None and nxt != expected_version:
         raise SnapshotConflict(
-            f"manifest at {manifest_path}: planned to commit "
+            f"manifest at {mdir}: planned to commit "
             f"v{expected_version} but the next version is v{nxt} — "
             "another writer committed first; retry from a fresh snapshot"
         )
@@ -1648,11 +1636,11 @@ def _commit_manifest_unleased(
     prev_proto: dict = {}
     prev_schema_json: dict | None = None
     if committed:
-        prev = _commit_info(manifest_path, committed[-1])
+        prev = _commit_info(mdir, committed[-1])
         # the ONE choke point every write path commits through: refuse
         # before touching the log when the table's stamped protocol
         # exceeds this build's feature level
-        _check_protocol(prev, "write", f"commit into {manifest_path}")
+        _check_protocol(prev, "write", f"commit into {mdir}")
         prev_features = list(prev.get("features", []))
         prev_proto = dict(prev.get("protocol", {}))
         prev_schema_json = prev["schema"]
@@ -1681,11 +1669,11 @@ def _commit_manifest_unleased(
             keep_versions = int(prev["keep"])
         if constraints is None:
             # the CHECK-constraint map rides every commit once stamped
-            # (None = carry; an explicit {} drops the last one)
+            # (None = carry)
             constraints = prev.get("constraints")
         if col_mapping is None:
             # the column-mapping bookkeeping (max id + retired physical
-            # names) rides every commit once a rename/drop stamps it
+            # names) rides every commit once a rename stamps it
             col_mapping = prev.get("col_mapping")
         dvs = list(prev.get("dvs", []))
         stats_cols = prev["stats_cols"]
@@ -1752,12 +1740,12 @@ def _commit_manifest_unleased(
             c[:-4] for c in shaped.column_names if c.endswith("_min")
         ]
     if stats_cols_override is not None:
-        # a rename/drop of a stats column restates the list (the
+        # a rename of a stats column restates the list (the
         # transformed manifest's columns already match it)
         stats_cols = list(stats_cols_override)
     if schema_json is None or stats_cols is None:
         raise ValueError(
-            f"commit v{nxt} into {manifest_path} names no table schema "
+            f"commit v{nxt} into {mdir} names no table schema "
             "or stats columns — every marker carries both"
         )
     mschema = _manifest_schema(T.StructType.fromJson(schema_json), stats_cols)
@@ -1780,7 +1768,7 @@ def _commit_manifest_unleased(
         kept = mschema.empty_table()
         if committed:
             kept = _conform(
-                _reconstruct_manifest(manifest_path, committed[-1]), mschema
+                _reconstruct_manifest(mdir, committed[-1]), mschema
             )
             if removed_now:
                 kept = kept.filter(
@@ -1790,8 +1778,8 @@ def _commit_manifest_unleased(
                 )
         out = kept if out is None else pa.concat_tables([kept, out])
 
-    vdir = f"{manifest_path}/v{nxt}"
-    tmpdir = f"{manifest_path}/.v{nxt}.{_uuid.uuid4().hex[:8]}"
+    vdir = f"{mdir}/v{nxt}"
+    tmpdir = f"{mdir}/.v{nxt}.{_uuid.uuid4().hex[:8]}"
     # the write MATERIALIZES the version to a private temp dir before
     # any input (old versions) is touched and before the log is —
     # committed versions are never inputs to their own destruction, and
@@ -1812,7 +1800,7 @@ def _commit_manifest_unleased(
             # temp dir — classic optimistic-concurrency loss
             _delete(tmpdir)
             raise SnapshotConflict(
-                f"manifest at {manifest_path}: v{nxt} was committed by "
+                f"manifest at {mdir}: v{nxt} was committed by "
                 "another writer — retry from a fresh snapshot"
             )
         # a marker-less v<N> is a crashed attempt (same-driver writers
@@ -1826,7 +1814,7 @@ def _commit_manifest_unleased(
     except OSError:
         _delete(tmpdir)
         raise SnapshotConflict(
-            f"manifest at {manifest_path}: v{nxt} appeared while "
+            f"manifest at {mdir}: v{nxt} appeared while "
             "committing — another writer won; retry from a fresh snapshot"
         ) from None
     # re-verify the attempt token AFTER the rename and right before the
@@ -1838,7 +1826,7 @@ def _commit_manifest_unleased(
         mine = False
     if not mine:
         raise SnapshotConflict(
-            f"manifest at {manifest_path}: v{nxt}'s directory was "
+            f"manifest at {mdir}: v{nxt}'s directory was "
             "replaced by another writer mid-commit (stale-lease break) "
             "— retry from a fresh snapshot"
         )
@@ -1912,9 +1900,8 @@ def _commit_manifest_unleased(
     ):
         features.add("type-widening")
     lvl = max([1] + [_FEATURE_LEVELS.get(f, 1) for f in features])
-    floor_r, floor_w = protocol_floor or (1, 1)
-    min_r = max(lvl, int(prev_proto.get("min_reader", 1)), int(floor_r))
-    min_w = max(lvl, int(prev_proto.get("min_writer", 1)), int(floor_w))
+    min_r = max(lvl, int(prev_proto.get("min_reader", 1)))
+    min_w = max(lvl, int(prev_proto.get("min_writer", 1)))
     if features:
         payload["features"] = sorted(features)
     if min_r > 1 or min_w > 1:
@@ -1939,8 +1926,8 @@ def _commit_manifest_unleased(
     if oldest_wanted == nxt:
         floor = payload["base_ckpt"]
     else:
-        floor = int(_commit_info(manifest_path, oldest_wanted)["base_ckpt"])
-    for e in os.scandir(manifest_path):
+        floor = int(_commit_info(mdir, oldest_wanted)["base_ckpt"])
+    for e in os.scandir(mdir):
         if e.is_dir() and re.fullmatch(r"v\d+", e.name):
             n = int(e.name[1:])
             if n < floor or (n < nxt and n not in committed):
@@ -1948,7 +1935,7 @@ def _commit_manifest_unleased(
     return nxt
 
 
-def _sweep_removed(manifest_path: str, dry_run: bool = False) -> list[str]:
+def _sweep_removed(mdir: str, dry_run: bool = False) -> list[str]:
     """Physically delete data files whose removal the CURRENT manifest
     version committed — the ``pending`` backlog (this commit's logical
     removals plus any predecessor removals never swept).  On a
@@ -1960,10 +1947,10 @@ def _sweep_removed(manifest_path: str, dry_run: bool = False) -> list[str]:
     it (Delta's VACUUM retention, driven by ``keep_versions`` instead
     of wall-clock age).
     Idempotent; returns what it deleted."""
-    versions = _committed_versions(manifest_path)
+    versions = _committed_versions(mdir)
     if not versions:
         return []
-    commit = _commit_info(manifest_path, versions[-1])
+    commit = _commit_info(mdir, versions[-1])
     entries = commit["pending"]
     if bool(commit.get("retain", False)):
         # retained version V reads files removed at rm_v > V; a file
@@ -1982,14 +1969,14 @@ def _sweep_removed(manifest_path: str, dry_run: bool = False) -> list[str]:
     return deleted
 
 
-def _post_commit_sweep(manifest_path: str) -> list[str]:
+def _post_commit_sweep(mdir: str) -> list[str]:
     """``delete_where``'s post-commit cleanup (= ``_sweep_removed``; a
     separate name so crash-injection tests can disable JUST this half
     and exercise the recovery path)."""
-    return _sweep_removed(manifest_path)
+    return _sweep_removed(mdir)
 
 
-def _recover_txn(manifest_path: str) -> dict | None:
+def _recover_txn(mdir: str) -> dict | None:
     """Crash recovery for an interrupted transaction: its ``_TXN``
     intent marker records the planned file adds/removes and the version
     it meant to commit.  If that version committed, roll FORWARD (sweep
@@ -2024,10 +2011,10 @@ def _recover_txn(manifest_path: str) -> dict | None:
     the token and full-retries — just wasteful, which is why
     ``vacuum_table`` additionally age-floors the marker before
     recovering."""
-    tpath = f"{manifest_path}/_TXN"
+    tpath = f"{mdir}/_TXN"
     if not os.path.exists(tpath):
         return None
-    with _CommitLease(manifest_path):
+    with _CommitLease(mdir):
         if not os.path.exists(tpath):
             return None  # the other actor adjudicated while we waited
         try:
@@ -2039,10 +2026,10 @@ def _recover_txn(manifest_path: str) -> dict | None:
         except FileNotFoundError:
             return None  # its owner cleared it while we waited
         committed = txn["expected_version"] in _committed_versions(
-            manifest_path
+            mdir
         )
         if committed:
-            _sweep_removed(manifest_path)
+            _sweep_removed(mdir)
         else:
             for f in txn.get("added", []):
                 _delete(f)
@@ -2103,30 +2090,17 @@ def _clear_txn_intent(mdir: str, intent_token: str) -> None:
 
 
 def committed_schema(
-    spark: SparkSession, manifest_path: str, version: int | None = None
+    path: str, version: int | None = None
 ) -> T.StructType | None:
     """The table schema stamped into the committed snapshot (current,
     or ``version`` for time travel; every ``_COMMIT`` carries it), or
     None when that version is not committed."""
-    manifest_path = _local_path(manifest_path)
-    vs = _committed_versions(manifest_path)
+    mdir = _manifest_dir(path)
+    vs = _committed_versions(mdir)
     v = version if version is not None else (vs[-1] if vs else None)
     if v is None or v not in vs:
         return None
-    return _head_schema(_commit_info(manifest_path, v))
-
-
-def committed_partitioning(
-    spark: SparkSession, manifest_path: str
-) -> list[str] | None:
-    """The table's hive partition columns as stamped into the current
-    commit ([] = flat), or None for pre-stamp tables — writers then
-    fall back to probing the directory layout once."""
-    manifest_path = _local_path(manifest_path)
-    vs = _committed_versions(manifest_path)
-    if not vs:
-        return None
-    return _commit_info(manifest_path, vs[-1]).get("partition_by")
+    return _head_schema(_commit_info(mdir, v))
 
 
 def _detect_pcols(path: str, mdir: str) -> list[str]:
@@ -2265,7 +2239,7 @@ def _aligned(df: DataFrame, schema: T.StructType) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Column mapping (rename/drop as metadata-only commits)
+# Column mapping (rename as a metadata-only commit)
 # ---------------------------------------------------------------------------
 # Delta/Iceberg solve rename/drop with per-column IDs and PHYSICAL
 # names: data files store the physical name forever, the committed
@@ -2274,7 +2248,7 @@ def _aligned(df: DataFrame, schema: T.StructType) -> DataFrame:
 # "lake.phys") inside the schema the _COMMIT marker already stamps, so
 # every per-version schema carries its own mapping (time travel, CDC,
 # and the stream source inherit it for free).  Until the first
-# rename/drop no field carries metadata and every helper below is an
+# rename no field carries metadata and every helper below is an
 # exact no-op — pre-mapping tables keep byte-identical behavior.
 
 #: StructField metadata keys for the stable column id / physical name
@@ -2340,9 +2314,10 @@ def _ensure_mapping(
 ) -> tuple[T.StructType, dict]:
     """Assign ids + physical names to fields lacking them.  Existing
     fields keep their stamped mapping; a NEW field's physical name is
-    its logical name unless that name is in use or RETIRED (a dropped
-    column's physical name — reusing it would resurrect stale data
-    from retained files), in which case it gets an opaque
+    its logical name unless that name is in use or RETIRED (the
+    mapping's ``retired_phys`` — a dropped column's physical name, whose
+    reuse would resurrect stale data from retained files), in which
+    case it gets an opaque
     ``col_<id>_<hex>``.  Returns the mapped schema and the updated
     mapping dict ``{"max_id", "retired_phys"}`` for the commit."""
     import uuid as _uuid
@@ -2380,7 +2355,7 @@ def _ensure_mapping(
 
 
 def _rollback_conflict(
-    manifest_path: str, added: Sequence[str], intent_token: str
+    mdir: str, added: Sequence[str], intent_token: str
 ) -> None:
     """Undo a transaction that lost the optimistic-concurrency race
     AFTER moving its files into the table: delete the moved-in files
@@ -2393,7 +2368,7 @@ def _rollback_conflict(
     theirs would needlessly fail their commit's token check."""
     for f in added:
         _delete(f)
-    _clear_txn_intent(manifest_path, intent_token)
+    _clear_txn_intent(mdir, intent_token)
 
 
 def _move_files_in(planned: Sequence[tuple[str, str]]) -> list[str]:
@@ -2406,18 +2381,18 @@ def _move_files_in(planned: Sequence[tuple[str, str]]) -> list[str]:
     return [dst for _src, dst in planned]
 
 
-def _active_dvs(manifest_path: str, version: int | None = None) -> list[dict]:
+def _active_dvs(mdir: str, version: int | None = None) -> list[dict]:
     """The deletion vectors active at a committed snapshot (current, or
     ``version`` for time travel): ``[{"file", "version", "keys"}, …]``,
     carried forward by every commit until ``materialize_deletes``
     retires them.  Empty for tables that never took a merge-on-read
     write."""
     if version is None:
-        vs = _committed_versions(manifest_path)
+        vs = _committed_versions(mdir)
         if not vs:
             return []
         version = vs[-1]
-    return list(_commit_info(manifest_path, version).get("dvs", []))
+    return list(_commit_info(mdir, version).get("dvs", []))
 
 
 #: Tombstone sets at or under this many keys keep the explicit
@@ -2799,12 +2774,12 @@ def _land_commit(
             rb = None
             if rebase is not None and rebased < 20:
                 args = (
-                    spark, mdir, txn, rebase["cdf"], schema,
+                    mdir, txn, rebase["cdf"], schema,
                     rebase["constraints"], pcols, ours, rebase["cmap"],
                 )
                 rb = (
                     _rebase_tombstone(
-                        *args, read_snap, dv_keys=rebase["keys"],
+                        spark, *args, read_snap, dv_keys=rebase["keys"],
                         our_dv_files=list(sidecars),
                     )
                     if "keys" in rebase
@@ -2845,7 +2820,6 @@ def _land_commit(
 def _txn_rewrite(
     spark: SparkSession,
     path: str,
-    manifest_path: str | None,
     predicates: dict[str, tuple],
     rewrite: Callable[[DataFrame, "F.Column"], DataFrame],
     cols: Sequence[str] | None,
@@ -2871,7 +2845,7 @@ def _txn_rewrite(
     sees exactly one committed version; ``_recover_txn`` rolls the
     interrupted attempt back or forward at the next maintenance op.
     """
-    mdir = _manifest_dir(path, manifest_path)
+    mdir = _manifest_dir(path)
     # the gate's snapshot pin: the commit plans against exactly this
     # version, so an interloper committing after this point surfaces
     # as SnapshotConflict, never as a silently-merged-from-stale-
@@ -2892,7 +2866,7 @@ def _txn_rewrite(
             "skipped": True,
         }
 
-    manifest = _require_manifest(spark, mdir)
+    manifest = _require_manifest(mdir)
     ranges, hit = _pred_parts(predicates)
     # candidates default to manifest-pruned files; an explicit list
     # (compaction picks by SIZE, not by value span) must still be
@@ -3077,7 +3051,6 @@ def _txn_rewrite(
 def _delete_mor(
     spark: SparkSession,
     path: str,
-    manifest_path: str | None,
     predicates: dict[str, tuple],
     keys: Sequence[str],
     keep_versions: int | None = None,
@@ -3103,7 +3076,7 @@ def _delete_mor(
     delete change rows."""
     import uuid
 
-    mdir = _manifest_dir(path, manifest_path)
+    mdir = _manifest_dir(path)
     snap_v, head = _open_txn(mdir, f"delete_where (merge-on-read) {path}")
     ledger = {
         "files_total": None,
@@ -3118,7 +3091,7 @@ def _delete_mor(
     if _txn_replayed(head, txn):
         return ledger
 
-    manifest = _require_manifest(spark, mdir)
+    manifest = _require_manifest(mdir)
     dvs = list(head.get("dvs", []))
     keys = list(keys)
     _guard_dv_keys(dvs, keys, "delete")
@@ -3204,7 +3177,7 @@ def _delete_mor(
             return {
                 **ledger,
                 "skipped": True,
-                "version": manifest_version(spark, mdir),
+                "version": _head_version(mdir),
             }
         ledger.update(
             {
@@ -3223,7 +3196,6 @@ def _delete_mor(
 def delete_where(
     spark: SparkSession,
     path: str,
-    manifest_path: str | None,
     predicates: dict[str, tuple],
     cols: Sequence[str] | None = None,
     keep_versions: int | None = None,
@@ -3253,11 +3225,12 @@ def delete_where(
     construction), with recovery at the next maintenance op.
     Crash-injection-tested on both sides of the commit point.
 
-    ``manifest_path`` None uses the in-table default; ``cols`` (stats
-    columns for the refresh) default to the manifest's own ``*_min``
-    columns.  Returns the ledger: files_total, files_rewritten,
-    files_added, rows_deleted, rows_before, rows_after, partitioned,
-    version.
+    ``predicates`` must be a dict (``{}`` matches every row); anything
+    else raises ``TypeError`` rather than reading as "no predicate".
+    ``cols`` (stats columns for the refresh) default to the manifest's
+    own ``*_min`` columns.  Returns the ledger: files_total,
+    files_rewritten, files_added, rows_deleted, rows_before, rows_after,
+    partitioned, version.
 
     ``strategy='merge-on-read'`` (requires ``keys`` — unique-row keys,
     the ``merge_into`` contract) removes the write amplification for
@@ -3281,6 +3254,7 @@ def delete_where(
     after a read-validate.  See ``_rebase_tombstone`` for the exact
     commute/retry split.
     """
+    _require_predicates(predicates, "delete_where")
     if strategy not in ("copy-on-write", "merge-on-read"):
         raise ValueError(f"unknown delete strategy {strategy!r}")
     if strategy == "merge-on-read":
@@ -3290,13 +3264,12 @@ def delete_where(
                 "the tombstone suppresses rows BY KEY"
             )
         return _delete_mor(
-            spark, path, manifest_path, predicates, keys,
+            spark, path, predicates, keys,
             keep_versions=keep_versions, txn=txn,
         )
     ledger = _txn_rewrite(
         spark,
         path,
-        manifest_path,
         predicates,
         lambda touched, hit: touched.filter(~hit),
         cols,
@@ -3326,7 +3299,6 @@ def delete_where(
 def _update_mor(
     spark: SparkSession,
     path: str,
-    manifest_path: str | None,
     predicates: dict[str, tuple],
     resolved: dict[str, "F.Column"],
     keys: Sequence[str],
@@ -3342,7 +3314,7 @@ def _update_mor(
     ts-clustered 100 TB table writes O(matched rows), not the touched
     files.  Same key-uniqueness contract as ``merge_into``; CDC tables
     get update pre/postimages from the merge engine."""
-    mdir = _manifest_dir(path, manifest_path)
+    mdir = _manifest_dir(path)
     snap_v, head = _open_txn(
         mdir, f"update_where (merge-on-read) {path}"
     )
@@ -3358,7 +3330,7 @@ def _update_mor(
     }
     if _txn_replayed(head, txn):
         return skipped_ledger
-    manifest = _require_manifest(spark, mdir)
+    manifest = _require_manifest(mdir)
     keys = list(keys)
     dvs = list(head.get("dvs", []))
     _guard_dv_keys(dvs, keys, "update")
@@ -3382,7 +3354,7 @@ def _update_mor(
         }
     )
     led = merge_into.__wrapped__(
-        spark, src, path, keys, manifest_path=manifest_path,
+        spark, src, path, keys,
         mode="update", txn=txn, keep_versions=keep_versions,
         strategy="merge-on-read", op="update (merge-on-read)",
     )
@@ -3401,7 +3373,6 @@ def _update_mor(
 def update_where(
     spark: SparkSession,
     path: str,
-    manifest_path: str | None,
     predicates: dict[str, tuple],
     set_exprs: dict[str, "F.Column | str"],
     cols: Sequence[str] | None = None,
@@ -3434,8 +3405,10 @@ def update_where(
     in exact serial order (tombstone keeps its read-snapshot stamp —
     winner appends survive even when they match the predicate), where
     Delta raises ConcurrentAppendException; see ``delete_where`` for
-    the full note.
+    the full note.  ``predicates`` must be a dict, as for
+    ``delete_where``.
     """
+    _require_predicates(predicates, "update_where")
     resolved = {
         c: (F.expr(e) if isinstance(e, str) else e)
         for c, e in set_exprs.items()
@@ -3452,7 +3425,7 @@ def update_where(
                 "the updated rows re-land BY KEY over a tombstone"
             )
         return _update_mor(
-            spark, path, manifest_path, predicates, resolved, keys,
+            spark, path, predicates, resolved, keys,
             keep_versions=keep_versions, txn=txn,
         )
 
@@ -3486,7 +3459,7 @@ def update_where(
         )
 
     ledger = _txn_rewrite(
-        spark, path, manifest_path, predicates, _apply, cols,
+        spark, path, predicates, _apply, cols,
         count_matched=True, keep_versions=keep_versions, txn=txn,
         changes_fn=_cdc,
         op="update",
@@ -3500,7 +3473,6 @@ def update_where(
 def update_stats_index(
     spark: SparkSession,
     path: str,
-    manifest_path: str | None = None,
     cols: Sequence[str] | None = None,
     keep_versions: int | None = None,
 ) -> dict:
@@ -3522,21 +3494,20 @@ def update_stats_index(
     known-removed history, not new ingest), so the "unknown file on
     disk == new ingest" rule never resurrects deleted data.
 
-    ``manifest_path`` None uses the in-table default
-    (``<path>/_stats_manifest``).  ``cols`` defaults to the stats
-    columns the existing manifest already carries (required on the
-    first build).
+    The manifest is the table's log, ``lake_log.manifest_dir(path)``.
+    ``cols`` defaults to the stats columns the existing manifest
+    already carries (required on the first build).
 
     First call (no manifest yet) degrades to a full build, and its
     commit stamps the adopted footers' schema.  Returns a
     ledger: files_total, files_new, files_removed, files_carried,
     version.
     """
-    mdir = _manifest_dir(path, manifest_path)
+    mdir = _manifest_dir(path)
     snap_v, head = _open_txn(mdir, f"update_stats_index {path}")
     current = [f for _rel, f, _ln in _leaf_files(path)]
     expected = (snap_v if snap_v is not None else -1) + 1
-    old = current_manifest(spark, mdir)
+    old = current_manifest(path)
 
     if old is None:
         if cols is None:
@@ -3610,7 +3581,6 @@ def read_table(
     spark: SparkSession,
     path: str,
     predicates: dict | None = None,
-    manifest_path: str | None = None,
     version: int | None = None,
     as_of_timestamp: float | None = None,
 ) -> DataFrame:
@@ -3658,22 +3628,20 @@ def read_table(
     the data files.
     """
     ranges, cond = _pred_parts(predicates)
-    mdir = _manifest_dir(path, manifest_path)
+    mdir = _manifest_dir(path)
     if as_of_timestamp is not None:
         if version is not None:
             raise ValueError(
                 "read_table: version and as_of_timestamp are mutually "
                 "exclusive"
             )
-        version = version_at_timestamp(
-            spark, path, as_of_timestamp, manifest_path
-        )
+        version = version_at_timestamp(path, as_of_timestamp)
     if version is None:
         # pin ONE committed snapshot for the whole read — resolving
         # manifest/schema/deletion-vectors independently would let a
         # concurrent merge-on-read commit land between them and apply
         # NEWER tombstones against the OLDER file list (keys vanish)
-        version = manifest_version(spark, mdir)
+        version = _head_version(mdir)
         if version is None:
             return spark.read.parquet(path).filter(cond)
     elif version not in _committed_versions(mdir):
@@ -3706,22 +3674,7 @@ def read_table(
     return out.select(*schema.fieldNames()).filter(cond)
 
 
-def last_committed_txn(
-    spark: SparkSession, manifest_path: str, app_id: str
-) -> int | None:
-    """The highest batch id ``app_id`` has committed into the manifest
-    (the txn map carries forward across every commit), or None — the
-    idempotence check a replayed streaming micro-batch consults."""
-    manifest_path = _local_path(manifest_path)
-    vs = _committed_versions(manifest_path)
-    if not vs:
-        return None
-    got = _commit_info(manifest_path, vs[-1]).get("txns", {}).get(str(app_id))
-    return int(got) if got is not None else None
-
-
 def _rebase_append(
-    spark: SparkSession,
     mdir: str,
     txn: tuple[str, int] | None,
     planned_cdf: bool,
@@ -3761,7 +3714,7 @@ def _rebase_append(
     The merged schema is the winner's stamped schema evolved with
     ours (add-only union), so re-committing cannot un-stamp columns
     the winner added."""
-    snap = manifest_version(spark, mdir)
+    snap = _head_version(mdir)
     if snap is None:  # the whole log vanished — full retry
         return None
     if not all(os.path.exists(f) for f in our_files):
@@ -3840,7 +3793,7 @@ def _rebase_tombstone(
     postimages our predicate never saw, materialize, restore) forces
     the full retry — Delta's ConcurrentDeleteRead / ConcurrentAppend
     split under WriteSerializable."""
-    snap = manifest_version(spark, mdir)
+    snap = _head_version(mdir)
     if snap is None:
         return None
     winner_tombs: list[dict] = []
@@ -3915,7 +3868,7 @@ def _rebase_tombstone(
         ):
             return None
     return _rebase_append(
-        spark, mdir, txn, planned_cdf, our_schema, checked_constraints,
+        mdir, txn, planned_cdf, our_schema, checked_constraints,
         our_pcols, our_files, planned_cmap=planned_cmap,
     )
 
@@ -3925,7 +3878,6 @@ def append_files(
     spark: SparkSession,
     df: DataFrame,
     path: str,
-    manifest_path: str | None = None,
     cols: Sequence[str] | None = None,
     txn: tuple[str, int] | None = None,
     keep_versions: int | None = None,
@@ -3980,7 +3932,7 @@ def append_files(
     version, skipped, rebased (commit re-attempts that reused the
     written files).
     """
-    mdir = _manifest_dir(path, manifest_path)
+    mdir = _manifest_dir(path)
     # ONE listing + ONE head-marker read (the protocol gate's) serve
     # the whole transaction: snapshot pin, txn idempotence, stats
     # columns, schema, and the partition layout all ride the same JSON
@@ -4116,7 +4068,7 @@ def append_files(
         return {
             "rows": 0,
             "files_added": 0,
-            "version": manifest_version(spark, mdir),
+            "version": _head_version(mdir),
             "skipped": True,
         }
     return {
@@ -4134,7 +4086,6 @@ def merge_into(
     source: DataFrame,
     path: str,
     keys: Sequence[str],
-    manifest_path: str | None = None,
     mode: str = "update",
     cols: Sequence[str] | None = None,
     txn: tuple[str, int] | None = None,
@@ -4213,7 +4164,7 @@ def merge_into(
             "which is exactly what merge-on-read avoids"
         )
     keys = list(keys)
-    mdir = _manifest_dir(path, manifest_path)
+    mdir = _manifest_dir(path)
     # ONE listing + ONE head-marker read (the protocol gate's) serve
     # the whole transaction: snapshot pin, txn idempotence, schema,
     # partition columns, active deletion vectors, and the cdf flag all
@@ -4228,7 +4179,7 @@ def merge_into(
             "skipped": True,
         }
 
-    manifest = _require_manifest(spark, mdir)
+    manifest = _require_manifest(mdir)
     if cols is None:
         cols = head["stats_cols"]
 
@@ -4491,7 +4442,7 @@ def merge_into(
         if landed is None:
             return {
                 **ledger,
-                "version": manifest_version(spark, mdir),
+                "version": _head_version(mdir),
                 "skipped": True,
             }
 
@@ -4550,7 +4501,6 @@ def retry_on_conflict(fn, attempts: int = 5, base_delay_s: float = 0.05):
 def compact_table(
     spark: SparkSession,
     path: str,
-    manifest_path: str | None = None,
     target_bytes: int = 128 * 1024 * 1024,
     small_bytes: int | None = None,
     cols: Sequence[str] | None = None,
@@ -4584,9 +4534,9 @@ def compact_table(
     ``rows_before == rows_after`` is part of the returned ledger and
     the tests.
     """
-    mdir = _manifest_dir(path, manifest_path)
+    mdir = _manifest_dir(path)
     root = _local_path(path)
-    pcols = committed_partitioning(spark, mdir) or []
+    pcols = _detect_pcols(path, mdir)
     # candidates are the head snapshot's live files: the files a
     # retain_removed table keeps on disk for time travel are history,
     # not small files to re-pack
@@ -4595,7 +4545,7 @@ def compact_table(
             _file_size(f),
             tuple(_dir_value(os.path.relpath(f, root), c) for c in pcols),
         )
-        for f in prune_files(_require_manifest(spark, mdir), {})
+        for f in prune_files(_require_manifest(mdir), {})
     }
     small = [
         f
@@ -4615,7 +4565,7 @@ def compact_table(
             "rows_before": None,
             "rows_after": None,
             "partitioned": False,
-            "version": manifest_version(spark, mdir),
+            "version": _head_version(mdir),
             "bytes_in": int(bytes_in),
         }
     # a flat table is one "partition" () whose budget is the file count
@@ -4658,7 +4608,6 @@ def compact_table(
     ledger = _txn_rewrite(
         spark,
         path,
-        manifest_path,
         {},
         _relayout,
         cols,
@@ -4684,7 +4633,6 @@ def cluster_table(
     spark: SparkSession,
     path: str,
     keys: Sequence[str],
-    manifest_path: str | None = None,
     target_bytes: int = 128 * 1024 * 1024,
     zorder: bool = False,
     n_buckets: int = 16,
@@ -4731,17 +4679,15 @@ def cluster_table(
     heuristic, not a correctness input.  Returns the rewrite ledger
     plus the clustering spec."""
     keys = list(keys)
-    mdir = _manifest_dir(path, manifest_path)
-    manifest = _require_manifest(spark, mdir)
+    mdir = _manifest_dir(path)
+    manifest = _require_manifest(mdir)
     cand = prune_files(manifest, {})  # the full committed file list
     n_out, bytes_in = _target_files(cand, target_bytes)
 
     # z-order quantile cuts from the current snapshot (key columns only)
     cuts = (
         _quantile_cuts(
-            read_table(spark, path, manifest_path=manifest_path).select(
-                *keys
-            ),
+            read_table(spark, path).select(*keys),
             keys,
             int(n_buckets),
             rel_err,
@@ -4752,7 +4698,6 @@ def cluster_table(
     ledger = _txn_rewrite(
         spark,
         path,
-        manifest_path,
         {},
         lambda touched, _hit: _clustered(
             touched, keys, n_out, cuts, n_buckets
@@ -4789,7 +4734,6 @@ def cluster_table(
 def materialize_deletes(
     spark: SparkSession,
     path: str,
-    manifest_path: str | None = None,
     cols: Sequence[str] | None = None,
     keep_versions: int | None = None,
     target_bytes: int = 128 * 1024 * 1024,
@@ -4809,7 +4753,7 @@ def materialize_deletes(
     empty change set, like compaction.  Returns a ledger:
     files_rewritten, files_added, rows_suppressed, dv_files_removed,
     version."""
-    mdir = _manifest_dir(path, manifest_path)
+    mdir = _manifest_dir(path)
     snap_v, head = _open_txn(mdir, f"materialize_deletes {path}")
     dvs = _active_dvs(mdir, version=snap_v)
     ledger = {
@@ -4821,7 +4765,7 @@ def materialize_deletes(
     }
     if not dvs:
         return ledger
-    manifest = current_manifest(spark, mdir)
+    manifest = current_manifest(path)
     if cols is None:
         cols = head["stats_cols"]
     keys = list(dvs[0]["keys"])
@@ -4914,7 +4858,6 @@ def restore_table(
     spark: SparkSession,
     path: str,
     version: int | None = None,
-    manifest_path: str | None = None,
     keep_versions: int | None = None,
     as_of_timestamp: float | None = None,
 ) -> dict:
@@ -4938,16 +4881,14 @@ def restore_table(
     exactly one of ``version``/``as_of_timestamp`` is required.
     Returns a ledger: version, restored_to, files_removed,
     files_readded."""
-    mdir = _manifest_dir(path, manifest_path)
+    mdir = _manifest_dir(path)
     if (version is None) == (as_of_timestamp is None):
         raise ValueError(
             "restore_table: exactly one of version / as_of_timestamp "
             "is required"
         )
     if as_of_timestamp is not None:
-        version = version_at_timestamp(
-            spark, path, as_of_timestamp, manifest_path
-        )
+        version = version_at_timestamp(path, as_of_timestamp)
     _open_txn(mdir, f"restore_table {path}")
     versions = _committed_versions(mdir)
     if version not in versions:
@@ -4998,27 +4939,12 @@ def restore_table(
     }
 
 
-def table_constraints(
-    spark: SparkSession, path: str, manifest_path: str | None = None
-) -> dict[str, str]:
-    """The table's CHECK-constraint map (name → SQL boolean expr) as
-    stamped into the current commit — carried forward by every
-    transaction, enforced on every write path (append / merge both
-    strategies / rewrite)."""
-    mdir = _manifest_dir(path, manifest_path)
-    v = manifest_version(spark, mdir)
-    if v is None:
-        return {}
-    return dict(_commit_info(mdir, v).get("constraints") or {})
-
-
 @_locked
 def add_table_constraint(
     spark: SparkSession,
     path: str,
     name: str,
     expr: str,
-    manifest_path: str | None = None,
     keep_versions: int | None = None,
 ) -> dict:
     """ALTER TABLE ... ADD CONSTRAINT ``name`` CHECK (``expr``) on a
@@ -5032,7 +4958,7 @@ def add_table_constraint(
     only when the expression is FALSE — enforce presence with an
     explicit ``col IS NOT NULL``.  Returns a ledger: version,
     constraints."""
-    mdir = _manifest_dir(path, manifest_path)
+    mdir = _manifest_dir(path)
     snap_v, head = _open_txn(
         mdir, f"add_table_constraint {path}", require=True
     )
@@ -5040,10 +4966,10 @@ def add_table_constraint(
     if name in cons and cons[name] != expr:
         raise ValueError(
             f"constraint {name!r} already exists with a different "
-            f"expression ({cons[name]!r}) — drop it first"
+            f"expression ({cons[name]!r})"
         )
     bad = (
-        read_table(spark, path, manifest_path=manifest_path)
+        read_table(spark, path)
         .filter(~F.coalesce(F.expr(expr), F.lit(True)))
         .limit(1)
         .count()
@@ -5060,36 +4986,6 @@ def add_table_constraint(
         keep_versions=keep_versions,
         constraints=cons,
         op=f"add-constraint ({name})",
-    )
-    return {"version": int(version), "constraints": cons}
-
-
-@_locked
-def drop_table_constraint(
-    spark: SparkSession,
-    path: str,
-    name: str,
-    manifest_path: str | None = None,
-    keep_versions: int | None = None,
-) -> dict:
-    """ALTER TABLE ... DROP CONSTRAINT: removes ``name`` from the
-    carried constraint map as a metadata-only commit (missing name is
-    a no-op commit-free return, mirroring IF EXISTS)."""
-    mdir = _manifest_dir(path, manifest_path)
-    snap_v, head = _open_txn(
-        mdir, f"drop_table_constraint {path}", require=True
-    )
-    cons = dict(head.get("constraints") or {})
-    if name not in cons:
-        return {"version": int(snap_v), "constraints": cons}
-    del cons[name]
-    version = _commit_manifest(
-        spark, mdir, None, removed=[],
-        expected_version=snap_v + 1,
-        keep_versions=keep_versions,
-        # an explicit {} (vs None = carry) drops the last one
-        constraints=cons,
-        op=f"drop-constraint ({name})",
     )
     return {"version": int(version), "constraints": cons}
 
@@ -5133,14 +5029,14 @@ def _guard_mapped_ddl(
     col: str,
     op: str,
 ) -> None:
-    """Refuse a rename/drop of a column other machinery references by
+    """Refuse a rename of a column other machinery references by
     NAME: hive partition columns (the directory layout encodes the
     name), active deletion-vector keys (tombstone files and the
     carried dv list store it), and CHECK-constraint expressions (the
     stored SQL would stop resolving — references resolved by the SQL
     analyzer via ``_constraint_references``, so a name inside a string
-    literal does not block a legal rename).  Each refusal names the
-    unblocking op."""
+    literal does not block a legal rename).  Each refusal names what
+    blocks it."""
     pby = head.get("partition_by") or []
     if col in pby:
         raise ValueError(
@@ -5159,7 +5055,7 @@ def _guard_mapped_ddl(
             raise ValueError(
                 f"cannot {op} {col!r}: CHECK constraint {cname!r} "
                 f"({expr}) references it (resolved by the SQL "
-                "analyzer) — drop the constraint first"
+                "analyzer)"
             )
 
 
@@ -5169,7 +5065,6 @@ def rename_column(
     path: str,
     old: str,
     new: str,
-    manifest_path: str | None = None,
     keep_versions: int | None = None,
 ) -> dict:
     """ALTER TABLE ... RENAME COLUMN as a METADATA-ONLY commit (Delta/
@@ -5188,7 +5083,7 @@ def rename_column(
     Renaming a partition column, an active DV key, or a constraint-
     referenced column refuses with the unblocking op
     (``_guard_mapped_ddl``).  Returns {version, renamed}."""
-    mdir = _manifest_dir(path, manifest_path)
+    mdir = _manifest_dir(path)
     snap_v, head = _open_txn(
         mdir, f"column DDL {path}", require=True
     )
@@ -5239,70 +5134,9 @@ def rename_column(
     return {"version": int(version), "renamed": [old, new]}
 
 
-@_locked
-def drop_column(
-    spark: SparkSession,
-    path: str,
-    name: str,
-    manifest_path: str | None = None,
-    keep_versions: int | None = None,
-) -> dict:
-    """ALTER TABLE ... DROP COLUMN as a METADATA-ONLY commit: the
-    field leaves the committed schema and its PHYSICAL name is
-    RETIRED (recorded in the carried column-mapping bookkeeping), so
-    no data file is touched and a later re-add of the same logical
-    name gets a fresh physical name — old files' stale values can
-    never resurrect under the new column.  Time travel still serves
-    pre-drop snapshots WITH the column (their stamped schemas keep
-    it).  Same guards as ``rename_column``.  Returns
-    {version, dropped}."""
-    mdir = _manifest_dir(path, manifest_path)
-    snap_v, head = _open_txn(
-        mdir, f"column DDL {path}", require=True
-    )
-    schema = _head_schema(head)
-    names = [f.name for f in schema.fields]
-    if name not in names:
-        raise ValueError(f"no column {name!r} in {path}")
-    if len(names) == 1:
-        raise ValueError("cannot drop a table's only column")
-    _guard_mapped_ddl(spark, head, schema, name, "drop")
-    mapped, cmap = _ensure_mapping(
-        schema, head.get("col_mapping") or {}
-    )
-    dropped_field = next(f for f in mapped.fields if f.name == name)
-    cmap["retired_phys"] = sorted(
-        set(cmap.get("retired_phys", []))
-        | {_field_phys(dropped_field)}
-    )
-    remaining = T.StructType(
-        [f for f in mapped.fields if f.name != name]
-    )
-    stats_cols = list(head["stats_cols"])
-    restore = None
-    stats_override = None
-    if name in stats_cols:
-        restore = _reconstruct_manifest(mdir, snap_v).drop_columns(
-            [f"{name}_min", f"{name}_max"]
-        )
-        stats_override = [c for c in stats_cols if c != name]
-    version = _commit_manifest(
-        spark, mdir, None, removed=[],
-        expected_version=snap_v + 1,
-        keep_versions=keep_versions,
-        table_schema=remaining.jsonValue(),
-        col_mapping=cmap,
-        restore_manifest=restore,
-        stats_cols_override=stats_override,
-        op=f"drop column ({name})",
-    )
-    return {"version": int(version), "dropped": name}
-
-
 def maintain_table(
     spark: SparkSession,
     path: str,
-    manifest_path: str | None = None,
     target_bytes: int = 128 * 1024 * 1024,
     dv_files_threshold: int = 8,
     dv_rows_threshold: int = 1_000_000,
@@ -5334,8 +5168,8 @@ def maintain_table(
     Returns an action ledger: the observed ``dv_files``/``dv_rows``
     debt, each step's own ledger (or None where skipped/no-op).  All
     knobs pass through to the underlying ops."""
-    mdir = _manifest_dir(path, manifest_path)
-    if manifest_version(spark, mdir) is None:
+    mdir = _manifest_dir(path)
+    if _head_version(mdir) is None:
         raise ValueError(
             f"no committed snapshot at {mdir} — create the table with "
             "append_files first"
@@ -5354,7 +5188,7 @@ def maintain_table(
     actions["dv_rows"] = debt_rows
     actions["materialize"] = (
         materialize_deletes(
-            spark, path, manifest_path, cols=cols,
+            spark, path, cols=cols,
             keep_versions=keep_versions, target_bytes=target_bytes,
         )
         if dvs
@@ -5366,7 +5200,7 @@ def maintain_table(
     )
     actions["compact"] = (
         compact_table(
-            spark, path, manifest_path, target_bytes=target_bytes,
+            spark, path, target_bytes=target_bytes,
             small_bytes=target_bytes, cols=cols,
             keep_versions=keep_versions,
         )
@@ -5374,66 +5208,14 @@ def maintain_table(
         else None
     )
     actions["vacuum"] = (
-        vacuum_table(spark, path, manifest_path, min_age_s=min_age_s)
+        vacuum_table(path, min_age_s=min_age_s)
         if vacuum
         else None
     )
     return actions
 
 
-@_locked
-def upgrade_table_protocol(
-    spark: SparkSession,
-    path: str,
-    min_reader: int | None = None,
-    min_writer: int | None = None,
-    manifest_path: str | None = None,
-    keep_versions: int | None = None,
-) -> dict:
-    """Explicitly RAISE the table's protocol floor as a metadata-only
-    commit (Delta's ALTER TABLE upgrade): an operator locks older
-    builds out BEFORE a migration starts using level-N features,
-    instead of mid-migration when the first feature commit lands.
-    Levels only ever increase (requests at or below the current stamp
-    are a commit-free no-op), and a request ABOVE this build's own
-    supported level refuses — a writer must understand what it stamps.
-    Returns {version, protocol}."""
-    want_r = int(min_reader) if min_reader is not None else 1
-    want_w = int(min_writer) if min_writer is not None else 1
-    if want_r > _SUPPORTED_READER or want_w > _SUPPORTED_WRITER:
-        raise ValueError(
-            f"cannot upgrade to reader {want_r} / writer {want_w}: this "
-            f"build supports {_SUPPORTED_READER}/{_SUPPORTED_WRITER}"
-        )
-    mdir = _manifest_dir(path, manifest_path)
-    snap_v, head = _open_txn(
-        mdir, f"upgrade_table_protocol {path}", require=True
-    )
-    cur = dict(head.get("protocol") or {})
-    cur_r = int(cur.get("min_reader", 1))
-    cur_w = int(cur.get("min_writer", 1))
-    if want_r <= cur_r and want_w <= cur_w:
-        return {
-            "version": int(snap_v),
-            "protocol": {"min_reader": cur_r, "min_writer": cur_w},
-        }
-    version = _commit_manifest(
-        spark, mdir, None, removed=[],
-        expected_version=snap_v + 1,
-        keep_versions=keep_versions,
-        protocol_floor=(want_r, want_w),
-        op=f"upgrade-protocol ({want_r}/{want_w})",
-    )
-    return {
-        "version": int(version),
-        "protocol": {
-            "min_reader": max(want_r, cur_r),
-            "min_writer": max(want_w, cur_w),
-        },
-    }
-
-
-def table_history(spark: SparkSession, path: str, manifest_path: str | None = None) -> list[dict]:
+def table_history(path: str) -> list[dict]:
     """Commit history of a manifest-tracked table (DESCRIBE HISTORY
     analog): one dict per RETAINED committed version — version number,
     commit kind (checkpoint/delta), file/row totals from the
@@ -5442,7 +5224,7 @@ def table_history(spark: SparkSession, path: str, manifest_path: str | None = No
     Bounded by the retained checkpoint chains (``keep_versions`` floor
     — the delta run since the last checkpoint stays readable); the
     full audit trail a deployment keeps by raising ``keep_versions``."""
-    mdir = _manifest_dir(path, manifest_path)
+    mdir = _manifest_dir(path)
     out = []
     for v in _committed_versions(mdir):
         commit = _commit_info(mdir, v)
@@ -5484,9 +5266,7 @@ def table_history(spark: SparkSession, path: str, manifest_path: str | None = No
 
 @_locked
 def vacuum_table(
-    spark: SparkSession,
     path: str,
-    manifest_path: str | None = None,
     min_age_s: float | None = None,
     dry_run: bool = False,
 ) -> list[str]:
@@ -5516,7 +5296,7 @@ def vacuum_table(
     stale temp siblings, orphaned sidecars — WITHOUT deleting
     anything, and without running intent recovery (recovery mutates;
     a dry run must be a pure listing)."""
-    mdir = _manifest_dir(path, manifest_path)
+    mdir = _manifest_dir(path)
     age_floor_s = _LEASE_TTL_S if min_age_s is None else float(min_age_s)
     removed: list[str] = []
     # a table stamped beyond this build's feature level may
@@ -5604,7 +5384,6 @@ def table_changes(
     spark: SparkSession,
     path: str,
     since_version: int | None = None,
-    manifest_path: str | None = None,
     change_feed: bool = False,
     since_timestamp: float | None = None,
 ) -> DataFrame:
@@ -5637,16 +5416,14 @@ def table_changes(
     to the snapshot current at that instant, i.e. changes strictly
     AFTER it.  Rows come back under the CURRENT committed schema
     (evolved columns null-fill for pre-evolution files)."""
-    mdir = _manifest_dir(path, manifest_path)
+    mdir = _manifest_dir(path)
     if (since_version is None) == (since_timestamp is None):
         raise ValueError(
             "table_changes: exactly one of since_version / "
             "since_timestamp is required"
         )
     if since_timestamp is not None:
-        since_version = version_at_timestamp(
-            spark, path, since_timestamp, manifest_path
-        )
+        since_version = version_at_timestamp(path, since_timestamp)
     versions = _committed_versions(mdir)
     if since_version not in versions:
         raise ValueError(
@@ -5722,95 +5499,10 @@ def table_changes(
     return _read_files(spark, new_files, schema, base_path=path)
 
 
-def start_lake_merge_stream(
-    stream_df: DataFrame,
-    path: str,
-    keys: Sequence[str],
-    checkpoint_dir: str,
-    manifest_path: str | None = None,
-    mode: str = "update",
-    cols: Sequence[str] | None = None,
-    app_id: str = "lake_merge",
-    available_now: bool = True,
-    maintain_every: int | None = None,
-    maintain_kwargs: dict | None = None,
-    on_maintain: "Callable[[dict], None] | None" = None,
-):
-    """Streaming keyed upsert through the snapshot log — the streaming
-    half of ``merge_into``, completing the unification the reference's
-    dumper does per batch (keyed DO NOTHING / DO UPDATE,
-    src/dumper/postgres.rs:41-92): a checkpointed ``foreachBatch``
-    where every micro-batch lands as ONE txn-stamped merge commit, so
-    a checkpoint replay after a crash is a no-op (exactly-once keyed
-    upsert on bare parquet) and a snapshot reader sees each batch's
-    merge entirely or not yet.
-
-    The first batch on an empty table seeds it (``append_files`` —
-    ``cols`` is required then, as the stats columns).  Micro-batches
-    must be key-unique (Delta's MERGE contract; dedup upstream with
-    keep-last — ``operators/relational.py`` D1/D3 — as the reference's
-    in-batch dedup does, etl_result.rs:205-248).
-
-    ``maintain_every``/``maintain_kwargs``: the in-band maintenance
-    cadence (see ``start_lake_append_stream``) — for a merge-on-read
-    stream this is also what keeps the tombstone debt materialized at
-    the thresholds instead of growing until an external REORG.
-    ``on_maintain`` (optional) receives each in-band maintenance
-    ledger — wire it to the monitoring tier
-    (``streaming.monitor.record_maintenance``) so an operator can SEE
-    that the stream is bounding its own debt."""
-
-    def _process(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():  # e.g. a final watermark-commit batch
-            return
-        sp = batch.sparkSession
-        mdir = _manifest_dir(path, manifest_path)
-        if manifest_version(sp, mdir) is None:
-            append_files(
-                sp, batch, path, manifest_path=manifest_path, cols=cols,
-                txn=(app_id, int(batch_id)),
-            )
-        else:
-            merge_into(
-                sp, batch, path, keys=list(keys),
-                manifest_path=manifest_path, mode=mode, cols=cols,
-                txn=(app_id, int(batch_id)),
-            )
-        if maintain_every and (int(batch_id) + 1) % int(maintain_every) == 0:
-            # maintenance losing a race to ANOTHER maintenance actor
-            # (the two-actor deployment: an external cron maintain/
-            # vacuum on the same table) must not kill the stream —
-            # every step is idempotent and converging, so the bounded
-            # retry is always the right response here
-            actions = retry_on_conflict(
-                lambda: maintain_table(
-                    sp, path, manifest_path, **(maintain_kwargs or {})
-                )
-            )
-            if on_maintain is not None:
-                on_maintain(
-                    {
-                        "batch_id": int(batch_id),
-                        "version": manifest_version(sp, mdir),
-                        "actions": actions,
-                    }
-                )
-
-    writer = (
-        stream_df.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
 def start_lake_append_stream(
     stream_df: DataFrame,
     path: str,
     checkpoint_dir: str,
-    manifest_path: str | None = None,
     cols: Sequence[str] | None = None,
     app_id: str = "lake_append",
     available_now: bool = True,
@@ -5848,28 +5540,25 @@ def start_lake_append_stream(
             batch.sparkSession,
             batch,
             path,
-            manifest_path=manifest_path,
             cols=cols,
             txn=(app_id, int(batch_id)),
         )
         if maintain_every and (int(batch_id) + 1) % int(maintain_every) == 0:
-            # see start_lake_merge_stream: a maintenance-vs-maintenance
-            # race (external cron actor) retries instead of failing
-            # the stream — idempotent, converging
+            # maintenance losing a race to ANOTHER maintenance actor
+            # (the two-actor deployment: an external cron maintain/
+            # vacuum on the same table) must not kill the stream —
+            # every step is idempotent and converging, so the bounded
+            # retry is always the right response here
             actions = retry_on_conflict(
                 lambda: maintain_table(
-                    batch.sparkSession, path, manifest_path,
-                    **(maintain_kwargs or {}),
+                    batch.sparkSession, path, **(maintain_kwargs or {})
                 )
             )
             if on_maintain is not None:
                 on_maintain(
                     {
                         "batch_id": int(batch_id),
-                        "version": manifest_version(
-                            batch.sparkSession,
-                            _manifest_dir(path, manifest_path),
-                        ),
+                        "version": manifest_version(path),
                         "actions": actions,
                     }
                 )

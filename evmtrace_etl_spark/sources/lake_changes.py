@@ -50,18 +50,12 @@ from ..lake_log import (
     dir_value,
     file_size,
     local_path,
+    manifest_dir,
     py_cast,
 )
 
 #: format name under which the source registers
 FORMAT_NAME = "lake_changes"
-
-
-def _mdir(options: dict) -> str:
-    override = options.get("manifest")
-    if override:
-        return local_path(override)
-    return local_path(options["path"]) + "/_stats_manifest"
 
 
 # ---------------------------------------------------------------------------
@@ -113,7 +107,7 @@ class LakeChangesStreamReader(DataSourceStreamReader):
     def __init__(self, schema: T.StructType, options: dict):
         self._schema = schema
         self._options = dict(options)
-        self._mdir = _mdir(self._options)
+        self._mdir = manifest_dir(self._options["path"])
         self._cdf = (
             str(self._options.get("change_feed", "false")).lower() == "true"
         )
@@ -360,18 +354,18 @@ class LakeChangesStreamReader(DataSourceStreamReader):
 
 class LakeChangesDataSource(DataSource):
     """``spark.readStream.format("lake_changes").option("path", tbl)``
-    — options: ``path`` (the table), ``manifest`` (override the log
-    dir), ``starting_version`` (default 0 = from table creation),
-    ``change_feed`` (serve row-level CDC with ``_change_type`` /
-    ``_commit_version``), ``partition_cols`` (comma list; defaults to
-    the commit marker's stamp)."""
+    — options: ``path`` (the table; its log is
+    ``lake_log.manifest_dir(path)``), ``starting_version`` (default 0 =
+    from table creation), ``change_feed`` (serve row-level CDC with
+    ``_change_type`` / ``_commit_version``), ``partition_cols`` (comma
+    list; defaults to the commit marker's stamp)."""
 
     @classmethod
     def name(cls) -> str:
         return FORMAT_NAME
 
     def schema(self) -> T.StructType:
-        mdir = _mdir(self.options)
+        mdir = manifest_dir(self.options["path"])
         vs = committed_versions(mdir)
         if not vs:
             raise ValueError(
@@ -399,7 +393,7 @@ class LakeChangesDataSource(DataSource):
     def streamReader(self, schema: T.StructType) -> LakeChangesStreamReader:
         opts = dict(self.options)
         if "partition_cols" not in opts:
-            mdir = _mdir(opts)
+            mdir = manifest_dir(opts["path"])
             vs = committed_versions(mdir)
             pby = commit_info(mdir, vs[-1]).get("partition_by") if vs else None
             opts["partition_cols"] = ",".join(pby or [])
@@ -409,7 +403,6 @@ class LakeChangesDataSource(DataSource):
 def lake_changes_stream(
     spark: SparkSession,
     path: str,
-    manifest_path: str | None = None,
     change_feed: bool = False,
     starting_version: int = 0,
     starting_timestamp: float | None = None,
@@ -443,12 +436,7 @@ def lake_changes_stream(
     if starting_timestamp is not None:
         from ..sinks import version_at_timestamp
 
-        starting_version = (
-            version_at_timestamp(
-                spark, path, starting_timestamp, manifest_path
-            )
-            + 1
-        )
+        starting_version = version_at_timestamp(path, starting_timestamp) + 1
     if not getattr(spark, "_lake_changes_registered", False):
         spark.dataSource.register(LakeChangesDataSource)
         spark._lake_changes_registered = True
@@ -465,8 +453,6 @@ def lake_changes_stream(
         )
     if checkpoint_location is not None:
         reader = reader.option("checkpoint_location", checkpoint_location)
-    if manifest_path is not None:
-        reader = reader.option("manifest", manifest_path)
     return reader.load()
 
 
@@ -475,7 +461,6 @@ def start_lake_changes_stream(
     path: str,
     process,
     checkpoint_dir: str,
-    manifest_path: str | None = None,
     change_feed: bool = False,
     starting_version: int = 0,
     available_now: bool = True,
@@ -498,7 +483,6 @@ def start_lake_changes_stream(
     stream = lake_changes_stream(
         spark,
         path,
-        manifest_path=manifest_path,
         change_feed=change_feed,
         starting_version=starting_version,
         starting_timestamp=starting_timestamp,

@@ -257,7 +257,7 @@ def main() -> None:
         mode="ignore",
     )
     assert iled["files_rewritten"] == 0 and iled["rows_inserted"] == 100
-    dled = delete_where(spark, ltbl, None, {"k": (0, 99)})
+    dled = delete_where(spark, ltbl, {"k": (0, 99)})
     assert dled["rows_deleted"] == 100, dled
     t = read_table(spark, ltbl)
     assert t.count() == 1200  # 1000 - 100 + 200 + 100

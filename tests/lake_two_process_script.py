@@ -25,6 +25,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from evmtrace_etl_spark import sinks
+from evmtrace_etl_spark.lake_log import manifest_dir
 from evmtrace_etl_spark.sinks import (
     append_files,
     delete_where,
@@ -46,7 +47,7 @@ def main() -> None:
     )
     spark.sparkContext.setLogLevel("ERROR")
     if mode == "recover":
-        got = sinks._recover_txn(tbl + "/_stats_manifest")
+        got = sinks._recover_txn(manifest_dir(tbl))
         print(
             f"CHILD_ROLLED {got['rolled'] if got else 'none'}",
             flush=True,
@@ -56,14 +57,13 @@ def main() -> None:
         return
     for b in range(n_batches):
         if mode == "vacuum_loop":
-            removed = vacuum_table(spark, tbl, min_age_s=0)
+            removed = vacuum_table(tbl, min_age_s=0)
             print(f"CHILD_VACUUM {len(removed)}", flush=True)
         elif mode == "delmor":
             slice_lo = lo + 10 * b
             led = retry_on_conflict(
                 lambda: delete_where(
-                    spark, tbl, None,
-                    {"k": (slice_lo, slice_lo + 9)},
+                    spark, tbl, {"k": (slice_lo, slice_lo + 9)},
                     strategy="merge-on-read", keys=["k"],
                 ),
                 attempts=10,

@@ -82,9 +82,7 @@ def test_compact_retained_table_picks_live_files(spark, tmp_path):
         )
     first = compact_table(spark, tbl, target_bytes=1 << 30)
     assert (first["files_rewritten"], first["files_added"]) == (8, 1)
-    (live,) = current_manifest(spark, tbl + "/_stats_manifest")[
-        "file"
-    ].to_pylist()
+    (live,) = current_manifest(tbl)["file"].to_pylist()
     assert len(_data_files(tbl)) == 9  # the 8 replaced files retained
 
     second = compact_table(spark, tbl, target_bytes=1 << 30)

@@ -489,7 +489,7 @@ def test_ingest_batch_dedup_grows_index_exactly_once(spark, tmp_path):
         [(1, base + " one two three")], "doc_id long, text string"
     )
     corpus_signature_index(corpus).write.parquet(idx_path)
-    update_stats_index(spark, idx_path, None, ["band_id"])
+    update_stats_index(spark, idx_path, ["band_id"])
     n_idx0 = read_table(spark, idx_path).select("doc_id").distinct().count()
     assert n_idx0 == 1
 
@@ -558,7 +558,7 @@ def test_ingest_replay_labels_are_stable(spark, tmp_path):
         "doc_id long, text string",
     )
     corpus_signature_index(corpus).write.parquet(idx_path)
-    update_stats_index(spark, idx_path, None, ["band_id"])
+    update_stats_index(spark, idx_path, ["band_id"])
     b = spark.createDataFrame(
         [(11, "totally different words entirely unrelated content "
               "spanning many unique tokens for shingling purposes")],
@@ -591,7 +591,7 @@ def test_ingest_mutual_near_dups_in_one_batch_replay_stable(
         "doc_id long, text string",
     )
     corpus_signature_index(corpus).write.parquet(idx_path)
-    update_stats_index(spark, idx_path, None, ["band_id"])
+    update_stats_index(spark, idx_path, ["band_id"])
     base = (
         "totally different words entirely unrelated content "
         "spanning many unique tokens for shingling"

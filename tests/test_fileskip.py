@@ -13,6 +13,7 @@ import pyarrow as pa
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_type
 
+from evmtrace_etl_spark.lake_log import manifest_dir
 from evmtrace_etl_spark.sinks import (
     append_files,
     cluster_table,
@@ -83,7 +84,7 @@ def test_index_one_row_per_file_and_exact_counts(spark, tmp_path):
 
 def test_pruned_read_skips_files_and_matches_full_scan(spark, tmp_path):
     dst = _build_lake(spark, tmp_path)
-    idx = current_manifest(spark, dst + "/_stats_manifest")
+    idx = current_manifest(dst)
     total = idx.num_rows
     assert total >= 4  # the skipping claim needs >1 file
     pred = {"k": (3_000, 4_000)}
@@ -110,7 +111,7 @@ def test_zero_matching_files_yields_empty_with_schema(spark, tmp_path):
 
 def test_multi_column_predicates_intersect(spark, tmp_path):
     dst = _build_lake(spark, tmp_path)
-    idx = current_manifest(spark, dst + "/_stats_manifest")
+    idx = current_manifest(dst)
     # v = 2k, so k in [3000, 4000] & v in [0, 6500] -> k in [3000, 3250]
     pred = {"k": (3_000, 4_000), "v": (0.0, 6_500.0)}
     got = read_table(spark, dst, pred)
@@ -141,10 +142,9 @@ def test_update_stats_index_incremental(spark, tmp_path):
     already-indexed rows carry byte-identical, deleted files drop, and
     the updated manifest equals a from-scratch rebuild."""
     dst = _build(spark, tmp_path)
-    manifest = str(tmp_path / "manifest")
     from evmtrace_etl_spark.sinks import update_stats_index
 
-    led = update_stats_index(spark, dst, manifest, ["k"])
+    led = update_stats_index(spark, dst, ["k"])
     assert led["files_new"] == led["files_total"] >= 4
     assert led["files_removed"] == led["files_carried"] == 0
 
@@ -158,19 +158,19 @@ def test_update_stats_index_incremental(spark, tmp_path):
     # and remove one ORIGINAL file (a compaction would do this)
     os.remove(sorted(original)[0])
 
-    led = update_stats_index(spark, dst, manifest, ["k"])
+    led = update_stats_index(spark, dst, ["k"])
     assert led["files_new"] == 2
     assert led["files_removed"] == 1
     assert led["files_carried"] == led["files_total"] - 2
 
     from evmtrace_etl_spark.sinks import current_manifest
 
-    got = _stats_rows(current_manifest(spark, manifest))
+    got = _stats_rows(current_manifest(dst))
     want = _stats_rows(parquet_stats_index(spark, dst, ["k"]))
     assert got == want
     # and the maintained manifest prunes correctly for the new range
     kept = prune_files(
-        current_manifest(spark, manifest), {"k": (100_000, 200_000)}
+        current_manifest(dst), {"k": (100_000, 200_000)}
     )
     assert 0 < len(kept) <= 2
 
@@ -181,16 +181,15 @@ def test_delete_where_rewrites_only_overlapping_files(spark, tmp_path):
     rewritten minus the matching rows, and the manifest refresh equals
     a from-scratch rebuild."""
     dst = _build(spark, tmp_path)  # k linearly clustered, 0..19999
-    manifest = str(tmp_path / "manifest")
     from evmtrace_etl_spark.sinks import delete_where, update_stats_index
 
-    update_stats_index(spark, dst, manifest, ["k"])
+    update_stats_index(spark, dst, ["k"])
     inodes_before = {
         f: os.stat(f).st_ino for f in glob.glob(dst + "/part-*.parquet")
     }
     total_files = len(inodes_before)
 
-    led = delete_where(spark, dst, manifest, {"k": (5_000, 7_000)})
+    led = delete_where(spark, dst, {"k": (5_000, 7_000)})
     assert led["rows_deleted"] == 2_001
     assert 0 < led["files_rewritten"] < total_files
 
@@ -209,11 +208,11 @@ def test_delete_where_rewrites_only_overlapping_files(spark, tmp_path):
     # manifest refreshed == rebuild, and the deleted range prunes to 0
     from evmtrace_etl_spark.sinks import current_manifest
 
-    got_m = _stats_rows(current_manifest(spark, manifest))
+    got_m = _stats_rows(current_manifest(dst))
     want_m = _stats_rows(parquet_stats_index(spark, dst, ["k"]))
     assert got_m == want_m
     # no-op delete: zero candidates, nothing changes
-    led2 = delete_where(spark, dst, manifest, {"k": (10**8, 10**9)})
+    led2 = delete_where(spark, dst, {"k": (10**8, 10**9)})
     assert led2["files_rewritten"] == 0 and led2["rows_deleted"] == 0
 
 
@@ -229,7 +228,7 @@ def test_delete_where_partitioned_preserves_layout(spark, tmp_path):
     spark.range(3_000).selectExpr(
         "id % 3 AS p", "id AS k", "CAST(id * 2 AS DOUBLE) AS v"
     ).repartition(4).write.partitionBy("p").parquet(part)
-    update_stats_index(spark, part, None, ["k", "p"])
+    update_stats_index(spark, part, ["k", "p"])
 
     inodes_before = {
         f: os.stat(f).st_ino
@@ -237,7 +236,7 @@ def test_delete_where_partitioned_preserves_layout(spark, tmp_path):
     }
     # predicate hits one partition only: p == 1 (manifest prunes via the
     # directory-derived partition stats) and a k sub-range
-    led = delete_where(spark, part, None, {"p": 1, "k": (0, 1_500)})
+    led = delete_where(spark, part, {"p": 1, "k": (0, 1_500)})
     assert led["partitioned"] is True
     assert led["rows_deleted"] == 500  # k%3==1 in [0,1500]: 1,4,...,1498
     assert 0 < led["files_rewritten"] < len(inodes_before)
@@ -276,7 +275,7 @@ def test_delete_crash_before_commit_rolls_back(spark, tmp_path, monkeypatch):
     )
 
     dst = _build(spark, tmp_path)
-    update_stats_index(spark, dst, None, ["k"])
+    update_stats_index(spark, dst, ["k"])
     before = sorted(
         r["k"] for r in read_table(spark, dst).select("k").collect()
     )
@@ -289,7 +288,7 @@ def test_delete_crash_before_commit_rolls_back(spark, tmp_path, monkeypatch):
 
     monkeypatch.setattr(sinks, "_commit_manifest", boom)
     with pytest.raises(RuntimeError, match="injected"):
-        delete_where(spark, dst, None, {"k": (5_000, 7_000)})
+        delete_where(spark, dst, {"k": (5_000, 7_000)})
     monkeypatch.setattr(sinks, "_commit_manifest", real_commit)
 
     # snapshot reader: old version, exactly the original rows, no dupes
@@ -297,12 +296,12 @@ def test_delete_crash_before_commit_rolls_back(spark, tmp_path, monkeypatch):
     assert got == before
 
     # recovery (head of any maintenance op) rolls back the orphan adds
-    led = update_stats_index(spark, dst, None)
+    led = update_stats_index(spark, dst)
     assert led["files_new"] == 0  # rolled-back survivors NOT re-ingested
     got = sorted(r["k"] for r in read_table(spark, dst).select("k").collect())
     assert got == before
     # and the delete now goes through cleanly
-    led = delete_where(spark, dst, None, {"k": (5_000, 7_000)})
+    led = delete_where(spark, dst, {"k": (5_000, 7_000)})
     assert led["rows_deleted"] == 2_001
     got = read_table(spark, dst).count()
     assert got == 20_000 - 2_001
@@ -325,14 +324,14 @@ def test_delete_crash_after_commit_rolls_forward(spark, tmp_path, monkeypatch):
     )
 
     dst = _build(spark, tmp_path)
-    update_stats_index(spark, dst, None, ["k"])
+    update_stats_index(spark, dst, ["k"])
 
     def boom(*a, **kw):
         raise RuntimeError("injected crash before post-commit sweep")
 
     monkeypatch.setattr(sinks, "_post_commit_sweep", boom)
     with pytest.raises(RuntimeError, match="injected"):
-        delete_where(spark, dst, None, {"k": (5_000, 7_000)})
+        delete_where(spark, dst, {"k": (5_000, 7_000)})
     monkeypatch.undo()
 
     # the commit already happened: snapshot readers see the delete,
@@ -343,7 +342,7 @@ def test_delete_crash_after_commit_rolls_forward(spark, tmp_path, monkeypatch):
     assert all(not (5_000 <= k <= 7_000) for k in got)
 
     # roll-forward: sweep happens, stale files are NOT re-ingested
-    led = update_stats_index(spark, dst, None)
+    led = update_stats_index(spark, dst)
     assert led["files_new"] == 0
     assert read_table(spark, dst).count() == 20_000 - 2_001
     # directory is physically clean now too
@@ -383,14 +382,14 @@ def test_update_where_rewrites_matching_rows_in_place(spark, tmp_path):
     )
 
     dst = _build(spark, tmp_path)  # k clustered 0..19999, v = 2k
-    update_stats_index(spark, dst, None, ["k"])
+    update_stats_index(spark, dst, ["k"])
     inodes_before = {
         f: os.stat(f).st_ino for f in glob.glob(dst + "/part-*.parquet")
     }
 
     # interdependent SET: new v reads OLD k, while k itself also moves
     led = update_where(
-        spark, dst, None, {"k": (5_000, 7_000)},
+        spark, dst, {"k": (5_000, 7_000)},
         {"v": "v + k", "k": "k + 1000000"},
     )
     assert led["rows_updated"] == 2_001
@@ -410,7 +409,7 @@ def test_update_where_rewrites_matching_rows_in_place(spark, tmp_path):
     # untouched rows bit-identical
     assert rows[4_999] == 2.0 * 4_999 and rows[7_001] == 2.0 * 7_001
     # manifest refreshed == rebuild (stats follow the moved k values)
-    got_m = _stats_rows(current_manifest(spark, dst + "/_stats_manifest"))
+    got_m = _stats_rows(current_manifest(dst))
     want_m = _stats_rows(parquet_stats_index(spark, dst, ["k"]))
     assert got_m == want_m
 
@@ -424,12 +423,12 @@ def test_time_travel_reads_a_retained_snapshot(spark, tmp_path):
     from evmtrace_etl_spark.sinks import read_table, update_stats_index
 
     dst = _build(spark, tmp_path)
-    led0 = update_stats_index(spark, dst, None, ["k"])
+    led0 = update_stats_index(spark, dst, ["k"])
     assert led0["version"] == 0
     spark.range(100_000, 101_000).selectExpr(
         "id AS k", "id % 7 AS grp", "CAST(id * 2 AS DOUBLE) AS v"
     ).repartition(2).write.mode("append").parquet(dst)
-    led1 = update_stats_index(spark, dst, None)
+    led1 = update_stats_index(spark, dst)
     assert led1["version"] == 1 and led1["files_new"] == 2
 
     assert read_table(spark, dst).count() == 21_000
@@ -449,9 +448,9 @@ def test_concurrent_commit_raises_snapshot_conflict(spark, tmp_path):
     from evmtrace_etl_spark.sinks import current_manifest, update_stats_index
 
     dst = _build(spark, tmp_path)
-    update_stats_index(spark, dst, None, ["k"])  # v0
-    mdir = dst + "/_stats_manifest"
-    m = current_manifest(spark, mdir)
+    update_stats_index(spark, dst, ["k"])  # v0
+    mdir = manifest_dir(dst)
+    m = current_manifest(dst)
     # writer A snapshots (plans to commit v1); writer B commits v1 first
     # (an empty delta — commits carry only what THEY add)
     sinks._commit_manifest(spark, mdir, m.slice(0, 0), removed=[])  # B wins v1
@@ -460,7 +459,7 @@ def test_concurrent_commit_raises_snapshot_conflict(spark, tmp_path):
             spark, mdir, m.slice(0, 0), removed=[], expected_version=1
         )  # A's stale plan
     # and the real maintenance path still commits cleanly after a retry
-    led = update_stats_index(spark, dst, None)
+    led = update_stats_index(spark, dst)
     assert led["version"] == 2
 
 
@@ -469,15 +468,16 @@ def test_append_files_is_replay_idempotent(spark, tmp_path):
     log short-circuits to a no-op, so a foreachBatch replay after a
     crash cannot double-count rows — and the txn map survives later
     commits by other writers."""
+    from evmtrace_etl_spark.lake_log import commit_info
     from evmtrace_etl_spark.sinks import (
         append_files,
-        last_committed_txn,
+        manifest_version,
         read_table,
         update_stats_index,
     )
 
     dst = _build(spark, tmp_path)
-    update_stats_index(spark, dst, None, ["k"])
+    update_stats_index(spark, dst, ["k"])
     batch = spark.range(50_000, 50_100).selectExpr(
         "id AS k", "id % 7 AS grp", "CAST(id * 2 AS DOUBLE) AS v"
     )
@@ -490,8 +490,9 @@ def test_append_files_is_replay_idempotent(spark, tmp_path):
     assert led2["skipped"] and led2["files_added"] == 0
     assert read_table(spark, dst).count() == 20_100
     # an unrelated maintenance commit carries the txn map forward
-    update_stats_index(spark, dst, None)
-    assert last_committed_txn(spark, dst + "/_stats_manifest", "ingest") == 0
+    update_stats_index(spark, dst)
+    head = commit_info(manifest_dir(dst), manifest_version(dst))
+    assert head["txns"]["ingest"] == 0
     led3 = append_files(spark, batch, dst, txn=("ingest", 0))
     assert led3["skipped"]
     # the NEXT batch id lands normally
@@ -520,7 +521,7 @@ def test_append_crash_then_replay_is_exactly_once(
     )
 
     dst = _build(spark, tmp_path)
-    update_stats_index(spark, dst, None, ["k"])
+    update_stats_index(spark, dst, ["k"])
     batch = spark.range(70_000, 70_080).selectExpr(
         "id AS k", "id % 7 AS grp", "CAST(id * 2 AS DOUBLE) AS v"
     )
@@ -621,7 +622,7 @@ def test_compact_table_merges_fragments_through_the_log(spark, tmp_path):
     )
 
     dst = _build(spark, tmp_path, n_files=4)  # a few "big" files
-    update_stats_index(spark, dst, None, ["k"])
+    update_stats_index(spark, dst, ["k"])
     big_inodes = {
         f: os.stat(f).st_ino for f in glob.glob(dst + "/part-*.parquet")
     }
@@ -649,7 +650,7 @@ def test_compact_table_merges_fragments_through_the_log(spark, tmp_path):
     assert got.count() == 20_300
     assert got.filter("k >= 30000").count() == 300
     # manifest == rebuild
-    got_m = _stats_rows(current_manifest(spark, dst + "/_stats_manifest"))
+    got_m = _stats_rows(current_manifest(dst))
     want_m = _stats_rows(parquet_stats_index(spark, dst, ["k"]))
     assert got_m == want_m
     # idempotent: nothing small left to merge into fewer files
@@ -672,7 +673,7 @@ def test_history_and_vacuum(spark, tmp_path):
     )
 
     dst = _build(spark, tmp_path)
-    update_stats_index(spark, dst, None, ["k"])
+    update_stats_index(spark, dst, ["k"])
     append_files(
         spark,
         spark.range(90_000, 90_010).selectExpr(
@@ -681,7 +682,7 @@ def test_history_and_vacuum(spark, tmp_path):
         dst,
         txn=("h", 3),
     )
-    hist = table_history(spark, dst)
+    hist = table_history(dst)
     assert [h["version"] for h in hist] == [0, 1]
     assert hist[-1]["rows"] == 20_010
     assert hist[-1]["txns"] == {"h": 3}
@@ -690,7 +691,7 @@ def test_history_and_vacuum(spark, tmp_path):
     stale = dst + "._append_deadbeef"
     os.makedirs(stale)
     open(stale + "/part-zzz.parquet", "wb").write(b"x")
-    removed = vacuum_table(spark, dst, min_age_s=0)
+    removed = vacuum_table(dst, min_age_s=0)
     assert any("_append_deadbeef" in p for p in removed)
     assert not os.path.exists(stale)
     # data untouched
@@ -738,10 +739,10 @@ def test_read_table_composes_all_skipping_tiers(spark, tmp_path):
     )
     assert got == want and len(got) == 143
     # measured file-skip ratio: the k-range tiles a small file subset
-    total = current_manifest(spark, dst + "/_stats_manifest").num_rows
+    total = current_manifest(dst).num_rows
     kept = len(
         prune_files(
-            current_manifest(spark, dst + "/_stats_manifest"),
+            current_manifest(dst),
             {"k": (3_000, 4_000)},
         )
     )
@@ -761,8 +762,8 @@ def test_manifest_lives_hidden_inside_the_table(spark, tmp_path):
 
     dst = _build(spark, tmp_path)
     n = spark.read.parquet(dst).count()
-    update_stats_index(spark, dst, None, ["k"])
-    assert os.path.isdir(dst + "/_stats_manifest/v0")
+    update_stats_index(spark, dst, ["k"])
+    assert os.path.isdir(manifest_dir(dst) + "/v0")
     # a plain directory scan neither errors nor double-counts
     assert spark.read.parquet(dst).count() == n
     # and the tier's listings exclude the metadata subtree
@@ -801,7 +802,7 @@ def test_keep_versions_retains_deeper_history(spark, tmp_path):
     )
 
     dst = _build(spark, tmp_path)
-    update_stats_index(spark, dst, None, ["k"], keep_versions=4)  # v0
+    update_stats_index(spark, dst, ["k"], keep_versions=4)  # v0
     for b in range(3):  # v1..v3
         append_files(
             spark,
@@ -812,7 +813,7 @@ def test_keep_versions_retains_deeper_history(spark, tmp_path):
             txn=("kv", b),
             keep_versions=4,
         )
-    hist = table_history(spark, dst)
+    hist = table_history(dst)
     assert [h["version"] for h in hist] == [0, 1, 2, 3]
     # every retained version time-travels (append-only: files all alive)
     assert read_table(spark, dst, version=0).count() == 20_000
@@ -857,7 +858,7 @@ def test_lake_append_stream_in_band_maintenance(spark, tmp_path):
     n_files = len(glob.glob(tbl + "/*.parquet"))
     assert n_files <= 2, n_files
     # history shows the compact commits interleaved with the ingest
-    ops = [h["op"] for h in sinks.table_history(spark, tbl)]
+    ops = [h["op"] for h in sinks.table_history(tbl)]
     assert "compact" in ops and "append" in ops
     # restart over the same checkpoint: nothing re-lands, reads stable
     q = start_lake_append_stream(
@@ -910,7 +911,7 @@ def test_two_actor_maintain_interleaves_with_in_band_stream(
         try:
             while not stop.is_set():
                 if sinks.manifest_version(
-                    spark, tbl + "/_stats_manifest"
+                    tbl
                 ) is not None:
                     led = retry_on_conflict(
                         lambda: sinks.maintain_table(
@@ -942,7 +943,7 @@ def test_two_actor_maintain_interleaves_with_in_band_stream(
 
     t = read_table(spark, tbl)
     assert t.count() == 800 and t.select("k").distinct().count() == 800
-    mdir = tbl + "/_stats_manifest"
+    mdir = manifest_dir(tbl)
     assert not os.path.exists(os.path.join(mdir, "_TXN"))
     assert not os.path.exists(os.path.join(mdir, "_LOCK"))
     # no orphaned temp siblings from any losing actor

@@ -193,7 +193,7 @@ def test_stream_starting_timestamp(spark, tmp_path):
     time serves commits 1..head; an instant before the first retained
     commit refuses (same contract as table_changes(since_timestamp))."""
     src = _src(spark, tmp_path)  # v0, v1, v2
-    ts_v0 = sinks.table_history(spark, src)[0]["ts"]
+    ts_v0 = sinks.table_history(src)[0]["ts"]
     dst = str(tmp_path / "dst_ts")
     ckpt = str(tmp_path / "ckpt_ts")
 

@@ -1,9 +1,9 @@
-"""Column mapping (``rename_column`` / ``drop_column``): rename and
-drop are METADATA-ONLY commits — per-field stable ids + physical
-names ride the committed schema, data files store physical names
-forever, and readers project physical → logical per snapshot.  A
-re-added name gets a fresh physical name so retained files' stale
-values can never resurrect."""
+"""Column mapping (``rename_column``): a rename is a METADATA-ONLY
+commit — per-field stable ids + physical names ride the committed
+schema, data files store physical names forever, and readers project
+physical → logical per snapshot.  (Retired physical names that an
+older build's column drop left in the mapping are covered in
+``test_lake_protocol.py::test_older_stamps_keep_working``.)"""
 
 from __future__ import annotations
 
@@ -16,7 +16,6 @@ from pyspark.sql import functions as F
 from evmtrace_etl_spark import sinks
 from evmtrace_etl_spark.sinks import (
     append_files,
-    drop_column,
     merge_into,
     read_table,
     rename_column,
@@ -89,7 +88,7 @@ def test_rename_of_stats_column_keeps_pruning(spark, tmp_path):
     before = _mtimes(tbl)
     rename_column(spark, tbl, "k", "key")
     assert _mtimes(tbl) == before
-    m = sinks.current_manifest(spark, tbl + "/_stats_manifest")
+    m = sinks.current_manifest(tbl)
     assert "key_min" in m.column_names and "k_min" not in m.column_names
     kept = sinks.prune_files(m, {"key": (0, 99)})
     assert len(kept) == 1  # pruning tightened under the new name
@@ -97,46 +96,20 @@ def test_rename_of_stats_column_keeps_pruning(spark, tmp_path):
     assert t.count() == 100 and t.columns == ["key", "v"]
 
 
-def test_drop_then_readd_never_resurrects(spark, tmp_path):
-    """Drop retires the physical name; a re-added column with the same
-    logical name reads NULL from every pre-drop file — stale values
-    cannot resurrect — while new batches' values serve exactly."""
-    tbl = _seed(spark, tmp_path)
-    before = _mtimes(tbl)
-    led = drop_column(spark, tbl, "v")
-    assert led["dropped"] == "v"
-    assert _mtimes(tbl) == before
-    assert read_table(spark, tbl).columns == ["k"]
-    append_files(
-        spark,
-        spark.range(200, 210).select(
-            F.col("id").alias("k"), F.lit(1.5).alias("v")
-        ),
-        tbl,
-    )
-    t = read_table(spark, tbl)
-    assert t.count() == 110
-    # old rows read NULL under the re-added column, new rows read 1.5
-    assert t.filter("v IS NOT NULL").count() == 10
-    assert t.filter("v = 1.5").count() == 10
-    # the re-added field carries a fresh opaque physical name
-    schema = sinks.committed_schema(spark, tbl + "/_stats_manifest")
-    f = next(f for f in schema.fields if f.name == "v")
-    assert f.metadata["lake.phys"].startswith("col_")
-
-
 def test_time_travel_serves_each_snapshot_under_its_own_schema(
     spark, tmp_path
 ):
     tbl = _seed(spark, tmp_path, retain_removed=True)
     rename_column(spark, tbl, "v", "val")  # v1
-    drop_column(spark, tbl, "val")  # v2
+    rename_column(spark, tbl, "val", "amount")  # v2
     t0 = read_table(spark, tbl, version=0)
     assert t0.columns == ["k", "v"] and t0.filter("v = 500").count() == 1
     t1 = read_table(spark, tbl, version=1)
     assert t1.columns == ["k", "val"]
     assert t1.filter("val = 500").count() == 1
-    assert read_table(spark, tbl, version=2).columns == ["k"]
+    t2 = read_table(spark, tbl, version=2)
+    assert t2.columns == ["k", "amount"]
+    assert t2.filter("amount = 500").count() == 1
 
 
 def test_cdc_and_stream_serve_across_rename(spark, tmp_path):
@@ -192,14 +165,13 @@ def test_mapped_ddl_guards(spark, tmp_path):
         rename_column(spark, tbl, "p", "q")
     sinks.add_table_constraint(spark, tbl, "v_ok", "v >= 0")
     with pytest.raises(ValueError, match="constraint"):
-        drop_column(spark, tbl, "v")
-    sinks.drop_table_constraint(spark, tbl, "v_ok")
+        rename_column(spark, tbl, "v", "w")
     merge_into(
         spark,
         spark.range(3).select(
             F.col("id").alias("k"),
             F.lit(0).cast("int").alias("p"),
-            F.lit(-1).cast("long").alias("v"),
+            F.lit(1).cast("long").alias("v"),
         ),
         tbl, keys=["k"], strategy="merge-on-read",
     )
@@ -209,7 +181,7 @@ def test_mapped_ddl_guards(spark, tmp_path):
     with pytest.raises(ValueError, match="already exists"):
         rename_column(spark, tbl, "v", "k")
     with pytest.raises(ValueError, match="no column"):
-        drop_column(spark, tbl, "nope")
+        rename_column(spark, tbl, "nope", "x")
     # unblocked after materialize: the rename lands
     rename_column(spark, tbl, "k", "kk")
     assert read_table(spark, tbl).columns == ["kk", "p", "v"]
@@ -234,7 +206,7 @@ def test_merge_and_mor_delete_on_mapped_table(spark, tmp_path):
     t = read_table(spark, tbl)
     assert t.count() == 120 and t.filter("val = -1").count() == 70
     led = sinks.delete_where(
-        spark, tbl, None, {"val": -1}, strategy="merge-on-read",
+        spark, tbl, {"val": -1}, strategy="merge-on-read",
         keys=["k"],
     )
     assert led["rows_deleted"] == 70 and led["files_added"] == 0
@@ -255,7 +227,7 @@ def test_merge_and_mor_delete_on_mapped_table(spark, tmp_path):
 
 
 def test_constraint_guard_resolves_structurally(spark, tmp_path):
-    """The rename/drop constraint guard resolves column references
+    """The rename constraint guard resolves column references
     through the SQL analyzer, not a text regex: a column name that
     appears only INSIDE A STRING LITERAL of a constraint expression
     does not block a legal rename, while genuine references — plain,
@@ -276,11 +248,10 @@ def test_constraint_guard_resolves_structurally(spark, tmp_path):
     assert got["renamed"] == ["v", "amount"]
     with pytest.raises(ValueError, match="constraint"):
         rename_column(spark, tbl, "status", "state")  # genuine reference
-    sinks.drop_table_constraint(spark, tbl, "status_known")
     # backquoted reference is still a reference
     sinks.add_table_constraint(spark, tbl, "amt_ok", "`amount` >= 0")
     with pytest.raises(ValueError, match="constraint"):
-        drop_column(spark, tbl, "amount")
-    # and an unreferenced column drops fine under the same constraint
-    drop_column(spark, tbl, "status")
-    assert read_table(spark, tbl).columns == ["k", "amount"]
+        rename_column(spark, tbl, "amount", "amt")
+    # and an unreferenced column renames fine under both constraints
+    rename_column(spark, tbl, "k", "key")
+    assert read_table(spark, tbl).columns == ["key", "status", "amount"]

@@ -1,6 +1,5 @@
 """Write-time CHECK constraints on the snapshot log
-(``add_table_constraint`` / ``drop_table_constraint`` — Delta's ALTER
-TABLE ADD CONSTRAINT): the map rides every commit, every write path
+(``add_table_constraint`` — Delta's ALTER TABLE ADD CONSTRAINT): the map rides every commit, every write path
 verifies its rows inside the write job's own CollectMetrics (zero
 extra scans), and a violating transaction is refused WHOLE — temp
 files deleted, no snapshot advanced, nothing partially visible."""
@@ -14,10 +13,9 @@ from evmtrace_etl_spark.sinks import (
     ConstraintViolation,
     add_table_constraint,
     append_files,
-    drop_table_constraint,
+    delete_where,
     merge_into,
     read_table,
-    table_constraints,
     table_history,
     update_where,
 )
@@ -40,7 +38,7 @@ def test_add_validates_existing_and_enforces_appends(spark, tmp_path):
     with pytest.raises(ConstraintViolation, match="existing rows"):
         add_table_constraint(spark, tbl, "v_big", "v >= 100")
     led = add_table_constraint(spark, tbl, "v_nonneg", "v >= 0")
-    assert table_constraints(spark, tbl) == {"v_nonneg": "v >= 0"}
+    assert led["constraints"] == {"v_nonneg": "v >= 0"}
     v_before = led["version"]
 
     bad = spark.range(100, 110).select(
@@ -49,7 +47,7 @@ def test_add_validates_existing_and_enforces_appends(spark, tmp_path):
     with pytest.raises(ConstraintViolation, match="v_nonneg"):
         append_files(spark, bad.coalesce(1), tbl, keep_versions=10)
     assert read_table(spark, tbl).count() == 100
-    assert table_history(spark, tbl)[-1]["version"] == v_before
+    assert table_history(tbl)[-1]["version"] == v_before
 
     good = spark.range(100, 110).select(
         F.col("id").alias("k"), (F.col("id") * 10).alias("v")
@@ -90,20 +88,20 @@ def test_update_where_enforces_and_null_passes(spark, tmp_path):
     add_table_constraint(spark, tbl, "v_cap", "v <= 2000")
     with pytest.raises(ConstraintViolation, match="v_cap"):
         update_where(
-            spark, tbl, None, {"k": (0, 10)}, {"v": F.lit(9999)},
+            spark, tbl, {"k": (0, 10)}, {"v": F.lit(9999)},
         )
     assert read_table(spark, tbl).filter("v = 9999").count() == 0
     # NULL result of the check expr passes (ANSI CHECK)
     update_where(
-        spark, tbl, None, {"k": (0, 0)},
+        spark, tbl, {"k": (0, 0)},
         {"v": F.lit(None).cast("long")},
     )
     assert read_table(spark, tbl).filter("v is null").count() == 1
 
 
-def test_drop_constraint_and_carry(spark, tmp_path):
-    """The map carries across unrelated commits; dropping the last
-    constraint stops enforcement."""
+def test_constraint_carries_across_commits(spark, tmp_path):
+    """The map carries across unrelated commits — a clean append and a
+    merge — so a violating append after them is still refused whole."""
     tbl = _seed(spark, tmp_path)
     add_table_constraint(spark, tbl, "v_nonneg", "v >= 0")
     append_files(
@@ -114,18 +112,24 @@ def test_drop_constraint_and_carry(spark, tmp_path):
         tbl,
         keep_versions=10,
     )
-    assert table_constraints(spark, tbl) == {"v_nonneg": "v >= 0"}
-    drop_table_constraint(spark, tbl, "v_nonneg")
-    assert table_constraints(spark, tbl) == {}
+    merge_into(
+        spark,
+        spark.range(0, 5).select(
+            F.col("id").alias("k"), F.lit(1).cast("long").alias("v")
+        ),
+        tbl,
+        keys=["k"],
+        keep_versions=10,
+    )
+    head = table_history(tbl)[-1]["version"]
     neg = spark.range(200, 205).select(
         F.col("id").alias("k"), F.lit(-1).cast("long").alias("v")
     )
-    append_files(spark, neg.coalesce(1), tbl, keep_versions=10)
-    assert read_table(spark, tbl).filter("v < 0").count() == 5
-    # idempotent drop is a commit-free no-op
-    head = table_history(spark, tbl)[-1]["version"]
-    drop_table_constraint(spark, tbl, "v_nonneg")
-    assert table_history(spark, tbl)[-1]["version"] == head
+    with pytest.raises(ConstraintViolation, match="v_nonneg"):
+        append_files(spark, neg.coalesce(1), tbl, keep_versions=10)
+    assert table_history(tbl)[-1]["version"] == head
+    assert read_table(spark, tbl).count() == 105
+    assert read_table(spark, tbl).filter("v < 0").count() == 0
 
 
 def test_constraint_on_column_omitted_by_batch_null_passes(spark, tmp_path):
@@ -196,3 +200,20 @@ def test_obs_result_verifies_zero_row_premise():
     # a non-matching JVM error is never swallowed
     with _pytest.raises(Py4JJavaError):
         _obs_result(_Obs("OutOfMemoryError"), verify_rows=lambda: 0)
+
+
+def test_non_dict_predicates_refused(spark, tmp_path):
+    """``delete_where``/``update_where`` refuse predicates that are not
+    a dict: the spelling that once passed the log location as the third
+    positional argument, ``delete_where(spark, tbl, None, {...})``,
+    would otherwise bind ``predicates=None`` — match every row — and
+    empty the table.  Rows and version stay as they were."""
+    tbl = _seed(spark, tmp_path)
+    head = table_history(tbl)[-1]["version"]
+    with pytest.raises(TypeError, match="predicates must be a dict"):
+        delete_where(spark, tbl, None, {"k": (5, 9)})
+    with pytest.raises(TypeError, match="predicates must be a dict"):
+        update_where(spark, tbl, None, {"k": (5, 9)}, {"v": "-1"})
+    assert read_table(spark, tbl).count() == 100
+    assert read_table(spark, tbl).filter("v < 0").count() == 0
+    assert table_history(tbl)[-1]["version"] == head

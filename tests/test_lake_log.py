@@ -10,6 +10,7 @@ import sys
 import threading
 
 import pytest
+from pyspark.sql import types as T
 
 from evmtrace_etl_spark import sinks
 from evmtrace_etl_spark.sources import lake_changes
@@ -76,9 +77,9 @@ def test_non_local_lake_paths_raise(uri):
     other than ``file:`` raises a ValueError naming it, on the sink
     side and on the stream source alike."""
     with pytest.raises(ValueError, match=re.escape(uri)):
-        sinks.manifest_version(None, uri + "/_stats_manifest")
+        sinks.manifest_version(uri)
     with pytest.raises(ValueError, match=re.escape(uri)):
-        sinks.committed_schema(None, uri + "/_stats_manifest")
+        sinks.committed_schema(uri)
     with pytest.raises(ValueError, match=re.escape(uri)):
-        lake_changes._mdir({"path": uri})
+        lake_changes.LakeChangesStreamReader(T.StructType(), {"path": uri})
     assert sinks._local_path("file:///lake/t/") == "/lake/t"

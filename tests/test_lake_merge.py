@@ -16,6 +16,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from evmtrace_etl_spark import sinks
+from evmtrace_etl_spark.lake_log import manifest_dir
 from evmtrace_etl_spark.sinks import (
     append_files,
     committed_schema,
@@ -173,7 +174,7 @@ def test_merge_crash_after_commit_rolls_forward(
     led = merge_into(spark, src, tbl, keys=["k"], txn=("mc2", 1))
     assert led["skipped"]
     # next op sweeps the replaced files
-    sinks.vacuum_table(spark, tbl)
+    sinks.vacuum_table(tbl)
     assert read_table(spark, tbl).filter("v = -3").count() == 60
 
 
@@ -187,7 +188,7 @@ def test_merge_partitioned_preserves_layout(spark, tmp_path):
         (F.col("id") * 10).alias("v"),
     )
     df.write.partitionBy("p").parquet(tbl)
-    sinks.update_stats_index(spark, tbl, None, ["k"])
+    sinks.update_stats_index(spark, tbl, ["k"])
     p2_files = sorted(glob.glob(tbl + "/p=2/*.parquet"))
     # touch only keys congruent 0 mod 3 (partition p=0)
     src = spark.createDataFrame(
@@ -219,7 +220,7 @@ def test_conflict_after_move_in_rolls_back_cleanly(
     lingers, a later update_stats_index adopts nothing, and
     retry_on_conflict drives the op through."""
     tbl = _seed(spark, tmp_path, n=100, files=2)
-    mdir = tbl + "/_stats_manifest"
+    mdir = manifest_dir(tbl)
     real_marker = sinks._write_json_marker
     state = {"fired": False, "constraints": None}
 
@@ -229,7 +230,7 @@ def test_conflict_after_move_in_rolls_back_cleanly(
         if name == "_TXN" and not state["fired"]:
             state["fired"] = True
             real_marker(dirpath, name, payload, **kw)
-            m = sinks.current_manifest(spark, mdir)
+            m = sinks.current_manifest(tbl)
             # an empty delta — commits carry only what THEY add
             sinks._commit_manifest(
                 spark, mdir, m.slice(0, 0), removed=[],
@@ -263,7 +264,7 @@ def test_conflict_after_move_in_rolls_back_cleanly(
 
     assert sorted(glob.glob(tbl + "/*.parquet")) == files_before
     assert not os.path.exists(mdir + "/_TXN")
-    led = sinks.update_stats_index(spark, tbl, None)
+    led = sinks.update_stats_index(spark, tbl)
     assert led["files_new"] == 0  # no orphans adopted
     # and retry_on_conflict drives the same op through on a retry
     state.update(fired=False, constraints=None)
@@ -350,7 +351,7 @@ def test_lake_schema_evolution_add_only(spark, tmp_path):
         )
     # the committed schema rides maintenance commits
     sinks.compact_table(spark, tbl, target_bytes=1 << 30)
-    sc = committed_schema(spark, tbl + "/_stats_manifest")
+    sc = committed_schema(tbl)
     assert [f.name for f in sc.fields] == ["k", "v", "lang"]
     t2 = read_table(spark, tbl)
     assert t2.columns == ["k", "v", "lang"] and t2.count() == 25
@@ -464,62 +465,6 @@ def test_table_changes_incremental_read(spark, tmp_path):
         table_changes(spark, tbl, since_version=99)
 
 
-def test_lake_merge_stream_exactly_once_through_restart(spark, tmp_path):
-    """Streaming keyed upsert through the log: staged micro-batches
-    with overlapping keys merge exactly once each; restarting the
-    stream over the same source (checkpoint replay) changes nothing
-    (txn-stamped batch ids)."""
-    from evmtrace_etl_spark.sinks import (
-        start_lake_merge_stream,
-        table_history,
-    )
-
-    src = str(tmp_path / "src")
-    tbl = str(tmp_path / "tbl")
-    ckpt = str(tmp_path / "ckpt")
-    os.makedirs(src)
-    # stage batches as individual files (maxFilesPerTrigger=1)
-    b1 = spark.createDataFrame(
-        [(1, 10), (2, 20), (3, 30)], "k long, v long"
-    )
-    b2 = spark.createDataFrame(
-        [(2, -2), (4, 40)], "k long, v long"
-    )  # updates k=2, inserts k=4
-    b1.coalesce(1).write.parquet(src + "/f0")
-    b2.coalesce(1).write.parquet(src + "/f1")
-    # flatten: spark file stream needs a flat dir of files
-    flat = str(tmp_path / "flat")
-    os.makedirs(flat)
-    for i, d in enumerate(sorted(glob.glob(src + "/f*"))):
-        for j, f in enumerate(sorted(glob.glob(d + "/part-*.parquet"))):
-            os.link(f, os.path.join(flat, f"b{i}_{j}.parquet"))
-
-    def run(ck):
-        stream = (
-            spark.readStream.schema("k long, v long")
-            .option("maxFilesPerTrigger", "1")
-            .parquet(flat)
-        )
-        q = start_lake_merge_stream(
-            stream, tbl, ["k"], ck, cols=["k"], app_id="ms"
-        )
-        assert q.awaitTermination(120)
-
-    run(ckpt)
-    t = read_table(spark, tbl)
-    got = {r["k"]: r["v"] for r in t.collect()}
-    # lexicographic file order: b0 seeds, b1's merge updates k=2
-    assert set(got) == {1, 2, 3, 4}
-    # a FRESH checkpoint re-delivers every batch with the same ids —
-    # the txn stamps make each a no-op (exactly-once keyed upsert)
-    hist_before = table_history(spark, tbl)
-    run(str(tmp_path / "ckpt2"))
-    t2 = read_table(spark, tbl)
-    assert {r["k"]: r["v"] for r in t2.collect()} == got
-    hist_after = table_history(spark, tbl)
-    assert hist_after[-1]["version"] == hist_before[-1]["version"]
-
-
 def test_delete_where_txn_replay_is_noop(spark, tmp_path):
     """Streamed retention deletes are exactly-once too: a replayed
     (app_id, batch_id) on delete_where/update_where short-circuits
@@ -529,23 +474,23 @@ def test_delete_where_txn_replay_is_noop(spark, tmp_path):
 
     tbl = _seed(spark, tmp_path, n=200, files=4)
     led = delete_where(
-        spark, tbl, None, {"k": (0, 49)}, txn=("purge", 1)
+        spark, tbl, {"k": (0, 49)}, txn=("purge", 1)
     )
     assert led["rows_deleted"] == 50 and not led["skipped"]
     assert read_table(spark, tbl).count() == 150
     led2 = delete_where(
-        spark, tbl, None, {"k": (0, 49)}, txn=("purge", 1)
+        spark, tbl, {"k": (0, 49)}, txn=("purge", 1)
     )
     assert led2["skipped"] and led2["files_rewritten"] == 0
     assert read_table(spark, tbl).count() == 150
     # the next batch id lands; update_where shares the contract
     led3 = update_where(
-        spark, tbl, None, {"k": (50, 59)}, {"v": "-1"},
+        spark, tbl, {"k": (50, 59)}, {"v": "-1"},
         txn=("purge", 2),
     )
     assert led3["rows_updated"] == 10 and not led3["skipped"]
     led4 = update_where(
-        spark, tbl, None, {"k": (50, 59)}, {"v": "-99"},
+        spark, tbl, {"k": (50, 59)}, {"v": "-99"},
         txn=("purge", 2),
     )
     assert led4["skipped"]

@@ -1,8 +1,8 @@
 """Model-based differential test of the whole lake tier: seeded random
 PROGRAMS of mixed operations (appends, copy-on-write and merge-on-read
 merges/deletes/updates, compaction, materialize, column rename, type
-widening, the maintain_table composite, vacuum, protocol upgrade, and
-RESTORE to a random retained snapshot) run against both the
+widening, the maintain_table composite, vacuum, and RESTORE to a
+random retained snapshot) run against both the
 snapshot-logged table and a plain Python dict model — after EVERY
 operation the visible table must equal the model exactly (on restore,
 the model rolls back to its recorded state for that version, column
@@ -10,7 +10,7 @@ name and value type included).
 This is the catch-all for cross-feature interactions no single-feature
 test enumerates (a tombstone surviving a compaction, a rename breaking
 DV suppression, a merge resurrecting a deleted key, a restore across a
-DV fold or rename, an upgraded protocol floor breaking a later op...).
+DV fold or rename...).
 
 Seeds are OPS-LIST-PINNED: changing the ``ops`` list re-maps every
 random draw — re-pin the parametrized seeds and the long-program seed
@@ -25,6 +25,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from evmtrace_etl_spark import sinks
+from evmtrace_etl_spark.lake_log import manifest_dir
 from evmtrace_etl_spark.sinks import (
     append_files,
     compact_table,
@@ -76,14 +77,14 @@ def _run_program(spark, tmp_path, seed: int, n_ops: int = 12) -> list:
     ops = [
         "append", "merge_cow", "merge_mor", "delete_mor", "update_mor",
         "delete_cow", "update_cow", "compact", "materialize", "rename",
-        "widen", "maintain", "vacuum", "upgrade", "restore",
+        "widen", "maintain", "vacuum", "restore",
     ]
     renamed = False
-    mdir = tbl + "/_stats_manifest"
+    mdir = manifest_dir(tbl)
     # model snapshots per committed version, for RESTORE: the model
     # rolls back with the table (column name and value type included)
     history: dict[int, tuple[dict, str, str]] = {
-        sinks.manifest_version(spark, mdir): (dict(model), val_col, val_type)
+        sinks.manifest_version(tbl): (dict(model), val_col, val_type)
     }
     for step in range(n_ops):
         op = rng.choice(ops)
@@ -116,20 +117,20 @@ def _run_program(spark, tmp_path, seed: int, n_ops: int = 12) -> list:
         elif op == "delete_mor":
             r = rng.randint(0, 6)
             delete_where(
-                spark, tbl, None, {"u": r}, strategy="merge-on-read",
+                spark, tbl, {"u": r}, strategy="merge-on-read",
                 keys=["k"],
             )
             model = {k: t for k, t in model.items() if t[0] != r}
         elif op == "delete_cow":
             lo = rng.randint(0, next_k)
             hi = lo + rng.randint(0, 50)
-            delete_where(spark, tbl, None, {"k": (lo, hi)})
+            delete_where(spark, tbl, {"k": (lo, hi)})
             model = {k: t for k, t in model.items() if not lo <= k <= hi}
         elif op == "update_mor":
             r = rng.randint(0, 6)
             d = rng.randint(1, 1000)
             update_where(
-                spark, tbl, None, {"u": r}, {val_col: f"{val_col} + {d}"},
+                spark, tbl, {"u": r}, {val_col: f"{val_col} + {d}"},
                 strategy="merge-on-read", keys=["k"],
             )
             model = {
@@ -141,7 +142,7 @@ def _run_program(spark, tmp_path, seed: int, n_ops: int = 12) -> list:
             hi = lo + rng.randint(0, 50)
             d = rng.randint(1, 1000)
             update_where(
-                spark, tbl, None, {"k": (lo, hi)},
+                spark, tbl, {"k": (lo, hi)},
                 {val_col: f"{val_col} + {d}"},
             )
             model = {
@@ -161,7 +162,7 @@ def _run_program(spark, tmp_path, seed: int, n_ops: int = 12) -> list:
                 dv_files_threshold=2, min_age_s=0,
             )
         elif op == "vacuum":
-            sinks.vacuum_table(spark, tbl, min_age_s=0)
+            sinks.vacuum_table(tbl, min_age_s=0)
         elif op == "rename" and not renamed:
             rename_column(spark, tbl, val_col, "val")
             val_col = "val"
@@ -182,12 +183,6 @@ def _run_program(spark, tmp_path, seed: int, n_ops: int = 12) -> list:
             )
             model.update(fresh)
             val_type = "long"
-        elif op == "upgrade":
-            # explicit protocol floor raise mid-program: a metadata-
-            # only commit every later op must keep working under
-            sinks.upgrade_table_protocol(
-                spark, tbl, min_reader=2, min_writer=2
-            )
         elif op == "restore":
             # RESTORE to a random RETAINED recorded snapshot (possibly
             # across a DV fold, a rename, or a widen) — the model, the
@@ -201,20 +196,20 @@ def _run_program(spark, tmp_path, seed: int, n_ops: int = 12) -> list:
                 model = dict(model)
                 renamed = val_col != "v"
         _check(spark, tbl, model, val_col)
-        history[sinks.manifest_version(spark, mdir)] = (
+        history[sinks.manifest_version(tbl)] = (
             dict(model), val_col, val_type,
         )
     return trace
 
 
-# seeds re-pinned for the r14 ops list (upgrade/restore added): 2/3/9
-# collectively cover restore-after-rename, repeated upgrades, restore
-# across maintain, and every pre-existing op class
-@pytest.mark.parametrize("seed", [2, 3, 9])
+# seeds re-pinned for the ops list without "upgrade": 2/3/8 collectively
+# cover restore-after-rename (8), restore across maintain (2), and every
+# op class but vacuum, which the 24-op seed 101 draws
+@pytest.mark.parametrize("seed", [2, 3, 8])
 def test_random_lake_program_matches_model(spark, tmp_path, seed):
     trace = _run_program(spark, tmp_path, seed)
     assert len(trace) == 12
-    assert "restore" in trace or "upgrade" in trace  # new ops exercised
+    assert "restore" in trace
 
 
 def test_long_lake_program_crosses_dv_consolidation(spark, tmp_path):
@@ -224,13 +219,12 @@ def test_long_lake_program_crosses_dv_consolidation(spark, tmp_path):
     ACROSS the checkpoint DV fold: the consolidated per-row sidecar
     must serve byte-identical visibility to the per-commit sidecars
     it replaced, through every later op of the program — which for
-    this seed also includes a mid-program protocol upgrade, a restore,
-    and a rename BEFORE the fold."""
+    this seed also includes a restore and a rename."""
     import glob
 
     trace = _run_program(spark, tmp_path, seed=101, n_ops=24)
     assert len(trace) == 24
-    assert "upgrade" in trace and "restore" in trace and "rename" in trace
+    assert "restore" in trace and "rename" in trace
     tbl = str(tmp_path / "t101")
     # the program really crossed the fold (seed-pinned — revisit the
     # seed if the op mix ever changes)
@@ -311,7 +305,7 @@ def test_streamed_lake_program_matches_model(spark, tmp_path):
             if op == "delete_mor":
                 r = rng.randint(0, 6)
                 delete_where(
-                    spark, tbl, None, {"u": r},
+                    spark, tbl, {"u": r},
                     strategy="merge-on-read", keys=["k"],
                 )
                 model = {k: t for k, t in model.items() if t[0] != r}
@@ -319,7 +313,7 @@ def test_streamed_lake_program_matches_model(spark, tmp_path):
                 r = rng.randint(0, 6)
                 d = rng.randint(1, 1000)
                 update_where(
-                    spark, tbl, None, {"u": r}, {"v": f"v + {d}"},
+                    spark, tbl, {"u": r}, {"v": f"v + {d}"},
                     strategy="merge-on-read", keys=["k"],
                 )
                 model = {
@@ -334,7 +328,7 @@ def test_streamed_lake_program_matches_model(spark, tmp_path):
             elif op == "compact":
                 compact_table(spark, tbl, target_bytes=1 << 20)
             elif op == "vacuum":
-                sinks.vacuum_table(spark, tbl, min_age_s=0)
+                sinks.vacuum_table(tbl, min_age_s=0)
         _check(spark, tbl, model, "v")
 
     # force a REAL redelivery of the last batch: removing its commit

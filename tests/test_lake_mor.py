@@ -16,6 +16,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from evmtrace_etl_spark import sinks
+from evmtrace_etl_spark.lake_log import manifest_dir
 from evmtrace_etl_spark.sinks import (
     append_files,
     delete_where,
@@ -50,7 +51,7 @@ def _seed(spark, tmp_path, n: int = 1000, files: int = 8) -> str:
 
 def _markers(tbl: str) -> dict[int, dict]:
     out = {}
-    for mp in glob.glob(tbl + "/_stats_manifest/v*/_COMMIT"):
+    for mp in glob.glob(manifest_dir(tbl) + "/v*/_COMMIT"):
         with open(mp) as f:
             payload = json.load(f)
         out[payload["version"]] = payload
@@ -78,10 +79,10 @@ def test_commit_metadata_is_o_batch(spark, tmp_path):
     assert len(markers[v]["added"]) == 1
     # the delta parquet holds exactly the added file's stats row, not
     # the table's (9-file) manifest
-    rows = spark.read.parquet(f"{tbl}/_stats_manifest/v{v}").count()
+    rows = spark.read.parquet(f"{manifest_dir(tbl)}/v{v}").count()
     assert rows == 1
     # ... and the snapshot still reconstructs the full file list
-    manifest = sinks.current_manifest(spark, tbl + "/_stats_manifest")
+    manifest = sinks.current_manifest(tbl)
     assert manifest.num_rows == 9
     assert read_table(spark, tbl).count() == 1010
 
@@ -102,10 +103,10 @@ def test_checkpoint_every_n_commits_bounds_the_chain(spark, tmp_path):
     assert all(k == "delta" for v, k in kinds.items() if 10 < v <= 12)
     # the checkpoint's parquet holds the FULL manifest as of v10
     # (8 seed files + the v8..v10 appends)
-    assert spark.read.parquet(f"{tbl}/_stats_manifest/v10").count() == 11
+    assert spark.read.parquet(f"{manifest_dir(tbl)}/v10").count() == 11
     assert read_table(spark, tbl).count() == 1005
     # chains older than the retained window were pruned
-    assert not os.path.isdir(tbl + "/_stats_manifest/v0")
+    assert not os.path.isdir(manifest_dir(tbl) + "/v0")
     with pytest.raises(ValueError, match="not committed/retained"):
         read_table(spark, tbl, version=0)
 
@@ -153,10 +154,10 @@ def test_stale_writer_cannot_overwrite_committed_version(spark, tmp_path):
     rename-into-place commit fails instead (SnapshotConflict), and the
     winner's marker + manifest survive intact."""
     tbl = _seed(spark, tmp_path, n=100, files=2)
-    mdir = tbl + "/_stats_manifest"
-    head = sinks.manifest_version(spark, mdir)
+    mdir = manifest_dir(tbl)
+    head = sinks.manifest_version(tbl)
     winner_marker = json.load(open(f"{mdir}/v{head}/_COMMIT"))
-    m = sinks.current_manifest(spark, mdir)
+    m = sinks.current_manifest(tbl)
     # a stale writer believes head+1 is free — but it is already
     # committed by the time its manifest write lands
     with pytest.raises(sinks.SnapshotConflict):
@@ -250,7 +251,7 @@ def test_materialize_deletes_round_trip(spark, tmp_path):
     assert led["dv_files_removed"] == 1
     assert sorted(tuple(r) for r in read_table(spark, tbl).collect()) == before
     assert glob.glob(tbl + "/_deletes/*/*.parquet") == []
-    head = sinks.manifest_version(spark, tbl + "/_stats_manifest")
+    head = sinks.manifest_version(tbl)
     assert "dvs" not in _markers(tbl)[head]
     led2 = materialize_deletes(spark, tbl)
     assert led2["files_rewritten"] == 0 and led2["dv_files_removed"] == 0
@@ -267,7 +268,7 @@ def test_cow_ops_on_dv_table_do_not_resurrect(spark, tmp_path):
     )
     merge_into(spark, src, tbl, keys=["k"], strategy="merge-on-read")
     # CoW delete overlapping the suppressed span rewrites those files
-    led = delete_where(spark, tbl, None, {"k": (0, 30)})
+    led = delete_where(spark, tbl, {"k": (0, 30)})
     assert led["files_rewritten"] >= 1
     t = read_table(spark, tbl)
     assert t.count() == 100 - 31  # 0..30 gone entirely
@@ -334,7 +335,7 @@ def test_mor_crash_before_commit_rolls_back_tombstone(
     # recovery (at the head of the retried merge) removed the crashed
     # attempt's orphan tombstone FILE; vacuum clears its empty dir
     assert len(glob.glob(tbl + "/_deletes/*/*.parquet")) == 1
-    sinks.vacuum_table(spark, tbl, min_age_s=0)
+    sinks.vacuum_table(tbl, min_age_s=0)
     assert len(glob.glob(tbl + "/_deletes/*")) == 1
     t2 = read_table(spark, tbl)
     assert t2.count() == 200 and t2.filter("v = -9").count() == 20
@@ -390,8 +391,8 @@ def test_change_feed_across_rewrites(spark, tmp_path):
         ),
         tbl, keys=["k"],
     )
-    delete_where(spark, tbl, None, {"k": (0, 2)})  # v2: 3 deletes
-    update_where(spark, tbl, None, {"k": (3, 4)}, {"v": "v + 100"})  # v3
+    delete_where(spark, tbl, {"k": (0, 2)})  # v2: 3 deletes
+    update_where(spark, tbl, {"k": (3, 4)}, {"v": "v + 100"})  # v3
     cf = table_changes(spark, tbl, 0, change_feed=True)
     got = {
         (r["_commit_version"], r["_change_type"]): r["count"]
@@ -438,7 +439,7 @@ def test_default_mode_detects_dv_change(spark, tmp_path):
     """A merge-on-read commit removes no files but changes row
     visibility — append-span CDC must refuse that span too."""
     tbl = _seed(spark, tmp_path, n=100, files=2)
-    v0 = sinks.manifest_version(spark, tbl + "/_stats_manifest")
+    v0 = sinks.manifest_version(tbl)
     merge_into(
         spark,
         spark.range(5).select(
@@ -490,7 +491,7 @@ def test_restore_table_rolls_back_as_a_new_commit(spark, tmp_path):
     deletion vectors pin, the txn map carries forward, and a restore
     across a copy-on-write rewrite (whose files are gone) raises."""
     tbl = _seed(spark, tmp_path, n=100, files=2)  # v0, v1
-    good_v = sinks.manifest_version(spark, tbl + "/_stats_manifest")
+    good_v = sinks.manifest_version(tbl)
     # junk commits to roll back: an append and a MOR merge
     append_files(
         spark,
@@ -539,7 +540,7 @@ def test_restore_table_rolls_back_as_a_new_commit(spark, tmp_path):
 
     # restore ACROSS a rewrite: the rewrite swept the old files — raise
     tbl2 = _seed(spark, tmp_path.joinpath("b"), n=100, files=2)
-    v_pre = sinks.manifest_version(spark, tbl2 + "/_stats_manifest")
+    v_pre = sinks.manifest_version(tbl2)
     merge_into(
         spark,
         spark.range(5).select(
@@ -562,7 +563,7 @@ def test_restore_preserves_mor_suppression(spark, tmp_path):
         ),
         tbl, keys=["k"], strategy="merge-on-read",
     )
-    mor_v = sinks.manifest_version(spark, tbl + "/_stats_manifest")
+    mor_v = sinks.manifest_version(tbl)
     append_files(
         spark,
         spark.range(500, 520).select(
@@ -590,13 +591,13 @@ def test_cluster_table_relayouts_through_the_log(spark, tmp_path):
         (F.col("id") * 2).alias("v"),
     ).repartition(8)  # hash layout: zero skipping
     append_files(spark, df, tbl, cols=["k"])
-    m0 = sinks.current_manifest(spark, tbl + "/_stats_manifest")
+    m0 = sinks.current_manifest(tbl)
     assert len(sinks.prune_files(m0, {"k": (1000, 2000)})) == 8
 
     led = sinks.cluster_table(spark, tbl, ["k"], target_bytes=1 << 18)
     assert led["rows_before"] == led["rows_after"] == 100_000
     assert led["files_rewritten"] == 8
-    m1 = sinks.current_manifest(spark, tbl + "/_stats_manifest")
+    m1 = sinks.current_manifest(tbl)
     kept = sinks.prune_files(m1, {"k": (1000, 2000)})
     assert len(kept) < m1.num_rows  # tiling, not table
     t = read_table(spark, tbl, {"k": (1000, 2000)})
@@ -635,7 +636,7 @@ def test_driver_side_stats_handle_timestamp_and_decimal(spark, tmp_path):
         "cast(id as decimal(10,2)) as d",
     )
     append_files(spark, b2, tbl)  # driver-side stats path
-    m = sinks.current_manifest(spark, tbl + "/_stats_manifest")
+    m = sinks.current_manifest(tbl)
     span = (
         datetime.datetime(2026, 5, 1), datetime.datetime(2026, 12, 1)
     )
@@ -650,14 +651,11 @@ def test_driver_side_stats_handle_timestamp_and_decimal(spark, tmp_path):
 def test_lock_key_normalization():
     """Spelling variants of one table path must map to ONE lock, and a
     non-local URI is refused, naming the path."""
-    k = sinks._local_path("/a/b/_stats_manifest")
-    assert sinks._local_path("/a/b/_stats_manifest/") == k
-    assert sinks._local_path("file:///a/b/_stats_manifest") == k
-    assert sinks._local_path("/a/./b/_stats_manifest") == k
-    assert (
-        sinks._log_lock("/a/b/_stats_manifest")
-        is sinks._log_lock("file:///a/b/_stats_manifest/")
-    )
+    k = sinks._local_path("/a/b")
+    assert sinks._local_path("/a/b/") == k
+    assert sinks._local_path("file:///a/b") == k
+    assert sinks._local_path("/a/./b") == k
+    assert sinks._log_lock("/a/b") is sinks._log_lock("file:///a/b/")
     for uri in ("hdfs://nn/a/b", "s3a://bucket/a/b"):
         with pytest.raises(ValueError, match=re.escape(uri)):
             sinks._local_path(uri)
@@ -755,8 +753,8 @@ def test_two_processes_both_land(spark, tmp_path):
     assert t.filter("v = -1").count() == 300  # parent's batches
     assert t.filter("v = -2").count() == 300  # child's batches
     # version numbers are a contiguous serialized history
-    mdir = tbl + "/_stats_manifest"
-    assert sinks.manifest_version(spark, mdir) == 1 + 6
+    mdir = manifest_dir(tbl)
+    assert sinks.manifest_version(tbl) == 1 + 6
     assert not os.path.exists(mdir + "/_LOCK")  # lease released
     # a collided append never rewrites or duplicates its data files:
     # the table holds EXACTLY the files each batch's final ledger
@@ -769,7 +767,7 @@ def test_two_processes_both_land(spark, tmp_path):
     )
     on_disk = len(glob.glob(tbl + "/*.parquet"))
     assert on_disk == 2 + parent_files + child_files  # 2 = seed
-    m = sinks.current_manifest(spark, mdir)
+    m = sinks.current_manifest(tbl)
     assert m.num_rows == on_disk  # every file committed, none orphaned
 
 
@@ -791,7 +789,7 @@ def test_vacuum_sweeps_orphan_sidecars(spark, tmp_path):
     open(tbl + "/_deletes/v99-orphan/part-0.parquet", "w").close()
     os.makedirs(tbl + "/_changes/v99-orphan")
     open(tbl + "/_changes/v99-orphan/part-0.parquet", "w").close()
-    removed = sinks.vacuum_table(spark, tbl, min_age_s=0)
+    removed = sinks.vacuum_table(tbl, min_age_s=0)
     assert any("v99-orphan" in r for r in removed)
     assert glob.glob(tbl + "/_deletes/*") == live  # referenced one kept
     assert glob.glob(tbl + "/_changes/*") == []
@@ -899,7 +897,7 @@ def test_mor_delete_rewrites_zero_files(spark, tmp_path):
         p: os.path.getmtime(p) for p in glob.glob(tbl + "/*.parquet")
     }
     led = delete_where(
-        spark, tbl, None, {"u": 3}, strategy="merge-on-read",
+        spark, tbl, {"u": 3}, strategy="merge-on-read",
         keys=["k"], txn=("gdpr", 1),
     )
     assert led["files_rewritten"] == 0 and led["files_added"] == 0
@@ -915,7 +913,7 @@ def test_mor_delete_rewrites_zero_files(spark, tmp_path):
     assert t.filter("u = 4").count() == 143
     # exactly-once: the replayed batch id short-circuits
     led2 = delete_where(
-        spark, tbl, None, {"u": 3}, strategy="merge-on-read",
+        spark, tbl, {"u": 3}, strategy="merge-on-read",
         keys=["k"], txn=("gdpr", 1),
     )
     assert led2["skipped"] is True
@@ -928,7 +926,7 @@ def test_mor_delete_materialize_round_trip(spark, tmp_path):
     the tombstone sidecar retired."""
     tbl = _seed_scattered(spark, tmp_path, n=200, files=4)
     delete_where(
-        spark, tbl, None, {"u": 5}, strategy="merge-on-read", keys=["k"]
+        spark, tbl, {"u": 5}, strategy="merge-on-read", keys=["k"]
     )
     want = sorted(
         tuple(r) for r in read_table(spark, tbl).collect()
@@ -952,7 +950,7 @@ def test_mor_delete_writes_cdc_delete_rows(spark, tmp_path):
     )
     append_files(spark, df.coalesce(1), tbl, cols=["k"], enable_cdf=True)
     led = delete_where(
-        spark, tbl, None, {"u": 2}, strategy="merge-on-read", keys=["k"]
+        spark, tbl, {"u": 2}, strategy="merge-on-read", keys=["k"]
     )
     assert led["rows_deleted"] == 20 and led["files_added"] == 0
     feed = table_changes(spark, tbl, 0, change_feed=True)
@@ -971,7 +969,7 @@ def test_mor_delete_then_reinsert_key_survives(spark, tmp_path):
     key resurrects it with the new values."""
     tbl = _seed_scattered(spark, tmp_path, n=100, files=2)
     delete_where(
-        spark, tbl, None, {"u": 1}, strategy="merge-on-read", keys=["k"]
+        spark, tbl, {"u": 1}, strategy="merge-on-read", keys=["k"]
     )
     assert read_table(spark, tbl).filter("k = 1").count() == 0
     append_files(
@@ -1004,12 +1002,12 @@ def test_mor_delete_guards(spark, tmp_path):
     strategies all refuse loudly."""
     tbl = _seed_scattered(spark, tmp_path, n=100, files=2)
     with pytest.raises(ValueError, match="needs keys"):
-        delete_where(spark, tbl, None, {"u": 1}, strategy="merge-on-read")
+        delete_where(spark, tbl, {"u": 1}, strategy="merge-on-read")
     with pytest.raises(ValueError, match="strategy"):
-        delete_where(spark, tbl, None, {"u": 1}, strategy="bogus")
+        delete_where(spark, tbl, {"u": 1}, strategy="bogus")
     with pytest.raises(ValueError, match="not table columns"):
         delete_where(
-            spark, tbl, None, {"u": 1}, strategy="merge-on-read",
+            spark, tbl, {"u": 1}, strategy="merge-on-read",
             keys=["nope"],
         )
     merge_into(
@@ -1023,7 +1021,7 @@ def test_mor_delete_guards(spark, tmp_path):
     )
     with pytest.raises(ValueError, match="different key"):
         delete_where(
-            spark, tbl, None, {"u": 1}, strategy="merge-on-read",
+            spark, tbl, {"u": 1}, strategy="merge-on-read",
             keys=["k", "u"],
         )
 
@@ -1043,7 +1041,7 @@ def test_mor_update_rewrites_zero_files(spark, tmp_path):
         p: os.path.getmtime(p) for p in glob.glob(tbl + "/*.parquet")
     }
     led = update_where(
-        spark, tbl, None, {"u": 2}, {"v": "v + 1000000"},
+        spark, tbl, {"u": 2}, {"v": "v + 1000000"},
         strategy="merge-on-read", keys=["k"], txn=("rect", 1),
     )
     assert led["files_rewritten"] == 0 and led["dv_files"] == 1
@@ -1062,7 +1060,7 @@ def test_mor_update_rewrites_zero_files(spark, tmp_path):
     assert t.filter("v >= 1000000").count() == 143
     # replay short-circuits before any scan
     led2 = update_where(
-        spark, tbl, None, {"u": 2}, {"v": "v + 1000000"},
+        spark, tbl, {"u": 2}, {"v": "v + 1000000"},
         strategy="merge-on-read", keys=["k"], txn=("rect", 1),
     )
     assert led2["skipped"] is True
@@ -1080,7 +1078,7 @@ def test_mor_update_cdc_and_materialize(spark, tmp_path):
     )
     append_files(spark, df.coalesce(1), tbl, cols=["k"], enable_cdf=True)
     update_where(
-        spark, tbl, None, {"u": 3}, {"v": "v * -1"},
+        spark, tbl, {"u": 3}, {"v": "v * -1"},
         strategy="merge-on-read", keys=["k"],
     )
     feed = table_changes(spark, tbl, 0, change_feed=True)
@@ -1098,11 +1096,11 @@ def test_mor_update_guards(spark, tmp_path):
     tbl = _seed_scattered(spark, tmp_path, n=100, files=2)
     with pytest.raises(ValueError, match="needs keys"):
         update_where(
-            spark, tbl, None, {"u": 1}, {"v": "0"},
+            spark, tbl, {"u": 1}, {"v": "0"},
             strategy="merge-on-read",
         )
     with pytest.raises(ValueError, match="strategy"):
-        update_where(spark, tbl, None, {"u": 1}, {"v": "0"}, strategy="x")
+        update_where(spark, tbl, {"u": 1}, {"v": "0"}, strategy="x")
 
 
 def test_zero_match_mor_ops_are_clean_noops(spark, tmp_path):
@@ -1113,14 +1111,14 @@ def test_zero_match_mor_ops_are_clean_noops(spark, tmp_path):
     leave the table untouched (found by the model-based random
     programs: the same residue deleted twice)."""
     tbl = _seed_scattered(spark, tmp_path, n=100, files=2)
-    head = sinks.manifest_version(spark, tbl + "/_stats_manifest")
+    head = sinks.manifest_version(tbl)
     led = delete_where(
-        spark, tbl, None, {"u": 99}, strategy="merge-on-read", keys=["k"]
+        spark, tbl, {"u": 99}, strategy="merge-on-read", keys=["k"]
     )
     assert led["rows_deleted"] == 0 and led["dv_files"] == 0
-    assert sinks.manifest_version(spark, tbl + "/_stats_manifest") == head
+    assert sinks.manifest_version(tbl) == head
     led = update_where(
-        spark, tbl, None, {"u": 99}, {"v": "v + 1"},
+        spark, tbl, {"u": 99}, {"v": "v + 1"},
         strategy="merge-on-read", keys=["k"],
     )
     assert led["rows_updated"] == 0
@@ -1128,10 +1126,10 @@ def test_zero_match_mor_ops_are_clean_noops(spark, tmp_path):
     assert t.count() == 100 and t.filter("v > 100000").count() == 0
     # deleting a residue TWICE: the second pass matches nothing
     delete_where(
-        spark, tbl, None, {"u": 3}, strategy="merge-on-read", keys=["k"]
+        spark, tbl, {"u": 3}, strategy="merge-on-read", keys=["k"]
     )
     led = delete_where(
-        spark, tbl, None, {"u": 3}, strategy="merge-on-read", keys=["k"]
+        spark, tbl, {"u": 3}, strategy="merge-on-read", keys=["k"]
     )
     assert led["rows_deleted"] == 0
     assert read_table(spark, tbl).filter("u = 3").count() == 0
@@ -1177,12 +1175,12 @@ def test_dv_debt_consolidates_at_checkpoint(spark, tmp_path):
     # v4..v9: six scattered MOR deletes, one key each
     for i, k in enumerate(range(10, 16)):
         delete_where(
-            spark, tbl, None, {"k": (k, k)},
+            spark, tbl, {"k": (k, k)},
             strategy="merge-on-read", keys=["k"],
             txn=("dvck", i),
         )
     # v9 was not yet a checkpoint; debt = 6 sidecars
-    mdir = tbl + "/_stats_manifest"
+    mdir = manifest_dir(tbl)
     assert len(sinks._active_dvs(mdir)) == 6
     # re-insert one deleted key: its NEW row postdates the tombstone
     # and must survive the fold
@@ -1211,7 +1209,7 @@ def test_dv_debt_consolidates_at_checkpoint(spark, tmp_path):
     # more MOR commits after the fold stack on top of it, bounded by
     # the checkpoint cadence
     delete_where(
-        spark, tbl, None, {"k": (20, 20)},
+        spark, tbl, {"k": (20, 20)},
         strategy="merge-on-read", keys=["k"],
     )  # v11
     assert len(sinks._active_dvs(mdir)) == 2
@@ -1219,11 +1217,11 @@ def test_dv_debt_consolidates_at_checkpoint(spark, tmp_path):
     assert t2.count() == 200 - 7 + 1 and t2.filter("k = 12").count() == 1
 
     # history surfaces the debt per snapshot
-    hist = {h["version"]: h for h in sinks.table_history(spark, tbl)}
+    hist = {h["version"]: h for h in sinks.table_history(tbl)}
     assert hist[11]["dv_files"] == 2 and hist[11]["dv_rows"] == 7
 
     # retired pre-fold sidecars are sweepable debris, not leaks
-    sinks.vacuum_table(spark, tbl, min_age_s=0)
+    sinks.vacuum_table(tbl, min_age_s=0)
     on_disk = {
         p
         for p in glob.glob(tbl + "/_deletes/*/*.parquet")
@@ -1253,10 +1251,10 @@ def test_dv_consolidation_preserves_time_travel_on_retain(spark, tmp_path):
     )  # v0
     for i in range(10):  # v1..v10 — v10 checkpoints + consolidates
         delete_where(
-            spark, tbl, None, {"k": (i, i)},
+            spark, tbl, {"k": (i, i)},
             strategy="merge-on-read", keys=["k"],
         )
-    mdir = tbl + "/_stats_manifest"
+    mdir = manifest_dir(tbl)
     assert len(sinks._active_dvs(mdir)) == 1
     assert len(sinks._active_dvs(mdir, version=9)) == 9
     # head = fold applied; v9 = pre-fold sidecars still on disk
@@ -1300,8 +1298,8 @@ def test_dv_suppression_broadcast_hint_is_size_gated(
     monkeypatch.undo()
     # pre-r13 entries (no row stamp) keep the hint — per-commit
     # batch-sized by construction
-    mdir = tbl + "/_stats_manifest"
-    head_v = sinks.manifest_version(spark, mdir)
+    mdir = manifest_dir(tbl)
+    head_v = sinks.manifest_version(tbl)
     import json as _json
     mp = os.path.join(mdir, f"v{head_v}", "_COMMIT")
     m = _json.loads(open(mp).read())
@@ -1351,7 +1349,7 @@ def test_two_processes_racing_mor_deletes_land_exactly_once(
             lo = 50 + 10 * b
             led = retry_on_conflict(
                 lambda: delete_where(
-                    spark, tbl, None, {"k": (lo, lo + 9)},
+                    spark, tbl, {"k": (lo, lo + 9)},
                     strategy="merge-on-read", keys=["k"],
                 ),
                 attempts=10,
@@ -1372,8 +1370,8 @@ def test_two_processes_racing_mor_deletes_land_exactly_once(
     t = read_table(spark, tbl)
     assert t.count() == 40
     assert t.filter("k < 30 or (k >= 50 and k < 80)").count() == 0
-    mdir = tbl + "/_stats_manifest"
-    assert sinks.manifest_version(spark, mdir) == 1 + 6  # serialized
+    mdir = manifest_dir(tbl)
+    assert sinks.manifest_version(tbl) == 1 + 6  # serialized
     assert not os.path.exists(mdir + "/_LOCK")  # lease released
     assert not os.path.exists(mdir + "/_TXN")
     # zero data files were rewritten by either process's erasure
@@ -1397,7 +1395,7 @@ def test_maintain_table_composes_upkeep(spark, tmp_path):
         )
     for i in range(3):  # v5..v7 — three MOR deletes, below threshold
         delete_where(
-            spark, tbl, None, {"k": (i, i)},
+            spark, tbl, {"k": (i, i)},
             strategy="merge-on-read", keys=["k"],
         )
     led = sinks.maintain_table(spark, tbl, min_age_s=0)
@@ -1416,7 +1414,7 @@ def test_maintain_table_composes_upkeep(spark, tmp_path):
     # push the debt over the files threshold -> materialize fires
     for i in range(10, 19):
         delete_where(
-            spark, tbl, None, {"k": (i, i)},
+            spark, tbl, {"k": (i, i)},
             strategy="merge-on-read", keys=["k"],
         )
     led3 = sinks.maintain_table(
@@ -1424,12 +1422,12 @@ def test_maintain_table_composes_upkeep(spark, tmp_path):
     )
     assert led3["dv_files"] > 4
     assert led3["materialize"] is not None
-    assert sinks._active_dvs(tbl + "/_stats_manifest") == []
+    assert sinks._active_dvs(manifest_dir(tbl)) == []
     t = read_table(spark, tbl)
     assert t.count() == 88 and t.filter("k >= 10 and k < 19").count() == 0
     # rows threshold leg: one fresh tombstone, tiny rows threshold
     delete_where(
-        spark, tbl, None, {"k": (30, 34)},
+        spark, tbl, {"k": (30, 34)},
         strategy="merge-on-read", keys=["k"],
     )
     led4 = sinks.maintain_table(
@@ -1455,10 +1453,10 @@ def test_restore_to_pre_fold_snapshot(spark, tmp_path):
     )
     for i in range(10):  # v1..v10; fold at v10
         delete_where(
-            spark, tbl, None, {"k": (i, i)},
+            spark, tbl, {"k": (i, i)},
             strategy="merge-on-read", keys=["k"],
         )
-    mdir = tbl + "/_stats_manifest"
+    mdir = manifest_dir(tbl)
     assert len(sinks._active_dvs(mdir)) == 1  # folded
     led = sinks.restore_table(spark, tbl, version=5)
     assert led["restored_to"] == 5
@@ -1469,7 +1467,7 @@ def test_restore_to_pre_fold_snapshot(spark, tmp_path):
     assert t.filter("k >= 5 and k < 10").count() == 5  # un-deleted
     for i in range(20, 26):  # more deletes on the restored head
         delete_where(
-            spark, tbl, None, {"k": (i, i)},
+            spark, tbl, {"k": (i, i)},
             strategy="merge-on-read", keys=["k"],
         )
     assert read_table(spark, tbl).count() == 89
@@ -1489,11 +1487,11 @@ def test_unstamped_consolidated_dv_disables_broadcast_hint(
     tbl = _seed(spark, tmp_path, n=100, files=2)
     for i in range(10):  # v1..v10; v10 checkpoints + consolidates
         delete_where(
-            spark, tbl, None, {"k": (i, i)},
+            spark, tbl, {"k": (i, i)},
             strategy="merge-on-read", keys=["k"],
         )
-    mdir = tbl + "/_stats_manifest"
-    head_v = sinks.manifest_version(spark, mdir)
+    mdir = manifest_dir(tbl)
+    head_v = sinks.manifest_version(tbl)
     mp = os.path.join(mdir, f"v{head_v}", "_COMMIT")
     m = _json.loads(open(mp).read())
     assert any(d.get("per_row") for d in m["dvs"])  # fold happened

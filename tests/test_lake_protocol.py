@@ -15,7 +15,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from evmtrace_etl_spark import sinks
+from evmtrace_etl_spark.lake_log import manifest_dir
 from evmtrace_etl_spark.sinks import (
+    ConstraintViolation,
     LakeUpsertSink,
     ProtocolUnsupported,
     append_files,
@@ -44,7 +46,7 @@ def _seed(spark, tmp_path, name="tbl") -> str:
 
 
 def _head_marker(tbl: str) -> dict:
-    mdir = tbl + "/_stats_manifest"
+    mdir = manifest_dir(tbl)
     vs = sorted(
         int(n[1:])
         for n in os.listdir(mdir)
@@ -55,16 +57,24 @@ def _head_marker(tbl: str) -> dict:
         return json.load(f)
 
 
+def _restamp_head(tbl: str, **stamps) -> dict:
+    """Hand-edit the head marker: set ``stamps`` on it, every other key
+    kept.  Returns the edited marker."""
+    m = {**_head_marker(tbl), **stamps}
+    vdir = os.path.join(manifest_dir(tbl), f"v{m['version']}")
+    with open(os.path.join(vdir, "_COMMIT"), "w") as f:
+        f.write(json.dumps(m))
+    return m
+
+
 def _stamp_protocol(tbl: str, min_reader: int, min_writer: int) -> None:
     """Hand-edit the head marker to a future protocol level — the
     older-build-meets-newer-table simulation."""
-    mdir = tbl + "/_stats_manifest"
-    m = _head_marker(tbl)
-    vdir = os.path.join(mdir, f"v{m['version']}")
-    m["protocol"] = {"min_reader": min_reader, "min_writer": min_writer}
-    m["features"] = ["from-the-future"]
-    with open(os.path.join(vdir, "_COMMIT"), "w") as f:
-        f.write(json.dumps(m))
+    _restamp_head(
+        tbl,
+        protocol={"min_reader": min_reader, "min_writer": min_writer},
+        features=["from-the-future"],
+    )
 
 
 @pytest.mark.slow
@@ -120,7 +130,7 @@ def test_dv_consolidation_stamps_per_row_feature(spark, tmp_path):
     tbl = _seed(spark, tmp_path)
     for i in range(10):  # v1..v10; v10 checkpoints + consolidates
         delete_where(
-            spark, tbl, None, {"k": (i, i)},
+            spark, tbl, {"k": (i, i)},
             strategy="merge-on-read", keys=["k"],
         )
     m = _head_marker(tbl)
@@ -153,7 +163,7 @@ def test_future_protocol_refuses_reads_and_writes(spark, tmp_path):
     with pytest.raises(ProtocolUnsupported, match="writer feature level"):
         merge_into(spark, batch, tbl, keys=["k"])
     with pytest.raises(ProtocolUnsupported, match="writer feature level"):
-        delete_where(spark, tbl, None, {"k": (0, 5)})
+        delete_where(spark, tbl, {"k": (0, 5)})
     with pytest.raises(ProtocolUnsupported, match="writer feature level"):
         rename_column(spark, tbl, "v", "vv")
 
@@ -174,44 +184,6 @@ def test_writer_only_future_level_still_reads(spark, tmp_path):
             ).coalesce(1),
             tbl,
         )
-
-
-@pytest.mark.slow
-def test_explicit_protocol_upgrade(spark, tmp_path):
-    """upgrade_table_protocol raises the floor as a metadata-only
-    commit BEFORE any feature is used, carries forward, never
-    downgrades, no-ops at-or-below the current stamp, and refuses
-    levels above the build's own support."""
-    tbl = _seed(spark, tmp_path)
-    got = sinks.upgrade_table_protocol(spark, tbl, min_writer=2)
-    assert got["protocol"] == {"min_reader": 1, "min_writer": 2}
-    m = _head_marker(tbl)
-    assert m["protocol"] == {"min_reader": 1, "min_writer": 2}
-    assert m["op"].startswith("upgrade-protocol")
-    # carried by a plain append, never downgraded
-    append_files(
-        spark,
-        spark.range(100, 103).select(
-            F.col("id").alias("k"), F.lit(1).cast("int").alias("v")
-        ).coalesce(1),
-        tbl,
-    )
-    assert _head_marker(tbl)["protocol"] == {
-        "min_reader": 1, "min_writer": 2,
-    }
-    # at-or-below request: commit-free no-op
-    v = _head_marker(tbl)["version"]
-    got = sinks.upgrade_table_protocol(spark, tbl, min_writer=1)
-    assert got["version"] == v
-    # above the build's support: refused
-    with pytest.raises(ValueError, match="this build supports"):
-        sinks.upgrade_table_protocol(spark, tbl, min_reader=99)
-    # the table still reads and writes at this build's level
-    assert read_table(spark, tbl).count() == 53
-    # history surfaces the stamp per snapshot
-    hist = sinks.table_history(spark, tbl)
-    assert hist[-1]["protocol"] == {"min_reader": 1, "min_writer": 2}
-    assert hist[0]["protocol"] is None  # pre-upgrade snapshot
 
 
 @pytest.mark.slow
@@ -236,11 +208,11 @@ def test_future_protocol_refuses_before_any_data_work(spark, tmp_path):
     )
     # a little DV debt so materialize/maintain would have real work
     delete_where(
-        spark, tbl, None, {"k": (0, 4)},
+        spark, tbl, {"k": (0, 4)},
         strategy="merge-on-read", keys=["k"],
     )
     _stamp_protocol(tbl, min_reader=1, min_writer=99)
-    mdir = tbl + "/_stats_manifest"
+    mdir = manifest_dir(tbl)
     before = {
         p: os.path.getmtime(p)
         for p in glob.glob(tbl + "/**/*.parquet", recursive=True)
@@ -265,14 +237,14 @@ def test_future_protocol_refuses_before_any_data_work(spark, tmp_path):
     ops = [
         lambda: sinks.compact_table(spark, tbl, target_bytes=1 << 20),
         lambda: sinks.materialize_deletes(spark, tbl),
-        lambda: sinks.vacuum_table(spark, tbl, min_age_s=0),
+        lambda: sinks.vacuum_table(tbl, min_age_s=0),
         lambda: sinks.maintain_table(spark, tbl, min_age_s=0),
-        lambda: sinks.update_stats_index(spark, tbl, None),
+        lambda: sinks.update_stats_index(spark, tbl),
         lambda: sinks.restore_table(spark, tbl, version=0),
         lambda: sinks.add_table_constraint(spark, tbl, "v_ok", "v >= 0"),
-        lambda: delete_where(spark, tbl, None, {"k": (5, 9)}),
+        lambda: delete_where(spark, tbl, {"k": (5, 9)}),
         lambda: delete_where(
-            spark, tbl, None, {"k": (5, 9)},
+            spark, tbl, {"k": (5, 9)},
             strategy="merge-on-read", keys=["k"],
         ),
         lambda: append_files(
@@ -290,9 +262,6 @@ def test_future_protocol_refuses_before_any_data_work(spark, tmp_path):
             tbl, keys=["k"],
         ),
         lambda: rename_column(spark, tbl, "v", "vv"),
-        lambda: sinks.drop_column(spark, tbl, "v"),
-        lambda: sinks.drop_table_constraint(spark, tbl, "v_ok"),
-        lambda: sinks.upgrade_table_protocol(spark, tbl, min_writer=2),
     ]
     for op in ops:
         with pytest.raises(ProtocolUnsupported, match="feature level"):
@@ -312,7 +281,7 @@ def test_future_protocol_refuses_before_any_data_work(spark, tmp_path):
 
 def _markers(tbl: str) -> dict[int, dict]:
     """Every committed marker currently in ``tbl``'s log, by version."""
-    mdir = os.path.join(tbl, "_stats_manifest")
+    mdir = manifest_dir(tbl)
     out = {}
     for n in os.listdir(mdir):
         mp = os.path.join(mdir, n, "_COMMIT")
@@ -341,7 +310,7 @@ def test_log_records_have_one_shape(spark, tmp_path):
 
     seen: dict[int, dict] = {}
     rows(0, 40, 0).repartition(2).write.parquet(tbl)
-    update_stats_index(spark, tbl, None, ["k"])
+    update_stats_index(spark, tbl, ["k"])
     seen.update(_markers(tbl))
     append_files(spark, rows(40, 60, 1).coalesce(1), tbl)
     seen.update(_markers(tbl))
@@ -351,7 +320,7 @@ def test_log_records_have_one_shape(spark, tmp_path):
     sink.upsert(rows(0, 10, 3).coalesce(1), "t", ["k"], mode="update")
     seen.update(_markers(tbl))
     delete_where(
-        spark, tbl, None, {"k": (20, 24)},
+        spark, tbl, {"k": (20, 24)},
         strategy="merge-on-read", keys=["k"],
     )
     seen.update(_markers(tbl))
@@ -416,7 +385,6 @@ def test_snapshot_replays_the_markers(spark, tmp_path):
     import datetime
 
     tbl = str(tmp_path / "t")
-    mdir = tbl + "/_stats_manifest"
 
     def batch(lo: int, hi: int, month: int, e: bool = False):
         day0 = datetime.date(2024, month, 1)
@@ -451,11 +419,11 @@ def test_snapshot_replays_the_markers(spark, tmp_path):
         replay = (replay - set(markers[v]["removed"])) | set(
             markers[v]["added"]
         )
-        snap = sinks.current_manifest(spark, mdir, version=v)
+        snap = sinks.current_manifest(tbl, version=v)
         assert set(snap["file"].to_pylist()) == replay, v
         assert snap.num_rows == len(replay), v
 
-    head = sinks.current_manifest(spark, mdir)
+    head = sinks.current_manifest(tbl)
     files = set(head["file"].to_pylist())
     assert "key_min" in head.column_names and "k_min" not in head.column_names
     evolved = set(markers[3]["added"]) | set(markers[5]["added"])
@@ -489,3 +457,90 @@ def test_snapshot_replays_the_markers(spark, tmp_path):
     assert kept({"ts": (lo, hi)}) == set(markers[1]["added"])
     assert read_table(spark, tbl, {"ts": (lo, hi)}).count() == 3
     assert read_table(spark, tbl).count() == 60
+
+
+def test_older_stamps_keep_working(spark, tmp_path):
+    """A head marker carrying a protocol floor, a CHECK-constraint map
+    and column-mapping bookkeeping with a retired physical name — the
+    stamps an older build's protocol-upgrade, drop-column and
+    drop-constraint DDL left behind — keeps working through
+    ``append_files``, ``merge_into``, ``rename_column`` and
+    ``read_table``: every later commit carries the floor and the
+    constraints, a violating append is refused, and neither a rename
+    nor a re-added column takes the retired physical name, so the
+    retained files' stale values never resurrect."""
+    floor = {"min_reader": 1, "min_writer": 2}
+    cons = {"v_ok": "v >= 0"}
+
+    def batch(lo: int, hi: int, v: int = 1, w: int | None = None):
+        cols = [
+            F.col("id").alias("k"),
+            F.lit(v).cast("int").alias("v"),
+            F.lit(7).cast("int").alias("u"),
+        ]
+        if w is not None:
+            cols.append(F.lit(w).cast("long").alias("w"))
+        return spark.range(lo, hi).select(*cols).coalesce(1)
+
+    def later(tbl: str, v0: int) -> list[dict]:
+        return [m for v, m in sorted(_markers(tbl).items()) if v > v0]
+
+    # the floor and the constraints alone: carried exactly
+    flat = str(tmp_path / "flat")
+    append_files(spark, batch(0, 10), flat, cols=["k"], keep_versions=10)
+    v0 = _restamp_head(flat, protocol=floor, constraints=cons)["version"]
+    append_files(spark, batch(10, 20), flat)
+    merge_into(spark, batch(5, 15, v=2), flat, keys=["k"])
+    with pytest.raises(ConstraintViolation, match="v_ok"):
+        append_files(spark, batch(20, 21, v=-1), flat)
+    assert [(m["protocol"], m["constraints"]) for m in later(flat, v0)] == [
+        (floor, cons)
+    ] * 2
+    assert read_table(spark, flat).count() == 20
+
+    # all three, as an older build's drop of column ``w`` left them:
+    # the surviving fields mapped, ``w``'s physical name retired.  The
+    # k 0..4 file still stores w = 99 and no later commit rewrites it.
+    mapped = str(tmp_path / "mapped")
+    append_files(
+        spark, batch(0, 5, w=99), mapped, cols=["k"], keep_versions=10
+    )
+    append_files(spark, batch(5, 10, w=99), mapped)
+    schema = _head_marker(mapped)["schema"]
+    fields = [
+        {**f, "metadata": {"lake.id": i, "lake.phys": f["name"]}}
+        for i, f in enumerate(schema["fields"], start=1)
+    ]
+    v0 = _restamp_head(
+        mapped,
+        protocol=floor,
+        constraints=cons,
+        features=["column-mapping"],
+        col_mapping={"max_id": len(fields), "retired_phys": ["w"]},
+        schema={**schema, "fields": [f for f in fields if f["name"] != "w"]},
+    )["version"]
+    merge_into(spark, batch(5, 15, v=2), mapped, keys=["k"])
+    rename_column(spark, mapped, "u", "u2")
+    append_files(  # re-adds w
+        spark, batch(20, 25, w=5).withColumnRenamed("u", "u2"), mapped
+    )
+    with pytest.raises(ConstraintViolation, match="v_ok"):
+        append_files(
+            spark, batch(30, 31, v=-1).withColumnRenamed("u", "u2"), mapped
+        )
+    commits = later(mapped, v0)
+    assert len(commits) == 3
+    for m in commits:
+        assert m["constraints"] == cons
+        assert m["protocol"]["min_writer"] >= floor["min_writer"]
+        assert m["col_mapping"]["retired_phys"] == ["w"]
+        assert "w" not in [
+            f["metadata"].get("lake.phys", f["name"])
+            for f in m["schema"]["fields"]
+        ]
+    out = read_table(spark, mapped)
+    assert out.columns == ["k", "v", "u2", "w"]
+    w_of = {r["k"]: r["w"] for r in out.collect()}
+    assert sorted(w_of) == list(range(15)) + list(range(20, 25))
+    assert all(w_of[k] is None for k in range(15))  # no stale 99
+    assert all(w_of[k] == 5 for k in range(20, 25))

@@ -18,6 +18,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from evmtrace_etl_spark import sinks
+from evmtrace_etl_spark.lake_log import manifest_dir
 from evmtrace_etl_spark.sinks import (
     SnapshotConflict,
     append_files,
@@ -120,7 +121,7 @@ def test_collided_append_recommits_without_rewriting_files(
     assert t.filter("v = -2").count() == 50
     assert t.filter("v = -3").count() == 50
     assert led["version"] == 2  # seed v0, competitor v1, victim v2
-    mdir = tbl + "/_stats_manifest"
+    mdir = manifest_dir(tbl)
     assert not os.path.exists(mdir + "/_TXN")  # intent cleared
 
 
@@ -147,7 +148,7 @@ def test_rebase_restamps_cdc_sidecars(spark, tmp_path, monkeypatch):
     assert got == {(1, -2), (2, -3)}
     # no orphaned pre-rebase sidecar files
     markers = {}
-    for mp in glob.glob(tbl + "/_stats_manifest/v*/_COMMIT"):
+    for mp in glob.glob(manifest_dir(tbl) + "/v*/_COMMIT"):
         with open(mp) as f:
             markers[json.load(f)["version"]] = mp
     live = set()
@@ -176,7 +177,7 @@ def test_winner_constraint_change_forces_full_retry(
         # the same marker shape it writes
         sinks._commit_manifest(
             spark,
-            tbl + "/_stats_manifest",
+            manifest_dir(tbl),
             None,
             removed=[],
             constraints={"v_big": "v >= -100"},
@@ -189,7 +190,7 @@ def test_winner_constraint_change_forces_full_retry(
     # rollback left no orphans and no intent
     t = read_table(spark, tbl)
     assert t.count() == 100
-    assert not os.path.exists(tbl + "/_stats_manifest/_TXN")
+    assert not os.path.exists(manifest_dir(tbl) + "/_TXN")
     # the plain retry (fresh snapshot, new constraint map) lands
     led = sinks.retry_on_conflict(
         lambda: append_files(
@@ -277,7 +278,7 @@ def test_winner_recovery_rolled_us_back_forces_full_retry(
     t = read_table(spark, tbl)
     assert t.count() == 150
     assert t.filter("v = -3").count() == 0
-    m = sinks.current_manifest(spark, tbl + "/_stats_manifest")
+    m = sinks.current_manifest(tbl)
     for f in m["file"].to_pylist():
         assert os.path.exists(f), f
     # the plain retry lands the batch cleanly
@@ -316,7 +317,7 @@ def test_collided_mor_delete_recommits_without_rescanning(
 
     state = _interleave_commit(monkeypatch, spark, tbl, competitor)
     led = sinks.delete_where(
-        spark, tbl, None, {"k": (0, 9)},
+        spark, tbl, {"k": (0, 9)},
         strategy="merge-on-read", keys=["k"],
     )
     assert led["rebased"] == 1 and led["rows_deleted"] == 10
@@ -347,9 +348,9 @@ def test_collided_mor_delete_recommits_without_rescanning(
     assert t.filter("k >= 5 and k <= 9").count() == 0
     # the dv entry kept the ORIGINAL read-snapshot stamp, not the
     # rebased commit version
-    dvs = sinks._active_dvs(tbl + "/_stats_manifest")
+    dvs = sinks._active_dvs(manifest_dir(tbl))
     assert [int(d["version"]) for d in dvs] == [1]
-    assert not os.path.exists(tbl + "/_stats_manifest/_TXN")
+    assert not os.path.exists(manifest_dir(tbl) + "/_TXN")
 
 
 def test_collided_mor_update_recommits_over_pure_append(
@@ -367,7 +368,7 @@ def test_collided_mor_update_recommits_over_pure_append(
 
     state = _interleave_commit(monkeypatch, spark, tbl, competitor)
     led = sinks.update_where(
-        spark, tbl, None, {"k": (0, 9)}, {"v": "v + 100000"},
+        spark, tbl, {"k": (0, 9)}, {"v": "v + 100000"},
         strategy="merge-on-read", keys=["k"], txn=("morreb", 1),
     )
     assert led["rows_updated"] == 10 and led["files_rewritten"] == 0
@@ -384,7 +385,7 @@ def test_collided_mor_update_recommits_over_pure_append(
     assert t.filter("v = -2").count() == 20
     # exactly-once across the rebase: the replay short-circuits
     assert sinks.update_where(
-        spark, tbl, None, {"k": (0, 9)}, {"v": "v + 100000"},
+        spark, tbl, {"k": (0, 9)}, {"v": "v + 100000"},
         strategy="merge-on-read", keys=["k"], txn=("morreb", 1),
     )["skipped"]
 
@@ -405,7 +406,7 @@ def test_mor_delete_vs_rewrite_winner_full_retries(
     # the competitor through the unlocked rewrite entry instead.
     def competitor():
         sinks._txn_rewrite.__wrapped__(
-            spark, tbl, None, {"k": (90, 99)},
+            spark, tbl, {"k": (90, 99)},
             lambda touched, hit: touched.filter(~hit),
             None, op="delete",
         )
@@ -413,16 +414,16 @@ def test_mor_delete_vs_rewrite_winner_full_retries(
     _interleave_commit(monkeypatch, spark, tbl, competitor)
     with pytest.raises(SnapshotConflict):
         sinks.delete_where(
-            spark, tbl, None, {"k": (0, 9)},
+            spark, tbl, {"k": (0, 9)},
             strategy="merge-on-read", keys=["k"],
         )
     # rollback left no tombstone and no intent
-    assert sinks._active_dvs(tbl + "/_stats_manifest") == []
-    assert not os.path.exists(tbl + "/_stats_manifest/_TXN")
+    assert sinks._active_dvs(manifest_dir(tbl)) == []
+    assert not os.path.exists(manifest_dir(tbl) + "/_TXN")
     # the bounded retry lands against the fresh snapshot
     led = sinks.retry_on_conflict(
         lambda: sinks.delete_where(
-            spark, tbl, None, {"k": (0, 9)},
+            spark, tbl, {"k": (0, 9)},
             strategy="merge-on-read", keys=["k"],
         )
     )
@@ -442,12 +443,12 @@ def test_two_racing_mor_deletes_commute_when_key_disjoint(
 
     def competitor():
         sinks._delete_mor.__wrapped__(
-            spark, tbl, None, {"k": (50, 59)}, ["k"],
+            spark, tbl, {"k": (50, 59)}, ["k"],
         )
 
     state = _interleave_commit(monkeypatch, spark, tbl, competitor)
     led = sinks.delete_where(
-        spark, tbl, None, {"k": (0, 9)},
+        spark, tbl, {"k": (0, 9)},
         strategy="merge-on-read", keys=["k"],
     )
     assert led["rebased"] == 1 and led["rows_deleted"] == 10
@@ -463,7 +464,7 @@ def test_two_racing_mor_deletes_commute_when_key_disjoint(
     assert t.count() == 80
     assert t.filter("k < 10 or (k >= 50 and k < 60)").count() == 0
     # both tombstones active, each with its own read-snapshot stamp
-    dvs = sinks._active_dvs(tbl + "/_stats_manifest")
+    dvs = sinks._active_dvs(manifest_dir(tbl))
     assert sorted(int(d["version"]) for d in dvs) == [1, 1]
 
 
@@ -478,19 +479,19 @@ def test_two_racing_mor_deletes_overlap_full_retries(
 
     def competitor():
         sinks._delete_mor.__wrapped__(
-            spark, tbl, None, {"k": (5, 14)}, ["k"],
+            spark, tbl, {"k": (5, 14)}, ["k"],
         )
 
     _interleave_commit(monkeypatch, spark, tbl, competitor)
     with pytest.raises(SnapshotConflict):
         sinks.delete_where(
-            spark, tbl, None, {"k": (0, 9)},
+            spark, tbl, {"k": (0, 9)},
             strategy="merge-on-read", keys=["k"],
         )
-    assert not os.path.exists(tbl + "/_stats_manifest/_TXN")
+    assert not os.path.exists(manifest_dir(tbl) + "/_TXN")
     led = sinks.retry_on_conflict(
         lambda: sinks.delete_where(
-            spark, tbl, None, {"k": (0, 9)},
+            spark, tbl, {"k": (0, 9)},
             strategy="merge-on-read", keys=["k"],
         )
     )
@@ -514,7 +515,7 @@ def test_collided_mor_delete_commutes_past_checkpoint_fold(
     tbl = _seed(spark, tmp_path)  # v0: keys 0..99
     # v1: erase keys 0..9 — they enter tombstone HISTORY
     sinks.delete_where(
-        spark, tbl, None, {"k": (0, 9)},
+        spark, tbl, {"k": (0, 9)},
         strategy="merge-on-read", keys=["k"],
     )
     # v2: re-insert keys 0..9 — visible again, history keeps 0..9@v1
@@ -526,20 +527,20 @@ def test_collided_mor_delete_commutes_past_checkpoint_fold(
 
     def competitor():
         sinks._delete_mor.__wrapped__(
-            spark, tbl, None, {"k": (50, 59)}, ["k"],
+            spark, tbl, {"k": (50, 59)}, ["k"],
         )
 
     state = _interleave_commit(monkeypatch, spark, tbl, competitor)
     # the loser erases the RE-INSERTED keys 0..9: disjoint from the
     # winner's fresh keys (50..59), overlapping only dv HISTORY
     led = sinks.delete_where(
-        spark, tbl, None, {"k": (0, 9)},
+        spark, tbl, {"k": (0, 9)},
         strategy="merge-on-read", keys=["k"],
     )
     assert led["rebased"] == 1 and led["rows_deleted"] == 10
     assert led["files_rewritten"] == 0 and led["files_added"] == 0
     # the winner really folded: one consolidated per_row entry active
-    dvs = sinks._active_dvs(tbl + "/_stats_manifest")
+    dvs = sinks._active_dvs(manifest_dir(tbl))
     assert any(d.get("per_row") for d in dvs)
     # the loser's files (incl. its tombstone sidecar) survived the
     # re-commit byte-untouched

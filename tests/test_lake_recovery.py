@@ -28,6 +28,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from evmtrace_etl_spark import sinks
+from evmtrace_etl_spark.lake_log import manifest_dir
 from evmtrace_etl_spark.sinks import (
     append_files,
     read_table,
@@ -53,11 +54,11 @@ def _plant_crashed_intent(spark, tbl: str) -> str:
     """Simulate a writer that died between move-in and commit: one
     orphan data file inside the table dir plus a ``_TXN`` intent whose
     expected_version never committed.  Returns the orphan path."""
-    mdir = tbl + "/_stats_manifest"
+    mdir = manifest_dir(tbl)
     src = sorted(glob.glob(tbl + "/*.parquet"))[0]
     orphan = os.path.join(tbl, "part-99999-deadbeef.c000.snappy.parquet")
     shutil.copy(src, orphan)
-    head = sinks.manifest_version(spark, mdir)
+    head = sinks.manifest_version(tbl)
     with open(os.path.join(mdir, "_TXN"), "w") as f:
         json.dump(
             {
@@ -80,7 +81,7 @@ def test_two_actors_adjudicate_intent_exactly_once(spark, tmp_path):
     delete files/marker — the double-adjudication the r13 verdict
     flagged."""
     tbl = _seed(spark, tmp_path)
-    mdir = tbl + "/_stats_manifest"
+    mdir = manifest_dir(tbl)
     orphan = _plant_crashed_intent(spark, tbl)
 
     barrier = threading.Barrier(2)
@@ -122,7 +123,7 @@ def test_commit_refuses_after_live_intent_adjudication(
     it: ``SnapshotConflict``, clean rollback, and the plain retry
     lands the batch."""
     tbl = _seed(spark, tmp_path)
-    mdir = tbl + "/_stats_manifest"
+    mdir = manifest_dir(tbl)
     real = sinks._commit_manifest
     state = {"fired": False}
 
@@ -147,7 +148,7 @@ def test_commit_refuses_after_live_intent_adjudication(
     # orphan from the rolled-back attempt
     assert read_table(spark, tbl).count() == 100
     assert not os.path.exists(os.path.join(mdir, "_TXN"))
-    led = sinks.update_stats_index(spark, tbl, None)
+    led = sinks.update_stats_index(spark, tbl)
     assert led["files_new"] == 0  # no orphans adopted
     # the plain retry lands against the fresh snapshot
     led = retry_on_conflict(
@@ -173,11 +174,11 @@ def test_cross_process_maintain_vs_vacuum_over_crashed_intent(
     import sys
 
     tbl = _seed(spark, tmp_path, n=200, files=4)
-    mdir = tbl + "/_stats_manifest"
+    mdir = manifest_dir(tbl)
     # real maintenance work: tombstone debt + small-file fragmentation
     for i in range(3):
         sinks.delete_where(
-            spark, tbl, None, {"k": (i * 10, i * 10 + 4)},
+            spark, tbl, {"k": (i * 10, i * 10 + 4)},
             strategy="merge-on-read", keys=["k"],
         )
     orphan = _plant_crashed_intent(spark, tbl)
@@ -248,7 +249,7 @@ def test_intent_token_primitives_ownership_contract(spark, tmp_path):
     foreign writer's live intent; clearing an absent marker is a
     no-op."""
     tbl = _seed(spark, tmp_path)
-    mdir = tbl + "/_stats_manifest"
+    mdir = manifest_dir(tbl)
     tpath = os.path.join(mdir, "_TXN")
 
     a = sinks._write_txn_intent(

@@ -16,6 +16,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from evmtrace_etl_spark.lake_log import manifest_dir
 from evmtrace_etl_spark.sinks import (
     add_table_constraint,
     append_files,
@@ -61,7 +62,7 @@ def test_time_travel_across_rewrite(spark, tmp_path):
     a default table swept them at the rewrite commit and raises."""
     tbl = _seed(spark, tmp_path, retain=True)
     before = _data_files(tbl)
-    hist = table_history(spark, tbl)
+    hist = table_history(tbl)
     pre_v, pre_ts = hist[-1]["version"], hist[-1]["ts"]
 
     src = spark.range(0, 50).select(
@@ -74,7 +75,7 @@ def test_time_travel_across_rewrite(spark, tmp_path):
 
     old = read_table(spark, tbl, version=pre_v)
     assert old.count() == 200 and old.filter("v = -1").count() == 0
-    assert version_at_timestamp(spark, tbl, pre_ts) == pre_v
+    assert version_at_timestamp(tbl, pre_ts) == pre_v
     old_ts = read_table(spark, tbl, as_of_timestamp=pre_ts)
     assert old_ts.filter("v = -1").count() == 0
     # the head still serves the merged state
@@ -82,7 +83,7 @@ def test_time_travel_across_rewrite(spark, tmp_path):
 
     # default table: same merge sweeps the candidates at commit
     plain = _seed(spark, tmp_path, retain=False)
-    pv = table_history(spark, plain)[-1]["version"]
+    pv = table_history(plain)[-1]["version"]
     pre_files = _data_files(plain)
     merge_into(spark, src, plain, keys=["k"], keep_versions=10)
     assert not (pre_files <= _data_files(plain))  # something was swept
@@ -104,7 +105,7 @@ def test_default_marker_wire_shape(spark, tmp_path):
         keys=["k"],
         keep_versions=10,
     )
-    mdir = os.path.join(plain, "_stats_manifest")
+    mdir = manifest_dir(plain)
     head = max(
         int(d[1:]) for d in os.listdir(mdir) if d.startswith("v")
     )
@@ -127,7 +128,7 @@ def test_restore_across_rewrite_readds_and_unpends(spark, tmp_path):
     LEAVE the sweep backlog — later maintenance must not reclaim files
     the restored head references."""
     tbl = _seed(spark, tmp_path, retain=True)
-    pre_v = table_history(spark, tbl)[-1]["version"]
+    pre_v = table_history(tbl)[-1]["version"]
     src = spark.range(0, 50).select(
         F.col("id").alias("k"), F.lit(-1).cast("long").alias("v")
     )
@@ -137,7 +138,7 @@ def test_restore_across_rewrite_readds_and_unpends(spark, tmp_path):
     assert led["files_readded"] >= 1
     assert read_table(spark, tbl).filter("v = -1").count() == 0
     # maintenance after the restore must not eat the re-added files
-    vacuum_table(spark, tbl)
+    vacuum_table(tbl)
     append_files(
         spark,
         spark.range(200, 210).select(
@@ -176,7 +177,7 @@ def test_version_at_timestamp_respects_retention_floor(spark, tmp_path):
     timestamp resolution refuses them instead of resolving to a
     snapshot that would die mid-read."""
     tbl = _seed(spark, tmp_path, retain=True, keep_versions=2)
-    ts_v1 = commit_timestamp(spark, tbl, 1)
+    ts_v1 = commit_timestamp(tbl, 1)
     src = spark.range(0, 50).select(
         F.col("id").alias("k"), F.lit(-1).cast("long").alias("v")
     )
@@ -190,9 +191,9 @@ def test_version_at_timestamp_respects_retention_floor(spark, tmp_path):
             tbl,
             keep_versions=2,
         )
-    vacuum_table(spark, tbl)
+    vacuum_table(tbl)
     with pytest.raises(ValueError, match="predates"):
-        version_at_timestamp(spark, tbl, ts_v1)
+        version_at_timestamp(tbl, ts_v1)
 
 
 def test_metadata_ddl_carries_retention_window(spark, tmp_path):
@@ -200,13 +201,13 @@ def test_metadata_ddl_carries_retention_window(spark, tmp_path):
     keep_versions carries the table's stamped window instead of
     collapsing it to the default — retained history survives."""
     tbl = _seed(spark, tmp_path, retain=True, keep_versions=10)
-    pre_v = table_history(spark, tbl)[-1]["version"]
+    pre_v = table_history(tbl)[-1]["version"]
     src = spark.range(0, 50).select(
         F.col("id").alias("k"), F.lit(-1).cast("long").alias("v")
     )
     merge_into(spark, src, tbl, keys=["k"], keep_versions=10)
     add_table_constraint(spark, tbl, "v_any", "v IS NOT NULL OR v IS NULL")
-    vacuum_table(spark, tbl)
+    vacuum_table(tbl)
     old = read_table(spark, tbl, version=pre_v)
     assert old.count() == 200 and old.filter("v = -1").count() == 0
 
@@ -225,7 +226,7 @@ def test_retain_false_is_unspecified(spark, tmp_path):
         keep_versions=10,
         retain_removed=False,
     )
-    pre_v = table_history(spark, tbl)[-1]["version"]
+    pre_v = table_history(tbl)[-1]["version"]
     src = spark.range(0, 50).select(
         F.col("id").alias("k"), F.lit(-1).cast("long").alias("v")
     )
@@ -257,7 +258,7 @@ def test_retention_reclaims_past_the_floor(spark, tmp_path):
             tbl,
             keep_versions=2,
         )
-    vacuum_table(spark, tbl)
+    vacuum_table(tbl)
     # the replaced files are gone: merge added 1 file and swept >=1,
     # the two appends added one each
     assert len(_data_files(tbl)) < n_after_merge + 2
@@ -289,18 +290,18 @@ def test_vacuum_dry_run_lists_without_deleting(spark, tmp_path):
     open(tbl + "/_deletes/v99-orphan/part-0.parquet", "w").close()
 
     files_before = set(_glob.glob(tbl + "*/**/*", recursive=True))
-    listed = vacuum_table(spark, tbl, min_age_s=0, dry_run=True)
+    listed = vacuum_table(tbl, min_age_s=0, dry_run=True)
     assert any("_append_deadbeef" in p for p in listed)
     assert any("v99-orphan" in p for p in listed)
     # nothing moved: dry run is a pure listing
     assert set(_glob.glob(tbl + "*/**/*", recursive=True)) == files_before
     assert os.path.exists(stale)
 
-    deleted = vacuum_table(spark, tbl, min_age_s=0)
+    deleted = vacuum_table(tbl, min_age_s=0)
     assert set(listed) == set(deleted)
     assert not os.path.exists(stale)
     # and a second dry run is now clean
-    assert vacuum_table(spark, tbl, min_age_s=0, dry_run=True) == []
+    assert vacuum_table(tbl, min_age_s=0, dry_run=True) == []
     # read path unaffected throughout
     assert read_table(spark, tbl).count() == 100
     # keep merge_into imported-use explicit for flake tools
@@ -330,10 +331,10 @@ def test_history_rows_carry_operation_metrics(spark, tmp_path):
         tbl, keys=["k"], keep_versions=10,
     )
     delete_where(
-        spark, tbl, None, {"v": -1}, strategy="merge-on-read",
+        spark, tbl, {"v": -1}, strategy="merge-on-read",
         keys=["k"], keep_versions=10,
     )
-    hist = {h["op"]: h["metrics"] for h in table_history(spark, tbl)}
+    hist = {h["op"]: h["metrics"] for h in table_history(tbl)}
     assert hist["append"] == {"rows_written": 100, "files_added": 1}
     m = hist["merge (update, copy-on-write)"]
     assert m["rows_source"] == 70 and m["files_removed"] == 1
@@ -367,16 +368,16 @@ def test_sidecar_census_matches_retained_ledger(spark, tmp_path):
     # MOR deletes -> dv sidecars + delete change files (v1..v3)
     for i in range(3):
         delete_where(
-            spark, tbl, None, {"k": (i, i)},
+            spark, tbl, {"k": (i, i)},
             strategy="merge-on-read", keys=["k"],
         )
     # fold everything back -> dv sidecars retire into the backlog (v4)
     materialize_deletes(spark, tbl)
-    mdir = tbl + "/_stats_manifest"
+    mdir = manifest_dir(tbl)
     assert sinks._active_dvs(mdir) == []
     # the retired sidecars are still referenced by retained v1..v3 —
     # vacuum must NOT reclaim them yet, and travel still serves
-    vacuum_table(spark, tbl, min_age_s=0)
+    vacuum_table(tbl, min_age_s=0)
     assert read_table(spark, tbl, version=2).count() == 198
     def _census():
         return {
@@ -413,7 +414,7 @@ def test_sidecar_census_matches_retained_ledger(spark, tmp_path):
             ).coalesce(1),
             tbl,
         )
-    vacuum_table(spark, tbl, min_age_s=0)
+    vacuum_table(tbl, min_age_s=0)
     census = _census()
     # (a) the retired tombstones are reclaimed — the unbounded-growth
     #     path is closed
@@ -446,7 +447,7 @@ def test_sidecar_census_matches_retained_ledger(spark, tmp_path):
             ).coalesce(1),
             tbl,
         )
-    vacuum_table(spark, tbl, min_age_s=0)
+    vacuum_table(tbl, min_age_s=0)
     assert _census() == _referenced()
 
 
@@ -469,10 +470,10 @@ def test_vacuum_reclaims_crash_orphan_sidecars_only(spark, tmp_path):
     )
     append_files(spark, df.coalesce(1), tbl, cols=["k"], keep_versions=10)
     delete_where(
-        spark, tbl, None, {"k": (0, 0)},
+        spark, tbl, {"k": (0, 0)},
         strategy="merge-on-read", keys=["k"],
     )
-    mdir = tbl + "/_stats_manifest"
+    mdir = manifest_dir(tbl)
     live_dv = sinks._active_dvs(mdir)[0]["file"]
     # forge STALE crash debris: an unreferenced sidecar dir backdated
     # past the age floor (crash happened long ago)
@@ -488,7 +489,7 @@ def test_vacuum_reclaims_crash_orphan_sidecars_only(spark, tmp_path):
     shutil.copytree(os.path.dirname(live_dv), fresh_dir)
     fresh_file = glob.glob(fresh_dir + "/*.parquet")[0]
 
-    removed = vacuum_table(spark, tbl)  # default age floor (lease TTL)
+    removed = vacuum_table(tbl)  # default age floor (lease TTL)
     assert any("v99-deadbeef" in p for p in removed)
     assert not os.path.exists(orphan_file)
     assert os.path.exists(fresh_file)  # young: possibly live — kept
@@ -503,7 +504,7 @@ def test_vacuum_reclaims_crash_orphan_sidecars_only(spark, tmp_path):
             {"expected_version": 99, "added": [fresh_file], "removed": []},
             f,
         )
-    vacuum_table(spark, tbl, min_age_s=0)
+    vacuum_table(tbl, min_age_s=0)
     assert not os.path.exists(fresh_file)
     assert not os.path.exists(os.path.join(mdir, "_TXN"))
     assert os.path.exists(live_dv)

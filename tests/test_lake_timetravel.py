@@ -14,6 +14,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from evmtrace_etl_spark.lake_log import manifest_dir
 from evmtrace_etl_spark.sinks import (
     append_files,
     delete_where,
@@ -40,7 +41,7 @@ def test_history_ts_strictly_increasing(spark, tmp_path):
     """Every commit stamps a wall-clock ts strictly above its
     predecessor's (clock-skew clamp), and table_history surfaces it."""
     tbl = _three_commits(spark, tmp_path)
-    hist = table_history(spark, tbl)
+    hist = table_history(tbl)
     assert [h["version"] for h in hist] == [0, 1, 2]
     ts = [h["ts"] for h in hist]
     assert ts[0] < ts[1] < ts[2]
@@ -54,7 +55,7 @@ def test_read_table_timestamp_as_of(spark, tmp_path):
     DOWN, the far future resolves to head, and an instant before the
     first retained commit refuses rather than serving a newer lie."""
     tbl = _three_commits(spark, tmp_path)
-    hist = table_history(spark, tbl)
+    hist = table_history(tbl)
     by_v = {h["version"]: h["ts"] for h in hist}
 
     for v, expect_rows in ((0, 100), (1, 200), (2, 300)):
@@ -62,13 +63,13 @@ def test_read_table_timestamp_as_of(spark, tmp_path):
         assert got.count() == expect_rows
     # midpoint between v0 and v1 -> still v0
     mid = (by_v[0] + by_v[1]) / 2.0
-    assert version_at_timestamp(spark, tbl, mid) == 0
+    assert version_at_timestamp(tbl, mid) == 0
     assert read_table(spark, tbl, as_of_timestamp=mid).count() == 100
     # far future -> head
-    assert version_at_timestamp(spark, tbl, by_v[2] + 3600) == 2
+    assert version_at_timestamp(tbl, by_v[2] + 3600) == 2
     # before the oldest retained commit -> refuse
     with pytest.raises(ValueError, match="predates"):
-        version_at_timestamp(spark, tbl, by_v[0] - 1.0)
+        version_at_timestamp(tbl, by_v[0] - 1.0)
     # version= and as_of_timestamp= are mutually exclusive
     with pytest.raises(ValueError, match="mutually exclusive"):
         read_table(spark, tbl, version=1, as_of_timestamp=by_v[1])
@@ -78,7 +79,7 @@ def test_restore_timestamp_as_of(spark, tmp_path):
     """RESTORE ... TIMESTAMP AS OF: restoring to v1's commit instant
     equals restoring to v1, moving history FORWARD as a new commit."""
     tbl = _three_commits(spark, tmp_path)
-    ts_v1 = {h["version"]: h["ts"] for h in table_history(spark, tbl)}[1]
+    ts_v1 = {h["version"]: h["ts"] for h in table_history(tbl)}[1]
     led = restore_table(spark, tbl, as_of_timestamp=ts_v1, keep_versions=10)
     assert led["restored_to"] == 1
     assert led["version"] == 3
@@ -104,8 +105,8 @@ def test_history_operation_labels(spark, tmp_path):
         keys=["k"],
         keep_versions=10,
     )
-    delete_where(spark, tbl, None, {"k": (290, 299)}, keep_versions=10)
-    ops = [h["op"] for h in table_history(spark, tbl)]
+    delete_where(spark, tbl, {"k": (290, 299)}, keep_versions=10)
+    ops = [h["op"] for h in table_history(tbl)]
     assert ops == [
         "append",
         "append",
@@ -121,7 +122,7 @@ def test_table_changes_since_timestamp(spark, tmp_path):
     identical to the since_version form; exactly one of the two is
     required."""
     tbl = _three_commits(spark, tmp_path)
-    ts_v0 = table_history(spark, tbl)[0]["ts"]
+    ts_v0 = table_history(tbl)[0]["ts"]
     by_v = table_changes(spark, tbl, 0)
     by_ts = table_changes(spark, tbl, since_timestamp=ts_v0)
     assert by_v.count() == by_ts.count() == 200
@@ -157,7 +158,7 @@ def test_timestamp_resolves_across_carried_backlog(
     # v2/v3 markers exactly like a crashed-then-busy table
     monkeypatch.setattr(sinks, "_post_commit_sweep", lambda *a, **kw: [])
     monkeypatch.setattr(sinks, "_sweep_removed", lambda *a, **kw: [])
-    delete_where(spark, tbl, None, {"k": (0, 9)}, keep_versions=10)  # v1
+    delete_where(spark, tbl, {"k": (0, 9)}, keep_versions=10)  # v1
     for lo in (1000, 2000):  # v2, v3 — pure appends carrying the backlog
         df = spark.range(lo, lo + 50).select(
             F.col("id").alias("k"), (F.col("id") * 2).alias("v")
@@ -165,20 +166,20 @@ def test_timestamp_resolves_across_carried_backlog(
         append_files(spark, df.coalesce(1), tbl, cols=["k"], keep_versions=10)
     monkeypatch.undo()
 
-    hist = {h["version"]: h["ts"] for h in table_history(spark, tbl)}
+    hist = {h["version"]: h["ts"] for h in table_history(tbl)}
     # v3's marker really does carry v1's removal (the scenario exists)
     marker = json.loads(
-        open(os.path.join(tbl, "_stats_manifest", "v3", "_COMMIT")).read()
+        open(os.path.join(manifest_dir(tbl), "v3", "_COMMIT")).read()
     )
     assert marker.get("pending"), "backlog should carry into v3"
 
     # the fix: v2/v3 resolve fine (their snapshots never referenced
     # the files v1 removed) and the data serves
-    assert version_at_timestamp(spark, tbl, hist[2]) == 2
-    assert version_at_timestamp(spark, tbl, hist[3] + 3600) == 3
+    assert version_at_timestamp(tbl, hist[2]) == 2
+    assert version_at_timestamp(tbl, hist[3] + 3600) == 3
     assert (
         read_table(spark, tbl, as_of_timestamp=hist[2]).count() == 140
     )
     # the genuine refusal is intact: v0 predates v1's FRESH removal
     with pytest.raises(ValueError, match="no longer serveable"):
-        version_at_timestamp(spark, tbl, hist[0])
+        version_at_timestamp(tbl, hist[0])

@@ -53,7 +53,7 @@ def test_wider_batch_widens_stored_type_without_rewrites(spark, tmp_path):
     # the seed files were not rewritten; the schema widened
     for p, mt in before.items():
         assert os.path.getmtime(p) == mt
-    schema = sinks.committed_schema(spark, tbl + "/_stats_manifest")
+    schema = sinks.committed_schema(tbl)
     assert schema["k"].dataType == T.LongType()
     assert schema["v"].dataType == T.DoubleType()
     t = read_table(spark, tbl)
@@ -74,7 +74,7 @@ def test_narrower_batch_casts_up_at_write(spark, tmp_path):
         F.col("id").cast("float").alias("v"),
     )
     append_files(spark, narrow.coalesce(1), tbl)
-    schema = sinks.committed_schema(spark, tbl + "/_stats_manifest")
+    schema = sinks.committed_schema(tbl)
     assert schema["k"].dataType == T.LongType()  # unchanged
     t = read_table(spark, tbl)
     assert t.count() == 60 and t.filter("k = 105").count() == 1
@@ -113,7 +113,7 @@ def test_widening_composes_with_column_mapping_and_merge(spark, tmp_path):
         keys=["k"],
     )
     assert led["rows_updated"] == 50 and led["rows_inserted"] == 20
-    schema = sinks.committed_schema(spark, tbl + "/_stats_manifest")
+    schema = sinks.committed_schema(tbl)
     assert schema["k"].dataType == T.LongType()
     assert schema["val"].dataType == T.DoubleType()
     f = schema["val"]
@@ -134,7 +134,7 @@ def test_decimal_precision_growth(spark, tmp_path):
         F.col("id").cast("decimal(20,2)").alias("d"),
     )
     append_files(spark, wide.coalesce(1), tbl)
-    schema = sinks.committed_schema(spark, tbl + "/_stats_manifest")
+    schema = sinks.committed_schema(tbl)
     assert schema["d"].dataType == T.DecimalType(20, 2)
     assert read_table(spark, tbl).agg(F.sum("d")).collect()[0][0] is not None
     # scale change is NOT widening (rescaling rewrites values)

@@ -19,6 +19,7 @@ import pytest
 from pyspark import SparkContext
 from pyspark.sql import functions as F
 
+from evmtrace_etl_spark.lake_log import manifest_dir
 from evmtrace_etl_spark.operators import similarity, text_analysis
 from evmtrace_etl_spark.operators.enrichment import enrich_blocks
 from evmtrace_etl_spark.plans.pipeline import (
@@ -336,7 +337,7 @@ def test_lake_log_reads_run_no_spark_job(spark, tmp_path):
     tracker = sc.statusTracker()
     base = str(tmp_path / "lake")
     tbl = os.path.join(base, "t")
-    mdir = tbl + "/_stats_manifest"
+    mdir = manifest_dir(tbl)
 
     def rows(lo: int, hi: int):
         return spark.range(lo, hi).select(
@@ -372,10 +373,10 @@ def test_lake_log_reads_run_no_spark_job(spark, tmp_path):
     assert sinks._commit_info(mdir, 19)["kind"] == "delta"
 
     def readers_then_checkpoint():
-        head = sinks.current_manifest(spark, mdir)
+        head = sinks.current_manifest(tbl)
         kept = sinks.prune_files(head, {"k": (0, 45)})
-        history = sinks.table_history(spark, tbl)
-        old = sinks.current_manifest(spark, mdir, version=5)
+        history = sinks.table_history(tbl)
+        old = sinks.current_manifest(tbl, version=5)
         sinks.append_files(spark, ckpt_frame, tbl)
         return head, kept, history, old
 
